@@ -24,10 +24,15 @@ import org.apache.spark.util.LongAccumulator
   *     stream through decompressors, an archive is never materialized;
   *   - zero shuffles without `unique`; exactly one hash-partitioned
   *     exchange with it. Spark's `dropDuplicates("hash")` plans a
-  *     two-phase HashAggregate: the partial phase keeps ONE row per
-  *     distinct hash per partition, so duplicate content crosses the
-  *     wire at most once, and the spillable aggregate replaces the
-  *     reference's unbounded in-memory HashSet (src/sink.rs:59-73).
+  *     two-phase SortAggregate (SortAggregate <- Sort <- Exchange <-
+  *     SortAggregate <- Sort; a `first` buffer over the binary and
+  *     string columns is not fixed-width, so HashAggregate is out):
+  *     the partial phase keeps ONE row per distinct hash per
+  *     partition, so duplicate content crosses the wire at most once,
+  *     and the external sort spills instead of holding the reference's
+  *     unbounded in-memory HashSet (src/sink.rs:59-73). The final sort
+  *     leaves each output file ordered by hash, so a hash lookup skips
+  *     pages by their statistics.
   *     (A zero-content-shuffle design — elect winner row-ids by hash,
   *     route the id set back to each partition — was considered and
   *     rejected: it either recomputes the walk (2× read+decompress)
@@ -494,10 +499,13 @@ object ArchiveConverter {
     val shaped =
       if (opts.singleFile) filtered.repartition(1) // see ConvertOptions scaladoc
       else filtered
+    // `size` is the content length in every mode (the walker's count,
+    // or recomputed where a mode rewrites content); summing it spares
+    // the observation a copy of every content value
     val df = shaped
       .observe(obs,
         count(lit(1)).as("rows"),
-        coalesce(sum(length(col("content"))), lit(0L)).as("bytes"))
+        coalesce(sum(col("size")), lit(0L)).as("bytes"))
     df.write
       .mode("overwrite")
       .option("compression", opts.compression)

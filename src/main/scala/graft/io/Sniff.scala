@@ -35,8 +35,15 @@ object Sniff {
 
   private def at(b: Array[Byte], i: Int): Int = b(i) & 0xff
 
+  /** Gzip member header (RFC 1952 §2.3.1): magic `1F 8B`, CM = 8
+    * (deflate, the only method defined) and no reserved FLG bits (5-7)
+    * set. The two extra checks keep ordinary data that merely starts
+    * with the magic — about 1 in 65,536 random files — from being
+    * handed to the inflater and failing the whole input.
+    */
   def isGzip(b: Array[Byte]): Boolean =
-    b.length >= 2 && at(b, 0) == 0x1f && at(b, 1) == 0x8b
+    b.length >= 4 && at(b, 0) == 0x1f && at(b, 1) == 0x8b && at(b, 2) == 8 &&
+      (at(b, 3) & 0xe0) == 0
 
   /** Zstd frame or skippable frame (reference: compression.rs:77-92). */
   def isZstd(b: Array[Byte]): Boolean = {
@@ -148,8 +155,21 @@ object Sniff {
     else if (isExecutable(b)) Some(FormatKind.Executable)
     else None
 
-  private def buffered(in: InputStream): InputStream =
-    if (in.markSupported) in else new BufferedInputStream(in, 64 * 1024)
+  /** Mark buffer for a raw stream without mark support — in a walk,
+    * every archive member, since the walker's entry streams refuse
+    * mark. It only has to hold the 263 bytes the container peek marks;
+    * reads larger than the buffer bypass it once the peek's mark has
+    * lapsed, so a bigger one would only be zeroed for nothing.
+    */
+  private final val PeekBuffer = 1024
+
+  /** Buffer over a decompressor's output, sized for throughput: it
+    * turns the walkers' small reads into few decoder calls.
+    */
+  private final val DecodedBuffer = 64 * 1024
+
+  private def buffered(in: InputStream, size: Int): InputStream =
+    if (in.markSupported) in else new BufferedInputStream(in, size)
 
   /** Wrap `raw` in the detected streaming decompressor; pass-through
     * when no codec magic matches (reference: compression.rs:36-63).
@@ -157,7 +177,7 @@ object Sniff {
     * of decompressed bytes.
     */
   def decompress(raw: InputStream): (Option[FormatKind], InputStream) = {
-    val in = buffered(raw)
+    val in = buffered(raw, PeekBuffer)
     val head = peek(in, MaxCompressionPeek)
     detectCompression(head) match {
       case k @ Some(FormatKind.Gzip) => (k, new GZIPInputStream(in, 64 * 1024))
@@ -186,7 +206,7 @@ object Sniff {
     */
   def open(raw: InputStream): (FormatKind, InputStream) = {
     val (codec, stream0) = decompress(raw)
-    val stream = buffered(stream0)
+    val stream = buffered(stream0, DecodedBuffer)
     val head = peek(stream, MaxContainerPeek)
     val kind = detectContainer(head).orElse(codec).getOrElse(FormatKind.Unknown)
     (kind, stream)

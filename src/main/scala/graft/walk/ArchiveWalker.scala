@@ -105,7 +105,8 @@ object ArchiveWalker {
 
   /** Walk one already-open stream named `source`. Consumes and closes it. */
   def walk(source: String, in: InputStream, claimedSize: Long, opts: ConvertOptions): Iterator[ArchiveEntry] = {
-    val it = walkEntry(source, Nil, Details(source, claimedSize), parent = None, raw = in, depth = 0, opts)
+    val it = walkEntryG(source, Nil, Details(source, claimedSize),
+      parent = None, raw = in, depth = 0, opts, new EntryLeaf)
     closing(it, in)
   }
 
@@ -125,7 +126,7 @@ object ArchiveWalker {
       opts: ConvertOptions): Iterator[graft.core.ArchiveChunk] = {
     require(!opts.extractStrings, "extractStrings is not supported in chunked mode")
     val it = walkEntryG(source, Nil, Details(source, claimedSize),
-      parent = None, raw = in, depth = 0, opts, ChunkLeaf)
+      parent = None, raw = in, depth = 0, opts, new ChunkLeaf)
     closing(it, in)
   }
 
@@ -213,43 +214,147 @@ object ArchiveWalker {
     * leaf) and the chunked walk (N [[graft.core.ArchiveChunk]] rows
     * per leaf) share the sniff/dispatch/lineage/prune machinery.
     * `nonEmpty` backs the zip unknown-size drop rule.
+    *
+    * One instance per walk. It owns the walk's 64 KiB copy buffer and
+    * SHA-256 digest, which every leaf reuses: a walk is drained by one
+    * thread, and a leaf is read to its end before the enclosing
+    * archive advances, so no two leaves use them at once. The
+    * container walkers borrow `buf` for skipping and spooling, which
+    * happens only between leaves.
     */
-  private trait Leaf[T] {
+  private abstract class Leaf[T] {
+    final val buf = new Array[Byte](64 * 1024)
+    final val md = MessageDigest.getInstance("SHA-256")
     def emit(source: String, nested: List[String], name: String,
         kind: FormatKind, stream: InputStream, opts: ConvertOptions,
         claimedSize: Long): Iterator[T]
     def nonEmpty(t: T): Boolean
   }
 
-  private def walkEntry(
-      source: String,
-      nested: List[String],
-      details: Details,
-      parent: Option[Details],
-      raw: InputStream,
-      depth: Int,
-      opts: ConvertOptions): Iterator[ArchiveEntry] =
-    walkEntryG(source, nested, details, parent, raw, depth, opts, EntryLeaf)
+  /** Reads into `b` until it is full or `in` ends; returns the count. */
+  private def readFully(in: InputStream, b: Array[Byte]): Int = {
+    var off = 0
+    var n = 0
+    while (off < b.length && { n = in.read(b, off, b.length - off); n >= 0 }) off += n
+    off
+  }
 
-  private object EntryLeaf extends Leaf[ArchiveEntry] {
+  /** Exactly `n` header bytes of `in`, or null when it ends first. */
+  private def readExact(in: InputStream, n: Int): Array[Byte] = {
+    val b = new Array[Byte](n)
+    var off = 0
+    // k == 0 from read(b,off,len>0) is non-conforming but seen in the
+    // wild; treat it as EOF (-> null -> malformed) instead of spinning.
+    var k = 1
+    while (off < n && k > 0) { k = in.read(b, off, n - off); if (k > 0) off += k }
+    if (off == n) b else null
+  }
+
+  private final class EntryLeaf extends Leaf[ArchiveEntry] {
     override def emit(source: String, nested: List[String], name: String,
         kind: FormatKind, stream: InputStream, opts: ConvertOptions,
         claimedSize: Long): Iterator[ArchiveEntry] = {
-      val e = ArchiveWalker.emit(source, nested, name, kind, stream, opts, claimedSize)
+      val e = entry(source, (nested :+ name).mkString("/"), kind, stream, opts, claimedSize)
       if (sizeKept(opts, e.size)) Iterator.single(e) else Iterator.empty
     }
     override def nonEmpty(e: ArchiveEntry): Boolean = e.size > 0
-  }
 
-  private object ChunkLeaf extends Leaf[graft.core.ArchiveChunk] {
-    override def emit(source: String, nested: List[String], name: String,
-        kind: FormatKind, stream: InputStream, opts: ConvertOptions,
-        claimedSize: Long): Iterator[graft.core.ArchiveChunk] =
-      emitChunks(source, nested, name, stream, opts)
-    // the only zero-size chunk is an empty entry's part-0 (trailing
-    // empty chunks are never produced), so this implements the same
-    // zip unknown-size drop rule as the plain walk's `e.size > 0`
-    override def nonEmpty(c: graft.core.ArchiveChunk): Boolean = c.size > 0
+    /** Materialize one leaf row: copy its content and digest it with
+      * SHA-256 (reference: src/hasher.rs:5-37, src/batch.rs:101-131).
+      */
+    private def entry(source: String, path: String, kind: FormatKind,
+        stream: InputStream, opts: ConvertOptions, claimedSize: Long): ArchiveEntry = {
+      md.reset()
+      val strings = opts.extractStrings && kind == FormatKind.Executable
+      // Pushed-filter early stop: once `written` reaches the pushed
+      // size upper bound the row cannot survive the residual filter, so
+      // stop reading/buffering/hashing right here — the caller drops the
+      // row (its reported size >= the bound guarantees that) and the
+      // enclosing archive skips the unread remainder itself.
+      val doomAt: Long = opts.pruneSizeMax.getOrElse(Long.MaxValue)
+
+      // Content buffering strategy: when the archive header claims a
+      // plausible size, read DIRECTLY into an exact-sized array and
+      // digest that array once — no copy buffer, no growth copies, no
+      // ByteArrayOutputStream.toByteArray copy. The claim is only a
+      // hint: a long claim (the entry ends early) trims with copyOf, a
+      // short one (compressed inner entries decompress larger) falls
+      // back to a growing buffer fed through `buf`.
+      // cap the hint at the pushed size bound: an entry that will stop
+      // at doomAt never needs a buffer past it
+      val hintCap = math.min(math.min(opts.maxEntryBytes, doomAt), Int.MaxValue - 8L)
+      val hint =
+        if (opts.materializeContent && !strings && claimedSize > 0 && claimedSize <= hintCap)
+          claimedSize.toInt
+        else -1
+      var direct: Array[Byte] = null
+      var overflow: ByteArrayOutputStream = null
+      var written = 0L
+      var ended = false
+      if (hint > 0) {
+        direct = new Array[Byte](hint)
+        written = readFully(stream, direct)
+        ended = written < hint
+        if (opts.computeHash) md.update(direct, 0, written.toInt)
+      } else if (opts.materializeContent) overflow = new ByteArrayOutputStream(8192)
+
+      def write(b: Array[Byte], off: Int, len: Int): Unit = {
+        if (opts.computeHash) md.update(b, off, len)
+        if (direct != null) {
+          // claim was short: switch to the growing buffer
+          overflow = new ByteArrayOutputStream(math.max(direct.length * 2, 8192))
+          overflow.write(direct, 0, direct.length)
+          direct = null
+        }
+        if (overflow != null) overflow.write(b, off, len)
+        written += len
+      }
+
+      // Over-cap policy: an entry that would exceed maxEntryBytes fails
+      // its input loudly (see OversizeEntryException scaladoc) unless
+      // truncateOversize opted into emitting the clamped prefix. The
+      // check fires only when excess bytes actually EXIST — an entry of
+      // exactly maxEntryBytes is fine. The direct read never gets there:
+      // the hint is at most maxEntryBytes.
+      var overrun = false
+      def clamp(len: Long): Int = {
+        // clamp in Long space: maxEntryBytes - written can exceed Int.MaxValue
+        val take = math.min(len, opts.maxEntryBytes - written)
+        if (take < len) {
+          overrun = true
+          if (!opts.truncateOversize)
+            throw new graft.core.OversizeEntryException(source, path, opts.maxEntryBytes)
+        }
+        take.toInt
+      }
+
+      if (ended) () // the claim was long: the whole entry is in `direct`
+      else if (strings) {
+        // content := newline-terminated extracted strings (batch.rs:113-121)
+        val it = AsciiStrings.iterate(stream, minLength = 10)
+        while (it.hasNext && !overrun && written < doomAt) {
+          val b = (it.next() + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8)
+          val take = clamp(b.length.toLong)
+          if (take > 0) write(b, 0, take)
+        }
+      } else {
+        var n = 0
+        while (!overrun && written < doomAt && { n = stream.read(buf); n >= 0 }) {
+          if (n > 0) {
+            val take = clamp(n.toLong)
+            if (take > 0) write(buf, 0, take)
+          }
+        }
+      }
+      val content =
+        if (direct != null) {
+          if (written == direct.length) direct
+          else java.util.Arrays.copyOf(direct, written.toInt)
+        } else if (overflow != null) overflow.toByteArray
+        else Array.emptyByteArray
+      val digest = if (opts.computeHash) md.digest() else Array.emptyByteArray
+      ArchiveEntry(source, path, written, digest, content)
+    }
   }
 
   /** Lazy chunk emission for one leaf: read at most `maxEntryBytes`
@@ -257,48 +362,72 @@ object ArchiveWalker {
     * the whole iteration because [[archiveIterator]] drains a leaf's
     * iterator fully before the enclosing archive advances.
     */
-  private def emitChunks(source: String, nested: List[String], name: String,
-      stream: InputStream, opts: ConvertOptions): Iterator[graft.core.ArchiveChunk] = {
-    val path = (nested :+ name).mkString("/")
-    val cap = math.min(opts.maxEntryBytes, Int.MaxValue.toLong - 8).toInt
-    require(cap > 0, "maxEntryBytes must be positive")
-    new Iterator[graft.core.ArchiveChunk] {
-      private var part = 0L
-      private var eof = false
-      // an EMPTY entry still emits exactly one part-0 row (size 0,
-      // digest of the empty string) — parity with the plain walk,
-      // which emits every leaf; readChunk's null means "no further
-      // chunk", which for the FIRST read must instead be "one empty
-      // chunk"
-      private var pending: Array[Byte] = {
-        val first = readChunk()
-        if (first == null) Array.emptyByteArray else first
-      }
-      private def readChunk(): Array[Byte] = {
-        if (eof) return null
-        val out = new ByteArrayOutputStream(math.min(cap, 64 * 1024))
-        val buf = new Array[Byte](64 * 1024)
-        var total = 0
-        var n = 0
-        while (total < cap && { n = stream.read(buf, 0, math.min(buf.length, cap - total)); n >= 0 })
-          if (n > 0) { out.write(buf, 0, n); total += n }
-        if (n < 0) eof = true
-        if (total == 0) null else out.toByteArray
-      }
-      override def hasNext: Boolean = pending != null
-      override def next(): graft.core.ArchiveChunk = {
-        if (pending == null) throw new NoSuchElementException("no more chunks")
-        val c = pending
-        pending = readChunk() // read-ahead: bounded to one extra chunk
-        val digest =
-          if (opts.computeHash) MessageDigest.getInstance("SHA-256").digest(c)
-          else Array.emptyByteArray
-        val row = graft.core.ArchiveChunk(source, path, c.length.toLong,
-          digest, if (opts.materializeContent) c else Array.emptyByteArray, part)
-        part += 1
-        row
+  private final class ChunkLeaf extends Leaf[graft.core.ArchiveChunk] {
+    override def emit(source: String, nested: List[String], name: String,
+        kind: FormatKind, stream: InputStream, opts: ConvertOptions,
+        claimedSize: Long): Iterator[graft.core.ArchiveChunk] = {
+      val path = (nested :+ name).mkString("/")
+      val cap = math.min(opts.maxEntryBytes, Int.MaxValue.toLong - 8).toInt
+      require(cap > 0, "maxEntryBytes must be positive")
+      new Iterator[graft.core.ArchiveChunk] {
+        private var part = 0L
+        private var eof = false
+        // header-claimed bytes not read yet: they size the chunk arrays
+        private var claimLeft = claimedSize
+        // an EMPTY entry still emits exactly one part-0 row (size 0,
+        // digest of the empty string) — parity with the plain walk,
+        // which emits every leaf; readChunk's null means "no further
+        // chunk", which for the FIRST read must instead be "one empty
+        // chunk"
+        private var pending: Array[Byte] = {
+          val first = readChunk()
+          if (first == null) Array.emptyByteArray else first
+        }
+        // The claimed part of a chunk is read straight into its array;
+        // past the claim (short or unknown) the rest goes through `buf`
+        // into a growing buffer, as in the plain walk.
+        private def readChunk(): Array[Byte] = {
+          if (eof) return null
+          val direct =
+            if (claimLeft > 0) new Array[Byte](math.min(cap.toLong, claimLeft).toInt)
+            else Array.emptyByteArray
+          var total = readFully(stream, direct)
+          claimLeft -= total
+          if (total < direct.length) {
+            eof = true
+            return if (total == 0) null else java.util.Arrays.copyOf(direct, total)
+          }
+          var out: ByteArrayOutputStream = null
+          var n = 0
+          while (total < cap && { n = stream.read(buf, 0, math.min(buf.length, cap - total)); n >= 0 })
+            if (n > 0) {
+              if (out == null) {
+                out = new ByteArrayOutputStream(math.min(cap, math.max(total * 2, 8192)))
+                out.write(direct, 0, total)
+              }
+              out.write(buf, 0, n)
+              total += n
+            }
+          if (n < 0) eof = true
+          if (out != null) out.toByteArray else if (total == 0) null else direct
+        }
+        override def hasNext: Boolean = pending != null
+        override def next(): graft.core.ArchiveChunk = {
+          if (pending == null) throw new NoSuchElementException("no more chunks")
+          val c = pending
+          pending = readChunk() // read-ahead: bounded to one extra chunk
+          val digest = if (opts.computeHash) md.digest(c) else Array.emptyByteArray
+          val row = graft.core.ArchiveChunk(source, path, c.length.toLong,
+            digest, if (opts.materializeContent) c else Array.emptyByteArray, part)
+          part += 1
+          row
+        }
       }
     }
+    // the only zero-size chunk is an empty entry's part-0 (trailing
+    // empty chunks are never produced), so this implements the same
+    // zip unknown-size drop rule as the plain walk's `e.size > 0`
+    override def nonEmpty(c: graft.core.ArchiveChunk): Boolean = c.size > 0
   }
 
   private def walkEntryG[T](
@@ -526,22 +655,13 @@ object ArchiveWalker {
     var got = 0
     var r = 0
     while (got < 8 && r >= 0) { r = stream.read(magic, got, 8 - got); if (r > 0) got += r }
-    def readExact(n: Int): Array[Byte] = {
-      val b = new Array[Byte](n)
-      var off = 0
-      // k == 0 from read(b,off,len>0) is non-conforming but seen in the
-      // wild; treat it as EOF (-> null -> malformed) instead of spinning.
-      var k = 1
-      while (off < n && k > 0) { k = stream.read(b, off, n - off); if (k > 0) off += k }
-      if (off == n) b else null
-    }
     def ascii(b: Array[Byte], from: Int, until: Int): String =
       new String(b, from, until - from, "US-ASCII").trim
     if (got < 8) Iterator.empty
     else archiveIterator { () =>
       if (current != null) { current.skipRest(); current = null }
       while (pad > 0) { if (stream.read() < 0) pad = 0 else pad -= 1 }
-      val hdr = readExact(60)
+      val hdr = readExact(stream, 60)
       if (hdr == null || (hdr(58) & 0xff) != 0x60 || (hdr(59) & 0xff) != 0x0a) None
       else {
         val rawName = ascii(hdr, 0, 16)
@@ -552,7 +672,7 @@ object ArchiveWalker {
           if (rawName == "//") {
             // GNU long-name table: buffer it (bounded: it holds member
             // NAMES, not data), never emit
-            val t = readExact(size.get.toInt)
+            val t = readExact(stream, size.get.toInt)
             if (t == null) None else { nameTable = t; Some(Iterator.empty) }
           } else if (rawName == "/" || rawName == "/SYM64/" || rawName.isEmpty) {
             // symbol table / empty name: structural, skip the body
@@ -566,7 +686,7 @@ object ArchiveWalker {
               if (rawName.startsWith("#1/")) { // BSD: name prepends the data
                 val nameLen = rawName.drop(3).toIntOption.getOrElse(-1)
                 if (nameLen < 0 || nameLen > bodySize) None
-                else Option(readExact(nameLen)).map { nb =>
+                else Option(readExact(stream, nameLen)).map { nb =>
                   bodySize -= nameLen
                   // BSD NUL-pads the stored name to the declared len
                   new String(nb, "UTF-8").takeWhile(_ != '\u0000')
@@ -627,15 +747,6 @@ object ArchiveWalker {
       leaf: Leaf[T]): Iterator[T] = {
     var current: BoundedStream = null
     var pad = 0
-    def readExact(n: Int): Array[Byte] = {
-      val b = new Array[Byte](n)
-      var off = 0
-      // k == 0 from read(b,off,len>0) is non-conforming but seen in the
-      // wild; treat it as EOF (-> null -> malformed) instead of spinning.
-      var k = 1
-      while (off < n && k > 0) { k = stream.read(b, off, n - off); if (k > 0) off += k }
-      if (off == n) b else null
-    }
     // strict fixed-radix field parse; -1 marks a corrupt header
     def field(b: Array[Byte], from: Int, len: Int, radix: Int): Long = {
       var v = 0L
@@ -651,11 +762,11 @@ object ArchiveWalker {
     archiveIterator { () =>
       if (current != null) { current.skipRest(); current = null }
       while (pad > 0) { if (stream.read() < 0) pad = 0 else pad -= 1 }
-      val magic = readExact(6)
+      val magic = readExact(stream, 6)
       if (magic == null) None
       else new String(magic, "US-ASCII") match {
         case m @ ("070701" | "070702") =>
-          val hdr = readExact(104) // 13 x 8 hex chars after the magic
+          val hdr = readExact(stream, 104) // 13 x 8 hex chars after the magic
           if (hdr == null) None
           else {
             val mode = field(hdr, 8, 8, 16)
@@ -665,7 +776,7 @@ object ArchiveWalker {
             // member — anything huge is a corrupt header)
             if (mode < 0 || size < 0 || nameSize <= 0 || nameSize > (1 << 16)) None
             else {
-              val nameBuf = readExact(nameSize.toInt)
+              val nameBuf = readExact(stream, nameSize.toInt)
               if (nameBuf == null) None
               else {
                 val name = new String(nameBuf, 0, nameSize.toInt - 1, "UTF-8")
@@ -688,7 +799,7 @@ object ArchiveWalker {
             }
           }
         case "070707" =>
-          val hdr = readExact(70) // odc: octal fields after the magic
+          val hdr = readExact(stream, 70) // odc: octal fields after the magic
           if (hdr == null) None
           else {
             val mode = field(hdr, 12, 6, 8)
@@ -696,7 +807,7 @@ object ArchiveWalker {
             val size = field(hdr, 59, 11, 8)
             if (mode < 0 || size < 0 || nameSize <= 0 || nameSize > (1 << 16)) None
             else {
-              val nameBuf = readExact(nameSize.toInt)
+              val nameBuf = readExact(stream, nameSize.toInt)
               if (nameBuf == null) None
               else {
                 val name = new String(nameBuf, 0, nameSize.toInt - 1, "UTF-8")
@@ -749,21 +860,12 @@ object ArchiveWalker {
       depth: Int,
       opts: ConvertOptions,
       leaf: Leaf[T]): Iterator[T] = {
-    def readExact(n: Int): Array[Byte] = {
-      val b = new Array[Byte](n)
-      var off = 0
-      // k == 0 from read(b,off,len>0) is non-conforming but seen in the
-      // wild; treat it as EOF (-> null -> malformed) instead of spinning.
-      var k = 1
-      while (off < n && k > 0) { k = stream.read(b, off, n - off); if (k > 0) off += k }
-      if (off == n) b else null
-    }
     def be32(b: Array[Byte], i: Int): Long =
       (((b(i) & 0xff).toLong << 24) | ((b(i + 1) & 0xff) << 16) |
         ((b(i + 2) & 0xff) << 8) | (b(i + 3) & 0xff)) & 0xffffffffL
     def skipN(n: Long): Boolean = {
       var left = n
-      val buf = new Array[Byte](64 * 1024)
+      val buf = leaf.buf
       while (left > 0) {
         val k = stream.read(buf, 0, math.min(buf.length.toLong, left).toInt)
         if (k < 0) return false
@@ -772,7 +874,7 @@ object ArchiveWalker {
       true
     }
     def skipHeader(alignStore: Boolean): Boolean = {
-      val h = readExact(16)
+      val h = readExact(stream, 16)
       if (h == null || (h(0) & 0xff) != 0x8e || (h(1) & 0xff) != 0xad ||
         (h(2) & 0xff) != 0xe8 || h(3) != 1) return false
       val nindex = be32(h, 8)
@@ -782,7 +884,7 @@ object ArchiveWalker {
       val body = nindex * 16 + hsize
       skipN(body + (if (alignStore) (8 - body % 8) % 8 else 0L))
     }
-    val lead = readExact(96)
+    val lead = readExact(stream, 96)
     if (lead == null || (lead(0) & 0xff) != 0xed || (lead(1) & 0xff) != 0xab ||
       (lead(2) & 0xff) != 0xee || (lead(3) & 0xff) != 0xdb) Iterator.empty
     else if (!skipHeader(alignStore = true) || !skipHeader(alignStore = false))
@@ -833,11 +935,11 @@ object ArchiveWalker {
 
     // Spool phase: buffer to memory up to the threshold; past it,
     // switch to a temp file and stream-copy the remainder (at most
-    // one 64 KB copy buffer in flight — the spool never holds more
+    // the walk's copy buffer in flight — the spool never holds more
     // than `sevenZMemSpoolMax` heap regardless of archive size).
     val memCap = math.min(opts.sevenZMemSpoolMax, Int.MaxValue.toLong - 8).toInt
     val memBuf = new ByteArrayOutputStream(math.min(memCap, 256 * 1024))
-    val copyBuf = new Array[Byte](64 * 1024)
+    val copyBuf = leaf.buf
     var n = 0
     while (memBuf.size <= memCap && { n = stream.read(copyBuf); n >= 0 })
       if (n > 0) memBuf.write(copyBuf, 0, n)
@@ -912,106 +1014,4 @@ object ArchiveWalker {
       override def hasNext: Boolean = { advance(); cur.hasNext }
       override def next(): T = { advance(); cur.next() }
     }
-
-  /** Materialize one leaf row: stream-copy content through a SHA-256
-    * tee (reference: src/hasher.rs:5-37, src/batch.rs:101-131).
-    */
-  private def emit(
-      source: String,
-      nested: List[String],
-      name: String,
-      kind: FormatKind,
-      stream: InputStream,
-      opts: ConvertOptions,
-      claimedSize: Long = -1L): ArchiveEntry = {
-    val md = MessageDigest.getInstance("SHA-256")
-    // Content buffering strategy: when the archive header claims a
-    // plausible size, read DIRECTLY into an exact-sized array — no
-    // growth copies and no ByteArrayOutputStream.toByteArray copy
-    // (one 512 KB entry otherwise costs ~2 extra copies). The claim is
-    // only a hint (compressed inner entries decompress larger), so
-    // overflow falls back to a growing buffer.
-    // cap the hint at the pushed size bound: an entry that will stop
-    // at pruneSizeMax never needs a buffer past it
-    val hintCap = math.min(
-      math.min(opts.maxEntryBytes, opts.pruneSizeMax.getOrElse(Long.MaxValue)),
-      Int.MaxValue - 8L)
-    val hint =
-      if (opts.materializeContent && claimedSize > 0 && claimedSize <= hintCap)
-        claimedSize.toInt
-      else -1
-    var direct: Array[Byte] = if (hint > 0) new Array[Byte](hint) else null
-    var overflow: ByteArrayOutputStream =
-      if (hint > 0 || !opts.materializeContent) null else new ByteArrayOutputStream(8192)
-    var written = 0L
-
-    def write(b: Array[Byte], off: Int, len: Int): Unit = {
-      if (opts.computeHash) md.update(b, off, len)
-      if (direct != null) {
-        if (written + len <= direct.length) {
-          System.arraycopy(b, off, direct, written.toInt, len)
-        } else {
-          // claim was short: switch to the growing buffer
-          overflow = new ByteArrayOutputStream(math.max(direct.length * 2, 8192))
-          overflow.write(direct, 0, written.toInt)
-          overflow.write(b, off, len)
-          direct = null
-        }
-      } else if (overflow != null) overflow.write(b, off, len)
-      written += len
-    }
-
-    val path = (nested :+ name).mkString("/")
-    // Over-cap policy: an entry that would exceed maxEntryBytes fails
-    // its input loudly (see OversizeEntryException scaladoc) unless
-    // truncateOversize opted into emitting the clamped prefix. The
-    // check fires only when excess bytes actually EXIST — an entry of
-    // exactly maxEntryBytes is fine.
-    var overrun = false
-    def clamp(len: Long): Int = {
-      // clamp in Long space: maxEntryBytes - written can exceed Int.MaxValue
-      val take = math.min(len, opts.maxEntryBytes - written)
-      if (take < len) {
-        overrun = true
-        if (!opts.truncateOversize)
-          throw new graft.core.OversizeEntryException(source, path, opts.maxEntryBytes)
-      }
-      take.toInt
-    }
-
-    // Pushed-filter early stop: once `written` reaches the pushed
-    // size upper bound the row cannot survive the residual filter, so
-    // stop reading/buffering/hashing right here — the caller drops the
-    // row (its reported size >= the bound guarantees that) and the
-    // enclosing archive skips the unread remainder itself.
-    val doomAt: Long = opts.pruneSizeMax.getOrElse(Long.MaxValue)
-
-    if (opts.extractStrings && kind == FormatKind.Executable) {
-      // content := newline-terminated extracted strings (batch.rs:113-121)
-      val it = AsciiStrings.iterate(stream, minLength = 10)
-      while (it.hasNext && !overrun && written < doomAt) {
-        val b = (it.next() + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8)
-        val take = clamp(b.length.toLong)
-        if (take > 0) write(b, 0, take)
-      }
-    } else {
-      val buf = new Array[Byte](64 * 1024)
-      var n = stream.read(buf)
-      while (n >= 0 && !overrun && written < doomAt) {
-        if (n > 0) {
-          val take = clamp(n.toLong)
-          if (take > 0) write(buf, 0, take)
-        }
-        if (!overrun && written < doomAt) n = stream.read(buf)
-      }
-    }
-    val content =
-      if (direct != null) {
-        if (written == direct.length) direct
-        else java.util.Arrays.copyOf(direct, written.toInt)
-      } else if (overflow != null) overflow.toByteArray
-      else Array.emptyByteArray
-    val digest = if (opts.computeHash) md.digest() else Array.emptyByteArray
-    ArchiveEntry(source, path, written, digest, content)
-  }
 }

@@ -164,6 +164,70 @@ class SinkSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(rows.map(_.getAs[String]("path")).toSeq == Seq("small.txt"))
   }
 
+  test("stats.bytes is the summed content length of the output in every mode") {
+    import Fixtures._
+    import org.apache.spark.sql.functions.{col, length, sum}
+    val dir = java.nio.file.Files.createTempDirectory("graft_stats").toFile
+    def put(name: String, bytes: Array[Byte]): String = {
+      val f = new java.io.File(dir, name)
+      java.nio.file.Files.write(f.toPath, bytes)
+      f.getAbsolutePath
+    }
+    val tar = put("in.tar.gz", gzipData(tarArchive(Seq(
+      "a.txt" -> "shared body".getBytes("UTF-8"),
+      "b.txt" -> "shared body".getBytes("UTF-8"),
+      "c.txt" -> ("a longer text entry " * 20).getBytes("UTF-8"),
+      "bin" -> fakeElf(Seq("a-long-enough-string", "another/quite/long/run"))))))
+    val para = "the quick brown fox document body has plenty of plain " +
+      "words to clear the sixty character content gate easily"
+    val page = s"<html><head><title>W</title></head><body><p>$para</p></body></html>"
+    val warc = put("in.warc", warcArchive(Seq(
+      Seq("WARC-Type" -> "response", "WARC-Target-URI" -> "http://t/page") ->
+        ("HTTP/1.1 200 OK\r\nContent-Type: text/html; charset=utf-8\r\n\r\n" + page)
+          .getBytes("UTF-8"),
+      Seq("WARC-Type" -> "request", "WARC-Target-URI" -> "http://t/q") ->
+        "GET /q HTTP/1.1\r\nHost: t\r\n\r\n".getBytes("ISO-8859-1"))))
+    val modes = Seq(
+      "plain" -> (tar, ConvertOptions()),
+      "unique" -> (tar, ConvertOptions(unique = true)),
+      "extractStrings" -> (tar, ConvertOptions(extractStrings = true)),
+      "httpPayload" -> (warc, ConvertOptions(httpPayload = true)),
+      "wet" -> (warc, ConvertOptions(wet = true)),
+      "chunked" -> (tar, ConvertOptions(chunked = true, maxEntryBytes = 64L)))
+    modes.foreach { case (mode, (in, o)) =>
+      val out = new java.io.File(dir, s"out_$mode").getPath
+      val stats = ArchiveConverter.convert(spark, Seq(in), out, o)
+      val written = spark.read.parquet(out)
+      val contentBytes = written.agg(sum(length(col("content")))).head().getLong(0)
+      assert(contentBytes > 0, mode)
+      assert(stats.bytes == contentBytes, mode)
+      assert(stats.rows == written.count(), mode)
+    }
+  }
+
+  test("unique output is ordered by hash within each file") {
+    import Fixtures._
+    val arch = java.io.File.createTempFile("graft_sorted", ".tar")
+    arch.deleteOnExit()
+    // 60 entries, every third a duplicate of an earlier one
+    java.nio.file.Files.write(arch.toPath, tarArchive((1 to 60).map { i =>
+      s"f$i" -> s"body ${if (i % 3 == 0) i - 1 else i}".getBytes("UTF-8")
+    }))
+    val out = java.nio.file.Files.createTempDirectory("graft_sorted_out").toString
+    val stats = ArchiveConverter.convert(spark, Seq(arch.getAbsolutePath), out,
+      ConvertOptions(unique = true))
+    assert(stats.rows == 40)
+    val parts = new java.io.File(out).listFiles()
+      .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
+    assert(parts.nonEmpty)
+    val unsigned = Ordering.Implicits.seqOrdering[Seq, Int]
+    parts.foreach { part =>
+      val hashes = spark.read.parquet(part.getAbsolutePath).select("hash").collect()
+        .map(_.getAs[Array[Byte]](0).toSeq.map(_ & 0xff)).toSeq
+      assert(hashes.sliding(2).forall(p => p.size < 2 || unsigned.lt(p(0), p(1))), part.getName)
+    }
+  }
+
   test("early-stop: abandoned walk iterator closes its input at task completion") {
     import Fixtures._
     val f = java.io.File.createTempFile("graft_leak", ".tar")

@@ -96,6 +96,22 @@ class SniffSpec extends AnyFunSuite {
     assert(readAll(stream).sameElements(TestData))
   }
 
+  test("gzip needs CM = 8 and clear reserved flags, not only the magic") {
+    def b(xs: Int*): Array[Byte] = xs.map(_.toByte).toArray
+    assert(Sniff.isGzip(gzipData(TestData)))
+    assert(Sniff.isGzip(b(0x1f, 0x8b, 0x08, 0x1f))) // every defined FLG bit
+    assert(!Sniff.isGzip(b(0x1f, 0x8b)))
+    assert(!Sniff.isGzip(b(0x1f, 0x8b, 0x08)))
+    assert(!Sniff.isGzip(b(0x1f, 0x8b, 0x00, 0x00)))
+    assert(!Sniff.isGzip(b(0x1f, 0x8b, 0x07, 0x00)))
+    Seq(0x20, 0x40, 0x80).foreach(flg => assert(!Sniff.isGzip(b(0x1f, 0x8b, 0x08, flg)), flg))
+    // such data sniffs as plain bytes and reads back unchanged
+    val data = b(0x1f, 0x8b, 0x00, 0x00) ++ TestData
+    val (kind, stream) = Sniff.open(new ByteArrayInputStream(data))
+    assert(kind == FormatKind.Unknown)
+    assert(readAll(stream).sameElements(data))
+  }
+
   test("zstd skippable frame magic is recognized") {
     // frame magic 0x184D2A50..0x184D2A5F, little-endian
     val b = Array[Byte](0x50, 0x2a, 0x4d.toByte, 0x18, 0, 0, 0, 0)

@@ -570,6 +570,156 @@ class WalkerSpec extends AnyFunSuite {
     val cut = java.util.Arrays.copyOf(full, full.length / 2)
     intercept[java.io.IOException] { walk(cut) }
   }
+
+  test("gzip magic without a gzip header: the member is emitted raw") {
+    // 1F 8B followed by a CM other than 8, or reserved FLG bits set, is
+    // ordinary data — it must not reach the inflater and fail the input
+    val fakes = Seq(
+      "cm" -> (Array[Byte](0x1f, 0x8b.toByte, 0x00, 0x00) ++ "not gzip at all".getBytes("UTF-8")),
+      "flg" -> (Array[Byte](0x1f, 0x8b.toByte, 0x08, 0xe0.toByte) ++ Array.fill[Byte](40)(3)),
+      "short" -> Array[Byte](0x1f, 0x8b.toByte))
+    val rows = walk(tarArchive(fakes :+ ("real.gz" -> gzipData(TestData))))
+    assert(rows.map(r => (r.path, r.size)) == fakes.map { case (p, b) => (p, b.length.toLong) } :+
+      ("real.gz", TestData.length.toLong))
+    rows.zip(fakes.map(_._2) :+ TestData).foreach { case (r, want) =>
+      assert(r.content.sameElements(want), r.path)
+      assert(r.hash.sameElements(sha256(want)), r.path)
+    }
+  }
+
+  test("walk allocates little beyond the content: no per-entry copy buffers") {
+    val mx = java.lang.management.ManagementFactory.getThreadMXBean match {
+      case m: com.sun.management.ThreadMXBean
+          if m.isThreadAllocatedMemorySupported && m.isThreadAllocatedMemoryEnabled => m
+      case _ => cancel("this JVM does not count allocated bytes per thread")
+    }
+    val rnd = new java.util.Random(7L)
+    val entries = (1 to 2000).map { i =>
+      val b = new Array[Byte](1 + rnd.nextInt(1024))
+      rnd.nextBytes(b)
+      b(0) = 'x' // no codec or container magic: every entry is a leaf
+      s"e$i" -> b
+    }
+    val tar = tarArchive(entries)
+    val contentBytes = entries.map(_._2.length.toLong).sum
+    def walkOnce(): Long = ArchiveWalker.walk("input", new ByteArrayInputStream(tar),
+      tar.length.toLong, opts).map(_.size).sum
+    walkOnce(); walkOnce() // class loading and JIT out of the way
+    val before = mx.getCurrentThreadAllocatedBytes
+    val walked = walkOnce()
+    val allocated = mx.getCurrentThreadAllocatedBytes - before
+    assert(walked == contentBytes)
+    val perEntry = (allocated - contentBytes) / entries.size
+    assert(perEntry < 32 * 1024, s"$perEntry bytes allocated per entry beyond its content")
+  }
+
+  test("claimed sizes are hints: short, long and unknown claims give the same rows") {
+    val data = Array.tabulate[Byte](5000)(i => (i * 7 + i / 100).toByte)
+    // top level: the claim comes straight from the caller
+    Seq(-1L, 1L, 1234L, 4999L, 5000L, 5001L, 1L << 20).foreach { claim =>
+      val rows = ArchiveWalker.walk("input", new ByteArrayInputStream(data), claim, opts).toVector
+      assert(rows.map(r => (r.path, r.size)) == Vector(("input", 5000L)), s"claim $claim")
+      assert(rows.head.content.sameElements(data), s"claim $claim")
+      assert(rows.head.hash.sameElements(sha256(data)), s"claim $claim")
+    }
+    // inside a tar the claim is the member's stored size: a gzip member
+    // of compressible bytes claims less than it decompresses to, one of
+    // two bytes claims more
+    val big = Array.fill[Byte](10000)('a')
+    val tiny = "hi".getBytes("UTF-8")
+    assert(gzipData(big).length < big.length && gzipData(tiny).length > tiny.length)
+    val rows = walk(tarArchive(Seq("big.gz" -> gzipData(big), "tiny.gz" -> gzipData(tiny),
+      "plain" -> data)))
+    assert(rows.map(r => (r.path, r.size)) == Vector(("big.gz", 10000L), ("tiny.gz", 2L),
+      ("plain", 5000L)))
+    rows.zip(Seq(big, tiny, data)).foreach { case (r, want) =>
+      assert(r.content.sameElements(want), r.path)
+      assert(r.hash.sameElements(sha256(want)), r.path)
+    }
+    // hash-only and size-only walks report the same sizes and digests
+    val hashOnly = walk(tarArchive(Seq("big.gz" -> gzipData(big), "plain" -> data)),
+      o = opts.copy(materializeContent = false))
+    assert(hashOnly.map(r => (r.size, r.content.length)) == Vector((10000L, 0), (5000L, 0)))
+    assert(hashOnly.map(_.hash.toSeq) == Vector(sha256(big).toSeq, sha256(data).toSeq))
+    val sizeOnly = walk(tarArchive(Seq("big.gz" -> gzipData(big), "plain" -> data)),
+      o = opts.copy(materializeContent = false, computeHash = false))
+    assert(sizeOnly.map(r => (r.size, r.hash.length)) == Vector((10000L, 0), (5000L, 0)))
+  }
+
+  test("truncated tar member: the content-read error fails the input") {
+    val data = Array.fill[Byte](3000)(5)
+    val full = tarArchive(Seq("ok" -> TestData, "cut" -> data))
+    // keep the second header and half of its content
+    val cut = java.util.Arrays.copyOf(full, 512 + 512 + 512 + 1500)
+    intercept[java.io.IOException] { walk(cut) }
+  }
+
+  test("over-cap checks hold past a short claim: failure, truncation, exact fit") {
+    // the member claims ~30 bytes (its gzip size) but decompresses to 300
+    val body = Array.tabulate[Byte](300)(i => ('a' + i % 3).toByte)
+    val arch = tarArchive(Seq("z.gz" -> gzipData(body), "ok" -> TestData))
+    assert(gzipData(body).length < 100)
+    val capped = opts.copy(maxEntryBytes = 100L)
+    val ex = intercept[graft.core.OversizeEntryException] { walk(arch, o = capped) }
+    assert(ex.getMessage.contains("z.gz") && ex.getMessage.contains("100"))
+    val rows = walk(arch, o = capped.copy(truncateOversize = true))
+    assert(rows.map(r => (r.path, r.size)) == Vector(("z.gz", 100L), ("ok", TestData.length.toLong)))
+    assert(rows.head.content.sameElements(body.take(100)))
+    assert(rows.head.hash.sameElements(sha256(body.take(100))))
+    val exact = walk(arch, o = opts.copy(maxEntryBytes = 300L))
+    assert(exact.head.size == 300L && exact.head.hash.sameElements(sha256(body)))
+    // a claim beyond the cap never sizes an array: the plain member
+    // fails (or truncates) exactly like the short-claim one
+    val plain = tarArchive(Seq("p" -> body))
+    intercept[graft.core.OversizeEntryException] { walk(plain, o = capped) }
+    val prefix = walk(plain, o = capped.copy(truncateOversize = true))
+    assert(prefix.map(_.size) == Vector(100L) && prefix.head.hash.sameElements(sha256(body.take(100))))
+  }
+
+  test("pruneSizeMax stops each entry at the bound; survivors keep exact rows") {
+    def sized(n: Int) = Array.tabulate[Byte](n)(i => (i % 251).toByte)
+    val big = Array.fill[Byte](500)('q')
+    val arch = tarArchive(Seq("s50" -> sized(50), "s99" -> sized(99), "s100" -> sized(100),
+      "s150" -> sized(150), "big.gz" -> gzipData(big), "small.gz" -> gzipData(sized(20))))
+    val o = opts.copy(pruneSizeMax = Some(100L))
+    val rows = walk(arch, o = o)
+    assert(rows.map(r => (r.path, r.size)) == Vector(("s50", 50L), ("s99", 99L), ("small.gz", 20L)))
+    rows.zip(Seq(sized(50), sized(99), sized(20))).foreach { case (r, want) =>
+      assert(r.content.sameElements(want), r.path)
+      assert(r.hash.sameElements(sha256(want)), r.path)
+    }
+    // the same bound on the hash-only walk
+    val hashOnly = walk(arch, o = o.copy(materializeContent = false))
+    assert(hashOnly.map(r => (r.path, r.size, r.hash.toSeq)) == rows.map(r => (r.path, r.size, r.hash.toSeq)))
+  }
+
+  test("chunked walk: several parts whatever the claim; parts digest their slices") {
+    val body = Array.tabulate[Byte](250)(i => (i * 3).toByte)
+    val capped = opts.copy(maxEntryBytes = 100L)
+    val want = Vector(body.slice(0, 100), body.slice(100, 200), body.slice(200, 250))
+    def check(rows: Vector[graft.core.ArchiveChunk], path: String, label: String): Unit = {
+      assert(rows.map(r => (r.path, r.content_part, r.size)) ==
+        Vector((path, 0L, 100L), (path, 1L, 100L), (path, 2L, 50L)), label)
+      rows.zip(want).foreach { case (r, w) =>
+        assert(r.content.sameElements(w), label)
+        assert(r.hash.sameElements(sha256(w)), label)
+      }
+    }
+    Seq(-1L, 30L, 100L, 200L, 249L, 250L, 251L, 1000L).foreach { claim =>
+      check(ArchiveWalker.walkChunked("input", new ByteArrayInputStream(body), claim, capped).toVector,
+        "input", s"claim $claim")
+    }
+    // in a tar: an exact claim, and a gzip member claiming less than it holds
+    val arch = tarArchive(Seq("exact" -> body, "short.gz" -> gzipData(body)))
+    val rows = ArchiveWalker.walkChunked("input", new ByteArrayInputStream(arch),
+      arch.length.toLong, capped).toVector
+    check(rows.filter(_.path == "exact"), "exact", "tar exact")
+    check(rows.filter(_.path == "short.gz"), "short.gz", "tar short claim")
+    // an entry of exactly two chunks ends without an empty third part
+    val two = ArchiveWalker.walkChunked("input", new ByteArrayInputStream(body.take(200)),
+      200L, capped).toVector
+    assert(two.map(r => (r.content_part, r.size)) == Vector((0L, 100L), (1L, 100L)))
+  }
 }
 
 class AsciiStringsSpec extends AnyFunSuite {
