@@ -1,9 +1,10 @@
 package graft.convert
 
-import graft.core.{ArchiveEntry, ArchiveSchema, ConvertOptions, IncludeType}
+import graft.core.{ArchiveChunk, ArchiveEntry, ArchiveSchema, ConvertOptions, IncludeType}
 import graft.functions.GraftFunctions
 import graft.ops.Quality
-import graft.walk.ArchiveWalker
+import graft.sources.ArchiveTable
+import org.apache.spark.sql.graft.CheckpointShims
 import org.apache.spark.sql.{DataFrame, Dataset, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.LongAccumulator
@@ -12,16 +13,22 @@ import org.apache.spark.util.LongAccumulator
   * declarative Spark plan (reference trace: SURVEY.md §3.1):
   *
   * {{{
-  * paths -> repartition -> flatMap(recursive walk)        // narrow
+  * archive source scan (recursive walk)                   // one partition per input
+  *       -> coalesce(width)                               // narrow
   *       -> filter(text/binary, size range)               // narrow
   *       -> [dropDuplicates(hash)]                        // 1 shuffle
   *       -> write.parquet                                 // task-per-partition
   * }}}
   *
+  * The walk is the `archive` source ([[graft.sources.ArchiveTable]])
+  * built from the inputs and options directly: one walk path, shared
+  * with `spark.read.format("archive")`, column pruning included.
+  *
   * Scale notes (designed for a 1000-executor cluster, tested local):
-  *   - one task per input archive (morsel parallelism — the unit of
-  *     work the reference uses too, converter/base.rs:45-65); inputs
-  *     stream through decompressors, an archive is never materialized;
+  *   - one input archive is the unit of work (morsel parallelism — the
+  *     unit the reference uses too, converter/base.rs:45-65), and
+  *     `parallelism` inputs walk at once; inputs stream through
+  *     decompressors, an archive is never materialized;
   *   - zero shuffles without `unique`; exactly one hash-partitioned
   *     exchange with it. Spark's `dropDuplicates("hash")` plans a
   *     two-phase SortAggregate (SortAggregate <- Sort <- Exchange <-
@@ -94,34 +101,9 @@ object ArchiveConverter {
     }
   }
 
-  /** Raw-read tap for per-input progress (the reference wraps each
-    * input reader in an indicatif ProgressBarIter the same way,
-    * src/converter/progress.rs:91-106). Ticks in >=1 MiB batches so
-    * the hot read path pays one long-add per buffer, not per call;
-    * flushes the remainder at EOF and close.
-    */
-  private final class TapStream(in: java.io.InputStream, tick: Long => Unit)
-      extends java.io.FilterInputStream(in) {
-    private var pending = 0L
-    private def bump(n: Long): Unit = if (n > 0) {
-      pending += n
-      if (pending >= (1L << 20)) { tick(pending); pending = 0L }
-    }
-    private def flush(): Unit = if (pending > 0) { tick(pending); pending = 0L }
-    override def read(): Int = {
-      val b = super.read(); if (b >= 0) bump(1L) else flush(); b
-    }
-    override def read(b: Array[Byte], off: Int, len: Int): Int = {
-      val n = super.read(b, off, len); if (n >= 0) bump(n.toLong) else flush(); n
-    }
-    // tar inter-entry padding and trailing blocks are often skip()ed,
-    // not read — count them too or bars under-run the file size
-    override def skip(n: Long): Long = { val s = super.skip(n); bump(s); s }
-    override def close(): Unit = { flush(); super.close() }
-  }
-
-  /** Read-side counters incremented inside the walker flatMap
-    * (reference: src/progress.rs:11-133, src/channel.rs:28-49).
+  /** Read-side counters incremented inside the archive source's
+    * per-input walk ([[graft.sources.ArchivePartitionReader.entries]];
+    * reference: src/progress.rs:11-133, src/channel.rs:28-49).
     */
   final class WalkMetrics(spark: SparkSession) extends Serializable {
     val inputs: LongAccumulator = spark.sparkContext.longAccumulator("graft.inputs")
@@ -203,98 +185,20 @@ object ArchiveConverter {
       }
   }
 
-  /** Per-input error containment (W7 skip mode): a throw while walking
-    * one input ends THAT input's contribution and invokes `onError`;
-    * rows already emitted stay. Used only with `opts.skipErrors` —
-    * the default propagates (task failure => Spark retry => job abort,
-    * the reference's poisoned-channel semantics).
+  /** The `archive` source over `inputs`, verbatim (they become the
+    * `source` column), coalesced from one partition per input to
+    * min(inputs, parallelism) tasks. `coalesce` is no exchange, so AQE
+    * has nothing to shrink and `parallelism` is the task count.
     */
-  private def contained[T](
-      it: Iterator[T], onError: Throwable => Unit): Iterator[T] =
-    new Iterator[T] {
-      private var pending: T = _
-      private var has = false
-      private var dead = false
-      private def advance(): Unit =
-        if (!has && !dead) {
-          try {
-            if (it.hasNext) { pending = it.next(); has = true } else dead = true
-          } catch { case t: Throwable => onError(t); dead = true }
-        }
-      override def hasNext: Boolean = { advance(); has }
-      override def next(): T = {
-        advance()
-        if (!has) throw new NoSuchElementException("input ended")
-        has = false
-        pending
-      }
-    }
-
-  /** Shared per-input scaffolding for both walk shapes: one pinned
-    * task per input slice, per-input raw-read tap, skipErrors
-    * containment, and the entries/bytes/done counters. `walkOne`
-    * receives (input, tap) and returns that input's row iterator.
-    */
-  private def walkedDataset[T](
+  private def walked(
       spark: SparkSession,
       inputs: Seq[String],
       opts: ConvertOptions,
-      metrics: Option[WalkMetrics],
-      walkOne: (String, java.io.InputStream => java.io.InputStream) => Iterator[T],
-      sizeOf: T => Long)(
-      implicit enc: org.apache.spark.sql.Encoder[T]): Dataset[T] = {
-    import spark.implicits._ // Encoder[String] for the path Dataset
+      metrics: Option[WalkMetrics]): DataFrame = {
     require(inputs.nonEmpty, "no inputs")
     val par = opts.parallelism.getOrElse(spark.sparkContext.defaultParallelism)
-    val width = math.max(1, math.min(inputs.size, math.max(par, 1)))
-    // parallelize(…, width), NOT repartition: a repartition of the tiny
-    // path list is an exchange AQE happily coalesces to ONE partition
-    // (it sees bytes, not the 1000x flatMap blow-up behind each path),
-    // serializing the whole walk onto a single task. parallelize pins
-    // exactly one slice per task with no shuffle at all.
-    spark.createDataset(spark.sparkContext.parallelize(inputs, width))
-      .flatMap { p =>
-        metrics.foreach(_.inputs.add(1L))
-        def failed(t: Throwable): Unit = {
-          metrics.foreach(_.errors.add(1L))
-          System.err.println(
-            s"[graft] skipping failed input $p: ${t.getClass.getSimpleName}: ${t.getMessage}")
-        }
-        // per-input raw-read tap (reference wraps each input reader,
-        // src/converter/progress.rs:91-106); identity when untracked
-        val tap: java.io.InputStream => java.io.InputStream = metrics match {
-          case Some(m) => in => new TapStream(in, d => m.perInputBytes.add(p -> d))
-          case None    => identity
-        }
-        val raw =
-          if (!opts.skipErrors) walkOne(p, tap)
-          else {
-            // containment covers open() too, not just mid-walk reads
-            val opened =
-              try walkOne(p, tap)
-              catch { case t: Throwable => failed(t); Iterator.empty }
-            contained(opened, failed)
-          }
-        raw match {
-          case it if metrics.isEmpty => it
-          case it => val m = metrics.get
-            val counted = it.map { e => m.entries.add(1L); m.bytes.add(sizeOf(e)); e }
-            // count the input finished when its walk exhausts (an
-            // early-stopped consumer never fires this — started vs
-            // finished then reads as in-flight, which is accurate)
-            new Iterator[T] {
-              private var fired = false
-              override def hasNext: Boolean = {
-                val h = counted.hasNext
-                if (!h && !fired) {
-                  fired = true; m.inputsDone.add(1L); m.perInputDone.add(p -> 1L)
-                }
-                h
-              }
-              override def next(): T = counted.next()
-            }
-        }
-      }
+    CheckpointShims.tableFrame(spark, new ArchiveTable(inputs, opts, metrics))
+      .coalesce(math.max(1, math.min(inputs.size, par)))
   }
 
   /** The walked, unfiltered entry Dataset — the engine's logical source.
@@ -307,27 +211,24 @@ object ArchiveConverter {
       opts: ConvertOptions,
       metrics: Option[WalkMetrics] = None): Dataset[ArchiveEntry] = {
     import spark.implicits._
-    walkedDataset[ArchiveEntry](spark, inputs, opts, metrics,
-      (p, tap) => ArchiveWalker.walkInput(p, opts, tap), _.size)
+    walked(spark, inputs, opts.copy(chunked = false), metrics).as[ArchiveEntry]
   }
 
   /** Chunked walk Dataset (see [[graft.walk.ArchiveWalker.walkChunked]]):
     * entries longer than `opts.maxEntryBytes` become multiple rows
     * indexed by `content_part` instead of failing or truncating — the
     * ingest shape for corpora with entries beyond the 2 GiB JVM array
-    * cap. Same per-input scaffolding as [[entries]] (pinned task per
-    * input, raw-read tap, containment, counters); note the
-    * entries/bytes counters count CHUNK rows here, so a split entry
-    * counts once per part.
+    * cap. Same scan as [[entries]] with [[graft.core.ArchiveChunkSchema]]
+    * rows; note the entries/bytes counters count CHUNK rows here, so a
+    * split entry counts once per part.
     */
   def chunkedEntries(
       spark: SparkSession,
       inputs: Seq[String],
       opts: ConvertOptions,
-      metrics: Option[WalkMetrics] = None): Dataset[graft.core.ArchiveChunk] = {
+      metrics: Option[WalkMetrics] = None): Dataset[ArchiveChunk] = {
     import spark.implicits._
-    walkedDataset[graft.core.ArchiveChunk](spark, inputs, opts, metrics,
-      (p, tap) => ArchiveWalker.walkInputChunked(p, opts, tap), _.size)
+    walked(spark, inputs, opts.copy(chunked = true), metrics).as[ArchiveChunk]
   }
 
   /** Reassemble a chunked frame ([[chunkedEntries]]' schema) back into
@@ -410,6 +311,14 @@ object ArchiveConverter {
           col("http_status"), col("http_content_type"),
           col("n_blocks"), col("n_content"))
     }
+    gates(df, opts)
+  }
+
+  /** The include/size gates and `unique` dedup, shared by
+    * [[filteredEntries]] and the streaming converter.
+    */
+  private[graft] def gates(entries: DataFrame, opts: ConvertOptions): DataFrame = {
+    var df = entries
     opts.include match {
       case IncludeType.All    =>
       case IncludeType.Text   => df = df.filter(GraftFunctions.is_utf8(col("content")))

@@ -187,16 +187,16 @@ final case class ConvertOptions(
     // emit the truncated prefix with size/hash describing the PREFIX —
     // only for callers that knowingly want bounded previews.
     truncateOversize: Boolean = false,
-    // Column-pruning hooks for the DataSource V2 face (graft.sources):
-    // when a query projects neither `content` nor `hash`, the walker
-    // still streams every entry (sizes require it, and tar/zip
-    // iteration advances by reading) but skips buffering the bytes
-    // and/or the SHA-256 — `SELECT path, size FROM archive` over
-    // 100 TB allocates no content arrays. The emitted row then carries
-    // an EMPTY content/hash; only the pruned reader sets these.
+    // Column-pruning hooks for the `archive` source (graft.sources),
+    // which the converter scans too: when a query projects neither
+    // `content` nor `hash`, the walker still streams every entry
+    // (sizes require it, and tar/zip iteration advances by reading)
+    // but skips buffering the bytes and/or the SHA-256 — `SELECT path,
+    // size FROM archive` over 100 TB allocates no content arrays. The
+    // row then carries an EMPTY content/hash; the scan sets these.
     materializeContent: Boolean = true,
     computeHash: Boolean = true,
-    // Filter-pushdown hooks for the DataSource V2 face: size/path
+    // Filter-pushdown hooks for the `archive` source: size/path
     // conjuncts Catalyst pushes into the scan land here and the WALKER
     // enforces them — a pruned entry is never buffered or digested,
     // and a nested archive whose lineage can't produce a matching
@@ -204,9 +204,9 @@ final case class ConvertOptions(
     // expanding it). Semantics-preserving by construction: the scan
     // reports every pushed filter as residual, so Spark re-applies
     // them row-side; these hints only drop rows the residual would
-    // drop anyway. Distinct from minSize/maxSize (the converter's F1
-    // gate, applied as a DataFrame filter so converter stats keep
-    // counting pre-filter entries).
+    // drop anyway. The converter's F1 gate (minSize/maxSize) becomes
+    // these hints except in `convert`, whose scan pushes nothing so
+    // its stats keep counting every pre-filter entry.
     //   pruneSizeMin/Max: half-open [min, max) on the WRITTEN size —
     //     an entry reaching max stops buffering/hashing immediately
     //     (it cannot survive the residual filter);

@@ -1,7 +1,8 @@
 package graft.streaming
 
 import graft.convert.ArchiveConverter
-import graft.core.{ArchiveEntry, ConvertOptions}
+import graft.core.ConvertOptions
+import graft.sources.ArchivePartitionReader
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, Trigger}
@@ -19,8 +20,9 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, Trigger}
   *
   * Scale notes:
   *   - the path listing is the streaming source (tiny rows); content
-  *     is only materialized inside the walk flatMap on executors —
-  *     identical narrow pipeline to the batch path;
+  *     is only materialized inside the walk flatMap on executors, which
+  *     runs the batch source's per-input walk — the same narrow
+  *     pipeline as the batch path;
   *   - `dropDuplicates("hash")` keeps 32-byte keys in the state store;
   *     state grows with distinct-content count — callers should use
   *     `withWatermark` + `dropDuplicatesWithinWatermark` when
@@ -51,30 +53,21 @@ object StreamingConverter {
       opts: ConvertOptions): DataFrame = {
     import spark.implicits._
     pathStream(spark, pathDir)
-      .flatMap(p => graft.walk.ArchiveWalker.walkInputChunked(p, opts))
+      .flatMap(p => ArchivePartitionReader.chunks(p, opts, None))
       .toDF()
   }
 
-  /** The walked entry stream: same recursive walker, same filters. */
+  /** The walked entry stream: the batch source's per-input walk
+    * (`skipErrors` containment included) and the batch converter's
+    * include/size/unique gates.
+    */
   def entryStream(spark: SparkSession, pathDir: String, opts: ConvertOptions): DataFrame = {
     import spark.implicits._
-    var df = pathStream(spark, pathDir)
-      .flatMap(p => graft.walk.ArchiveWalker.walkInput(p, opts))
-      .toDF()
-    opts.include match {
-      case graft.core.IncludeType.All    =>
-      case graft.core.IncludeType.Text   =>
-        df = df.filter(graft.functions.GraftFunctions.is_utf8(col("content")))
-      case graft.core.IncludeType.Binary =>
-        df = df.filter(!graft.functions.GraftFunctions.is_utf8(col("content")))
-    }
-    (opts.minSize, opts.maxSize) match {
-      case (None, None) =>
-      case (mn, mx) =>
-        df = df.filter(col("size") >= mn.getOrElse(0L) && col("size") < mx.getOrElse(Long.MaxValue))
-    }
-    if (opts.unique) df = df.dropDuplicates("hash")
-    df
+    ArchiveConverter.gates(
+      pathStream(spark, pathDir)
+        .flatMap(p => ArchivePartitionReader.entries(p, opts, None))
+        .toDF(),
+      opts)
   }
 
   /** WARC → HTTP-payload ingestion as a STREAM — the crawl stack's

@@ -87,14 +87,7 @@ object ArchiveWalker {
     walk(path, in, size, opts)
   }
 
-  /** Walk one http(s)/file URL (see [[openUrl]]). */
-  def walkUrl(url: String, opts: ConvertOptions,
-      tap: InputStream => InputStream = identity): Iterator[ArchiveEntry] = {
-    val (in, size) = openUrl(url, tap)
-    walk(url, in, size, opts)
-  }
-
-  /** Dispatch on input spelling: URLs walk via [[walkUrl]], everything
+  /** Dispatch on input spelling: URLs open via [[openUrl]], everything
     * else is a local path.
     */
   def walkInput(input: String, opts: ConvertOptions,
@@ -128,20 +121,6 @@ object ArchiveWalker {
     val it = walkEntryG(source, Nil, Details(source, claimedSize),
       parent = None, raw = in, depth = 0, opts, new ChunkLeaf)
     closing(it, in)
-  }
-
-  /** [[walkPath]]'s chunked sibling. */
-  def walkPathChunked(path: String, opts: ConvertOptions,
-      tap: InputStream => InputStream = identity): Iterator[graft.core.ArchiveChunk] = {
-    val (in, size) = openPath(path, tap)
-    walkChunked(path, in, size, opts)
-  }
-
-  /** [[walkUrl]]'s chunked sibling. */
-  def walkUrlChunked(url: String, opts: ConvertOptions,
-      tap: InputStream => InputStream = identity): Iterator[graft.core.ArchiveChunk] = {
-    val (in, size) = openUrl(url, tap)
-    walkChunked(url, in, size, opts)
   }
 
   /** [[walkInput]]'s chunked sibling: same URL-vs-path dispatch. */

@@ -2,9 +2,11 @@ package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeMap, Expression}
 import org.apache.spark.sql.catalyst.plans.physical.{Partitioning, UnknownPartitioning}
-import org.apache.spark.sql.classic.{DataFrame, Dataset}
+import org.apache.spark.sql.classic.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.connector.catalog.Table
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 
 /** `localCheckpoint(eager = true)` that KEEPS the materialized frame's
   * output partitioning.
@@ -24,6 +26,10 @@ import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
   * behavior, never to a wrong claim.
   */
 object CheckpointShims {
+
+  /** A DataSource V2 table object (not string options) as a DataFrame. */
+  def tableFrame(spark: org.apache.spark.sql.SparkSession, table: Table): DataFrame =
+    Dataset.ofRows(spark.asInstanceOf[SparkSession], DataSourceV2Relation.create(table, None, None))
 
   def localCheckpointPartitioned(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     val ds = df.asInstanceOf[DataFrame]

@@ -205,6 +205,51 @@ class SinkSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  test("size filters leave the read stats counting every pre-filter entry") {
+    import Fixtures._
+    val arch = java.io.File.createTempFile("graft_prefilter", ".tar.gz")
+    arch.deleteOnExit()
+    // sizes 5..1500: the size window keeps the middle and drops both ends
+    val members = (1 to 30).map(i => s"f$i" -> Array.fill[Byte](i * 50 - 45)((i % 7 + 97).toByte))
+    java.nio.file.Files.write(arch.toPath, gzipData(tarArchive(members)))
+    val sizes = members.map(_._2.length.toLong)
+    val out = java.nio.file.Files.createTempDirectory("graft_prefilter_out").toString
+    val stats = ArchiveConverter.convert(spark, Seq(arch.getAbsolutePath), out,
+      ConvertOptions(minSize = Some(200L), maxSize = Some(1000L)))
+    val kept = sizes.filter(s => s >= 200 && s < 1000)
+    assert(kept.nonEmpty && kept.size < sizes.size)
+    assert(stats.rows == kept.size && stats.bytes == kept.sum)
+    assert(stats.entriesRead == sizes.size, stats)
+    assert(stats.bytesRead == sizes.sum, stats)
+  }
+
+  test("inputs stay verbatim in `source`; parallelism sets the task and file count") {
+    import Fixtures._
+    val dir = java.nio.file.Files.createTempDirectory("graft_width").toFile
+    val files = (1 to 5).map { i =>
+      val f = new java.io.File(dir, s"in$i.tar")
+      java.nio.file.Files.write(f.toPath, tarArchive(Seq(s"f$i.txt" -> s"body $i".getBytes("UTF-8"))))
+      f
+    }
+    val cwd = new java.io.File(".").getCanonicalFile.toPath
+    val inputs = Seq(
+      cwd.relativize(files(0).getCanonicalFile.toPath).toString, // relative path
+      files(1).toURI.toString) ++                                 // file: URL
+      files.drop(2).map(_.getAbsolutePath)
+    val walked = ArchiveConverter.entries(spark, inputs, ConvertOptions(parallelism = Some(2)))
+    assert(walked.rdd.getNumPartitions == 2)
+    assert(walked.collect().map(_.source).sorted.toSeq == inputs.sorted)
+    val out = java.nio.file.Files.createTempDirectory("graft_width_out").toString
+    val stats = ArchiveConverter.convert(spark, inputs, out, ConvertOptions(parallelism = Some(2)))
+    assert(stats.rows == 5 && stats.inputs == 5)
+    val parts = new java.io.File(out).listFiles()
+      .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
+    assert(parts.length == 2)
+    // more width than inputs: one task per input
+    assert(ArchiveConverter.entries(spark, inputs.take(3), ConvertOptions(parallelism = Some(8)))
+      .rdd.getNumPartitions == 3)
+  }
+
   test("unique output is ordered by hash within each file") {
     import Fixtures._
     val arch = java.io.File.createTempFile("graft_sorted", ".tar")

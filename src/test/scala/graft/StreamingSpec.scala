@@ -201,6 +201,35 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(back.getAs[Array[Byte]]("content").sameElements(big))
   }
 
+  test("streaming skipErrors: a truncated input is skipped, the good input's rows land") {
+    import Fixtures._
+    val dir = tmp("graft_sskip")
+    val good = new java.io.File(dir, "good.tar.gz")
+    java.nio.file.Files.write(good.toPath,
+      gzipData(tarArchive(Seq("ok.txt" -> "fine content".getBytes("UTF-8")))))
+    // truncated gzip over incompressible bytes: the cut lands mid-entry,
+    // so the walk fails with a read error, not a clean EOF
+    val noise = new Array[Byte](256 * 1024)
+    new java.util.Random(5L).nextBytes(noise)
+    val full = gzipData(tarArchive(Seq("big.bin" -> noise)))
+    val bad = new java.io.File(dir, "bad.tar.gz")
+    java.nio.file.Files.write(bad.toPath, java.util.Arrays.copyOf(full, full.length / 2))
+    val pathDir = tmp("graft_sskip_paths")
+    java.nio.file.Files.writeString(new java.io.File(pathDir, "b1.txt").toPath,
+      bad.getAbsolutePath + "\n" + good.getAbsolutePath + "\n")
+    val out = tmp("graft_sskip_out").getAbsolutePath
+    val ckpt = tmp("graft_sskip_ckpt").getAbsolutePath
+
+    val entries = StreamingConverter.entryStream(spark, pathDir.getAbsolutePath,
+      ConvertOptions(skipErrors = true))
+    val q = StreamingConverter.writer(entries, out, ckpt, availableNow = true).start()
+    q.awaitTermination(120000)
+    q.stop()
+    assert(q.exception.isEmpty, q.exception.toString)
+    val got = spark.read.parquet(out)
+    assert(got.select("path").collect().map(_.getString(0)).toSeq == Seq("ok.txt"))
+  }
+
   test("streaming windowed counts match the batch shape") {
     import spark.implicits._
     val events = Seq(
