@@ -291,13 +291,15 @@ object Bench {
     // /proc/stat steal), so the second pass is unconditional; the
     // bounded calm-wait between passes only delays it while steal IS
     // visible. Per-pass totals/cores/steal are emitted as evidence.
-    def sweepPass(): (Map[String, Double], Double, Double, Double) = {
+    // a query that threw has no timing in that pass (None), never the
+    // elapsed time of its failure
+    def sweepPass(): (Map[String, Option[Double]], Double, Double, Double) = {
       val st0 = stealSecs(); val c0 = osBean.getProcessCpuTime
       val t0 = System.nanoTime()
       val r = SparkEntry.queries.map { case (name, fn) =>
         val q0 = System.nanoTime()
-        try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
-        name -> (System.nanoTime() - q0) / 1e9
+        val ran = try { fn(spark, sfDir).count(); true } catch { case _: Throwable => false }
+        name -> Option.when(ran)((System.nanoTime() - q0) / 1e9)
       }
       val wall = (System.nanoTime() - t0) / 1e9
       (r, wall, (osBean.getProcessCpuTime - c0) / 1e9 / wall, stealSecs() - st0)
@@ -309,9 +311,13 @@ object Bench {
       stealSecs() - s0 >= 0.25 // >= 1 stolen core: keep waiting
     }) ()
     val pass2 = sweepPass()
-    val results = pass1._1.map { case (name, v1) =>
-      name -> math.min(v1, pass2._1.getOrElse(name, v1))
+    // best-of-2 over the passes in which the query ran; a query that
+    // threw in both passes is reported under "failed", not timed
+    val ran = pass1._1.map { case (name, v1) =>
+      name -> (v1 ++ pass2._1.getOrElse(name, None)).minOption
     }
+    val results = ran.collect { case (name, Some(v)) => name -> v }
+    val failed = ran.collect { case (name, None) => name }.toSeq
     // "method":"best2" marks the r11 methodology change IN the
     // evidence: pass 2 runs page-cache/JIT-warm, so per-query minima
     // are systematically faster than pre-r11 single-pass numbers —
@@ -343,9 +349,12 @@ object Bench {
       else if (f"$v%.3f" != "0.000") f"$v%.3f"
       else "0.001" // floor: a query is >= one Spark job, never truly 0
     }
-    val qs = results.map { case (k, v) =>
-      s""""${k.split("_")(0).drop(1)}":${fmtSecs(v)}""" }
+    def regNo(name: String): String = name.split("_")(0).drop(1)
+    val qs = results.map { case (k, v) => s""""${regNo(k)}":${fmtSecs(v)}""" }
       .mkString("{", ",", "}")
+    val failedJson =
+      if (failed.isEmpty) ""
+      else failed.map(n => s""""${regNo(n)}"""").mkString(""","failed":[""", ",", "]")
     val total = if (results.nonEmpty) results.values.sum else 0.0
     // hard length budget: the driver parses a 2000-char tail of the
     // WHOLE process output, and sbt's own `[success] Total time ...`
@@ -355,7 +364,7 @@ object Bench {
     // line to 1850 so line + footer fit with slack; shrink the
     // evidence arrays (8 -> 4 -> 2 entries -> scalars) until it fits.
     def lineWith(maxShow: Int, sweep: Boolean = true): String =
-      f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"sf":"$sfDir"${if (sweep) sweepJson else ""}${convJson(maxShow)}}"""
+      f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs$failedJson,"sf":"$sfDir"${if (sweep) sweepJson else ""}${convJson(maxShow)}}"""
     // final rung: at 137 registry entries the queries map alone is
     // ~1470 chars and lineWith(0) sits within a char of the budget on
     // slow hosts (3-digit totals, 4-char per-query values) — dropping

@@ -286,7 +286,7 @@ object Similarity {
       s"ivfCell (nlist=${codebook.length})",
       "assign-and-write once with a smaller nlist per pass, or restate " +
         "the assignment as a broadcast join against the codebook rows " +
-        "— at-rest probes (ivfPqTopKAtRest) never inline the codebook " +
+        "— at-rest probes (AnnIndex.probe) never inline the codebook " +
         "at query time, they prune cell directories by file listing")
     val vnorm = sqrt(GraftFunctions.vec_dot(vec, vec))
     -greatest(codebook.toIndexedSeq.map { case (id, v, n) =>
@@ -331,9 +331,9 @@ object Similarity {
     * file-per-cell fan-out.
     */
   def writeIvfPartitioned(df: DataFrame, vecCol: String,
-      codebook: IvfCodebook, out: String, cellCol: String = "cell"): Unit =
-    df.withColumn(cellCol, ivfCell(codebook, col(vecCol)))
-      .write.mode("overwrite").partitionBy(cellCol).parquet(out)
+      codebook: IvfCodebook, out: String): Unit =
+    df.withColumn(AnnIndex.Cell, ivfCell(codebook, col(vecCol)))
+      .write.mode("overwrite").partitionBy(AnnIndex.Cell).parquet(out)
 
   /** ANN top-k over a [[writeIvfPartitioned]] layout: filter on the
     * partition column (file-listing prune, no data read outside the
@@ -342,11 +342,10 @@ object Similarity {
     */
   def ivfTopKAtRest(spark: org.apache.spark.sql.SparkSession, path: String,
       idCol: String, vecCol: String, codebook: IvfCodebook,
-      query: Array[Double], k: Int, nprobe: Int = 4,
-      cellCol: String = "cell"): DataFrame = {
+      query: Array[Double], k: Int, nprobe: Int = 4): DataFrame = {
     val probed = ivfProbed(codebook, query, nprobe)
     spark.read.parquet(path)
-      .where(col(cellCol).isin(probed: _*))
+      .where(col(AnnIndex.Cell).isin(probed: _*))
       .select(col(idCol), round(cosineTo(col(vecCol), query), 6).as("cos"))
       .orderBy(col("cos").desc, col(idCol))
       .limit(k)
@@ -568,17 +567,18 @@ object Similarity {
   }
 
   /** ADC top-k over PRE-ENCODED codes — the at-rest query shape: the
-    * corpus stores only its `array<int>` codes ([[pqCode]], or
-    * [[pqUnpack]] of the packed long), encoding cost was paid once at
+    * corpus stores only its `array<int>` codes in a `code` column
+    * ([[pqCode]], or [[pqUnpack]] of the packed long, the layout
+    * writers' column name), encoding cost was paid once at
     * ingest, and a query is m lookups + sum per row over a
     * codes-only scan (~4 bytes/vector read instead of 256).
     * [[pqAdcTopK]] is the encode-in-flight convenience face; THIS is
     * what a production scan runs.
     */
-  def pqAdcTopKCoded(df: DataFrame, idCol: String, codeCol: String,
+  def pqAdcTopKCoded(df: DataFrame, idCol: String,
       cb: PqCodebooks, query: Array[Double], k: Int): DataFrame = {
     val lut = pqAdcTable(cb, query)
-    df.select(col(idCol), round(adcColumn(lut, col(codeCol)), 6).as("adc"))
+    df.select(col(idCol), round(adcColumn(lut, col(AnnIndex.Code)), 6).as("adc"))
       .orderBy(col("adc"), col(idCol))
       .limit(k)
   }
@@ -745,11 +745,14 @@ object Similarity {
       (acc, c) => acc.when(cell === c._1, vecLit(c._2))
     }
 
-  /** The (id, cell, code) projection with RESIDUAL-encoded codes —
-    * the at-rest face of [[ivfPqResidualTopK]]'s encoder: the residual
-    * `v - centroid(cell(v))` is materialized as its own projection
-    * (an expensive multi-reference alias, so Catalyst keeps it a
-    * separate Project — evaluated once per row, not once per
+  /** The (id, cell, code) projection shared by the IVF-PQ layout
+    * writers and appends: one narrow codegen'd pass of two inlined
+    * codebooks — no shuffle, no join, nothing driver-side.
+    *
+    * Residual codes (`residual = true`, `cb` the residual tables): the
+    * residual `v - centroid(cell(v))` is materialized as its own
+    * projection (an expensive multi-reference alias, so Catalyst keeps
+    * it a separate Project — evaluated once per row, not once per
     * centroid-distance term), and the SHARED residual codebook
     * quantizes it through the same [[pqCode]] argmin chain raw
     * encoding uses. Arithmetic is residual-coordinate
@@ -758,30 +761,25 @@ object Similarity {
     * same real number with a different (equally oracle-pinned) IEEE
     * association.
     */
-  private def ivfPqResidualCoded(df: DataFrame, idCol: String, vecCol: String,
-      ivfCb: IvfCodebook, rcb: PqCodebooks,
-      cellCol: String, codeCol: String,
-      keep: Seq[String]): DataFrame =
-    df.select((col(idCol) +: keep.map(col)) ++ Seq(
-      transform(col(vecCol), x => x.cast("double")).as("__v"),
-      ivfCell(ivfCb, col(vecCol)).as(cellCol)): _*)
-      .withColumn("__res",
-        zip_with(col("__v"), cellCentroid(ivfCb, col(cellCol)), (a, b) => a - b))
-      .select((col(idCol) +: keep.map(col)) ++ Seq(
-        col(cellCol),
-        pqCode(rcb, col("__res")).as(codeCol)): _*)
+  private def coded(df: DataFrame, idCol: String, vecCol: String,
+      ivfCb: IvfCodebook, cb: PqCodebooks, residual: Boolean,
+      keep: Seq[String]): DataFrame = {
+    val ids = col(idCol) +: keep.map(col)
+    val cell = ivfCell(ivfCb, col(vecCol)).as(AnnIndex.Cell)
+    if (!residual)
+      df.select(ids ++ Seq(cell, pqCode(cb, col(vecCol)).as(AnnIndex.Code)): _*)
+    else
+      df.select(ids ++ Seq(
+          transform(col(vecCol), x => x.cast("double")).as("__v"), cell): _*)
+        .withColumn("__res", zip_with(col("__v"),
+          cellCentroid(ivfCb, col(AnnIndex.Cell)), (a, b) => a - b))
+        .select(ids ++ Seq(col(AnnIndex.Cell),
+          pqCode(cb, col("__res")).as(AnnIndex.Code)): _*)
+  }
 
-  /** The (id, cell, code) projection shared by the IVF-PQ layout
-    * writers: one narrow codegen'd pass of two inlined codebooks —
-    * no shuffle, no join, nothing driver-side.
-    */
-  private def ivfPqCoded(df: DataFrame, idCol: String, vecCol: String,
-      ivfCb: IvfCodebook, pqCb: PqCodebooks,
-      cellCol: String, codeCol: String,
-      keep: Seq[String]): DataFrame =
-    df.select((col(idCol) +: keep.map(col)) ++ Seq(
-      ivfCell(ivfCb, col(vecCol)).as(cellCol),
-      pqCode(pqCb, col(vecCol)).as(codeCol)): _*)
+  /** Write a coded frame as an IVF-PQ layout: `partitionBy(cell)`. */
+  private def writeCoded(df: DataFrame, mode: String, out: String): Unit =
+    df.write.mode(mode).partitionBy(AnnIndex.Cell).parquet(out)
 
   /** Write the IVF-PQ AT-REST layout: (id, cell, code) rows
     * `partitionBy(cell)` — PQ codes only, never fp32 vectors, so a
@@ -793,17 +791,16 @@ object Similarity {
     *
     * `keep` carries extra METADATA columns (language, source, license
     * tier, ...) into the layout, making filtered search possible at
-    * rest: [[ivfPqTopKAtRest]]'s `filter` predicate over a kept
+    * rest: [[AnnIndex.probe]]'s `filter` predicate over a kept
     * column is pushed into the parquet scan, so "top-k among docs
     * with lang = en" reads codes from probed cells with the predicate
     * evaluated at scan speed — never a post-rank re-query.
     */
   def writeIvfPqPartitioned(df: DataFrame, idCol: String, vecCol: String,
       ivfCb: IvfCodebook, pqCb: PqCodebooks, out: String,
-      cellCol: String = "cell", codeCol: String = "code",
       keep: Seq[String] = Nil): Unit = {
-    ivfPqCoded(df, idCol, vecCol, ivfCb, pqCb, cellCol, codeCol, keep)
-      .write.mode("overwrite").partitionBy(cellCol).parquet(out)
+    writeCoded(coded(df, idCol, vecCol, ivfCb, pqCb, residual = false, keep),
+      "overwrite", out)
     writeIvfPqCodebooks(df.sparkSession, out, ivfCb, pqCb)
   }
 
@@ -811,7 +808,7 @@ object Similarity {
     * sidecar — underscore-prefixed, so plain reads of the layout skip
     * it, the `_SUCCESS` convention). A layout that carries its own
     * codebooks is SELF-CONTAINED: a fresh session probes it from the
-    * files alone ([[ivfPqTopKFromFiles]]) — no retraining, no
+    * files alone ([[AnnIndex.open]]) — no retraining, no
     * out-of-band codebook hand-off — and [[appendIvfPq]] can verify
     * the caller's codebooks against the stored ones instead of
     * trusting them. KB-sized: nlist x dim + m x ks x dsub doubles.
@@ -851,11 +848,6 @@ object Similarity {
       StructField("norm", DoubleType, nullable = false)))
   }
 
-  /** Load the codebooks a [[writeIvfPqPartitioned]] layout was written
-    * with (exact double round-trip through parquet — the loaded
-    * codebooks reproduce cell assignment and encoding bit-for-bit).
-    * Bounded driver collect: nlist + m x ks rows.
-    */
   /** True iff `layout` carries a `_codebooks` sidecar — an explicit
     * filesystem check, so a present-but-corrupt sidecar can never
     * masquerade as absence and skip validation (r14 ADVICE).
@@ -864,109 +856,52 @@ object Similarity {
       layout: String): Boolean =
     Layouts.exists(spark, layout + "/_codebooks")
 
-  def readIvfPqCodebooks(spark: org.apache.spark.sql.SparkSession,
-      layout: String): (IvfCodebook, PqCodebooks) =
-    readCodebooksOfKind(spark, layout, "pq", "rpq",
-      "the layout holds RESIDUAL-encoded codes — probe it with " +
-        "ivfPqResidualTopKFromFiles / readIvfPqResidualCodebooks")
-
-  /** [[readIvfPqCodebooks]] for a RESIDUAL layout
-    * ([[writeIvfPqResidualPartitioned]]): the second element is the
-    * residual PQ tables (`kind='rpq'`). Fails fast on a raw-PQ
-    * layout — ranking raw codes through residual tables (or vice
-    * versa) is silent garbage, which the kind tag exists to prevent.
-    */
-  def readIvfPqResidualCodebooks(spark: org.apache.spark.sql.SparkSession,
-      layout: String): (IvfCodebook, PqCodebooks) =
-    readCodebooksOfKind(spark, layout, "rpq", "pq",
-      "the layout holds raw-PQ codes — probe it with " +
-        "ivfPqTopKFromFiles / readIvfPqCodebooks")
-
-  /** The PQ kind the layout's `_codebooks` sidecar stores: `"pq"`
-    * (raw-vector codes) or `"rpq"` (residual codes) — the dispatch a
-    * kind-agnostic caller (the streaming ingest loop) needs to pick
-    * the right encoder without being told out of band. Curated
-    * failure on a missing sidecar or one holding neither kind.
-    */
-  def sidecarPqKind(spark: org.apache.spark.sql.SparkSession,
-      layout: String): String = {
-    require(hasIvfPqCodebooks(spark, layout),
-      s"no _codebooks sidecar under $layout — a kind-agnostic append " +
-        "cannot pick an encoder; rewrite with writeIvfPqPartitioned / " +
-        "writeIvfPqResidualPartitioned (or use the explicit-codebook faces)")
-    val kinds = Layouts.collectSidecarCached(spark, layout + "/_codebooks",
-      "writeIvfPqPartitioned / writeIvfPqResidualPartitioned")
-      .map(_.getString(0)).distinct.toSet
-    // a sidecar holding BOTH kinds is ambiguous/corrupt (no writer
-    // produces one): refusing beats silently preferring the raw
-    // encoder — exactly the garbage mode the kind tag exists to prevent
-    if (kinds.contains("pq") && kinds.contains("rpq"))
-      throw new IllegalStateException(
-        s"the _codebooks sidecar under $layout holds BOTH 'pq' and " +
-          "'rpq' tables — ambiguous (no writer produces this); rebuild " +
-          "the layout with writeIvfPqPartitioned / " +
-          "writeIvfPqResidualPartitioned")
-    if (kinds.contains("pq")) "pq"
-    else if (kinds.contains("rpq")) "rpq"
-    else throw new IllegalStateException(
-      s"the _codebooks sidecar under $layout holds neither 'pq' nor " +
-        s"'rpq' tables (kinds present: ${kinds.toSeq.sorted.mkString(", ")})")
-  }
-
-  private def readCodebooksOfKind(spark: org.apache.spark.sql.SparkSession,
-      layout: String, kind: String, otherKind: String,
-      otherHint: String): (IvfCodebook, PqCodebooks) = {
-    require(hasIvfPqCodebooks(spark, layout),
-      s"no _codebooks sidecar under $layout — the layout predates the " +
-        "sidecar or was hand-built; pass the codebooks explicitly " +
-        "(ivfPqTopKAtRest) or rewrite with writeIvfPqPartitioned")
-    // cached per generation: a streaming loop re-derives kind and
-    // codebooks every micro-batch, and without the cache each
-    // derivation re-reads the same KB-sized sidecar parquet
-    val rows = Layouts.collectSidecarCached(spark, layout + "/_codebooks",
-      "writeIvfPqPartitioned")
-    val ivf: IvfCodebook = rows.filter(_.getString(0) == "ivf")
-      .sortBy(_.getInt(1))
-      .map(r => (r.getLong(2), r.getSeq[Double](3).toArray, r.getDouble(4)))
-    val pqRows = rows.filter(_.getString(0) == kind)
-    if (pqRows.isEmpty) {
-      // unconditional: a sidecar with only 'ivf' rows (or an unknown
-      // kind string) must fail HERE, naming what it actually holds,
-      // not defer to a confusing downstream pqAdcTable/pqCode error
-      val present = rows.map(_.getString(0)).distinct.sorted
-      val hint =
-        if (present.contains(otherKind)) "; " + otherHint else ""
-      throw new IllegalStateException(
-        s"the _codebooks sidecar under $layout has no '$kind' tables " +
-          s"(kinds present: ${present.mkString(", ")})" + hint)
-    }
-    val pq: PqCodebooks = pqRows.map(_.getInt(1)).distinct.sorted.map { m =>
-      pqRows.filter(_.getInt(1) == m).sortBy(_.getLong(2))
-        .map(_.getSeq[Double](3).toArray)
-    }
-    if (ivf.isEmpty) {
-      // same exception FACE as the missing-PQ-kind and collectSidecar
-      // failures: every corruption mode of a present sidecar is an
-      // IllegalStateException, so one catch covers them all
-      val present = rows.map(_.getString(0)).distinct.sorted
-      throw new IllegalStateException(
-        s"the _codebooks sidecar under $layout has no 'ivf' coarse " +
-          s"codebook (kinds present: ${present.mkString(", ")})")
-    }
-    (ivf, pq)
-  }
-
-  private def sameCodebooks(a: (IvfCodebook, PqCodebooks),
-      ivfCb: IvfCodebook, pqCb: PqCodebooks): Boolean = {
-    val (si, sp) = a
-    si.length == ivfCb.length &&
-      si.zip(ivfCb).forall { case ((ia, va, na), (ib, vb, nb)) =>
+  private def sameCodebooks(idx: AnnIndex,
+      ivfCb: IvfCodebook, pqCb: PqCodebooks): Boolean =
+    idx.ivf.length == ivfCb.length &&
+      idx.ivf.zip(ivfCb).forall { case ((ia, va, na), (ib, vb, nb)) =>
         ia == ib && na == nb && java.util.Arrays.equals(va, vb) } &&
-      sp.length == pqCb.length &&
-      sp.zip(pqCb).forall { case (ta, tb) =>
+      idx.pq.length == pqCb.length &&
+      idx.pq.zip(pqCb).forall { case (ta, tb) =>
         ta.length == tb.length &&
           ta.zip(tb).forall { case (ca, cb) => java.util.Arrays.equals(ca, cb) }
       }
+
+  /** The file-additive append shared by [[appendIvfPq]] (raw codes)
+    * and [[appendIvfPqResidual]] (residual codes): refuse while a
+    * compaction holds the quiesce marker, verify the caller's
+    * codebooks — and the kind — against the sidecar when the layout
+    * has one, then encode only the batch into the cell directories.
+    */
+  private def appendCoded(batch: DataFrame, idCol: String, vecCol: String,
+      ivfCb: IvfCodebook, cb: PqCodebooks, residual: Boolean, out: String,
+      keep: Seq[String], face: String): Unit = {
+    val spark = batch.sparkSession
+    // refuse while a compaction holds the layout's quiesce marker: an
+    // append racing the increment fold is the documented race, made
+    // mechanical (the caller retries after the fold)
+    Layouts.assertNotQuiesced(spark, out, face)
+    // absence of the sidecar (pre-sidecar or hand-built layout) skips
+    // the check — decided by an explicit filesystem probe, so a
+    // present-but-corrupt sidecar FAILS (curated, in AnnIndex.open)
+    // instead of silently skipping the validation it exists to enforce
+    if (hasIvfPqCodebooks(spark, out)) {
+      val stored = AnnIndex.at(spark, out, idCol)
+      // appending one kind's codes into the other's layout silently
+      // poisons every probe
+      if (stored.residual != residual)
+        throw new IllegalStateException(
+          s"$face: the layout at $out holds '${stored.kind}' codes — " +
+            (if (stored.residual) "append with appendIvfPqResidual"
+             else "append with appendIvfPq"))
+      require(sameCodebooks(stored, ivfCb, cb),
+        s"$face: the codebooks passed do not match the ones stored with " +
+          s"the layout at $out — an append encoded with different " +
+          "codebooks silently mis-cells the batch; read them back with " +
+          "AnnIndex.open or rebuild the layout")
+    }
+    writeCoded(coded(batch, idCol, vecCol, ivfCb, cb, residual, keep),
+      "append", out)
   }
 
   /** INCREMENTAL maintenance of a [[writeIvfPqPartitioned]] layout —
@@ -978,7 +913,7 @@ object Similarity {
     * cells the batch lands in (existing files untouched; parquet
     * appends are file-additive). Probes over corpus+increment then
     * answer from the merged listing with the SAME pruning
-    * ([[ivfPqTopKAtRest]]) and no retraining.
+    * ([[AnnIndex.probe]]) and no retraining.
     *
     * The codebooks MUST be the ones the layout was written with —
     * mixing codebooks silently mis-cells the batch, so when the layout
@@ -996,30 +931,9 @@ object Similarity {
     */
   def appendIvfPq(batch: DataFrame, idCol: String, vecCol: String,
       ivfCb: IvfCodebook, pqCb: PqCodebooks, out: String,
-      cellCol: String = "cell", codeCol: String = "code",
-      keep: Seq[String] = Nil): Unit = {
-    val spark = batch.sparkSession
-    // refuse while a compaction holds the layout's quiesce marker: an
-    // append racing the increment fold is the documented race, made
-    // mechanical (the caller retries after the fold)
-    Layouts.assertNotQuiesced(spark, out, "appendIvfPq")
-    // absence of the sidecar (pre-sidecar or hand-built layout) skips
-    // the check — decided by an explicit filesystem probe, so a
-    // present-but-corrupt sidecar FAILS (curated, in readIvfPqCodebooks)
-    // instead of silently skipping the validation it exists to enforce
-    val stored =
-      if (hasIvfPqCodebooks(spark, out)) Some(readIvfPqCodebooks(spark, out))
-      else None
-    stored.foreach { s =>
-      require(sameCodebooks(s, ivfCb, pqCb),
-        s"appendIvfPq: the codebooks passed do not match the ones stored " +
-          s"with the layout at $out — an append encoded with different " +
-          "codebooks silently mis-cells the batch; read them back with " +
-          "readIvfPqCodebooks or rebuild with writeIvfPqPartitioned")
-    }
-    ivfPqCoded(batch, idCol, vecCol, ivfCb, pqCb, cellCol, codeCol, keep)
-      .write.mode("append").partitionBy(cellCol).parquet(out)
-  }
+      keep: Seq[String] = Nil): Unit =
+    appendCoded(batch, idCol, vecCol, ivfCb, pqCb, residual = false, out,
+      keep, "appendIvfPq")
 
   /** [[appendIvfPq]] for the STREAMING ingest loop (the
     * [[graft.ops.Dedup.appendNearDupIndexIncrement]] play for
@@ -1028,10 +942,8 @@ object Similarity {
     * inside it, overwritten wholesale), so a crash-replay rewrites the
     * same rows — plain `mode("append")` would duplicate them, and a
     * duplicated id in an ANN layout surfaces twice in a top-k.
-    * Underscore-prefixed: plain reads and [[ivfPqTopKFromFiles]] skip
-    * increments; probes opt in via
-    * [[ivfPqTopKFromFilesWithIncrements]] /
-    * [[ivfPqResidualTopKFromFilesWithIncrements]], and
+    * Underscore-prefixed, so plain reads skip increments;
+    * [[AnnIndex.probe]] reads every committed one, and
     * [[compactIvfPqLayout]] folds them into the next base generation.
     *
     * The layout must be self-contained (a `_codebooks` sidecar): a
@@ -1042,9 +954,7 @@ object Similarity {
     * poison a residual layout with raw codes or vice versa.
     */
   def appendIvfPqIncrement(batch: DataFrame, idCol: String, vecCol: String,
-      out: String, batchId: Long,
-      cellCol: String = "cell", codeCol: String = "code",
-      keep: Seq[String] = Nil): Unit = {
+      out: String, batchId: Long, keep: Seq[String] = Nil): Unit = {
     val spark = batch.sparkSession
     // a pointered store root resolves to the CURRENT generation per
     // batch — the first micro-batch after a pointered rebuild's swap
@@ -1054,39 +964,9 @@ object Similarity {
     // faces: the failed micro-batch replays from the checkpoint after
     // the fold (idempotent increment directories make that safe)
     Layouts.assertNotQuiesced(spark, layout, "appendIvfPqIncrement")
-    val coded = sidecarPqKind(spark, layout) match {
-      case "rpq" =>
-        val (ivfCb, rcb) = readIvfPqResidualCodebooks(spark, layout)
-        ivfPqResidualCoded(batch, idCol, vecCol, ivfCb, rcb,
-          cellCol, codeCol, keep)
-      case _ =>
-        val (ivfCb, pqCb) = readIvfPqCodebooks(spark, layout)
-        ivfPqCoded(batch, idCol, vecCol, ivfCb, pqCb, cellCol, codeCol, keep)
-    }
-    coded.write.mode("overwrite").partitionBy(cellCol)
-      .parquet(Layouts.incrementDir(layout, batchId))
-  }
-
-  /** [[ivfPqTopKFromFiles]] over base + committed streamed increments
-    * ([[appendIvfPqIncrement]] directories): the probe predicate is
-    * applied ABOVE the union and Catalyst pushes it into every side,
-    * so each increment directory is partition-pruned to the probed
-    * cells exactly like the base layout. `excludeBatchId` mirrors the
-    * replay rule of the ingest loop (a batch's own in-flight directory
-    * is never read).
-    */
-  def ivfPqTopKFromFilesWithIncrements(spark: org.apache.spark.sql.SparkSession,
-      path: String, idCol: String, codeCol: String,
-      query: Array[Double], k: Int, nprobe: Int = 4,
-      cellCol: String = "cell",
-      excludeBatchId: Option[Long] = None): DataFrame = {
-    val layout = resolveLayout(spark, path)
-    val (ivfCb, pqCb) = readIvfPqCodebooks(spark, layout)
-    val probed = ivfProbed(ivfCb, query, nprobe)
-    val scan = Layouts.withIncrements(spark, spark.read.parquet(layout), layout,
-        Seq(idCol, cellCol, codeCol), excludeBatchId)
-      .where(col(cellCol).isin(probed: _*))
-    pqAdcTopKCoded(scan, idCol, codeCol, pqCb, query, k)
+    val idx = AnnIndex.at(spark, layout, idCol)
+    writeCoded(coded(batch, idCol, vecCol, idx.ivf, idx.pq, idx.residual, keep),
+      "overwrite", Layouts.incrementDir(layout, batchId))
   }
 
   /** The append-or-rebuild decision of a [[maintainIvfPq]] call:
@@ -1245,10 +1125,8 @@ object Similarity {
     // the quantizer — a residual layout's drift is its residual
     // reconstruction error, its append encodes residual codes, and its
     // rebuild writes a new 'rpq' generation
-    val residual = sidecarPqKind(spark, layout) == "rpq"
-    val (ivfCb, pqCb) =
-      if (residual) readIvfPqResidualCodebooks(spark, layout)
-      else readIvfPqCodebooks(spark, layout)
+    val idx = AnnIndex.at(spark, layout, idCol)
+    val (residual, ivfCb, pqCb) = (idx.residual, idx.ivf, idx.pq)
     val (nlist, m, ks) = (ivfCb.length, pqCb.length, pqCb(0).length)
     val storedErr = ivfPqDistortion(batch, vecCol, ivfCb, pqCb, residual)
     // a batch of <= ks rows is MEMORIZED by its own stand-in codebooks
@@ -1265,9 +1143,8 @@ object Similarity {
       else pqCodebooks(batch, idCol, vecCol, m, ks)
     val freshErr = ivfPqDistortion(batch, vecCol, freshIvf, freshPq, residual)
     if (tiny || storedErr <= driftThreshold * freshErr) {
-      if (residual)
-        appendIvfPqResidual(batch, idCol, vecCol, ivfCb, pqCb, layout)
-      else appendIvfPq(batch, idCol, vecCol, ivfCb, pqCb, layout)
+      appendCoded(batch, idCol, vecCol, ivfCb, pqCb, residual, layout,
+        Nil, "maintainIvfPq")
       MaintainReport("append", storedErr, freshErr, layout)
     } else {
       // hold the layout's quiesce marker for the retrain (the
@@ -1600,13 +1477,10 @@ object Similarity {
         // its generation
         Layouts.assertNoInflightIncrements(spark, layout,
           "maintainFromDriftSeries")
-        val residual = sidecarPqKind(spark, layout) == "rpq"
-        val (ivfCb, pqCb) =
-          if (residual) readIvfPqResidualCodebooks(spark, layout)
-          else readIvfPqCodebooks(spark, layout)
-        val (nlist, m, ks) = (ivfCb.length, pqCb.length, pqCb(0).length)
+        val idx = AnnIndex.at(spark, layout, idCol)
+        val (nlist, m, ks) = (idx.ivf.length, idx.pq.length, idx.pq(0).length)
         val all = corpus.select(col(idCol), col(vecCol))
-        retrainGeneration(residual, nlist, m, ks, all, idCol, vecCol,
+        retrainGeneration(idx.residual, nlist, m, ks, all, idCol, vecCol,
           rebuildAt, trained)
         // fence AFTER the generation, still inside the quiesce window:
         // the consumed reports describe the generation this rebuild
@@ -1703,10 +1577,9 @@ object Similarity {
     */
   def writeIvfPqResidualPartitioned(df: DataFrame, idCol: String,
       vecCol: String, ivfCb: IvfCodebook, rcb: PqCodebooks, out: String,
-      cellCol: String = "cell", codeCol: String = "code",
       keep: Seq[String] = Nil): Unit = {
-    ivfPqResidualCoded(df, idCol, vecCol, ivfCb, rcb, cellCol, codeCol, keep)
-      .write.mode("overwrite").partitionBy(cellCol).parquet(out)
+    writeCoded(coded(df, idCol, vecCol, ivfCb, rcb, residual = true, keep),
+      "overwrite", out)
     writeIvfPqCodebooks(df.sparkSession, out, ivfCb, rcb, pqKind = "rpq")
   }
 
@@ -1720,25 +1593,9 @@ object Similarity {
     */
   def appendIvfPqResidual(batch: DataFrame, idCol: String, vecCol: String,
       ivfCb: IvfCodebook, rcb: PqCodebooks, out: String,
-      cellCol: String = "cell", codeCol: String = "code",
-      keep: Seq[String] = Nil): Unit = {
-    val spark = batch.sparkSession
-    Layouts.assertNotQuiesced(spark, out, "appendIvfPqResidual")
-    val stored =
-      if (hasIvfPqCodebooks(spark, out))
-        Some(readIvfPqResidualCodebooks(spark, out))
-      else None
-    stored.foreach { s =>
-      require(sameCodebooks(s, ivfCb, rcb),
-        s"appendIvfPqResidual: the codebooks passed do not match the " +
-          s"ones stored with the layout at $out — an append encoded " +
-          "with different codebooks silently mis-cells the batch; read " +
-          "them back with readIvfPqResidualCodebooks or rebuild with " +
-          "writeIvfPqResidualPartitioned")
-    }
-    ivfPqResidualCoded(batch, idCol, vecCol, ivfCb, rcb, cellCol, codeCol, keep)
-      .write.mode("append").partitionBy(cellCol).parquet(out)
-  }
+      keep: Seq[String] = Nil): Unit =
+    appendCoded(batch, idCol, vecCol, ivfCb, rcb, residual = true, out,
+      keep, "appendIvfPqResidual")
 
   /** Per-row PQ quantization error: the squared L2 distance between
     * the vector and its nearest codebook entry, summed across the m
@@ -1772,7 +1629,7 @@ object Similarity {
       if (!residual) pqDistortionCol(col(vecCol), cb)
       else {
         // the residual projection is materialized once per row (the
-        // ivfPqResidualCoded discipline), then scored
+        // residual-coding discipline of the layout writers), then scored
         pqDistortionCol(col("__res"), cb)
       }
     val projected =
@@ -1842,74 +1699,13 @@ object Similarity {
           .as("recall"))
   }
 
-  /** IVF-PQ top-k answered FROM an at-rest layout
-    * ([[writeIvfPqPartitioned]] + any number of [[appendIvfPq]]
-    * batches): the probe prunes the file listing to the `nprobe` cell
-    * directories nearest the query, and [[pqAdcTopKCoded]] ranks the
-    * pre-encoded codes — a query reads codes only, from probed cells
-    * only, with zero exchanges into TakeOrderedAndProject.
-    *
-    * `filter` restricts the ranked rows to a predicate over the
-    * layout's KEPT metadata columns (filtered ANN — "top-k among docs
-    * with lang = en"): evaluated ON THE SCAN (pushed to parquet for
-    * pushable predicates, plan-guarded in q146), so the probe still
-    * reads only probed cells and ranks only qualifying rows.
-    */
-  def ivfPqTopKAtRest(spark: org.apache.spark.sql.SparkSession,
-      path: String, idCol: String, codeCol: String,
-      ivfCb: IvfCodebook, pqCb: PqCodebooks,
-      query: Array[Double], k: Int, nprobe: Int = 4,
-      cellCol: String = "cell",
-      filter: Option[Column] = None): DataFrame = {
-    val probed = ivfProbed(ivfCb, query, nprobe)
-    val scan = spark.read.parquet(path).where(col(cellCol).isin(probed: _*))
-    pqAdcTopKCoded(
-      filter.fold(scan)(scan.where),
-      idCol, codeCol, pqCb, query, k)
-  }
-
-  /** ADC top-k over a RESIDUAL layout
-    * ([[writeIvfPqResidualPartitioned]] + [[appendIvfPqResidual]]
-    * batches): the probe prunes the file listing to the `nprobe` cell
-    * directories as in [[ivfPqTopKAtRest]], and ranking runs in
-    * residual coordinates — per probed cell the driver derives the
-    * query's residual `q - centroid_c` and its m x ks ADC table
-    * (nprobe KB-sized tables, one codegen reference object), and each
-    * row's distance is the PARTITION column selecting its cell's
-    * table inside [[graft.functions.AnnHelper.adcByCell]] — a single
-    * generated call per row at any nprobe/ks. Codes only, zero
-    * exchanges, TakeOrderedAndProject — the q135 scan shape with the
-    * q147 quantizer.
-    *
-    * `filter` restricts ranking to a predicate over kept metadata
-    * columns, evaluated on the scan ([[ivfPqTopKAtRest]]'s filtered-
-    * ANN contract).
-    */
-  def ivfPqResidualTopKAtRest(spark: org.apache.spark.sql.SparkSession,
-      path: String, idCol: String, codeCol: String,
-      ivfCb: IvfCodebook, rcb: PqCodebooks,
-      query: Array[Double], k: Int, nprobe: Int = 4,
-      cellCol: String = "cell",
-      filter: Option[Column] = None): DataFrame = {
-    require(nprobe >= 1,
-      "nprobe must be >= 1 (the probe needs at least one cell)")
-    val (probed, cellIds, luts) = residualCellLuts(ivfCb, rcb, query, nprobe)
-    val adc = GraftFunctions.pq_adc_by_cell(col(cellCol), col(codeCol),
-      cellIds, luts)
-    val scan = spark.read.parquet(path).where(col(cellCol).isin(probed: _*))
-    filter.fold(scan)(scan.where)
-      .select(col(idCol), round(adc, 6).as("adc"))
-      .orderBy(col("adc"), col(idCol))
-      .limit(k)
-  }
-
   /** One m x ks residual ADC table PER PROBED CELL — the query's
     * residual against each probed centroid (the same double arithmetic
     * order the oracle restates: `q[i] - cvec[i]`), held as codegen
     * reference objects (one helper call per row at any nprobe/ks; see
     * [[graft.functions.AnnHelper]] for why not a CASE chain).
     */
-  private def residualCellLuts(ivfCb: IvfCodebook, rcb: PqCodebooks,
+  private[ops] def residualCellLuts(ivfCb: IvfCodebook, rcb: PqCodebooks,
       query: Array[Double], nprobe: Int):
       (Seq[Long], Array[Long], Array[Array[Array[Double]]]) = {
     val probed = ivfProbed(ivfCb, query, nprobe)
@@ -1921,50 +1717,6 @@ object Similarity {
       pqAdcTable(rcb, qres)
     }
     (probed, cellIds, luts)
-  }
-
-  /** [[ivfPqResidualTopKAtRest]] with the codebooks loaded from the
-    * layout's `_codebooks` sidecar (`kind='rpq'` — a raw-PQ layout
-    * fails fast): the fully self-contained residual probe.
-    */
-  def ivfPqResidualTopKFromFiles(spark: org.apache.spark.sql.SparkSession,
-      path: String, idCol: String, codeCol: String,
-      query: Array[Double], k: Int, nprobe: Int = 4,
-      cellCol: String = "cell",
-      filter: Option[Column] = None): DataFrame = {
-    val layout = resolveLayout(spark, path)
-    val (ivfCb, rcb) = readIvfPqResidualCodebooks(spark, layout)
-    ivfPqResidualTopKAtRest(spark, layout, idCol, codeCol, ivfCb, rcb,
-      query, k, nprobe, cellCol, filter)
-  }
-
-  /** [[ivfPqResidualTopKFromFiles]] over base + committed streamed
-    * increments ([[appendIvfPqIncrement]] into an 'rpq' layout) — the
-    * residual sibling of [[ivfPqTopKFromFilesWithIncrements]]: the
-    * probe predicate pushes into every increment directory (each is
-    * cell-partitioned inside, so pruning holds across base and
-    * increments), and ranking runs the per-probed-cell residual ADC.
-    * `excludeBatchId` mirrors the ingest loop's replay rule.
-    */
-  def ivfPqResidualTopKFromFilesWithIncrements(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String, idCol: String, codeCol: String,
-      query: Array[Double], k: Int, nprobe: Int = 4,
-      cellCol: String = "cell",
-      excludeBatchId: Option[Long] = None): DataFrame = {
-    require(nprobe >= 1,
-      "nprobe must be >= 1 (the probe needs at least one cell)")
-    val layout = resolveLayout(spark, path)
-    val (ivfCb, rcb) = readIvfPqResidualCodebooks(spark, layout)
-    val (probed, cellIds, luts) = residualCellLuts(ivfCb, rcb, query, nprobe)
-    val adc = GraftFunctions.pq_adc_by_cell(col(cellCol), col(codeCol),
-      cellIds, luts)
-    Layouts.withIncrements(spark, spark.read.parquet(layout), layout,
-        Seq(idCol, cellCol, codeCol), excludeBatchId)
-      .where(col(cellCol).isin(probed: _*))
-      .select(col(idCol), round(adc, 6).as("adc"))
-      .orderBy(col("adc"), col(idCol))
-      .limit(k)
   }
 
   /** COMPACT an appended layout: daily [[appendIvfPq]] batches leave
@@ -2004,9 +1756,9 @@ object Similarity {
     * instead of dying.
     */
   def compactIvfPqLayout(spark: org.apache.spark.sql.SparkSession,
-      src: String, dst: String, cellCol: String = "cell",
+      src: String, dst: String,
       dropIds: Option[DataFrame] = None, idCol: String = "id"): Unit =
-    compactIvfPqCore(spark, src, dst, cellCol, dropIds, idCol,
+    compactIvfPqCore(spark, src, dst, dropIds, idCol,
       afterFold = () => ())
 
   /** [[compactIvfPqLayout]] over a POINTERED store root: folds the
@@ -2021,18 +1773,17 @@ object Similarity {
     * Returns the new generation's path.
     */
   def compactPointedIvfPqLayout(spark: org.apache.spark.sql.SparkSession,
-      root: String, cellCol: String = "cell",
+      root: String,
       dropIds: Option[DataFrame] = None, idCol: String = "id"): String = {
     val gen = Layouts.currentGenerationName(spark, root)
     val next = nextGenerationName(root, gen)
-    compactIvfPqCore(spark, s"$root/$gen", s"$root/$next", cellCol,
-      dropIds, idCol,
+    compactIvfPqCore(spark, s"$root/$gen", s"$root/$next", dropIds, idCol,
       afterFold = () => Layouts.swapGenerationPointer(spark, root, next))
     s"$root/$next"
   }
 
   private def compactIvfPqCore(spark: org.apache.spark.sql.SparkSession,
-      src: String, dst: String, cellCol: String,
+      src: String, dst: String,
       dropIds: Option[DataFrame], idCol: String,
       afterFold: () => Unit): Unit = {
     require(src != dst,
@@ -2092,9 +1843,7 @@ object Similarity {
       // the read-job + write-job round-trip became zero jobs
       Layouts.writeSidecar(spark, dst + "/_codebooks", CodebooksSchema,
         sidecarRows)
-    compacted
-      .repartition(col(cellCol))
-      .write.mode("append").partitionBy(cellCol).parquet(dst)
+    writeCoded(compacted.repartition(col(AnnIndex.Cell)), "append", dst)
     // still inside the marker window: the pointered face swaps
     // _current here, so no append can land in the folded-away
     // generation between the rewrite and the swap
@@ -2105,8 +1854,8 @@ object Similarity {
   /** Resolve a layout argument through its generation pointer: a
     * STORE ROOT carrying [[Layouts.GenerationPointer]] resolves to the
     * pointed generation directory; a plain layout path resolves to
-    * itself. One existence probe. Every `*FromFiles*` probe face and
-    * the streaming append resolve through this, so after a pointered
+    * itself. One existence probe. [[AnnIndex.open]] and the streaming
+    * append resolve through this, so after a pointered
     * rebuild ([[maintainPointedFromDriftSeries]] /
     * [[maintainPointedIvfPq]]) swaps `_current`, the whole fleet —
     * probes, monitors, the ingest stream's next micro-batch — answers
@@ -2118,235 +1867,6 @@ object Similarity {
     if (Layouts.hasGenerationPointer(spark, path))
       Layouts.currentGeneration(spark, path)
     else path
-
-  /** [[ivfPqTopKAtRest]] with the codebooks loaded FROM THE LAYOUT's
-    * `_codebooks` sidecar — the fully self-contained probe: a fresh
-    * session answers top-k from the files alone, with nothing handed
-    * over out of band and nothing retrained. `path` may be a plain
-    * layout or a pointered store root ([[resolveLayout]]).
-    */
-  def ivfPqTopKFromFiles(spark: org.apache.spark.sql.SparkSession,
-      path: String, idCol: String, codeCol: String,
-      query: Array[Double], k: Int, nprobe: Int = 4,
-      cellCol: String = "cell"): DataFrame = {
-    val layout = resolveLayout(spark, path)
-    val (ivfCb, pqCb) = readIvfPqCodebooks(spark, layout)
-    ivfPqTopKAtRest(spark, layout, idCol, codeCol, ivfCb, pqCb,
-      query, k, nprobe, cellCol)
-  }
-
-  /** SHORTLIST + EXACT RE-RANK over an at-rest layout — the REFINE
-    * step production retrieval runs on top of IVF-PQ (FAISS's
-    * IndexRefineFlat): the probe ranks codes by ADC and keeps a
-    * `shortlist`-sized candidate set, then re-ranks exactly those rows
-    * by TRUE cosine on the full-precision vectors the layout carries
-    * (written with `keep = Seq(vecCol)`), returning the top `k`. This
-    * buys back the PQ ranking loss [[annRecallAtK]] quantifies —
-    * guaranteed never worse than the plain ADC top-k (every exact
-    * neighbor the ADC top-k found is still in the shortlist and wins
-    * its exact re-rank; OpsSpec pins the dominance) — while paying
-    * exact distances on `shortlist` rows instead of the corpus.
-    *
-    * Scale shape: two narrow scans of the probed cells only. Scan 1
-    * reads (id, code) and takes the ADC shortlist
-    * (TakeOrderedAndProject, zero exchanges); the shortlist ids are a
-    * BOUNDED driver collect (the codebook-collect discipline —
-    * hundreds of longs) and re-enter scan 2 as an `isin` predicate
-    * pushed into the parquet scan, which reads (id, vector) for
-    * exactly those rows and re-ranks. No join, no shuffle; the
-    * full-precision vectors are read for `shortlist` rows, never the
-    * probed fraction.
-    *
-    * SCOPE (r20 ADVICE, explicit): this face reads the BASE layout of
-    * a raw-PQ store only — committed streaming increments are NOT
-    * scanned (use [[ivfPqTopKFromFilesWithIncrements]] for an
-    * increments-aware plain probe, or compact first), and a residual
-    * layout is refused by [[readIvfPqCodebooks]]'s kind check. The
-    * increments/residual/batched refine variants are future surface,
-    * not silent behavior.
-    *
-    * Output: (idCol, cos) ordered cos desc, ties by id.
-    */
-  def ivfPqTopKRefined(spark: org.apache.spark.sql.SparkSession,
-      path: String, idCol: String, codeCol: String, vecCol: String,
-      query: Array[Double], k: Int, shortlist: Int = 100,
-      nprobe: Int = 4, cellCol: String = "cell"): DataFrame = {
-    require(shortlist >= k,
-      s"shortlist=$shortlist must be >= k=$k (the re-rank keeps k of " +
-        "the shortlist)")
-    require(shortlist <= 100000,
-      s"shortlist=$shortlist: the shortlist ids are a driver collect " +
-        "and an isin predicate — keep it bounded (the refine step's " +
-        "point is exact distances on FEW rows)")
-    val layout = resolveLayout(spark, path)
-    val (ivfCb, pqCb) = readIvfPqCodebooks(spark, layout)
-    val probed = ivfProbed(ivfCb, query, nprobe)
-    val lut = pqAdcTable(pqCb, query)
-    val cells = spark.read.parquet(layout)
-      .where(col(cellCol).isin(probed: _*))
-    val ids = cells
-      .select(col(idCol), round(adcColumn(lut, col(codeCol)), 6).as("adc"))
-      .orderBy(col("adc"), col(idCol))
-      .limit(shortlist)
-      .select(idCol)
-      .collect().map(_.get(0))
-    cells.where(col(idCol).isin(ids: _*))
-      .select(col(idCol), round(cosineTo(col(vecCol), query), 6).as("cos"))
-      .orderBy(col("cos").desc, col(idCol))
-      .limit(k)
-  }
-
-  /** MULTI-QUERY batched ANN over an at-rest layout — the OFFLINE
-    * retrieval shape (score an eval set, decontaminate a benchmark,
-    * backfill neighbors for a whole ingest batch): Q query vectors
-    * answered from ONE scan of the UNION of their probed cells,
-    * instead of Q separate scans that each re-open the layout.
-    *
-    * Shape: the driver derives each query's probed cells and its
-    * m x ks ADC table (Q KB-sized tables — inlined codegen constants,
-    * the [[pqAdcTopKCoded]] discipline per query); the scan prunes the
-    * file listing ONCE to the union of probed cells, each row fans out
-    * to the queries whose probe covers its cell (an inline
-    * `explode(array(struct...))` — no join, no second scan), and the
-    * per-query top-k is one hash exchange on `query_id` + a bounded
-    * window. Candidate volume is Σ_q (probed fraction), exactly what
-    * Q separate probes would rank — the batch saves the Q-1 extra
-    * scans and listings, which at a year-of-ingest layout is the
-    * dominant cost ([[graft.ScaleEvidence]] `annlsm`'s listing tax,
-    * paid once instead of Q times). Q is a BATCH (tens to hundreds):
-    * each query adds one inlined LUT and one slot in the per-row
-    * fan-out; chunk a larger query set and union the results.
-    *
-    * Output: (query_id, idCol, adc), the per-query k nearest by ADC
-    * (ties by id), ordered (query_id, adc, id).
-    */
-  def ivfPqTopKBatchFromFiles(spark: org.apache.spark.sql.SparkSession,
-      path: String, idCol: String, codeCol: String,
-      queries: Seq[(Long, Array[Double])], k: Int, nprobe: Int = 4,
-      cellCol: String = "cell"): DataFrame =
-    ivfPqBatchCore(spark, path, idCol, codeCol, queries, k, nprobe,
-      cellCol, residual = false, withIncrements = false,
-      excludeBatchId = None)
-
-  /** [[ivfPqTopKBatchFromFiles]] over base + committed streamed
-    * increments ([[appendIvfPqIncrement]] directories) — the offline
-    * batch shape answering from the SAME merged listing the single
-    * probe ([[ivfPqTopKFromFilesWithIncrements]]) sees: the union-cell
-    * predicate pushes into every increment directory (each is
-    * cell-partitioned inside), `excludeBatchId` mirrors the ingest
-    * loop's replay rule.
-    */
-  def ivfPqTopKBatchFromFilesWithIncrements(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String, idCol: String, codeCol: String,
-      queries: Seq[(Long, Array[Double])], k: Int, nprobe: Int = 4,
-      cellCol: String = "cell",
-      excludeBatchId: Option[Long] = None): DataFrame =
-    ivfPqBatchCore(spark, path, idCol, codeCol, queries, k, nprobe,
-      cellCol, residual = false, withIncrements = true, excludeBatchId)
-
-  /** The batched probe over a RESIDUAL layout
-    * ([[writeIvfPqResidualPartitioned]]): per query the driver derives
-    * its probed cells and the per-probed-cell residual ADC tables
-    * ([[residualCellLuts]] — nprobe KB-sized tables per query, one
-    * codegen reference object each), and ranking masks each row to the
-    * queries whose probe covers its cell, exactly the
-    * [[ivfPqTopKBatchFromFiles]] fan-out with the q147 quantizer.
-    */
-  def ivfPqResidualTopKBatchFromFiles(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String, idCol: String, codeCol: String,
-      queries: Seq[(Long, Array[Double])], k: Int, nprobe: Int = 4,
-      cellCol: String = "cell"): DataFrame =
-    ivfPqBatchCore(spark, path, idCol, codeCol, queries, k, nprobe,
-      cellCol, residual = true, withIncrements = false,
-      excludeBatchId = None)
-
-  /** [[ivfPqResidualTopKBatchFromFiles]] over base + committed
-    * streamed increments — full parity with the single-probe faces:
-    * every (kind × increments × batch) combination answers from the
-    * same scan shape.
-    */
-  def ivfPqResidualTopKBatchFromFilesWithIncrements(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String, idCol: String, codeCol: String,
-      queries: Seq[(Long, Array[Double])], k: Int, nprobe: Int = 4,
-      cellCol: String = "cell",
-      excludeBatchId: Option[Long] = None): DataFrame =
-    ivfPqBatchCore(spark, path, idCol, codeCol, queries, k, nprobe,
-      cellCol, residual = true, withIncrements = true, excludeBatchId)
-
-  /** The shared scan+fanout+rank of the four batched-probe faces: ONE
-    * scan pruned to the union of all queries' probed cells, each row
-    * fanned out (inline `explode(array(struct...))` — no join, no
-    * second scan) only to the queries whose probe covers its cell,
-    * one hash exchange on `query_id` + a bounded window for the
-    * per-query top-k.
-    */
-  private def ivfPqBatchCore(spark: org.apache.spark.sql.SparkSession,
-      path: String, idCol: String, codeCol: String,
-      queries: Seq[(Long, Array[Double])], k: Int, nprobe: Int,
-      cellCol: String, residual: Boolean, withIncrements: Boolean,
-      excludeBatchId: Option[Long]): DataFrame = {
-    require(queries.nonEmpty, "the batched probe needs at least one query")
-    require(queries.map(_._1).distinct.length == queries.length,
-      "duplicate query ids — each query needs its own id in the output")
-    require(nprobe >= 1,
-      "nprobe must be >= 1 (the probe needs at least one cell)")
-    // each query adds one inlined LUT (a codegen reference object) and
-    // one slot in the per-row fan-out array — fine for a BATCH (tens
-    // to hundreds), a silent cliff at thousands (generated-code size,
-    // Q-wide rows). Refuse curated instead: chunk and union, or flip
-    // to a TopKByScore aggregation keyed by (query_id) when the query
-    // set is itself a table.
-    require(queries.length <= 1024,
-      s"${queries.length} queries in one batched probe — the fan-out " +
-        "inlines one ADC table and one struct slot per query; chunk " +
-        "the query set (union the per-chunk results) past 1024")
-    val layout = resolveLayout(spark, path)
-    val (ivfCb, cb) =
-      if (residual) readIvfPqResidualCodebooks(spark, layout)
-      else readIvfPqCodebooks(spark, layout)
-    // (query id, probed cells, the query's ADC column over codeCol)
-    val perQuery: Seq[(Long, Seq[Long], Column)] = queries.map {
-      case (qid, qv) =>
-        if (residual) {
-          val (probed, cellIds, luts) = residualCellLuts(ivfCb, cb, qv, nprobe)
-          (qid, probed, GraftFunctions.pq_adc_by_cell(col(cellCol),
-            col(codeCol), cellIds, luts))
-        } else
-          (qid, ivfProbed(ivfCb, qv, nprobe),
-            adcColumn(pqAdcTable(cb, qv), col(codeCol)))
-    }
-    val allCells = perQuery.flatMap(_._2).distinct
-    val base = spark.read.parquet(layout)
-    val merged =
-      if (withIncrements) Layouts.withIncrements(spark, base, layout,
-        Seq(idCol, cellCol, codeCol), excludeBatchId)
-      else base
-    val scan = merged.where(col(cellCol).isin(allCells: _*))
-    // one struct per query: its rounded ADC where the row's cell is
-    // probed by THIS query, null elsewhere (dropped before ranking) —
-    // rows fan out only to the queries that would have scanned them
-    val fanout = perQuery.map { case (qid, probed, adc) =>
-      struct(lit(qid).as("query_id"),
-        when(col(cellCol).isin(probed: _*), round(adc, 6))
-          .otherwise(lit(null).cast("double")).as("adc"))
-    }
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id").orderBy(col("adc"), col(idCol))
-    scan.select(col(idCol), explode(array(fanout: _*)).as("__q"))
-      .select(col("__q.query_id").as("query_id"), col(idCol),
-        col("__q.adc").as("adc"))
-      .where(col("adc").isNotNull)
-      .withColumn("__rn", row_number().over(w))
-      .where(col("__rn") <= k)
-      .select(col("query_id"), col(idCol), col("adc"))
-      // the promised global (query_id, adc, id) order: the window
-      // already sorted within each query partition, so this final sort
-      // only merges the Q bounded partitions (Q·k rows total)
-      .orderBy(col("query_id"), col("adc"), col(idCol))
-  }
 
   /** Per-row (double vector, L2 norm) projection — computed ONCE per
     * row before a pairwise join. Folding the norm into the per-pair
@@ -2450,18 +1970,17 @@ object Similarity {
     * candidates.
     *
     * Returns the surviving rows of `df` with the cell assignment
-    * appended as `cellCol`.
+    * appended as `cell`.
     */
   def semDedup(df: DataFrame, idCol: String, vecCol: String,
-      codebook: IvfCodebook, threshold: Double,
-      cellCol: String = "cell"): DataFrame = {
+      codebook: IvfCodebook, threshold: Double): DataFrame = {
     // fan out before the nlist-dot-products-per-row cell assignment
     // (identity at scale — Layouts.fanOutByKey); the survivors keep
     // the fanned frame's rows, which downstream consumers re-order
     val celled = Layouts.fanOutByKey(df, idCol)
-      .withColumn(cellCol, ivfCell(codebook, col(vecCol)))
+      .withColumn(AnnIndex.Cell, ivfCell(codebook, col(vecCol)))
     val sides = celled.select(
-      col(idCol).as("__sid"), col(cellCol).as("__scell"),
+      col(idCol).as("__sid"), col(AnnIndex.Cell).as("__scell"),
       transform(col(vecCol), x => x.cast("double")).as("__v"),
       sqrt(GraftFunctions.vec_dot(col(vecCol), col(vecCol))).as("__n"))
     val pairs = sides

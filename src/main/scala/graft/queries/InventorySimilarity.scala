@@ -3,7 +3,7 @@ package graft.queries
 import graft.convert.ArchiveConverter
 import graft.core.{ConvertOptions, IncludeType}
 import graft.functions.{GraftFunctions, TextStats}
-import graft.ops.{Dedup, MultiModal, Packing, Quality, Sampling, Similarity}
+import graft.ops.{AnnIndex, Dedup, MultiModal, Packing, Quality, Sampling, Similarity}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -23,6 +23,15 @@ private[queries] trait InventorySimilarity extends InventoryDedup {
 
 
   private[queries] val OnesQuery: Array[Double] = Array.fill(64)(1.0)
+
+  /** The at-rest top-10 of [[OnesQuery]] over 4 probed cells
+    * ([[graft.ops.AnnIndex.probe]], one query), as (vec_id, adc).
+    */
+  private def onesProbe(s: SparkSession, path: String,
+      filter: Option[Column] = None): DataFrame =
+    AnnIndex.open(s, path, "vec_id")
+      .probe(Seq(0L -> OnesQuery), k = 10, nprobe = 4, filter = filter)
+      .drop("query_id")
 
 
   private[queries] def q14(s: SparkSession, d: String): DataFrame =
@@ -99,7 +108,7 @@ private[queries] trait InventorySimilarity extends InventoryDedup {
     * codes only, no fp32 vectors — and the query is answered FROM THE
     * FILES: the probe prunes the listing to 4 of 16 cell directories
     * (plan-guarded `selectedPartitions`), and
-    * [[Similarity.pqAdcTopKCoded]] ranks the pre-encoded codes
+    * [[graft.ops.AnnIndex.probe]] ranks the pre-encoded codes
     * without re-touching a vector. Same answer as q132's in-flight
     * face by construction, so the oracle SQL is shared — write,
     * layout, pruning and the coded scan must all land on the
@@ -114,8 +123,7 @@ private[queries] trait InventorySimilarity extends InventoryDedup {
       java.lang.Integer.toHexString(d.hashCode)).getAbsolutePath
     Similarity.writeIvfPqPartitioned(emb, "vec_id", "embedding",
       ivfCb, pqCb, out)
-    Similarity.ivfPqTopKAtRest(s, out, "vec_id", "code",
-      ivfCb, pqCb, OnesQuery, k = 10, nprobe = 4)
+    onesProbe(s, out)
   }
 
 
@@ -145,12 +153,11 @@ private[queries] trait InventorySimilarity extends InventoryDedup {
     Similarity.writeIvfPqPartitioned(corpus, "vec_id", "embedding",
       ivfCb, pqCb, out)
     Similarity.appendIvfPq(incr, "vec_id", "embedding", ivfCb, pqCb, out)
-    Similarity.ivfPqTopKAtRest(s, out, "vec_id", "code",
-      ivfCb, pqCb, OnesQuery, k = 10, nprobe = 4)
+    onesProbe(s, out)
   }
 
 
-  /** The SELF-CONTAINED at-rest probe ([[Similarity.ivfPqTopKFromFiles]]
+  /** The SELF-CONTAINED at-rest probe ([[graft.ops.AnnIndex.open]]
     * — round 14): [[Similarity.writeIvfPqPartitioned]] persists the
     * codebooks INSIDE the layout (`_codebooks` sidecar), and the query
     * answers from the files alone — codebooks loaded back (exact
@@ -169,8 +176,7 @@ private[queries] trait InventorySimilarity extends InventoryDedup {
       java.lang.Integer.toHexString(d.hashCode)).getAbsolutePath
     Similarity.writeIvfPqPartitioned(emb, "vec_id", "embedding",
       ivfCb, pqCb, out)
-    Similarity.ivfPqTopKFromFiles(s, out, "vec_id", "code",
-      OnesQuery, k = 10, nprobe = 4)
+    onesProbe(s, out)
   }
 
 
@@ -179,7 +185,7 @@ private[queries] trait InventorySimilarity extends InventoryDedup {
     * q138's corpus-write + increment-append, then the layout is
     * compacted into a NEW path (codes rewritten one-file-per-cell,
     * nothing re-encoded, sidecar carried) and the probe answers from
-    * the COMPACTED files alone ([[Similarity.ivfPqTopKFromFiles]] —
+    * the COMPACTED files alone ([[graft.ops.AnnIndex.open]] —
     * the sidecar carry is load-bearing). Shares q138's oracle: a
     * rewrite that loses, duplicates or re-cells a single code row
     * lands off the recomputed top-k.
@@ -198,8 +204,7 @@ private[queries] trait InventorySimilarity extends InventoryDedup {
     Similarity.appendIvfPq(incr, "vec_id", "embedding", ivfCb, pqCb,
       base + "/gen0")
     Similarity.compactIvfPqLayout(s, base + "/gen0", base + "/gen1")
-    Similarity.ivfPqTopKFromFiles(s, base + "/gen1", "vec_id", "code",
-      OnesQuery, k = 10, nprobe = 4)
+    onesProbe(s, base + "/gen1")
   }
 
 
@@ -220,7 +225,7 @@ private[queries] trait InventorySimilarity extends InventoryDedup {
 
 
   /** FILTERED ANN at rest ([[Similarity.writeIvfPqPartitioned]]'s
-    * `keep` + [[Similarity.ivfPqTopKAtRest]]'s `filter` — round 14):
+    * `keep` + [[graft.ops.AnnIndex.probe]]'s `filter` — round 14):
     * the layout carries a metadata column (`grp = vec_id % 4`, the
     * stand-in for language/source/license tier), and the probe asks
     * for top-k AMONG `grp = 1` rows only — the predicate evaluated on
@@ -240,9 +245,7 @@ private[queries] trait InventorySimilarity extends InventoryDedup {
       java.lang.Integer.toHexString(d.hashCode)).getAbsolutePath
     Similarity.writeIvfPqPartitioned(emb, "vec_id", "embedding",
       ivfCb, pqCb, out, keep = Seq("grp"))
-    Similarity.ivfPqTopKAtRest(s, out, "vec_id", "code",
-      ivfCb, pqCb, OnesQuery, k = 10, nprobe = 4,
-      filter = Some(col("grp") === 1L))
+    onesProbe(s, out, filter = Some(col("grp") === 1L))
   }
 
 
@@ -254,9 +257,9 @@ private[queries] trait InventorySimilarity extends InventoryDedup {
     * residual-encoded with the SAME codebooks and appended
     * file-additively ([[Similarity.appendIvfPqResidual]], which
     * verifies the sidecar's rpq tables), and the probe answers from
-    * the files alone ([[Similarity.ivfPqResidualTopKFromFiles]]:
-    * per-probed-cell residual ADC tables selected by a CASE on the
-    * partition column). Write, no-retrain append, sidecar round-trip
+    * the files alone ([[graft.ops.AnnIndex.probe]], which reads the
+    * 'rpq' kind off the sidecar: per-probed-cell residual ADC tables
+    * selected by the partition column). Write, no-retrain append, sidecar round-trip
     * and the residual-coordinate ranking are ALL load-bearing in one
     * top-k — the oracle restates the whole chain in residual
     * coordinates with codebook CTEs restricted to the corpus half
@@ -275,8 +278,7 @@ private[queries] trait InventorySimilarity extends InventoryDedup {
     Similarity.writeIvfPqResidualPartitioned(corpus, "vec_id", "embedding",
       ivfCb, rcb, out)
     Similarity.appendIvfPqResidual(incr, "vec_id", "embedding", ivfCb, rcb, out)
-    Similarity.ivfPqResidualTopKFromFiles(s, out, "vec_id", "code",
-      OnesQuery, k = 10, nprobe = 4)
+    onesProbe(s, out)
   }
 
 
@@ -303,8 +305,7 @@ private[queries] trait InventorySimilarity extends InventoryDedup {
     val removed = emb.where(col("vec_id") % 7 === 0).select("vec_id")
     Similarity.compactIvfPqLayout(s, base + "/gen0", base + "/gen1",
       dropIds = Some(removed), idCol = "vec_id")
-    Similarity.ivfPqTopKFromFiles(s, base + "/gen1", "vec_id", "code",
-      OnesQuery, k = 10, nprobe = 4)
+    onesProbe(s, base + "/gen1")
   }
 
 
@@ -443,8 +444,7 @@ private[queries] trait InventorySimilarity extends InventoryDedup {
       require(done,
         "q157: the availableNow stream did not terminate within 300 s")
     }
-    Similarity.ivfPqTopKFromFilesWithIncrements(s, base + "/layout",
-      "vec_id", "code", OnesQuery, k = 10, nprobe = 4)
+    onesProbe(s, base + "/layout")
   }
 
 
@@ -526,8 +526,7 @@ private[queries] trait InventorySimilarity extends InventoryDedup {
       "vec_id", "embedding")
     require(r.action == "rebuild" && r.layout == base + "/gen1",
       s"q158 expects the drifted batch to trigger the rebuild path, got $r")
-    Similarity.ivfPqTopKFromFiles(s, base, "vec_id", "code",
-      OnesQuery, k = 10, nprobe = 4)
+    onesProbe(s, base)
   }
 
 
@@ -583,7 +582,7 @@ private[queries] trait InventorySimilarity extends InventoryDedup {
   }
 
 
-  /** MULTI-QUERY batched ANN ([[Similarity.ivfPqTopKBatchFromFiles]]
+  /** MULTI-QUERY batched ANN ([[graft.ops.AnnIndex.probe]] with two queries
     * — round 19, the offline-retrieval shape): two query vectors with
     * DISJOINT probe sets (all-ones and all-minus-ones — opposite
     * cosine orderings over the coarse centroids, so the probe picks
@@ -605,14 +604,13 @@ private[queries] trait InventorySimilarity extends InventoryDedup {
     Similarity.writeIvfPqPartitioned(emb, "vec_id", "embedding",
       ivfCb, pqCb, base + "/layout")
     val qs = Seq(1L -> OnesQuery, 2L -> Array.fill(64)(-1.0))
-    Similarity.ivfPqTopKBatchFromFiles(s, base + "/layout", "vec_id", "code",
-      qs, k = 5, nprobe = 4)
+    AnnIndex.open(s, base + "/layout", "vec_id").probe(qs, k = 5, nprobe = 4)
       .orderBy(col("query_id"), col("adc"), col("vec_id"))
   }
 
 
   /** KIND-AWARE, INCREMENTS-AWARE batched probe (round 20 —
-    * [[Similarity.ivfPqResidualTopKBatchFromFilesWithIncrements]]):
+    * [[graft.ops.AnnIndex.probe]] over an 'rpq' layout):
     * q160's two-query offline-retrieval chain in RESIDUAL coordinates
     * over a layout holding committed STREAMING increments. The corpus
     * (vec_id % 5 != 0) is written residual-encoded; the % 5 == 0
@@ -647,8 +645,7 @@ private[queries] trait InventorySimilarity extends InventoryDedup {
         "vec_id", "embedding", None)
     }
     val qs = Seq(1L -> OnesQuery, 2L -> Array.fill(64)(-1.0))
-    Similarity.ivfPqResidualTopKBatchFromFilesWithIncrements(s,
-      base + "/layout", "vec_id", "code", qs, k = 5, nprobe = 4)
+    AnnIndex.open(s, base + "/layout", "vec_id").probe(qs, k = 5, nprobe = 4)
   }
 
 
@@ -682,7 +679,7 @@ private[queries] trait InventorySimilarity extends InventoryDedup {
 
 
   /** ADC shortlist + EXACT RE-RANK (round 20 —
-    * [[Similarity.ivfPqTopKRefined]], the FAISS IndexRefineFlat
+    * [[graft.ops.AnnIndex.refine]], the FAISS IndexRefineFlat
     * pattern and the answer to the PQ ranking loss q162 measures):
     * the layout carries the full-precision vectors (`keep`), the
     * probe shortlists 40 candidates by ADC inside the probed cells,
@@ -702,7 +699,7 @@ private[queries] trait InventorySimilarity extends InventoryDedup {
       java.lang.Integer.toHexString(d.hashCode)).getAbsolutePath
     Similarity.writeIvfPqPartitioned(emb, "vec_id", "embedding",
       ivfCb, pqCb, base + "/layout", keep = Seq("embedding"))
-    Similarity.ivfPqTopKRefined(s, base + "/layout", "vec_id", "code",
-      "embedding", OnesQuery, k = 10, shortlist = 40, nprobe = 4)
+    AnnIndex.open(s, base + "/layout", "vec_id")
+      .refine(OnesQuery, k = 10, "embedding", shortlist = 40, nprobe = 4)
   }
 }

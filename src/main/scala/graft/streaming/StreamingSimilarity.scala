@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.ops.Similarity
+import graft.ops.{AnnIndex, Similarity}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
@@ -10,8 +10,7 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
   * is encoded with the layout's STORED codebooks (read back from the
   * `_codebooks` sidecar — nothing retrained, nothing handed over out
   * of band) and appended into the at-rest IVF-PQ layout, so probes
-  * over base + increments ([[graft.ops.Similarity.ivfPqTopKFromFilesWithIncrements]] /
-  * [[graft.ops.Similarity.ivfPqResidualTopKFromFilesWithIncrements]])
+  * over base + increments ([[graft.ops.AnnIndex.probe]])
   * see yesterday's stream batches exactly as [[graft.ops.Similarity.appendIvfPq]] /
   * [[graft.ops.Similarity.appendIvfPqResidual]] batches. KIND-AWARE:
   * the sidecar's 'pq'/'rpq' tag picks the encoder per batch, so the
@@ -98,14 +97,9 @@ object StreamingSimilarity {
     driftOut.foreach { out =>
       // kind-aware like the append itself: a residual layout's drift
       // is its residual reconstruction error, not the raw-PQ one
-      val err = Similarity.sidecarPqKind(spark, layout) match {
-        case "rpq" =>
-          val (ivfCb, rcb) = Similarity.readIvfPqResidualCodebooks(spark, layout)
-          Similarity.ivfPqDistortion(b, vecCol, ivfCb, rcb, residual = true)
-        case _ =>
-          val (ivfCb, pqCb) = Similarity.readIvfPqCodebooks(spark, layout)
-          Similarity.ivfPqDistortion(b, vecCol, ivfCb, pqCb, residual = false)
-      }
+      val idx = AnnIndex.open(spark, layout, idCol)
+      val err = Similarity.ivfPqDistortion(b, vecCol, idx.ivf, idx.pq,
+        idx.residual)
       // the batch id lives in the DIRECTORY (the verdicts convention:
       // a read of `out` surfaces it as the ingest_batch partition
       // column) — writing it as a data column too would collide with

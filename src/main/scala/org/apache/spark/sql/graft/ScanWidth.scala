@@ -18,7 +18,10 @@ import org.apache.spark.sql.execution.datasources.{FilePartition, HadoopFsRelati
   * split math: [[FilePartition.maxSplitBytes]] plus the
   * Next-Fit-Decreasing packing of `FilePartition.getFilePartitions`
   * over split lengths. Any other plan shape returns None and the
-  * caller falls back to the planning probe. Parity with the planner is
+  * caller falls back to the planning probe — including a partitioned
+  * or bucketed relation, whose scan the planner prunes by partition
+  * filter or splits by bucket, which the full listing here cannot
+  * model. Parity with the planner is
   * pinned in OpsSpec ("fanOutByKey width estimate").
   */
 object ScanWidth {
@@ -28,7 +31,8 @@ object ScanWidth {
     def rel(p: LogicalPlan): Option[HadoopFsRelation] = p match {
       case l: LogicalRelation =>
         l.relation match {
-          case h: HadoopFsRelation => Some(h)
+          case h: HadoopFsRelation
+              if h.partitionSchema.isEmpty && h.bucketSpec.isEmpty => Some(h)
           case _ => None
         }
       case _: Project | _: Filter | _: SubqueryAlias => rel(p.children.head)

@@ -188,8 +188,8 @@ class BucketingSpec extends AnyFunSuite with BeforeAndAfterAll {
     Similarity.appendIvfPqIncrement(vecs(100 until 132).toDF("vec_id", "embedding"),
       "vec_id", "embedding", out, 0L)
     val query = Array.fill(dim)(0.7)
-    val probe = Similarity.ivfPqTopKFromFilesWithIncrements(spark, out,
-      "vec_id", "code", query, k = 5, nprobe = 2)
+    val probe = graft.ops.AnnIndex.open(spark, out, "vec_id")
+      .probe(Seq(0L -> query), k = 5, nprobe = 2)
     assert(probe.count() == 5)
     // the 100 TB property holds on BOTH sides of the union: the probe
     // predicate pushes into the base layout and into every increment

@@ -238,6 +238,7 @@ class OpsPropertySpec extends AnyFunSuite {
     // token-count score — the fused expression implements the legacy
     // (total) semantics; no corpus document is empty, so every
     // declared query's values are unchanged (oracle re-verified r22)
+    val ansiBefore = spark.conf.getOption("spark.sql.ansi.enabled")
     spark.conf.set("spark.sql.ansi.enabled", "false")
     val prop = Prop.forAll(Gen.listOfN(16, qtextGen)) { docs0 =>
       // always include the fixed nasty cases alongside the random batch
@@ -261,7 +262,10 @@ class OpsPropertySpec extends AnyFunSuite {
       }
     }
     try check(prop, n = 40)
-    finally spark.conf.set("spark.sql.ansi.enabled", "true")
+    finally ansiBefore match {
+      case Some(v) => spark.conf.set("spark.sql.ansi.enabled", v)
+      case None => spark.conf.unset("spark.sql.ansi.enabled")
+    }
     // the one divergence from the ANSI composed tree, pinned: an empty
     // text scores the legacy pure-token-count value instead of raising
     locally {

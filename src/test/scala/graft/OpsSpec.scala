@@ -1,8 +1,8 @@
 package graft
 
 import graft.functions.{GraftFunctions, TextStats}
-import graft.ops.{Dedup, Layouts, Quality, Similarity}
-import org.apache.spark.sql.SparkSession
+import graft.ops.{AnnIndex, Dedup, Layouts, Quality, Similarity}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -20,6 +20,13 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     .getOrCreate()
 
   override def afterAll(): Unit = spark.stop()
+
+  /** One query through the index handle, as (vec_id, adc). */
+  private def annProbe(path: String, query: Array[Double], k: Int,
+      nprobe: Int = 4, excludeBatchId: Option[Long] = None): DataFrame =
+    AnnIndex.open(spark, path, "vec_id")
+      .probe(Seq(0L -> query), k, nprobe, excludeBatchId = excludeBatchId)
+      .drop("query_id")
 
   private def docs() = {
     val base = "the quick brown fox jumps over the lazy dog again and again until done"
@@ -444,8 +451,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // ADC ranking a from-scratch batch encode of the UNION produces
     assert(spark.read.parquet(out).count() == 150)
     val query = Array.fill(dim)(0.5)
-    val gotRest = Similarity.ivfPqTopKAtRest(spark, out, "vec_id", "code",
-      ivfCb, pqCb, query, k = 10, nprobe = 3)
+    val gotRest = annProbe(out, query, k = 10, nprobe = 3)
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toSeq
     val gotBatch = Similarity.ivfPqTopK(
       corpus.unionByName(incr), "vec_id", "embedding", query,
@@ -504,8 +510,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       ivfCb, rcb, base + "/full")
     val query = Array.fill(dim)(0.5)
     def probe(p: String): Seq[(Long, Double)] =
-      Similarity.ivfPqResidualTopKFromFiles(spark, p, "vec_id", "code",
-        query, k = 10, nprobe = 3)
+      annProbe(p, query, k = 10, nprobe = 3)
         .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     // no-retrain append == full rewrite with the same codebooks, exactly
     assert(probe(base + "/inc") == probe(base + "/full"))
@@ -541,12 +546,10 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     Similarity.writeIvfPqPartitioned(df, "vec_id", "embedding",
       ivfCb, pqCb, base + "/gen0")
     val query = Array.fill(dim)(0.5)
-    val top1 = Similarity.ivfPqTopKFromFiles(spark, base + "/gen0",
-      "vec_id", "code", query, k = 1, nprobe = 3).collect()(0).getLong(0)
+    val top1 = annProbe(base + "/gen0", query, k = 1, nprobe = 3).collect()(0).getLong(0)
     Similarity.compactIvfPqLayout(spark, base + "/gen0", base + "/gen1",
       dropIds = Some(Seq(top1).toDF("vec_id")), idCol = "vec_id")
-    val after = Similarity.ivfPqTopKFromFiles(spark, base + "/gen1",
-      "vec_id", "code", query, k = 10, nprobe = 3)
+    val after = annProbe(base + "/gen1", query, k = 10, nprobe = 3)
       .collect().map(_.getLong(0)).toSet
     assert(!after.contains(top1), s"retired vec $top1 still ranked")
     assert(spark.read.parquet(base + "/gen1").count() == 119)
@@ -590,18 +593,24 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       ivfCb, pqCb, base + "/raw")
     val query = Array.fill(dim)(0.5)
     // a raw probe of a residual layout would ADC residual codes
-    // through raw tables — silent garbage; the tag refuses instead
-    val e1 = intercept[IllegalStateException] {
-      Similarity.ivfPqTopKFromFiles(spark, base + "/res", "vec_id", "code",
-        query, k = 5)
+    // through raw tables — silent garbage; the handle reads the tag, so
+    // each layout ranks through its own tables: the in-flight answer
+    // of its own quantizer with the same codebooks
+    def ranked(df: DataFrame) = df.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+    val res = ranked(annProbe(base + "/res", query, k = 5))
+    val resInFlight = ranked(Similarity.ivfPqResidualTopK(df, "vec_id",
+      "embedding", query, k = 5, nlist = 4, m = 4, ks = 8,
+      ivfCb = Some(ivfCb), residualCb = Some(rcb)))
+    assert(res.map(_._1) == resInFlight.map(_._1), s"$res vs $resInFlight")
+    // same real number under the two oracle-pinned IEEE associations
+    res.zip(resInFlight).foreach { case ((_, a), (_, b)) =>
+      assert(math.abs(a - b) < 1e-9, s"$a vs $b")
     }
-    assert(e1.getMessage.contains("RESIDUAL"), e1.getMessage)
-    assert(e1.getMessage.contains("kinds present"), e1.getMessage)
-    val e2 = intercept[IllegalStateException] {
-      Similarity.ivfPqResidualTopKFromFiles(spark, base + "/raw", "vec_id",
-        "code", query, k = 5)
-    }
-    assert(e2.getMessage.contains("raw-PQ"), e2.getMessage)
+    val raw = ranked(annProbe(base + "/raw", query, k = 5))
+    val rawInFlight = ranked(Similarity.ivfPqTopK(df, "vec_id", "embedding",
+      query, k = 5, nlist = 4, m = 4, ks = 8,
+      ivfCb = Some(ivfCb), pqCb = Some(pqCb)))
+    assert(raw == rawInFlight, s"$raw vs $rawInFlight")
     // and appends can't poison across encodings either
     val batch = Seq((200L, Array.fill(dim)(0.1f))).toDF("vec_id", "embedding")
     intercept[IllegalStateException] {
@@ -613,6 +622,33 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
         base + "/raw")
     }
   }
+
+  // a raw-PQ probe used to rank nothing at nprobe = 0 (an empty cell
+  // list) while the residual one refused; the handle refuses both
+  for ((kind, residual) <- Seq("pq" -> false, "rpq" -> true))
+    test(s"AnnIndex.probe refuses nprobe = 0 on a '$kind' layout") {
+      import spark.implicits._
+      val df = (0L until 40L).map(i =>
+        (i, Array.tabulate(8)(j => math.sin(i * 0.7 + j)))).toDF("vec_id", "embedding")
+      val ivfCb = Similarity.ivfCodebook(df, "vec_id", "embedding", nlist = 4)
+      val out = java.nio.file.Files.createTempDirectory("graft_nprobe").toString +
+        "/layout"
+      if (residual)
+        Similarity.writeIvfPqResidualPartitioned(df, "vec_id", "embedding", ivfCb,
+          Similarity.residualPqCodebooks(df, "vec_id", "embedding", ivfCb, m = 2, ks = 4),
+          out)
+      else
+        Similarity.writeIvfPqPartitioned(df, "vec_id", "embedding", ivfCb,
+          Similarity.pqCodebooks(df, "vec_id", "embedding", m = 2, ks = 4), out)
+      val index = AnnIndex.open(spark, out, "vec_id")
+      assert(index.kind == kind)
+      val query = Seq(0L -> Array.fill(8)(0.5))
+      val e = intercept[IllegalArgumentException] {
+        index.probe(query, k = 5, nprobe = 0)
+      }
+      assert(e.getMessage.contains("nprobe"), e.getMessage)
+      assert(index.probe(query, k = 5, nprobe = 1).count() > 0)
+    }
 
   test("compactIvfPqLayout: one file per cell, rows preserved, sidecar carried") {
     import spark.implicits._
@@ -650,10 +686,10 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(before == after)
     // sidecar carried: the self-contained probe works on gen1
     val q = Array.fill(dim)(0.5)
-    val g1 = Similarity.ivfPqTopKFromFiles(spark, base + "/gen1", "vec_id", "code",
-      q, k = 5, nprobe = 3).collect().map(_.getLong(0)).toSeq
-    val g0 = Similarity.ivfPqTopKAtRest(spark, base + "/gen0", "vec_id", "code",
-      ivfCb, pqCb, q, k = 5, nprobe = 3).collect().map(_.getLong(0)).toSeq
+    val g1 = annProbe(base + "/gen1", q, k = 5, nprobe = 3)
+      .collect().map(_.getLong(0)).toSeq
+    val g0 = annProbe(base + "/gen0", q, k = 5, nprobe = 3)
+      .collect().map(_.getLong(0)).toSeq
     assert(g1 == g0, s"gen1 $g1 vs gen0 $g0")
   }
 
@@ -669,7 +705,9 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       .resolve("layout").toString
     Similarity.writeIvfPqPartitioned(df, "vec_id", "embedding", ivfCb, pqCb, out)
     // exact double round-trip: loaded codebooks reproduce the written
-    val (li, lp) = Similarity.readIvfPqCodebooks(spark, out)
+    val loaded = AnnIndex.open(spark, out, "vec_id")
+    assert(loaded.kind == "pq")
+    val (li, lp) = (loaded.ivf, loaded.pq)
     assert(li.length == ivfCb.length && li.zip(ivfCb).forall {
       case ((ia, va, na), (ib, vb, nb)) =>
         ia == ib && na == nb && va.sameElements(vb) })
@@ -677,12 +715,13 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       ta.zip(tb).forall { case (ca, cb) => ca.sameElements(cb) } })
     // the sidecar must not leak into plain reads of the layout
     assert(spark.read.parquet(out).count() == 120)
-    // self-contained probe == explicit-codebook probe
+    // self-contained probe == the explicit-codebook answer
     val query = Array.fill(dim)(0.5)
-    val fromFiles = Similarity.ivfPqTopKFromFiles(spark, out, "vec_id", "code",
-      query, k = 10, nprobe = 3).collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    val explicit = Similarity.ivfPqTopKAtRest(spark, out, "vec_id", "code",
-      ivfCb, pqCb, query, k = 10, nprobe = 3)
+    val fromFiles = annProbe(out, query, k = 10, nprobe = 3)
+      .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+    val explicit = Similarity.ivfPqTopK(df, "vec_id", "embedding", query,
+      k = 10, nlist = 8, nprobe = 3, m = 4, ks = 8,
+      ivfCb = Some(ivfCb), pqCb = Some(pqCb))
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     assert(fromFiles == explicit, s"$fromFiles vs $explicit")
     // appending with DIFFERENT codebooks fails fast, naming the hazard
@@ -1275,7 +1314,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     java.nio.file.Files.list(cbDir).iterator().asScala.toSeq
       .foreach(java.nio.file.Files.delete)
     val e = intercept[IllegalStateException] {
-      Similarity.readIvfPqCodebooks(spark, out)
+      AnnIndex.open(spark, out, "vec_id")
     }
     assert(e.getMessage.contains("writeIvfPqPartitioned"), e.getMessage)
     // an append against the corrupt sidecar must FAIL (mis-celling
@@ -1857,7 +1896,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       Similarity.ivfCell(bigIvf, col("embedding"))
     }
     assert(e.getMessage.contains("codegen budget"), e.getMessage)
-    assert(e.getMessage.contains("ivfPqTopKAtRest"), e.getMessage)
+    assert(e.getMessage.contains("AnnIndex.probe"), e.getMessage)
     // under the ceiling nothing changes: the small-codebook path that
     // every existing suite drives still builds
     val smallIvf: Similarity.IvfCodebook =
@@ -1902,8 +1941,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
         .toString + "/layout"
       Similarity.writeIvfPqResidualPartitioned(df, "vec_id", "embedding",
         ivfCb, rcb, out)
-      val atRest = Similarity.ivfPqResidualTopKFromFiles(spark, out,
-        "vec_id", "code", query, k = 5, nprobe = 512)
+      val atRest = annProbe(out, query, k = 5, nprobe = 512)
         .collect()
       assert(atRest.length == 5)
       // both faces rank the same corpus through the same quantizer —
@@ -2046,8 +2084,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(ra.action == "append", s"$ra")
     assert(ra.layout == base + "/a0")
     assert(ra.storedErr <= 2.0 * ra.freshErr, s"$ra")
-    val atRest = Similarity.ivfPqTopKFromFiles(spark, base + "/a0",
-      "vec_id", "code", q, k = 5, nprobe = 2)
+    val atRest = annProbe(base + "/a0", q, k = 5, nprobe = 2)
       .as[(Long, Double)].collect().toSeq
     val inFlight = Similarity.ivfPqTopK(corpus.unionByName(indist),
       "vec_id", "embedding", q, k = 5, nlist = 4, nprobe = 2, m = 4, ks = 16,
@@ -2068,8 +2105,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val all = corpus.unionByName(drifted)
     val newIvf = Similarity.ivfCodebook(all, "vec_id", "embedding", nlist = 4)
     val newPq = Similarity.pqCodebooks(all, "vec_id", "embedding", m = 4, ks = 16)
-    val atRest2 = Similarity.ivfPqTopKFromFiles(spark, base + "/b1",
-      "vec_id", "code", q, k = 5, nprobe = 2)
+    val atRest2 = annProbe(base + "/b1", q, k = 5, nprobe = 2)
       .as[(Long, Double)].collect().toSeq
     val inFlight2 = Similarity.ivfPqTopK(all, "vec_id", "embedding", q,
       k = 5, nlist = 4, nprobe = 2, m = 4, ks = 16,
@@ -2078,8 +2114,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(atRest2 == inFlight2, s"$atRest2 vs $inFlight2")
     // the original generation is untouched by the rebuild (LSM pointer
     // swap is the caller's move)
-    assert(Similarity.ivfPqTopKFromFiles(spark, base + "/b0", "vec_id",
-      "code", q, k = 5, nprobe = 2).count() == 5)
+    assert(annProbe(base + "/b0", q, k = 5, nprobe = 2).count() == 5)
     // KIND-AWARENESS: the same decisions on a RESIDUAL ('rpq') layout,
     // with residual scoring, residual appends and an 'rpq' rebuild
     val rcb = Similarity.residualPqCodebooks(corpus, "vec_id", "embedding",
@@ -2089,8 +2124,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val rr = Similarity.maintainIvfPq(spark, base + "/r0", corpus, indist,
       "vec_id", "embedding", base + "/r1")
     assert(rr.action == "append", s"$rr")
-    val rAtRest = Similarity.ivfPqResidualTopKFromFiles(spark, base + "/r0",
-      "vec_id", "code", q, k = 5, nprobe = 2)
+    val rAtRest = annProbe(base + "/r0", q, k = 5, nprobe = 2)
       .as[(Long, Double)].collect().toSeq
     val rInFlight = Similarity.ivfPqResidualTopK(corpus.unionByName(indist),
       "vec_id", "embedding", q, k = 5, nlist = 4, nprobe = 2, m = 4, ks = 16,
@@ -2102,9 +2136,8 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(rd.action == "rebuild", s"$rd")
     // the rebuilt generation is an 'rpq' layout answering residual
     // probes — a raw rebuild here would poison every future probe
-    assert(Similarity.sidecarPqKind(spark, base + "/r2") == "rpq")
-    assert(Similarity.ivfPqResidualTopKFromFiles(spark, base + "/r2",
-      "vec_id", "code", q, k = 5, nprobe = 2).count() == 5)
+    assert(AnnIndex.open(spark, base + "/r2", "vec_id").kind == "rpq")
+    assert(annProbe(base + "/r2", q, k = 5, nprobe = 2).count() == 5)
     // a trickle batch (<= ks rows) always appends: its own stand-in
     // codebooks memorize it (freshErr = 0) and the raw comparison
     // would spuriously retrain the whole corpus
@@ -2142,14 +2175,13 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val q1 = Array.fill(dim)(1.0)
     val q2 = Array.fill(dim)(-1.0)
     val q3 = Array.tabulate(dim)(j => if (j % 2 == 0) 1.5 else -0.5)
-    val batch = Similarity.ivfPqTopKBatchFromFiles(spark, base + "/layout",
-      "vec_id", "code", Seq(1L -> q1, 2L -> q2, 3L -> q3), k = 7, nprobe = 3)
+    val batch = AnnIndex.open(spark, base + "/layout", "vec_id")
+      .probe(Seq(1L -> q1, 2L -> q2, 3L -> q3), k = 7, nprobe = 3)
     val got = batch.as[(Long, Long, Double)].collect()
       .groupBy(_._1).view.mapValues(_.map(r => (r._2, r._3)).sortBy(r => (r._2, r._1)).toSeq).toMap
     // parity: each query's slice equals the single-query probe
     Seq(1L -> q1, 2L -> q2, 3L -> q3).foreach { case (qid, qv) =>
-      val single = Similarity.ivfPqTopKFromFiles(spark, base + "/layout",
-        "vec_id", "code", qv, k = 7, nprobe = 3)
+      val single = annProbe(base + "/layout", qv, k = 7, nprobe = 3)
         .as[(Long, Double)].collect().toSeq
       assert(got(qid) == single, s"query $qid: ${got(qid)} vs $single")
     }
@@ -2160,13 +2192,11 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(!plan.contains("Exchange SinglePartition"), plan)
     // curated refusals
     val e1 = intercept[IllegalArgumentException] {
-      Similarity.ivfPqTopKBatchFromFiles(spark, base + "/layout",
-        "vec_id", "code", Nil, k = 5)
+      AnnIndex.open(spark, base + "/layout", "vec_id").probe(Nil, k = 5)
     }
     assert(e1.getMessage.contains("at least one query"), e1.getMessage)
     val e2 = intercept[IllegalArgumentException] {
-      Similarity.ivfPqTopKBatchFromFiles(spark, base + "/layout",
-        "vec_id", "code", Seq(1L -> q1, 1L -> q2), k = 5)
+      AnnIndex.open(spark, base + "/layout", "vec_id").probe(Seq(1L -> q1, 1L -> q2), k = 5)
     }
     assert(e2.getMessage.contains("duplicate"), e2.getMessage)
   }
@@ -2230,8 +2260,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val q = Array.fill(dim)(1.0)
     val newIvf = Similarity.ivfCodebook(all, "vec_id", "embedding", nlist = 4)
     val newPq = Similarity.pqCodebooks(all, "vec_id", "embedding", m = 4, ks = 16)
-    val atRest = Similarity.ivfPqTopKFromFiles(spark, base + "/gen1",
-      "vec_id", "code", q, k = 8, nprobe = 2)
+    val atRest = annProbe(base + "/gen1", q, k = 8, nprobe = 2)
       .as[(Long, Double)].collect().toSeq
     val inFlight = Similarity.ivfPqTopK(all, "vec_id", "embedding", q,
       k = 8, nlist = 4, nprobe = 2, m = 4, ks = 16,
@@ -2241,8 +2270,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // exactly ONE rebuild happened across both calls: gen1 was absent
     // until the drifted series demanded it (asserted above), and the
     // old generation is untouched (LSM pointer swap is the caller's)
-    assert(Similarity.ivfPqTopKFromFilesWithIncrements(spark, base + "/gen0",
-      "vec_id", "code", q, k = 8, nprobe = 2).count() == 8)
+    assert(annProbe(base + "/gen0", q, k = 8, nprobe = 2).count() == 8)
     // the FENCE: the reports the rebuild consumed never re-fire it —
     // the immediate re-run (the recurring monitor's next tick) keeps,
     // with an empty post-fence series
@@ -2292,9 +2320,8 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val r5 = Similarity.maintainFromDriftSeries(spark, base + "/rdrift",
       base + "/r0", all, "vec_id", "embedding", base + "/r1", window = 2)
     assert(r5.action == "rebuild", s"$r5")
-    assert(Similarity.sidecarPqKind(spark, base + "/r1") == "rpq")
-    assert(Similarity.ivfPqResidualTopKFromFiles(spark, base + "/r1",
-      "vec_id", "code", q, k = 8, nprobe = 2).count() == 8)
+    assert(AnnIndex.open(spark, base + "/r1", "vec_id").kind == "rpq")
+    assert(annProbe(base + "/r1", q, k = 8, nprobe = 2).count() == 8)
     // an in-distribution trailing window on the SAME layout keeps even
     // at full length (threshold respected, not just series length)
     val calm = base + "/calm_drift"
@@ -2348,15 +2375,14 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val base = java.nio.file.Files.createTempDirectory("graft_rpq_incr").toString
     Similarity.writeIvfPqResidualPartitioned(corpus, "vec_id", "embedding",
       ivfCb, rcb, base + "/streamed")
-    assert(Similarity.sidecarPqKind(spark, base + "/streamed") == "rpq")
+    assert(AnnIndex.open(spark, base + "/streamed", "vec_id").kind == "rpq")
     // the kind-agnostic increment append must pick the RESIDUAL encoder
     Similarity.appendIvfPqIncrement(b1, "vec_id", "embedding",
       base + "/streamed", 0L)
     Similarity.appendIvfPqIncrement(b2, "vec_id", "embedding",
       base + "/streamed", 1L)
     val query = Array.fill(dim)(0.5)
-    val streamed = Similarity.ivfPqResidualTopKFromFilesWithIncrements(spark,
-      base + "/streamed", "vec_id", "code", query, k = 8, nprobe = 2)
+    val streamed = annProbe(base + "/streamed", query, k = 8, nprobe = 2)
       .as[(Long, Double)].collect().toSeq
     // batch-face parity: the same batches through appendIvfPqResidual
     Similarity.writeIvfPqResidualPartitioned(corpus, "vec_id", "embedding",
@@ -2365,21 +2391,20 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       base + "/batched")
     Similarity.appendIvfPqResidual(b2, "vec_id", "embedding", ivfCb, rcb,
       base + "/batched")
-    val batched = Similarity.ivfPqResidualTopKFromFiles(spark,
-      base + "/batched", "vec_id", "code", query, k = 8, nprobe = 2)
+    val batched = annProbe(base + "/batched", query, k = 8, nprobe = 2)
       .as[(Long, Double)].collect().toSeq
     assert(streamed == batched, s"$streamed vs $batched")
     assert(streamed.exists(_._1 >= 100L), s"increments invisible: $streamed")
     // raw codes can never land in the rpq layout (and vice versa): the
-    // raw probe refuses the layout by kind
+    // raw-only refine refuses the layout by kind
     val e = intercept[IllegalStateException] {
-      Similarity.ivfPqTopKFromFilesWithIncrements(spark, base + "/streamed",
-        "vec_id", "code", query, k = 3)
+      AnnIndex.open(spark, base + "/streamed", "vec_id")
+        .refine(query, k = 3, "embedding")
     }
     assert(e.getMessage.contains("'pq'"), e.getMessage)
-    // sidecarPqKind's own refusal face: a sidecar-less path
+    // the handle's own refusal face: a sidecar-less path
     val e2 = intercept[IllegalArgumentException] {
-      Similarity.sidecarPqKind(spark, base + "/nowhere")
+      AnnIndex.open(spark, base + "/nowhere", "vec_id")
     }
     assert(e2.getMessage.contains("sidecar"), e2.getMessage)
   }
@@ -2480,8 +2505,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       ivfCb, pqCb, base + "/gen0")
     Similarity.compactIvfPqLayout(spark, base + "/gen0", base + "/gen1",
       dropIds = Some(removed.toDF("vec_id")), idCol = "vec_id")
-    val ranked = Similarity.ivfPqTopKFromFiles(spark, base + "/gen1",
-      "vec_id", "code", Array.fill(dim)(0.5), k = 10, nprobe = 2)
+    val ranked = annProbe(base + "/gen1", Array.fill(dim)(0.5), k = 10, nprobe = 2)
       .collect().map(_.getLong(0)).toSet
     assert(!ranked.contains(0L) && ranked == Set(100L, 7L))
   }
@@ -2550,7 +2574,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
         spark.sparkContext.parallelize(kept.toSeq), schema)
       .coalesce(1).write.mode("overwrite").parquet(out + "/_codebooks")
     val e = intercept[IllegalStateException] {
-      Similarity.readIvfPqCodebooks(spark, out)
+      AnnIndex.open(spark, out, "vec_id")
     }
     assert(e.getMessage.contains("no 'ivf'"), e.getMessage)
     assert(e.getMessage.contains("kinds present: pq"), e.getMessage)
@@ -2600,8 +2624,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(Similarity.resolveLayout(spark, root) == root + "/gen0")
     assert(Similarity.resolveLayout(spark, root + "/gen0") == root + "/gen0")
     val q = Array.fill(dim)(1.0)
-    assert(Similarity.ivfPqTopKFromFiles(spark, root, "vec_id", "code",
-      q, k = 5, nprobe = 2).count() == 5)
+    assert(annProbe(root, q, k = 5, nprobe = 2).count() == 5)
     // in-distribution: append in place, pointer unmoved
     val ra = Similarity.maintainPointedIvfPq(spark, root, corpus, indist,
       "vec_id", "embedding")
@@ -2618,8 +2641,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(!Layouts.exists(spark, root + "/gen0/" + Layouts.QuiesceMarker))
     val newIvf = Similarity.ivfCodebook(all, "vec_id", "embedding", nlist = 4)
     val newPq = Similarity.pqCodebooks(all, "vec_id", "embedding", m = 4, ks = 16)
-    val atRoot = Similarity.ivfPqTopKFromFiles(spark, root, "vec_id", "code",
-      q, k = 8, nprobe = 2).as[(Long, Double)].collect().toSeq
+    val atRoot = annProbe(root, q, k = 8, nprobe = 2).as[(Long, Double)].collect().toSeq
     val inFlight = Similarity.ivfPqTopK(all, "vec_id", "embedding", q,
       k = 8, nlist = 4, nprobe = 2, m = 4, ks = 16,
       ivfCb = Some(newIvf), pqCb = Some(newPq))
@@ -2634,8 +2656,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val gone = Layouts.vacuumGenerations(spark, root, keep = 1)
     assert(gone == Seq("gen0", "gen1"), s"$gone")
     assert(Layouts.currentGenerationName(spark, root) == "gen2")
-    assert(Similarity.ivfPqTopKFromFiles(spark, root, "vec_id", "code",
-      q, k = 5, nprobe = 2).count() == 5)
+    assert(annProbe(root, q, k = 5, nprobe = 2).count() == 5)
     // alsoKeep spares a named generation; keep must cover the live one
     assert(Layouts.vacuumGenerations(spark, root, keep = 1,
       alsoKeep = Seq("gen2")).isEmpty)
@@ -2677,8 +2698,13 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val rt = Similarity.maintainIvfPq(spark, base + "/t0", corpus, drifted,
       "vec_id", "embedding", base + "/t1", trained = true)
     assert(rs.action == "rebuild" && rt.action == "rebuild", s"$rs $rt")
-    val (si, sp) = Similarity.readIvfPqCodebooks(spark, base + "/s1")
-    val (ti, tp) = Similarity.readIvfPqCodebooks(spark, base + "/t1")
+    def codebooks(p: String, kind: String) = {
+      val idx = AnnIndex.open(spark, p, "vec_id")
+      assert(idx.kind == kind, s"$p holds ${idx.kind}")
+      (idx.ivf, idx.pq)
+    }
+    val (si, sp) = codebooks(base + "/s1", "pq")
+    val (ti, tp) = codebooks(base + "/t1", "pq")
     val standinErr = Similarity.ivfPqDistortion(all, "embedding", si, sp,
       residual = false)
     val trainedErr = Similarity.ivfPqDistortion(all, "embedding", ti, tp,
@@ -2698,8 +2724,8 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val rrt = Similarity.maintainIvfPq(spark, base + "/rt0", corpus, drifted,
       "vec_id", "embedding", base + "/rt1", trained = true)
     assert(rrs.action == "rebuild" && rrt.action == "rebuild", s"$rrs $rrt")
-    val (rsi, rsp) = Similarity.readIvfPqResidualCodebooks(spark, base + "/rs1")
-    val (rti, rtp) = Similarity.readIvfPqResidualCodebooks(spark, base + "/rt1")
+    val (rsi, rsp) = codebooks(base + "/rs1", "rpq")
+    val (rti, rtp) = codebooks(base + "/rt1", "rpq")
     val rStandin = Similarity.ivfPqDistortion(all, "embedding", rsi, rsp,
       residual = true)
     val rTrained = Similarity.ivfPqDistortion(all, "embedding", rti, rtp,
@@ -2708,10 +2734,8 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // the trained generations are intact layouts: self-contained
     // probes answer k rows
     val q = Array.fill(dim)(1.0)
-    assert(Similarity.ivfPqTopKFromFiles(spark, base + "/t1", "vec_id",
-      "code", q, k = 5, nprobe = 2).count() == 5)
-    assert(Similarity.ivfPqResidualTopKFromFiles(spark, base + "/rt1",
-      "vec_id", "code", q, k = 5, nprobe = 2).count() == 5)
+    assert(annProbe(base + "/t1", q, k = 5, nprobe = 2).count() == 5)
+    assert(annProbe(base + "/rt1", q, k = 5, nprobe = 2).count() == 5)
   }
 
   test("batched probes: residual and increments parity with single probes, output globally ordered") {
@@ -2736,25 +2760,24 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       ivfCb, rcb, base + "/rlayout")
     Similarity.appendIvfPqIncrement(incr, "vec_id", "embedding",
       base + "/rlayout", batchId = 0L)
-    val rBatch = Similarity.ivfPqResidualTopKBatchFromFilesWithIncrements(
-      spark, base + "/rlayout", "vec_id", "code", qs, k = 7, nprobe = 3)
+    val rBatch = AnnIndex.open(spark, base + "/rlayout", "vec_id")
+      .probe(qs, k = 7, nprobe = 3)
       .as[(Long, Long, Double)].collect().toSeq
     // globally ordered as promised: (query_id, adc, id)
     assert(rBatch == rBatch.sortBy(r => (r._1, r._3, r._2)), s"$rBatch")
     qs.foreach { case (qid, qv) =>
-      val single = Similarity.ivfPqResidualTopKFromFilesWithIncrements(
-        spark, base + "/rlayout", "vec_id", "code", qv, k = 7, nprobe = 3)
+      val single = annProbe(base + "/rlayout", qv, k = 7, nprobe = 3)
         .as[(Long, Double)].collect().toSeq
       val slice = rBatch.filter(_._1 == qid).map(r => (r._2, r._3))
       assert(slice == single, s"residual query $qid: $slice vs $single")
     }
-    // base-only residual batch face: same parity without increments
-    val rBase = Similarity.ivfPqResidualTopKBatchFromFiles(spark,
-      base + "/rlayout", "vec_id", "code", qs, k = 7, nprobe = 3)
+    // base-only residual batch: same parity without increments
+    val rBase = AnnIndex.open(spark, base + "/rlayout", "vec_id")
+      .probe(qs, k = 7, nprobe = 3, excludeBatchId = Some(0L))
       .as[(Long, Long, Double)].collect().toSeq
     qs.foreach { case (qid, qv) =>
-      val single = Similarity.ivfPqResidualTopKFromFiles(spark,
-        base + "/rlayout", "vec_id", "code", qv, k = 7, nprobe = 3)
+      val single = annProbe(base + "/rlayout", qv, k = 7, nprobe = 3,
+        excludeBatchId = Some(0L))
         .as[(Long, Double)].collect().toSeq
       val slice = rBase.filter(_._1 == qid).map(r => (r._2, r._3))
       assert(slice == single, s"residual base query $qid: $slice vs $single")
@@ -2766,21 +2789,19 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       ivfCb, pqCb, base + "/player")
     Similarity.appendIvfPqIncrement(incr, "vec_id", "embedding",
       base + "/player", batchId = 0L)
-    val pBatch = Similarity.ivfPqTopKBatchFromFilesWithIncrements(spark,
-      base + "/player", "vec_id", "code", qs, k = 7, nprobe = 3)
+    val pBatch = AnnIndex.open(spark, base + "/player", "vec_id")
+      .probe(qs, k = 7, nprobe = 3)
       .as[(Long, Long, Double)].collect().toSeq
     qs.foreach { case (qid, qv) =>
-      val single = Similarity.ivfPqTopKFromFilesWithIncrements(spark,
-        base + "/player", "vec_id", "code", qv, k = 7, nprobe = 3)
+      val single = annProbe(base + "/player", qv, k = 7, nprobe = 3)
         .as[(Long, Double)].collect().toSeq
       val slice = pBatch.filter(_._1 == qid).map(r => (r._2, r._3))
       assert(slice == single, s"raw query $qid: $slice vs $single")
     }
     // the replay rule holds on the batched face too: excluding the
     // increment's own batch id answers base-only
-    val excl = Similarity.ivfPqTopKBatchFromFilesWithIncrements(spark,
-      base + "/player", "vec_id", "code", qs, k = 7, nprobe = 3,
-      excludeBatchId = Some(0L))
+    val excl = AnnIndex.open(spark, base + "/player", "vec_id")
+      .probe(qs, k = 7, nprobe = 3, excludeBatchId = Some(0L))
       .select("vec_id").as[Long].collect().toSet
     assert(excl.forall(_ % 4 != 0), s"excluded batch leaked: $excl")
   }
@@ -2859,23 +2880,20 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // DOMINANCE (guaranteed, not statistical): every exact neighbor
     // the plain ADC top-10 found is still in the 50-shortlist, and the
     // exact re-rank always keeps it — so refined recall >= ADC recall
-    val adc = Similarity.ivfPqTopKFromFiles(spark, base + "/layout",
-      "vec_id", "code", q, k = 10, nprobe = 8)
-    val refined = Similarity.ivfPqTopKRefined(spark, base + "/layout",
-      "vec_id", "code", "embedding", q, k = 10, shortlist = 50, nprobe = 8)
+    val adc = annProbe(base + "/layout", q, k = 10, nprobe = 8)
+    val index = AnnIndex.open(spark, base + "/layout", "vec_id")
+    val refined = index.refine(q, k = 10, "embedding", shortlist = 50, nprobe = 8)
     assert(recallOf(refined) >= recallOf(adc),
       s"refined ${recallOf(refined)} vs adc ${recallOf(adc)}")
     // a shortlist covering every probed row with every cell probed is
     // EXACT search: identical to the brute-force top-k, values included
-    val full = Similarity.ivfPqTopKRefined(spark, base + "/layout",
-      "vec_id", "code", "embedding", q, k = 10, shortlist = 200, nprobe = 8)
+    val full = index.refine(q, k = 10, "embedding", shortlist = 200, nprobe = 8)
       .as[(Long, Double)].collect().toSeq
     val truth = exact.as[(Long, Double)].collect().toSeq
     assert(full == truth, s"$full vs $truth")
     // curated refusal: a shortlist smaller than k cannot re-rank to k
     val e = intercept[IllegalArgumentException] {
-      Similarity.ivfPqTopKRefined(spark, base + "/layout", "vec_id",
-        "code", "embedding", q, k = 10, shortlist = 5)
+      index.refine(q, k = 10, "embedding", shortlist = 5)
     }
     assert(e.getMessage.contains("shortlist"), e.getMessage)
   }
@@ -2972,5 +2990,18 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val shuffled = spark.read.parquet(base + "/one").repartition(3)
     assert(ScanWidth.estimate(shuffled).isEmpty)
     assert(ScanWidth.estimate(docs()).isEmpty)
+    // the planner prunes a partitioned relation by its partition filter
+    // and splits a bucketed one by bucket — the full-listing replay
+    // models neither, so both must decline too
+    (0L until 200L).map(i => (i, s"text $i", i % 4)).toDF("doc_id", "text", "part")
+      .write.partitionBy("part").parquet(base + "/parted")
+    val parted = spark.read.parquet(base + "/parted").where(col("part") === 1L)
+    assert(ScanWidth.estimate(parted).isEmpty, "partition-filtered relation")
+    val bucketed = s"graft_scanwidth_bucketed_${System.nanoTime()}"
+    (0L until 200L).map(i => (i, s"text $i")).toDF("doc_id", "text")
+      .write.option("path", base + "/bucketed").bucketBy(4, "doc_id")
+      .saveAsTable(bucketed)
+    try assert(ScanWidth.estimate(spark.table(bucketed)).isEmpty, "bucketed relation")
+    finally spark.sql(s"DROP TABLE IF EXISTS $bucketed")
   }
 }

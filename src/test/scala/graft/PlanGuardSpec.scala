@@ -481,6 +481,56 @@ class PlanGuardSpec extends AnyFunSuite with BeforeAndAfterAll {
       s"q148 read-back must touch codes only: ${scan.schema.fieldNames.mkString(",")}")
   }
 
+  test("AnnIndex.probe over committed increments: every scan reads probed cells and codes only") {
+    // the q157/q161 claim: the probe predicate sits above the base ∪
+    // increments union and reaches every side, so each increment
+    // directory prunes to the probed cells like the base layout, and
+    // no side reads the kept fp32 vector column
+    import graft.ops.{AnnIndex, Similarity}
+    import spark.implicits._
+    val dim = 8
+    def vecs(r: Range) = r.map(i =>
+      (i.toLong, Array.tabulate(dim)(j => math.sin(i * 0.31 + j))))
+      .toDF("vec_id", "embedding")
+    val corpus = vecs(0 until 64)
+    val ivfCb = Similarity.ivfCodebook(corpus, "vec_id", "embedding", nlist = 8)
+    val pqCb = Similarity.pqCodebooks(corpus, "vec_id", "embedding", m = 4, ks = 8)
+    val out = java.nio.file.Files.createTempDirectory("graft_plan_incr").toString +
+      "/layout"
+    Similarity.writeIvfPqPartitioned(corpus, "vec_id", "embedding", ivfCb, pqCb,
+      out, keep = Seq("embedding"))
+    Seq(0L -> (100 until 132), 1L -> (200 until 232)).foreach { case (b, r) =>
+      Similarity.appendIvfPqIncrement(vecs(r), "vec_id", "embedding", out, b,
+        keep = Seq("embedding"))
+    }
+    val index = AnnIndex.open(spark, out, "vec_id")
+    val query = Array.fill(dim)(0.7)
+    val probed = Similarity.ivfProbed(index.ivf, query, 2).toSet
+    val df = index.probe(Seq(0L -> query), k = 5, nprobe = 2)
+    assert(df.count() == 5)
+    val plan = df.queryExecution.executedPlan match {
+      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => a.initialPlan
+      case other => other
+    }
+    assert(exchanges(plan.toString) == 0, s"the probe grew a shuffle:\n$plan")
+    val scans = plan.collect {
+      case s: org.apache.spark.sql.execution.FileSourceScanExec => s
+    }
+    assert(scans.size == 2, s"expected base + increments scans:\n$plan")
+    scans.foreach { s =>
+      val parts = s.relation.partitionSchema
+      val i = parts.fieldIndex("cell")
+      val cells = s.selectedPartitions.filePartitionIterator
+        .map(p => p.values.get(i, parts(i).dataType).toString.toLong).toSet
+      assert(cells.nonEmpty && cells.subsetOf(probed),
+        s"a scan read cells $cells outside the probed $probed")
+      // file columns read: id and code; cell (and an increment's
+      // ingest_batch) come from the directory names, not the files
+      assert(s.requiredSchema.fieldNames.toSet.subsetOf(Set("vec_id", "code")),
+        s"a scan read ${s.requiredSchema.fieldNames.mkString(",")}")
+    }
+  }
+
   test("q146: the filtered probe pushes the predicate to parquet inside the pruned cells") {
     // filtered ANN = q135's pruning + the metadata predicate at scan
     // level: 4 of 16 cell directories at plan time, the grp filter in

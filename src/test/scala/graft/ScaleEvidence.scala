@@ -1,6 +1,6 @@
 package graft
 
-import graft.ops.{Dedup, Sampling, Similarity}
+import graft.ops.{AnnIndex, Dedup, Sampling, Similarity}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -27,6 +27,12 @@ import org.apache.spark.sql.functions._
   * (default: /root/testdata/sf0.001 /root/testdata/sf0.1 gen:20000 gen:50000)
   */
 object ScaleEvidence {
+
+  /** The at-rest top-10 of one query over 4 probed cells, as (vec_id, adc). */
+  private def annProbe(spark: SparkSession, path: String,
+      query: Array[Double]): DataFrame =
+    AnnIndex.open(spark, path, "vec_id").probe(Seq(0L -> query), k = 10, nprobe = 4)
+      .drop("query_id")
 
   /** The testdata corpus's own ~30-word vocabulary — the adversarial
     * LOW-ENTROPY case: every doc shares most shingles and simhash
@@ -295,7 +301,7 @@ object ScaleEvidence {
     val spark2 = df.sparkSession
     val t1 = System.nanoTime()
     val adc = Similarity.pqAdcTopKCoded(
-      spark2.read.parquet(layout.getAbsolutePath), "vec_id", "code", pqCb, query, 10)
+      spark2.read.parquet(layout.getAbsolutePath), "vec_id", pqCb, query, 10)
       .collect().map(_.getLong(0))
     val adcSecs = (System.nanoTime() - t1) / 1e9
 
@@ -304,7 +310,7 @@ object ScaleEvidence {
     val ivfpq = Similarity.pqAdcTopKCoded(
       spark2.read.parquet(layout.getAbsolutePath)
         .where(col("cell").isin(probed: _*)),
-      "vec_id", "code", pqCb, query, 10)
+      "vec_id", pqCb, query, 10)
       .collect().map(_.getLong(0))
     val ivfpqSecs = (System.nanoTime() - t2) / 1e9
     df.unpersist()
@@ -370,9 +376,8 @@ object ScaleEvidence {
     exact.count()
     val curve = Seq(1, 2, 4, 8, 16).map { np =>
       val t0 = System.nanoTime()
-      val ap = Similarity.ivfPqTopKBatchFromFiles(spark,
-        layout.getAbsolutePath, "vec_id", "code", queries, k = 10,
-        nprobe = np)
+      val ap = AnnIndex.open(spark, layout.getAbsolutePath, "vec_id")
+        .probe(queries, k = 10, nprobe = np)
       val recall = Similarity.annRecallAtK(exact,
         ap.select(col("query_id").as("qid"), col("vec_id")),
         "qid", "vec_id", k = 10)
@@ -563,8 +568,7 @@ object ScaleEvidence {
       (r, (System.nanoTime() - t0) / 1e9)
     }
     val (viaIncr, incrSecs) = timed {
-      Similarity.ivfPqTopKFromFilesWithIncrements(spark, layout,
-        "vec_id", "code", query, k = 10, nprobe = 4)
+      annProbe(spark, layout, query)
         .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     }
     val (_, compactSecs) = timed {
@@ -572,8 +576,7 @@ object ScaleEvidence {
         base.getAbsolutePath + "/gen1")
     }
     val (viaCompacted, compactedSecs) = timed {
-      Similarity.ivfPqTopKFromFiles(spark, base.getAbsolutePath + "/gen1",
-        "vec_id", "code", query, k = 10, nprobe = 4)
+      annProbe(spark, base.getAbsolutePath + "/gen1", query)
         .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     }
     org.apache.commons.io.FileUtils.deleteQuietly(base)
@@ -646,14 +649,14 @@ object ScaleEvidence {
     }
     require(rReb.action == "rebuild", s"expected rebuild, got $rReb")
     // probe parity across the swap: gen1 answers for the corpus it
-    // re-encoded (same deterministic codebooks -> same top-k as gen0's
-    // base scan, which holds exactly the same corpus rows)
+    // re-encoded (same deterministic codebooks -> same top-k as the
+    // corpus ranked in flight through gen0's codebooks; gen0's own
+    // probe would also read its streamed increments)
     val query = centers(5).map(_ + 0.001)
-    val viaNew = Similarity.ivfPqTopKFromFiles(spark,
-      base.getAbsolutePath + "/gen1", "vec_id", "code", query, k = 10, nprobe = 4)
+    val viaNew = annProbe(spark, base.getAbsolutePath + "/gen1", query)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    val viaOldBase = Similarity.ivfPqTopKFromFiles(spark, layout,
-      "vec_id", "code", query, k = 10, nprobe = 4)
+    val viaOldBase = Similarity.ivfPqTopK(corpus, "vec_id", "embedding",
+        query, k = 10, nprobe = 4, ivfCb = Some(ivfCb), pqCb = Some(pqCb))
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     org.apache.commons.io.FileUtils.deleteQuietly(base)
     require(viaNew == viaOldBase,

@@ -1,9 +1,9 @@
 package graft
 
 import graft.core.ConvertOptions
-import graft.ops.MultiModal
+import graft.ops.{AnnIndex, MultiModal}
 import graft.streaming.StreamingConverter
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -19,6 +19,12 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     .getOrCreate()
 
   override def afterAll(): Unit = spark.stop()
+
+  /** One query through the index handle, as (vec_id, adc). */
+  private def annProbe(path: String, query: Array[Double], k: Int,
+      nprobe: Int): DataFrame =
+    AnnIndex.open(spark, path, "vec_id").probe(Seq(0L -> query), k, nprobe)
+      .drop("query_id")
 
   private def tmp(prefix: String): java.io.File = {
     val d = java.nio.file.Files.createTempDirectory(prefix).toFile
@@ -475,8 +481,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     // the batch landed in its own increment directory: plain reads of
     // the layout stay base-only, the increments face sees 40 + 10
     assert(spark.read.parquet(base + "/layout").count() == 40)
-    val ids1 = Similarity.ivfPqTopKFromFilesWithIncrements(spark,
-      base + "/layout", "vec_id", "code", query, k = 50, nprobe = 4)
+    val ids1 = annProbe(base + "/layout", query, k = 50, nprobe = 4)
       .select("vec_id").as[Long].collect().toSet
     assert(ids1.exists(_ >= 100L), s"batch 1 invisible to the probe: $ids1")
     // restart from the same checkpoint: batch 1 NOT reprocessed, the
@@ -488,8 +493,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
       Seq("vec_id", "cell", "code"), None)
     assert(counted.count() == 60)
     assert(counted.select("vec_id").distinct().count() == 60)
-    val atRest = Similarity.ivfPqTopKFromFilesWithIncrements(spark,
-      base + "/layout", "vec_id", "code", query, k = 8, nprobe = 4)
+    val atRest = annProbe(base + "/layout", query, k = 8, nprobe = 4)
       .as[(Long, Double)].collect().toSeq
     // batch parity: the SAME two batches through the batch face
     // (appendIvfPq into a parallel generation) answer identically —
@@ -500,8 +504,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
       "vec_id", "embedding", ivfCb, pqCb, base + "/par")
     Similarity.appendIvfPq(vecs(10, 200L, 6.0).toDF("vec_id", "embedding"),
       "vec_id", "embedding", ivfCb, pqCb, base + "/par")
-    val viaBatchFace = Similarity.ivfPqTopKFromFiles(spark, base + "/par",
-      "vec_id", "code", query, k = 8, nprobe = 4)
+    val viaBatchFace = annProbe(base + "/par", query, k = 8, nprobe = 4)
       .as[(Long, Double)].collect().toSeq
     assert(viaBatchFace == atRest, s"$viaBatchFace vs $atRest")
     // drift: one row per batch via the partition column; the shifted
@@ -516,8 +519,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     StreamingSimilarity.ingestBatch(
       vecs(10, 100L, 0.0).toDF("vec_id", "embedding"), 0L,
       base + "/layout", "vec_id", "embedding", Some(base + "/drift"))
-    val again = Similarity.ivfPqTopKFromFilesWithIncrements(spark,
-      base + "/layout", "vec_id", "code", query, k = 8, nprobe = 4)
+    val again = annProbe(base + "/layout", query, k = 8, nprobe = 4)
       .as[(Long, Double)].collect().toSeq
     val replayed = graft.ops.Layouts.withIncrements(spark,
       spark.read.parquet(base + "/layout"), base + "/layout",
@@ -528,8 +530,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     // generation (quiesced stream), sidecar carried
     Similarity.compactIvfPqLayout(spark, base + "/layout", base + "/gen1")
     assert(spark.read.parquet(base + "/gen1").count() == 60)
-    val compacted = Similarity.ivfPqTopKFromFiles(spark, base + "/gen1",
-      "vec_id", "code", query, k = 8, nprobe = 4)
+    val compacted = annProbe(base + "/gen1", query, k = 8, nprobe = 4)
       .as[(Long, Double)].collect().toSeq
     assert(compacted == atRest, s"$compacted vs $atRest")
     assert(again == atRest, s"$again vs $atRest")
@@ -749,8 +750,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     val q = Array.fill(dim)(1.0)
     val newIvf = Similarity.ivfCodebook(all, "vec_id", "embedding", nlist = 4)
     val newPq = Similarity.pqCodebooks(all, "vec_id", "embedding", m = 4, ks = 16)
-    val atRoot = Similarity.ivfPqTopKFromFiles(spark, root, "vec_id", "code",
-      q, k = 8, nprobe = 2).as[(Long, Double)].collect().toSeq
+    val atRoot = annProbe(root, q, k = 8, nprobe = 2).as[(Long, Double)].collect().toSeq
     val inFlight = Similarity.ivfPqTopK(all, "vec_id", "embedding", q,
       k = 8, nlist = 4, nprobe = 2, m = 4, ks = 16,
       ivfCb = Some(newIvf), pqCb = Some(newPq))
@@ -802,24 +802,21 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     // probe after (the fold preserves every row), the next stream
     // batch lands in gen2, and vacuum reclaims both superseded
     // generations
-    val beforeFold = Similarity.ivfPqTopKFromFilesWithIncrements(spark,
-      root, "vec_id", "code", q, k = 8, nprobe = 2)
+    val beforeFold = annProbe(root, q, k = 8, nprobe = 2)
       .as[(Long, Double)].collect().toSeq
     val gen2 = Similarity.compactPointedIvfPqLayout(spark, root,
       idCol = "vec_id")
     assert(gen2 == root + "/gen2", gen2)
     assert(Layouts.currentGenerationName(spark, root) == "gen2")
     assert(!Layouts.exists(spark, root + "/gen1/" + Layouts.QuiesceMarker))
-    val afterFold = Similarity.ivfPqTopKFromFiles(spark, root, "vec_id",
-      "code", q, k = 8, nprobe = 2).as[(Long, Double)].collect().toSeq
+    val afterFold = annProbe(root, q, k = 8, nprobe = 2).as[(Long, Double)].collect().toSeq
     assert(afterFold == beforeFold, s"$afterFold vs $beforeFold")
     StreamingSimilarity.ingestBatch(sample(24, 0.0, 7000L)
       .toDF("vec_id", "embedding"), 6L, root, "vec_id", "embedding", None)
     assert(Layouts.exists(spark, root + "/gen2/_increments/ingest_batch=6"))
     assert(Layouts.vacuumGenerations(spark, root, keep = 1) ==
       Seq("gen0", "gen1"))
-    assert(Similarity.ivfPqTopKFromFiles(spark, root, "vec_id", "code",
-      q, k = 8, nprobe = 2).count() == 8)
+    assert(annProbe(root, q, k = 8, nprobe = 2).count() == 8)
   }
 
   test("pointered monitor recovery is FORWARD-ONLY: a pointer advanced past the fence is never swapped backward") {
