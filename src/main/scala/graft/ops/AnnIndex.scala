@@ -2,13 +2,13 @@ package graft.ops
 
 import graft.functions.GraftFunctions
 import graft.ops.Similarity.{IvfCodebook, PqCodebooks}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** One IVF-PQ at-rest index — the long-lived handle every at-rest
-  * probe goes through ("Continuously Adaptive Similarity Search",
-  * SIGMOD 2020: the index is one object, not a family of entry
-  * points).
+  * probe and every lifecycle step goes through ("Continuously Adaptive
+  * Similarity Search", SIGMOD 2020: the index is one object, not a
+  * family of entry points).
   *
   * [[AnnIndex.open]] does the lookup once: it follows the generation
   * pointer ([[Similarity.resolveLayout]]) and reads the `_codebooks`
@@ -16,20 +16,33 @@ import org.apache.spark.sql.functions._
   * quantizer `kind` — `"pq"` (raw-vector codes,
   * [[Similarity.writeIvfPqPartitioned]]) or `"rpq"` (residual codes,
   * [[Similarity.writeIvfPqResidualPartitioned]]) — and the codebooks.
-  * The caller never names the kind, so residual codes can never be
-  * ranked through raw tables or vice versa.
+  * The caller never names the kind or the codebooks, so residual codes
+  * can never be ranked through raw tables, appended through the wrong
+  * encoder, or encoded with codebooks the layout was not written with.
   *
-  * [[probe]] is the one ranking path for both kinds, over the base
-  * layout plus every committed streamed increment
-  * ([[Similarity.appendIvfPqIncrement]]); [[refine]] is the exact
-  * re-rank of a raw-PQ base layout. The read-only fields are the
-  * generation directory the pointer resolved to (`layout`), the kind
-  * tag, the coarse codebook (`ivf`) and the PQ tables (`pq`: raw
-  * tables for `"pq"`, residual tables for `"rpq"`).
+  * Reads: [[probe]] is the one ranking path for both kinds, over the
+  * base layout plus every committed streamed increment
+  * ([[appendIncrement]]); [[refine]] is the exact re-rank of a raw-PQ
+  * base layout.
+  *
+  * Lifecycle: [[append]] and [[appendIncrement]] encode new rows into
+  * this generation; [[maintain]], [[maintainFromDriftSeries]] and
+  * [[compact]] write `gen<k+1>` next to it and swap the store root's
+  * `_current` pointer ([[Layouts.GenerationPointer]]) while they still
+  * hold this generation's quiesce marker, so no append can land in the
+  * superseded generation between the rewrite and the swap. They need a
+  * handle opened on a pointered store root. A handle is bound to the
+  * generation it opened: once `_current` moves off it, every lifecycle
+  * step refuses curated — reopen the index.
+  *
+  * The read-only fields are the generation directory the pointer
+  * resolved to (`layout`), the kind tag, the coarse codebook (`ivf`)
+  * and the PQ tables (`pq`: raw tables for `"pq"`, residual tables for
+  * `"rpq"`).
   */
 final class AnnIndex private (spark: SparkSession, val layout: String,
     val idCol: String, val kind: String, val ivf: IvfCodebook,
-    val pq: PqCodebooks) {
+    val pq: PqCodebooks, root: Option[String]) {
 
   import AnnIndex.{Cell, Code}
 
@@ -160,6 +173,345 @@ final class AnnIndex private (spark: SparkSession, val layout: String,
       .orderBy(col("cos").desc, col(idCol))
       .limit(k)
   }
+
+  /** INCREMENTAL maintenance — the daily-ingest shape for vectors (the
+    * q131 near-dup-index play): encode ONLY the new batch with this
+    * generation's codebooks and kind and append its (id, cell, code)
+    * rows into the cell directories. The corpus side is never read,
+    * re-encoded or shuffled — one narrow pass over the batch plus new
+    * files in the cells it lands in (parquet appends are
+    * file-additive). [[probe]] then answers over corpus + batch with
+    * the same pruning and no retraining.
+    *
+    * Quantization error drifts as the ingested distribution leaves the
+    * trained one; [[maintain]] is this append gated by that drift
+    * ([[Similarity.ivfPqDistortion]]), rebuilding when it is too large.
+    * `keep` carries metadata columns, as in the layout writers.
+    */
+  def append(batch: DataFrame, vecCol: String, keep: Seq[String] = Nil): Unit =
+    encodeInto(batch, vecCol, keep, "append", layout, "append")
+
+  /** [[append]] for the STREAMING ingest loop
+    * ([[graft.streaming.StreamingSimilarity]], the
+    * [[graft.ops.Dedup.appendNearDupIndexIncrement]] play for vectors):
+    * the batch's rows land in a directory the batch OWNS
+    * (`_increments/ingest_batch=<id>`, cell-partitioned inside it,
+    * overwritten wholesale), so a crash-replay rewrites the same rows —
+    * plain `mode("append")` would duplicate them, and a duplicated id
+    * in an ANN layout surfaces twice in a top-k. Underscore-prefixed,
+    * so plain reads skip increments; [[probe]] reads every committed
+    * one, and [[compact]] folds them into the next base generation.
+    */
+  def appendIncrement(batch: DataFrame, vecCol: String, batchId: Long,
+      keep: Seq[String] = Nil): Unit =
+    encodeInto(batch, vecCol, keep, "overwrite",
+      Layouts.incrementDir(layout, batchId), "appendIncrement")
+
+  /** The write both appends share: refuse on a stale handle or while a
+    * compaction holds the quiesce marker (the caller retries after the
+    * fold), encode with this generation's codebooks and kind, then
+    * re-check the pointer. The marker is check-then-act for a write
+    * already past it, so a rebuild can acquire, rewrite, swap and
+    * release while this batch encodes; failing AFTER the write turns
+    * that sliver into a curated error (a stream's checkpoint replays
+    * the batch into the new generation; the superseded generation's
+    * rows are never read again).
+    */
+  private def encodeInto(batch: DataFrame, vecCol: String, keep: Seq[String],
+      mode: String, dir: String, face: String): Unit = {
+    requireCurrent(face)
+    Layouts.assertNotQuiesced(spark, layout, face)
+    Similarity.writeCoded(
+      Similarity.coded(batch, idCol, vecCol, ivf, pq, residual, keep), mode, dir)
+    requireCurrent(face)
+  }
+
+  /** DRIFT-GATED incremental maintenance — the loop FAISS's IndexIVFPQ
+    * leaves to the caller (`add` vs re-`train`): [[append]] the batch
+    * while its quantization error under this generation's codebooks
+    * (`storedErr`) stays within `driftThreshold` × what codebooks
+    * fitted to the batch itself achieve (`freshErr`); above it — the
+    * ingested distribution has left the trained one — retrain on
+    * corpus ∪ batch into `gen<k+1>` and swap the pointer to it.
+    *
+    * Both error terms come from the batch alone (one narrow codegen'd
+    * pass each), so no baseline statistic is stored or trusted.
+    * `corpus` (the CURRENT corpus vectors, pre-batch) is read ONLY on
+    * the rebuild path: a year of in-distribution batches costs a year
+    * of narrow append passes. nlist/m/ks come from this generation, so
+    * a rebuild keeps the geometry and the kind ('pq' or 'rpq'); the
+    * codebooks are the deterministic smallest-id ones, or the
+    * distributed k-means trainers' with `trained = true`.
+    *
+    * A batch of `ks` rows or fewer always APPENDS: its own stand-in
+    * codebooks memorize it exactly (freshErr = 0), so the comparison
+    * would trigger a full corpus retrain on a trickle batch that
+    * carries no evidence about the distribution.
+    *
+    * The rebuild holds this generation's quiesce marker, refuses while
+    * an append is still staging, and swaps `_current` before the marker
+    * lifts — by then every probe and append resolves the new
+    * generation, so there is no gap for an append to land in the old
+    * one. A crash between the generation write and the swap leaves the
+    * marker HELD (appends stay refused): complete by hand
+    * ([[Layouts.swapGenerationPointer]] + [[Layouts.releaseQuiesce]])
+    * or delete the orphan generation and release.
+    */
+  def maintain(corpus: DataFrame, batch: DataFrame, vecCol: String,
+      driftThreshold: Double = 2.0,
+      trained: Boolean = false): AnnIndex.MaintainReport = {
+    require(driftThreshold >= 1.0,
+      s"driftThreshold=$driftThreshold: below 1.0 every batch rebuilds " +
+        "(stored codebooks cannot beat batch-fitted ones on the batch's " +
+        "own distribution)")
+    val (r, k) = successor("maintain")
+    val (nlist, m, ks) = (ivf.length, pq.length, pq(0).length)
+    val storedErr = Similarity.ivfPqDistortion(batch, vecCol, ivf, pq, residual)
+    // bounded probe: limit ks+1, never a full count
+    val tiny = batch.select(col(idCol)).limit(ks + 1).count() <= ks
+    val freshIvf = Similarity.ivfCodebook(batch, idCol, vecCol, nlist)
+    val freshPq =
+      if (residual) Similarity.residualPqCodebooks(batch, idCol, vecCol, freshIvf, m, ks)
+      else Similarity.pqCodebooks(batch, idCol, vecCol, m, ks)
+    val freshErr = Similarity.ivfPqDistortion(batch, vecCol, freshIvf, freshPq, residual)
+    if (tiny || storedErr <= driftThreshold * freshErr) {
+      encodeInto(batch, vecCol, Nil, "append", layout, "maintain")
+      AnnIndex.MaintainReport("append", storedErr, freshErr, layout)
+    } else {
+      // the marker is taken AFTER the decision (the append branch must
+      // not refuse against our own marker), so an append that slipped
+      // in during the decision scans is the caller's corpus-of-record
+      // to re-ship, as with any batch ingested after the corpus snapshot
+      val next = s"gen${k + 1}"
+      val target = s"$r/$next"
+      quiesced("maintain") {
+        val all = corpus.select(col(idCol), col(vecCol))
+          .unionByName(batch.select(col(idCol), col(vecCol)))
+        Similarity.retrainGeneration(residual, nlist, m, ks, all, idCol,
+          vecCol, target, trained)
+        Layouts.swapGenerationPointer(spark, r, next)
+        AnnIndex.MaintainReport("rebuild", storedErr, freshErr, target)
+      }
+    }
+  }
+
+  /** The MONITORING JOB that closes the streaming maintenance loop: the
+    * ingest stream ([[graft.streaming.StreamingSimilarity]]) writes one
+    * drift report per micro-batch to `driftOut`, and this job
+    * thresholds that series and triggers the rebuild — stream + monitor
+    * together do what [[maintain]] does for a hand-driven batch.
+    *
+    * Decision, from the series alone: `baseline` = median of the FIRST
+    * `window` reports (right after the codebooks were trained,
+    * in-distribution by construction), `trailing` = median of the LAST
+    * `window`. Medians, so one noisy micro-batch never triggers a
+    * corpus-wide retrain. REBUILD when `trailing > driftThreshold *
+    * baseline` and the series holds at least `2 * window` reports
+    * (shorter series would compare a series against itself); otherwise
+    * KEEP. The keep path reads one KB-sized row per micro-batch ever
+    * ingested and touches nothing else.
+    *
+    * The rebuild retrains on `corpus` (the full vector corpus — the
+    * caller's system of record; the layout stores only codes) into
+    * `gen<k+1>`, kind and geometry preserved, under this generation's
+    * quiesce marker. Inside that window it writes the FENCE
+    * (`driftOut/_rebuilt`: the max batch id consumed and the new
+    * generation's name), then swaps `_current`, then (with `prune`)
+    * drops the consumed reports ([[Similarity.pruneDriftSeries]]).
+    * Later runs threshold only batches after the fence; until a fresh
+    * window accumulates they return `keep` with `batches = 0` and NaN
+    * medians. A rebuild REFUSES when `gen<k+1>` already exists (a
+    * crashed rebuild's unfenced orphan, or a live generation): the
+    * operator deletes it and re-runs, or fences by hand.
+    *
+    * CRASH RECOVERY, forward-only: the fence is the rebuild's commit
+    * record. A run that finds a fence naming a generation numerically
+    * AHEAD of this one (and on disk) died in the fence→swap window: it
+    * completes the swap, releases the marker the dead run left on this
+    * generation, and returns `action = "swap"` — never a second fold.
+    * A fence at or behind the pointer is history (a compaction or a
+    * [[maintain]] rebuild advances the pointer without touching the
+    * fence) and never swaps the pointer backward. A crash after the
+    * swap but before the marker release leaves a stale marker on the
+    * superseded generation — harmless, and reclaimed with it by
+    * [[Layouts.vacuumGenerations]].
+    */
+  def maintainFromDriftSeries(driftOut: String, corpus: DataFrame,
+      vecCol: String, window: Int = 3, driftThreshold: Double = 2.0,
+      trained: Boolean = false,
+      prune: Boolean = false): AnnIndex.DriftSeriesReport = {
+    require(window >= 1, s"window=$window: the medians need at least one report")
+    require(driftThreshold >= 1.0,
+      s"driftThreshold=$driftThreshold: below 1.0 an in-distribution " +
+        "series (trailing ~= baseline) would rebuild on noise")
+    val (r, k) = successor("maintainFromDriftSeries")
+    val fence = Similarity.readFence(spark, driftOut)
+    val pendingSwap = fence.flatMap(_._2).filter(g =>
+      Layouts.generationIndex(g).exists(_ > k) && Layouts.exists(spark, s"$r/$g"))
+    def keep(baseline: Double, trailing: Double, batches: Long) =
+      AnnIndex.DriftSeriesReport("keep", baseline, trailing, batches, layout)
+    pendingSwap match {
+      case Some(g) =>
+        Layouts.swapGenerationPointer(spark, r, g)
+        Layouts.releaseQuiesce(spark, layout)
+        return AnnIndex.DriftSeriesReport("swap", Double.NaN, Double.NaN, 0, s"$r/$g")
+      case None =>
+    }
+    // one double per micro-batch ever ingested — bounded by batch
+    // count, never by data volume; an execution-time failure (a torn
+    // part file a killed report writer left) names the contract
+    val fullSeries =
+      try Similarity.readDriftSeries(spark, driftOut)
+        .select(col("ingest_batch"), col("pq_err").cast("double"))
+        .collect().map(r => (r.getLong(0), r.getDouble(1)))
+      catch {
+        case e: org.apache.spark.SparkException =>
+          throw new IllegalStateException(
+            s"the drift series at $driftOut failed mid-read — a torn " +
+              "per-batch report (killed writer) or a foreign file; " +
+              "delete the offending ingest_batch directory (its batch " +
+              "will rewrite it on replay) and re-run", e)
+      }
+    // zero reports is legitimate only after a fenced rebuild pruned
+    // them; an unfenced empty series means the stream never committed
+    if (fullSeries.isEmpty) {
+      require(fence.isDefined,
+        s"the drift series at $driftOut holds no reports — nothing to " +
+          "threshold (has the ingest stream committed a batch?)")
+      return keep(Double.NaN, Double.NaN, 0)
+    }
+    // reports at or before the fence describe an OLD generation's
+    // codebooks — thresholding them would re-fire the retrain forever
+    val fencedThrough = fence.map(_._1).getOrElse(Long.MinValue)
+    val series = fullSeries.filter(_._1 > fencedThrough).map(_._2)
+    if (series.isEmpty) return keep(Double.NaN, Double.NaN, 0)
+    def median(xs: Array[Double]): Double = {
+      val s = xs.sorted
+      val n = s.length
+      if (n % 2 == 1) s(n / 2) else (s(n / 2 - 1) + s(n / 2)) / 2.0
+    }
+    val baseline = median(series.take(window))
+    val trailing = median(series.takeRight(window))
+    if (series.length < 2 * window || trailing <= driftThreshold * baseline)
+      return keep(baseline, trailing, series.length)
+    val next = s"gen${k + 1}"
+    val target = s"$r/$next"
+    require(!Layouts.exists(spark, target),
+      s"maintainFromDriftSeries: $target already exists — either a " +
+        "crashed rebuild left an unfenced generation (delete it and " +
+        "re-run, or write the fence by hand if its pointer swap " +
+        "already happened) or the path is a live generation; the " +
+        "monitor never overwrites it.")
+    quiesced("maintainFromDriftSeries") {
+      Similarity.retrainGeneration(residual, ivf.length, pq.length,
+        pq(0).length, corpus.select(col(idCol), col(vecCol)), idCol, vecCol,
+        target, trained)
+      // the fence AFTER the generation: it is the commit record the
+      // recovery above keys on; a crash before it leaves an unfenced
+      // gen<k+1>, which the exists-refusal surfaces on the re-run
+      Layouts.writeSidecar(spark, s"$driftOut/${Similarity.RebuiltFence}",
+        Similarity.RebuiltFenceSchema,
+        Seq(Row(fullSeries.map(_._1).max, next)))
+      Layouts.swapGenerationPointer(spark, r, next)
+      if (prune) Similarity.pruneDriftSeries(spark, driftOut)
+      AnnIndex.DriftSeriesReport("rebuild", baseline, trailing,
+        series.length, target)
+    }
+  }
+
+  /** COMPACT the generation — the LSM small-files pay-down: daily
+    * appends and streamed increments leave one new file per touched
+    * cell per batch, and every probe pays their opens. Compaction folds
+    * base + committed increments into `gen<k+1>`, rewriting the codes
+    * (never re-encoding: no vectors read, no codebooks applied)
+    * hash-repartitioned by cell, so each cell is one file, and swaps
+    * the pointer to it. Returns the new generation's path. Cost: one
+    * shuffle of the code rows (~4-40 B/row).
+    *
+    * `dropIds` is the TOMBSTONE set — one id column
+    * ([[graft.ops.Cdc.snapshotDiff]]'s `removed` class is the natural
+    * producer): matching rows are retired during the rewrite (an
+    * unhinted anti-join on `idCol` — AQE broadcasts a small set, a bulk
+    * takedown degrades to a shuffle join), so a deleted document never
+    * again surfaces in a top-k.
+    *
+    * The fold holds this generation's quiesce marker (appends refuse
+    * curated and replay into the new generation after the swap) and
+    * refuses while an append is still staging; superseded generations
+    * are reclaimed by [[Layouts.vacuumGenerations]]. The sidecar is
+    * written FIRST: a failed data rewrite leaves a sidecar-only
+    * `gen<k+1>` (detectable), never a data-only one, and the pointer
+    * stays put, so a re-run clears and rewrites it.
+    */
+  def compact(dropIds: Option[DataFrame] = None): String = {
+    val (r, k) = successor("compact")
+    val next = s"gen${k + 1}"
+    val dst = s"$r/$next"
+    quiesced("compact") {
+      val base = spark.read.parquet(layout)
+      val rows = Layouts.withIncrements(spark, base, layout,
+        base.columns.toIndexedSeq, excludeBatchId = None)
+      // built (and its schema require fired) before dst is touched
+      val compacted = Layouts.dropTombstones(rows, dropIds, idCol, "compact")
+      Layouts.delete(spark, dst)
+      Similarity.writeIvfPqCodebooks(spark, dst, ivf, pq, kind)
+      Similarity.writeCoded(compacted.repartition(col(AnnIndex.Cell)), "append", dst)
+      Layouts.swapGenerationPointer(spark, r, next)
+    }
+    dst
+  }
+
+  /** Refuse once `_current` has moved off this handle's generation (a
+    * plain-layout handle has no pointer and is always current). A stale
+    * handle must never write into a superseded generation: its rows
+    * would never be read again.
+    */
+  private[graft] def requireCurrent(face: String): Unit =
+    root.foreach { r =>
+      val live = Layouts.currentGeneration(spark, r)
+      if (live != layout)
+        throw new IllegalStateException(
+          s"$face: the generation pointer under $r moved off $layout (it " +
+            s"now names $live) — this handle is stale; reopen the index " +
+            "with AnnIndex.open and retry")
+    }
+
+  /** The store root and this generation's `k` (a rebuild or compaction
+    * writes `gen<k+1>`); refuses a plain-layout handle and a stale one.
+    */
+  private def successor(face: String): (String, Long) = {
+    val r = root.getOrElse(throw new IllegalStateException(
+      s"$face: $layout is a plain layout, not a pointered store root — " +
+        "rebuilds and compactions write gen<k+1> next to the current " +
+        "generation and swap the pointer to it; write the layout as " +
+        "<root>/gen0, initialise the root with " +
+        "Layouts.swapGenerationPointer(root, \"gen0\") and open the root"))
+    requireCurrent(face)
+    val gen = layout.stripPrefix(r + "/")
+    (r, Layouts.generationIndex(gen).getOrElse(
+      throw new IllegalArgumentException(
+        s"$face: the pointered lifecycle derives the next generation " +
+          "from the current one's name, which must match gen<k>; " +
+          s"'$gen' (under $r) does not — re-point " +
+          s"${Layouts.GenerationPointer} at a gen<k>-named generation")))
+  }
+
+  /** Run `body` holding this generation's quiesce marker: appends
+    * refuse meanwhile, and an append that passed its marker check
+    * before the acquire and is still staging fails the step instead of
+    * being retired with the old generation. Every lifecycle swap
+    * happens under the live generation's marker, so the pointer check
+    * made while holding it cannot go stale. Released on any exit — a
+    * failed step leaves this generation intact and appendable.
+    */
+  private def quiesced[T](face: String)(body: => T): T = {
+    Layouts.acquireQuiesce(spark, layout, face)
+    try {
+      requireCurrent(face)
+      Layouts.assertNoInflightIncrements(spark, layout, face)
+      body
+    } finally Layouts.releaseQuiesce(spark, layout)
+  }
 }
 
 object AnnIndex {
@@ -170,18 +522,38 @@ object AnnIndex {
   /** The PQ code column of every IVF-PQ layout. */
   private[ops] val Code = "code"
 
-  /** Open the index at `path` — a layout or a pointered store root
-    * ([[Layouts.GenerationPointer]]). `idCol` names the layout's id
-    * column.
+  /** The append-or-rebuild decision of an [[AnnIndex.maintain]] call:
+    * `action` is `"append"` or `"rebuild"`, `storedErr`/`freshErr` the
+    * batch's mean ADC reconstruction error under the stored codebooks
+    * vs under codebooks derived from the batch itself, and `layout`
+    * the generation now holding the batch (this one on append,
+    * `gen<k+1>` on rebuild).
     */
-  def open(spark: SparkSession, path: String, idCol: String): AnnIndex =
-    at(spark, Similarity.resolveLayout(spark, path), idCol)
+  case class MaintainReport(action: String, storedErr: Double,
+      freshErr: Double, layout: String)
 
-  /** [[open]] without following a generation pointer — for callers
-    * that already hold the generation directory.
+  /** The verdict of an [[AnnIndex.maintainFromDriftSeries]] call:
+    * `action` is `"keep"`, `"rebuild"` or `"swap"` (a crashed
+    * rebuild's pointer swap completed), `baselineErr`/`trailingErr` the
+    * medians of the series' first and last `window` post-fence reports,
+    * `batches` the post-fence series length, and `layout` the
+    * generation now current.
     */
-  private[ops] def at(spark: SparkSession, layout: String,
-      idCol: String): AnnIndex = {
+  case class DriftSeriesReport(action: String, baselineErr: Double,
+      trailingErr: Double, batches: Long, layout: String)
+
+  /** Open the index at `path` — a layout or a pointered store root
+    * ([[Layouts.GenerationPointer]]), which resolves to the generation
+    * `_current` names now. `idCol` names the layout's id column.
+    */
+  def open(spark: SparkSession, path: String, idCol: String): AnnIndex = {
+    val layout = Similarity.resolveLayout(spark, path)
+    // a pointered root resolves below itself; a plain layout to itself
+    read(spark, layout, idCol, Some(path).filter(_ => layout != path))
+  }
+
+  private def read(spark: SparkSession, layout: String,
+      idCol: String, root: Option[String]): AnnIndex = {
     require(Similarity.hasIvfPqCodebooks(spark, layout),
       s"no _codebooks sidecar under $layout — the layout predates the " +
         "sidecar or was hand-built; rewrite it with writeIvfPqPartitioned " +
@@ -214,7 +586,7 @@ object AnnIndex {
       pqRows.filter(_.getInt(1) == m).sortBy(_.getLong(2))
         .map(_.getSeq[Double](3).toArray)
     }
-    new AnnIndex(spark, layout, idCol, kind, ivf, pq)
+    new AnnIndex(spark, layout, idCol, kind, ivf, pq, root)
   }
 
   private def requireNprobe(nprobe: Int): Unit =

@@ -214,7 +214,7 @@ object Bloom {
   }
 
   /** Fold a Bloom index's committed increments into the base row at
-    * `dst` — the [[Similarity.compactIvfPqLayout]] play for the gate's
+    * `dst` — the [[AnnIndex.compact]] play for the gate's
     * history (a year of per-batch rows is a listing tax on every
     * tick). Holds the quiesce marker for the fold; the caller swaps
     * its pointer (LSM convention).

@@ -350,7 +350,7 @@ object Dedup {
 
   /** COMPACT an appended signature index: daily [[appendNearDupIndex]]
     * batches leave one new file per band per day (the
-    * [[graft.ops.Similarity.compactIvfPqLayout]] small-files tax, text
+    * [[graft.ops.AnnIndex.compact]] small-files tax, text
     * side). Rewrites the (id, key) rows hash-repartitioned by band —
     * one file per band directory, nothing re-hashed — into a NEW
     * layout, carrying the `_meta` banding sidecar. The caller swaps
@@ -378,9 +378,9 @@ object Dedup {
     Layouts.acquireQuiesce(spark, src, "compactNearDupIndex")
     try {
     // the marker stops NEW appends; this catches the one that passed
-    // its marker check before we acquired (see compactIvfPqLayout)
+    // its marker check before we acquired (see AnnIndex.compact)
     Layouts.assertNoInflightIncrements(spark, src, "compactNearDupIndex")
-    // meta read + sidecar write FIRST (the compactIvfPqLayout rule): a
+    // meta read + sidecar write FIRST (the AnnIndex.compact rule): a
     // corrupt src _meta fails before dst is touched, and a failure in
     // the (much larger) data rewrite leaves a meta-only dst —
     // detectable — instead of a data-only dst that masquerades as a

@@ -179,7 +179,7 @@ private[graft] object Layouts {
       caller: String): Unit = {
     val layoutRoot = new org.apache.hadoop.fs.Path(path)
     val fs = layoutRoot.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // the BATCH append faces (appendIvfPq, appendNearDupIndex) write
+    // the BATCH append faces (AnnIndex.append, appendNearDupIndex) write
     // mode('append') at the layout root, staging under
     // <layout>/_temporary — an append that passed its marker check
     // before the compactor acquired is just as in-flight there as a
@@ -272,6 +272,18 @@ private[graft] object Layouts {
     name
   }
 
+  /** The `k` of a `gen<k>` generation name (None for any other name) —
+    * the naming convention the pointered lifecycle derives its next
+    * generation from and vacuum orders generations by.
+    */
+  def generationIndex(name: String): Option[Long] = {
+    val Gen = "gen(\\d+)".r
+    name match {
+      case Gen(k) => Some(k.toLong)
+      case _ => None
+    }
+  }
+
   /** The full path of the generation `root/_current` points at. */
   def currentGeneration(spark: SparkSession, root: String): String =
     s"$root/${currentGenerationName(spark, root)}"
@@ -293,10 +305,9 @@ private[graft] object Layouts {
     val live = currentGenerationName(spark, root)
     val rootPath = new org.apache.hadoop.fs.Path(root)
     val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val Gen = "gen(\\d+)".r
     val gens = fs.listStatus(rootPath).filter(_.isDirectory)
       .map(_.getPath.getName)
-      .collect { case n @ Gen(k) => (k.toLong, n) }
+      .flatMap(n => generationIndex(n).map(_ -> n))
       .sortBy(-_._1)
     val spare = (gens.take(keep).map(_._2) :+ live) ++ alsoKeep
     val doomed = gens.map(_._2).filterNot(spare.contains).sorted

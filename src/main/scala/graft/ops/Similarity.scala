@@ -761,7 +761,7 @@ object Similarity {
     * same real number with a different (equally oracle-pinned) IEEE
     * association.
     */
-  private def coded(df: DataFrame, idCol: String, vecCol: String,
+  private[ops] def coded(df: DataFrame, idCol: String, vecCol: String,
       ivfCb: IvfCodebook, cb: PqCodebooks, residual: Boolean,
       keep: Seq[String]): DataFrame = {
     val ids = col(idCol) +: keep.map(col)
@@ -778,7 +778,7 @@ object Similarity {
   }
 
   /** Write a coded frame as an IVF-PQ layout: `partitionBy(cell)`. */
-  private def writeCoded(df: DataFrame, mode: String, out: String): Unit =
+  private[ops] def writeCoded(df: DataFrame, mode: String, out: String): Unit =
     df.write.mode(mode).partitionBy(AnnIndex.Cell).parquet(out)
 
   /** Write the IVF-PQ AT-REST layout: (id, cell, code) rows
@@ -787,7 +787,7 @@ object Similarity {
     * ([[writeIvfPartitioned]]'s pruning with [[pqAdcTopKCoded]]'s
     * scan). Overwrite clears the whole layout (any prior appends
     * included) — the full-rebuild face; daily ingest uses
-    * [[appendIvfPq]].
+    * [[AnnIndex.append]].
     *
     * `keep` carries extra METADATA columns (language, source, license
     * tier, ...) into the layout, making filtered search possible at
@@ -809,9 +809,8 @@ object Similarity {
     * it, the `_SUCCESS` convention). A layout that carries its own
     * codebooks is SELF-CONTAINED: a fresh session probes it from the
     * files alone ([[AnnIndex.open]]) — no retraining, no
-    * out-of-band codebook hand-off — and [[appendIvfPq]] can verify
-    * the caller's codebooks against the stored ones instead of
-    * trusting them. KB-sized: nlist x dim + m x ks x dsub doubles.
+    * out-of-band codebook hand-off — and every append encodes with the
+    * stored codebooks instead of trusting a caller's. KB-sized: nlist x dim + m x ks x dsub doubles.
     *
     * `pqKind` tags the quantizer the codes were produced by — `"pq"`
     * (raw-vector PQ, [[writeIvfPqPartitioned]]) or `"rpq"`
@@ -856,229 +855,6 @@ object Similarity {
       layout: String): Boolean =
     Layouts.exists(spark, layout + "/_codebooks")
 
-  private def sameCodebooks(idx: AnnIndex,
-      ivfCb: IvfCodebook, pqCb: PqCodebooks): Boolean =
-    idx.ivf.length == ivfCb.length &&
-      idx.ivf.zip(ivfCb).forall { case ((ia, va, na), (ib, vb, nb)) =>
-        ia == ib && na == nb && java.util.Arrays.equals(va, vb) } &&
-      idx.pq.length == pqCb.length &&
-      idx.pq.zip(pqCb).forall { case (ta, tb) =>
-        ta.length == tb.length &&
-          ta.zip(tb).forall { case (ca, cb) => java.util.Arrays.equals(ca, cb) }
-      }
-
-  /** The file-additive append shared by [[appendIvfPq]] (raw codes)
-    * and [[appendIvfPqResidual]] (residual codes): refuse while a
-    * compaction holds the quiesce marker, verify the caller's
-    * codebooks — and the kind — against the sidecar when the layout
-    * has one, then encode only the batch into the cell directories.
-    */
-  private def appendCoded(batch: DataFrame, idCol: String, vecCol: String,
-      ivfCb: IvfCodebook, cb: PqCodebooks, residual: Boolean, out: String,
-      keep: Seq[String], face: String): Unit = {
-    val spark = batch.sparkSession
-    // refuse while a compaction holds the layout's quiesce marker: an
-    // append racing the increment fold is the documented race, made
-    // mechanical (the caller retries after the fold)
-    Layouts.assertNotQuiesced(spark, out, face)
-    // absence of the sidecar (pre-sidecar or hand-built layout) skips
-    // the check — decided by an explicit filesystem probe, so a
-    // present-but-corrupt sidecar FAILS (curated, in AnnIndex.open)
-    // instead of silently skipping the validation it exists to enforce
-    if (hasIvfPqCodebooks(spark, out)) {
-      val stored = AnnIndex.at(spark, out, idCol)
-      // appending one kind's codes into the other's layout silently
-      // poisons every probe
-      if (stored.residual != residual)
-        throw new IllegalStateException(
-          s"$face: the layout at $out holds '${stored.kind}' codes — " +
-            (if (stored.residual) "append with appendIvfPqResidual"
-             else "append with appendIvfPq"))
-      require(sameCodebooks(stored, ivfCb, cb),
-        s"$face: the codebooks passed do not match the ones stored with " +
-          s"the layout at $out — an append encoded with different " +
-          "codebooks silently mis-cells the batch; read them back with " +
-          "AnnIndex.open or rebuild the layout")
-    }
-    writeCoded(coded(batch, idCol, vecCol, ivfCb, cb, residual, keep),
-      "append", out)
-  }
-
-  /** INCREMENTAL maintenance of a [[writeIvfPqPartitioned]] layout —
-    * the daily-ingest shape for vectors (the q131 near-dup-index play):
-    * encode ONLY the new batch with the EXISTING codebooks and append
-    * its (id, cell, code) rows into the cell directories. The corpus
-    * side is never read, never re-encoded and never shuffled — the
-    * append costs one narrow pass over the batch plus new files in the
-    * cells the batch lands in (existing files untouched; parquet
-    * appends are file-additive). Probes over corpus+increment then
-    * answer from the merged listing with the SAME pruning
-    * ([[AnnIndex.probe]]) and no retraining.
-    *
-    * The codebooks MUST be the ones the layout was written with —
-    * mixing codebooks silently mis-cells the batch, so when the layout
-    * carries its `_codebooks` sidecar ([[writeIvfPqPartitioned]]
-    * writes one) the append VERIFIES the caller's codebooks against
-    * the stored ones and fails fast on a mismatch (exact comparison —
-    * doubles round-trip parquet bit-for-bit). A sidecar-less layout
-    * (pre-sidecar or hand-built) skips the check. Quantization error
-    * drifts as the ingested distribution leaves the trained one; the
-    * rebuild cadence (re-train + [[writeIvfPqPartitioned]]) is the
-    * caller's policy, exactly as in FAISS's IndexIVFPQ `add` vs
-    * re-`train` — and [[ivfPqDistortion]] / [[quantizationDrift]] is
-    * the number to set that policy by (mean ADC reconstruction error,
-    * batch vs trained corpus).
-    */
-  def appendIvfPq(batch: DataFrame, idCol: String, vecCol: String,
-      ivfCb: IvfCodebook, pqCb: PqCodebooks, out: String,
-      keep: Seq[String] = Nil): Unit =
-    appendCoded(batch, idCol, vecCol, ivfCb, pqCb, residual = false, out,
-      keep, "appendIvfPq")
-
-  /** [[appendIvfPq]] for the STREAMING ingest loop (the
-    * [[graft.ops.Dedup.appendNearDupIndexIncrement]] play for
-    * vectors): the batch's (id, cell, code) rows land in a directory
-    * the batch OWNS (`_increments/ingest_batch=<id>`, cell-partitioned
-    * inside it, overwritten wholesale), so a crash-replay rewrites the
-    * same rows — plain `mode("append")` would duplicate them, and a
-    * duplicated id in an ANN layout surfaces twice in a top-k.
-    * Underscore-prefixed, so plain reads skip increments;
-    * [[AnnIndex.probe]] reads every committed one, and
-    * [[compactIvfPqLayout]] folds them into the next base generation.
-    *
-    * The layout must be self-contained (a `_codebooks` sidecar): a
-    * stream is automation, and automation may not silently skip the
-    * codebook check a hand-driven append can opt out of. KIND-AWARE:
-    * the sidecar's tag picks the encoder — raw codes into a 'pq'
-    * layout, residual codes into an 'rpq' one — so a stream can never
-    * poison a residual layout with raw codes or vice versa.
-    */
-  def appendIvfPqIncrement(batch: DataFrame, idCol: String, vecCol: String,
-      out: String, batchId: Long, keep: Seq[String] = Nil): Unit = {
-    val spark = batch.sparkSession
-    // a pointered store root resolves to the CURRENT generation per
-    // batch — the first micro-batch after a pointered rebuild's swap
-    // lands (and re-encodes) in the new generation automatically
-    val layout = resolveLayout(spark, out)
-    // the streaming append face refuses mid-compaction like the batch
-    // faces: the failed micro-batch replays from the checkpoint after
-    // the fold (idempotent increment directories make that safe)
-    Layouts.assertNotQuiesced(spark, layout, "appendIvfPqIncrement")
-    val idx = AnnIndex.at(spark, layout, idCol)
-    writeCoded(coded(batch, idCol, vecCol, idx.ivf, idx.pq, idx.residual, keep),
-      "overwrite", Layouts.incrementDir(layout, batchId))
-  }
-
-  /** The append-or-rebuild decision of a [[maintainIvfPq]] call:
-    * `action` is `"append"` or `"rebuild"`, `storedErr`/`freshErr` the
-    * batch's mean ADC reconstruction error under the layout's stored
-    * codebooks vs under codebooks derived from the batch itself, and
-    * `layout` the path now holding the batch (the original layout on
-    * append, `rebuildAt` on rebuild — the caller swaps its pointer to
-    * it, LSM convention).
-    */
-  case class MaintainReport(action: String, storedErr: Double,
-      freshErr: Double, layout: String)
-
-  /** DRIFT-GATED incremental maintenance — the composition
-    * [[appendIvfPq]] and [[ivfPqDistortion]] were built for, and the
-    * loop FAISS's IndexIVFPQ leaves to the caller (`add` vs
-    * re-`train`): append the batch while its quantization error under
-    * the STORED codebooks stays close to what codebooks fitted to the
-    * batch itself would achieve; once the stored tables describe the
-    * batch materially worse than its own do — the ingested
-    * distribution has left the trained one — retrain on corpus ∪ batch
-    * and write a NEW generation at `rebuildAt`.
-    *
-    * The decision is self-contained: both error terms come from the
-    * batch alone (one narrow codegen'd pass each, only (sum, count)
-    * partials leave executors), so no baseline statistic needs storing
-    * or trusting. `storedErr <= driftThreshold * freshErr` appends;
-    * above it rebuilds. A threshold of 2.0 tolerates the stored tables
-    * being up to 2× worse than batch-fitted ones before paying a
-    * rebuild.
-    *
-    * `corpus` is the CURRENT corpus vectors (pre-batch) — evaluated
-    * ONLY on the rebuild path (appends never touch it), which is what
-    * makes the steady state cheap: a year of in-distribution batches
-    * costs a year of narrow append passes, and the corpus-wide retrain
-    * runs exactly when the drift signal says the index stopped
-    * describing the data. nlist/m/ks are DERIVED from the stored
-    * codebooks, so a rebuild preserves the layout's geometry; the
-    * codebooks are the deterministic smallest-id ones (the
-    * oracle-reproducible rule) — swap in [[trainIvfCodebook]] /
-    * [[trainPqCodebooks]] outputs by rebuilding manually when recall
-    * matters more than reproducibility.
-    *
-    * QUIESCE WINDOW CAVEAT (rebuild path): the marker is released when
-    * this call returns, BEFORE the caller swaps its pointer to
-    * `rebuildAt` — an append landing in that gap writes into the old
-    * generation and silently vanishes at the swap. Keep appends
-    * quiesced until the swap, or use [[maintainPointedIvfPq]], which
-    * swaps the generation pointer INSIDE the marker window.
-    *
-    * A batch of `ks` rows or fewer always APPENDS: its own stand-in
-    * codebooks memorize it exactly (freshErr = 0), so the comparison
-    * would otherwise trigger a full corpus retrain on a trickle batch
-    * that carries no evidence about the distribution. The drift
-    * question is asked again on the next large-enough batch.
-    *
-    * KIND-AWARE: the sidecar's 'pq'/'rpq' tag picks the quantizer —
-    * a residual layout is scored by residual reconstruction error,
-    * appended with residual codes, and rebuilt as a new 'rpq'
-    * generation (spec-pinned for both kinds).
-    */
-  def maintainIvfPq(spark: org.apache.spark.sql.SparkSession,
-      layout: String, corpus: DataFrame, batch: DataFrame,
-      idCol: String, vecCol: String, rebuildAt: String,
-      driftThreshold: Double = 2.0, trained: Boolean = false): MaintainReport =
-    maintainIvfPqCore(spark, layout, corpus, batch, idCol, vecCol,
-      rebuildAt, driftThreshold, trained, afterRebuild = () => ())
-
-  /** [[maintainIvfPq]] over a POINTERED store root
-    * ([[Layouts.GenerationPointer]]): the live generation is resolved
-    * through `root/_current`, the rebuild target is the next
-    * `gen<k+1>` name, and on rebuild the pointer is swapped INSIDE the
-    * quiesce window — closing the race [[maintainIvfPq]]'s caveat
-    * documents: by the time the marker lifts, every probe and append
-    * face ([[resolveLayout]]) already answers from the new generation,
-    * so there is no gap for an append to land in the superseded one.
-    *
-    * Crash discipline: a crash between the generation write and the
-    * swap leaves the marker HELD (appends stay refused — no data
-    * loss); the operator inspects, then either completes by hand
-    * ([[Layouts.swapGenerationPointer]] + [[Layouts.releaseQuiesce]])
-    * or deletes the orphan generation and releases. The automated
-    * drift-series face ([[maintainPointedFromDriftSeries]]) recovers
-    * this window mechanically via its fence record.
-    */
-  def maintainPointedIvfPq(spark: org.apache.spark.sql.SparkSession,
-      root: String, corpus: DataFrame, batch: DataFrame,
-      idCol: String, vecCol: String,
-      driftThreshold: Double = 2.0, trained: Boolean = false): MaintainReport = {
-    val gen = Layouts.currentGenerationName(spark, root)
-    val next = nextGenerationName(root, gen)
-    maintainIvfPqCore(spark, s"$root/$gen", corpus, batch, idCol, vecCol,
-      s"$root/$next", driftThreshold, trained,
-      afterRebuild = () => Layouts.swapGenerationPointer(spark, root, next))
-  }
-
-  /** `gen<k>` -> `gen<k+1>` — the naming convention the pointered
-    * lifecycle derives its rebuild targets from.
-    */
-  private def nextGenerationName(root: String, gen: String): String = {
-    val Gen = "gen(\\d+)".r
-    gen match {
-      case Gen(k) => s"gen${k.toLong + 1}"
-      case _ => throw new IllegalArgumentException(
-        "the pointered maintenance lifecycle derives the next " +
-          "generation from the current one's name, which must match " +
-          s"gen<k>; '$gen' (under $root) does not — re-point " +
-          s"${Layouts.GenerationPointer} at a gen<k>-named generation " +
-          "or use the explicit-rebuildAt faces")
-    }
-  }
-
   /** Kind-aware retrain + new-generation write shared by every
     * rebuild path: geometry (nlist, m, ks) comes from the superseded
     * generation, codebooks from the deterministic smallest-id rule
@@ -1088,7 +864,7 @@ object Similarity {
     * [[trainResidualPqCodebooks]], strictly lower distortion on
     * drifted corpora, spec-pinned).
     */
-  private def retrainGeneration(residual: Boolean,
+  private[ops] def retrainGeneration(residual: Boolean,
       nlist: Int, m: Int, ks: Int, all: DataFrame,
       idCol: String, vecCol: String, rebuildAt: String,
       trained: Boolean): Unit = {
@@ -1108,75 +884,6 @@ object Similarity {
     }
   }
 
-  private def maintainIvfPqCore(spark: org.apache.spark.sql.SparkSession,
-      layout: String, corpus: DataFrame, batch: DataFrame,
-      idCol: String, vecCol: String, rebuildAt: String,
-      driftThreshold: Double, trained: Boolean,
-      afterRebuild: () => Unit): MaintainReport = {
-    require(driftThreshold >= 1.0,
-      s"driftThreshold=$driftThreshold: below 1.0 every batch rebuilds " +
-        "(stored codebooks cannot beat batch-fitted ones on the batch's " +
-        "own distribution)")
-    require(layout != rebuildAt,
-      "maintainIvfPq writes the rebuilt generation at rebuildAt; swap " +
-        "the pointer after (an in-place rewrite would clobber the files " +
-        "it reads)")
-    // KIND-AWARE like the streaming append: the sidecar's tag picks
-    // the quantizer — a residual layout's drift is its residual
-    // reconstruction error, its append encodes residual codes, and its
-    // rebuild writes a new 'rpq' generation
-    val idx = AnnIndex.at(spark, layout, idCol)
-    val (residual, ivfCb, pqCb) = (idx.residual, idx.ivf, idx.pq)
-    val (nlist, m, ks) = (ivfCb.length, pqCb.length, pqCb(0).length)
-    val storedErr = ivfPqDistortion(batch, vecCol, ivfCb, pqCb, residual)
-    // a batch of <= ks rows is MEMORIZED by its own stand-in codebooks
-    // (every vector is an entry -> freshErr = 0), so the comparison
-    // would rebuild on any nonzero storedErr — a full corpus retrain
-    // triggered by a trickle batch carrying no distribution evidence.
-    // Tiny batches append unconditionally; the drift question is asked
-    // again when a batch large enough to answer it arrives. (Bounded
-    // probe: limit ks+1, never a full count.)
-    val tiny = batch.select(col(idCol)).limit(ks + 1).count() <= ks
-    val freshIvf = ivfCodebook(batch, idCol, vecCol, nlist)
-    val freshPq =
-      if (residual) residualPqCodebooks(batch, idCol, vecCol, freshIvf, m, ks)
-      else pqCodebooks(batch, idCol, vecCol, m, ks)
-    val freshErr = ivfPqDistortion(batch, vecCol, freshIvf, freshPq, residual)
-    if (tiny || storedErr <= driftThreshold * freshErr) {
-      appendCoded(batch, idCol, vecCol, ivfCb, pqCb, residual, layout,
-        Nil, "maintainIvfPq")
-      MaintainReport("append", storedErr, freshErr, layout)
-    } else {
-      // hold the layout's quiesce marker for the retrain (the
-      // maintainFromDriftSeries discipline): a stream batch landing in
-      // the OLD generation mid-retrain would vanish at the pointer
-      // swap; with the marker it fails curated and replays after. The
-      // marker is taken AFTER the decision — the append branch must
-      // not refuse against our own marker — so an append that slipped
-      // in during the decision scans is the caller's corpus-of-record
-      // to re-ship, exactly as with any batch ingested after the
-      // retrain's corpus snapshot.
-      Layouts.acquireQuiesce(spark, layout, "maintainIvfPq")
-      try {
-        // the handshake's second half, exactly as the compactors do
-        // it: the marker stops NEW appends; this catches the one that
-        // passed its check before we acquired and is still staging —
-        // letting it drain (the caller retries) beats retiring its
-        // rows with the pointer swap
-        Layouts.assertNoInflightIncrements(spark, layout, "maintainIvfPq")
-        val all = corpus.select(col(idCol), col(vecCol))
-          .unionByName(batch.select(col(idCol), col(vecCol)))
-        retrainGeneration(residual, nlist, m, ks, all, idCol, vecCol,
-          rebuildAt, trained)
-        // still inside the quiesce window: the pointered face swaps
-        // _current here, so no append can land in the old generation
-        // between the rebuild and the swap
-        afterRebuild()
-        MaintainReport("rebuild", storedErr, freshErr, rebuildAt)
-      } finally Layouts.releaseQuiesce(spark, layout)
-    }
-  }
-
   /** The drift series a [[graft.streaming.StreamingSimilarity]] ingest
     * loop writes (`driftOut` — one row per micro-batch: the batch's
     * mean ADC reconstruction error under the layout's STORED
@@ -1192,7 +899,7 @@ object Similarity {
     * fails ANALYSIS (empty/unschematizable directory) fails here with
     * a curated message; execution-time corruption (a torn part file)
     * surfaces when the returned frame is consumed —
-    * [[maintainFromDriftSeries]] wraps its collect with the curated
+    * [[AnnIndex.maintainFromDriftSeries]] wraps its collect with the curated
     * recovery hint (delete the torn batch directory; its replay
     * rewrites it).
     */
@@ -1234,147 +941,11 @@ object Similarity {
     raw.orderBy(col("ingest_batch"))
   }
 
-  /** The verdict of a [[maintainFromDriftSeries]] call: `action` is
-    * `"keep"` or `"rebuild"`, `baselineErr`/`trailingErr` the medians
-    * of the series' first and last `window` drift reports, `batches`
-    * the series length, and `layout` the path now current (the
-    * original layout on keep, `rebuildAt` on rebuild — the caller
-    * swaps its pointer to it, LSM convention).
-    */
-  case class DriftSeriesReport(action: String, baselineErr: Double,
-      trailingErr: Double, batches: Long, layout: String)
-
-  /** The MONITORING JOB that closes the ANN maintenance loop — the
-    * composition [[graft.streaming.StreamingSimilarity]]'s scaladoc
-    * defers to the caller: the ingest stream writes one drift report
-    * per micro-batch (`driftOut`), and this job thresholds that series
-    * and triggers the rebuild, so stream + monitor together implement
-    * what [[maintainIvfPq]] does for a hand-driven batch.
-    *
-    * Decision, self-contained from the series alone (no baseline
-    * statistic stored or trusted): `baseline` = median of the FIRST
-    * `window` reports — the errors right after the codebooks were
-    * trained, in-distribution by construction — and `trailing` =
-    * median of the LAST `window`. Medians, not single batches: one
-    * noisy micro-batch (a small or skewed file) must not trigger a
-    * corpus-wide retrain. REBUILD when `trailing >
-    * driftThreshold * baseline` and the series holds at least
-    * `2 * window` reports (shorter series would compare overlapping
-    * windows — a series against itself); otherwise KEEP.
-    *
-    * On rebuild the job takes the layout's quiesce marker
-    * ([[graft.ops.Layouts.acquireQuiesce]]) for the whole retrain, so
-    * the live stream's appends fail curated and replay from the
-    * checkpoint into the NEW generation after the caller swaps the
-    * pointer — without the marker, a batch appended to the old
-    * generation mid-retrain would silently vanish at the swap.
-    * `corpus` is the CURRENT full vector corpus (base + everything
-    * ingested — the caller's system of record for raw vectors; the
-    * layout itself stores only codes): the new generation at
-    * `rebuildAt` is trained on it and re-encodes all of it, kind-aware
-    * ('pq'/'rpq' from the sidecar, geometry preserved), with the
-    * deterministic smallest-id codebooks ([[maintainIvfPq]]'s
-    * oracle-reproducible rule).
-    *
-    * Cost shape: the keep path reads one KB-sized row per micro-batch
-    * ever ingested (never data-proportional) and touches nothing else;
-    * the corpus-wide retrain runs exactly when the series says the
-    * stored tables stopped describing the data.
-    *
-    * RECURRING-RUN SAFE — a rebuild FENCES the series: the reports it
-    * consumed describe the OLD generation's codebooks, so without a
-    * fence every later monitor run would re-compare the new world
-    * against the old baseline and re-fire the retrain forever. The
-    * fence (`driftOut/_rebuilt`, the max batch id consumed — written
-    * inside the quiesce window, after the new generation) makes later
-    * runs threshold only batches ingested AFTER it; until a fresh
-    * window accumulates they return `keep` with `batches = 0` and NaN
-    * medians. A rebuild also REFUSES when `rebuildAt` already exists:
-    * after a crash between the generation write and the fence write,
-    * the operator decides (delete the orphan and re-run, or fence by
-    * hand if the pointer swap already happened) instead of the monitor
-    * silently overwriting a possibly-live generation. Pass a fresh
-    * `rebuildAt` per generation, as with the compactors' dst.
-    */
-  def maintainFromDriftSeries(spark: org.apache.spark.sql.SparkSession,
-      driftOut: String, layout: String, corpus: DataFrame,
-      idCol: String, vecCol: String, rebuildAt: String,
-      window: Int = 3, driftThreshold: Double = 2.0,
-      trained: Boolean = false, prune: Boolean = false): DriftSeriesReport =
-    maintainDriftCore(spark, driftOut, layout, corpus, idCol, vecCol,
-      rebuildAt, window, driftThreshold, trained,
-      fenceGeneration = None, afterFence = () => (), prune = prune)
-
-  /** [[maintainFromDriftSeries]] over a POINTERED store root — the
-    * fully-automated monitor tick: the live generation resolves
-    * through `root/_current`, the rebuild target is the next
-    * `gen<k+1>`, and on rebuild the fence records the new generation's
-    * NAME and the pointer is swapped INSIDE the quiesce window (then
-    * optionally the consumed reports are pruned) — so the
-    * append-lands-in-the-old-generation race of the explicit-rebuildAt
-    * face's caveat has no gap, and the next monitor tick, probe, and
-    * ingest micro-batch all answer from the new generation via
-    * [[resolveLayout]] with no operator in the loop.
-    *
-    * CRASH-RECOVERY, mechanical: the fence (written after the new
-    * generation, before the swap) is the rebuild's commit record. A
-    * run that finds a fence naming a generation the pointer does NOT
-    * point at (and that exists on disk) died in the fence→swap window:
-    * it completes the swap idempotently, releases the marker the dead
-    * run left held on the superseded generation, and returns `action
-    * = "swap"` — never a second fold (the series is already fenced).
-    * A crash BEFORE the fence leaves an unfenced `gen<k+1>`; the next
-    * tick's rebuild refuses on it curated, exactly as the explicit
-    * face does. A crash AFTER the swap but before the marker release
-    * leaves a stale marker on the SUPERSEDED generation — harmless
-    * (appends resolve to the new generation) and reclaimed with it by
-    * [[graft.ops.Layouts.vacuumGenerations]].
-    */
-  def maintainPointedFromDriftSeries(spark: org.apache.spark.sql.SparkSession,
-      root: String, driftOut: String, corpus: DataFrame,
-      idCol: String, vecCol: String,
-      window: Int = 3, driftThreshold: Double = 2.0,
-      trained: Boolean = false, prune: Boolean = false): DriftSeriesReport = {
-    val gen = Layouts.currentGenerationName(spark, root)
-    // FORWARD-ONLY recovery (r20 ADVICE, high): the fence names the
-    // generation its rebuild produced, but the pointer can legitimately
-    // advance PAST that generation without touching the fence
-    // (compactPointedIvfPqLayout / maintainPointedIvfPq swap _current
-    // and never write a drift fence) — treating any fence≠pointer
-    // disagreement as an interrupted swap would then swap the pointer
-    // BACKWARD onto the superseded generation, resurrecting rows a
-    // compaction retired. Only a fence generation NUMERICALLY AHEAD of
-    // the current pointer can be an interrupted fence→swap window;
-    // anything else (behind, equal, or non-gen<k>-named) is history.
-    val GenName = "gen(\\d+)".r
-    def genIdx(n: String): Option[Long] = n match {
-      case GenName(k) => Some(k.toLong)
-      case _ => None
-    }
-    val pendingSwap = readFence(spark, driftOut).flatMap(_._2)
-      .filter(g => g != gen && Layouts.exists(spark, s"$root/$g") &&
-        (for { gi <- genIdx(g); ci <- genIdx(gen) } yield gi > ci)
-          .getOrElse(false))
-    pendingSwap match {
-      case Some(g) =>
-        Layouts.swapGenerationPointer(spark, root, g)
-        Layouts.releaseQuiesce(spark, s"$root/$gen")
-        DriftSeriesReport("swap", Double.NaN, Double.NaN, 0, s"$root/$g")
-      case None =>
-        val next = nextGenerationName(root, gen)
-        maintainDriftCore(spark, driftOut, s"$root/$gen", corpus, idCol,
-          vecCol, s"$root/$next", window, driftThreshold, trained,
-          fenceGeneration = Some(next),
-          afterFence = () => Layouts.swapGenerationPointer(spark, root, next),
-          prune = prune)
-    }
-  }
-
   /** The drift series' fence record: (max consumed ingest_batch, the
-    * generation the rebuild produced — None for fences written by the
-    * explicit-rebuildAt face or before the pointer existed).
+    * generation the rebuild produced — None for fences written before
+    * the pointered lifecycle existed).
     */
-  private def readFence(spark: org.apache.spark.sql.SparkSession,
+  private[ops] def readFence(spark: org.apache.spark.sql.SparkSession,
       driftOut: String): Option[(Long, Option[String])] = {
     val fencePath = s"$driftOut/$RebuiltFence"
     if (!Layouts.exists(spark, fencePath)) None
@@ -1394,119 +965,8 @@ object Similarity {
     }
   }
 
-  private def maintainDriftCore(spark: org.apache.spark.sql.SparkSession,
-      driftOut: String, layout: String, corpus: DataFrame,
-      idCol: String, vecCol: String, rebuildAt: String,
-      window: Int, driftThreshold: Double, trained: Boolean,
-      fenceGeneration: Option[String], afterFence: () => Unit,
-      prune: Boolean): DriftSeriesReport = {
-    require(window >= 1, s"window=$window: the medians need at least one report")
-    require(driftThreshold >= 1.0,
-      s"driftThreshold=$driftThreshold: below 1.0 an in-distribution " +
-        "series (trailing ~= baseline) would rebuild on noise")
-    require(layout != rebuildAt,
-      "maintainFromDriftSeries writes the rebuilt generation at " +
-        "rebuildAt; swap the pointer after (an in-place rewrite would " +
-        "clobber the files the live stream and the retrain read)")
-    // one double per micro-batch ever ingested — bounded by batch
-    // count, never by data volume. Wrapped so an execution-time
-    // failure (a torn part file a killed report writer left) names
-    // the drift-series contract instead of surfacing as a raw task
-    // exception.
-    val fullSeries =
-      try readDriftSeries(spark, driftOut)
-        .select(col("ingest_batch"), col("pq_err").cast("double"))
-        .collect().map(r => (r.getLong(0), r.getDouble(1)))
-      catch {
-        case e: org.apache.spark.SparkException =>
-          throw new IllegalStateException(
-            s"the drift series at $driftOut failed mid-read — a torn " +
-              "per-batch report (killed writer) or a foreign file; " +
-              "delete the offending ingest_batch directory (its batch " +
-              "will rewrite it on replay) and re-run", e)
-      }
-    // the fence: reports at or before the last rebuild describe the
-    // OLD generation's codebooks — thresholding them against the new
-    // world would re-fire the retrain on every monitor run forever
-    val fencePath = s"$driftOut/$RebuiltFence"
-    // a series with zero reports is only legitimate when a fence shows
-    // a rebuild consumed (and pruneDriftSeries dropped) them — the
-    // steady state right after a prune, before new batches land; an
-    // unfenced empty series means the ingest stream never committed
-    if (fullSeries.isEmpty) {
-      require(Layouts.exists(spark, fencePath),
-        s"the drift series at $driftOut holds no reports — nothing to " +
-          "threshold (has the ingest stream committed a batch?)")
-      return DriftSeriesReport("keep", Double.NaN, Double.NaN, 0, layout)
-    }
-    val fencedThrough = readFence(spark, driftOut)
-      .map(_._1).getOrElse(Long.MinValue)
-    val series = fullSeries.filter(_._1 > fencedThrough).map(_._2)
-    def median(xs: Array[Double]): Double = {
-      val s = xs.sorted
-      val n = s.length
-      if (n % 2 == 1) s(n / 2) else (s(n / 2 - 1) + s(n / 2)) / 2.0
-    }
-    if (series.isEmpty)
-      // everything already consumed by the last rebuild: the steady
-      // state right after a generation swap, before new batches land
-      return DriftSeriesReport("keep", Double.NaN, Double.NaN, 0, layout)
-    val baseline = median(series.take(window))
-    val trailing = median(series.takeRight(window))
-    val drifted =
-      series.length >= 2 * window && trailing > driftThreshold * baseline
-    if (!drifted)
-      DriftSeriesReport("keep", baseline, trailing, series.length, layout)
-    else {
-      require(!Layouts.exists(spark, rebuildAt),
-        s"maintainFromDriftSeries: $rebuildAt already exists — either a " +
-          "crashed rebuild left an unfenced generation (delete it and " +
-          "re-run, or write the fence by hand if its pointer swap " +
-          "already happened) or the path is a live generation; the " +
-          "monitor never overwrites it. Pass a fresh rebuildAt per " +
-          "generation.")
-      // quiesce for the whole retrain: a stream append landing in the
-      // OLD generation mid-rebuild would vanish at the pointer swap;
-      // with the marker held it fails curated and the checkpoint
-      // replays it into the new generation
-      Layouts.acquireQuiesce(spark, layout, "maintainFromDriftSeries")
-      try {
-        // second half of the handshake (the compactors' rule): an
-        // append that passed its marker check before we acquired and
-        // is still staging must drain before the retrain+swap retires
-        // its generation
-        Layouts.assertNoInflightIncrements(spark, layout,
-          "maintainFromDriftSeries")
-        val idx = AnnIndex.at(spark, layout, idCol)
-        val (nlist, m, ks) = (idx.ivf.length, idx.pq.length, idx.pq(0).length)
-        val all = corpus.select(col(idCol), col(vecCol))
-        retrainGeneration(idx.residual, nlist, m, ks, all, idCol, vecCol,
-          rebuildAt, trained)
-        // fence AFTER the generation, still inside the quiesce window:
-        // the consumed reports describe the generation this rebuild
-        // just replaced, and the fence doubles as the COMMIT RECORD
-        // the pointered face's crash-recovery keys on (it carries the
-        // new generation's name). A crash before this line leaves an
-        // unfenced rebuildAt, which the exists-refusal above surfaces
-        // on the re-run.
-        Layouts.writeSidecar(spark, fencePath, RebuiltFenceSchema,
-          Seq(org.apache.spark.sql.Row(
-            fullSeries.map(_._1).max, fenceGeneration.orNull)))
-        // the pointered face swaps _current here — inside the marker
-        // window, after the commit record
-        afterFence()
-        // self-maintaining series: with the fence just written, every
-        // consumed report is provably dead weight — prune it now so a
-        // year of monitor ticks never pays a year of listing tax
-        if (prune) pruneDriftSeries(spark, driftOut)
-        DriftSeriesReport("rebuild", baseline, trailing, series.length,
-          rebuildAt)
-      } finally Layouts.releaseQuiesce(spark, layout)
-    }
-  }
-
   /** The drift series' rebuild fence (`driftOut/_rebuilt`): one row —
-    * the max ingest_batch a [[maintainFromDriftSeries]] rebuild
+    * the max ingest_batch an [[AnnIndex.maintainFromDriftSeries]] rebuild
     * consumed. Underscore-prefixed, so [[readDriftSeries]]' root read
     * (the dashboard face, full history) never sees it; the monitor
     * thresholds only batches past it.
@@ -1514,7 +974,7 @@ object Similarity {
   val RebuiltFence = "_rebuilt"
 
   /** Schema of the drift series' `_rebuilt` fence sidecar. */
-  private val RebuiltFenceSchema = {
+  private[ops] val RebuiltFenceSchema = {
     import org.apache.spark.sql.types._
     StructType(Seq(
       StructField("through_batch", LongType, nullable = false),
@@ -1522,7 +982,7 @@ object Similarity {
   }
 
   /** Drop the drift reports a rebuild already CONSUMED — the series'
-    * own small-files pay-down (the [[compactIvfPqLayout]] play for
+    * own small-files pay-down (the [[AnnIndex.compact]] play for
     * the monitoring data): a year of per-batch report directories is
     * a listing tax on every monitor tick and dashboard read, and
     * everything at or before the fence can never influence a decision
@@ -1536,14 +996,11 @@ object Similarity {
     */
   def pruneDriftSeries(spark: org.apache.spark.sql.SparkSession,
       driftOut: String): Long = {
-    val fencePath = s"$driftOut/$RebuiltFence"
-    require(Layouts.exists(spark, fencePath),
-      s"pruneDriftSeries: no $RebuiltFence fence under $driftOut — the " +
-        "series has not been consumed by a rebuild; pruning would erase " +
-        "live evidence (run maintainFromDriftSeries first)")
-    val through = Layouts.collectSidecar(spark, fencePath,
-      "maintainFromDriftSeries (the fence is written by its rebuild " +
-        "path)")(0).getAs[Long]("through_batch")
+    val through = readFence(spark, driftOut).map(_._1).getOrElse(
+      throw new IllegalArgumentException(
+        s"pruneDriftSeries: no $RebuiltFence fence under $driftOut — the " +
+          "series has not been consumed by a rebuild; pruning would erase " +
+          "live evidence (run AnnIndex.maintainFromDriftSeries first)"))
     val root = new org.apache.hadoop.fs.Path(driftOut)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val Batch = "ingest_batch=(-?\\d+)".r
@@ -1583,20 +1040,6 @@ object Similarity {
     writeIvfPqCodebooks(df.sparkSession, out, ivfCb, rcb, pqKind = "rpq")
   }
 
-  /** [[appendIvfPq]] for a residual layout: encode ONLY the batch with
-    * the EXISTING codebooks (residual coordinates, never retrained)
-    * and append file-additively into the cell directories. The
-    * sidecar check verifies BOTH the coarse centroids and the
-    * residual tables — and, via the `kind='rpq'` tag, that the layout
-    * is residual-encoded at all (appending residual codes into a
-    * raw-PQ layout silently poisons every probe).
-    */
-  def appendIvfPqResidual(batch: DataFrame, idCol: String, vecCol: String,
-      ivfCb: IvfCodebook, rcb: PqCodebooks, out: String,
-      keep: Seq[String] = Nil): Unit =
-    appendCoded(batch, idCol, vecCol, ivfCb, rcb, residual = true, out,
-      keep, "appendIvfPqResidual")
-
   /** Per-row PQ quantization error: the squared L2 distance between
     * the vector and its nearest codebook entry, summed across the m
     * subspaces in order — the ADC reconstruction error of the code
@@ -1608,11 +1051,10 @@ object Similarity {
     GraftFunctions.pq_min_dist(vec, cb)
 
   /** Mean ADC reconstruction error of a corpus under a quantizer —
-    * THE number behind [[appendIvfPq]] / [[appendIvfPqResidual]]'s
-    * "rebuild cadence is the caller's policy": quantization error
-    * drifts upward as the ingested distribution leaves the trained
-    * one, and this metric is how the caller sets the re-train
-    * threshold (FAISS's `IndexIVFPQ` exposes the same diagnostic as
+    * THE number behind [[AnnIndex.maintain]]'s append-or-rebuild
+    * decision: quantization error drifts upward as the ingested
+    * distribution leaves the trained one, and this metric is how the
+    * re-train threshold is set (FAISS's `IndexIVFPQ` exposes the same diagnostic as
     * imbalance/quantization-error stats).
     *
     * `residual = false` scores raw-vector PQ codes ([[pqCode]] under
@@ -1719,145 +1161,13 @@ object Similarity {
     (probed, cellIds, luts)
   }
 
-  /** COMPACT an appended layout: daily [[appendIvfPq]] batches leave
-    * one new file per touched cell per day, and a year of ingest
-    * makes every probe pay hundreds of file opens per probed cell —
-    * the classic LSM small-files tax. Compaction rewrites the codes
-    * (NEVER re-encodes — no vectors are read, no codebooks applied)
-    * hash-repartitioned by cell, so each cell's rows land in exactly
-    * one task and therefore one file, and carries the `_codebooks`
-    * sidecar forward.
-    *
-    * Writes a NEW layout at `dst` (the LSM convention: compaction
-    * produces new files, the caller swaps the pointer) — an in-place
-    * rewrite would read and clobber the same files. Cost: one shuffle
-    * of the code rows (~4-40 B/row, ~1% of the vector corpus).
-    *
-    * QUIESCE WINDOW CAVEAT: the `_compacting` marker is released when
-    * this call returns — BEFORE the caller's pointer swap. An append
-    * landing in that gap writes into the OLD generation and vanishes
-    * at the swap. Callers that automate the swap must keep appends
-    * quiesced until the pointer points at `dst` — or use the pointered
-    * lifecycle ([[maintainPointedFromDriftSeries]] /
-    * [[graft.ops.Layouts.swapGenerationPointer]]), which swaps INSIDE
-    * the marker window so the gap never exists.
-    *
-    * `dropIds` is the TOMBSTONE set — one id column
-    * ([[graft.ops.Cdc.snapshotDiff]]'s `removed` class is the natural
-    * producer): matching rows are retired during the rewrite (an
-    * anti-join on `idCol` — the LSM tombstone-at-compaction
-    * discipline), so a deleted document can never again surface in a
-    * top-k, even when the caller forgets to filter the corpus side.
-    * Without it, stale rows accumulate forever: probes pay their
-    * reads and ranks, and correctness holds only if every consumer
-    * re-joins the live corpus. The anti-join is unhinted — AQE
-    * broadcasts a small tombstone set, and a bulk retirement (a
-    * source-level license takedown) degrades to a shuffle join
-    * instead of dying.
-    */
-  def compactIvfPqLayout(spark: org.apache.spark.sql.SparkSession,
-      src: String, dst: String,
-      dropIds: Option[DataFrame] = None, idCol: String = "id"): Unit =
-    compactIvfPqCore(spark, src, dst, dropIds, idCol,
-      afterFold = () => ())
-
-  /** [[compactIvfPqLayout]] over a POINTERED store root: folds the
-    * CURRENT generation (base + committed increments, tombstones
-    * retired) into the next `gen<k+1>` and swaps `_current` INSIDE the
-    * quiesce window — the compaction-side twin of
-    * [[maintainPointedIvfPq]], closing the same
-    * append-lands-in-the-superseded-generation gap for the LSM fold.
-    * Streams addressing the root refuse while the marker is held and
-    * replay into the new generation after the swap; superseded
-    * generations are reclaimed by [[graft.ops.Layouts.vacuumGenerations]].
-    * Returns the new generation's path.
-    */
-  def compactPointedIvfPqLayout(spark: org.apache.spark.sql.SparkSession,
-      root: String,
-      dropIds: Option[DataFrame] = None, idCol: String = "id"): String = {
-    val gen = Layouts.currentGenerationName(spark, root)
-    val next = nextGenerationName(root, gen)
-    compactIvfPqCore(spark, s"$root/$gen", s"$root/$next", dropIds, idCol,
-      afterFold = () => Layouts.swapGenerationPointer(spark, root, next))
-    s"$root/$next"
-  }
-
-  private def compactIvfPqCore(spark: org.apache.spark.sql.SparkSession,
-      src: String, dst: String,
-      dropIds: Option[DataFrame], idCol: String,
-      afterFold: () => Unit): Unit = {
-    require(src != dst,
-      "compactIvfPqLayout writes a NEW layout at dst; swap the pointer " +
-        "after (an in-place rewrite would clobber the files it reads)")
-    // fold committed streamed increments ([[appendIvfPqIncrement]])
-    // into the new generation — dst is a PLAIN base layout again.
-    // The "quiesce the stream first" discipline is mechanical: the
-    // compaction holds the layout's _compacting marker for its whole
-    // run, so every append face refuses (curated) instead of racing
-    // the fold; released on ANY exit — a failed compaction leaves src
-    // intact and appendable, and the rerun re-reads everything.
-    Layouts.acquireQuiesce(spark, src, "compactIvfPqLayout")
-    try {
-    // the marker stops NEW appends; this catches the one that passed
-    // its marker check before we acquired — folding a half-written
-    // increment is silent data loss
-    Layouts.assertNoInflightIncrements(spark, src, "compactIvfPqLayout")
-    val base = spark.read.parquet(src)
-    val rows = Layouts.withIncrements(spark, base, src,
-      base.columns.toIndexedSeq, excludeBatchId = None)
-    // carry the sidecar rows VERBATIM (never decode/re-encode): the
-    // copy preserves whatever kinds the source stored — 'pq' and
-    // 'rpq' layouts compact identically. Presence is the explicit
-    // probe (the appendIvfPq rule), and the readability check runs
-    // BEFORE any dst write: a present-but-unreadable sidecar fails
-    // the compaction with the curated collectSidecar message instead
-    // of an uncaught AnalysisException AFTER the data rewrite left a
-    // partial generation at dst.
-    // the hint stays kind-neutral: the sidecar carries 'pq' OR 'rpq'
-    // tables and this validation never decodes them, so naming one
-    // rebuild function would misdirect half the operators
-    val hasSidecar = hasIvfPqCodebooks(spark, src)
-    // collected ONCE: validates the src sidecar (curated failure on an
-    // empty/killed-writer directory — r20 ADVICE: the previous
-    // part-file read threw an uncurated AnalysisException there) and
-    // feeds the driver-side dst copy below
-    val sidecarRows =
-      if (hasSidecar)
-        Layouts.collectSidecar(spark, src + "/_codebooks",
-          "writeIvfPqPartitioned / writeIvfPqResidualPartitioned").toSeq
-      else Nil
-    // sidecar FIRST: a failure in the (much larger) data rewrite then
-    // leaves a sidecar-only dst — detectable, and appends against it
-    // still validate — instead of a data-only dst that masquerades as
-    // a legitimate pre-sidecar layout and silently skips validation.
-    // The dst is cleared explicitly (overwrite semantics for a rerun
-    // after a failed compaction) because a mode("overwrite") data
-    // write would delete the whole dst INCLUDING the sidecar just
-    // written; the data write then appends into the fresh dir.
-    // built (and its schema require fired) before dst is touched
-    val compacted =
-      Layouts.dropTombstones(rows, dropIds, idCol, "compactIvfPqLayout")
-    Layouts.delete(spark, dst)
-    if (hasSidecar)
-      // driver-side copy of the rows collected (and validated) above —
-      // the read-job + write-job round-trip became zero jobs
-      Layouts.writeSidecar(spark, dst + "/_codebooks", CodebooksSchema,
-        sidecarRows)
-    writeCoded(compacted.repartition(col(AnnIndex.Cell)), "append", dst)
-    // still inside the marker window: the pointered face swaps
-    // _current here, so no append can land in the folded-away
-    // generation between the rewrite and the swap
-    afterFold()
-    } finally Layouts.releaseQuiesce(spark, src)
-  }
-
   /** Resolve a layout argument through its generation pointer: a
     * STORE ROOT carrying [[Layouts.GenerationPointer]] resolves to the
     * pointed generation directory; a plain layout path resolves to
-    * itself. One existence probe. [[AnnIndex.open]] and the streaming
-    * append resolve through this, so after a pointered
-    * rebuild ([[maintainPointedFromDriftSeries]] /
-    * [[maintainPointedIvfPq]]) swaps `_current`, the whole fleet —
+    * itself. One existence probe. [[AnnIndex.open]] resolves through
+    * this, so after a rebuild or compaction ([[AnnIndex.maintain]],
+    * [[AnnIndex.maintainFromDriftSeries]], [[AnnIndex.compact]]) swaps
+    * `_current`, the whole fleet —
     * probes, monitors, the ingest stream's next micro-batch — answers
     * from the new generation with no coordination beyond the one
     * atomic rename.

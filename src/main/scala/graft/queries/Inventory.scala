@@ -1406,7 +1406,7 @@ object Inventory extends InventoryCrawl {
           |  round(avg(p.e), 6) AS pq_err, round(avg(r.e), 6) AS rpq_err
           |FROM err_pq p JOIN err_rpq r USING (vec_id)
           |GROUP BY 1 ORDER BY cohort""".stripMargin,
-      // q156: maintainIvfPq's append-or-rebuild decision, BOTH
+      // q156: AnnIndex.maintain's append-or-rebuild decision, BOTH
       // regimes — all four error terms from q151's proven
       // min-over-entries arithmetic (fresh codebooks = the batch's
       // own 16 smallest-id vectors; the drifted pair shifts vector
@@ -1458,7 +1458,7 @@ object Inventory extends InventoryCrawl {
            |  round(fresh_err, 6) AS fresh_err
            |FROM errs ORDER BY regime""".stripMargin
       },
-      // q158: maintainIvfPq's REBUILD path at nlist=16 — the q132
+      // q158: AnnIndex.maintain's REBUILD path at nlist=16 — the q132
       // probe chain recomputed over the UNION table (raw corpus +
       // drifted %5==0 cohort at its original ids) with UNION-trained
       // codebooks: the retrain (which mixes drifted vectors into the

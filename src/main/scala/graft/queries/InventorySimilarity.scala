@@ -128,13 +128,13 @@ private[queries] trait InventorySimilarity extends InventoryDedup {
 
 
   /** INCREMENTAL maintenance of the IVF-PQ at-rest layout
-    * ([[Similarity.appendIvfPq]] — the q131 daily-ingest play for
+    * ([[graft.ops.AnnIndex.append]] — the q131 daily-ingest play for
     * vectors): the corpus (vec_id % 5 != 0) is written
-    * `partitionBy(cell)` with codebooks trained on it, the increment
-    * (vec_id % 5 = 0) is encoded with those SAME codebooks — no
-    * retraining, no corpus re-read — and appended into the cell
-    * directories; the probe then answers over corpus+increment FROM
-    * THE FILES. corpus ∪ increment = the whole table, so the oracle
+    * `partitionBy(cell)` as `gen0` of a pointered store root with
+    * codebooks trained on it, the increment (vec_id % 5 = 0) is encoded
+    * with the handle's SAME stored codebooks — no retraining, no corpus
+    * re-read — and appended into the cell directories; the probe then
+    * answers over corpus+increment FROM THE FILES. corpus ∪ increment = the whole table, so the oracle
     * is q135's proven CTE chain with only the codebook CTEs
     * restricted to the corpus predicate — the append is correct iff
     * the merged layout lands on the recomputed full-table top-k.
@@ -145,15 +145,16 @@ private[queries] trait InventorySimilarity extends InventoryDedup {
     val incr = emb.where(col("vec_id") % 5 === 0)
     val (ivfCb, pqCb) = Similarity.ivfAndPqCodebooks(corpus, "vec_id",
       "embedding", nlist = 16, m = 8, ks = 16)
-    val out = new java.io.File(
+    val base = new java.io.File(
       new java.io.File(System.getProperty("java.io.tmpdir"), "graft_q138_layout"),
       java.lang.Integer.toHexString(d.hashCode)).getAbsolutePath
     // overwrite clears any previous run's append, so reruns stay
     // deterministic; the append itself never touches the corpus files
     Similarity.writeIvfPqPartitioned(corpus, "vec_id", "embedding",
-      ivfCb, pqCb, out)
-    Similarity.appendIvfPq(incr, "vec_id", "embedding", ivfCb, pqCb, out)
-    onesProbe(s, out)
+      ivfCb, pqCb, base + "/gen0")
+    graft.ops.Layouts.swapGenerationPointer(s, base, "gen0")
+    AnnIndex.open(s, base, "vec_id").append(incr, "embedding")
+    onesProbe(s, base)
   }
 
 
@@ -181,12 +182,12 @@ private[queries] trait InventorySimilarity extends InventoryDedup {
 
 
   /** COMPACTION of the appended ANN layout
-    * ([[Similarity.compactIvfPqLayout]] — the LSM small-files play):
-    * q138's corpus-write + increment-append, then the layout is
-    * compacted into a NEW path (codes rewritten one-file-per-cell,
-    * nothing re-encoded, sidecar carried) and the probe answers from
-    * the COMPACTED files alone ([[graft.ops.AnnIndex.open]] —
-    * the sidecar carry is load-bearing). Shares q138's oracle: a
+    * ([[graft.ops.AnnIndex.compact]] — the LSM small-files play):
+    * q138's corpus-write + increment-append, then `gen0` is compacted
+    * into `gen1` (codes rewritten one-file-per-cell, nothing
+    * re-encoded, sidecar carried, pointer swapped) and the probe of the
+    * store root answers from the COMPACTED files alone (the sidecar
+    * carry is load-bearing). Shares q138's oracle: a
     * rewrite that loses, duplicates or re-cells a single code row
     * lands off the recomputed top-k.
     */
@@ -201,10 +202,10 @@ private[queries] trait InventorySimilarity extends InventoryDedup {
       java.lang.Integer.toHexString(d.hashCode)).getAbsolutePath
     Similarity.writeIvfPqPartitioned(corpus, "vec_id", "embedding",
       ivfCb, pqCb, base + "/gen0")
-    Similarity.appendIvfPq(incr, "vec_id", "embedding", ivfCb, pqCb,
-      base + "/gen0")
-    Similarity.compactIvfPqLayout(s, base + "/gen0", base + "/gen1")
-    onesProbe(s, base + "/gen1")
+    graft.ops.Layouts.swapGenerationPointer(s, base, "gen0")
+    AnnIndex.open(s, base, "vec_id").append(incr, "embedding")
+    AnnIndex.open(s, base, "vec_id").compact()
+    onesProbe(s, base)
   }
 
 
@@ -254,9 +255,9 @@ private[queries] trait InventorySimilarity extends InventoryDedup {
     * in the q135 `partitionBy(cell)` layout. The corpus
     * (vec_id % 5 != 0) is written with residual codes and the
     * `kind='rpq'` sidecar, the increment (vec_id % 5 = 0) is
-    * residual-encoded with the SAME codebooks and appended
-    * file-additively ([[Similarity.appendIvfPqResidual]], which
-    * verifies the sidecar's rpq tables), and the probe answers from
+    * residual-encoded with the SAME stored codebooks and appended
+    * file-additively ([[graft.ops.AnnIndex.append]], whose handle reads
+    * the rpq tables off the sidecar), and the probe answers from
     * the files alone ([[graft.ops.AnnIndex.probe]], which reads the
     * 'rpq' kind off the sidecar: per-probed-cell residual ADC tables
     * selected by the partition column). Write, no-retrain append, sidecar round-trip
@@ -272,17 +273,18 @@ private[queries] trait InventorySimilarity extends InventoryDedup {
     val ivfCb = Similarity.ivfCodebook(corpus, "vec_id", "embedding", nlist = 16)
     val rcb = Similarity.residualPqCodebooks(corpus, "vec_id", "embedding",
       ivfCb, m = 8, ks = 16)
-    val out = new java.io.File(
+    val base = new java.io.File(
       new java.io.File(System.getProperty("java.io.tmpdir"), "graft_q148_layout"),
       java.lang.Integer.toHexString(d.hashCode)).getAbsolutePath
     Similarity.writeIvfPqResidualPartitioned(corpus, "vec_id", "embedding",
-      ivfCb, rcb, out)
-    Similarity.appendIvfPqResidual(incr, "vec_id", "embedding", ivfCb, rcb, out)
-    onesProbe(s, out)
+      ivfCb, rcb, base + "/gen0")
+    graft.ops.Layouts.swapGenerationPointer(s, base, "gen0")
+    AnnIndex.open(s, base, "vec_id").append(incr, "embedding")
+    onesProbe(s, base)
   }
 
 
-  /** TOMBSTONES for the ANN layout ([[Similarity.compactIvfPqLayout]]'s
+  /** TOMBSTONES for the ANN layout ([[graft.ops.AnnIndex.compact]]'s
     * `dropIds` — round 15): [[graft.ops.Cdc.snapshotDiff]] classifies
     * removed ids, and compaction is where the at-rest index retires
     * them (the LSM tombstone discipline). The full corpus is written
@@ -302,16 +304,16 @@ private[queries] trait InventorySimilarity extends InventoryDedup {
       java.lang.Integer.toHexString(d.hashCode)).getAbsolutePath
     Similarity.writeIvfPqPartitioned(emb, "vec_id", "embedding",
       ivfCb, pqCb, base + "/gen0")
+    graft.ops.Layouts.swapGenerationPointer(s, base, "gen0")
     val removed = emb.where(col("vec_id") % 7 === 0).select("vec_id")
-    Similarity.compactIvfPqLayout(s, base + "/gen0", base + "/gen1",
-      dropIds = Some(removed), idCol = "vec_id")
-    onesProbe(s, base + "/gen1")
+    AnnIndex.open(s, base, "vec_id").compact(dropIds = Some(removed))
+    onesProbe(s, base)
   }
 
 
   /** QUANTIZATION-DRIFT metric ([[Similarity.quantizationDrift]] —
-    * round 17): the number behind [[Similarity.appendIvfPq]]'s
-    * "rebuild cadence is the caller's policy". Codebooks (coarse, raw
+    * round 17): the number behind [[graft.ops.AnnIndex.maintain]]'s
+    * append-or-rebuild decision. Codebooks (coarse, raw
     * PQ and residual PQ — the q132/q148 deterministic stand-ins) are
     * built on the corpus half (vec_id % 5 != 0), and the report is
     * the mean ADC reconstruction error of BOTH quantizer kinds split
@@ -355,7 +357,7 @@ private[queries] trait InventorySimilarity extends InventoryDedup {
   }
 
 
-  /** DRIFT-GATED maintenance ([[Similarity.maintainIvfPq]] — the q140
+  /** DRIFT-GATED maintenance ([[graft.ops.AnnIndex.maintain]] — the q140
     * incremental-refresh play for vectors, composing q138's append
     * with q151's drift metric into the append-or-rebuild decision
     * FAISS leaves to the caller): both regimes demonstrated against
@@ -461,13 +463,15 @@ private[queries] trait InventorySimilarity extends InventoryDedup {
     val base = new java.io.File(
       new java.io.File(System.getProperty("java.io.tmpdir"), "graft_q156_layout"),
       java.lang.Integer.toHexString(d.hashCode)).getAbsolutePath
-    // ONE corpus generation serves both regimes: the drift regime runs
-    // first (its rebuild writes a NEW generation and leaves gen0
-    // untouched), then the in-distribution regime appends into gen0 as
-    // its last use (overwrite-on-rerun keeps the whole query
-    // deterministic)
+    // ONE corpus generation serves both regimes: the in-distribution
+    // regime appends into gen0 first, then the drift regime's rebuild
+    // writes gen1 and moves the pointer off gen0 (overwrite-on-rerun
+    // and the re-pointing keep the whole query deterministic). Both
+    // regimes' errors depend only on gen0's codebooks and the batch.
     Similarity.writeIvfPqPartitioned(corpus, "vec_id", "embedding",
       ivfCb, pqCb, base + "/gen0")
+    graft.ops.Layouts.swapGenerationPointer(s, base, "gen0")
+    val index = AnnIndex.open(s, base, "vec_id")
     // the corpus argument is consumed ONLY by the rebuild path's
     // retrain-and-rewrite, and q156's oracle pins the DECISION terms
     // (action, stored_err, fresh_err — none depend on it); the full
@@ -475,10 +479,8 @@ private[queries] trait InventorySimilarity extends InventoryDedup {
     // drift regime a narrow slice and keeps the sweep cost on the
     // decision it actually proves (round-19 trim, VERDICT r18 #6)
     val slice = corpus.where(col("vec_id") % 50 === 1)
-    val rb = Similarity.maintainIvfPq(s, base + "/gen0", slice, drifted,
-      "vec_id", "embedding", base + "/rebuilt")
-    val ra = Similarity.maintainIvfPq(s, base + "/gen0", corpus, indist,
-      "vec_id", "embedding", base + "/unused")
+    val ra = index.maintain(corpus, indist, "embedding")
+    val rb = index.maintain(slice, drifted, "embedding")
     def r6(x: Double): Double =
       BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
     Seq(("indist", ra.action, r6(ra.storedErr), r6(ra.freshErr)),
@@ -488,7 +490,7 @@ private[queries] trait InventorySimilarity extends InventoryDedup {
   }
 
 
-  /** [[Similarity.maintainIvfPq]]'s REBUILD PATH at production
+  /** [[graft.ops.AnnIndex.maintain]]'s REBUILD PATH at production
     * geometry (q156 pins the decision; this seat pins the retrain +
     * generation swap end-to-end at nlist=16, multi-cell): the drifted
     * batch keeps its ORIGINAL ids (vec_id % 5 = 0, +4.0 per
@@ -522,8 +524,8 @@ private[queries] trait InventorySimilarity extends InventoryDedup {
     // the ROOT — answering from the new generation purely through the
     // pointer, with no path handed across the swap by hand
     graft.ops.Layouts.swapGenerationPointer(s, base, "gen0")
-    val r = Similarity.maintainPointedIvfPq(s, base, corpus, drifted,
-      "vec_id", "embedding")
+    val r = AnnIndex.open(s, base, "vec_id").maintain(corpus, drifted,
+      "embedding")
     require(r.action == "rebuild" && r.layout == base + "/gen1",
       s"q158 expects the drifted batch to trigger the rebuild path, got $r")
     onesProbe(s, base)
@@ -531,7 +533,7 @@ private[queries] trait InventorySimilarity extends InventoryDedup {
 
 
   /** The COMPOSED maintenance loop
-    * ([[Similarity.maintainFromDriftSeries]] — the monitoring job that
+    * ([[graft.ops.AnnIndex.maintainFromDriftSeries]] — the monitoring job that
     * closes q156 + q157 into one lifecycle): four micro-batches land
     * through the streaming ingest face, each writing its one-row
     * drift report; the monitor then thresholds median-of-last-2
@@ -557,6 +559,7 @@ private[queries] trait InventorySimilarity extends InventoryDedup {
     // any prior run's increments wholesale
     Similarity.writeIvfPqPartitioned(corpus, "vec_id", "embedding",
       ivfCb, pqCb, base + "/gen0")
+    graft.ops.Layouts.swapGenerationPointer(s, base, "gen0")
     graft.ops.Layouts.delete(s, base + "/drift")
     // the monitor refuses to overwrite an existing rebuild target (a
     // crashed-rebuild guard); a rerun is a fresh lifecycle, so clear it
@@ -570,11 +573,10 @@ private[queries] trait InventorySimilarity extends InventoryDedup {
       shifted(0L, 4.0, 10000L), shifted(5L, 4.0, 20000L))  // drifted
     batches.zipWithIndex.foreach { case (b, i) =>
       graft.streaming.StreamingSimilarity.ingestBatch(b, i.toLong,
-        base + "/gen0", "vec_id", "embedding", Some(base + "/drift"))
+        base, "vec_id", "embedding", Some(base + "/drift"))
     }
-    val r = Similarity.maintainFromDriftSeries(s, base + "/drift",
-      base + "/gen0", emb, "vec_id", "embedding", base + "/gen1",
-      window = 2)
+    val r = AnnIndex.open(s, base, "vec_id").maintainFromDriftSeries(
+      base + "/drift", emb, "embedding", window = 2)
     def r6(x: Double): Double =
       BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
     Seq((r.action, r6(r.baselineErr), r6(r.trailingErr), r.batches))

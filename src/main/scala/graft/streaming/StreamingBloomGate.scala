@@ -54,7 +54,7 @@ object StreamingBloomGate {
     * fence — the seam that lets a spec pin the check-then-act window
     * deterministically (a compaction acquiring its marker while this
     * batch was computing), mirroring
-    * [[StreamingSimilarity.ingestBatchResolved]]'s stale-layout seam.
+    * [[StreamingSimilarity.ingestBatchFenced]]'s pointer-fence seam.
     */
   private[graft] def ingestBatchFenced(b: DataFrame, batchId: Long,
       indexPath: String, textCol: String, admittedOut: String,
@@ -71,7 +71,7 @@ object StreamingBloomGate {
     Bloom.writeBitmapRow(spark, Bloom.bitmapOf(b, textCol, m, k), m, k,
       Layouts.incrementDir(indexPath, batchId))
     // post-write quiesce fence (r20 ADVICE, medium — the
-    // StreamingSimilarity.ingestBatchResolved pattern): the marker
+    // StreamingSimilarity.ingestBatchFenced pattern): the marker
     // check above is check-then-act for a batch already past it, so a
     // compactBloomIndex can acquire, pass assertNoInflightIncrements,
     // fold and release while this batch is still computing — its

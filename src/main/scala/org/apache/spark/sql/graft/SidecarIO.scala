@@ -29,17 +29,22 @@ import org.apache.spark.sql.types.StructType
   * over the directory or explicit part paths, partition discovery over
   * `ingest_batch=` parents, DuckDB) is untouched.
   *
-  * Crash discipline (same observable contract as the committer path):
-  * the row group is staged as a dot-file (`.part-...parquet.tmp`),
-  * then renamed to its `part-` name — a killed writer leaves only the
-  * hidden temp, so readers see either the complete sidecar or a
-  * directory with no part files, which `Layouts.collectSidecar`
-  * already curates as the interrupted-write case.
+  * Crash discipline: the row group is staged as a hidden dot-file
+  * (`.part-...parquet.tmp`) INSIDE the directory, and the old `part-`
+  * files are replaced only after it is closed. A write that fails
+  * (a killed writer, a row that does not convert) leaves the previous
+  * sidecar readable — an overwrite of a live sidecar (the drift
+  * series' `_rebuilt` fence) never has a window with no sidecar while
+  * the new rows are being encoded. Only a crash between deleting the
+  * old parts and the final rename leaves a directory with no part
+  * files, which `Layouts.collectSidecar` curates as the
+  * interrupted-write case.
   */
 object SidecarIO {
 
   /** Overwrite `dir` with a single-part parquet file holding `rows`
-    * under `schema`. Driver-side: no Spark job. `rows` are external
+    * under `schema` (staged first; the old contents go only once the
+    * new part is closed). Driver-side: no Spark job. `rows` are external
     * [[Row]]s (the `Seq(...).toDF` input shape).
     */
   def writeParquetDir(spark: SparkSession, dir: String,
@@ -59,7 +64,6 @@ object SidecarIO {
 
     val dirPath = new Path(dir)
     val fs = dirPath.getFileSystem(conf)
-    if (fs.exists(dirPath)) fs.delete(dirPath, true)
     fs.mkdirs(dirPath)
     val uuid = java.util.UUID.randomUUID().toString
     val tmp = new Path(dirPath, s".part-00000-$uuid.snappy.parquet.tmp")
@@ -76,9 +80,19 @@ object SidecarIO {
       .withCompressionCodec(CompressionCodecName.SNAPPY)
       .build()
     try {
-      val toCatalyst = CatalystTypeConverters.createToCatalystConverter(schema)
-      rows.foreach(r => writer.write(toCatalyst(r).asInstanceOf[InternalRow]))
-    } finally writer.close()
+      try {
+        val toCatalyst = CatalystTypeConverters.createToCatalystConverter(schema)
+        rows.foreach(r => writer.write(toCatalyst(r).asInstanceOf[InternalRow]))
+      } finally writer.close()
+    } catch {
+      case e: Throwable =>
+        fs.delete(tmp, false)
+        throw e
+    }
+    // the new part is complete: replace everything else in the
+    // directory (old parts, a committer's _SUCCESS) with it
+    fs.listStatus(dirPath).map(_.getPath).filter(_.getName != tmp.getName)
+      .foreach(fs.delete(_, true))
     if (!fs.rename(tmp, dst))
       throw new java.io.IOException(
         s"sidecar rename failed: $tmp -> $dst")

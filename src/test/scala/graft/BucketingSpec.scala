@@ -185,8 +185,8 @@ class BucketingSpec extends AnyFunSuite with BeforeAndAfterAll {
       .toString + "/layout"
     Similarity.writeIvfPqPartitioned(docs, "vec_id", "embedding",
       cents, pqCb, out)
-    Similarity.appendIvfPqIncrement(vecs(100 until 132).toDF("vec_id", "embedding"),
-      "vec_id", "embedding", out, 0L)
+    graft.ops.AnnIndex.open(spark, out, "vec_id")
+      .appendIncrement(vecs(100 until 132).toDF("vec_id", "embedding"), "embedding", 0L)
     val query = Array.fill(dim)(0.7)
     val probe = graft.ops.AnnIndex.open(spark, out, "vec_id")
       .probe(Seq(0L -> query), k = 5, nprobe = 2)

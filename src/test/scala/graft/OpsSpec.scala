@@ -419,7 +419,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     got.foreach { case (id, d) => assert(adcAll(id) == d, s"vec $id: $d vs ${adcAll(id)}") }
   }
 
-  test("appendIvfPq: file-additive append, probe equals the batch-encoded union") {
+  test("AnnIndex.append: file-additive append, probe equals the batch-encoded union") {
     import spark.implicits._
     val rnd = new scala.util.Random(7)
     val dim = 16
@@ -440,7 +440,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
         .map(p => b.relativize(p).toString).toSet
     }
     val before = dataFiles()
-    Similarity.appendIvfPq(incr, "vec_id", "embedding", ivfCb, pqCb, out)
+    AnnIndex.open(spark, out, "vec_id").append(incr, "embedding")
     val after = dataFiles()
     // the append only ADDS files — every corpus file survives by name
     // (the corpus side is never read or rewritten)
@@ -503,9 +503,9 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       ivfCb, m = 4, ks = 8)
     val base = java.nio.file.Files.createTempDirectory("graft_res_atrest").toString
     Similarity.writeIvfPqResidualPartitioned(corpus, "vec_id", "embedding",
-      ivfCb, rcb, base + "/inc")
-    Similarity.appendIvfPqResidual(incr, "vec_id", "embedding", ivfCb, rcb,
-      base + "/inc")
+      ivfCb, rcb, base + "/gen0")
+    Layouts.swapGenerationPointer(spark, base, "gen0")
+    AnnIndex.open(spark, base, "vec_id").append(incr, "embedding")
     Similarity.writeIvfPqResidualPartitioned(full, "vec_id", "embedding",
       ivfCb, rcb, base + "/full")
     val query = Array.fill(dim)(0.5)
@@ -513,7 +513,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       annProbe(p, query, k = 10, nprobe = 3)
         .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     // no-retrain append == full rewrite with the same codebooks, exactly
-    assert(probe(base + "/inc") == probe(base + "/full"))
+    assert(probe(base + "/gen0") == probe(base + "/full"))
     // at-rest residual ranking lands on the in-flight encoder's ids;
     // values agree to ulp-level (in-flight ADC associates in COMBINED
     // coordinates, at-rest in residual coordinates — the same real
@@ -529,8 +529,8 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(math.abs(a - b) < 1e-9, s"$a vs $b")
     }
     // compaction carries the rpq sidecar verbatim
-    Similarity.compactIvfPqLayout(spark, base + "/inc", base + "/gen1")
-    assert(probe(base + "/gen1") == probe(base + "/inc"))
+    AnnIndex.open(spark, base, "vec_id").compact()
+    assert(probe(base + "/gen1") == probe(base + "/gen0"))
   }
 
   test("tombstones: a retired id never resurfaces, even unfiltered on the corpus side") {
@@ -547,8 +547,9 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       ivfCb, pqCb, base + "/gen0")
     val query = Array.fill(dim)(0.5)
     val top1 = annProbe(base + "/gen0", query, k = 1, nprobe = 3).collect()(0).getLong(0)
-    Similarity.compactIvfPqLayout(spark, base + "/gen0", base + "/gen1",
-      dropIds = Some(Seq(top1).toDF("vec_id")), idCol = "vec_id")
+    Layouts.swapGenerationPointer(spark, base, "gen0")
+    AnnIndex.open(spark, base, "vec_id")
+      .compact(dropIds = Some(Seq(top1).toDF("vec_id")))
     val after = annProbe(base + "/gen1", query, k = 10, nprobe = 3)
       .collect().map(_.getLong(0)).toSet
     assert(!after.contains(top1), s"retired vec $top1 still ranked")
@@ -611,16 +612,6 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       query, k = 5, nlist = 4, m = 4, ks = 8,
       ivfCb = Some(ivfCb), pqCb = Some(pqCb)))
     assert(raw == rawInFlight, s"$raw vs $rawInFlight")
-    // and appends can't poison across encodings either
-    val batch = Seq((200L, Array.fill(dim)(0.1f))).toDF("vec_id", "embedding")
-    intercept[IllegalStateException] {
-      Similarity.appendIvfPq(batch, "vec_id", "embedding", ivfCb, pqCb,
-        base + "/res")
-    }
-    intercept[IllegalStateException] {
-      Similarity.appendIvfPqResidual(batch, "vec_id", "embedding", ivfCb, rcb,
-        base + "/raw")
-    }
   }
 
   // a raw-PQ probe used to rank nothing at nprobe = 0 (an empty cell
@@ -650,7 +641,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(index.probe(query, k = 5, nprobe = 1).count() > 0)
     }
 
-  test("compactIvfPqLayout: one file per cell, rows preserved, sidecar carried") {
+  test("AnnIndex.compact: one file per cell, rows preserved, sidecar carried") {
     import spark.implicits._
     val rnd = new scala.util.Random(19)
     val dim = 16
@@ -661,14 +652,15 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val base = java.nio.file.Files.createTempDirectory("graft_compact").toString
     Similarity.writeIvfPqPartitioned(corpus, "vec_id", "embedding",
       ivfCb, pqCb, base + "/gen0")
+    Layouts.swapGenerationPointer(spark, base, "gen0")
+    val index = AnnIndex.open(spark, base, "vec_id")
     // three daily appends -> small-file sprawl in the touched cells
     Seq(0, 1, 2).foreach { day =>
       val batch = rows.filter(t => t._1 % 5 == 0 && t._1 % 3 == day)
         .toDF("vec_id", "embedding")
-      Similarity.appendIvfPq(batch, "vec_id", "embedding", ivfCb, pqCb,
-        base + "/gen0")
+      index.append(batch, "embedding")
     }
-    Similarity.compactIvfPqLayout(spark, base + "/gen0", base + "/gen1")
+    index.compact()
     def filesPerCell(p: String): Map[String, Int] = {
       import scala.jdk.CollectionConverters._
       java.nio.file.Files.walk(java.nio.file.Paths.get(p)).iterator().asScala
@@ -724,16 +716,9 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       ivfCb = Some(ivfCb), pqCb = Some(pqCb))
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     assert(fromFiles == explicit, s"$fromFiles vs $explicit")
-    // appending with DIFFERENT codebooks fails fast, naming the hazard
-    val otherPq = Similarity.pqCodebooks(
-      df.where(col("vec_id") >= 50L), "vec_id", "embedding", m = 4, ks = 8)
+    // the handle appends with the stored codebooks
     val batch = Seq((200L, Array.fill(dim)(0.1f))).toDF("vec_id", "embedding")
-    val e = intercept[IllegalArgumentException] {
-      Similarity.appendIvfPq(batch, "vec_id", "embedding", ivfCb, otherPq, out)
-    }
-    assert(e.getMessage.contains("mis-cells"), e.getMessage)
-    // matching codebooks append fine
-    Similarity.appendIvfPq(batch, "vec_id", "embedding", ivfCb, pqCb, out)
+    loaded.append(batch, "embedding")
     assert(spark.read.parquet(out).count() == 121)
   }
 
@@ -1307,8 +1292,10 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       .toDF("vec_id", "embedding")
     val ivfCb = Similarity.ivfCodebook(df, "vec_id", "embedding", nlist = 4)
     val pqCb = Similarity.pqCodebooks(df, "vec_id", "embedding", m = 2, ks = 4)
-    val out = java.nio.file.Files.createTempDirectory("graft_cb_empty").toString + "/layout"
+    val root = java.nio.file.Files.createTempDirectory("graft_cb_empty").toString
+    val out = root + "/gen0"
     Similarity.writeIvfPqPartitioned(df, "vec_id", "embedding", ivfCb, pqCb, out)
+    Layouts.swapGenerationPointer(spark, root, "gen0")
     val cbDir = java.nio.file.Paths.get(out, "_codebooks")
     import scala.jdk.CollectionConverters._
     java.nio.file.Files.list(cbDir).iterator().asScala.toSeq
@@ -1321,21 +1308,20 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // hazard), not skip validation as if the sidecar were absent
     val batch = Seq((200L, Array.fill(8)(0.1f))).toDF("vec_id", "embedding")
     intercept[IllegalStateException] {
-      Similarity.appendIvfPq(batch, "vec_id", "embedding", ivfCb, pqCb, out)
+      AnnIndex.open(spark, out, "vec_id").append(batch, "embedding")
     }
     // a compaction of the corrupt layout fails with the curated
     // message BEFORE any dst write — no partial generation left
     // behind (r15 ADVICE)
-    val dst = out + "_gen1"
+    val dst = root + "/gen1"
     intercept[IllegalStateException] {
-      Similarity.compactIvfPqLayout(spark, out, dst)
+      AnnIndex.open(spark, root, "vec_id").compact()
     }
     assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(dst)),
       "a failed compaction must not leave a partial dst generation")
     // a sidecar-LESS layout still reads as absent (pre-sidecar compat)
     java.nio.file.Files.delete(cbDir)
     assert(!Similarity.hasIvfPqCodebooks(spark, out))
-    Similarity.appendIvfPq(batch, "vec_id", "embedding", ivfCb, pqCb, out)
   }
 
   test("Dedup.incrementalNearDup: broadcast and shuffle regimes compute identically") {
@@ -2054,7 +2040,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(ok == Seq((1L, 10L, 1L, 0L, 0L)), s"$ok")
   }
 
-  test("maintainIvfPq: in-distribution appends, drifted rebuilds, both layouts answer") {
+  test("AnnIndex.maintain: in-distribution appends, drifted rebuilds, both layouts answer") {
     import spark.implicits._
     val rnd = new scala.util.Random(91)
     val dim = 16
@@ -2070,21 +2056,25 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val ivfCb = Similarity.ivfCodebook(corpus, "vec_id", "embedding", nlist = 4)
     val pqCb = Similarity.pqCodebooks(corpus, "vec_id", "embedding", m = 4, ks = 16)
     val base = java.nio.file.Files.createTempDirectory("graft_maintain").toString
+    // one pointered store root per scenario: a/, b/, r/
+    def store(name: String): AnnIndex = {
+      Layouts.swapGenerationPointer(spark, s"$base/$name", "gen0")
+      AnnIndex.open(spark, s"$base/$name", "vec_id")
+    }
     Similarity.writeIvfPqPartitioned(corpus, "vec_id", "embedding",
-      ivfCb, pqCb, base + "/a0")
+      ivfCb, pqCb, base + "/a/gen0")
     Similarity.writeIvfPqPartitioned(corpus, "vec_id", "embedding",
-      ivfCb, pqCb, base + "/b0")
+      ivfCb, pqCb, base + "/b/gen0")
     val q = Array.fill(dim)(1.0)
     // in-distribution: the stored tables describe the batch within the
     // threshold -> append in place; the layout then answers over
     // corpus ∪ batch exactly as the in-flight face with the SAME
     // (stored) codebooks
-    val ra = Similarity.maintainIvfPq(spark, base + "/a0", corpus, indist,
-      "vec_id", "embedding", base + "/a1")
+    val ra = store("a").maintain(corpus, indist, "embedding")
     assert(ra.action == "append", s"$ra")
-    assert(ra.layout == base + "/a0")
+    assert(ra.layout == base + "/a/gen0")
     assert(ra.storedErr <= 2.0 * ra.freshErr, s"$ra")
-    val atRest = annProbe(base + "/a0", q, k = 5, nprobe = 2)
+    val atRest = annProbe(base + "/a", q, k = 5, nprobe = 2)
       .as[(Long, Double)].collect().toSeq
     val inFlight = Similarity.ivfPqTopK(corpus.unionByName(indist),
       "vec_id", "embedding", q, k = 5, nlist = 4, nprobe = 2, m = 4, ks = 16,
@@ -2092,72 +2082,64 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       .as[(Long, Double)].collect().toSeq
     assert(atRest == inFlight, s"$atRest vs $inFlight")
     // nothing was written at the rebuild target on the append path
-    assert(!new java.io.File(base + "/a1").exists())
+    assert(!new java.io.File(base + "/a/gen1").exists())
     // drifted: the stored tables describe the batch ~1000x worse than
     // its own -> retrain on corpus ∪ batch into a NEW generation; the
     // rebuilt layout is self-contained and answers as the in-flight
     // face with codebooks derived from the union
-    val rb = Similarity.maintainIvfPq(spark, base + "/b0", corpus, drifted,
-      "vec_id", "embedding", base + "/b1")
+    val rb = store("b").maintain(corpus, drifted, "embedding")
     assert(rb.action == "rebuild", s"$rb")
-    assert(rb.layout == base + "/b1")
+    assert(rb.layout == base + "/b/gen1")
     assert(rb.storedErr > 2.0 * rb.freshErr, s"$rb")
     val all = corpus.unionByName(drifted)
     val newIvf = Similarity.ivfCodebook(all, "vec_id", "embedding", nlist = 4)
     val newPq = Similarity.pqCodebooks(all, "vec_id", "embedding", m = 4, ks = 16)
-    val atRest2 = annProbe(base + "/b1", q, k = 5, nprobe = 2)
+    val atRest2 = annProbe(base + "/b/gen1", q, k = 5, nprobe = 2)
       .as[(Long, Double)].collect().toSeq
     val inFlight2 = Similarity.ivfPqTopK(all, "vec_id", "embedding", q,
       k = 5, nlist = 4, nprobe = 2, m = 4, ks = 16,
       ivfCb = Some(newIvf), pqCb = Some(newPq))
       .as[(Long, Double)].collect().toSeq
     assert(atRest2 == inFlight2, s"$atRest2 vs $inFlight2")
-    // the original generation is untouched by the rebuild (LSM pointer
-    // swap is the caller's move)
-    assert(annProbe(base + "/b0", q, k = 5, nprobe = 2).count() == 5)
+    // the original generation is untouched by the rebuild, which only
+    // moved the pointer
+    assert(annProbe(base + "/b/gen0", q, k = 5, nprobe = 2).count() == 5)
     // KIND-AWARENESS: the same decisions on a RESIDUAL ('rpq') layout,
     // with residual scoring, residual appends and an 'rpq' rebuild
     val rcb = Similarity.residualPqCodebooks(corpus, "vec_id", "embedding",
       ivfCb, m = 4, ks = 16)
     Similarity.writeIvfPqResidualPartitioned(corpus, "vec_id", "embedding",
-      ivfCb, rcb, base + "/r0")
-    val rr = Similarity.maintainIvfPq(spark, base + "/r0", corpus, indist,
-      "vec_id", "embedding", base + "/r1")
+      ivfCb, rcb, base + "/r/gen0")
+    val rIndex = store("r")
+    val rr = rIndex.maintain(corpus, indist, "embedding")
     assert(rr.action == "append", s"$rr")
-    val rAtRest = annProbe(base + "/r0", q, k = 5, nprobe = 2)
+    val rAtRest = annProbe(base + "/r", q, k = 5, nprobe = 2)
       .as[(Long, Double)].collect().toSeq
     val rInFlight = Similarity.ivfPqResidualTopK(corpus.unionByName(indist),
       "vec_id", "embedding", q, k = 5, nlist = 4, nprobe = 2, m = 4, ks = 16,
       ivfCb = Some(ivfCb), residualCb = Some(rcb))
       .as[(Long, Double)].collect().toSeq
     assert(rAtRest == rInFlight, s"$rAtRest vs $rInFlight")
-    val rd = Similarity.maintainIvfPq(spark, base + "/r0", corpus, drifted,
-      "vec_id", "embedding", base + "/r2")
+    val rd = rIndex.maintain(corpus, drifted, "embedding")
     assert(rd.action == "rebuild", s"$rd")
     // the rebuilt generation is an 'rpq' layout answering residual
     // probes — a raw rebuild here would poison every future probe
-    assert(AnnIndex.open(spark, base + "/r2", "vec_id").kind == "rpq")
-    assert(annProbe(base + "/r2", q, k = 5, nprobe = 2).count() == 5)
+    assert(AnnIndex.open(spark, base + "/r", "vec_id").kind == "rpq")
+    assert(annProbe(base + "/r", q, k = 5, nprobe = 2).count() == 5)
     // a trickle batch (<= ks rows) always appends: its own stand-in
     // codebooks memorize it (freshErr = 0) and the raw comparison
     // would spuriously retrain the whole corpus
     val trickle = sample(8, 25.0, 3000L).toDF("vec_id", "embedding")
-    val rc = Similarity.maintainIvfPq(spark, base + "/a0", corpus, trickle,
-      "vec_id", "embedding", base + "/a2")
+    val rc = AnnIndex.open(spark, base + "/a", "vec_id")
+      .maintain(corpus, trickle, "embedding")
     assert(rc.action == "append", s"$rc")
     assert(rc.freshErr == 0.0, s"$rc")
-    // curated refusals: a sub-1.0 threshold rebuilds every batch; an
-    // in-place rebuild target would clobber the files it reads
+    // curated refusal: a sub-1.0 threshold rebuilds every batch
     val e1 = intercept[IllegalArgumentException] {
-      Similarity.maintainIvfPq(spark, base + "/a0", corpus, indist,
-        "vec_id", "embedding", base + "/x", driftThreshold = 0.5)
+      AnnIndex.open(spark, base + "/a", "vec_id")
+        .maintain(corpus, indist, "embedding", driftThreshold = 0.5)
     }
     assert(e1.getMessage.contains("below 1.0"), e1.getMessage)
-    val e2 = intercept[IllegalArgumentException] {
-      Similarity.maintainIvfPq(spark, base + "/a0", corpus, indist,
-        "vec_id", "embedding", base + "/a0")
-    }
-    assert(e2.getMessage.contains("rebuildAt"), e2.getMessage)
   }
 
   test("ivfPqTopKBatchFromFiles: per-query parity with the single probe, one scan, disjoint probe sets masked") {
@@ -2218,21 +2200,24 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val base = java.nio.file.Files.createTempDirectory("graft_driftseries").toString
     Similarity.writeIvfPqPartitioned(corpus, "vec_id", "embedding",
       ivfCb, pqCb, base + "/gen0")
+    Layouts.swapGenerationPointer(spark, base, "gen0")
+    // the monitor tick: a fresh handle on the store root each run
+    def monitor(driftOut: String, root: String, corpus: DataFrame) =
+      AnnIndex.open(spark, root, "vec_id")
+        .maintainFromDriftSeries(driftOut, corpus, "embedding", window = 2)
     val batches = Seq(
       sample(24, 0.0, 1000L), sample(24, 0.0, 2000L),   // in-distribution
       sample(24, 25.0, 3000L), sample(24, 25.0, 4000L)) // drifted
       .map(_.toDF("vec_id", "embedding"))
     def ingest(upTo: Int): Unit = (0 until upTo).foreach { i =>
-      StreamingSimilarity.ingestBatch(batches(i), i.toLong, base + "/gen0",
+      StreamingSimilarity.ingestBatch(batches(i), i.toLong, base,
         "vec_id", "embedding", Some(base + "/drift"))
     }
     // an in-distribution prefix (shorter than 2 windows) KEEPS — the
     // monitor never compares a series against itself
     ingest(2)
     val allSoFar = corpus.unionByName(batches(0)).unionByName(batches(1))
-    val r1 = Similarity.maintainFromDriftSeries(spark, base + "/drift",
-      base + "/gen0", allSoFar, "vec_id", "embedding", base + "/gen1",
-      window = 2)
+    val r1 = monitor(base + "/drift", base, allSoFar)
     assert(r1.action == "keep", s"$r1")
     assert(r1.layout == base + "/gen0")
     assert(r1.batches == 2)
@@ -2245,9 +2230,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(series.map(_._1) == Seq(0L, 1L, 2L, 3L), s"$series")
     assert(series(2)._2 > series(0)._2 * 100, s"$series")
     val all = batches.foldLeft(corpus)(_ unionByName _)
-    val r2 = Similarity.maintainFromDriftSeries(spark, base + "/drift",
-      base + "/gen0", all, "vec_id", "embedding", base + "/gen1",
-      window = 2)
+    val r2 = monitor(base + "/drift", base, all)
     assert(r2.action == "rebuild", s"$r2")
     assert(r2.layout == base + "/gen1")
     assert(r2.trailingErr > 2.0 * r2.baselineErr, s"$r2")
@@ -2269,83 +2252,71 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(atRest == inFlight, s"$atRest vs $inFlight")
     // exactly ONE rebuild happened across both calls: gen1 was absent
     // until the drifted series demanded it (asserted above), and the
-    // old generation is untouched (LSM pointer swap is the caller's)
+    // old generation is untouched (the rebuild only moved the pointer)
     assert(annProbe(base + "/gen0", q, k = 8, nprobe = 2).count() == 8)
     // the FENCE: the reports the rebuild consumed never re-fire it —
     // the immediate re-run (the recurring monitor's next tick) keeps,
     // with an empty post-fence series
-    val r2b = Similarity.maintainFromDriftSeries(spark, base + "/drift",
-      base + "/gen0", all, "vec_id", "embedding", base + "/gen1b",
-      window = 2)
+    val r2b = monitor(base + "/drift", base, all)
     assert(r2b.action == "keep" && r2b.batches == 0, s"$r2b")
-    assert(!new java.io.File(base + "/gen1b").exists())
+    assert(!new java.io.File(base + "/gen2").exists())
     // a fresh post-fence window CAN rebuild again — but never onto an
-    // existing generation (the crashed-rebuild / live-generation guard)
+    // existing generation (the crashed-rebuild / live-generation guard:
+    // here an unfenced gen2 a crashed rebuild left behind)
     Seq(sample(24, 0.0, 5000L), sample(24, 0.0, 6000L),
         sample(24, 25.0, 7000L), sample(24, 25.0, 8000L))
       .zipWithIndex.foreach { case (rows, i) =>
         StreamingSimilarity.ingestBatch(rows.toDF("vec_id", "embedding"),
-          (4 + i).toLong, base + "/gen0", "vec_id", "embedding",
+          (4 + i).toLong, base, "vec_id", "embedding",
           Some(base + "/drift"))
       }
+    assert(new java.io.File(base + "/gen2").mkdirs())
     val eExists = intercept[IllegalArgumentException] {
-      Similarity.maintainFromDriftSeries(spark, base + "/drift",
-        base + "/gen0", all, "vec_id", "embedding", base + "/gen1",
-        window = 2)
+      monitor(base + "/drift", base, all)
     }
     assert(eExists.getMessage.contains("already exists"), eExists.getMessage)
+    Layouts.delete(spark, base + "/gen2")
     // pruning drops exactly the consumed reports (<= fence): the
     // dashboard read then shows only live history, and the next
     // decision is unchanged
     assert(Similarity.pruneDriftSeries(spark, base + "/drift") == 4)
     assert(Similarity.readDriftSeries(spark, base + "/drift")
       .as[(Long, Double)].collect().map(_._1).toSeq == Seq(4L, 5L, 6L, 7L))
-    val r4 = Similarity.maintainFromDriftSeries(spark, base + "/drift",
-      base + "/gen0", all, "vec_id", "embedding", base + "/gen2",
-      window = 2)
+    val r4 = monitor(base + "/drift", base, all)
     assert(r4.action == "rebuild" && r4.batches == 4, s"$r4")
     // KIND-AWARENESS: an 'rpq' layout's monitor scores residual
     // distortion per batch and its rebuild writes an 'rpq' generation
     val rcb = Similarity.residualPqCodebooks(corpus, "vec_id", "embedding",
       ivfCb, m = 4, ks = 16)
     Similarity.writeIvfPqResidualPartitioned(corpus, "vec_id", "embedding",
-      ivfCb, rcb, base + "/r0")
+      ivfCb, rcb, base + "/r/gen0")
+    Layouts.swapGenerationPointer(spark, base + "/r", "gen0")
     Seq(sample(24, 0.0, 11000L), sample(24, 0.0, 12000L),
         sample(24, 25.0, 13000L), sample(24, 25.0, 14000L))
       .zipWithIndex.foreach { case (rows, i) =>
         StreamingSimilarity.ingestBatch(rows.toDF("vec_id", "embedding"),
-          i.toLong, base + "/r0", "vec_id", "embedding",
+          i.toLong, base + "/r", "vec_id", "embedding",
           Some(base + "/rdrift"))
       }
-    val r5 = Similarity.maintainFromDriftSeries(spark, base + "/rdrift",
-      base + "/r0", all, "vec_id", "embedding", base + "/r1", window = 2)
+    val r5 = monitor(base + "/rdrift", base + "/r", all)
     assert(r5.action == "rebuild", s"$r5")
-    assert(AnnIndex.open(spark, base + "/r1", "vec_id").kind == "rpq")
-    assert(annProbe(base + "/r1", q, k = 8, nprobe = 2).count() == 8)
+    assert(AnnIndex.open(spark, base + "/r/gen1", "vec_id").kind == "rpq")
+    assert(annProbe(base + "/r/gen1", q, k = 8, nprobe = 2).count() == 8)
     // an in-distribution trailing window on the SAME layout keeps even
     // at full length (threshold respected, not just series length)
     val calm = base + "/calm_drift"
     (0 until 4).foreach { i =>
       StreamingSimilarity.ingestBatch(sample(24, 0.0, 9000L + 100 * i)
-        .toDF("vec_id", "embedding"), i.toLong, base + "/gen0",
+        .toDF("vec_id", "embedding"), i.toLong, base,
         "vec_id", "embedding", Some(calm))
     }
-    val r3 = Similarity.maintainFromDriftSeries(spark, calm,
-      base + "/gen0", all, "vec_id", "embedding", base + "/gen3",
-      window = 2)
+    val r3 = monitor(calm, base, all)
     assert(r3.action == "keep", s"$r3")
     // an unfenced series refuses the prune (nothing provably consumed)
     val ePrune = intercept[IllegalArgumentException] {
       Similarity.pruneDriftSeries(spark, calm)
     }
     assert(ePrune.getMessage.contains("fence"), ePrune.getMessage)
-    // curated refusal: an in-place rebuild target would clobber the
-    // files the live stream and the retrain read
-    val e1 = intercept[IllegalArgumentException] {
-      Similarity.maintainFromDriftSeries(spark, base + "/drift",
-        base + "/gen0", all, "vec_id", "embedding", base + "/gen0")
-    }
-    assert(e1.getMessage.contains("rebuildAt"), e1.getMessage)
     // FORMAT-UPGRADE: a series mixing pre-round-18 batches (which also
     // embedded ingest_batch as a data column, equal to the directory
     // value by construction) with new directory-only batches reads
@@ -2377,20 +2348,18 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       ivfCb, rcb, base + "/streamed")
     assert(AnnIndex.open(spark, base + "/streamed", "vec_id").kind == "rpq")
     // the kind-agnostic increment append must pick the RESIDUAL encoder
-    Similarity.appendIvfPqIncrement(b1, "vec_id", "embedding",
-      base + "/streamed", 0L)
-    Similarity.appendIvfPqIncrement(b2, "vec_id", "embedding",
-      base + "/streamed", 1L)
+    val streamedIndex = AnnIndex.open(spark, base + "/streamed", "vec_id")
+    streamedIndex.appendIncrement(b1, "embedding", 0L)
+    streamedIndex.appendIncrement(b2, "embedding", 1L)
     val query = Array.fill(dim)(0.5)
     val streamed = annProbe(base + "/streamed", query, k = 8, nprobe = 2)
       .as[(Long, Double)].collect().toSeq
-    // batch-face parity: the same batches through appendIvfPqResidual
+    // batch-face parity: the same batches through the handle's append
     Similarity.writeIvfPqResidualPartitioned(corpus, "vec_id", "embedding",
       ivfCb, rcb, base + "/batched")
-    Similarity.appendIvfPqResidual(b1, "vec_id", "embedding", ivfCb, rcb,
-      base + "/batched")
-    Similarity.appendIvfPqResidual(b2, "vec_id", "embedding", ivfCb, rcb,
-      base + "/batched")
+    val batchedIndex = AnnIndex.open(spark, base + "/batched", "vec_id")
+    batchedIndex.append(b1, "embedding")
+    batchedIndex.append(b2, "embedding")
     val batched = annProbe(base + "/batched", query, k = 8, nprobe = 2)
       .as[(Long, Double)].collect().toSeq
     assert(streamed == batched, s"$streamed vs $batched")
@@ -2428,7 +2397,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       ivfCb, m = 4, ks = 8)
     // an appended batch from the TRAINED distribution scores like the
     // corpus; a shifted batch scores measurably worse — the rebuild
-    // signal appendIvfPq's scaladoc prices
+    // signal AnnIndex.maintain gates on
     val inDist = sample(60, 0.0, 1000L).toDF("vec_id", "embedding")
     val shifted = sample(60, 3.0, 2000L).toDF("vec_id", "embedding")
     val dIn = Similarity.ivfPqDistortion(inDist, "embedding", ivfCb, pqCb,
@@ -2503,8 +2472,9 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val pqCb = Similarity.pqCodebooks(vecs, "vec_id", "embedding", m = 4, ks = 2)
     Similarity.writeIvfPqPartitioned(vecs, "vec_id", "embedding",
       ivfCb, pqCb, base + "/gen0")
-    Similarity.compactIvfPqLayout(spark, base + "/gen0", base + "/gen1",
-      dropIds = Some(removed.toDF("vec_id")), idCol = "vec_id")
+    Layouts.swapGenerationPointer(spark, base, "gen0")
+    AnnIndex.open(spark, base, "vec_id")
+      .compact(dropIds = Some(removed.toDF("vec_id")))
     val ranked = annProbe(base + "/gen1", Array.fill(dim)(0.5), k = 10, nprobe = 2)
       .collect().map(_.getLong(0)).toSet
     assert(!ranked.contains(0L) && ranked == Set(100L, 7L))
@@ -2524,14 +2494,14 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val base = java.nio.file.Files.createTempDirectory("graft_partial_dst").toString
     Similarity.writeIvfPqPartitioned(df, "vec_id", "embedding", ivfCb, pqCb,
       base + "/gen0")
+    Layouts.swapGenerationPointer(spark, base, "gen0")
     // a tombstone frame that throws at EXECUTION time fails the data
     // write job itself, after validation and the sidecar copy
     val boom = udf((id: Long) =>
       if (id >= 0) throw new RuntimeException("boom") else id)
     val badDrop = df.select(boom(col("vec_id")).as("vec_id"))
     intercept[org.apache.spark.SparkException] {
-      Similarity.compactIvfPqLayout(spark, base + "/gen0", base + "/gen1",
-        dropIds = Some(badDrop), idCol = "vec_id")
+      AnnIndex.open(spark, base, "vec_id").compact(dropIds = Some(badDrop))
     }
     assert(Similarity.hasIvfPqCodebooks(spark, base + "/gen1"),
       "partial dst generation must carry the sidecar (detectable)")
@@ -2547,8 +2517,9 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(Dedup.readNearDupIndexMeta(spark, base + "/idx1")
       .contains((128, 32, 3)),
       "partial idx generation must carry _meta (detectable)")
-    // and a rerun of the compaction clears the partial generation
-    Similarity.compactIvfPqLayout(spark, base + "/gen0", base + "/gen1")
+    // and a rerun of the compaction clears the partial generation (the
+    // failed run never moved the pointer)
+    AnnIndex.open(spark, base, "vec_id").compact()
     assert(spark.read.parquet(base + "/gen1").count() == 40)
     Dedup.compactNearDupIndex(spark, base + "/idx0", base + "/idx1")
     assert(Dedup.nearDupPairsFromIndex(base + "/idx1", corpus,
@@ -2626,16 +2597,16 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val q = Array.fill(dim)(1.0)
     assert(annProbe(root, q, k = 5, nprobe = 2).count() == 5)
     // in-distribution: append in place, pointer unmoved
-    val ra = Similarity.maintainPointedIvfPq(spark, root, corpus, indist,
-      "vec_id", "embedding")
+    val ra = AnnIndex.open(spark, root, "vec_id")
+      .maintain(corpus, indist, "embedding")
     assert(ra.action == "append" && ra.layout == root + "/gen0", s"$ra")
     assert(Layouts.currentGenerationName(spark, root) == "gen0")
     // drifted: rebuild into gen1 with the pointer swapped INSIDE the
     // quiesce window; marker released after; the ROOT probe answers
     // from the new generation with union-retrained codebooks
     val all = corpus.unionByName(indist).unionByName(drifted)
-    val rb = Similarity.maintainPointedIvfPq(spark, root,
-      corpus.unionByName(indist), drifted, "vec_id", "embedding")
+    val rb = AnnIndex.open(spark, root, "vec_id")
+      .maintain(corpus.unionByName(indist), drifted, "embedding")
     assert(rb.action == "rebuild" && rb.layout == root + "/gen1", s"$rb")
     assert(Layouts.currentGenerationName(spark, root) == "gen1")
     assert(!Layouts.exists(spark, root + "/gen0/" + Layouts.QuiesceMarker))
@@ -2650,8 +2621,8 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // a second drifted wave: gen2; vacuum keep=1 then reclaims gen0 +
     // gen1, spares the pointed-at generation, probes unaffected
     val drifted2 = sample(48, 50.0, 3000L).toDF("vec_id", "embedding")
-    val rc = Similarity.maintainPointedIvfPq(spark, root, all, drifted2,
-      "vec_id", "embedding")
+    val rc = AnnIndex.open(spark, root, "vec_id")
+      .maintain(all, drifted2, "embedding")
     assert(rc.action == "rebuild" && rc.layout == root + "/gen2", s"$rc")
     val gone = Layouts.vacuumGenerations(spark, root, keep = 1)
     assert(gone == Seq("gen0", "gen1"), s"$gone")
@@ -2670,10 +2641,101 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       ivfCb, pqCb, side)
     Layouts.swapGenerationPointer(spark, root, "side")
     val eName = intercept[IllegalArgumentException] {
-      Similarity.maintainPointedIvfPq(spark, root, corpus, drifted,
-        "vec_id", "embedding")
+      AnnIndex.open(spark, root, "vec_id").maintain(corpus, drifted, "embedding")
     }
     assert(eName.getMessage.contains("gen<k>"), eName.getMessage)
+  }
+
+  test("a stale AnnIndex handle refuses every lifecycle step; a plain layout refuses maintain and compact") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(61)
+    val dim = 16
+    def sample(n: Int, off: Double, base: Long) =
+      clusterSample(rnd, dim)(n, off, base)
+    val corpus = sample(64, 0.0, 0L).toDF("vec_id", "embedding")
+    val batch = sample(24, 0.0, 1000L).toDF("vec_id", "embedding")
+    val drifted = sample(48, 25.0, 2000L).toDF("vec_id", "embedding")
+    val ivfCb = Similarity.ivfCodebook(corpus, "vec_id", "embedding", nlist = 4)
+    val pqCb = Similarity.pqCodebooks(corpus, "vec_id", "embedding", m = 4, ks = 16)
+    val root = java.nio.file.Files.createTempDirectory("graft_stale").toString
+    Similarity.writeIvfPqPartitioned(corpus, "vec_id", "embedding",
+      ivfCb, pqCb, root + "/gen0")
+    Layouts.swapGenerationPointer(spark, root, "gen0")
+    // every file under a generation, hidden and underscore ones included
+    def files(gen: String): Set[String] = {
+      import scala.jdk.CollectionConverters._
+      val dir = java.nio.file.Paths.get(root, gen)
+      java.nio.file.Files.walk(dir).iterator().asScala
+        .map(p => dir.relativize(p).toString).toSet
+    }
+    // a handle whose generation the pointer moved off refuses each step
+    // curated, and writes nothing into the superseded generation
+    def refusesStale(stale: AnnIndex, gen: String): Unit = {
+      val before = files(gen)
+      Seq[(String, () => Any)](
+        "append" -> (() => stale.append(batch, "embedding")),
+        "appendIncrement" -> (() => stale.appendIncrement(batch, "embedding", 0L)),
+        "maintain" -> (() => stale.maintain(corpus, drifted, "embedding")),
+        "maintainFromDriftSeries" -> (() =>
+          stale.maintainFromDriftSeries(root + "/drift", corpus, "embedding")),
+        "compact" -> (() => stale.compact())
+      ).foreach { case (face, call) =>
+        val e = intercept[IllegalStateException](call())
+        assert(e.getMessage.startsWith(face) && e.getMessage.contains("moved off"),
+          e.getMessage)
+      }
+      assert(files(gen) == before, s"a stale handle wrote into $gen")
+    }
+    // two handles on gen0: one compacts, the other is now stale
+    val compactor = AnnIndex.open(spark, root, "vec_id")
+    val staleAfterCompact = AnnIndex.open(spark, root, "vec_id")
+    assert(compactor.compact() == root + "/gen1")
+    refusesStale(staleAfterCompact, "gen0")
+    // two handles on gen1: one maintains down the rebuild path
+    val maintainer = AnnIndex.open(spark, root, "vec_id")
+    val staleAfterRebuild = AnnIndex.open(spark, root, "vec_id")
+    val r = maintainer.maintain(corpus, drifted, "embedding")
+    assert(r.action == "rebuild" && r.layout == root + "/gen2", s"$r")
+    refusesStale(staleAfterRebuild, "gen1")
+    // a reopened handle follows the pointer and appends into gen2
+    AnnIndex.open(spark, root, "vec_id").append(batch, "embedding")
+    assert(spark.read.parquet(root + "/gen2").count() == 64 + 48 + 24)
+    // a plain (unpointered) layout appends, but has no next generation
+    // to rebuild or compact into: the refusal names the pointer's init
+    val plain = java.nio.file.Files.createTempDirectory("graft_plain").toString +
+      "/layout"
+    Similarity.writeIvfPqPartitioned(corpus, "vec_id", "embedding",
+      ivfCb, pqCb, plain)
+    val p = AnnIndex.open(spark, plain, "vec_id")
+    Seq[() => Any](() => p.maintain(corpus, drifted, "embedding"),
+        () => p.compact()).foreach { call =>
+      val e = intercept[IllegalStateException](call())
+      assert(e.getMessage.contains("Layouts.swapGenerationPointer"), e.getMessage)
+    }
+    p.append(batch, "embedding")
+    assert(spark.read.parquet(plain).count() == 64 + 24)
+  }
+
+  test("a sidecar overwrite keeps the old sidecar until the new one is written") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.{LongType, StructField, StructType}
+    val dir = java.nio.file.Files.createTempDirectory("graft_sidecar_overwrite")
+      .toString + "/_rebuilt"
+    val schema = StructType(Seq(StructField("through_batch", LongType, nullable = false)))
+    Layouts.writeSidecar(spark, dir, schema, Seq(Row(7L)))
+    // a row that fails conversion fails the overwrite mid-encode: the
+    // live sidecar must still read back its old rows
+    intercept[ClassCastException] {
+      Layouts.writeSidecar(spark, dir, schema, Seq(Row("not a long")))
+    }
+    assert(Layouts.collectSidecar(spark, dir, "test").map(_.getLong(0)).toSeq ==
+      Seq(7L))
+    // a good overwrite replaces the rows and leaves one part, no temp
+    Layouts.writeSidecar(spark, dir, schema, Seq(Row(8L)))
+    assert(Layouts.collectSidecar(spark, dir, "test").map(_.getLong(0)).toSeq ==
+      Seq(8L))
+    val names = new java.io.File(dir).list().filterNot(_.endsWith(".crc")).toSeq
+    assert(names.length == 1 && names.head.startsWith("part-"), s"$names")
   }
 
   test("trained rebuilds beat the stand-in on distortion, both kinds") {
@@ -2688,23 +2750,26 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val ivfCb = Similarity.ivfCodebook(corpus, "vec_id", "embedding", nlist = 4)
     val pqCb = Similarity.pqCodebooks(corpus, "vec_id", "embedding", m = 4, ks = 16)
     val base = java.nio.file.Files.createTempDirectory("graft_trained").toString
+    // one pointered store root per rebuild
+    def store(tag: String): AnnIndex = {
+      Layouts.swapGenerationPointer(spark, s"$base/$tag", "gen0")
+      AnnIndex.open(spark, s"$base/$tag", "vec_id")
+    }
     // RAW kind: one stand-in rebuild, one trained rebuild, same fixture
     Seq("s", "t").foreach { tag =>
       Similarity.writeIvfPqPartitioned(corpus, "vec_id", "embedding",
-        ivfCb, pqCb, base + s"/${tag}0")
+        ivfCb, pqCb, base + s"/$tag/gen0")
     }
-    val rs = Similarity.maintainIvfPq(spark, base + "/s0", corpus, drifted,
-      "vec_id", "embedding", base + "/s1")
-    val rt = Similarity.maintainIvfPq(spark, base + "/t0", corpus, drifted,
-      "vec_id", "embedding", base + "/t1", trained = true)
+    val rs = store("s").maintain(corpus, drifted, "embedding")
+    val rt = store("t").maintain(corpus, drifted, "embedding", trained = true)
     assert(rs.action == "rebuild" && rt.action == "rebuild", s"$rs $rt")
     def codebooks(p: String, kind: String) = {
       val idx = AnnIndex.open(spark, p, "vec_id")
       assert(idx.kind == kind, s"$p holds ${idx.kind}")
       (idx.ivf, idx.pq)
     }
-    val (si, sp) = codebooks(base + "/s1", "pq")
-    val (ti, tp) = codebooks(base + "/t1", "pq")
+    val (si, sp) = codebooks(base + "/s", "pq")
+    val (ti, tp) = codebooks(base + "/t", "pq")
     val standinErr = Similarity.ivfPqDistortion(all, "embedding", si, sp,
       residual = false)
     val trainedErr = Similarity.ivfPqDistortion(all, "embedding", ti, tp,
@@ -2717,15 +2782,13 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       ivfCb, m = 4, ks = 16)
     Seq("rs", "rt").foreach { tag =>
       Similarity.writeIvfPqResidualPartitioned(corpus, "vec_id", "embedding",
-        ivfCb, rcb, base + s"/${tag}0")
+        ivfCb, rcb, base + s"/$tag/gen0")
     }
-    val rrs = Similarity.maintainIvfPq(spark, base + "/rs0", corpus, drifted,
-      "vec_id", "embedding", base + "/rs1")
-    val rrt = Similarity.maintainIvfPq(spark, base + "/rt0", corpus, drifted,
-      "vec_id", "embedding", base + "/rt1", trained = true)
+    val rrs = store("rs").maintain(corpus, drifted, "embedding")
+    val rrt = store("rt").maintain(corpus, drifted, "embedding", trained = true)
     assert(rrs.action == "rebuild" && rrt.action == "rebuild", s"$rrs $rrt")
-    val (rsi, rsp) = codebooks(base + "/rs1", "rpq")
-    val (rti, rtp) = codebooks(base + "/rt1", "rpq")
+    val (rsi, rsp) = codebooks(base + "/rs", "rpq")
+    val (rti, rtp) = codebooks(base + "/rt", "rpq")
     val rStandin = Similarity.ivfPqDistortion(all, "embedding", rsi, rsp,
       residual = true)
     val rTrained = Similarity.ivfPqDistortion(all, "embedding", rti, rtp,
@@ -2734,8 +2797,8 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // the trained generations are intact layouts: self-contained
     // probes answer k rows
     val q = Array.fill(dim)(1.0)
-    assert(annProbe(base + "/t1", q, k = 5, nprobe = 2).count() == 5)
-    assert(annProbe(base + "/rt1", q, k = 5, nprobe = 2).count() == 5)
+    assert(annProbe(base + "/t/gen1", q, k = 5, nprobe = 2).count() == 5)
+    assert(annProbe(base + "/rt/gen1", q, k = 5, nprobe = 2).count() == 5)
   }
 
   test("batched probes: residual and increments parity with single probes, output globally ordered") {
@@ -2758,8 +2821,8 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       ivfCb, m = 4, ks = 16)
     Similarity.writeIvfPqResidualPartitioned(corpus, "vec_id", "embedding",
       ivfCb, rcb, base + "/rlayout")
-    Similarity.appendIvfPqIncrement(incr, "vec_id", "embedding",
-      base + "/rlayout", batchId = 0L)
+    AnnIndex.open(spark, base + "/rlayout", "vec_id")
+      .appendIncrement(incr, "embedding", batchId = 0L)
     val rBatch = AnnIndex.open(spark, base + "/rlayout", "vec_id")
       .probe(qs, k = 7, nprobe = 3)
       .as[(Long, Long, Double)].collect().toSeq
@@ -2787,8 +2850,8 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       m = 4, ks = 16)
     Similarity.writeIvfPqPartitioned(corpus, "vec_id", "embedding",
       ivfCb, pqCb, base + "/player")
-    Similarity.appendIvfPqIncrement(incr, "vec_id", "embedding",
-      base + "/player", batchId = 0L)
+    AnnIndex.open(spark, base + "/player", "vec_id")
+      .appendIncrement(incr, "embedding", batchId = 0L)
     val pBatch = AnnIndex.open(spark, base + "/player", "vec_id")
       .probe(qs, k = 7, nprobe = 3)
       .as[(Long, Long, Double)].collect().toSeq
@@ -2911,19 +2974,21 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val base = java.nio.file.Files.createTempDirectory("graft_prunedrift").toString
     Similarity.writeIvfPqPartitioned(corpus, "vec_id", "embedding",
       ivfCb, pqCb, base + "/gen0")
+    Layouts.swapGenerationPointer(spark, base, "gen0")
     val batches = Seq(
       sample(24, 0.0, 1000L), sample(24, 0.0, 2000L),
       sample(24, 25.0, 3000L), sample(24, 25.0, 4000L))
       .map(_.toDF("vec_id", "embedding"))
     batches.zipWithIndex.foreach { case (b, i) =>
-      StreamingSimilarity.ingestBatch(b, i.toLong, base + "/gen0",
+      StreamingSimilarity.ingestBatch(b, i.toLong, base,
         "vec_id", "embedding", Some(base + "/drift"))
     }
     val all = batches.foldLeft(corpus)(_ unionByName _)
+    def monitor(driftOut: String, prune: Boolean = false) =
+      AnnIndex.open(spark, base, "vec_id").maintainFromDriftSeries(driftOut,
+        all, "embedding", window = 2, prune = prune)
     // prune = true: the rebuild fences AND prunes in one quiesce window
-    val r = Similarity.maintainFromDriftSeries(spark, base + "/drift",
-      base + "/gen0", all, "vec_id", "embedding", base + "/gen1",
-      window = 2, prune = true)
+    val r = monitor(base + "/drift", prune = true)
     assert(r.action == "rebuild", s"$r")
     // the series is now fence-only: it reads EMPTY with the right
     // schema (the r19 ADVICE crash — an AnalysisException dressed as
@@ -2932,13 +2997,11 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(series.columns.toSeq == Seq("ingest_batch", "pq_err"))
     assert(series.count() == 0)
     // and the monitor's next tick keeps with batches = 0, not a crash
-    val tick = Similarity.maintainFromDriftSeries(spark, base + "/drift",
-      base + "/gen0", all, "vec_id", "embedding", base + "/gen2",
-      window = 2)
+    val tick = monitor(base + "/drift")
     assert(tick.action == "keep" && tick.batches == 0, s"$tick")
     // a fresh post-prune report is visible again
     StreamingSimilarity.ingestBatch(sample(24, 0.0, 5000L)
-      .toDF("vec_id", "embedding"), 4L, base + "/gen0",
+      .toDF("vec_id", "embedding"), 4L, base,
       "vec_id", "embedding", Some(base + "/drift"))
     assert(Similarity.readDriftSeries(spark, base + "/drift")
       .as[(Long, Double)].collect().map(_._1).toSeq == Seq(4L))
@@ -2947,24 +3010,24 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val emptyDir = base + "/nothing"
     new java.io.File(emptyDir).mkdirs()
     val eEmpty = intercept[IllegalArgumentException] {
-      Similarity.maintainFromDriftSeries(spark, emptyDir,
-        base + "/gen0", all, "vec_id", "embedding", base + "/gen3")
+      monitor(emptyDir)
     }
     assert(eEmpty.getMessage.contains("no reports"), eEmpty.getMessage)
     // the quiesce handshake's second half now also covers the BATCH
     // append faces: an uncommitted write staging at the LAYOUT ROOT
-    // (_temporary) refuses the compaction
-    new java.io.File(base + "/gen0/_temporary").mkdirs()
+    // (_temporary) of the live generation (gen1 since the rebuild)
+    // refuses the compaction
+    new java.io.File(base + "/gen1/_temporary").mkdirs()
     val eRoot = intercept[IllegalStateException] {
-      Similarity.compactIvfPqLayout(spark, base + "/gen0", base + "/genC")
+      AnnIndex.open(spark, base, "vec_id").compact()
     }
     assert(eRoot.getMessage.contains("layout root"), eRoot.getMessage)
     assert(!Layouts.exists(spark,
-      base + "/gen0/" + Layouts.QuiesceMarker),
+      base + "/gen1/" + Layouts.QuiesceMarker),
       "a refused compaction must release the marker")
-    new java.io.File(base + "/gen0/_temporary").delete()
-    Similarity.compactIvfPqLayout(spark, base + "/gen0", base + "/genC")
-    assert(spark.read.parquet(base + "/genC").count() == 64 + 24 * 5)
+    new java.io.File(base + "/gen1/_temporary").delete()
+    assert(AnnIndex.open(spark, base, "vec_id").compact() == base + "/gen2")
+    assert(spark.read.parquet(base + "/gen2").count() == 64 + 24 * 5)
   }
 
   test("fanOutByKey width estimate matches the planner (r22: no double planning)") {

@@ -1,6 +1,6 @@
 package graft
 
-import graft.ops.{AnnIndex, Dedup, Sampling, Similarity}
+import graft.ops.{AnnIndex, Dedup, Layouts, Sampling, Similarity}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -498,23 +498,21 @@ object ScaleEvidence {
     val ivfCb = Similarity.ivfCodebook(corpus, "vec_id", "embedding", nlist = nCenters)
     val pqCb = Similarity.pqCodebooks(corpus, "vec_id", "embedding", m = 8, ks = 16)
     val base = java.nio.file.Files.createTempDirectory("graft-maintain-rung").toFile
-    val layout = base.getAbsolutePath + "/gen0"
+    val root = base.getAbsolutePath
     val tW = System.nanoTime()
     Similarity.writeIvfPqPartitioned(corpus, "vec_id", "embedding",
-      ivfCb, pqCb, layout)
+      ivfCb, pqCb, root + "/gen0")
+    Layouts.swapGenerationPointer(spark, root, "gen0")
     val writeSecs = (System.nanoTime() - tW) / 1e9
+    val index = AnnIndex.open(spark, root, "vec_id")
     // in-distribution batch: the steady-state path — no corpus read
     val tA = System.nanoTime()
-    val ra = Similarity.maintainIvfPq(spark, layout, corpus,
-      vecsOf(batchN, 10000000L, 0.0), "vec_id", "embedding",
-      base.getAbsolutePath + "/unused")
+    val ra = index.maintain(corpus, vecsOf(batchN, 10000000L, 0.0), "embedding")
     val appendSecs = (System.nanoTime() - tA) / 1e9
     require(ra.action == "append", s"in-distribution batch must append: $ra")
     // drifted batch: the retrain the drift signal demanded
     val tR = System.nanoTime()
-    val rb = Similarity.maintainIvfPq(spark, layout, corpus,
-      vecsOf(batchN, 20000000L, 8.0), "vec_id", "embedding",
-      base.getAbsolutePath + "/gen1")
+    val rb = index.maintain(corpus, vecsOf(batchN, 20000000L, 8.0), "embedding")
     val rebuildSecs = (System.nanoTime() - tR) / 1e9
     require(rb.action == "rebuild", s"drifted batch must rebuild: $rb")
     val nFinal = spark.read.parquet(base.getAbsolutePath + "/gen1").count()
@@ -526,7 +524,7 @@ object ScaleEvidence {
 
   /** ANN LSM rung (`annlsm:<corpusN>:<nBatches>`): the small-files
     * tax measured — a probe over base + `nBatches` streamed increment
-    * directories vs the same probe after [[Similarity.compactIvfPqLayout]]
+    * directories vs the same probe after [[AnnIndex.compact]]
     * folds them into one generation. Identical answers asserted; the
     * wall gap is the per-probe listing/open cost a year of daily
     * ingest accumulates and one compaction pays down.
@@ -555,11 +553,12 @@ object ScaleEvidence {
     val layout = base.getAbsolutePath + "/gen0"
     Similarity.writeIvfPqPartitioned(corpus, "vec_id", "embedding",
       ivfCb, pqCb, layout)
+    Layouts.swapGenerationPointer(spark, base.getAbsolutePath, "gen0")
+    val index = AnnIndex.open(spark, base.getAbsolutePath, "vec_id")
     val batchN = math.max(64L, corpusN / 50)
     (0 until nBatches).foreach { b =>
-      Similarity.appendIvfPqIncrement(
-        vecsOf(batchN, 10000000L + b * batchN), "vec_id", "embedding",
-        layout, b.toLong)
+      index.appendIncrement(vecsOf(batchN, 10000000L + b * batchN),
+        "embedding", b.toLong)
     }
     val query = centers(5).map(_ + 0.001)
     def timed[T](f: => T): (T, Double) = {
@@ -571,10 +570,7 @@ object ScaleEvidence {
       annProbe(spark, layout, query)
         .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     }
-    val (_, compactSecs) = timed {
-      Similarity.compactIvfPqLayout(spark, layout,
-        base.getAbsolutePath + "/gen1")
-    }
+    val (_, compactSecs) = timed { index.compact() }
     val (viaCompacted, compactedSecs) = timed {
       annProbe(spark, base.getAbsolutePath + "/gen1", query)
         .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
@@ -587,7 +583,7 @@ object ScaleEvidence {
 
   /** Monitor rung (`monitor:<corpusN>:<nBatches>`): the composed
     * maintenance loop's cost split measured
-    * ([[Similarity.maintainFromDriftSeries]], q159). KEEP path: reads
+    * ([[AnnIndex.maintainFromDriftSeries]], q159). KEEP path: reads
     * one KB-sized drift row per batch ever ingested — never the data;
     * its wall cost must stay flat in corpus size. REBUILD path: the
     * corpus-wide retrain + rewrite, paid exactly once, when the
@@ -615,10 +611,11 @@ object ScaleEvidence {
     val ivfCb = Similarity.ivfCodebook(corpus, "vec_id", "embedding", nlist = nCenters)
     val pqCb = Similarity.pqCodebooks(corpus, "vec_id", "embedding", m = 8, ks = 16)
     val base = java.nio.file.Files.createTempDirectory("graft-monitor-rung").toFile
-    val layout = base.getAbsolutePath + "/gen0"
+    val layout = base.getAbsolutePath
     val drift = base.getAbsolutePath + "/drift"
     Similarity.writeIvfPqPartitioned(corpus, "vec_id", "embedding",
-      ivfCb, pqCb, layout)
+      ivfCb, pqCb, layout + "/gen0")
+    Layouts.swapGenerationPointer(spark, layout, "gen0")
     val batchN = math.max(64L, corpusN / 50)
     (0 until nBatches).foreach { b =>
       graft.streaming.StreamingSimilarity.ingestBatch(
@@ -632,8 +629,8 @@ object ScaleEvidence {
     }
     // keep path: an in-distribution series — the monitor's steady state
     val (rKeep, keepSecs) = timed {
-      Similarity.maintainFromDriftSeries(spark, drift, layout, corpus,
-        "vec_id", "embedding", base.getAbsolutePath + "/gen1", window = 3)
+      AnnIndex.open(spark, layout, "vec_id")
+        .maintainFromDriftSeries(drift, corpus, "embedding", window = 3)
     }
     require(rKeep.action == "keep", s"expected keep, got $rKeep")
     // three drifted batches fill the trailing window -> one rebuild
@@ -644,8 +641,8 @@ object ScaleEvidence {
     }
     val all = corpus // the retrain corpus: pre-drift vectors (system of record)
     val (rReb, rebSecs) = timed {
-      Similarity.maintainFromDriftSeries(spark, drift, layout, all,
-        "vec_id", "embedding", base.getAbsolutePath + "/gen1", window = 3)
+      AnnIndex.open(spark, layout, "vec_id")
+        .maintainFromDriftSeries(drift, all, "embedding", window = 3)
     }
     require(rReb.action == "rebuild", s"expected rebuild, got $rReb")
     // probe parity across the swap: gen1 answers for the corpus it

@@ -447,6 +447,10 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     import graft.ops.Similarity
     import graft.streaming.StreamingSimilarity
     val base = tmp("graft_sann").getAbsolutePath
+    // a pointered store root: the stream addresses the root, the base
+    // generation is gen0 and the compaction below writes gen1
+    val root = base + "/layout"
+    val gen0 = root + "/gen0"
     val dim = 16
     // vectors deterministic PER ID, so a batch regenerates identically
     // for the crash-replay and batch-face parity checks below
@@ -458,7 +462,8 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     val ivfCb = Similarity.ivfCodebook(corpus, "vec_id", "embedding", nlist = 4)
     val pqCb = Similarity.pqCodebooks(corpus, "vec_id", "embedding", m = 4, ks = 8)
     Similarity.writeIvfPqPartitioned(corpus, "vec_id", "embedding",
-      ivfCb, pqCb, base + "/layout")
+      ivfCb, pqCb, gen0)
+    graft.ops.Layouts.swapGenerationPointer(spark, root, "gen0")
     val srcDir = new java.io.File(base + "/src"); srcDir.mkdirs()
     def stage(df: org.apache.spark.sql.DataFrame, n: Int): Unit = {
       val tmpd = new java.io.File(base + s"/stage$n")
@@ -470,7 +475,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     def runStream(): Unit = {
       val src = spark.readStream.schema(corpus.schema)
         .option("maxFilesPerTrigger", 1).parquet(srcDir.getAbsolutePath)
-      val q = StreamingSimilarity.incrementalAnnStream(src, base + "/layout",
+      val q = StreamingSimilarity.incrementalAnnStream(src, root,
         base + "/ckpt", "vec_id", "embedding",
         driftOut = Some(base + "/drift")).start()
       assert(q.awaitTermination(120000), "ANN ingest stream did not finish")
@@ -480,8 +485,8 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     runStream()
     // the batch landed in its own increment directory: plain reads of
     // the layout stay base-only, the increments face sees 40 + 10
-    assert(spark.read.parquet(base + "/layout").count() == 40)
-    val ids1 = annProbe(base + "/layout", query, k = 50, nprobe = 4)
+    assert(spark.read.parquet(gen0).count() == 40)
+    val ids1 = annProbe(root, query, k = 50, nprobe = 4)
       .select("vec_id").as[Long].collect().toSet
     assert(ids1.exists(_ >= 100L), s"batch 1 invisible to the probe: $ids1")
     // restart from the same checkpoint: batch 1 NOT reprocessed, the
@@ -489,21 +494,20 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     stage(vecs(10, 200L, 6.0).toDF("vec_id", "embedding"), 2)
     runStream()
     val counted = graft.ops.Layouts.withIncrements(spark,
-      spark.read.parquet(base + "/layout"), base + "/layout",
+      spark.read.parquet(gen0), gen0,
       Seq("vec_id", "cell", "code"), None)
     assert(counted.count() == 60)
     assert(counted.select("vec_id").distinct().count() == 60)
-    val atRest = annProbe(base + "/layout", query, k = 8, nprobe = 4)
+    val atRest = annProbe(root, query, k = 8, nprobe = 4)
       .as[(Long, Double)].collect().toSeq
     // batch parity: the SAME two batches through the batch face
-    // (appendIvfPq into a parallel generation) answer identically —
+    // (AnnIndex.append into a parallel layout) answer identically —
     // stream and batch ingest are the same operator
     Similarity.writeIvfPqPartitioned(corpus, "vec_id", "embedding",
       ivfCb, pqCb, base + "/par")
-    Similarity.appendIvfPq(vecs(10, 100L, 0.0).toDF("vec_id", "embedding"),
-      "vec_id", "embedding", ivfCb, pqCb, base + "/par")
-    Similarity.appendIvfPq(vecs(10, 200L, 6.0).toDF("vec_id", "embedding"),
-      "vec_id", "embedding", ivfCb, pqCb, base + "/par")
+    val par = graft.ops.AnnIndex.open(spark, base + "/par", "vec_id")
+    par.append(vecs(10, 100L, 0.0).toDF("vec_id", "embedding"), "embedding")
+    par.append(vecs(10, 200L, 6.0).toDF("vec_id", "embedding"), "embedding")
     val viaBatchFace = annProbe(base + "/par", query, k = 8, nprobe = 4)
       .as[(Long, Double)].collect().toSeq
     assert(viaBatchFace == atRest, s"$viaBatchFace vs $atRest")
@@ -518,19 +522,19 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     // its directory wholesale — no duplicated code rows, same probe
     StreamingSimilarity.ingestBatch(
       vecs(10, 100L, 0.0).toDF("vec_id", "embedding"), 0L,
-      base + "/layout", "vec_id", "embedding", Some(base + "/drift"))
-    val again = annProbe(base + "/layout", query, k = 8, nprobe = 4)
+      root, "vec_id", "embedding", Some(base + "/drift"))
+    val again = annProbe(root, query, k = 8, nprobe = 4)
       .as[(Long, Double)].collect().toSeq
     val replayed = graft.ops.Layouts.withIncrements(spark,
-      spark.read.parquet(base + "/layout"), base + "/layout",
+      spark.read.parquet(gen0), gen0,
       Seq("vec_id", "cell", "code"), None)
     assert(replayed.count() == 60)
     assert(replayed.select("vec_id").distinct().count() == 60)
     // compaction folds the streamed increments into the next base
     // generation (quiesced stream), sidecar carried
-    Similarity.compactIvfPqLayout(spark, base + "/layout", base + "/gen1")
-    assert(spark.read.parquet(base + "/gen1").count() == 60)
-    val compacted = annProbe(base + "/gen1", query, k = 8, nprobe = 4)
+    graft.ops.AnnIndex.open(spark, root, "vec_id").compact()
+    assert(spark.read.parquet(root + "/gen1").count() == 60)
+    val compacted = annProbe(root + "/gen1", query, k = 8, nprobe = 4)
       .as[(Long, Double)].collect().toSeq
     assert(compacted == atRest, s"$compacted vs $atRest")
     assert(again == atRest, s"$again vs $atRest")
@@ -602,46 +606,47 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     val ivfCb = Similarity.ivfCodebook(corpus, "vec_id", "embedding", nlist = 2)
     val pqCb = Similarity.pqCodebooks(corpus, "vec_id", "embedding", m = 2, ks = 4)
     Similarity.writeIvfPqPartitioned(corpus, "vec_id", "embedding",
-      ivfCb, pqCb, base + "/ann")
+      ivfCb, pqCb, base + "/ann/gen0")
+    Layouts.swapGenerationPointer(spark, base + "/ann", "gen0")
     val batch = vecs(5, 100L).toDF("vec_id", "embedding")
     // a held marker makes every append face refuse, curated
-    Layouts.acquireQuiesce(spark, base + "/ann", "test")
+    Layouts.acquireQuiesce(spark, base + "/ann/gen0", "test")
     val e1 = intercept[IllegalStateException] {
       StreamingSimilarity.ingestBatch(batch, 0L, base + "/ann",
         "vec_id", "embedding", None)
     }
     assert(e1.getMessage.contains(Layouts.QuiesceMarker), e1.getMessage)
     val e2 = intercept[IllegalStateException] {
-      Similarity.appendIvfPq(batch, "vec_id", "embedding", ivfCb, pqCb,
-        base + "/ann")
+      graft.ops.AnnIndex.open(spark, base + "/ann", "vec_id")
+        .append(batch, "embedding")
     }
     assert(e2.getMessage.contains(Layouts.QuiesceMarker), e2.getMessage)
     // a second compaction cannot take a held marker (no double-fold)
     val e3 = intercept[IllegalStateException] {
-      Layouts.acquireQuiesce(spark, base + "/ann", "second")
+      Layouts.acquireQuiesce(spark, base + "/ann/gen0", "second")
     }
     assert(e3.getMessage.contains("already holds"), e3.getMessage)
     // released -> the failed batch replays cleanly
-    Layouts.releaseQuiesce(spark, base + "/ann")
+    Layouts.releaseQuiesce(spark, base + "/ann/gen0")
     StreamingSimilarity.ingestBatch(batch, 0L, base + "/ann",
       "vec_id", "embedding", None)
     // the real compactor takes and releases the marker around the fold
-    Similarity.compactIvfPqLayout(spark, base + "/ann", base + "/ann_g1")
-    assert(!Layouts.exists(spark, base + "/ann/" + Layouts.QuiesceMarker))
-    assert(spark.read.parquet(base + "/ann_g1").count() == 25)
+    graft.ops.AnnIndex.open(spark, base + "/ann", "vec_id").compact()
+    assert(!Layouts.exists(spark, base + "/ann/gen0/" + Layouts.QuiesceMarker))
+    assert(spark.read.parquet(base + "/ann/gen1").count() == 25)
     // the in-flight handshake: an increment directory holding an
     // uncommitted write (Spark's _temporary staging) refuses the fold
     // even though the marker was free — folding a half-written batch
     // is silent data loss; the marker is still released on the refusal
     val inflight = new java.io.File(
-      base + "/ann/_increments/ingest_batch=99/_temporary")
+      base + "/ann/gen1/_increments/ingest_batch=99/_temporary")
     assert(inflight.mkdirs())
     val e7 = intercept[IllegalStateException] {
-      Similarity.compactIvfPqLayout(spark, base + "/ann", base + "/ann_g2")
+      graft.ops.AnnIndex.open(spark, base + "/ann", "vec_id").compact()
     }
     assert(e7.getMessage.contains("_temporary"), e7.getMessage)
-    assert(!Layouts.exists(spark, base + "/ann/" + Layouts.QuiesceMarker))
-    graft.ops.Layouts.delete(spark, base + "/ann/_increments/ingest_batch=99")
+    assert(!Layouts.exists(spark, base + "/ann/gen1/" + Layouts.QuiesceMarker))
+    graft.ops.Layouts.delete(spark, base + "/ann/gen1/_increments/ingest_batch=99")
     // --- near-dup family ---
     val docs = Seq((10L, "the quick brown fox jumps over the lazy dog today"),
       (11L, "completely unrelated corpus text nothing shared here at all"))
@@ -740,8 +745,9 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     val all = batches.foldLeft(corpus)(_ unionByName _)
     // the drifted trailing window rebuilds into gen1; the POINTER is
     // swapped inside the quiesce window and the marker released after
-    val r = Similarity.maintainPointedFromDriftSeries(spark, root,
-      root + "/drift", all, "vec_id", "embedding", window = 2)
+    def monitor() = graft.ops.AnnIndex.open(spark, root, "vec_id")
+      .maintainFromDriftSeries(root + "/drift", all, "embedding", window = 2)
+    val r = monitor()
     assert(r.action == "rebuild" && r.layout == root + "/gen1", s"$r")
     assert(Layouts.currentGenerationName(spark, root) == "gen1")
     assert(!Layouts.exists(spark, root + "/gen0/" + Layouts.QuiesceMarker))
@@ -762,8 +768,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     // exactly that state, then let the next monitor tick recover.
     Layouts.swapGenerationPointer(spark, root, "gen0")
     Layouts.acquireQuiesce(spark, root + "/gen0", "crashed-rebuild")
-    val rec = Similarity.maintainPointedFromDriftSeries(spark, root,
-      root + "/drift", all, "vec_id", "embedding", window = 2)
+    val rec = monitor()
     assert(rec.action == "swap" && rec.layout == root + "/gen1", s"$rec")
     assert(Layouts.currentGenerationName(spark, root) == "gen1")
     assert(!Layouts.exists(spark, root + "/gen0/" + Layouts.QuiesceMarker),
@@ -777,22 +782,23 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
       Some(root + "/drift"))
     assert(Layouts.exists(spark,
       root + "/gen1/_increments/ingest_batch=4"))
-    val tick = Similarity.maintainPointedFromDriftSeries(spark, root,
-      root + "/drift", all, "vec_id", "embedding", window = 2)
+    val tick = monitor()
     assert(tick.action == "keep" && tick.batches == 1, s"$tick")
     // the post-write pointer fence: a batch whose generation pointer
-    // moved while it was encoding (here: a stale resolved layout) must
-    // fail AFTER its write so the checkpoint replays it against the
-    // NEW generation — the resolve-to-first-write sliver the marker's
-    // check-then-act cannot cover
+    // moved while it was encoding (here: re-aimed at gen0 between the
+    // writes and the fence) must fail AFTER its write so the checkpoint
+    // replays it against the live generation — the resolve-to-first-
+    // write sliver the marker's check-then-act cannot cover
     val stale = intercept[IllegalStateException] {
-      StreamingSimilarity.ingestBatchResolved(
+      StreamingSimilarity.ingestBatchFenced(
         sample(24, 0.0, 6000L).toDF("vec_id", "embedding"), 5L,
-        root, root + "/gen0", "vec_id", "embedding", None)
+        root, "vec_id", "embedding", None,
+        () => Layouts.swapGenerationPointer(spark, root, "gen0"))
     }
     assert(stale.getMessage.contains("moved off"), stale.getMessage)
+    Layouts.swapGenerationPointer(spark, root, "gen1")
     // the replay (normal resolution) lands the batch in the live
-    // generation; the stale generation's orphan rows are never probed
+    // generation, overwriting the directory the failed attempt wrote
     StreamingSimilarity.ingestBatch(sample(24, 0.0, 6000L)
       .toDF("vec_id", "embedding"), 5L, root, "vec_id", "embedding", None)
     assert(Layouts.exists(spark, root + "/gen1/_increments/ingest_batch=5"))
@@ -804,8 +810,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     // generations
     val beforeFold = annProbe(root, q, k = 8, nprobe = 2)
       .as[(Long, Double)].collect().toSeq
-    val gen2 = Similarity.compactPointedIvfPqLayout(spark, root,
-      idCol = "vec_id")
+    val gen2 = graft.ops.AnnIndex.open(spark, root, "vec_id").compact()
     assert(gen2 == root + "/gen2", gen2)
     assert(Layouts.currentGenerationName(spark, root) == "gen2")
     assert(!Layouts.exists(spark, root + "/gen1/" + Layouts.QuiesceMarker))
@@ -820,7 +825,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("pointered monitor recovery is FORWARD-ONLY: a pointer advanced past the fence is never swapped backward") {
-    // r20 ADVICE (high): compactPointedIvfPqLayout / maintainPointedIvfPq
+    // r20 ADVICE (high): AnnIndex.compact / AnnIndex.maintain
     // swap _current without touching the drift fence, so after a
     // compaction the fence names a generation BEHIND the pointer (and
     // still on disk, pre-vacuum). Treating that as an interrupted
@@ -853,20 +858,19 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
         "vec_id", "embedding", Some(root + "/drift"))
     }
     val all = batches.foldLeft(corpus)(_ unionByName _)
-    val r = Similarity.maintainPointedFromDriftSeries(spark, root,
-      root + "/drift", all, "vec_id", "embedding", window = 2)
+    def monitor() = graft.ops.AnnIndex.open(spark, root, "vec_id")
+      .maintainFromDriftSeries(root + "/drift", all, "embedding", window = 2)
+    val r = monitor()
     assert(r.action == "rebuild" && r.layout == root + "/gen1", s"$r")
     // a pointered COMPACTION advances the pointer to gen2; the fence
     // still names gen1, which is still on disk (no vacuum yet)
-    val gen2 = Similarity.compactPointedIvfPqLayout(spark, root,
-      idCol = "vec_id")
+    val gen2 = graft.ops.AnnIndex.open(spark, root, "vec_id").compact()
     assert(gen2 == root + "/gen2" &&
       Layouts.currentGenerationName(spark, root) == "gen2")
     // the next monitor tick must NOT read fence(gen1) != pointer(gen2)
     // as an interrupted swap: the pointer stays on gen2 and the tick is
     // a plain keep over the (fully fenced) series
-    val tick = Similarity.maintainPointedFromDriftSeries(spark, root,
-      root + "/drift", all, "vec_id", "embedding", window = 2)
+    val tick = monitor()
     assert(tick.action != "swap", s"backward swap: $tick")
     assert(Layouts.currentGenerationName(spark, root) == "gen2",
       "the pointer must never move backward onto a superseded generation")
