@@ -111,9 +111,9 @@ private[graft] object Layouts {
   def ownedBatchDir(out: String, batchId: Long): String =
     s"$out/ingest_batch=$batchId"
 
-  /** The marker a compaction (or composed rebuild) holds while folding
-    * a layout's increments — the mechanical form of the "quiesce the
-    * stream first" discipline both compactors document: while the
+  /** The marker a compaction (or rebuild) holds while folding or
+    * replacing a layout's generation — the mechanical form of the
+    * "quiesce the stream first" discipline: while the
     * marker exists under a layout, every append face refuses with a
     * curated error instead of racing the fold (a half-written
     * increment folded into the next generation is silent data loss).
@@ -206,13 +206,15 @@ private[graft] object Layouts {
 
   /** The atomic generation pointer (`_current` under a STORE ROOT that
     * holds `gen0/gen1/...` generation directories): one small file
-    * whose content is the current generation's directory NAME. The
-    * missing piece of the LSM lifecycle every rebuild/compaction
-    * scaladoc ends with "the caller swaps the pointer" — this is that
-    * pointer, made mechanical. Probe faces resolve a store root
-    * through it ([[Similarity.resolveLayout]]); rebuild paths swap it
-    * INSIDE their quiesce window, so the append-lands-in-the-old-
-    * generation race has no gap to land in.
+    * whose content is the current generation's directory NAME.
+    * [[AnnIndex.open]] resolves a store root through it
+    * ([[Similarity.resolveLayout]]); the index's rebuilds and
+    * compactions ([[AnnIndex.maintain]],
+    * [[AnnIndex.maintainFromDriftSeries]], [[AnnIndex.compact]]) write
+    * `gen<k+1>` and swap it INSIDE their quiesce window, so an append
+    * has no gap to land in the superseded generation, and a handle the
+    * pointer moved off refuses to write. A store is initialised by
+    * writing `gen0` and pointing `_current` at it.
     */
   val GenerationPointer = "_current"
 

@@ -866,7 +866,7 @@ object Similarity {
     */
   private[ops] def retrainGeneration(residual: Boolean,
       nlist: Int, m: Int, ks: Int, all: DataFrame,
-      idCol: String, vecCol: String, rebuildAt: String,
+      idCol: String, vecCol: String, out: String,
       trained: Boolean): Unit = {
     val newIvf =
       if (trained) trainIvfCodebook(all, idCol, vecCol, nlist)
@@ -875,12 +875,12 @@ object Similarity {
       val newRcb =
         if (trained) trainResidualPqCodebooks(all, idCol, vecCol, newIvf, m, ks)
         else residualPqCodebooks(all, idCol, vecCol, newIvf, m, ks)
-      writeIvfPqResidualPartitioned(all, idCol, vecCol, newIvf, newRcb, rebuildAt)
+      writeIvfPqResidualPartitioned(all, idCol, vecCol, newIvf, newRcb, out)
     } else {
       val newPq =
         if (trained) trainPqCodebooks(all, idCol, vecCol, m, ks)
         else pqCodebooks(all, idCol, vecCol, m, ks)
-      writeIvfPqPartitioned(all, idCol, vecCol, newIvf, newPq, rebuildAt)
+      writeIvfPqPartitioned(all, idCol, vecCol, newIvf, newPq, out)
     }
   }
 

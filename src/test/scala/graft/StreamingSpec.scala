@@ -505,7 +505,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     // stream and batch ingest are the same operator
     Similarity.writeIvfPqPartitioned(corpus, "vec_id", "embedding",
       ivfCb, pqCb, base + "/par")
-    val par = graft.ops.AnnIndex.open(spark, base + "/par", "vec_id")
+    val par = AnnIndex.open(spark, base + "/par", "vec_id")
     par.append(vecs(10, 100L, 0.0).toDF("vec_id", "embedding"), "embedding")
     par.append(vecs(10, 200L, 6.0).toDF("vec_id", "embedding"), "embedding")
     val viaBatchFace = annProbe(base + "/par", query, k = 8, nprobe = 4)
@@ -532,7 +532,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(replayed.select("vec_id").distinct().count() == 60)
     // compaction folds the streamed increments into the next base
     // generation (quiesced stream), sidecar carried
-    graft.ops.AnnIndex.open(spark, root, "vec_id").compact()
+    AnnIndex.open(spark, root, "vec_id").compact()
     assert(spark.read.parquet(root + "/gen1").count() == 60)
     val compacted = annProbe(root + "/gen1", query, k = 8, nprobe = 4)
       .as[(Long, Double)].collect().toSeq
@@ -617,7 +617,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
     assert(e1.getMessage.contains(Layouts.QuiesceMarker), e1.getMessage)
     val e2 = intercept[IllegalStateException] {
-      graft.ops.AnnIndex.open(spark, base + "/ann", "vec_id")
+      AnnIndex.open(spark, base + "/ann", "vec_id")
         .append(batch, "embedding")
     }
     assert(e2.getMessage.contains(Layouts.QuiesceMarker), e2.getMessage)
@@ -631,7 +631,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     StreamingSimilarity.ingestBatch(batch, 0L, base + "/ann",
       "vec_id", "embedding", None)
     // the real compactor takes and releases the marker around the fold
-    graft.ops.AnnIndex.open(spark, base + "/ann", "vec_id").compact()
+    AnnIndex.open(spark, base + "/ann", "vec_id").compact()
     assert(!Layouts.exists(spark, base + "/ann/gen0/" + Layouts.QuiesceMarker))
     assert(spark.read.parquet(base + "/ann/gen1").count() == 25)
     // the in-flight handshake: an increment directory holding an
@@ -642,7 +642,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
       base + "/ann/gen1/_increments/ingest_batch=99/_temporary")
     assert(inflight.mkdirs())
     val e7 = intercept[IllegalStateException] {
-      graft.ops.AnnIndex.open(spark, base + "/ann", "vec_id").compact()
+      AnnIndex.open(spark, base + "/ann", "vec_id").compact()
     }
     assert(e7.getMessage.contains("_temporary"), e7.getMessage)
     assert(!Layouts.exists(spark, base + "/ann/gen1/" + Layouts.QuiesceMarker))
@@ -745,7 +745,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     val all = batches.foldLeft(corpus)(_ unionByName _)
     // the drifted trailing window rebuilds into gen1; the POINTER is
     // swapped inside the quiesce window and the marker released after
-    def monitor() = graft.ops.AnnIndex.open(spark, root, "vec_id")
+    def monitor() = AnnIndex.open(spark, root, "vec_id")
       .maintainFromDriftSeries(root + "/drift", all, "embedding", window = 2)
     val r = monitor()
     assert(r.action == "rebuild" && r.layout == root + "/gen1", s"$r")
@@ -810,7 +810,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     // generations
     val beforeFold = annProbe(root, q, k = 8, nprobe = 2)
       .as[(Long, Double)].collect().toSeq
-    val gen2 = graft.ops.AnnIndex.open(spark, root, "vec_id").compact()
+    val gen2 = AnnIndex.open(spark, root, "vec_id").compact()
     assert(gen2 == root + "/gen2", gen2)
     assert(Layouts.currentGenerationName(spark, root) == "gen2")
     assert(!Layouts.exists(spark, root + "/gen1/" + Layouts.QuiesceMarker))
@@ -858,13 +858,13 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
         "vec_id", "embedding", Some(root + "/drift"))
     }
     val all = batches.foldLeft(corpus)(_ unionByName _)
-    def monitor() = graft.ops.AnnIndex.open(spark, root, "vec_id")
+    def monitor() = AnnIndex.open(spark, root, "vec_id")
       .maintainFromDriftSeries(root + "/drift", all, "embedding", window = 2)
     val r = monitor()
     assert(r.action == "rebuild" && r.layout == root + "/gen1", s"$r")
     // a pointered COMPACTION advances the pointer to gen2; the fence
     // still names gen1, which is still on disk (no vacuum yet)
-    val gen2 = graft.ops.AnnIndex.open(spark, root, "vec_id").compact()
+    val gen2 = AnnIndex.open(spark, root, "vec_id").compact()
     assert(gen2 == root + "/gen2" &&
       Layouts.currentGenerationName(spark, root) == "gen2")
     // the next monitor tick must NOT read fence(gen1) != pointer(gen2)
