@@ -25,26 +25,30 @@ import org.apache.spark.sql.functions._
   * ([[appendIncrement]]); [[refine]] is the exact re-rank of a raw-PQ
   * base layout.
   *
-  * Lifecycle: [[append]] and [[appendIncrement]] encode new rows into
-  * this generation; [[maintain]], [[maintainFromDriftSeries]] and
-  * [[compact]] write `gen<k+1>` next to it and swap the store root's
-  * `_current` pointer ([[Layouts.GenerationPointer]]) while they still
-  * hold this generation's quiesce marker, so no append can land in the
-  * superseded generation between the rewrite and the swap. They need a
-  * handle opened on a pointered store root. A handle is bound to the
-  * generation it opened: once `_current` moves off it, every lifecycle
-  * step refuses curated — reopen the index.
+  * Lifecycle: the index is the IVF-PQ codec over a
+  * [[Layouts.GenerationStore]], which owns the policy — when a write
+  * is safe, how a fold treats the newest increment, where the pointer
+  * swap sits. [[append]] and [[appendIncrement]] encode new rows into
+  * this generation through the store's fenced append; [[maintain]] and
+  * [[maintainFromDriftSeries]] retrain into the store's rebuild, and
+  * [[compact]] is its fold. Rebuilds and folds need a handle opened on
+  * a pointered store root. A handle is bound to the generation it
+  * opened: once `_current` moves off it, every lifecycle step refuses
+  * curated — reopen the index.
   *
   * The read-only fields are the generation directory the pointer
   * resolved to (`layout`), the kind tag, the coarse codebook (`ivf`)
   * and the PQ tables (`pq`: raw tables for `"pq"`, residual tables for
   * `"rpq"`).
   */
-final class AnnIndex private (spark: SparkSession, val layout: String,
+final class AnnIndex private (spark: SparkSession,
+    private[graft] val store: Layouts.GenerationStore,
     val idCol: String, val kind: String, val ivf: IvfCodebook,
-    val pq: PqCodebooks, root: Option[String]) {
+    val pq: PqCodebooks) {
 
   import AnnIndex.{Cell, Code}
+
+  val layout: String = store.layout
 
   val residual: Boolean = kind == "rpq"
 
@@ -189,11 +193,11 @@ final class AnnIndex private (spark: SparkSession, val layout: String,
     * `keep` carries metadata columns, as in the layout writers.
     */
   def append(batch: DataFrame, vecCol: String, keep: Seq[String] = Nil): Unit =
-    encodeInto(batch, vecCol, keep, "append", layout, "append")
+    store.append("append")(encode(batch, vecCol, keep, "append", layout))
 
   /** [[append]] for the STREAMING ingest loop
     * ([[graft.streaming.StreamingSimilarity]], the
-    * [[graft.ops.Dedup.appendNearDupIndexIncrement]] play for vectors):
+    * [[graft.ops.Dedup.writeIncrement]] play for vectors):
     * the batch's rows land in a directory the batch OWNS
     * (`_increments/ingest_batch=<id>`, cell-partitioned inside it,
     * overwritten wholesale), so a crash-replay rewrites the same rows —
@@ -204,27 +208,21 @@ final class AnnIndex private (spark: SparkSession, val layout: String,
     */
   def appendIncrement(batch: DataFrame, vecCol: String, batchId: Long,
       keep: Seq[String] = Nil): Unit =
-    encodeInto(batch, vecCol, keep, "overwrite",
-      Layouts.incrementDir(layout, batchId), "appendIncrement")
+    store.append("appendIncrement")(encodeIncrement(batch, vecCol, batchId, keep))
 
-  /** The write both appends share: refuse on a stale handle or while a
-    * compaction holds the quiesce marker (the caller retries after the
-    * fold), encode with this generation's codebooks and kind, then
-    * re-check the pointer. The marker is check-then-act for a write
-    * already past it, so a rebuild can acquire, rewrite, swap and
-    * release while this batch encodes; failing AFTER the write turns
-    * that sliver into a curated error (a stream's checkpoint replays
-    * the batch into the new generation; the superseded generation's
-    * rows are never read again).
+  /** [[appendIncrement]]'s write without the store's fences — for a
+    * stream that fences this write and its drift report as one append
+    * ([[graft.streaming.StreamingSimilarity]]).
     */
-  private def encodeInto(batch: DataFrame, vecCol: String, keep: Seq[String],
-      mode: String, dir: String, face: String): Unit = {
-    requireCurrent(face)
-    Layouts.assertNotQuiesced(spark, layout, face)
+  private[graft] def encodeIncrement(batch: DataFrame, vecCol: String,
+      batchId: Long, keep: Seq[String] = Nil): Unit =
+    encode(batch, vecCol, keep, "overwrite", Layouts.incrementDir(layout, batchId))
+
+  /** Encode with this generation's codebooks and kind into `dir`. */
+  private def encode(batch: DataFrame, vecCol: String, keep: Seq[String],
+      mode: String, dir: String): Unit =
     Similarity.writeCoded(
       Similarity.coded(batch, idCol, vecCol, ivf, pq, residual, keep), mode, dir)
-    requireCurrent(face)
-  }
 
   /** DRIFT-GATED incremental maintenance — the loop FAISS's IndexIVFPQ
     * leaves to the caller (`add` vs re-`train`): [[append]] the batch
@@ -248,14 +246,9 @@ final class AnnIndex private (spark: SparkSession, val layout: String,
     * would trigger a full corpus retrain on a trickle batch that
     * carries no evidence about the distribution.
     *
-    * The rebuild holds this generation's quiesce marker, refuses while
-    * an append is still staging, and swaps `_current` before the marker
-    * lifts — by then every probe and append resolves the new
-    * generation, so there is no gap for an append to land in the old
-    * one. A crash between the generation write and the swap leaves the
-    * marker HELD (appends stay refused): complete by hand
-    * ([[Layouts.swapGenerationPointer]] + [[Layouts.releaseQuiesce]])
-    * or delete the orphan generation and release.
+    * The rebuild is the store's ([[Layouts.GenerationStore.rebuild]]):
+    * under this generation's quiesce marker, with `_current` swapped
+    * before the marker lifts.
     */
   def maintain(corpus: DataFrame, batch: DataFrame, vecCol: String,
       driftThreshold: Double = 2.0,
@@ -264,7 +257,8 @@ final class AnnIndex private (spark: SparkSession, val layout: String,
       s"driftThreshold=$driftThreshold: below 1.0 every batch rebuilds " +
         "(stored codebooks cannot beat batch-fitted ones on the batch's " +
         "own distribution)")
-    val (r, k) = successor("maintain")
+    // refuse a plain or stale handle before the decision scans
+    store.successor("maintain")
     val (nlist, m, ks) = (ivf.length, pq.length, pq(0).length)
     val storedErr = Similarity.ivfPqDistortion(batch, vecCol, ivf, pq, residual)
     // bounded probe: limit ks+1, never a full count
@@ -275,24 +269,20 @@ final class AnnIndex private (spark: SparkSession, val layout: String,
       else Similarity.pqCodebooks(batch, idCol, vecCol, m, ks)
     val freshErr = Similarity.ivfPqDistortion(batch, vecCol, freshIvf, freshPq, residual)
     if (tiny || storedErr <= driftThreshold * freshErr) {
-      encodeInto(batch, vecCol, Nil, "append", layout, "maintain")
+      store.append("maintain")(encode(batch, vecCol, Nil, "append", layout))
       AnnIndex.MaintainReport("append", storedErr, freshErr, layout)
-    } else {
+    } else
       // the marker is taken AFTER the decision (the append branch must
       // not refuse against our own marker), so an append that slipped
       // in during the decision scans is the caller's corpus-of-record
       // to re-ship, as with any batch ingested after the corpus snapshot
-      val next = s"gen${k + 1}"
-      val target = s"$r/$next"
-      quiesced("maintain") {
+      store.rebuild("maintain") { target =>
         val all = corpus.select(col(idCol), col(vecCol))
           .unionByName(batch.select(col(idCol), col(vecCol)))
         Similarity.retrainGeneration(residual, nlist, m, ks, all, idCol,
           vecCol, target, trained)
-        Layouts.swapGenerationPointer(spark, r, next)
         AnnIndex.MaintainReport("rebuild", storedErr, freshErr, target)
       }
-    }
   }
 
   /** The MONITORING JOB that closes the streaming maintenance loop: the
@@ -313,11 +303,12 @@ final class AnnIndex private (spark: SparkSession, val layout: String,
     *
     * The rebuild retrains on `corpus` (the full vector corpus — the
     * caller's system of record; the layout stores only codes) into
-    * `gen<k+1>`, kind and geometry preserved, under this generation's
-    * quiesce marker. Inside that window it writes the FENCE
+    * `gen<k+1>`, kind and geometry preserved, in the store's rebuild
+    * window. Inside it, after the generation, it writes the FENCE
     * (`driftOut/_rebuilt`: the max batch id consumed and the new
-    * generation's name), then swaps `_current`, then (with `prune`)
-    * drops the consumed reports ([[Similarity.pruneDriftSeries]]).
+    * generation's name); the store then swaps `_current` and lifts the
+    * marker, and (with `prune`) the consumed reports are dropped
+    * ([[Similarity.pruneDriftSeries]]).
     * Later runs threshold only batches after the fence; until a fresh
     * window accumulates they return `keep` with `batches = 0` and NaN
     * medians. A rebuild REFUSES when `gen<k+1>` already exists (a
@@ -325,16 +316,12 @@ final class AnnIndex private (spark: SparkSession, val layout: String,
     * operator deletes it and re-runs, or fences by hand.
     *
     * CRASH RECOVERY, forward-only: the fence is the rebuild's commit
-    * record. A run that finds a fence naming a generation numerically
-    * AHEAD of this one (and on disk) died in the fence→swap window: it
-    * completes the swap, releases the marker the dead run left on this
-    * generation, and returns `action = "swap"` — never a second fold.
-    * A fence at or behind the pointer is history (a compaction or a
-    * [[maintain]] rebuild advances the pointer without touching the
-    * fence) and never swaps the pointer backward. A crash after the
-    * swap but before the marker release leaves a stale marker on the
-    * superseded generation — harmless, and reclaimed with it by
-    * [[Layouts.vacuumGenerations]].
+    * record. A fence naming a generation AHEAD of this one means a run
+    * died in the fence→swap window; the store completes the swap
+    * ([[Layouts.GenerationStore.completeSwap]]) and the call returns
+    * `action = "swap"` — never a second fold. A fence at or behind the
+    * pointer is history (compactions and [[maintain]] rebuilds advance
+    * the pointer without touching it) and never swaps it backward.
     */
   def maintainFromDriftSeries(driftOut: String, corpus: DataFrame,
       vecCol: String, window: Int = 3, driftThreshold: Double = 2.0,
@@ -344,17 +331,14 @@ final class AnnIndex private (spark: SparkSession, val layout: String,
     require(driftThreshold >= 1.0,
       s"driftThreshold=$driftThreshold: below 1.0 an in-distribution " +
         "series (trailing ~= baseline) would rebuild on noise")
-    val (r, k) = successor("maintainFromDriftSeries")
+    val face = "maintainFromDriftSeries"
+    val target = store.successor(face)
     val fence = Similarity.readFence(spark, driftOut)
-    val pendingSwap = fence.flatMap(_._2).filter(g =>
-      Layouts.generationIndex(g).exists(_ > k) && Layouts.exists(spark, s"$r/$g"))
     def keep(baseline: Double, trailing: Double, batches: Long) =
       AnnIndex.DriftSeriesReport("keep", baseline, trailing, batches, layout)
-    pendingSwap match {
-      case Some(g) =>
-        Layouts.swapGenerationPointer(spark, r, g)
-        Layouts.releaseQuiesce(spark, layout)
-        return AnnIndex.DriftSeriesReport("swap", Double.NaN, Double.NaN, 0, s"$r/$g")
+    fence.flatMap(_._2).flatMap(store.completeSwap(face, _)) match {
+      case Some(swapped) =>
+        return AnnIndex.DriftSeriesReport("swap", Double.NaN, Double.NaN, 0, swapped)
       case None =>
     }
     // one double per micro-batch ever ingested — bounded by batch
@@ -394,124 +378,64 @@ final class AnnIndex private (spark: SparkSession, val layout: String,
     val trailing = median(series.takeRight(window))
     if (series.length < 2 * window || trailing <= driftThreshold * baseline)
       return keep(baseline, trailing, series.length)
-    val next = s"gen${k + 1}"
-    val target = s"$r/$next"
     require(!Layouts.exists(spark, target),
       s"maintainFromDriftSeries: $target already exists — either a " +
         "crashed rebuild left an unfenced generation (delete it and " +
         "re-run, or write the fence by hand if its pointer swap " +
         "already happened) or the path is a live generation; the " +
         "monitor never overwrites it.")
-    quiesced("maintainFromDriftSeries") {
+    store.rebuild(face) { dst =>
       Similarity.retrainGeneration(residual, ivf.length, pq.length,
         pq(0).length, corpus.select(col(idCol), col(vecCol)), idCol, vecCol,
-        target, trained)
+        dst, trained)
       // the fence AFTER the generation: it is the commit record the
       // recovery above keys on; a crash before it leaves an unfenced
       // gen<k+1>, which the exists-refusal surfaces on the re-run
       Layouts.writeSidecar(spark, s"$driftOut/${Similarity.RebuiltFence}",
         Similarity.RebuiltFenceSchema,
-        Seq(Row(fullSeries.map(_._1).max, next)))
-      Layouts.swapGenerationPointer(spark, r, next)
-      if (prune) Similarity.pruneDriftSeries(spark, driftOut)
-      AnnIndex.DriftSeriesReport("rebuild", baseline, trailing,
-        series.length, target)
+        Seq(Row(fullSeries.map(_._1).max, new org.apache.hadoop.fs.Path(dst).getName)))
     }
+    if (prune) Similarity.pruneDriftSeries(spark, driftOut)
+    AnnIndex.DriftSeriesReport("rebuild", baseline, trailing,
+      series.length, target)
   }
 
   /** COMPACT the generation — the LSM small-files pay-down: daily
     * appends and streamed increments leave one new file per touched
-    * cell per batch, and every probe pays their opens. Compaction folds
-    * base + committed increments into `gen<k+1>`, rewriting the codes
-    * (never re-encoding: no vectors read, no codebooks applied)
-    * hash-repartitioned by cell, so each cell is one file, and swaps
-    * the pointer to it. Returns the new generation's path. Cost: one
-    * shuffle of the code rows (~4-40 B/row).
+    * cell per batch, and every probe pays their opens. Compaction is
+    * the store's fold ([[Layouts.GenerationStore.fold]]) into
+    * `gen<k+1>`, returned: codes rewritten (never re-encoded: no
+    * vectors read, no codebooks applied) hash-repartitioned by cell, so
+    * each cell is one file. Cost: one shuffle of the ~4-40 B/row codes.
     *
     * `dropIds` is the TOMBSTONE set — one id column
     * ([[graft.ops.Cdc.snapshotDiff]]'s `removed` class is the natural
-    * producer): matching rows are retired during the rewrite (an
-    * unhinted anti-join on `idCol` — AQE broadcasts a small set, a bulk
-    * takedown degrades to a shuffle join), so a deleted document never
-    * again surfaces in a top-k.
-    *
-    * The fold holds this generation's quiesce marker (appends refuse
-    * curated and replay into the new generation after the swap) and
-    * refuses while an append is still staging; superseded generations
-    * are reclaimed by [[Layouts.vacuumGenerations]]. The sidecar is
-    * written FIRST: a failed data rewrite leaves a sidecar-only
-    * `gen<k+1>` (detectable), never a data-only one, and the pointer
-    * stays put, so a re-run clears and rewrites it.
+    * producer): matching rows are retired (an unhinted anti-join on
+    * `idCol` — AQE broadcasts a small set, a bulk takedown degrades to
+    * a shuffle join), so a deleted document never again surfaces in a
+    * top-k. The sidecar is written FIRST: a failed data rewrite leaves
+    * a sidecar-only `gen<k+1>` (detectable), never a data-only one.
     */
-  def compact(dropIds: Option[DataFrame] = None): String = {
-    val (r, k) = successor("compact")
-    val next = s"gen${k + 1}"
-    val dst = s"$r/$next"
-    quiesced("compact") {
-      val base = spark.read.parquet(layout)
-      val rows = Layouts.withIncrements(spark, base, layout,
-        base.columns.toIndexedSeq, excludeBatchId = None)
-      // built (and its schema require fired) before dst is touched
-      val compacted = Layouts.dropTombstones(rows, dropIds, idCol, "compact")
-      Layouts.delete(spark, dst)
-      Similarity.writeIvfPqCodebooks(spark, dst, ivf, pq, kind)
-      Similarity.writeCoded(compacted.repartition(col(AnnIndex.Cell)), "append", dst)
-      Layouts.swapGenerationPointer(spark, r, next)
-    }
-    dst
-  }
-
-  /** Refuse once `_current` has moved off this handle's generation (a
-    * plain-layout handle has no pointer and is always current). A stale
-    * handle must never write into a superseded generation: its rows
-    * would never be read again.
-    */
-  private[graft] def requireCurrent(face: String): Unit =
-    root.foreach { r =>
-      val live = Layouts.currentGeneration(spark, r)
-      if (live != layout)
-        throw new IllegalStateException(
-          s"$face: the generation pointer under $r moved off $layout (it " +
-            s"now names $live) — this handle is stale; reopen the index " +
-            "with AnnIndex.open and retry")
-    }
-
-  /** The store root and this generation's `k` (a rebuild or compaction
-    * writes `gen<k+1>`); refuses a plain-layout handle and a stale one.
-    */
-  private def successor(face: String): (String, Long) = {
-    val r = root.getOrElse(throw new IllegalStateException(
-      s"$face: $layout is a plain layout, not a pointered store root — " +
-        "rebuilds and compactions write gen<k+1> next to the current " +
-        "generation and swap the pointer to it; write the layout as " +
-        "<root>/gen0, initialise the root with " +
-        "Layouts.swapGenerationPointer(root, \"gen0\") and open the root"))
-    requireCurrent(face)
-    val gen = layout.stripPrefix(r + "/")
-    (r, Layouts.generationIndex(gen).getOrElse(
-      throw new IllegalArgumentException(
-        s"$face: the pointered lifecycle derives the next generation " +
-          "from the current one's name, which must match gen<k>; " +
-          s"'$gen' (under $r) does not — re-point " +
-          s"${Layouts.GenerationPointer} at a gen<k>-named generation")))
-  }
-
-  /** Run `body` holding this generation's quiesce marker: appends
-    * refuse meanwhile, and an append that passed its marker check
-    * before the acquire and is still staging fails the step instead of
-    * being retired with the old generation. Every lifecycle swap
-    * happens under the live generation's marker, so the pointer check
-    * made while holding it cannot go stale. Released on any exit — a
-    * failed step leaves this generation intact and appendable.
-    */
-  private def quiesced[T](face: String)(body: => T): T = {
-    Layouts.acquireQuiesce(spark, layout, face)
-    try {
-      requireCurrent(face)
-      Layouts.assertNoInflightIncrements(spark, layout, face)
-      body
-    } finally Layouts.releaseQuiesce(spark, layout)
-  }
+  def compact(dropIds: Option[DataFrame] = None): String =
+    store.fold("compact", new Layouts.FoldCodec {
+      private def retire(rows: DataFrame) =
+        Layouts.dropTombstones(rows, dropIds, idCol, "compact")
+      def writeFolded(src: String, folded: Long => Boolean, dst: String): Unit = {
+        val base = spark.read.parquet(src)
+        val rows = retire(Layouts.withIncrementsWhere(spark, base, src,
+          base.columns.toIndexedSeq, folded))
+        Similarity.writeIvfPqCodebooks(spark, dst, ivf, pq, kind)
+        Similarity.writeCoded(rows.repartition(col(Cell)), "append", dst)
+      }
+      def carry(src: String, dst: String): Unit = {
+        val rows = retire(spark.read.parquet(src))
+        // a cell-partitioned write of zero rows leaves a directory with
+        // no data file, which no read can infer a schema from: a fully
+        // retired increment is not carried
+        if (dropIds.isEmpty || !rows.isEmpty)
+          Similarity.writeCoded(rows, "overwrite", dst)
+      }
+    })
 }
 
 object AnnIndex {
@@ -547,13 +471,8 @@ object AnnIndex {
     * `_current` names now. `idCol` names the layout's id column.
     */
   def open(spark: SparkSession, path: String, idCol: String): AnnIndex = {
-    val layout = Similarity.resolveLayout(spark, path)
-    // a pointered root resolves below itself; a plain layout to itself
-    read(spark, layout, idCol, Some(path).filter(_ => layout != path))
-  }
-
-  private def read(spark: SparkSession, layout: String,
-      idCol: String, root: Option[String]): AnnIndex = {
+    val store = Layouts.openStore(spark, path)
+    val layout = store.layout
     require(Similarity.hasIvfPqCodebooks(spark, layout),
       s"no _codebooks sidecar under $layout — the layout predates the " +
         "sidecar or was hand-built; rewrite it with writeIvfPqPartitioned " +
@@ -586,7 +505,7 @@ object AnnIndex {
       pqRows.filter(_.getInt(1) == m).sortBy(_.getLong(2))
         .map(_.getSeq[Double](3).toArray)
     }
-    new AnnIndex(spark, layout, idCol, kind, ivf, pq, root)
+    new AnnIndex(spark, store, idCol, kind, ivf, pq)
   }
 
   private def requireNprobe(nprobe: Int): Unit =

@@ -163,7 +163,9 @@ object Bloom {
   }
 
   /** Load a [[writeBloomIndex]] layout's bitmap, OR-merged with its
-    * committed per-batch increments. `historyBefore = Some(b)` keeps
+    * committed per-batch increments. `path` is a layout or a pointered
+    * store root (resolved through [[Similarity.resolveLayout]]).
+    * `historyBefore = Some(b)` keeps
     * only increments with `ingest_batch < b` — the gate's replay rule,
     * STRICTER than the other families' own-batch exclusion because the
     * gate's OUTPUT depends on history: batch ids are monotone in
@@ -177,29 +179,28 @@ object Bloom {
     * corpus rows.
     */
   def readBloomIndex(spark: org.apache.spark.sql.SparkSession,
-      path: String, historyBefore: Option[Long] = None): (Int, Int, Array[Long]) = {
-    // DRIVER-SIDE read (the Layouts.collectSidecar path): the index is
-    // one KB-to-MB row per committed batch, and the previous
-    // spark.read + collect paid a full Spark job per gate evaluation —
-    // per MICRO-BATCH in the streaming gate. Same listing discipline
-    // as withIncrementsWhere (incrementIds + the `< b` history rule).
-    val dirs = path +: Layouts.incrementIds(spark, path)
-      .filter(id => historyBefore.forall(id < _))
-      .map(id => Layouts.incrementDir(path, id))
-    val rows = dirs.flatMap { d =>
-      Layouts.collectSidecar(spark, d, "writeBloomIndex").map { r =>
-        org.apache.spark.sql.Row(
-          r.getInt(r.fieldIndex("m_bits")), r.getInt(r.fieldIndex("k")),
-          r.getSeq[Long](r.fieldIndex("words")))
-      }
-    }
+      path: String, historyBefore: Option[Long] = None): (Int, Int, Array[Long]) =
+    readBitmap(spark, Similarity.resolveLayout(spark, path),
+      id => historyBefore.forall(id < _))
+
+  /** The OR of `layout`'s base row and the increments `keepBatch`
+    * keeps. DRIVER-SIDE read (the Layouts.collectSidecar path): the
+    * index is one KB-to-MB row per committed batch, and a
+    * spark.read + collect would pay a full Spark job per gate
+    * evaluation — per MICRO-BATCH in the streaming gate.
+    */
+  private def readBitmap(spark: org.apache.spark.sql.SparkSession,
+      layout: String, keepBatch: Long => Boolean): (Int, Int, Array[Long]) = {
+    val dirs = layout +: Layouts.incrementIds(spark, layout).filter(keepBatch)
+      .map(id => Layouts.incrementDir(layout, id))
+    val rows = dirs.flatMap(bitmapRows(spark, _))
     require(rows.nonEmpty,
-      s"the Bloom index at $path holds no bitmap row — rebuild it with " +
+      s"the Bloom index at $layout holds no bitmap row — rebuild it with " +
         "writeBloomIndex")
     val geoms = rows.map(r => (r.getInt(0), r.getInt(1))).distinct
     if (geoms.length != 1)
       throw new IllegalStateException(
-        s"the Bloom index at $path mixes bitmap geometries " +
+        s"the Bloom index at $layout mixes bitmap geometries " +
           s"(${geoms.sorted.mkString(", ")} as (m_bits, k)) — OR-merging " +
           "different-m bitmaps is garbage; rebuild the index and its " +
           "increments with one geometry")
@@ -213,45 +214,35 @@ object Bloom {
     (m, k, acc)
   }
 
-  /** Fold a Bloom index's committed increments into the base row at
-    * `dst` — the [[AnnIndex.compact]] play for the gate's
-    * history (a year of per-batch rows is a listing tax on every
-    * tick). Holds the quiesce marker for the fold; the caller swaps
-    * its pointer (LSM convention).
+  /** The (m_bits, k, words) rows of one bitmap row directory. */
+  private def bitmapRows(spark: org.apache.spark.sql.SparkSession,
+      dir: String): Seq[org.apache.spark.sql.Row] =
+    Layouts.collectSidecar(spark, dir, "writeBloomIndex").map { r =>
+      org.apache.spark.sql.Row(
+        r.getInt(r.fieldIndex("m_bits")), r.getInt(r.fieldIndex("k")),
+        r.getSeq[Long](r.fieldIndex("words")))
+    }.toSeq
+
+  /** Fold a Bloom index's committed increments into one base row — the
+    * [[AnnIndex.compact]] play for the gate's history (a year of
+    * per-batch rows is a listing tax on every tick). This is the
+    * store's fold ([[Layouts.GenerationStore.fold]]) of the pointered
+    * root `root` into `gen<k+1>`, returned.
     *
-    * The NEWEST increment is carried verbatim, NOT folded: under
-    * Structured Streaming's sequential epochs only the newest on-disk
-    * batch can still be checkpoint-uncommitted (batch b+1's increment
-    * existing proves batch b committed), and a replay of batch b needs
-    * `increments < b` reconstructible — folding b's own bits into the
-    * base would make its replay judge against ITSELF and silently drop
-    * every doc it first admitted (the divergence the `<` history rule
-    * exists to prevent). One extra row per read buys replay safety for
-    * the only batch that can exercise it.
+    * The NEWEST increment is carried verbatim, NOT folded (the store's
+    * one fold rule): folding batch b's own bits into the base would
+    * make its replay judge against ITSELF and drop every doc it first
+    * admitted — the divergence the `<` history rule exists to prevent.
     */
   def compactBloomIndex(spark: org.apache.spark.sql.SparkSession,
-      src: String, dst: String): Unit = {
-    require(src != dst,
-      "compactBloomIndex writes a NEW index at dst; swap the pointer " +
-        "after (an in-place rewrite would clobber the row it reads)")
-    Layouts.acquireQuiesce(spark, src, "compactBloomIndex")
-    try {
-      Layouts.assertNoInflightIncrements(spark, src, "compactBloomIndex")
-      val newest = Layouts.incrementIds(spark, src).lastOption
-      val (m, k, folded) = readBloomIndex(spark, src, historyBefore = newest)
-      Layouts.delete(spark, dst)
-      writeBitmapRow(spark, folded, m, k, dst)
-      newest.foreach { b =>
-        // verbatim driver-side copy (one KB-to-MB row — the read was
-        // already driver-bounded; now the write is job-free too)
-        val rows = Layouts.collectSidecar(spark, Layouts.incrementDir(src, b),
-          "writeBloomIndex (the increment is written by the streaming gate)")
-          .map(r => org.apache.spark.sql.Row(
-            r.getInt(r.fieldIndex("m_bits")), r.getInt(r.fieldIndex("k")),
-            r.getSeq[Long](r.fieldIndex("words"))))
-        Layouts.writeSidecar(spark, Layouts.incrementDir(dst, b),
-          BitmapRowSchema, rows.toSeq)
+      root: String): String =
+    Layouts.openStore(spark, root).fold("compactBloomIndex", new Layouts.FoldCodec {
+      def writeFolded(src: String, folded: Long => Boolean, dst: String): Unit = {
+        val (m, k, words) = readBitmap(spark, src, folded)
+        writeBitmapRow(spark, words, m, k, dst)
       }
-    } finally Layouts.releaseQuiesce(spark, src)
-  }
+      // verbatim driver-side copy of one KB-to-MB row
+      def carry(src: String, dst: String): Unit =
+        Layouts.writeSidecar(spark, dst, BitmapRowSchema, bitmapRows(spark, src))
+    })
 }

@@ -169,6 +169,17 @@ object Dedup {
     // applied to the from-raw-text face (r21 optimization)
     val cand = nearDupCandidates(df, idCol, textCol, numHashes, bands, shingleWidth)
       .localCheckpoint(true)
+    verifiedPairs(cand, df, idCol, textCol, threshold, shingleWidth,
+      maxBroadcastCandRows)
+  }
+
+  /** The exact-Jaccard verify both pair faces share: shingle only the
+    * candidate-matched documents and keep the (id_a, id_b, jaccard)
+    * pairs at or above `threshold`.
+    */
+  private def verifiedPairs(cand: DataFrame, df: DataFrame, idCol: String,
+      textCol: String, threshold: Double, shingleWidth: Int,
+      maxBroadcastCandRows: Long): DataFrame = {
     // semi-join the corpus down to candidate-matched ids BEFORE
     // shingling: the previous shape shingled EVERY corpus row twice
     // (id_a side + id_b side) on the way into the verification join —
@@ -243,22 +254,25 @@ object Dedup {
 
   /** The banding parameters a [[writeNearDupIndex]] layout was
     * written with, or None for a pre-meta / hand-built layout.
+    * `indexPath` is a layout or a pointered store root (resolved
+    * through [[Similarity.resolveLayout]], like every reader here).
     * Absence is an explicit filesystem check; a PRESENT but
     * empty/unreadable `_meta` (interrupted write) is a curated
     * failure, never a silent skip of the banding validation
     * ([[Layouts.collectSidecar]]).
     */
   def readNearDupIndexMeta(spark: org.apache.spark.sql.SparkSession,
-      indexPath: String): Option[(Int, Int, Int)] =
-    if (!Layouts.exists(spark, indexPath + "/_meta")) None
+      indexPath: String): Option[(Int, Int, Int)] = {
+    val meta = Similarity.resolveLayout(spark, indexPath) + "/_meta"
+    if (!Layouts.exists(spark, meta)) None
     else {
       // cached per generation: the streaming loop validates the
       // banding EVERY micro-batch, and without the cache each
       // validation re-reads the same one-row sidecar parquet
-      val r = Layouts.collectSidecarCached(spark, indexPath + "/_meta",
-        "writeNearDupIndex")(0)
+      val r = Layouts.collectSidecarCached(spark, meta, "writeNearDupIndex")(0)
       Some((r.getInt(0), r.getInt(1), r.getInt(2)))
     }
+  }
 
   private[graft] def validateIndexMeta(spark: org.apache.spark.sql.SparkSession,
       indexPath: String, numHashes: Int, bands: Int, shingleWidth: Int,
@@ -276,8 +290,11 @@ object Dedup {
   /** Append a new batch's signatures into a [[writeNearDupIndex]]
     * layout — the daily half of the index lifecycle (the corpus is
     * never recomputed; tomorrow's [[incrementalNearDup]] sees today's
-    * batch as corpus). Validates the stored banding parameters first:
-    * an append under different banding poisons the index silently.
+    * batch as corpus). `out` is a layout or a pointered store root;
+    * the write is the store's fenced append
+    * ([[Layouts.GenerationStore.append]]). Validates the stored
+    * banding parameters first: an append under different banding
+    * poisons the index silently.
     */
   def appendNearDupIndex(
       batch: DataFrame,
@@ -287,55 +304,42 @@ object Dedup {
       numHashes: Int = 128,
       bands: Int = 32,
       shingleWidth: Int = 3): Unit = {
-    // refuse while a compaction holds the layout's quiesce marker (the
-    // documented discipline made mechanical — the caller retries after
-    // the fold)
-    Layouts.assertNotQuiesced(batch.sparkSession, out, "appendNearDupIndex")
-    validateIndexMeta(batch.sparkSession, out, numHashes, bands,
-      shingleWidth, "appendNearDupIndex")
-    // per-batch append: NO fan-out (the batch keeps its source
-    // partitioning — one file per source partition per band, the
-    // pre-r21 behavior) — see bandSignaturesImpl
-    bandSignaturesImpl(batch, idCol, textCol, numHashes, bands,
-        shingleWidth, fanOut = false)
-      .write.mode("append").partitionBy("band").parquet(out)
+    val store = Layouts.openStore(batch.sparkSession, out)
+    store.append("appendNearDupIndex") {
+      validateIndexMeta(batch.sparkSession, store.layout, numHashes, bands,
+        shingleWidth, "appendNearDupIndex")
+      // per-batch append: NO fan-out (the batch keeps its source
+      // partitioning — one file per source partition per band, the
+      // pre-r21 behavior) — see bandSignaturesImpl
+      bandSignaturesImpl(batch, idCol, textCol, numHashes, bands,
+          shingleWidth, fanOut = false)
+        .write.mode("append").partitionBy("band").parquet(store.layout)
+    }
   }
 
-  /** [[appendNearDupIndex]] for the STREAMING ingest loop: the batch's
-    * signatures land in a directory the batch OWNS
-    * (`_increments/ingest_batch=<id>`, overwritten wholesale), so a
-    * crash-replay rewrites the same rows instead of appending them
-    * twice — the idempotence plain `mode("append")` cannot give.
-    * Underscore-prefixed: plain reads of the base layout skip
-    * increments; readers opt in via [[nearDupIndexWithIncrements]],
-    * and [[compactNearDupIndex]] folds them into the next base
-    * generation. Validates the stored banding like the batch face.
+  /** The STREAMING ingest loop's signature write
+    * ([[graft.streaming.StreamingDedup]], which validates the banding
+    * first and fences this write with its verdicts as one store
+    * append): the batch's signatures land in a directory the batch
+    * OWNS (`_increments/ingest_batch=<id>` of the generation `layout`,
+    * overwritten wholesale), so a crash-replay rewrites the same rows
+    * instead of appending them twice — the idempotence plain
+    * `mode("append")` cannot give. Underscore-prefixed: plain reads of
+    * the base layout skip increments; readers opt in via
+    * [[nearDupIndexWithIncrements]], and [[compactNearDupIndex]] folds
+    * them into the next generation.
     */
-  def appendNearDupIndexIncrement(
-      batch: DataFrame,
-      idCol: String,
-      textCol: String,
-      out: String,
-      batchId: Long,
-      numHashes: Int = 128,
-      bands: Int = 32,
-      shingleWidth: Int = 3): Unit = {
-    // the streaming append face refuses mid-compaction like the batch
-    // face: the failed micro-batch replays from the checkpoint after
-    // the fold (idempotent increment directories make that safe)
-    Layouts.assertNotQuiesced(batch.sparkSession, out,
-      "appendNearDupIndexIncrement")
-    validateIndexMeta(batch.sparkSession, out, numHashes, bands,
-      shingleWidth, "appendNearDupIndexIncrement")
+  private[graft] def writeIncrement(batch: DataFrame, idCol: String,
+      textCol: String, layout: String, batchId: Long, numHashes: Int,
+      bands: Int, shingleWidth: Int): Unit =
     // per-batch increment: NO fan-out — the increment directory holds
     // one file per SOURCE partition of the batch, not one per core
     bandSignaturesImpl(batch, idCol, textCol, numHashes, bands,
         shingleWidth, fanOut = false)
-      .write.mode("overwrite").parquet(Layouts.incrementDir(out, batchId))
-  }
+      .write.mode("overwrite").parquet(Layouts.incrementDir(layout, batchId))
 
   /** The layout's stored signature rows PLUS its committed streamed
-    * increments ([[appendNearDupIndexIncrement]] directories), as one
+    * increments ([[writeIncrement]] directories), as one
     * (id, band, key) frame. `excludeBatchId` drops the named batch's
     * own directory — the replay rule: a re-executed micro-batch must
     * dedup against exactly the history its first attempt saw, never
@@ -344,68 +348,49 @@ object Dedup {
     * real verdict).
     */
   def nearDupIndexWithIncrements(spark: org.apache.spark.sql.SparkSession,
-      indexPath: String, excludeBatchId: Option[Long] = None): DataFrame =
-    Layouts.withIncrements(spark, spark.read.parquet(indexPath), indexPath,
+      indexPath: String, excludeBatchId: Option[Long] = None): DataFrame = {
+    val layout = Similarity.resolveLayout(spark, indexPath)
+    Layouts.withIncrements(spark, spark.read.parquet(layout), layout,
       Seq("id", "band", "key"), excludeBatchId)
+  }
 
-  /** COMPACT an appended signature index: daily [[appendNearDupIndex]]
-    * batches leave one new file per band per day (the
-    * [[graft.ops.AnnIndex.compact]] small-files tax, text
-    * side). Rewrites the (id, key) rows hash-repartitioned by band —
-    * one file per band directory, nothing re-hashed — into a NEW
-    * layout, carrying the `_meta` banding sidecar. The caller swaps
-    * the pointer (LSM convention).
+  /** COMPACT a signature index: daily [[appendNearDupIndex]] batches
+    * leave one new file per band per day, streamed ones one increment
+    * directory each (the [[graft.ops.AnnIndex.compact]] small-files
+    * tax, text side). This is the store's fold
+    * ([[Layouts.GenerationStore.fold]]) of the pointered root `root`
+    * into `gen<k+1>`, returned: (id, band, key) rows hash-repartitioned
+    * by band — one file per band directory, nothing re-hashed — with
+    * the `_meta` banding sidecar written first.
     *
     * `dropIds` is the TOMBSTONE set (one id column —
     * [[graft.ops.Cdc.snapshotDiff]]'s `removed` class): matching
-    * signature rows are retired during the rewrite, so a deleted
-    * document can never again appear in a candidate pair, a `dup_of`,
-    * or a split cluster — even when the caller forgets to filter the
-    * corpus side (candidates come ONLY from stored rows). Without a
-    * deletion path, stale signatures accumulate forever and every
-    * incremental query pays their candidate rows.
+    * signature rows are retired, so a deleted document can never again
+    * appear in a candidate pair, a `dup_of`, or a split cluster — even
+    * when the caller forgets to filter the corpus side (candidates come
+    * ONLY from stored rows).
     */
   def compactNearDupIndex(spark: org.apache.spark.sql.SparkSession,
-      src: String, dst: String,
-      dropIds: Option[DataFrame] = None): Unit = {
-    require(src != dst,
-      "compactNearDupIndex writes a NEW layout at dst; swap the pointer " +
-        "after (an in-place rewrite would clobber the files it reads)")
-    // "quiesce the stream first", mechanical: hold the _compacting
-    // marker for the whole fold so every append face refuses instead
-    // of racing it; released on ANY exit (a failed compaction leaves
-    // src intact and appendable — the rerun re-reads everything)
-    Layouts.acquireQuiesce(spark, src, "compactNearDupIndex")
-    try {
-    // the marker stops NEW appends; this catches the one that passed
-    // its marker check before we acquired (see AnnIndex.compact)
-    Layouts.assertNoInflightIncrements(spark, src, "compactNearDupIndex")
-    // meta read + sidecar write FIRST (the AnnIndex.compact rule): a
-    // corrupt src _meta fails before dst is touched, and a failure in
-    // the (much larger) data rewrite leaves a meta-only dst —
-    // detectable — instead of a data-only dst that masquerades as a
-    // legitimate pre-meta layout. dst is cleared explicitly because a
-    // mode("overwrite") data write would delete the sidecar with it.
-    val meta = readNearDupIndexMeta(spark, src)
-    // fold committed streamed increments into the new generation (the
-    // LSM convergence step: dst is a PLAIN base layout again, readable
-    // without the increments face). Compaction of a live streamed
-    // layout is the caller's race to avoid — quiesce the stream first,
-    // as any LSM does.
-    val compacted = Layouts.dropTombstones(
-      Layouts.withIncrements(spark, spark.read.parquet(src), src,
-        Seq("id", "band", "key"), excludeBatchId = None),
-      dropIds, "id", "compactNearDupIndex")
-    Layouts.delete(spark, dst)
-    meta.foreach { case (nh, b, sw) =>
-      Layouts.writeSidecar(spark, dst + "/_meta", NearDupMetaSchema,
-        Seq(org.apache.spark.sql.Row(nh, b, sw)))
-    }
-    compacted
-      .repartition(col("band"))
-      .write.mode("append").partitionBy("band").parquet(dst)
-    } finally Layouts.releaseQuiesce(spark, src)
-  }
+      root: String, dropIds: Option[DataFrame] = None): String =
+    Layouts.openStore(spark, root).fold("compactNearDupIndex", new Layouts.FoldCodec {
+      private def retire(rows: DataFrame) =
+        Layouts.dropTombstones(rows, dropIds, "id", "compactNearDupIndex")
+      def writeFolded(src: String, folded: Long => Boolean, dst: String): Unit = {
+        val rows = retire(Layouts.withIncrementsWhere(spark,
+          spark.read.parquet(src), src, Seq("id", "band", "key"), folded))
+        // meta FIRST: a failure in the (much larger) data rewrite
+        // leaves a meta-only generation — detectable — instead of a
+        // data-only one that masquerades as a legitimate pre-meta layout
+        readNearDupIndexMeta(spark, src).foreach { case (nh, b, sw) =>
+          Layouts.writeSidecar(spark, dst + "/_meta", NearDupMetaSchema,
+            Seq(org.apache.spark.sql.Row(nh, b, sw)))
+        }
+        rows.repartition(col("band"))
+          .write.mode("append").partitionBy("band").parquet(dst)
+      }
+      def carry(src: String, dst: String): Unit =
+        retire(spark.read.parquet(src)).write.mode("overwrite").parquet(dst)
+    })
 
   /** Near-dup detection of a NEW batch against a corpus indexed at
     * rest by [[writeNearDupIndex]] — the daily-ingest shape: the
@@ -455,7 +440,8 @@ object Dedup {
       maxBroadcastSigRows: Long = 4L << 20): DataFrame = {
     validateIndexMeta(spark, indexPath, numHashes, bands, shingleWidth,
       "incrementalNearDup")
-    incrementalNearDupAgainst(spark.read.parquet(indexPath), corpus, batch,
+    incrementalNearDupAgainst(
+      spark.read.parquet(Similarity.resolveLayout(spark, indexPath)), corpus, batch,
       idCol, textCol, threshold, numHashes, bands, shingleWidth,
       maxBroadcastSigRows)
   }
@@ -579,7 +565,8 @@ object Dedup {
             s"over $sw-word shingles but the verify stage asks for " +
             s"$shingleWidth — pass the stored width (readNearDupIndexMeta)")
     }
-    val banded = df.sparkSession.read.parquet(indexPath)
+    val banded = df.sparkSession.read
+      .parquet(Similarity.resolveLayout(df.sparkSession, indexPath))
       .select(col("id"), col("band"), col("key"))
     val a = banded.select(col("id").as("id_a"), col("band"), col("key"))
     val b = banded.select(col("id").as("id_b"), col("band"), col("key"))
@@ -590,20 +577,8 @@ object Dedup {
       .select("id_a", "id_b")
       .dropDuplicates("id_a", "id_b")
       .localCheckpoint(true)
-    val candIds = cand.select(col("id_a").as("__cid"))
-      .union(cand.select(col("id_b").as("__cid"))).distinct()
-    val hintedIds =
-      if (cand.count() * 2 <= maxBroadcastCandRows) broadcast(candIds)
-      else candIds
-    val sh = df
-      .join(hintedIds, df(idCol) === col("__cid"), "left_semi")
-      .select(col(idCol).as("__sid"), shingles(col(textCol), shingleWidth).as("__sh"))
-    cand
-      .join(sh.select(col("__sid").as("id_a"), col("__sh").as("__sha")), Seq("id_a"))
-      .join(sh.select(col("__sid").as("id_b"), col("__sh").as("__shb")), Seq("id_b"))
-      .withColumn("jaccard", round(jaccard(col("__sha"), col("__shb")), 6))
-      .where(col("jaccard") >= threshold)
-      .select("id_a", "id_b", "jaccard")
+    verifiedPairs(cand, df, idCol, textCol, threshold, shingleWidth,
+      maxBroadcastCandRows)
   }
 
   /** Near-dup *dedup* at scale: cluster by LSH bucket, elect min-id

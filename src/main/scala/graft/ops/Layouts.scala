@@ -2,18 +2,18 @@ package graft.ops
 
 import org.apache.spark.sql.{Row, SparkSession}
 
-/** Shared plumbing for the at-rest index layouts' sidecar files
-  * (`_meta` under a [[Dedup.writeNearDupIndex]] signature index,
-  * `_codebooks` under a [[Similarity.writeIvfPqPartitioned]] vector
-  * layout).
+/** The storage every at-rest index sits on: increments, the quiesce
+  * marker, the generation pointer, and the [[GenerationStore]] that
+  * owns their lifecycle. The IVF-PQ ([[AnnIndex]]), near-dup
+  * ([[Dedup.writeNearDupIndex]]) and Bloom ([[Bloom.writeBloomIndex]])
+  * indexes are codecs over it: each says how to encode a batch and how
+  * to write a generation, and nothing about when either is safe.
   *
-  * Presence is decided by an explicit filesystem check, NOT by
-  * catching `AnalysisException` from the read: a present-but-corrupt
-  * sidecar (e.g. an interrupted write that left an empty directory)
-  * raises the same exception as absence, and treating it as "absent"
-  * silently skips exactly the validation the sidecar exists to
-  * enforce (r14 ADVICE). With the explicit check, absence is the only
-  * condition that may skip validation; every failure reading a
+  * Also the sidecar plumbing (`_meta`, `_codebooks`, fences, bitmap
+  * rows). Presence is an explicit filesystem check, NOT a caught
+  * `AnalysisException`: a present-but-corrupt sidecar raises the same
+  * exception as absence, and reading it as "absent" would skip the
+  * validation it exists for (r14 ADVICE). Every failure reading a
   * PRESENT sidecar surfaces as a curated error.
   */
 private[graft] object Layouts {
@@ -53,52 +53,32 @@ private[graft] object Layouts {
       path: String, cols: Seq[String],
       keepBatch: Long => Boolean): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.functions.col
-    val root = new org.apache.hadoop.fs.Path(path, IncrementsDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val projected = base.select(cols.map(col): _*)
-    if (!fs.exists(root)) projected
-    else {
-      val Batch = "ingest_batch=(-?\\d+)".r
-      val dirs = fs.listStatus(root).filter(_.isDirectory).map(_.getPath)
-        .flatMap { p =>
-          p.getName match {
-            case Batch(id) if keepBatch(id.toLong) => Some(p)
-            case _ => None
-          }
-        }
-      if (dirs.isEmpty) projected
-      else projected.unionByName(
-        // basePath anchors partition inference at the _increments root:
-        // without it, increments whose INSIDES are partitioned (the ANN
-        // layout's cell=... dirs) make multi-directory discovery fail
-        // with CONFLICTING_DIRECTORY_STRUCTURES; with it, the reader
-        // surfaces ingest_batch (and any inner partition column) and
-        // the projection drops what the caller didn't ask for
-        spark.read.option("basePath", root.toString)
-          .parquet(dirs.map(_.toString).toIndexedSeq: _*)
-          .select(cols.map(col): _*))
-    }
+    val dirs = incrementIds(spark, path).filter(keepBatch).map(incrementDir(path, _))
+    if (dirs.isEmpty) projected
+    else projected.unionByName(
+      // basePath anchors partition inference at the _increments root:
+      // without it, increments whose INSIDES are partitioned (the ANN
+      // layout's cell=... dirs) make multi-directory discovery fail
+      // with CONFLICTING_DIRECTORY_STRUCTURES; with it, the reader
+      // surfaces ingest_batch (and any inner partition column) and
+      // the projection drops what the caller didn't ask for
+      spark.read.option("basePath", s"$path/$IncrementsDir")
+        .parquet(dirs: _*)
+        .select(cols.map(col): _*))
   }
 
   /** The increment directory a batch OWNS (and overwrites wholesale on
     * replay — the idempotence that makes a crash-replay converge).
     */
   def incrementDir(path: String, batchId: Long): String =
-    s"$path/$IncrementsDir/ingest_batch=$batchId"
+    ownedBatchDir(s"$path/$IncrementsDir", batchId)
 
   /** The batch ids of a layout's committed increment directories (one
     * namenode listing; empty when none).
     */
-  def incrementIds(spark: SparkSession, path: String): Seq[Long] = {
-    val root = new org.apache.hadoop.fs.Path(path, IncrementsDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) Nil
-    else {
-      val Batch = "ingest_batch=(-?\\d+)".r
-      fs.listStatus(root).filter(_.isDirectory).map(_.getPath.getName)
-        .collect { case Batch(id) => id.toLong }.toIndexedSeq.sorted
-    }
-  }
+  def incrementIds(spark: SparkSession, path: String): Seq[Long] =
+    ownedBatchIds(spark, s"$path/$IncrementsDir")
 
   /** A per-batch OWNED output directory under a plain (non-layout)
     * output root — the idempotence convention of [[incrementDir]]
@@ -110,6 +90,20 @@ private[graft] object Layouts {
     */
   def ownedBatchDir(out: String, batchId: Long): String =
     s"$out/ingest_batch=$batchId"
+
+  /** The batch ids of the [[ownedBatchDir]] directories under `out`,
+    * ascending (one namenode listing; empty when `out` is absent).
+    */
+  def ownedBatchIds(spark: SparkSession, out: String): Seq[Long] = {
+    val root = new org.apache.hadoop.fs.Path(out)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(root)) Nil
+    else {
+      val Batch = "ingest_batch=(-?\\d+)".r
+      fs.listStatus(root).filter(_.isDirectory).map(_.getPath.getName)
+        .collect { case Batch(id) => id.toLong }.toIndexedSeq.sorted
+    }
+  }
 
   /** The marker a compaction (or rebuild) holds while folding or
     * replacing a layout's generation — the mechanical form of the
@@ -150,71 +144,11 @@ private[graft] object Layouts {
   def releaseQuiesce(spark: SparkSession, path: String): Unit =
     delete(spark, s"$path/$QuiesceMarker")
 
-  /** Refuse while a compaction holds the layout's quiesce marker —
-    * called by every append face, so a stream racing a compaction
-    * fails curated (and its checkpoint replays the batch after the
-    * fold) instead of writing an increment the fold half-sees.
-    */
-  def assertNotQuiesced(spark: SparkSession, path: String,
-      caller: String): Unit =
-    if (exists(spark, s"$path/$QuiesceMarker"))
-      throw new IllegalStateException(
-        s"$caller: a compaction holds the $QuiesceMarker marker under " +
-          s"$path — appending mid-compaction races the increment fold; " +
-          "retry after it completes (or releaseQuiesce if a crashed " +
-          "compaction left the marker behind)")
-
-  /** Refuse while any increment directory holds an UNCOMMITTED write
-    * (Spark's output committer stages task files under `_temporary`
-    * until job commit) — the second half of the quiesce handshake: the
-    * marker stops NEW appends, and this check catches the append that
-    * passed its marker check before the compaction acquired it. A fold
-    * that read such a directory would ship a subset of the batch's
-    * rows into the next generation while the completed append (and its
-    * checkpoint) claim the batch committed — silent data loss. Called
-    * by the compactors AFTER taking the marker; one listing of the
-    * increment root plus one existence probe per increment directory.
-    */
-  def assertNoInflightIncrements(spark: SparkSession, path: String,
-      caller: String): Unit = {
-    val layoutRoot = new org.apache.hadoop.fs.Path(path)
-    val fs = layoutRoot.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // the BATCH append faces (AnnIndex.append, appendNearDupIndex) write
-    // mode('append') at the layout root, staging under
-    // <layout>/_temporary — an append that passed its marker check
-    // before the compactor acquired is just as in-flight there as a
-    // streaming increment is in its own directory (r19 ADVICE)
-    if (fs.exists(new org.apache.hadoop.fs.Path(layoutRoot, "_temporary")))
-      throw new IllegalStateException(
-        s"$caller: the layout root $path holds an uncommitted batch " +
-          "append (_temporary present) — an append that started before " +
-          "the quiesce marker was taken is still in flight; let it " +
-          "drain (or clean up the dead writer's staging) and retry")
-    val root = new org.apache.hadoop.fs.Path(path, IncrementsDir)
-    if (!fs.exists(root)) return
-    val inflight = fs.listStatus(root).filter(_.isDirectory).map(_.getPath)
-      .filter(p => fs.exists(new org.apache.hadoop.fs.Path(p, "_temporary")))
-    if (inflight.nonEmpty)
-      throw new IllegalStateException(
-        s"$caller: increment director${if (inflight.length == 1) "y" else "ies"} " +
-          s"${inflight.map(_.getName).sorted.mkString(", ")} under " +
-          s"$path/$IncrementsDir hold uncommitted writes (_temporary " +
-          "present) — an append that started before the quiesce marker " +
-          "was taken is still in flight; quiesce the stream and retry " +
-          "once it drains")
-  }
-
   /** The atomic generation pointer (`_current` under a STORE ROOT that
     * holds `gen0/gen1/...` generation directories): one small file
-    * whose content is the current generation's directory NAME.
-    * [[AnnIndex.open]] resolves a store root through it
-    * ([[Similarity.resolveLayout]]); the index's rebuilds and
-    * compactions ([[AnnIndex.maintain]],
-    * [[AnnIndex.maintainFromDriftSeries]], [[AnnIndex.compact]]) write
-    * `gen<k+1>` and swap it INSIDE their quiesce window, so an append
-    * has no gap to land in the superseded generation, and a handle the
-    * pointer moved off refuses to write. A store is initialised by
-    * writing `gen0` and pointing `_current` at it.
+    * whose content is the current generation's directory NAME, which a
+    * [[GenerationStore]] opened on the root resolves. A store is
+    * initialised by writing `gen0` and pointing `_current` at it.
     */
   val GenerationPointer = "_current"
 
@@ -289,6 +223,190 @@ private[graft] object Layouts {
   /** The full path of the generation `root/_current` points at. */
   def currentGeneration(spark: SparkSession, root: String): String =
     s"$root/${currentGenerationName(spark, root)}"
+
+  /** Open the store at `path` — a pointered root, bound to the
+    * generation `_current` names now, or a plain layout, which is its
+    * own only generation (it appends, but cannot fold or rebuild).
+    */
+  def openStore(spark: SparkSession, path: String): GenerationStore = {
+    val layout = Similarity.resolveLayout(spark, path)
+    // a pointered root resolves below itself; a plain layout to itself
+    new GenerationStore(spark, layout, Some(path).filter(_ => layout != path))
+  }
+
+  /** How an index writes a generation, for [[GenerationStore.fold]]:
+    * `writeFolded` writes at `dst` the generation holding `src`'s base
+    * plus the committed increments `folded` keeps (sidecar first, so a
+    * failed data write leaves a detectable partial generation), and
+    * `carry` copies one increment directory of `src` to `dst`.
+    */
+  trait FoldCodec {
+    def writeFolded(src: String, folded: Long => Boolean, dst: String): Unit
+    def carry(src: String, dst: String): Unit
+  }
+
+  /** One generation of an at-rest index, and the lifecycle policy every
+    * index shares ("Continuously Adaptive Similarity Search", SIGMOD
+    * 2020: the index is one long-lived object): [[append]], [[fold]]
+    * and [[rebuild]]. The handle is bound to the generation it resolved
+    * (`layout`); once `_current` moves off it, every write refuses
+    * curated — reopen the store.
+    */
+  final class GenerationStore private[Layouts] (spark: SparkSession,
+      val layout: String, val root: Option[String]) {
+
+    /** Refuse once `_current` has moved off this generation (a plain
+      * layout has no pointer and is always current).
+      */
+    private def requireCurrent(face: String): Unit =
+      root.foreach { r =>
+        val live = currentGeneration(spark, r)
+        if (live != layout)
+          throw new IllegalStateException(
+            s"$face: the generation pointer under $r moved off $layout (it " +
+              s"now names $live) — this handle is stale; reopen the index " +
+              "and retry")
+      }
+
+    /** Run `write` as an append into this generation: refuse on a
+      * stale handle or a held marker, write, then ONE post-write fence
+      * that fails if the marker is held or the pointer moved. The checks
+      * before the write are check-then-act: a fold can take the marker
+      * and list increments before this write's directory exists (marker
+      * half), or finish and swap while it writes (pointer half). Failing
+      * AFTER the write is convergent: the checkpoint has not committed,
+      * and the replay rewrites its own directory in the live generation.
+      * `beforeFence` runs between the write and the fence — the seam a
+      * spec pins the race with.
+      */
+    def append[T](face: String, beforeFence: () => Unit = () => ())(write: => T): T = {
+      requireCurrent(face)
+      assertNotQuiesced(face)
+      val out = write
+      beforeFence()
+      assertNotQuiesced(face)
+      requireCurrent(face)
+      out
+    }
+
+    /** The path of `gen<k+1>`, the generation a fold or rebuild of this
+      * one writes. Refuses a plain layout and a stale handle.
+      */
+    def successor(face: String): String = {
+      val (r, k) = rootAndIndex(face)
+      s"$r/gen${k + 1}"
+    }
+
+    /** Under this generation's marker: write `gen<k+1>` with `write`,
+      * then swap `_current` to it before the marker lifts, so no append
+      * can land in this one unseen. A crash before the swap leaves the
+      * marker HELD: swap and release by hand, or delete the orphan
+      * generation and release.
+      */
+    def rebuild[T](face: String)(write: String => T): T = {
+      val (r, k) = rootAndIndex(face)
+      quiesced(face) {
+        val out = write(s"$r/gen${k + 1}")
+        swapGenerationPointer(spark, r, s"gen${k + 1}")
+        out
+      }
+    }
+
+    /** FOLD this generation into `gen<k+1>` ([[rebuild]]) and return
+      * its path: the codec writes base ∪ every committed increment but
+      * the newest, and carries the newest as its own directory. Under
+      * sequential epochs only the newest on-disk batch can still be
+      * uncommitted; its replay then overwrites its own directory in
+      * `gen<k+1>` and reads the history its first attempt read (base
+      * rows carry no batch id, so a folded batch would read as history).
+      * The rerun of a failed fold clears its partial `gen<k+1>`.
+      */
+    def fold(face: String, codec: FoldCodec): String =
+      rebuild(face) { dst =>
+        val newest = incrementIds(spark, layout).lastOption
+        delete(spark, dst)
+        codec.writeFolded(layout, id => !newest.contains(id), dst)
+        newest.foreach(b => codec.carry(incrementDir(layout, b), incrementDir(dst, b)))
+        dst
+      }
+
+    /** Complete a rebuild that died between writing `gen` and swapping
+      * to it: when `gen` is numerically AHEAD of this generation and on
+      * disk, swap `_current` to it, release the marker the dead run left
+      * here, and return its path. A generation at or behind this one is
+      * history and is never swapped back to.
+      */
+    def completeSwap(face: String, gen: String): Option[String] = {
+      val (r, k) = rootAndIndex(face)
+      if (generationIndex(gen).exists(_ > k) && exists(spark, s"$r/$gen")) {
+        swapGenerationPointer(spark, r, gen)
+        releaseQuiesce(spark, layout)
+        Some(s"$r/$gen")
+      } else None
+    }
+
+    private def rootAndIndex(face: String): (String, Long) = {
+      val r = root.getOrElse(throw new IllegalStateException(
+        s"$face: $layout is a plain layout, not a pointered store root — " +
+          "rebuilds and compactions write gen<k+1> next to the current " +
+          "generation and swap the pointer to it; write the layout as " +
+          "<root>/gen0, initialise the root with " +
+          "Layouts.swapGenerationPointer(root, \"gen0\") and open the root"))
+      requireCurrent(face)
+      val gen = layout.stripPrefix(r + "/")
+      (r, generationIndex(gen).getOrElse(
+        throw new IllegalArgumentException(
+          s"$face: the pointered lifecycle derives the next generation " +
+            "from the current one's name, which must match gen<k>; " +
+            s"'$gen' (under $r) does not — re-point " +
+            s"$GenerationPointer at a gen<k>-named generation")))
+    }
+
+    /** Run `body` holding this generation's marker: appends refuse
+      * meanwhile, and one that passed its marker check before the
+      * acquire and is still staging fails the step instead of being
+      * retired with this generation. Every swap happens under the live
+      * generation's marker, so the pointer check made while holding it
+      * cannot go stale. Released on any exit — a failed step leaves
+      * this generation intact and appendable.
+      */
+    private def quiesced[T](face: String)(body: => T): T = {
+      acquireQuiesce(spark, layout, face)
+      try {
+        requireCurrent(face)
+        assertNoInflightIncrements(face)
+        body
+      } finally releaseQuiesce(spark, layout)
+    }
+
+    private def assertNotQuiesced(face: String): Unit =
+      if (exists(spark, s"$layout/$QuiesceMarker"))
+        throw new IllegalStateException(
+          s"$face: a compaction holds the $QuiesceMarker marker under " +
+            s"$layout — appending mid-compaction races the increment " +
+            "fold; retry after it completes (or releaseQuiesce if a " +
+            "crashed compaction left the marker behind)")
+
+    /** Refuse while any write into this generation is UNCOMMITTED
+      * (Spark stages task files under `_temporary` until job commit):
+      * the marker stops NEW appends, this catches the one that passed
+      * its marker check before the acquire — folding it would ship a
+      * subset of a batch the append then reports committed.
+      */
+    private def assertNoInflightIncrements(face: String): Unit = {
+      // the batch appends stage under <layout>/_temporary (r19 ADVICE),
+      // a streamed increment under its own directory
+      val inflight = (layout +: incrementIds(spark, layout).map(incrementDir(layout, _)))
+        .filter(d => exists(spark, s"$d/_temporary"))
+      if (inflight.nonEmpty)
+        throw new IllegalStateException(
+          s"$face: ${inflight.map(d => if (d == layout) s"the layout root $d" else d)
+            .mkString(", ")} hold uncommitted writes " +
+            "(_temporary present) — an append that started before the " +
+            "quiesce marker was taken is still in flight; let it drain " +
+            "(or clean up a dead writer's staging) and retry")
+    }
+  }
 
   /** Reclaim superseded generations under a pointered store root — the
     * GC the rebuild lifecycle otherwise accumulates forever (every
@@ -498,28 +616,17 @@ private[graft] object Layouts {
       rebuildWith: String): Array[Row] = {
     // the part files by EXPLICIT path, not the directory: an empty
     // directory (killed writer) has no part files — curated below
+    def broken(what: String, cause: Throwable = null) = new IllegalStateException(
+      s"the sidecar at $path is present but $what — an interrupted " +
+        "sidecar write can leave an empty directory; rebuild the layout " +
+        s"with $rebuildWith (or delete the sidecar to opt out of validation)",
+      cause)
     val parts = sidecarPartFiles(spark, path)
-    if (parts.isEmpty)
-      throw new IllegalStateException(
-        s"the sidecar at $path is present but unreadable — an " +
-          "interrupted sidecar write can leave an empty directory; " +
-          s"rebuild the layout with $rebuildWith (or delete the " +
-          "sidecar to opt out of validation)")
+    if (parts.isEmpty) throw broken("unreadable")
     val rows =
       try org.apache.spark.sql.graft.SidecarIO.readParquetParts(spark, parts)
-      catch {
-        case e: Exception =>
-          throw new IllegalStateException(
-            s"the sidecar at $path is present but unreadable — an " +
-              "interrupted sidecar write can leave an empty directory; " +
-              s"rebuild the layout with $rebuildWith (or delete the " +
-              "sidecar to opt out of validation)", e)
-      }
-    if (rows.isEmpty)
-      throw new IllegalStateException(
-        s"the sidecar at $path is present but holds no rows — an " +
-          "interrupted sidecar write; rebuild the layout with " +
-          s"$rebuildWith (or delete the sidecar to opt out of validation)")
+      catch { case e: Exception => throw broken("unreadable", e) }
+    if (rows.isEmpty) throw broken("holds no rows")
     rows
   }
 }

@@ -914,11 +914,7 @@ object Similarity {
     // empty series — the steady state between generations — not the
     // unreadable-directory corruption the catch below curates. One
     // namenode listing; parquet read skipped entirely when empty.
-    val root = new org.apache.hadoop.fs.Path(driftOut)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val hasReports = fs.listStatus(root)
-      .exists(s => s.isDirectory && s.getPath.getName.startsWith("ingest_batch="))
-    if (!hasReports)
+    if (Layouts.ownedBatchIds(spark, driftOut).isEmpty)
       return spark.createDataFrame(
         spark.sparkContext.emptyRDD[Row],
         org.apache.spark.sql.types.StructType(Seq(
@@ -1001,17 +997,8 @@ object Similarity {
         s"pruneDriftSeries: no $RebuiltFence fence under $driftOut — the " +
           "series has not been consumed by a rebuild; pruning would erase " +
           "live evidence (run AnnIndex.maintainFromDriftSeries first)"))
-    val root = new org.apache.hadoop.fs.Path(driftOut)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val Batch = "ingest_batch=(-?\\d+)".r
-    val pruned = fs.listStatus(root).filter(_.isDirectory).map(_.getPath)
-      .flatMap { p =>
-        p.getName match {
-          case Batch(id) if id.toLong <= through => Some(p)
-          case _ => None
-        }
-      }
-    pruned.foreach(fs.delete(_, true))
+    val pruned = Layouts.ownedBatchIds(spark, driftOut).filter(_ <= through)
+    pruned.foreach(id => Layouts.delete(spark, Layouts.ownedBatchDir(driftOut, id)))
     pruned.length.toLong
   }
 
@@ -1164,13 +1151,10 @@ object Similarity {
   /** Resolve a layout argument through its generation pointer: a
     * STORE ROOT carrying [[Layouts.GenerationPointer]] resolves to the
     * pointed generation directory; a plain layout path resolves to
-    * itself. One existence probe. [[AnnIndex.open]] resolves through
-    * this, so after a rebuild or compaction ([[AnnIndex.maintain]],
-    * [[AnnIndex.maintainFromDriftSeries]], [[AnnIndex.compact]]) swaps
-    * `_current`, the whole fleet —
-    * probes, monitors, the ingest stream's next micro-batch — answers
-    * from the new generation with no coordination beyond the one
-    * atomic rename.
+    * itself. One existence probe. Every store and index reader
+    * resolves through this, so after a fold or rebuild swaps
+    * `_current`, probes, monitors and the next micro-batch answer from
+    * the new generation with no coordination beyond one atomic rename.
     */
   def resolveLayout(spark: org.apache.spark.sql.SparkSession,
       path: String): String =

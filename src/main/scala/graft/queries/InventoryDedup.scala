@@ -336,11 +336,12 @@ private[queries] trait InventoryDedup extends InventorySources {
     val base = new java.io.File(
       new java.io.File(System.getProperty("java.io.tmpdir"), "graft_q150_index"),
       java.lang.Integer.toHexString(d.hashCode)).getAbsolutePath
+    // a pointered store; a rerun rewrites gen0 and re-points first
     Dedup.writeNearDupIndex(docs, "doc_id", "text", base + "/gen0")
+    graft.ops.Layouts.swapGenerationPointer(s, base, "gen0")
     val removed = docs.where(col("doc_id") % 3 === 0).select("doc_id")
-    Dedup.compactNearDupIndex(s, base + "/gen0", base + "/gen1",
-      dropIds = Some(removed))
-    Dedup.nearDupPairsFromIndex(base + "/gen1", docs, "doc_id", "text",
+    Dedup.compactNearDupIndex(s, base, dropIds = Some(removed))
+    Dedup.nearDupPairsFromIndex(base, docs, "doc_id", "text",
         threshold = 0.8)
       .orderBy(col("id_a"), col("id_b"))
   }

@@ -38,7 +38,11 @@ import org.apache.spark.sql.streaming.DataStreamWriter
   * ever (never corpus rows), one scan-speed membership filter, one
   * map-side-reducing bitmap fold of the batch.
   * [[graft.ops.Bloom.compactBloomIndex]] folds the increment rows into
-  * the next single-row base when the listing tax bites.
+  * the next generation's single base row when the listing tax bites.
+  * `indexPath` is a plain layout or a pointered store root; each batch
+  * is one fenced append of its store
+  * ([[graft.ops.Layouts.GenerationStore.append]]), so a batch a fold
+  * overlapped fails curated and replays into the live generation.
   */
 object StreamingBloomGate {
 
@@ -52,37 +56,24 @@ object StreamingBloomGate {
 
   /** [[ingestBatch]] with a hook between the writes and the post-write
     * fence — the seam that lets a spec pin the check-then-act window
-    * deterministically (a compaction acquiring its marker while this
-    * batch was computing), mirroring
-    * [[StreamingSimilarity.ingestBatchFenced]]'s pointer-fence seam.
+    * deterministically (a compaction acquiring its marker or swapping
+    * the pointer while this batch was computing), mirroring
+    * [[StreamingSimilarity.ingestBatchFenced]].
     */
   private[graft] def ingestBatchFenced(b: DataFrame, batchId: Long,
       indexPath: String, textCol: String, admittedOut: String,
       beforeFence: () => Unit): Unit = {
     val spark = b.sparkSession
-    // refuse while a compaction folds the index (the replay makes the
-    // post-fold retry safe), BEFORE any read or write
-    Layouts.assertNotQuiesced(spark, indexPath, "bloomGateStream")
-    val (m, k, words) =
-      Bloom.readBloomIndex(spark, indexPath, historyBefore = Some(batchId))
-    b.where(!Bloom.bloomMember(col(textCol), m, k, words))
-      .write.mode("overwrite")
-      .parquet(Layouts.ownedBatchDir(admittedOut, batchId))
-    Bloom.writeBitmapRow(spark, Bloom.bitmapOf(b, textCol, m, k), m, k,
-      Layouts.incrementDir(indexPath, batchId))
-    // post-write quiesce fence (r20 ADVICE, medium — the
-    // StreamingSimilarity.ingestBatchFenced pattern): the marker
-    // check above is check-then-act for a batch already past it, so a
-    // compactBloomIndex can acquire, pass assertNoInflightIncrements,
-    // fold and release while this batch is still computing — its
-    // bitmap increment then lands in a folded-away src whose caller
-    // already swapped to dst, and the bits are permanently absent from
-    // the live index. Failing AFTER the write is safe and convergent:
-    // the checkpoint has not committed, so the batch replays against
-    // the post-fold index (and its orphaned increment in the dead src
-    // is never read again).
-    beforeFence()
-    Layouts.assertNotQuiesced(spark, indexPath, "bloomGateStream (post-write)")
+    val store = Layouts.openStore(spark, indexPath)
+    store.append("bloomGateStream", beforeFence) {
+      val (m, k, words) = Bloom.readBloomIndex(spark, store.layout,
+        historyBefore = Some(batchId))
+      b.where(!Bloom.bloomMember(col(textCol), m, k, words))
+        .write.mode("overwrite")
+        .parquet(Layouts.ownedBatchDir(admittedOut, batchId))
+      Bloom.writeBitmapRow(spark, Bloom.bitmapOf(b, textCol, m, k), m, k,
+        Layouts.incrementDir(store.layout, batchId))
+    }
   }
 
   /** The stream: micro-batches of rows with `textCol` (plus whatever

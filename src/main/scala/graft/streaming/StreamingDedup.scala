@@ -27,7 +27,7 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
   *     partition column names the batch).
   *   - INDEX signatures land in the batch's own
   *     `_increments/ingest_batch=<id>` directory of the index layout
-  *     ([[graft.ops.Dedup.appendNearDupIndexIncrement]]), overwritten
+  *     ([[graft.ops.Dedup.writeIncrement]]), overwritten
   *     wholesale on replay. The dedup step reads base + committed
   *     increments EXCLUDING the batch's own directory
   *     ([[graft.ops.Dedup.nearDupIndexWithIncrements]]), so a replayed
@@ -44,8 +44,11 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
   * reads of either layout; batch-face consumers of a streamed index
   * either read through [[graft.ops.Dedup.nearDupIndexWithIncrements]]
   * or run [[graft.ops.Dedup.compactNearDupIndex]], which folds the
-  * increments into the next base generation (quiesce the stream
-  * first, as with any LSM compaction).
+  * increments into the next base generation while the stream runs.
+  * `indexPath` is a plain layout or a pointered store root; each batch
+  * is one fenced append of its store
+  * ([[graft.ops.Layouts.GenerationStore.append]]), so a batch a fold
+  * overlapped fails curated and replays into the live generation.
   *
   * The returned writer is not started — the caller holds the
   * [[org.apache.spark.sql.streaming.StreamingQuery]] (the
@@ -73,35 +76,49 @@ object StreamingDedup {
       numHashes: Int,
       bands: Int,
       shingleWidth: Int,
-      maxBroadcastSigRows: Long): Unit = {
+      maxBroadcastSigRows: Long): Unit =
+    ingestBatchFenced(b, batchId, corpusPath, indexPath, verdictsOut, idCol,
+      textCol, threshold, numHashes, bands, shingleWidth,
+      maxBroadcastSigRows, () => ())
+
+  /** [[ingestBatch]] with a hook between the writes and the post-write
+    * fence — the seam a spec pins a fold overlapping the batch with,
+    * like [[StreamingSimilarity.ingestBatchFenced]].
+    */
+  private[graft] def ingestBatchFenced(b: DataFrame, batchId: Long,
+      corpusPath: String, indexPath: String, verdictsOut: String,
+      idCol: String, textCol: String, threshold: Double, numHashes: Int,
+      bands: Int, shingleWidth: Int, maxBroadcastSigRows: Long,
+      beforeFence: () => Unit): Unit = {
     val spark = b.sparkSession
-    // fail BEFORE the dedup work while a compaction holds the index's
-    // quiesce marker (the append faces refuse too — this check just
-    // moves the curated failure ahead of the candidate join): the
-    // checkpoint replays the batch after the fold
-    Layouts.assertNotQuiesced(spark, indexPath, "incrementalNearDupStream")
-    // fail before any write if the caller's banding disagrees with the
-    // layout (the appendNearDupIndex discipline): a mismatched dedup
-    // pass would silently change which pairs can ever collide
-    Dedup.validateIndexMeta(spark, indexPath, numHashes, bands,
-      shingleWidth, "incrementalNearDupStream")
-    val history = Dedup.nearDupIndexWithIncrements(spark, indexPath,
-      excludeBatchId = Some(batchId))
-    val corpus = Layouts.withIncrements(spark,
-      spark.read.parquet(corpusPath), corpusPath, Seq(idCol, textCol),
-      excludeBatchId = Some(batchId))
-    val verdicts = Dedup.incrementalNearDupAgainst(history, corpus, b,
-      idCol, textCol, threshold, numHashes, bands, shingleWidth,
-      maxBroadcastSigRows)
-    // idempotent: the batch owns its verdict partition directory
-    verdicts.write.mode("overwrite")
-      .parquet(Layouts.ownedBatchDir(verdictsOut, batchId))
-    // the batch becomes history: signatures and text into increment
-    // directories the batch owns (overwritten wholesale on replay)
-    Dedup.appendNearDupIndexIncrement(b, idCol, textCol, indexPath,
-      batchId, numHashes, bands, shingleWidth)
-    b.write.mode("overwrite")
-      .parquet(Layouts.incrementDir(corpusPath, batchId))
+    val face = "incrementalNearDupStream"
+    val store = Layouts.openStore(spark, indexPath)
+    // the store refuses BEFORE the dedup work while a compaction holds
+    // the marker (the checkpoint replays the batch after the fold)
+    store.append(face, beforeFence) {
+      // fail before any write if the caller's banding disagrees with
+      // the layout (the appendNearDupIndex discipline): a mismatched
+      // dedup pass would silently change which pairs can ever collide
+      Dedup.validateIndexMeta(spark, store.layout, numHashes, bands,
+        shingleWidth, face)
+      val history = Dedup.nearDupIndexWithIncrements(spark, store.layout,
+        excludeBatchId = Some(batchId))
+      val corpus = Layouts.withIncrements(spark,
+        spark.read.parquet(corpusPath), corpusPath, Seq(idCol, textCol),
+        excludeBatchId = Some(batchId))
+      val verdicts = Dedup.incrementalNearDupAgainst(history, corpus, b,
+        idCol, textCol, threshold, numHashes, bands, shingleWidth,
+        maxBroadcastSigRows)
+      // idempotent: the batch owns its verdict partition directory
+      verdicts.write.mode("overwrite")
+        .parquet(Layouts.ownedBatchDir(verdictsOut, batchId))
+      // the batch becomes history: signatures and text into increment
+      // directories the batch owns (overwritten wholesale on replay)
+      Dedup.writeIncrement(b, idCol, textCol, store.layout, batchId,
+        numHashes, bands, shingleWidth)
+      b.write.mode("overwrite")
+        .parquet(Layouts.incrementDir(corpusPath, batchId))
+    }
   }
 
   def incrementalNearDupStream(

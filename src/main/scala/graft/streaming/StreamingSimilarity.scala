@@ -29,9 +29,12 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
   * ([[graft.ops.Layouts.GenerationPointer]]). A root resolves to the
   * CURRENT generation once per batch, so after a rebuild or compaction
   * swaps `_current` the next micro-batch encodes with (and reports
-  * drift against) the new generation; while one holds the quiesce
-  * marker the batch fails curated and the checkpoint replays it after
-  * the swap.
+  * drift against) the new generation. The batch's writes are one
+  * fenced append of the index's store
+  * ([[graft.ops.Layouts.GenerationStore.append]]): while a compaction
+  * holds the quiesce marker, or once the pointer moved during the
+  * batch, it fails curated and the checkpoint replays it into the
+  * live generation.
   *
   * `driftOut` composes the rebuild signal in: when set, each batch
   * also writes its one-row drift report — mean ADC reconstruction
@@ -74,9 +77,11 @@ object StreamingSimilarity {
       () => ())
 
   /** [[ingestBatch]] with a hook between the writes and the post-write
-    * pointer fence — the seam that lets a spec pin the fence
-    * deterministically (a rebuild swapping the pointer while this batch
-    * was encoding), like [[StreamingBloomGate.ingestBatchFenced]].
+    * fence — the seam that lets a spec pin the fence deterministically
+    * (a rebuild swapping the pointer, or a compaction taking the
+    * marker, while this batch was encoding), like
+    * [[StreamingDedup.ingestBatchFenced]] and
+    * [[StreamingBloomGate.ingestBatchFenced]].
     */
   private[graft] def ingestBatchFenced(
       b: DataFrame,
@@ -88,34 +93,30 @@ object StreamingSimilarity {
       beforeFence: () => Unit): Unit = {
     val spark = b.sparkSession
     val idx = AnnIndex.open(spark, layoutPath, idCol)
-    idx.appendIncrement(b, vecCol, batchId)
-    driftOut.foreach { out =>
+    // the fence runs after the drift report too: a report computed
+    // against a superseded generation's codebooks must not commit with
+    // the batch
+    idx.store.append("incrementalAnnStream", beforeFence) {
+      idx.encodeIncrement(b, vecCol, batchId)
+      driftOut.foreach { out =>
       // kind-aware like the append itself: a residual layout's drift
       // is its residual reconstruction error, not the raw-PQ one
-      val err = Similarity.ivfPqDistortion(b, vecCol, idx.ivf, idx.pq,
-        idx.residual)
-      // the batch id lives in the DIRECTORY (the verdicts convention:
-      // a read of `out` surfaces it as the ingest_batch partition
-      // column) — writing it as a data column too would collide with
-      // the discovered partition column on read. Driver-side write:
-      // one double the driver just collected (ivfPqDistortion) — a
-      // Spark job per report was pure per-batch scheduler tax.
-      graft.ops.Layouts.writeSidecar(spark,
-        graft.ops.Layouts.ownedBatchDir(out, batchId),
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("pq_err",
-            org.apache.spark.sql.types.DoubleType, nullable = false))),
-        Seq(org.apache.spark.sql.Row(err)))
+        val err = Similarity.ivfPqDistortion(b, vecCol, idx.ivf, idx.pq,
+          idx.residual)
+        // the batch id lives in the DIRECTORY (the verdicts convention:
+        // a read of `out` surfaces it as the ingest_batch partition
+        // column) — writing it as a data column too would collide with
+        // the discovered partition column on read. Driver-side write:
+        // one double the driver just collected (ivfPqDistortion) — a
+        // Spark job per report was pure per-batch scheduler tax.
+        graft.ops.Layouts.writeSidecar(spark,
+          graft.ops.Layouts.ownedBatchDir(out, batchId),
+          org.apache.spark.sql.types.StructType(Seq(
+            org.apache.spark.sql.types.StructField("pq_err",
+              org.apache.spark.sql.types.DoubleType, nullable = false))),
+          Seq(org.apache.spark.sql.Row(err)))
+      }
     }
-    beforeFence()
-    // post-write pointer fence, after the drift report too: a report
-    // computed against a superseded generation's codebooks must not
-    // commit with the batch. Failing AFTER the writes is safe and
-    // convergent: the checkpoint has not committed, the replay opens
-    // the NEW generation and re-encodes there, and the rows written
-    // into the superseded one are never read again (vacuumGenerations
-    // reclaims it).
-    idx.requireCurrent("incrementalAnnStream")
   }
 
   def incrementalAnnStream(

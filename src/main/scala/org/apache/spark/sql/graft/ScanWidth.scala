@@ -21,8 +21,11 @@ import org.apache.spark.sql.execution.datasources.{FilePartition, HadoopFsRelati
   * caller falls back to the planning probe — including a partitioned
   * or bucketed relation, whose scan the planner prunes by partition
   * filter or splits by bucket, which the full listing here cannot
-  * model. Parity with the planner is
-  * pinned in OpsSpec ("fanOutByKey width estimate").
+  * model. So does a session whose split configuration makes
+  * `maxSplitBytes` non-positive (neither `maxPartitionBytes` nor
+  * `openCostInBytes` is value-checked), where the split math has no
+  * step. Parity with the planner is pinned in OpsSpec ("fanOutByKey
+  * width estimate").
   */
 object ScanWidth {
 
@@ -38,29 +41,32 @@ object ScanWidth {
       case _: Project | _: Filter | _: SubqueryAlias => rel(p.children.head)
       case _ => None
     }
-    rel(df.queryExecution.analyzed).map { r =>
+    rel(df.queryExecution.analyzed).flatMap { r =>
       val spark = df.sparkSession
       val lens = r.location.listFiles(Nil, Nil).flatMap(_.files).map(_.getLen)
       val openCost = spark.sessionState.conf.filesOpenCostInBytes
       val totalBytes: Long = lens.map(_ + openCost).sum
       val maxSplit: Long = FilePartition.maxSplitBytes(spark, totalBytes)
-      // parquet is splitable: every file splits at maxSplit boundaries,
-      // splits sort by length descending, then Next-Fit-Decreasing
-      // packing charges openCost per split on top of its length
-      val splits = lens.iterator.flatMap { len =>
-        (0L until len by maxSplit).map(o => math.min(maxSplit, len - o))
-      }.toArray
-      java.util.Arrays.sort(splits)
-      var nParts = 0
-      var cur = 0L
-      var i = splits.length - 1
-      while (i >= 0) {
-        val len = splits(i)
-        if (nParts == 0 || cur + len > maxSplit) { nParts += 1; cur = 0L }
-        cur += len + openCost
-        i -= 1
+      // a zero split size has no step to split by: decline
+      Option.when(maxSplit > 0) {
+        // parquet is splitable: every file splits at maxSplit boundaries,
+        // splits sort by length descending, then Next-Fit-Decreasing
+        // packing charges openCost per split on top of its length
+        val splits = lens.iterator.flatMap { len =>
+          (0L until len by maxSplit).map(o => math.min(maxSplit, len - o))
+        }.toArray
+        java.util.Arrays.sort(splits)
+        var nParts = 0
+        var cur = 0L
+        var i = splits.length - 1
+        while (i >= 0) {
+          val len = splits(i)
+          if (nParts == 0 || cur + len > maxSplit) { nParts += 1; cur = 0L }
+          cur += len + openCost
+          i -= 1
+        }
+        math.max(nParts, 1)
       }
-      math.max(nParts, 1)
     }
   }
 }

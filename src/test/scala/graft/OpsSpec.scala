@@ -560,20 +560,21 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val t0 = "the quick brown fox jumps over the lazy dog again and again today"
     val corpus = Seq((0L, t0), (100L, t0), (7L, "something entirely different here"))
       .toDF("doc_id", "text")
-    Dedup.writeNearDupIndex(corpus, "doc_id", "text", base + "/idx0")
-    Dedup.compactNearDupIndex(spark, base + "/idx0", base + "/idx1",
-      dropIds = Some(Seq(0L).toDF("doc_id")))
-    val pairs = Dedup.nearDupPairsFromIndex(base + "/idx1", corpus,
+    Dedup.writeNearDupIndex(corpus, "doc_id", "text", base + "/idx/gen0")
+    Layouts.swapGenerationPointer(spark, base + "/idx", "gen0")
+    assert(Dedup.compactNearDupIndex(spark, base + "/idx",
+      dropIds = Some(Seq(0L).toDF("doc_id"))) == base + "/idx/gen1")
+    val pairs = Dedup.nearDupPairsFromIndex(base + "/idx", corpus,
       "doc_id", "text").select("id_a", "id_b")
       .as[(Long, Long)].collect().toSet
     assert(pairs.forall { case (a, b) => a != 0L && b != 0L },
       s"retired doc 0 re-entered a pair: $pairs")
     val batch = Seq((200L, t0)).toDF("doc_id", "text")
-    val dupOf = Dedup.incrementalNearDup(spark, base + "/idx1", corpus, batch,
+    val dupOf = Dedup.incrementalNearDup(spark, base + "/idx", corpus, batch,
       "doc_id", "text").as[(Long, Long)].collect().toMap
     assert(dupOf == Map(200L -> 100L), s"dup_of after retirement: $dupOf")
     // meta carried through the tombstone rewrite
-    assert(Dedup.readNearDupIndexMeta(spark, base + "/idx1")
+    assert(Dedup.readNearDupIndexMeta(spark, base + "/idx/gen1")
       .contains((128, 32, 3)))
   }
 
@@ -1203,7 +1204,8 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
         Seq((id, s"day $id text that matches nothing else at all today"))
           .toDF("doc_id", "text"), "doc_id", "text", base + "/gen0")
     }
-    graft.ops.Dedup.compactNearDupIndex(spark, base + "/gen0", base + "/gen1")
+    Layouts.swapGenerationPointer(spark, base, "gen0")
+    graft.ops.Dedup.compactNearDupIndex(spark, base)
     def filesPerBand(p: String): Map[String, Int] = {
       import scala.jdk.CollectionConverters._
       java.nio.file.Files.walk(java.nio.file.Paths.get(p)).iterator().asScala
@@ -2457,10 +2459,10 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(removed.as[Long].collect().toSeq == Seq(0L))
     val base = java.nio.file.Files.createTempDirectory("graft_diff_tomb").toString
     // near-dup family: the retired half's pair partner takes over
-    Dedup.writeNearDupIndex(oldCorpus, "doc_id", "text", base + "/idx0")
-    Dedup.compactNearDupIndex(spark, base + "/idx0", base + "/idx1",
-      dropIds = Some(removed))
-    val pairs = Dedup.nearDupPairsFromIndex(base + "/idx1", curCorpus,
+    Dedup.writeNearDupIndex(oldCorpus, "doc_id", "text", base + "/idx/gen0")
+    Layouts.swapGenerationPointer(spark, base + "/idx", "gen0")
+    Dedup.compactNearDupIndex(spark, base + "/idx", dropIds = Some(removed))
+    val pairs = Dedup.nearDupPairsFromIndex(base + "/idx", curCorpus,
       "doc_id", "text").select("id_a", "id_b").as[(Long, Long)].collect()
     assert(pairs.forall { case (a, b) => a != 0L && b != 0L })
     // ANN family: the retired id never ranks again
@@ -2508,21 +2510,21 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // same contract for the near-dup index's _meta sidecar
     val corpus = Seq((0L, "the quick brown fox jumps over the lazy dog"))
       .toDF("doc_id", "text")
-    Dedup.writeNearDupIndex(corpus, "doc_id", "text", base + "/idx0")
+    Dedup.writeNearDupIndex(corpus, "doc_id", "text", base + "/idx/gen0")
+    Layouts.swapGenerationPointer(spark, base + "/idx", "gen0")
     val badDrop2 = corpus.select(boom(col("doc_id")).as("doc_id"))
     intercept[org.apache.spark.SparkException] {
-      Dedup.compactNearDupIndex(spark, base + "/idx0", base + "/idx1",
-        dropIds = Some(badDrop2))
+      Dedup.compactNearDupIndex(spark, base + "/idx", dropIds = Some(badDrop2))
     }
-    assert(Dedup.readNearDupIndexMeta(spark, base + "/idx1")
+    assert(Dedup.readNearDupIndexMeta(spark, base + "/idx/gen1")
       .contains((128, 32, 3)),
       "partial idx generation must carry _meta (detectable)")
     // and a rerun of the compaction clears the partial generation (the
     // failed run never moved the pointer)
     AnnIndex.open(spark, base, "vec_id").compact()
     assert(spark.read.parquet(base + "/gen1").count() == 40)
-    Dedup.compactNearDupIndex(spark, base + "/idx0", base + "/idx1")
-    assert(Dedup.nearDupPairsFromIndex(base + "/idx1", corpus,
+    Dedup.compactNearDupIndex(spark, base + "/idx")
+    assert(Dedup.nearDupPairsFromIndex(base + "/idx", corpus,
       "doc_id", "text").count() == 0)
   }
 
@@ -3027,7 +3029,10 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       "a refused compaction must release the marker")
     new java.io.File(base + "/gen1/_temporary").delete()
     assert(AnnIndex.open(spark, base, "vec_id").compact() == base + "/gen2")
-    assert(spark.read.parquet(base + "/gen2").count() == 64 + 24 * 5)
+    // base ∪ increments: the newest streamed batch is carried, not folded
+    assert(Layouts.withIncrements(spark, spark.read.parquet(base + "/gen2"),
+      base + "/gen2", Seq("vec_id"), None).count() == 64 + 24 * 5)
+    assert(Layouts.incrementIds(spark, base + "/gen2") == Seq(4L))
   }
 
   test("fanOutByKey width estimate matches the planner (r22: no double planning)") {
@@ -3066,5 +3071,18 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       .saveAsTable(bucketed)
     try assert(ScanWidth.estimate(spark.table(bucketed)).isEmpty, "bucketed relation")
     finally spark.sql(s"DROP TABLE IF EXISTS $bucketed")
+    // neither split conf is value-checked: at 0/0 FilePartition's
+    // maxSplitBytes is 0, and the split math (which steps by it) must
+    // decline instead of throwing
+    val confs = Seq("spark.sql.files.maxPartitionBytes", "spark.sql.files.openCostInBytes")
+    val saved = confs.map(c => c -> spark.conf.getOption(c))
+    try {
+      confs.foreach(spark.conf.set(_, "0"))
+      assert(ScanWidth.estimate(spark.read.parquet(base + "/one")).isEmpty,
+        "zero split size")
+    } finally saved.foreach {
+      case (c, Some(v)) => spark.conf.set(c, v)
+      case (c, None) => spark.conf.unset(c)
+    }
   }
 }

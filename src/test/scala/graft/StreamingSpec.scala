@@ -384,7 +384,10 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
       (11L, "unrelated corpus text nothing shared with anything else at all here"))
       .toDF("doc_id", "text")
     corpus.write.parquet(base + "/corpus")
-    graft.ops.Dedup.writeNearDupIndex(corpus, "doc_id", "text", base + "/idx")
+    // a pointered store root: the stream addresses the root, the base
+    // generation is gen0 and the compaction below writes gen1
+    graft.ops.Dedup.writeNearDupIndex(corpus, "doc_id", "text", base + "/idx/gen0")
+    graft.ops.Layouts.swapGenerationPointer(spark, base + "/idx", "gen0")
     val srcDir = new java.io.File(base + "/src"); srcDir.mkdirs()
     def stage(df: org.apache.spark.sql.DataFrame, n: Int): Unit = {
       val tmpd = new java.io.File(base + s"/stage$n")
@@ -435,11 +438,14 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
         "doc_id", "text")
       .as[(Long, Long)].collect().toSeq.sorted
     assert(expected == Seq(30L -> 21L, 31L -> 10L))
-    // compaction folds the increments into the next base generation:
-    // the compacted layout answers the same history as the faces
-    graft.ops.Dedup.compactNearDupIndex(spark, base + "/idx", base + "/idx2")
-    assert(spark.read.parquet(base + "/idx2").select("id").distinct()
-      .count() == 6)
+    // compaction folds the increments into the next generation: the
+    // compacted layout answers the same history as the faces, with the
+    // newest batch carried as its own increment directory
+    assert(graft.ops.Dedup.compactNearDupIndex(spark, base + "/idx") ==
+      base + "/idx/gen1")
+    assert(graft.ops.Dedup.nearDupIndexWithIncrements(spark, base + "/idx")
+      .select("id").distinct().count() == 6)
+    assert(graft.ops.Layouts.incrementIds(spark, base + "/idx/gen1") == Seq(1L))
   }
 
   test("streaming ANN ingest: stored-codebook appends, restart resumes, drift reported, replay converges") {
@@ -533,7 +539,11 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     // compaction folds the streamed increments into the next base
     // generation (quiesced stream), sidecar carried
     AnnIndex.open(spark, root, "vec_id").compact()
-    assert(spark.read.parquet(root + "/gen1").count() == 60)
+    val gen1 = root + "/gen1"
+    assert(graft.ops.Layouts.withIncrements(spark, spark.read.parquet(gen1),
+      gen1, Seq("vec_id", "cell", "code"), None).count() == 60)
+    // the newest batch is carried as its own directory, not folded
+    assert(graft.ops.Layouts.incrementIds(spark, gen1) == Seq(1L))
     val compacted = annProbe(root + "/gen1", query, k = 8, nprobe = 4)
       .as[(Long, Double)].collect().toSeq
     assert(compacted == atRest, s"$compacted vs $atRest")
@@ -633,7 +643,11 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     // the real compactor takes and releases the marker around the fold
     AnnIndex.open(spark, base + "/ann", "vec_id").compact()
     assert(!Layouts.exists(spark, base + "/ann/gen0/" + Layouts.QuiesceMarker))
-    assert(spark.read.parquet(base + "/ann/gen1").count() == 25)
+    val annGen1 = base + "/ann/gen1"
+    assert(Layouts.withIncrements(spark, spark.read.parquet(annGen1), annGen1,
+      Seq("vec_id", "cell", "code"), None).count() == 25)
+    // the newest (here: only) batch is carried as its own directory
+    assert(Layouts.incrementIds(spark, annGen1) == Seq(0L))
     // the in-flight handshake: an increment directory holding an
     // uncommitted write (Spark's _temporary staging) refuses the fold
     // even though the marker was free — folding a half-written batch
@@ -652,10 +666,11 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
       (11L, "completely unrelated corpus text nothing shared here at all"))
       .toDF("doc_id", "text")
     docs.write.parquet(base + "/corpus")
-    Dedup.writeNearDupIndex(docs, "doc_id", "text", base + "/idx")
+    Dedup.writeNearDupIndex(docs, "doc_id", "text", base + "/idx/gen0")
+    Layouts.swapGenerationPointer(spark, base + "/idx", "gen0")
     val db = Seq((1L, "fresh batch text matching nothing stored anywhere yet"))
       .toDF("doc_id", "text")
-    Layouts.acquireQuiesce(spark, base + "/idx", "test")
+    Layouts.acquireQuiesce(spark, base + "/idx/gen0", "test")
     val e4 = intercept[IllegalStateException] {
       StreamingDedup.ingestBatch(db, 7L, base + "/corpus", base + "/idx",
         base + "/out", "doc_id", "text", 0.8, 128, 32, 3, 4L << 20)
@@ -665,13 +680,14 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
       Dedup.appendNearDupIndex(db, "doc_id", "text", base + "/idx")
     }
     assert(e5.getMessage.contains(Layouts.QuiesceMarker), e5.getMessage)
-    Layouts.releaseQuiesce(spark, base + "/idx")
+    Layouts.releaseQuiesce(spark, base + "/idx/gen0")
     StreamingDedup.ingestBatch(db, 7L, base + "/corpus", base + "/idx",
       base + "/out", "doc_id", "text", 0.8, 128, 32, 3, 4L << 20)
-    Dedup.compactNearDupIndex(spark, base + "/idx", base + "/idx_g1")
-    assert(!Layouts.exists(spark, base + "/idx/" + Layouts.QuiesceMarker))
-    assert(spark.read.parquet(base + "/idx_g1")
+    Dedup.compactNearDupIndex(spark, base + "/idx")
+    assert(!Layouts.exists(spark, base + "/idx/gen0/" + Layouts.QuiesceMarker))
+    assert(Dedup.nearDupIndexWithIncrements(spark, base + "/idx")
       .select("id").distinct().count() == 3)
+    assert(Layouts.incrementIds(spark, base + "/idx/gen1") == Seq(7L))
   }
 
   test("sidecar cache: one read serves N same-generation batches, a rewrite invalidates") {
@@ -883,8 +899,11 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     val base = tmp("graft_sbloom").getAbsolutePath
     val corpus = Seq((0L, "alpha"), (2L, "beta"), (4L, "gamma"))
       .toDF("doc_id", "text")
-    Bloom.writeBloomIndex(corpus.select("text"), "text", base + "/index",
+    // a pointered store root: the stream addresses the root, the
+    // compaction below folds gen0 into gen1
+    Bloom.writeBloomIndex(corpus.select("text"), "text", base + "/index/gen0",
       mBits = 1 << 10, k = 4)
+    Layouts.swapGenerationPointer(spark, base + "/index", "gen0")
     // two file-batches through the REAL stream: batch 0 re-sees a
     // corpus text and brings one novel; batch 1 re-sees batch 0's
     // novel (must drop against the UPDATED history) and brings its own
@@ -922,35 +941,36 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     // compaction folds all but the NEWEST increment into the base row;
     // the full OR is bit-identical, so the gate's behavior is unchanged
     val (m, k, words) = Bloom.readBloomIndex(spark, base + "/index")
-    Bloom.compactBloomIndex(spark, base + "/index", base + "/index2")
-    val (m2, k2, w2) = Bloom.readBloomIndex(spark, base + "/index2")
+    assert(Bloom.compactBloomIndex(spark, base + "/index") ==
+      base + "/index/gen1")
+    val (m2, k2, w2) = Bloom.readBloomIndex(spark, base + "/index")
     assert((m2, k2) == (m, k) && w2.toSeq == words.toSeq)
-    assert(spark.read.parquet(base + "/index2").count() == 1)
+    assert(spark.read.parquet(base + "/index/gen1").count() == 1)
     // replay safety ACROSS the fold: the newest batch (the only one
     // Structured Streaming can still replay) was carried verbatim, not
     // folded — its replay against the compacted index judges history
     // = base-without-its-own-bits and converges; a fold of everything
     // would have made it judge against itself and drop epsilon
-    assert(Layouts.incrementIds(spark, base + "/index2") == Seq(1L))
+    assert(Layouts.incrementIds(spark, base + "/index/gen1") == Seq(1L))
     StreamingBloomGate.ingestBatch(
       Seq(200L -> "delta", 201L -> "epsilon").toDF("doc_id", "text"), 1L,
-      base + "/index2", "text", base + "/admitted2")
+      base + "/index", "text", base + "/admitted2")
     val replayedPost = spark.read.parquet(base + "/admitted2")
       .select(col("doc_id")).as[Long].collect().toSet
     assert(replayedPost == Set(201L), s"$replayedPost")
     // a quiesced index refuses the streaming step (replay-after-fold)
-    Layouts.acquireQuiesce(spark, base + "/index", "test")
+    Layouts.acquireQuiesce(spark, base + "/index/gen1", "test")
     val eQ = intercept[IllegalStateException] {
       StreamingBloomGate.ingestBatch(
         Seq(300L -> "zeta").toDF("doc_id", "text"), 2L,
         base + "/index", "text", base + "/admitted")
     }
     assert(eQ.getMessage.contains(Layouts.QuiesceMarker), eQ.getMessage)
-    Layouts.releaseQuiesce(spark, base + "/index")
+    Layouts.releaseQuiesce(spark, base + "/index/gen1")
     // mixed bitmap geometry is refused, curated (an OR across
     // different m is garbage)
     Bloom.writeBitmapRow(spark, new Array[Long](8), 512, 4,
-      Layouts.incrementDir(base + "/index", 9L))
+      Layouts.incrementDir(base + "/index/gen1", 9L))
     val eG = intercept[IllegalStateException] {
       Bloom.readBloomIndex(spark, base + "/index")
     }
@@ -994,5 +1014,159 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     val admitted = spark.read.parquet(base + "/admitted")
       .select(col("doc_id")).as[Long].collect().toSet
     assert(admitted == Set(1L), s"$admitted")
+  }
+
+  /** An IVF-PQ store root: a 20-vector `gen0` with `_current` on it. */
+  private def annStore(root: String): Unit = {
+    import spark.implicits._
+    import graft.ops.{Layouts, Similarity}
+    val corpus = foldVecs(20, 0L).toDF("vec_id", "embedding")
+    val ivfCb = Similarity.ivfCodebook(corpus, "vec_id", "embedding", nlist = 2)
+    val pqCb = Similarity.pqCodebooks(corpus, "vec_id", "embedding", m = 2, ks = 4)
+    Similarity.writeIvfPqPartitioned(corpus, "vec_id", "embedding",
+      ivfCb, pqCb, root + "/gen0")
+    Layouts.swapGenerationPointer(spark, root, "gen0")
+  }
+
+  private def foldVecs(n: Int, b: Long) = (0 until n).map { i =>
+    (b + i, Array.tabulate(8)(j => math.sin((b + i) * 0.7 + j)))
+  }
+
+  /** The ids of a generation's base plus its committed increments. */
+  private def annRows(gen: String): org.apache.spark.sql.DataFrame =
+    graft.ops.Layouts.withIncrements(spark, spark.read.parquet(gen), gen,
+      Seq("vec_id"), None)
+
+  test("fold/replay (ANN): a compaction inside a batch's fence window carries the batch; the replay stores each id once") {
+    import spark.implicits._
+    import graft.ops.Layouts
+    import graft.streaming.StreamingSimilarity
+    val root = tmp("graft_foldann").getAbsolutePath
+    annStore(root)
+    val batch = foldVecs(5, 100L).toDF("vec_id", "embedding")
+    // the compaction lands after the batch's increment committed and
+    // before its fence: the fence fails the batch (pointer moved)
+    val e = intercept[IllegalStateException] {
+      StreamingSimilarity.ingestBatchFenced(batch, 0L, root, "vec_id",
+        "embedding", None, () => AnnIndex.open(spark, root, "vec_id").compact())
+    }
+    assert(e.getMessage.contains("moved off"), e.getMessage)
+    // the checkpoint never committed, so the batch replays — into its
+    // carried directory in gen1, not beside a folded copy
+    StreamingSimilarity.ingestBatch(batch, 0L, root, "vec_id", "embedding", None)
+    val rows = annRows(root + "/gen1")
+    assert(rows.count() == 25, s"${rows.count()} rows for 25 ids")
+    assert(rows.distinct().count() == 25)
+    assert(Layouts.incrementIds(spark, root + "/gen1") == Seq(0L))
+    // tombstoning every row of the carried increment leaves a readable
+    // generation (the retired ids are gone, the base is intact)
+    AnnIndex.open(spark, root, "vec_id").compact(dropIds = Some(batch.select("vec_id")))
+    assert(annRows(root + "/gen2").count() == 20)
+  }
+
+  test("fold/replay (near-dup): the replay after a compaction in the fence window reaches the first attempt's verdicts") {
+    import spark.implicits._
+    import graft.ops.{Dedup, Layouts}
+    import graft.streaming.StreamingDedup
+    val base = tmp("graft_folddedup").getAbsolutePath
+    val t0 = "the quick brown fox jumps over the lazy dog again and again today"
+    val corpus = Seq(
+      (10L, t0),
+      (11L, "unrelated corpus text nothing shared with anything else at all here"))
+      .toDF("doc_id", "text")
+    corpus.write.parquet(base + "/corpus")
+    Dedup.writeNearDupIndex(corpus, "doc_id", "text", base + "/idx/gen0")
+    Layouts.swapGenerationPointer(spark, base + "/idx", "gen0")
+    // the "ingest crash-replay converges" batch: twins 1/2 match nothing
+    // in history, doc 3 undercuts its true partner 10
+    val twins = "same batch twin text that matches nothing stored in the corpus index yet"
+    val b = Seq((1L, twins), (2L, twins + " tail"), (3L, t0 + " extra"))
+      .toDF("doc_id", "text")
+    def run(beforeFence: () => Unit): Unit = StreamingDedup.ingestBatchFenced(
+      b, 5L, base + "/corpus", base + "/idx", base + "/out", "doc_id",
+      "text", 0.8, 128, 32, 3, 4L << 20, beforeFence)
+    def verdicts(): Seq[(Long, Long)] = spark.read.parquet(base + "/out")
+      .select("doc_id", "dup_of").as[(Long, Long)].collect().toSeq.sorted
+    val e = intercept[IllegalStateException] {
+      run(() => Dedup.compactNearDupIndex(spark, base + "/idx"))
+    }
+    assert(e.getMessage.contains("moved off"), e.getMessage)
+    val first = verdicts()
+    assert(first == Seq(3L -> 10L))
+    // the replay judges against gen1 minus its own carried directory —
+    // the history its first attempt saw, so the twins stay unique
+    run(() => ())
+    assert(verdicts() == first)
+    val idx = Dedup.nearDupIndexWithIncrements(spark, base + "/idx")
+    assert(idx.select("id").distinct().count() == 5)
+    assert(idx.count() == idx.select("id", "band").distinct().count(),
+      "an id's signatures are stored twice")
+    // tombstoning every row of the carried increment leaves a readable
+    // generation
+    Dedup.compactNearDupIndex(spark, base + "/idx", dropIds = Some(b.select("doc_id")))
+    assert(Dedup.nearDupIndexWithIncrements(spark, base + "/idx")
+      .select("id").distinct().count() == 2)
+  }
+
+  test("fold/replay (Bloom): the replay after a compaction in the fence window admits the same set") {
+    import spark.implicits._
+    import graft.ops.{Bloom, Layouts}
+    import graft.streaming.StreamingBloomGate
+    val base = tmp("graft_foldbloom").getAbsolutePath
+    Bloom.writeBloomIndex(Seq("alpha").toDF("text"), "text",
+      base + "/index/gen0", mBits = 1 << 10, k = 4)
+    Layouts.swapGenerationPointer(spark, base + "/index", "gen0")
+    val batch = Seq(1L -> "alpha", 2L -> "beta").toDF("doc_id", "text")
+    def admitted(): Set[Long] = spark.read.parquet(base + "/admitted")
+      .select(col("doc_id")).as[Long].collect().toSet
+    val e = intercept[IllegalStateException] {
+      StreamingBloomGate.ingestBatchFenced(batch, 0L, base + "/index", "text",
+        base + "/admitted", () => Bloom.compactBloomIndex(spark, base + "/index"))
+    }
+    assert(e.getMessage.contains("moved off"), e.getMessage)
+    val first = admitted()
+    assert(first == Set(2L))
+    StreamingBloomGate.ingestBatch(batch, 0L, base + "/index", "text",
+      base + "/admitted")
+    assert(admitted() == first)
+    assert(Layouts.incrementIds(spark, base + "/index/gen1") == Seq(0L))
+  }
+
+  test("marker at the fence: a compaction taking the marker after a batch's writes fails the batch, ANN and near-dup") {
+    import spark.implicits._
+    import graft.ops.{Dedup, Layouts}
+    import graft.streaming.{StreamingDedup, StreamingSimilarity}
+    // --- ANN: the pointer has not moved yet, only the marker is held
+    val root = tmp("graft_fenceann").getAbsolutePath
+    annStore(root)
+    val batch = foldVecs(5, 100L).toDF("vec_id", "embedding")
+    val e1 = intercept[IllegalStateException] {
+      StreamingSimilarity.ingestBatchFenced(batch, 0L, root, "vec_id",
+        "embedding", None, () => Layouts.acquireQuiesce(spark, root + "/gen0", "t"))
+    }
+    assert(e1.getMessage.contains(Layouts.QuiesceMarker), e1.getMessage)
+    Layouts.releaseQuiesce(spark, root + "/gen0")
+    StreamingSimilarity.ingestBatch(batch, 0L, root, "vec_id", "embedding", None)
+    assert(annRows(root + "/gen0").count() == 25)
+    // --- near-dup
+    val base = tmp("graft_fencededup").getAbsolutePath
+    val corpus = Seq((10L, "the quick brown fox jumps over the lazy dog today"))
+      .toDF("doc_id", "text")
+    corpus.write.parquet(base + "/corpus")
+    Dedup.writeNearDupIndex(corpus, "doc_id", "text", base + "/idx/gen0")
+    Layouts.swapGenerationPointer(spark, base + "/idx", "gen0")
+    val db = Seq((1L, "fresh batch text matching nothing stored anywhere yet"))
+      .toDF("doc_id", "text")
+    def run(beforeFence: () => Unit): Unit = StreamingDedup.ingestBatchFenced(
+      db, 0L, base + "/corpus", base + "/idx", base + "/out", "doc_id",
+      "text", 0.8, 128, 32, 3, 4L << 20, beforeFence)
+    val e2 = intercept[IllegalStateException] {
+      run(() => Layouts.acquireQuiesce(spark, base + "/idx/gen0", "t"))
+    }
+    assert(e2.getMessage.contains(Layouts.QuiesceMarker), e2.getMessage)
+    Layouts.releaseQuiesce(spark, base + "/idx/gen0")
+    run(() => ())
+    assert(Dedup.nearDupIndexWithIncrements(spark, base + "/idx")
+      .select("id").distinct().count() == 2)
   }
 }
