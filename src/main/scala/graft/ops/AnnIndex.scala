@@ -28,13 +28,10 @@ import org.apache.spark.sql.functions._
   * Lifecycle: the index is the IVF-PQ codec over a
   * [[Layouts.GenerationStore]], which owns the policy — when a write
   * is safe, how a fold treats the newest increment, where the pointer
-  * swap sits. [[append]] and [[appendIncrement]] encode new rows into
-  * this generation through the store's fenced append; [[maintain]] and
-  * [[maintainFromDriftSeries]] retrain into the store's rebuild, and
-  * [[compact]] is its fold. Rebuilds and folds need a handle opened on
-  * a pointered store root. A handle is bound to the generation it
-  * opened: once `_current` moves off it, every lifecycle step refuses
-  * curated — reopen the index.
+  * swap sits, when a handle is stale. [[append]] and
+  * [[appendIncrement]] are the store's fenced appends, [[maintain]]
+  * and [[maintainFromDriftSeries]] retrain in its rebuild, and
+  * [[compact]] is its fold.
   *
   * The read-only fields are the generation directory the pointer
   * resolved to (`layout`), the kind tag, the coarse codebook (`ivf`)
@@ -193,7 +190,13 @@ final class AnnIndex private (spark: SparkSession,
     * `keep` carries metadata columns, as in the layout writers.
     */
   def append(batch: DataFrame, vecCol: String, keep: Seq[String] = Nil): Unit =
-    store.append("append")(encode(batch, vecCol, keep, "append", layout))
+    appendFenced(batch, vecCol, keep, () => ())
+
+  /** [[append]] with a hook before the store's post-write fence. */
+  private[graft] def appendFenced(batch: DataFrame, vecCol: String,
+      keep: Seq[String], beforeFence: () => Unit): Unit =
+    store.append("append", owned = false, beforeFence)(
+      encode(batch, vecCol, keep, "append", layout))
 
   /** [[append]] for the STREAMING ingest loop
     * ([[graft.streaming.StreamingSimilarity]], the
@@ -208,7 +211,7 @@ final class AnnIndex private (spark: SparkSession,
     */
   def appendIncrement(batch: DataFrame, vecCol: String, batchId: Long,
       keep: Seq[String] = Nil): Unit =
-    store.append("appendIncrement")(encodeIncrement(batch, vecCol, batchId, keep))
+    store.append("appendIncrement", owned = true)(encodeIncrement(batch, vecCol, batchId, keep))
 
   /** [[appendIncrement]]'s write without the store's fences — for a
     * stream that fences this write and its drift report as one append
@@ -246,9 +249,7 @@ final class AnnIndex private (spark: SparkSession,
     * would trigger a full corpus retrain on a trickle batch that
     * carries no evidence about the distribution.
     *
-    * The rebuild is the store's ([[Layouts.GenerationStore.rebuild]]):
-    * under this generation's quiesce marker, with `_current` swapped
-    * before the marker lifts.
+    * The rebuild is the store's ([[Layouts.GenerationStore.rebuild]]).
     */
   def maintain(corpus: DataFrame, batch: DataFrame, vecCol: String,
       driftThreshold: Double = 2.0,
@@ -257,8 +258,7 @@ final class AnnIndex private (spark: SparkSession,
       s"driftThreshold=$driftThreshold: below 1.0 every batch rebuilds " +
         "(stored codebooks cannot beat batch-fitted ones on the batch's " +
         "own distribution)")
-    // refuse a plain or stale handle before the decision scans
-    store.successor("maintain")
+    store.requireRebuildable("maintain")
     val (nlist, m, ks) = (ivf.length, pq.length, pq(0).length)
     val storedErr = Similarity.ivfPqDistortion(batch, vecCol, ivf, pq, residual)
     // bounded probe: limit ks+1, never a full count
@@ -269,7 +269,7 @@ final class AnnIndex private (spark: SparkSession,
       else Similarity.pqCodebooks(batch, idCol, vecCol, m, ks)
     val freshErr = Similarity.ivfPqDistortion(batch, vecCol, freshIvf, freshPq, residual)
     if (tiny || storedErr <= driftThreshold * freshErr) {
-      store.append("maintain")(encode(batch, vecCol, Nil, "append", layout))
+      store.append("maintain", owned = false)(encode(batch, vecCol, Nil, "append", layout))
       AnnIndex.MaintainReport("append", storedErr, freshErr, layout)
     } else
       // the marker is taken AFTER the decision (the append branch must
@@ -332,7 +332,7 @@ final class AnnIndex private (spark: SparkSession,
       s"driftThreshold=$driftThreshold: below 1.0 an in-distribution " +
         "series (trailing ~= baseline) would rebuild on noise")
     val face = "maintainFromDriftSeries"
-    val target = store.successor(face)
+    store.requireRebuildable(face)
     val fence = Similarity.readFence(spark, driftOut)
     def keep(baseline: Double, trailing: Double, batches: Long) =
       AnnIndex.DriftSeriesReport("keep", baseline, trailing, batches, layout)
@@ -378,13 +378,13 @@ final class AnnIndex private (spark: SparkSession,
     val trailing = median(series.takeRight(window))
     if (series.length < 2 * window || trailing <= driftThreshold * baseline)
       return keep(baseline, trailing, series.length)
-    require(!Layouts.exists(spark, target),
-      s"maintainFromDriftSeries: $target already exists — either a " +
-        "crashed rebuild left an unfenced generation (delete it and " +
-        "re-run, or write the fence by hand if its pointer swap " +
-        "already happened) or the path is a live generation; the " +
-        "monitor never overwrites it.")
-    store.rebuild(face) { dst =>
+    val target = store.rebuild(face) { dst =>
+      require(!Layouts.exists(spark, dst),
+        s"maintainFromDriftSeries: $dst already exists — either a " +
+          "crashed rebuild left an unfenced generation (delete it and " +
+          "re-run, or write the fence by hand if its pointer swap " +
+          "already happened) or the path is a live generation; the " +
+          "monitor never overwrites it.")
       Similarity.retrainGeneration(residual, ivf.length, pq.length,
         pq(0).length, corpus.select(col(idCol), col(vecCol)), idCol, vecCol,
         dst, trained)
@@ -394,6 +394,7 @@ final class AnnIndex private (spark: SparkSession,
       Layouts.writeSidecar(spark, s"$driftOut/${Similarity.RebuiltFence}",
         Similarity.RebuiltFenceSchema,
         Seq(Row(fullSeries.map(_._1).max, new org.apache.hadoop.fs.Path(dst).getName)))
+      dst
     }
     if (prune) Similarity.pruneDriftSeries(spark, driftOut)
     AnnIndex.DriftSeriesReport("rebuild", baseline, trailing,
@@ -427,14 +428,8 @@ final class AnnIndex private (spark: SparkSession,
         Similarity.writeIvfPqCodebooks(spark, dst, ivf, pq, kind)
         Similarity.writeCoded(rows.repartition(col(Cell)), "append", dst)
       }
-      def carry(src: String, dst: String): Unit = {
-        val rows = retire(spark.read.parquet(src))
-        // a cell-partitioned write of zero rows leaves a directory with
-        // no data file, which no read can infer a schema from: a fully
-        // retired increment is not carried
-        if (dropIds.isEmpty || !rows.isEmpty)
-          Similarity.writeCoded(rows, "overwrite", dst)
-      }
+      def carry(src: String, dst: String): Unit =
+        Similarity.writeCoded(retire(spark.read.parquet(src)), "overwrite", dst)
     })
 }
 

@@ -305,7 +305,7 @@ object Dedup {
       bands: Int = 32,
       shingleWidth: Int = 3): Unit = {
     val store = Layouts.openStore(batch.sparkSession, out)
-    store.append("appendNearDupIndex") {
+    store.append("appendNearDupIndex", owned = false) {
       validateIndexMeta(batch.sparkSession, store.layout, numHashes, bands,
         shingleWidth, "appendNearDupIndex")
       // per-batch append: NO fan-out (the batch keeps its source
@@ -323,11 +323,9 @@ object Dedup {
     * append): the batch's signatures land in a directory the batch
     * OWNS (`_increments/ingest_batch=<id>` of the generation `layout`,
     * overwritten wholesale), so a crash-replay rewrites the same rows
-    * instead of appending them twice — the idempotence plain
-    * `mode("append")` cannot give. Underscore-prefixed: plain reads of
-    * the base layout skip increments; readers opt in via
-    * [[nearDupIndexWithIncrements]], and [[compactNearDupIndex]] folds
-    * them into the next generation.
+    * instead of appending them twice. Plain reads of the base skip
+    * increments; every reader here reads them
+    * ([[nearDupIndexWithIncrements]]).
     */
   private[graft] def writeIncrement(batch: DataFrame, idCol: String,
       textCol: String, layout: String, batchId: Long, numHashes: Int,
@@ -340,8 +338,10 @@ object Dedup {
 
   /** The layout's stored signature rows PLUS its committed streamed
     * increments ([[writeIncrement]] directories), as one
-    * (id, band, key) frame. `excludeBatchId` drops the named batch's
-    * own directory — the replay rule: a re-executed micro-batch must
+    * (id, band, key) frame — what every near-dup reader here reads, so
+    * a fold's carried newest increment stays in every pair, `dup_of`
+    * and split. `excludeBatchId` drops the named batch's own directory
+    * — the replay rule: a re-executed micro-batch must
     * dedup against exactly the history its first attempt saw, never
     * its own earlier partial append (which would let same-batch
     * near-dup twins classify against each other, or a self-pair eat a
@@ -395,7 +395,8 @@ object Dedup {
   /** Near-dup detection of a NEW batch against a corpus indexed at
     * rest by [[writeNearDupIndex]] — the daily-ingest shape: the
     * increment's signatures are computed fresh (it is small), the
-    * corpus's are READ, never recomputed.
+    * corpus's are READ, never recomputed (stored rows plus committed
+    * increments, [[nearDupIndexWithIncrements]]).
     *
     * Scale shape, two regimes split by the increment's signature-row
     * count (`batch rows × bands`, one metadata-cheap count of the
@@ -441,9 +442,8 @@ object Dedup {
     validateIndexMeta(spark, indexPath, numHashes, bands, shingleWidth,
       "incrementalNearDup")
     incrementalNearDupAgainst(
-      spark.read.parquet(Similarity.resolveLayout(spark, indexPath)), corpus, batch,
-      idCol, textCol, threshold, numHashes, bands, shingleWidth,
-      maxBroadcastSigRows)
+      nearDupIndexWithIncrements(spark, indexPath), corpus, batch, idCol,
+      textCol, threshold, numHashes, bands, shingleWidth, maxBroadcastSigRows)
   }
 
   /** [[incrementalNearDup]] against an EXPLICIT signature-rows frame
@@ -523,7 +523,8 @@ object Dedup {
 
   /** [[nearDupPairs]] answered FROM a [[writeNearDupIndex]] layout:
     * candidates come from a self-join of the STORED (id, band, key)
-    * rows — the corpus is never re-minhashed — and only
+    * rows plus committed increments ([[nearDupIndexWithIncrements]]) —
+    * the corpus is never re-minhashed — and only
     * candidate-matched documents are shingled for the exact-Jaccard
     * verify. With an index written at the same banding, the result is
     * identical to [[nearDupPairs]] by construction (both sides derive
@@ -565,9 +566,7 @@ object Dedup {
             s"over $sw-word shingles but the verify stage asks for " +
             s"$shingleWidth — pass the stored width (readNearDupIndexMeta)")
     }
-    val banded = df.sparkSession.read
-      .parquet(Similarity.resolveLayout(df.sparkSession, indexPath))
-      .select(col("id"), col("band"), col("key"))
+    val banded = nearDupIndexWithIncrements(df.sparkSession, indexPath)
     val a = banded.select(col("id").as("id_a"), col("band"), col("key"))
     val b = banded.select(col("id").as("id_b"), col("band"), col("key"))
     // candidate-bounded and consumed three times — the

@@ -46,7 +46,8 @@ private[graft] object Layouts {
     * increment-listing discipline (name filter, explicit paths, the
     * basePath anchor) shared by every reader: the own-batch exclusion
     * above, and the Bloom gate's STRICTER `id < b` history rule
-    * ([[Bloom.readBloomIndex]]).
+    * ([[Bloom.readBloomIndex]]). A directory that holds no data file
+    * ([[holdsData]]) is skipped.
     */
   def withIncrementsWhere(spark: SparkSession,
       base: org.apache.spark.sql.DataFrame,
@@ -54,7 +55,8 @@ private[graft] object Layouts {
       keepBatch: Long => Boolean): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.functions.col
     val projected = base.select(cols.map(col): _*)
-    val dirs = incrementIds(spark, path).filter(keepBatch).map(incrementDir(path, _))
+    val dirs = incrementIds(spark, path).filter(keepBatch)
+      .map(incrementDir(path, _)).filter(holdsData(spark, _))
     if (dirs.isEmpty) projected
     else projected.unionByName(
       // basePath anchors partition inference at the _increments root:
@@ -66,6 +68,21 @@ private[graft] object Layouts {
       spark.read.option("basePath", s"$path/$IncrementsDir")
         .parquet(dirs: _*)
         .select(cols.map(col): _*))
+  }
+
+  /** True iff `dir` holds a file outside Spark's hidden `_`/`.` names
+    * (`_SUCCESS`, `_temporary` staging). A zero-row `partitionBy` write
+    * leaves none, and no read can infer a schema from the directory;
+    * it holds no rows, so readers and folds treat it as absent.
+    */
+  private def holdsData(spark: SparkSession, dir: String): Boolean = {
+    val p = new org.apache.hadoop.fs.Path(dir)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val below = fs.makeQualified(p).toUri.getPath.length
+    val files = fs.listFiles(p, true)
+    Iterator.continually(files).takeWhile(_.hasNext)
+      .map(_.next().getPath.toUri.getPath.substring(below).split('/'))
+      .exists(_.forall(c => !c.startsWith("_") && !c.startsWith(".")))
   }
 
   /** The increment directory a batch OWNS (and overwrites wholesale on
@@ -80,13 +97,10 @@ private[graft] object Layouts {
   def incrementIds(spark: SparkSession, path: String): Seq[Long] =
     ownedBatchIds(spark, s"$path/$IncrementsDir")
 
-  /** A per-batch OWNED output directory under a plain (non-layout)
-    * output root — the idempotence convention of [[incrementDir]]
-    * applied to a stream's report/verdict outputs: the batch id lives
-    * in the DIRECTORY name (surfacing on read as the `ingest_batch`
-    * partition column), the batch overwrites its own directory
-    * wholesale on a crash-replay, and a read of the root sees every
-    * committed batch exactly once.
+  /** A per-batch OWNED output directory under `out` — the
+    * [[incrementDir]] convention for a stream's report and verdict
+    * outputs: the batch id is the `ingest_batch` partition column on
+    * read, and a replay overwrites the batch's own directory.
     */
   def ownedBatchDir(out: String, batchId: Long): String =
     s"$out/ingest_batch=$batchId"
@@ -255,47 +269,51 @@ private[graft] object Layouts {
   final class GenerationStore private[Layouts] (spark: SparkSession,
       val layout: String, val root: Option[String]) {
 
-    /** Refuse once `_current` has moved off this generation (a plain
+    /** How `_current` moved off this generation, if it did (a plain
       * layout has no pointer and is always current).
       */
-    private def requireCurrent(face: String): Unit =
-      root.foreach { r =>
-        val live = currentGeneration(spark, r)
-        if (live != layout)
-          throw new IllegalStateException(
-            s"$face: the generation pointer under $r moved off $layout (it " +
-              s"now names $live) — this handle is stale; reopen the index " +
-              "and retry")
-      }
+    private def moved(): Option[String] =
+      root.map(currentGeneration(spark, _)).filter(_ != layout)
+        .map(g => s"the generation pointer moved off $layout (it now names $g)")
 
-    /** Run `write` as an append into this generation: refuse on a
-      * stale handle or a held marker, write, then ONE post-write fence
-      * that fails if the marker is held or the pointer moved. The checks
-      * before the write are check-then-act: a fold can take the marker
-      * and list increments before this write's directory exists (marker
-      * half), or finish and swap while it writes (pointer half). Failing
-      * AFTER the write is convergent: the checkpoint has not committed,
-      * and the replay rewrites its own directory in the live generation.
-      * `beforeFence` runs between the write and the fence — the seam a
-      * spec pins the race with.
+    private def requireCurrent(face: String): Unit = moved().foreach(m =>
+      throw new IllegalStateException(s"$face: $m — this handle is stale; " +
+        "reopen the index and retry"))
+
+    /** Why an append into this generation is unsafe now, if it is. */
+    private def hazard(): Option[String] =
+      if (exists(spark, s"$layout/$QuiesceMarker"))
+        Some(s"a compaction holds the $QuiesceMarker marker under $layout")
+      else moved()
+
+    /** Run `write` as an append into this generation between two
+      * [[hazard]] checks; the one before is check-then-act (a fold can
+      * take the marker and list increments before the write's files
+      * exist, or swap while it writes). A failure after the write is
+      * convergent when `owned` (it wrote only directories the batch
+      * owns, which the checkpoint replay rewrites in the live
+      * generation); rows appended into the base may or may not be in
+      * the fold's generation, and the error says so rather than invite
+      * a blind retry. `beforeFence` is the seam a spec pins the race with.
       */
-    def append[T](face: String, beforeFence: () => Unit = () => ())(write: => T): T = {
-      requireCurrent(face)
-      assertNotQuiesced(face)
+    def append[T](face: String, owned: Boolean,
+        beforeFence: () => Unit = () => ())(write: => T): T = {
+      hazard().foreach(c => throw new IllegalStateException(s"$face: $c — nothing " +
+        "was written; retry after the compaction (releaseQuiesce clears a " +
+        "crashed one's marker) or on a reopened index"))
       val out = write
       beforeFence()
-      assertNotQuiesced(face)
-      requireCurrent(face)
+      hazard().foreach(c => throw new IllegalStateException(s"$face: $c while " +
+        "this append wrote — " + (if (owned) "the batch fails uncommitted; its " +
+          "replay rewrites its own directories in the live generation"
+        else "its rows are in the old generation's base, and the fold may " +
+          "or may not have taken them; check the live generation for the " +
+          "batch's ids before retrying (a blind retry can store them twice)")))
       out
     }
 
-    /** The path of `gen<k+1>`, the generation a fold or rebuild of this
-      * one writes. Refuses a plain layout and a stale handle.
-      */
-    def successor(face: String): String = {
-      val (r, k) = rootAndIndex(face)
-      s"$r/gen${k + 1}"
-    }
+    /** Refuse a plain layout or a stale handle before a rebuild's scans. */
+    def requireRebuildable(face: String): Unit = rootAndIndex(face)
 
     /** Under this generation's marker: write `gen<k+1>` with `write`,
       * then swap `_current` to it before the marker lifts, so no append
@@ -319,14 +337,16 @@ private[graft] object Layouts {
       * uncommitted; its replay then overwrites its own directory in
       * `gen<k+1>` and reads the history its first attempt read (base
       * rows carry no batch id, so a folded batch would read as history).
-      * The rerun of a failed fold clears its partial `gen<k+1>`.
+      * A newest directory with no data file holds no rows and is not
+      * carried. The rerun of a failed fold clears its partial `gen<k+1>`.
       */
     def fold(face: String, codec: FoldCodec): String =
       rebuild(face) { dst =>
         val newest = incrementIds(spark, layout).lastOption
         delete(spark, dst)
         codec.writeFolded(layout, id => !newest.contains(id), dst)
-        newest.foreach(b => codec.carry(incrementDir(layout, b), incrementDir(dst, b)))
+        newest.filter(b => holdsData(spark, incrementDir(layout, b)))
+          .foreach(b => codec.carry(incrementDir(layout, b), incrementDir(dst, b)))
         dst
       }
 
@@ -378,14 +398,6 @@ private[graft] object Layouts {
         body
       } finally releaseQuiesce(spark, layout)
     }
-
-    private def assertNotQuiesced(face: String): Unit =
-      if (exists(spark, s"$layout/$QuiesceMarker"))
-        throw new IllegalStateException(
-          s"$face: a compaction holds the $QuiesceMarker marker under " +
-            s"$layout — appending mid-compaction races the increment " +
-            "fold; retry after it completes (or releaseQuiesce if a " +
-            "crashed compaction left the marker behind)")
 
     /** Refuse while any write into this generation is UNCOMMITTED
       * (Spark stages task files under `_temporary` until job commit):

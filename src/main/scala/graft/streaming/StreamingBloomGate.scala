@@ -65,7 +65,7 @@ object StreamingBloomGate {
       beforeFence: () => Unit): Unit = {
     val spark = b.sparkSession
     val store = Layouts.openStore(spark, indexPath)
-    store.append("bloomGateStream", beforeFence) {
+    store.append("bloomGateStream", owned = true, beforeFence) {
       val (m, k, words) = Bloom.readBloomIndex(spark, store.layout,
         historyBefore = Some(batchId))
       b.where(!Bloom.bloomMember(col(textCol), m, k, words))

@@ -40,11 +40,10 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
   *     same discipline. The verify step reads base + increments
   *     (excluding own — candidates can never reference the current
   *     batch anyway, since its index rows are excluded).
-  * Underscore-prefixed increment directories are invisible to plain
-  * reads of either layout; batch-face consumers of a streamed index
-  * either read through [[graft.ops.Dedup.nearDupIndexWithIncrements]]
-  * or run [[graft.ops.Dedup.compactNearDupIndex]], which folds the
-  * increments into the next base generation while the stream runs.
+  * Plain reads of either layout skip the increments; every batch face
+  * over the index reads them ([[graft.ops.Dedup.nearDupIndexWithIncrements]]),
+  * and [[graft.ops.Dedup.compactNearDupIndex]] folds them while the
+  * stream runs.
   * `indexPath` is a plain layout or a pointered store root; each batch
   * is one fenced append of its store
   * ([[graft.ops.Layouts.GenerationStore.append]]), so a batch a fold
@@ -95,7 +94,7 @@ object StreamingDedup {
     val store = Layouts.openStore(spark, indexPath)
     // the store refuses BEFORE the dedup work while a compaction holds
     // the marker (the checkpoint replays the batch after the fold)
-    store.append(face, beforeFence) {
+    store.append(face, owned = true, beforeFence) {
       // fail before any write if the caller's banding disagrees with
       // the layout (the appendNearDupIndex discipline): a mismatched
       // dedup pass would silently change which pairs can ever collide

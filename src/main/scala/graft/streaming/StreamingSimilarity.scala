@@ -96,7 +96,7 @@ object StreamingSimilarity {
     // the fence runs after the drift report too: a report computed
     // against a superseded generation's codebooks must not commit with
     // the batch
-    idx.store.append("incrementalAnnStream", beforeFence) {
+    idx.store.append("incrementalAnnStream", owned = true, beforeFence) {
       idx.encodeIncrement(b, vecCol, batchId)
       driftOut.foreach { out =>
       // kind-aware like the append itself: a residual layout's drift

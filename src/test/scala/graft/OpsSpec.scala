@@ -2718,6 +2718,33 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(spark.read.parquet(plain).count() == 64 + 24)
   }
 
+  test("a batch append whose fence meets the marker fails with an ambiguous-outcome error, not a retry invitation") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(67)
+    val dim = 16
+    def sample(n: Int, base: Long) = clusterSample(rnd, dim)(n, 0.0, base)
+    val corpus = sample(64, 0L).toDF("vec_id", "embedding")
+    val batch = sample(24, 1000L).toDF("vec_id", "embedding")
+    val ivfCb = Similarity.ivfCodebook(corpus, "vec_id", "embedding", nlist = 4)
+    val pqCb = Similarity.pqCodebooks(corpus, "vec_id", "embedding", m = 4, ks = 16)
+    val root = java.nio.file.Files.createTempDirectory("graft_basefence").toString
+    Similarity.writeIvfPqPartitioned(corpus, "vec_id", "embedding",
+      ivfCb, pqCb, root + "/gen0")
+    Layouts.swapGenerationPointer(spark, root, "gen0")
+    // a compaction takes the marker after the append's rows committed
+    // into the base and before its fence
+    val e = intercept[IllegalStateException] {
+      AnnIndex.open(spark, root, "vec_id").appendFenced(batch, "embedding",
+        Nil, () => Layouts.acquireQuiesce(spark, root + "/gen0", "t"))
+    }
+    assert(e.getMessage.startsWith("append") &&
+      e.getMessage.contains(Layouts.QuiesceMarker) &&
+      e.getMessage.contains("before retrying"), e.getMessage)
+    // the rows are in the base: a blind retry would store them twice
+    Layouts.releaseQuiesce(spark, root + "/gen0")
+    assert(spark.read.parquet(root + "/gen0").count() == 64 + 24)
+  }
+
   test("a sidecar overwrite keeps the old sidecar until the new one is written") {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types.{LongType, StructField, StructType}

@@ -1108,6 +1108,70 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
       .select("id").distinct().count() == 2)
   }
 
+  test("near-dup batch faces keep the newest streamed batch after a fold carries it") {
+    import spark.implicits._
+    import graft.ops.{Dedup, Layouts, Sampling}
+    import graft.streaming.StreamingDedup
+    val base = tmp("graft_carryreaders").getAbsolutePath
+    val t0 = "the quick brown fox jumps over the lazy dog again and again today"
+    val u1 = "completely different text about distributed query engines and planners"
+    val corpus = Seq(
+      (10L, t0),
+      (11L, "unrelated corpus text nothing shared with anything else at all here"))
+      .toDF("doc_id", "text")
+    corpus.write.parquet(base + "/corpus")
+    Dedup.writeNearDupIndex(corpus, "doc_id", "text", base + "/idx/gen0")
+    Layouts.swapGenerationPointer(spark, base + "/idx", "gen0")
+    // one streamed batch: 20 near-dups corpus doc 10, 21 is new material
+    val batch = Seq((20L, t0 + " extra"), (21L, u1)).toDF("doc_id", "text")
+    StreamingDedup.ingestBatch(batch, 0L, base + "/corpus", base + "/idx",
+      base + "/out", "doc_id", "text", 0.8, 128, 32, 3, 4L << 20)
+    // the fold carries batch 0, the newest, as gen1's own increment
+    Dedup.compactNearDupIndex(spark, base + "/idx")
+    assert(Layouts.incrementIds(spark, base + "/idx/gen1") == Seq(0L))
+    val docs = corpus.unionByName(batch)
+    val pairs = Dedup.nearDupPairsFromIndex(base + "/idx", docs, "doc_id", "text")
+      .select("id_a", "id_b").as[(Long, Long)].collect().toSeq
+    assert(pairs == Seq(10L -> 20L), s"$pairs")
+    // the winners and the split read the same pairs
+    assert(Dedup.nearDupWinnersVerifiedFromIndex(base + "/idx", docs, "doc_id",
+      "text").select("doc_id").as[Long].collect().toSet == Set(10L, 11L, 21L))
+    val split = Sampling.leakFreeSplit(docs, "doc_id", "text",
+      indexPath = Some(base + "/idx"))
+    assert(split.where(col("doc_id") === 20L).select("cluster").as[Long]
+      .collect().toSeq == Seq(10L))
+    // a later batch's only partner is batch 0's doc 21
+    val later = Seq((30L, u1 + " tail")).toDF("doc_id", "text")
+    assert(Dedup.incrementalNearDup(spark, base + "/idx", docs, later,
+      "doc_id", "text").as[(Long, Long)].collect().toSeq == Seq(30L -> 21L))
+  }
+
+  test("a zero-row ANN stream batch leaves its generation readable and foldable") {
+    import spark.implicits._
+    import graft.ops.Layouts
+    import graft.streaming.StreamingSimilarity
+    val root = tmp("graft_emptyann").getAbsolutePath
+    annStore(root)
+    val batch = foldVecs(5, 100L).toDF("vec_id", "embedding")
+    def ingest(b: org.apache.spark.sql.DataFrame, id: Long): Unit =
+      StreamingSimilarity.ingestBatch(b, id, root, "vec_id", "embedding", None)
+    // the cell-partitioned write of zero rows leaves no data file
+    ingest(batch.limit(0), 0L)
+    assert(Layouts.incrementIds(spark, root + "/gen0") == Seq(0L))
+    assert(annRows(root + "/gen0").count() == 20)
+    assert(annProbe(root, Array.fill(8)(0.5), k = 30, nprobe = 2).count() == 20)
+    // the fold reads past the empty batch 0 and carries batch 1
+    ingest(batch, 1L)
+    AnnIndex.open(spark, root, "vec_id").compact()
+    assert(Layouts.incrementIds(spark, root + "/gen1") == Seq(1L))
+    assert(annRows(root + "/gen1").count() == 25)
+    // an empty newest batch is not carried
+    ingest(batch.limit(0), 2L)
+    AnnIndex.open(spark, root, "vec_id").compact()
+    assert(Layouts.incrementIds(spark, root + "/gen2").isEmpty)
+    assert(annRows(root + "/gen2").count() == 25)
+  }
+
   test("fold/replay (Bloom): the replay after a compaction in the fence window admits the same set") {
     import spark.implicits._
     import graft.ops.{Bloom, Layouts}
