@@ -20,16 +20,15 @@ import org.apache.spark.sql.functions._
   * can never be ranked through raw tables, appended through the wrong
   * encoder, or encoded with codebooks the layout was not written with.
   *
-  * Reads: [[probe]] is the one ranking path for both kinds, over the
-  * base layout plus every committed streamed increment
-  * ([[appendIncrement]]); [[refine]] is the exact re-rank of a raw-PQ
-  * base layout.
+  * Reads: [[probe]] is the one ranking path for both kinds and
+  * [[refine]] the exact re-rank of a raw-PQ layout, both over the base
+  * layout plus every committed increment ([[append]]).
   *
   * Lifecycle: the index is the IVF-PQ codec over a
   * [[Layouts.GenerationStore]], which owns the policy — when a write
   * is safe, how a fold treats the newest increment, where the pointer
-  * swap sits, when a handle is stale. [[append]] and
-  * [[appendIncrement]] are the store's fenced appends, [[maintain]]
+  * swap sits, when a handle is stale. [[append]] is the store's fenced
+  * append (batch callers and the ingest stream alike), [[maintain]]
   * and [[maintainFromDriftSeries]] retrain in its rebuild, and
   * [[compact]] is its fold.
   *
@@ -82,7 +81,7 @@ final class AnnIndex private (spark: SparkSession,
       s"${queries.length} queries in one probe — the fan-out inlines one " +
         "ADC table and one struct slot per query; chunk the query set " +
         "(union the per-chunk results) past 1024")
-    AnnIndex.requireNprobe(nprobe)
+    require(nprobe >= 1, "nprobe must be >= 1 (the probe needs at least one cell)")
     // (query id, probed cells, the query's ADC column over the codes)
     val perQuery: Seq[(Long, Seq[Long], Column)] = queries.map { case (qid, q) =>
       if (residual) {
@@ -130,21 +129,20 @@ final class AnnIndex private (spark: SparkSession,
   /** SHORTLIST + EXACT RE-RANK (FAISS's IndexRefineFlat): rank the
     * probed cells' codes by ADC, keep a `shortlist`-sized candidate
     * set, then re-rank exactly those rows by TRUE cosine on the
-    * full-precision vectors the layout carries (written with
-    * `keep = Seq(vecCol)`) and return the top `k` as (idCol, cos),
+    * full-precision vectors the layout carries (written and appended
+    * with `keep = Seq(vecCol)`) and return the top `k` as (idCol, cos),
     * ordered cos desc, ties by id. Never worse than the plain ADC
     * top-k: every exact neighbour the ADC top-k found is still in the
     * shortlist and wins its exact re-rank (OpsSpec pins the
     * dominance).
     *
-    * Two narrow scans of the probed cells: (id, code) into the ADC
-    * shortlist (TakeOrderedAndProject), a BOUNDED driver collect of
-    * the shortlist ids, then (id, vector) for exactly those rows via
-    * an `isin` pushed into the parquet scan. No join, no shuffle.
-    *
-    * Scope: the base layout of a raw-PQ index only — committed
-    * increments are not scanned (compact first), and a residual
-    * layout is refused.
+    * Two narrow scans of the probed cells of base ∪ committed
+    * increments: the shortlist is [[probe]]'s ADC top-`shortlist`
+    * (TakeOrderedAndProject), a BOUNDED driver collect of its ids,
+    * then (id, vector) for exactly those rows via an `isin` pushed
+    * into the parquet scan. No join, no shuffle. A residual layout is
+    * refused, and so is an increment appended without `vecCol` in
+    * `keep` (its rows have no vector to re-rank).
     */
   def refine(query: Array[Double], k: Int, vecCol: String,
       shortlist: Int = 100, nprobe: Int = 4): DataFrame = {
@@ -155,77 +153,62 @@ final class AnnIndex private (spark: SparkSession,
       s"shortlist=$shortlist: the shortlist ids are a driver collect " +
         "and an isin predicate — keep it bounded (the refine step's " +
         "point is exact distances on FEW rows)")
-    AnnIndex.requireNprobe(nprobe)
     if (residual)
       throw new IllegalStateException(
         s"refine re-ranks raw-PQ ('pq') shortlists; the layout at $layout " +
           "holds RESIDUAL ('rpq') codes — rank it with probe")
-    val lut = Similarity.pqAdcTable(pq, query)
-    val cells = spark.read.parquet(layout)
-      .where(col(Cell).isin(Similarity.ivfProbed(ivf, query, nprobe): _*))
-    val ids = cells
-      .select(col(idCol), round(GraftFunctions.pq_adc(col(Code), lut), 6).as("adc"))
-      .orderBy(col("adc"), col(idCol))
-      .limit(shortlist)
-      .select(idCol)
+    Layouts.incrementDirs(spark, layout, _ => true)
+      .find(!Layouts.dataColumns(spark, _).contains(vecCol))
+      .foreach(d => throw new IllegalStateException(s"refine: the increment " +
+        s"$d was appended without '$vecCol' in keep — re-append that batch " +
+        s"under the same batch id with keep = Seq(\"$vecCol\")"))
+    val ids = probe(Seq(0L -> query), shortlist, nprobe).select(idCol)
       .collect().map(_.get(0))
-    cells.where(col(idCol).isin(ids: _*))
+    Layouts.withIncrements(spark, spark.read.parquet(layout), layout,
+        Seq(idCol, Cell, vecCol), None)
+      .where(col(Cell).isin(Similarity.ivfProbed(ivf, query, nprobe): _*) &&
+        col(idCol).isin(ids: _*))
       .select(col(idCol), round(Similarity.cosineTo(col(vecCol), query), 6).as("cos"))
       .orderBy(col("cos").desc, col(idCol))
       .limit(k)
   }
 
-  /** INCREMENTAL maintenance — the daily-ingest shape for vectors (the
-    * q131 near-dup-index play): encode ONLY the new batch with this
-    * generation's codebooks and kind and append its (id, cell, code)
-    * rows into the cell directories. The corpus side is never read,
-    * re-encoded or shuffled — one narrow pass over the batch plus new
-    * files in the cells it lands in (parquet appends are
-    * file-additive). [[probe]] then answers over corpus + batch with
-    * the same pruning and no retraining.
+  /** APPEND a batch — the daily-ingest shape for vectors (the q131
+    * near-dup-index play), and the one write every ingest takes, batch
+    * or streamed ([[graft.streaming.StreamingSimilarity]]): encode ONLY
+    * the batch with this generation's codebooks and kind and write its
+    * (id, cell, code) rows — plus the `keep` metadata columns, as in the
+    * layout writers — into the increment directory the batch OWNS
+    * (`_increments/ingest_batch=<batchId>`, cell-partitioned inside it,
+    * overwritten wholesale). The corpus side is never read, re-encoded
+    * or shuffled. [[probe]] and [[refine]] answer over base ∪ committed
+    * increments with the same pruning and no retraining; [[compact]]
+    * folds them into the next generation.
+    *
+    * Batch ids share the id space of the index's ingest stream and
+    * increase from batch to batch; an id is reused only to retry that
+    * batch. The retry is idempotent: a batch whose fence failed (a fold
+    * or rebuild met it) reruns under the same id on a reopened index and
+    * rewrites its own directory in the live generation, so no id is
+    * stored twice (a duplicated id surfaces twice in a top-k).
     *
     * Quantization error drifts as the ingested distribution leaves the
     * trained one; [[maintain]] is this append gated by that drift
     * ([[Similarity.ivfPqDistortion]]), rebuilding when it is too large.
-    * `keep` carries metadata columns, as in the layout writers.
     */
-  def append(batch: DataFrame, vecCol: String, keep: Seq[String] = Nil): Unit =
-    appendFenced(batch, vecCol, keep, () => ())
-
-  /** [[append]] with a hook before the store's post-write fence. */
-  private[graft] def appendFenced(batch: DataFrame, vecCol: String,
-      keep: Seq[String], beforeFence: () => Unit): Unit =
-    store.append("append", owned = false, beforeFence)(
-      encode(batch, vecCol, keep, "append", layout))
-
-  /** [[append]] for the STREAMING ingest loop
-    * ([[graft.streaming.StreamingSimilarity]], the
-    * [[graft.ops.Dedup.writeIncrement]] play for vectors):
-    * the batch's rows land in a directory the batch OWNS
-    * (`_increments/ingest_batch=<id>`, cell-partitioned inside it,
-    * overwritten wholesale), so a crash-replay rewrites the same rows —
-    * plain `mode("append")` would duplicate them, and a duplicated id
-    * in an ANN layout surfaces twice in a top-k. Underscore-prefixed,
-    * so plain reads skip increments; [[probe]] reads every committed
-    * one, and [[compact]] folds them into the next base generation.
-    */
-  def appendIncrement(batch: DataFrame, vecCol: String, batchId: Long,
+  def append(batch: DataFrame, vecCol: String, batchId: Long,
       keep: Seq[String] = Nil): Unit =
-    store.append("appendIncrement", owned = true)(encodeIncrement(batch, vecCol, batchId, keep))
+    store.append("append", batchId)(encode(batch, vecCol, keep, _))
 
-  /** [[appendIncrement]]'s write without the store's fences — for a
-    * stream that fences this write and its drift report as one append
-    * ([[graft.streaming.StreamingSimilarity]]).
+  /** Encode with this generation's codebooks and kind, overwriting the
+    * increment directory `dir` — the write of every append face
+    * ([[append]], [[maintain]], and a stream batch that fences it with
+    * its drift report as one store append).
     */
-  private[graft] def encodeIncrement(batch: DataFrame, vecCol: String,
-      batchId: Long, keep: Seq[String] = Nil): Unit =
-    encode(batch, vecCol, keep, "overwrite", Layouts.incrementDir(layout, batchId))
-
-  /** Encode with this generation's codebooks and kind into `dir`. */
-  private def encode(batch: DataFrame, vecCol: String, keep: Seq[String],
-      mode: String, dir: String): Unit =
+  private[graft] def encode(batch: DataFrame, vecCol: String,
+      keep: Seq[String], dir: String): Unit =
     Similarity.writeCoded(
-      Similarity.coded(batch, idCol, vecCol, ivf, pq, residual, keep), mode, dir)
+      Similarity.coded(batch, idCol, vecCol, ivf, pq, residual, keep), "overwrite", dir)
 
   /** DRIFT-GATED incremental maintenance — the loop FAISS's IndexIVFPQ
     * leaves to the caller (`add` vs re-`train`): [[append]] the batch
@@ -233,7 +216,9 @@ final class AnnIndex private (spark: SparkSession,
     * (`storedErr`) stays within `driftThreshold` × what codebooks
     * fitted to the batch itself achieve (`freshErr`); above it — the
     * ingested distribution has left the trained one — retrain on
-    * corpus ∪ batch into `gen<k+1>` and swap the pointer to it.
+    * corpus ∪ batch into `gen<k+1>` and swap the pointer to it. The
+    * append branch writes the batch as increment `batchId`, under
+    * [[append]]'s batch-id contract.
     *
     * Both error terms come from the batch alone (one narrow codegen'd
     * pass each), so no baseline statistic is stored or trusted.
@@ -252,7 +237,7 @@ final class AnnIndex private (spark: SparkSession,
     * The rebuild is the store's ([[Layouts.GenerationStore.rebuild]]).
     */
   def maintain(corpus: DataFrame, batch: DataFrame, vecCol: String,
-      driftThreshold: Double = 2.0,
+      batchId: Long, driftThreshold: Double = 2.0,
       trained: Boolean = false): AnnIndex.MaintainReport = {
     require(driftThreshold >= 1.0,
       s"driftThreshold=$driftThreshold: below 1.0 every batch rebuilds " +
@@ -269,7 +254,7 @@ final class AnnIndex private (spark: SparkSession,
       else Similarity.pqCodebooks(batch, idCol, vecCol, m, ks)
     val freshErr = Similarity.ivfPqDistortion(batch, vecCol, freshIvf, freshPq, residual)
     if (tiny || storedErr <= driftThreshold * freshErr) {
-      store.append("maintain", owned = false)(encode(batch, vecCol, Nil, "append", layout))
+      store.append("maintain", batchId)(encode(batch, vecCol, Nil, _))
       AnnIndex.MaintainReport("append", storedErr, freshErr, layout)
     } else
       // the marker is taken AFTER the decision (the append branch must
@@ -401,9 +386,9 @@ final class AnnIndex private (spark: SparkSession,
       series.length, target)
   }
 
-  /** COMPACT the generation — the LSM small-files pay-down: daily
-    * appends and streamed increments leave one new file per touched
-    * cell per batch, and every probe pays their opens. Compaction is
+  /** COMPACT the generation — the LSM small-files pay-down: every
+    * append leaves one increment directory with a file per touched
+    * cell, and every probe pays their opens. Compaction is
     * the store's fold ([[Layouts.GenerationStore.fold]]) into
     * `gen<k+1>`, returned: codes rewritten (never re-encoded: no
     * vectors read, no codebooks applied) hash-repartitioned by cell, so
@@ -502,7 +487,4 @@ object AnnIndex {
     }
     new AnnIndex(spark, store, idCol, kind, ivf, pq)
   }
-
-  private def requireNprobe(nprobe: Int): Unit =
-    require(nprobe >= 1, "nprobe must be >= 1 (the probe needs at least one cell)")
 }

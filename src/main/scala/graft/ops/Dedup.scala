@@ -292,51 +292,49 @@ object Dedup {
     * never recomputed; tomorrow's [[incrementalNearDup]] sees today's
     * batch as corpus). `out` is a layout or a pointered store root;
     * the write is the store's fenced append
-    * ([[Layouts.GenerationStore.append]]). Validates the stored
-    * banding parameters first: an append under different banding
-    * poisons the index silently.
+    * ([[Layouts.GenerationStore.append]]) into the increment directory
+    * batch `batchId` owns, under its batch-id contract: ids share the
+    * index's stream id space and increase, and an id is reused only to
+    * retry that batch, which rewrites its own directory. Validates the
+    * stored banding parameters first: an append under different
+    * banding poisons the index silently.
     */
   def appendNearDupIndex(
       batch: DataFrame,
       idCol: String,
       textCol: String,
       out: String,
+      batchId: Long,
       numHashes: Int = 128,
       bands: Int = 32,
       shingleWidth: Int = 3): Unit = {
     val store = Layouts.openStore(batch.sparkSession, out)
-    store.append("appendNearDupIndex", owned = false) {
+    store.append("appendNearDupIndex", batchId) { dir =>
       validateIndexMeta(batch.sparkSession, store.layout, numHashes, bands,
         shingleWidth, "appendNearDupIndex")
-      // per-batch append: NO fan-out (the batch keeps its source
-      // partitioning — one file per source partition per band, the
-      // pre-r21 behavior) — see bandSignaturesImpl
-      bandSignaturesImpl(batch, idCol, textCol, numHashes, bands,
-          shingleWidth, fanOut = false)
-        .write.mode("append").partitionBy("band").parquet(store.layout)
+      writeIncrement(batch, idCol, textCol, dir, numHashes, bands, shingleWidth)
     }
   }
 
-  /** The STREAMING ingest loop's signature write
-    * ([[graft.streaming.StreamingDedup]], which validates the banding
-    * first and fences this write with its verdicts as one store
-    * append): the batch's signatures land in a directory the batch
-    * OWNS (`_increments/ingest_batch=<id>` of the generation `layout`,
-    * overwritten wholesale), so a crash-replay rewrites the same rows
-    * instead of appending them twice. Plain reads of the base skip
-    * increments; every reader here reads them
+  /** The signature write of every near-dup append (this file's batch
+    * face and [[graft.streaming.StreamingDedup]], which validates the
+    * banding first and fences this write with its verdicts as one
+    * store append): the batch's signatures overwrite the increment
+    * directory `dir` the batch OWNS, so a retry or crash-replay
+    * rewrites the same rows instead of appending them twice. Plain
+    * reads of the base skip increments; every reader here reads them
     * ([[nearDupIndexWithIncrements]]).
     */
   private[graft] def writeIncrement(batch: DataFrame, idCol: String,
-      textCol: String, layout: String, batchId: Long, numHashes: Int,
-      bands: Int, shingleWidth: Int): Unit =
+      textCol: String, dir: String, numHashes: Int, bands: Int,
+      shingleWidth: Int): Unit =
     // per-batch increment: NO fan-out — the increment directory holds
     // one file per SOURCE partition of the batch, not one per core
     bandSignaturesImpl(batch, idCol, textCol, numHashes, bands,
         shingleWidth, fanOut = false)
-      .write.mode("overwrite").parquet(Layouts.incrementDir(layout, batchId))
+      .write.mode("overwrite").parquet(dir)
 
-  /** The layout's stored signature rows PLUS its committed streamed
+  /** The layout's stored signature rows PLUS its committed
     * increments ([[writeIncrement]] directories), as one
     * (id, band, key) frame — what every near-dup reader here reads, so
     * a fold's carried newest increment stays in every pair, `dup_of`
@@ -354,10 +352,10 @@ object Dedup {
       Seq("id", "band", "key"), excludeBatchId)
   }
 
-  /** COMPACT a signature index: daily [[appendNearDupIndex]] batches
-    * leave one new file per band per day, streamed ones one increment
-    * directory each (the [[graft.ops.AnnIndex.compact]] small-files
-    * tax, text side). This is the store's fold
+  /** COMPACT a signature index: every append, daily
+    * ([[appendNearDupIndex]]) or streamed, leaves one increment
+    * directory (the [[graft.ops.AnnIndex.compact]] small-files tax,
+    * text side). This is the store's fold
     * ([[Layouts.GenerationStore.fold]]) of the pointered root `root`
     * into `gen<k+1>`, returned: (id, band, key) rows hash-repartitioned
     * by band — one file per band directory, nothing re-hashed — with

@@ -7,7 +7,10 @@ import org.apache.spark.sql.{Row, SparkSession}
   * owns their lifecycle. The IVF-PQ ([[AnnIndex]]), near-dup
   * ([[Dedup.writeNearDupIndex]]) and Bloom ([[Bloom.writeBloomIndex]])
   * indexes are codecs over it: each says how to encode a batch and how
-  * to write a generation, and nothing about when either is safe.
+  * to write a generation, and nothing about when either is safe. Every
+  * append, batch face or stream, writes one increment directory its
+  * batch owns; the base changes only when a fold or rebuild writes the
+  * next generation.
   *
   * Also the sidecar plumbing (`_meta`, `_codebooks`, fences, bitmap
   * rows). Presence is an explicit filesystem check, NOT a caught
@@ -18,12 +21,13 @@ import org.apache.spark.sql.{Row, SparkSession}
   */
 private[graft] object Layouts {
 
-  /** Subdirectory of a layout holding a streaming loop's per-batch
-    * increments (`_increments/ingest_batch=<id>`). Underscore-prefixed
-    * like `_meta`/`_codebooks`, so a plain `spark.read.parquet` of the
-    * base layout never sees increment rows — readers opt in via
-    * [[withIncrements]] (or fold them into a new base generation with
-    * the family's compaction).
+  /** Subdirectory of a layout holding every append's per-batch
+    * increments (`_increments/ingest_batch=<id>`, one per batch, batch
+    * faces and streams alike — [[GenerationStore.append]]).
+    * Underscore-prefixed like `_meta`/`_codebooks`, so a plain
+    * `spark.read.parquet` of the base layout never sees increment rows
+    * — readers opt in via [[withIncrements]] (or fold them into a new
+    * base generation with the family's compaction).
     */
   val IncrementsDir = "_increments"
 
@@ -47,7 +51,7 @@ private[graft] object Layouts {
     * basePath anchor) shared by every reader: the own-batch exclusion
     * above, and the Bloom gate's STRICTER `id < b` history rule
     * ([[Bloom.readBloomIndex]]). A directory that holds no data file
-    * ([[holdsData]]) is skipped.
+    * ([[incrementDirs]]) is skipped.
     */
   def withIncrementsWhere(spark: SparkSession,
       base: org.apache.spark.sql.DataFrame,
@@ -55,8 +59,7 @@ private[graft] object Layouts {
       keepBatch: Long => Boolean): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.functions.col
     val projected = base.select(cols.map(col): _*)
-    val dirs = incrementIds(spark, path).filter(keepBatch)
-      .map(incrementDir(path, _)).filter(holdsData(spark, _))
+    val dirs = incrementDirs(spark, path, keepBatch)
     if (dirs.isEmpty) projected
     else projected.unionByName(
       // basePath anchors partition inference at the _increments root:
@@ -70,23 +73,46 @@ private[graft] object Layouts {
         .select(cols.map(col): _*))
   }
 
-  /** True iff `dir` holds a file outside Spark's hidden `_`/`.` names
-    * (`_SUCCESS`, `_temporary` staging). A zero-row `partitionBy` write
-    * leaves none, and no read can infer a schema from the directory;
-    * it holds no rows, so readers and folds treat it as absent.
+  /** The committed increment directories of the layout at `path` whose
+    * batch id `keepBatch` keeps, ascending. A directory that holds no
+    * data file ([[dataFile]]) is skipped: a zero-row `partitionBy`
+    * write leaves none, and no read can infer a schema from it.
     */
-  private def holdsData(spark: SparkSession, dir: String): Boolean = {
+  def incrementDirs(spark: SparkSession, path: String,
+      keepBatch: Long => Boolean): Seq[String] =
+    incrementIds(spark, path).filter(keepBatch)
+      .map(incrementDir(path, _)).filter(dataFile(spark, _).isDefined)
+
+  /** The first file under `dir` outside Spark's hidden `_`/`.` names
+    * (`_SUCCESS`, `_temporary` staging), if any.
+    */
+  private def dataFile(spark: SparkSession,
+      dir: String): Option[org.apache.hadoop.fs.Path] = {
     val p = new org.apache.hadoop.fs.Path(dir)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val below = fs.makeQualified(p).toUri.getPath.length
     val files = fs.listFiles(p, true)
-    Iterator.continually(files).takeWhile(_.hasNext)
-      .map(_.next().getPath.toUri.getPath.substring(below).split('/'))
-      .exists(_.forall(c => !c.startsWith("_") && !c.startsWith(".")))
+    Iterator.continually(files).takeWhile(_.hasNext).map(_.next().getPath)
+      .find(_.toUri.getPath.substring(below).split('/')
+        .forall(c => !c.startsWith("_") && !c.startsWith(".")))
   }
 
+  /** The data columns of the parquet rows under `dir`, from one data
+    * file's footer — driver-side, no Spark job. One write produces the
+    * whole directory, so one footer speaks for it. Empty when `dir`
+    * holds no data file.
+    */
+  def dataColumns(spark: SparkSession, dir: String): Seq[String] =
+    dataFile(spark, dir).toSeq.flatMap { f =>
+      import scala.jdk.CollectionConverters._
+      val footer = org.apache.parquet.hadoop.ParquetFileReader.open(org.apache
+        .parquet.hadoop.util.HadoopInputFile.fromPath(f, spark.sparkContext.hadoopConfiguration))
+      try footer.getFileMetaData.getSchema.getFields.asScala.map(_.getName)
+      finally footer.close()
+    }
+
   /** The increment directory a batch OWNS (and overwrites wholesale on
-    * replay — the idempotence that makes a crash-replay converge).
+    * a retry — the idempotence that makes a replay converge).
     */
   def incrementDir(path: String, batchId: Long): String =
     ownedBatchDir(s"$path/$IncrementsDir", batchId)
@@ -289,26 +315,31 @@ private[graft] object Layouts {
     /** Run `write` as an append into this generation between two
       * [[hazard]] checks; the one before is check-then-act (a fold can
       * take the marker and list increments before the write's files
-      * exist, or swap while it writes). A failure after the write is
-      * convergent when `owned` (it wrote only directories the batch
-      * owns, which the checkpoint replay rewrites in the live
-      * generation); rows appended into the base may or may not be in
-      * the fold's generation, and the error says so rather than invite
-      * a blind retry. `beforeFence` is the seam a spec pins the race with.
+      * exist, or swap while it writes). `write` gets the increment
+      * directory batch `batchId` OWNS and overwrites it wholesale, so
+      * every append is idempotent: a failure after the write leaves the
+      * batch uncommitted, and its retry under the same id rewrites that
+      * one directory in the live generation. The fold either carried
+      * the directory (it is the newest) or never listed it, so the
+      * retry stores each row once.
+      *
+      * Caller contract: batch ids share the index's stream id space and
+      * increase, one batch in flight at a time; an id is reused only to
+      * retry that batch (a stream's checkpoint replay, or a batch
+      * caller's rerun on a reopened handle). `beforeFence` is the seam
+      * a spec pins the race with.
       */
-    def append[T](face: String, owned: Boolean,
-        beforeFence: () => Unit = () => ())(write: => T): T = {
+    def append[T](face: String, batchId: Long,
+        beforeFence: () => Unit = () => ())(write: String => T): T = {
       hazard().foreach(c => throw new IllegalStateException(s"$face: $c — nothing " +
         "was written; retry after the compaction (releaseQuiesce clears a " +
         "crashed one's marker) or on a reopened index"))
-      val out = write
+      val out = write(incrementDir(layout, batchId))
       beforeFence()
       hazard().foreach(c => throw new IllegalStateException(s"$face: $c while " +
-        "this append wrote — " + (if (owned) "the batch fails uncommitted; its " +
-          "replay rewrites its own directories in the live generation"
-        else "its rows are in the old generation's base, and the fold may " +
-          "or may not have taken them; check the live generation for the " +
-          "batch's ids before retrying (a blind retry can store them twice)")))
+        s"batch $batchId was written — it fails uncommitted; retry it under " +
+        "the same batch id on a reopened index (a stream's checkpoint replay " +
+        "does), which rewrites its own directory in the live generation"))
       out
     }
 
@@ -345,7 +376,7 @@ private[graft] object Layouts {
         val newest = incrementIds(spark, layout).lastOption
         delete(spark, dst)
         codec.writeFolded(layout, id => !newest.contains(id), dst)
-        newest.filter(b => holdsData(spark, incrementDir(layout, b)))
+        newest.filter(b => dataFile(spark, incrementDir(layout, b)).isDefined)
           .foreach(b => codec.carry(incrementDir(layout, b), incrementDir(dst, b)))
         dst
       }
@@ -406,8 +437,8 @@ private[graft] object Layouts {
       * subset of a batch the append then reports committed.
       */
     private def assertNoInflightIncrements(face: String): Unit = {
-      // the batch appends stage under <layout>/_temporary (r19 ADVICE),
-      // a streamed increment under its own directory
+      // every append stages under its own increment directory; the
+      // base root is probed too, for a writer into the base itself
       val inflight = (layout +: incrementIds(spark, layout).map(incrementDir(layout, _)))
         .filter(d => exists(spark, s"$d/_temporary"))
       if (inflight.nonEmpty)

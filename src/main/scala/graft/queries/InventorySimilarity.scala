@@ -133,8 +133,8 @@ private[queries] trait InventorySimilarity extends InventoryDedup {
     * `partitionBy(cell)` as `gen0` of a pointered store root with
     * codebooks trained on it, the increment (vec_id % 5 = 0) is encoded
     * with the handle's SAME stored codebooks — no retraining, no corpus
-    * re-read — and appended into the cell directories; the probe then
-    * answers over corpus+increment FROM THE FILES. corpus ∪ increment = the whole table, so the oracle
+    * re-read — and appended as batch 0's own increment directory; the
+    * probe then answers over corpus+increment FROM THE FILES. corpus ∪ increment = the whole table, so the oracle
     * is q135's proven CTE chain with only the codebook CTEs
     * restricted to the corpus predicate — the append is correct iff
     * the merged layout lands on the recomputed full-table top-k.
@@ -148,12 +148,12 @@ private[queries] trait InventorySimilarity extends InventoryDedup {
     val base = new java.io.File(
       new java.io.File(System.getProperty("java.io.tmpdir"), "graft_q138_layout"),
       java.lang.Integer.toHexString(d.hashCode)).getAbsolutePath
-    // overwrite clears any previous run's append, so reruns stay
+    // overwrite clears any previous run's increment, so reruns stay
     // deterministic; the append itself never touches the corpus files
     Similarity.writeIvfPqPartitioned(corpus, "vec_id", "embedding",
       ivfCb, pqCb, base + "/gen0")
     graft.ops.Layouts.swapGenerationPointer(s, base, "gen0")
-    AnnIndex.open(s, base, "vec_id").append(incr, "embedding")
+    AnnIndex.open(s, base, "vec_id").append(incr, "embedding", 0L)
     onesProbe(s, base)
   }
 
@@ -184,10 +184,11 @@ private[queries] trait InventorySimilarity extends InventoryDedup {
   /** COMPACTION of the appended ANN layout
     * ([[graft.ops.AnnIndex.compact]] — the LSM small-files play):
     * q138's corpus-write + increment-append, then `gen0` is compacted
-    * into `gen1` (codes rewritten one-file-per-cell, nothing
-    * re-encoded, sidecar carried, pointer swapped) and the probe of the
-    * store root answers from the COMPACTED files alone (the sidecar
-    * carry is load-bearing). Shares q138's oracle: a
+    * into `gen1` (base codes rewritten one-file-per-cell, nothing
+    * re-encoded, sidecar carried, the newest increment — here the
+    * batch — carried as its own directory, pointer swapped) and the
+    * probe of the store root answers from `gen1` alone (the sidecar
+    * and increment carries are load-bearing). Shares q138's oracle: a
     * rewrite that loses, duplicates or re-cells a single code row
     * lands off the recomputed top-k.
     */
@@ -203,7 +204,7 @@ private[queries] trait InventorySimilarity extends InventoryDedup {
     Similarity.writeIvfPqPartitioned(corpus, "vec_id", "embedding",
       ivfCb, pqCb, base + "/gen0")
     graft.ops.Layouts.swapGenerationPointer(s, base, "gen0")
-    AnnIndex.open(s, base, "vec_id").append(incr, "embedding")
+    AnnIndex.open(s, base, "vec_id").append(incr, "embedding", 0L)
     AnnIndex.open(s, base, "vec_id").compact()
     onesProbe(s, base)
   }
@@ -255,9 +256,10 @@ private[queries] trait InventorySimilarity extends InventoryDedup {
     * in the q135 `partitionBy(cell)` layout. The corpus
     * (vec_id % 5 != 0) is written with residual codes and the
     * `kind='rpq'` sidecar, the increment (vec_id % 5 = 0) is
-    * residual-encoded with the SAME stored codebooks and appended
-    * file-additively ([[graft.ops.AnnIndex.append]], whose handle reads
-    * the rpq tables off the sidecar), and the probe answers from
+    * residual-encoded with the SAME stored codebooks and appended as
+    * batch 0's own increment directory ([[graft.ops.AnnIndex.append]],
+    * whose handle reads the rpq tables off the sidecar), and the probe
+    * answers over base ∪ increment from
     * the files alone ([[graft.ops.AnnIndex.probe]], which reads the
     * 'rpq' kind off the sidecar: per-probed-cell residual ADC tables
     * selected by the partition column). Write, no-retrain append, sidecar round-trip
@@ -279,7 +281,7 @@ private[queries] trait InventorySimilarity extends InventoryDedup {
     Similarity.writeIvfPqResidualPartitioned(corpus, "vec_id", "embedding",
       ivfCb, rcb, base + "/gen0")
     graft.ops.Layouts.swapGenerationPointer(s, base, "gen0")
-    AnnIndex.open(s, base, "vec_id").append(incr, "embedding")
+    AnnIndex.open(s, base, "vec_id").append(incr, "embedding", 0L)
     onesProbe(s, base)
   }
 
@@ -479,8 +481,8 @@ private[queries] trait InventorySimilarity extends InventoryDedup {
     // drift regime a narrow slice and keeps the sweep cost on the
     // decision it actually proves (round-19 trim, VERDICT r18 #6)
     val slice = corpus.where(col("vec_id") % 50 === 1)
-    val ra = index.maintain(corpus, indist, "embedding")
-    val rb = index.maintain(slice, drifted, "embedding")
+    val ra = index.maintain(corpus, indist, "embedding", 0L)
+    val rb = index.maintain(slice, drifted, "embedding", 1L)
     def r6(x: Double): Double =
       BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
     Seq(("indist", ra.action, r6(ra.storedErr), r6(ra.freshErr)),
@@ -525,7 +527,7 @@ private[queries] trait InventorySimilarity extends InventoryDedup {
     // pointer, with no path handed across the swap by hand
     graft.ops.Layouts.swapGenerationPointer(s, base, "gen0")
     val r = AnnIndex.open(s, base, "vec_id").maintain(corpus, drifted,
-      "embedding")
+      "embedding", 0L)
     require(r.action == "rebuild" && r.layout == base + "/gen1",
       s"q158 expects the drifted batch to trigger the rebuild path, got $r")
     onesProbe(s, base)

@@ -65,14 +65,13 @@ object StreamingBloomGate {
       beforeFence: () => Unit): Unit = {
     val spark = b.sparkSession
     val store = Layouts.openStore(spark, indexPath)
-    store.append("bloomGateStream", owned = true, beforeFence) {
+    store.append("bloomGateStream", batchId, beforeFence) { dir =>
       val (m, k, words) = Bloom.readBloomIndex(spark, store.layout,
         historyBefore = Some(batchId))
       b.where(!Bloom.bloomMember(col(textCol), m, k, words))
         .write.mode("overwrite")
         .parquet(Layouts.ownedBatchDir(admittedOut, batchId))
-      Bloom.writeBitmapRow(spark, Bloom.bitmapOf(b, textCol, m, k), m, k,
-        Layouts.incrementDir(store.layout, batchId))
+      Bloom.writeBitmapRow(spark, Bloom.bitmapOf(b, textCol, m, k), m, k, dir)
     }
   }
 

@@ -94,7 +94,7 @@ object StreamingDedup {
     val store = Layouts.openStore(spark, indexPath)
     // the store refuses BEFORE the dedup work while a compaction holds
     // the marker (the checkpoint replays the batch after the fold)
-    store.append(face, owned = true, beforeFence) {
+    store.append(face, batchId, beforeFence) { dir =>
       // fail before any write if the caller's banding disagrees with
       // the layout (the appendNearDupIndex discipline): a mismatched
       // dedup pass would silently change which pairs can ever collide
@@ -113,8 +113,8 @@ object StreamingDedup {
         .parquet(Layouts.ownedBatchDir(verdictsOut, batchId))
       // the batch becomes history: signatures and text into increment
       // directories the batch owns (overwritten wholesale on replay)
-      Dedup.writeIncrement(b, idCol, textCol, store.layout, batchId,
-        numHashes, bands, shingleWidth)
+      Dedup.writeIncrement(b, idCol, textCol, dir, numHashes, bands,
+        shingleWidth)
       b.write.mode("overwrite")
         .parquet(Layouts.incrementDir(corpusPath, batchId))
     }

@@ -8,13 +8,12 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 /** The daily vector-ingest loop AS A STREAM — the [[StreamingDedup]]
   * play for the ANN family: each micro-batch opens the index once
   * ([[graft.ops.AnnIndex.open]]) and appends its (id, embedding) rows
-  * with the handle's STORED codebooks and kind
-  * ([[graft.ops.AnnIndex.appendIncrement]] — nothing retrained, nothing
-  * handed over out of band), so probes over base + increments
+  * with the handle's STORED codebooks and kind, through the same
+  * encode as [[graft.ops.AnnIndex.append]] — nothing retrained, nothing
+  * handed over out of band — so probes over base + increments
   * ([[graft.ops.AnnIndex.probe]]) see yesterday's stream batches
-  * exactly as [[graft.ops.AnnIndex.append]] batches. The same stream
-  * code serves raw and residual layouts and can never poison one with
-  * the other's codes.
+  * exactly as batch-face appends. The same stream code serves raw and
+  * residual layouts and can never poison one with the other's codes.
   *
   * Exactly-once story, inherited from the near-dup loop: every
   * per-batch write is IDEMPOTENT — the batch owns
@@ -96,8 +95,8 @@ object StreamingSimilarity {
     // the fence runs after the drift report too: a report computed
     // against a superseded generation's codebooks must not commit with
     // the batch
-    idx.store.append("incrementalAnnStream", owned = true, beforeFence) {
-      idx.encodeIncrement(b, vecCol, batchId)
+    idx.store.append("incrementalAnnStream", batchId, beforeFence) { dir =>
+      idx.encode(b, vecCol, Nil, dir)
       driftOut.foreach { out =>
       // kind-aware like the append itself: a residual layout's drift
       // is its residual reconstruction error, not the raw-PQ one

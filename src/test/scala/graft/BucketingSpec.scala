@@ -186,7 +186,7 @@ class BucketingSpec extends AnyFunSuite with BeforeAndAfterAll {
     Similarity.writeIvfPqPartitioned(docs, "vec_id", "embedding",
       cents, pqCb, out)
     graft.ops.AnnIndex.open(spark, out, "vec_id")
-      .appendIncrement(vecs(100 until 132).toDF("vec_id", "embedding"), "embedding", 0L)
+      .append(vecs(100 until 132).toDF("vec_id", "embedding"), "embedding", 0L)
     val query = Array.fill(dim)(0.7)
     val probe = graft.ops.AnnIndex.open(spark, out, "vec_id")
       .probe(Seq(0L -> query), k = 5, nprobe = 2)

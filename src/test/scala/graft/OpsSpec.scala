@@ -28,6 +28,12 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       .probe(Seq(0L -> query), k, nprobe, excludeBatchId = excludeBatchId)
       .drop("query_id")
 
+  /** The rows of an index generation that every reader sees: its base
+    * ∪ committed increments, projected to `cols`.
+    */
+  private def indexRows(layout: String, cols: String*): DataFrame =
+    Layouts.withIncrements(spark, spark.read.parquet(layout), layout, cols, None)
+
   private def docs() = {
     val base = "the quick brown fox jumps over the lazy dog again and again until done"
     val nearDup = base + " extra"       // high shingle overlap with base
@@ -440,16 +446,20 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
         .map(p => b.relativize(p).toString).toSet
     }
     val before = dataFiles()
-    AnnIndex.open(spark, out, "vec_id").append(incr, "embedding")
+    AnnIndex.open(spark, out, "vec_id").append(incr, "embedding", 0L)
     val after = dataFiles()
     // the append only ADDS files — every corpus file survives by name
     // (the corpus side is never read or rewritten)
     assert(before.subsetOf(after),
       s"append rewrote corpus files: ${(before -- after).mkString(",")}")
     assert((after -- before).nonEmpty, "append added no files")
-    // merged read = all 150 rows, and the at-rest probe lands on the
-    // ADC ranking a from-scratch batch encode of the UNION produces
-    assert(spark.read.parquet(out).count() == 150)
+    // the new files are the batch's own increment directory; merged
+    // read = all 150 rows, and the at-rest probe lands on the ADC
+    // ranking a from-scratch batch encode of the UNION produces
+    assert((after -- before).forall(_.startsWith("_increments/ingest_batch=0/")),
+      s"append wrote outside its increment: ${(after -- before).mkString(",")}")
+    assert(spark.read.parquet(out).count() == 120)
+    assert(indexRows(out, "vec_id").count() == 150)
     val query = Array.fill(dim)(0.5)
     val gotRest = annProbe(out, query, k = 10, nprobe = 3)
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toSeq
@@ -505,7 +515,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     Similarity.writeIvfPqResidualPartitioned(corpus, "vec_id", "embedding",
       ivfCb, rcb, base + "/gen0")
     Layouts.swapGenerationPointer(spark, base, "gen0")
-    AnnIndex.open(spark, base, "vec_id").append(incr, "embedding")
+    AnnIndex.open(spark, base, "vec_id").append(incr, "embedding", 0L)
     Similarity.writeIvfPqResidualPartitioned(full, "vec_id", "embedding",
       ivfCb, rcb, base + "/full")
     val query = Array.fill(dim)(0.5)
@@ -659,24 +669,30 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     Seq(0, 1, 2).foreach { day =>
       val batch = rows.filter(t => t._1 % 5 == 0 && t._1 % 3 == day)
         .toDF("vec_id", "embedding")
-      index.append(batch, "embedding")
+      index.append(batch, "embedding", day.toLong)
     }
     index.compact()
-    def filesPerCell(p: String): Map[String, Int] = {
+    // files per cell directory name, over the base and (unless
+    // `baseOnly`) every increment
+    def filesPerCell(p: String, baseOnly: Boolean = false): Map[String, Int] = {
       import scala.jdk.CollectionConverters._
       java.nio.file.Files.walk(java.nio.file.Paths.get(p)).iterator().asScala
         .filter(f => f.toString.endsWith(".parquet") && f.toString.contains("cell="))
+        .filterNot(f => baseOnly && f.toString.contains(Layouts.IncrementsDir))
         .toSeq.groupBy(_.getParent.getFileName.toString).map { case (k, v) => k -> v.size }
     }
     assert(filesPerCell(base + "/gen0").values.max > 1, "appends left no sprawl to compact")
-    assert(filesPerCell(base + "/gen1").values.max == 1,
-      s"compaction left multiple files per cell: ${filesPerCell(base + "/gen1")}")
+    // the fold writes the base one file per cell and carries the newest
+    // batch as its own directory
+    assert(filesPerCell(base + "/gen1", baseOnly = true).values.max == 1,
+      s"compaction left multiple files per cell: ${filesPerCell(base + "/gen1", baseOnly = true)}")
+    assert(Layouts.incrementIds(spark, base + "/gen1") == Seq(2L))
     // rows preserved exactly (id -> cell set identical)
-    val before = spark.read.parquet(base + "/gen0")
-      .select("vec_id", "cell").as[(Long, Long)].collect().sorted.toSeq
-    val after = spark.read.parquet(base + "/gen1")
-      .select("vec_id", "cell").as[(Long, Long)].collect().sorted.toSeq
-    assert(before == after)
+    def cells(gen: String) = indexRows(base + gen, "vec_id", "cell")
+      .as[(Long, Long)].collect().sorted.toSeq
+    val before = cells("/gen0")
+    assert(before.length == 150)
+    assert(before == cells("/gen1"))
     // sidecar carried: the self-contained probe works on gen1
     val q = Array.fill(dim)(0.5)
     val g1 = annProbe(base + "/gen1", q, k = 5, nprobe = 3)
@@ -719,8 +735,8 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(fromFiles == explicit, s"$fromFiles vs $explicit")
     // the handle appends with the stored codebooks
     val batch = Seq((200L, Array.fill(dim)(0.1f))).toDF("vec_id", "embedding")
-    loaded.append(batch, "embedding")
-    assert(spark.read.parquet(out).count() == 121)
+    loaded.append(batch, "embedding", 0L)
+    assert(indexRows(out, "vec_id").count() == 121)
   }
 
   test("Quality.dataCard: one row per source, corpus-wide dup exposure") {
@@ -1181,7 +1197,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val d1 = graft.ops.Dedup.incrementalNearDup(spark, out, corpus, day1,
       "doc_id", "text").count()
     assert(d1 == 0)
-    graft.ops.Dedup.appendNearDupIndex(day1, "doc_id", "text", out)
+    graft.ops.Dedup.appendNearDupIndex(day1, "doc_id", "text", out, 0L)
     // day 2: doc 20 dups the original corpus, doc 21 dups DAY 1 —
     // visible only because the append landed in the same layout
     val known = corpus.unionByName(day1)
@@ -1198,32 +1214,38 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       .toDF("doc_id", "text")
     val base = java.nio.file.Files.createTempDirectory("graft_idx_compact").toString
     graft.ops.Dedup.writeNearDupIndex(corpus, "doc_id", "text", base + "/gen0")
-    // two daily appends -> one extra file per band per day
-    Seq(10L, 20L).foreach { id =>
+    // two daily appends -> one increment directory per day
+    Seq(10L -> 0L, 20L -> 1L).foreach { case (id, batchId) =>
       graft.ops.Dedup.appendNearDupIndex(
         Seq((id, s"day $id text that matches nothing else at all today"))
-          .toDF("doc_id", "text"), "doc_id", "text", base + "/gen0")
+          .toDF("doc_id", "text"), "doc_id", "text", base + "/gen0", batchId)
     }
+    assert(Layouts.incrementIds(spark, base + "/gen0") == Seq(0L, 1L))
     Layouts.swapGenerationPointer(spark, base, "gen0")
     graft.ops.Dedup.compactNearDupIndex(spark, base)
     def filesPerBand(p: String): Map[String, Int] = {
       import scala.jdk.CollectionConverters._
       java.nio.file.Files.walk(java.nio.file.Paths.get(p)).iterator().asScala
         .filter(f => f.toString.endsWith(".parquet") && f.toString.contains("band="))
+        .filterNot(_.toString.contains(Layouts.IncrementsDir))
         .toSeq.groupBy(_.getParent.getFileName.toString).map { case (k, v) => k -> v.size }
     }
-    assert(filesPerBand(base + "/gen0").values.max > 1, "appends left no sprawl")
+    // gen1's base is one file per band; the newest day is carried as
+    // its own directory (the store's fold rule), the older one folded
     assert(filesPerBand(base + "/gen1").values.max == 1,
       s"compaction left sprawl: ${filesPerBand(base + "/gen1")}")
+    assert(Layouts.incrementIds(spark, base + "/gen1") == Seq(1L))
+    assert(spark.read.parquet(base + "/gen1").select("id").distinct()
+      .as[Long].collect().sorted.toSeq == Seq(0L, 2L, 10L))
     // meta carried, rows identical, and an incremental query against
     // the compacted generation answers the same
     assert(graft.ops.Dedup.readNearDupIndexMeta(spark, base + "/gen1")
       .contains((128, 32, 3)))
-    val before = spark.read.parquet(base + "/gen0")
-      .select("id", "band", "key").as[(Long, Int, Long)].collect().sorted.toSeq
-    val after = spark.read.parquet(base + "/gen1")
-      .select("id", "band", "key").as[(Long, Int, Long)].collect().sorted.toSeq
-    assert(before == after)
+    def sigs(gen: String) = indexRows(base + gen, "id", "band", "key")
+      .as[(Long, Int, Long)].collect().sorted.toSeq
+    val before = sigs("/gen0")
+    assert(before.map(_._1).distinct == Seq(0L, 2L, 10L, 20L))
+    assert(before == sigs("/gen1"))
     val known = corpus.unionByName(
       Seq((10L, s"day 10 text that matches nothing else at all today"),
         (20L, s"day 20 text that matches nothing else at all today"))
@@ -1245,7 +1267,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       .contains((128, 32, 3)))
     // an append under different banding poisons the index — refused
     val e1 = intercept[IllegalArgumentException] {
-      graft.ops.Dedup.appendNearDupIndex(corpus, "doc_id", "text", out,
+      graft.ops.Dedup.appendNearDupIndex(corpus, "doc_id", "text", out, 0L,
         numHashes = 64, bands = 16)
     }
     assert(e1.getMessage.contains("appendNearDupIndex"), e1.getMessage)
@@ -1282,7 +1304,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(e.getMessage.contains("writeNearDupIndex"), e.getMessage)
     // and the validating callers hit the same curated failure
     val e2 = intercept[IllegalStateException] {
-      graft.ops.Dedup.appendNearDupIndex(corpus, "doc_id", "text", out)
+      graft.ops.Dedup.appendNearDupIndex(corpus, "doc_id", "text", out, 0L)
     }
     assert(e2.getMessage.contains("sidecar"), e2.getMessage)
   }
@@ -1310,7 +1332,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // hazard), not skip validation as if the sidecar were absent
     val batch = Seq((200L, Array.fill(8)(0.1f))).toDF("vec_id", "embedding")
     intercept[IllegalStateException] {
-      AnnIndex.open(spark, out, "vec_id").append(batch, "embedding")
+      AnnIndex.open(spark, out, "vec_id").append(batch, "embedding", 0L)
     }
     // a compaction of the corrupt layout fails with the curated
     // message BEFORE any dst write — no partial generation left
@@ -2072,7 +2094,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // threshold -> append in place; the layout then answers over
     // corpus ∪ batch exactly as the in-flight face with the SAME
     // (stored) codebooks
-    val ra = store("a").maintain(corpus, indist, "embedding")
+    val ra = store("a").maintain(corpus, indist, "embedding", 0L)
     assert(ra.action == "append", s"$ra")
     assert(ra.layout == base + "/a/gen0")
     assert(ra.storedErr <= 2.0 * ra.freshErr, s"$ra")
@@ -2089,7 +2111,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // its own -> retrain on corpus ∪ batch into a NEW generation; the
     // rebuilt layout is self-contained and answers as the in-flight
     // face with codebooks derived from the union
-    val rb = store("b").maintain(corpus, drifted, "embedding")
+    val rb = store("b").maintain(corpus, drifted, "embedding", 0L)
     assert(rb.action == "rebuild", s"$rb")
     assert(rb.layout == base + "/b/gen1")
     assert(rb.storedErr > 2.0 * rb.freshErr, s"$rb")
@@ -2113,7 +2135,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     Similarity.writeIvfPqResidualPartitioned(corpus, "vec_id", "embedding",
       ivfCb, rcb, base + "/r/gen0")
     val rIndex = store("r")
-    val rr = rIndex.maintain(corpus, indist, "embedding")
+    val rr = rIndex.maintain(corpus, indist, "embedding", 0L)
     assert(rr.action == "append", s"$rr")
     val rAtRest = annProbe(base + "/r", q, k = 5, nprobe = 2)
       .as[(Long, Double)].collect().toSeq
@@ -2122,7 +2144,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       ivfCb = Some(ivfCb), residualCb = Some(rcb))
       .as[(Long, Double)].collect().toSeq
     assert(rAtRest == rInFlight, s"$rAtRest vs $rInFlight")
-    val rd = rIndex.maintain(corpus, drifted, "embedding")
+    val rd = rIndex.maintain(corpus, drifted, "embedding", 1L)
     assert(rd.action == "rebuild", s"$rd")
     // the rebuilt generation is an 'rpq' layout answering residual
     // probes — a raw rebuild here would poison every future probe
@@ -2133,13 +2155,13 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // would spuriously retrain the whole corpus
     val trickle = sample(8, 25.0, 3000L).toDF("vec_id", "embedding")
     val rc = AnnIndex.open(spark, base + "/a", "vec_id")
-      .maintain(corpus, trickle, "embedding")
+      .maintain(corpus, trickle, "embedding", 1L)
     assert(rc.action == "append", s"$rc")
     assert(rc.freshErr == 0.0, s"$rc")
     // curated refusal: a sub-1.0 threshold rebuilds every batch
     val e1 = intercept[IllegalArgumentException] {
       AnnIndex.open(spark, base + "/a", "vec_id")
-        .maintain(corpus, indist, "embedding", driftThreshold = 0.5)
+        .maintain(corpus, indist, "embedding", 2L, driftThreshold = 0.5)
     }
     assert(e1.getMessage.contains("below 1.0"), e1.getMessage)
   }
@@ -2351,17 +2373,16 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(AnnIndex.open(spark, base + "/streamed", "vec_id").kind == "rpq")
     // the kind-agnostic increment append must pick the RESIDUAL encoder
     val streamedIndex = AnnIndex.open(spark, base + "/streamed", "vec_id")
-    streamedIndex.appendIncrement(b1, "embedding", 0L)
-    streamedIndex.appendIncrement(b2, "embedding", 1L)
+    streamedIndex.append(b1, "embedding", 0L)
+    streamedIndex.append(b2, "embedding", 1L)
     val query = Array.fill(dim)(0.5)
     val streamed = annProbe(base + "/streamed", query, k = 8, nprobe = 2)
       .as[(Long, Double)].collect().toSeq
-    // batch-face parity: the same batches through the handle's append
-    Similarity.writeIvfPqResidualPartitioned(corpus, "vec_id", "embedding",
+    // batch-face parity: the residual layout writer over corpus ∪ both
+    // batches, with the same codebooks, answers identically
+    Similarity.writeIvfPqResidualPartitioned(
+      corpus.unionByName(b1).unionByName(b2), "vec_id", "embedding",
       ivfCb, rcb, base + "/batched")
-    val batchedIndex = AnnIndex.open(spark, base + "/batched", "vec_id")
-    batchedIndex.append(b1, "embedding")
-    batchedIndex.append(b2, "embedding")
     val batched = annProbe(base + "/batched", query, k = 8, nprobe = 2)
       .as[(Long, Double)].collect().toSeq
     assert(streamed == batched, s"$streamed vs $batched")
@@ -2600,7 +2621,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(annProbe(root, q, k = 5, nprobe = 2).count() == 5)
     // in-distribution: append in place, pointer unmoved
     val ra = AnnIndex.open(spark, root, "vec_id")
-      .maintain(corpus, indist, "embedding")
+      .maintain(corpus, indist, "embedding", 0L)
     assert(ra.action == "append" && ra.layout == root + "/gen0", s"$ra")
     assert(Layouts.currentGenerationName(spark, root) == "gen0")
     // drifted: rebuild into gen1 with the pointer swapped INSIDE the
@@ -2608,7 +2629,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // from the new generation with union-retrained codebooks
     val all = corpus.unionByName(indist).unionByName(drifted)
     val rb = AnnIndex.open(spark, root, "vec_id")
-      .maintain(corpus.unionByName(indist), drifted, "embedding")
+      .maintain(corpus.unionByName(indist), drifted, "embedding", 1L)
     assert(rb.action == "rebuild" && rb.layout == root + "/gen1", s"$rb")
     assert(Layouts.currentGenerationName(spark, root) == "gen1")
     assert(!Layouts.exists(spark, root + "/gen0/" + Layouts.QuiesceMarker))
@@ -2624,7 +2645,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // gen1, spares the pointed-at generation, probes unaffected
     val drifted2 = sample(48, 50.0, 3000L).toDF("vec_id", "embedding")
     val rc = AnnIndex.open(spark, root, "vec_id")
-      .maintain(all, drifted2, "embedding")
+      .maintain(all, drifted2, "embedding", 2L)
     assert(rc.action == "rebuild" && rc.layout == root + "/gen2", s"$rc")
     val gone = Layouts.vacuumGenerations(spark, root, keep = 1)
     assert(gone == Seq("gen0", "gen1"), s"$gone")
@@ -2643,7 +2664,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       ivfCb, pqCb, side)
     Layouts.swapGenerationPointer(spark, root, "side")
     val eName = intercept[IllegalArgumentException] {
-      AnnIndex.open(spark, root, "vec_id").maintain(corpus, drifted, "embedding")
+      AnnIndex.open(spark, root, "vec_id").maintain(corpus, drifted, "embedding", 3L)
     }
     assert(eName.getMessage.contains("gen<k>"), eName.getMessage)
   }
@@ -2675,9 +2696,8 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     def refusesStale(stale: AnnIndex, gen: String): Unit = {
       val before = files(gen)
       Seq[(String, () => Any)](
-        "append" -> (() => stale.append(batch, "embedding")),
-        "appendIncrement" -> (() => stale.appendIncrement(batch, "embedding", 0L)),
-        "maintain" -> (() => stale.maintain(corpus, drifted, "embedding")),
+        "append" -> (() => stale.append(batch, "embedding", 0L)),
+        "maintain" -> (() => stale.maintain(corpus, drifted, "embedding", 0L)),
         "maintainFromDriftSeries" -> (() =>
           stale.maintainFromDriftSeries(root + "/drift", corpus, "embedding")),
         "compact" -> (() => stale.compact())
@@ -2696,12 +2716,15 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // two handles on gen1: one maintains down the rebuild path
     val maintainer = AnnIndex.open(spark, root, "vec_id")
     val staleAfterRebuild = AnnIndex.open(spark, root, "vec_id")
-    val r = maintainer.maintain(corpus, drifted, "embedding")
+    val r = maintainer.maintain(corpus, drifted, "embedding", 0L)
     assert(r.action == "rebuild" && r.layout == root + "/gen2", s"$r")
     refusesStale(staleAfterRebuild, "gen1")
-    // a reopened handle follows the pointer and appends into gen2
-    AnnIndex.open(spark, root, "vec_id").append(batch, "embedding")
-    assert(spark.read.parquet(root + "/gen2").count() == 64 + 48 + 24)
+    // a reopened handle follows the pointer and appends into gen2: the
+    // rebuilt base plus the batch's own increment
+    AnnIndex.open(spark, root, "vec_id").append(batch, "embedding", 0L)
+    assert(spark.read.parquet(root + "/gen2").count() == 64 + 48)
+    assert(Layouts.incrementIds(spark, root + "/gen2") == Seq(0L))
+    assert(indexRows(root + "/gen2", "vec_id").count() == 64 + 48 + 24)
     // a plain (unpointered) layout appends, but has no next generation
     // to rebuild or compact into: the refusal names the pointer's init
     val plain = java.nio.file.Files.createTempDirectory("graft_plain").toString +
@@ -2709,16 +2732,17 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     Similarity.writeIvfPqPartitioned(corpus, "vec_id", "embedding",
       ivfCb, pqCb, plain)
     val p = AnnIndex.open(spark, plain, "vec_id")
-    Seq[() => Any](() => p.maintain(corpus, drifted, "embedding"),
+    Seq[() => Any](() => p.maintain(corpus, drifted, "embedding", 0L),
         () => p.compact()).foreach { call =>
       val e = intercept[IllegalStateException](call())
       assert(e.getMessage.contains("Layouts.swapGenerationPointer"), e.getMessage)
     }
-    p.append(batch, "embedding")
-    assert(spark.read.parquet(plain).count() == 64 + 24)
+    p.append(batch, "embedding", 0L)
+    assert(spark.read.parquet(plain).count() == 64)
+    assert(indexRows(plain, "vec_id").count() == 64 + 24)
   }
 
-  test("a batch append whose fence meets the marker fails with an ambiguous-outcome error, not a retry invitation") {
+  test("a batch ANN append whose fence meets a fold retries idempotently under its batch id") {
     import spark.implicits._
     val rnd = new scala.util.Random(67)
     val dim = 16
@@ -2731,18 +2755,56 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     Similarity.writeIvfPqPartitioned(corpus, "vec_id", "embedding",
       ivfCb, pqCb, root + "/gen0")
     Layouts.swapGenerationPointer(spark, root, "gen0")
-    // a compaction takes the marker after the append's rows committed
-    // into the base and before its fence
+    // append's store write, with a compaction folding gen0 into gen1
+    // after the batch's write and before its fence: the fence fails the
+    // batch uncommitted
+    val idx = AnnIndex.open(spark, root, "vec_id")
     val e = intercept[IllegalStateException] {
-      AnnIndex.open(spark, root, "vec_id").appendFenced(batch, "embedding",
-        Nil, () => Layouts.acquireQuiesce(spark, root + "/gen0", "t"))
+      idx.store.append("append", 5L, () => AnnIndex.open(spark, root, "vec_id").compact())(
+        idx.encode(batch, "embedding", Nil, _))
     }
-    assert(e.getMessage.startsWith("append") &&
-      e.getMessage.contains(Layouts.QuiesceMarker) &&
-      e.getMessage.contains("before retrying"), e.getMessage)
-    // the rows are in the base: a blind retry would store them twice
-    Layouts.releaseQuiesce(spark, root + "/gen0")
-    assert(spark.read.parquet(root + "/gen0").count() == 64 + 24)
+    assert(e.getMessage.startsWith("append") && e.getMessage.contains("moved off") &&
+      e.getMessage.contains("same batch id"), e.getMessage)
+    // the retry under the same id on a reopened handle rewrites its own
+    // directory in the live generation: every id stored exactly once
+    AnnIndex.open(spark, root, "vec_id").append(batch, "embedding", 5L)
+    assert(Layouts.currentGenerationName(spark, root) == "gen1")
+    val counts = indexRows(root + "/gen1", "vec_id").groupBy("vec_id").count()
+      .as[(Long, Long)].collect().toMap
+    assert(counts.keySet == ((0L until 64L) ++ (1000L until 1024L)).toSet)
+    assert(counts.values.forall(_ == 1L), s"ids stored twice: ${counts.filter(_._2 > 1)}")
+    assert(Layouts.incrementIds(spark, root + "/gen1") == Seq(5L))
+  }
+
+  test("a batch near-dup append whose fence meets a fold retries idempotently under its batch id") {
+    import spark.implicits._
+    val corpus = Seq((0L, "the quick brown fox jumps over the lazy dog again today"),
+      (1L, "completely unrelated corpus text about distributed query engines"))
+      .toDF("doc_id", "text")
+    val batch = Seq((10L, "a fresh batch document that matches nothing stored yet"),
+      (11L, "another new document about columnar storage and compaction"))
+      .toDF("doc_id", "text")
+    val root = java.nio.file.Files.createTempDirectory("graft_ndfence").toString
+    Dedup.writeNearDupIndex(corpus, "doc_id", "text", root + "/gen0")
+    Layouts.swapGenerationPointer(spark, root, "gen0")
+    // appendNearDupIndex's store write, with a fold in its fence window
+    val e = intercept[IllegalStateException] {
+      Layouts.openStore(spark, root).append("appendNearDupIndex", 3L,
+          () => Dedup.compactNearDupIndex(spark, root))(
+        Dedup.writeIncrement(batch, "doc_id", "text", _, 128, 32, 3))
+    }
+    assert(e.getMessage.startsWith("appendNearDupIndex") &&
+      e.getMessage.contains("moved off") && e.getMessage.contains("same batch id"),
+      e.getMessage)
+    Dedup.appendNearDupIndex(batch, "doc_id", "text", root, 3L)
+    assert(Layouts.currentGenerationName(spark, root) == "gen1")
+    // one (id, band) signature row per band per document, none twice
+    val perBand = indexRows(root + "/gen1", "id", "band").groupBy("id", "band")
+      .count().select("id", "count").as[(Long, Long)].collect()
+    assert(perBand.map(_._1).distinct.sorted.toSeq == Seq(0L, 1L, 10L, 11L))
+    assert(perBand.length == 4 * 32 && perBand.forall(_._2 == 1L),
+      s"signatures stored twice: ${perBand.filter(_._2 > 1).toSeq}")
+    assert(Layouts.incrementIds(spark, root + "/gen1") == Seq(3L))
   }
 
   test("a sidecar overwrite keeps the old sidecar until the new one is written") {
@@ -2789,8 +2851,8 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       Similarity.writeIvfPqPartitioned(corpus, "vec_id", "embedding",
         ivfCb, pqCb, base + s"/$tag/gen0")
     }
-    val rs = store("s").maintain(corpus, drifted, "embedding")
-    val rt = store("t").maintain(corpus, drifted, "embedding", trained = true)
+    val rs = store("s").maintain(corpus, drifted, "embedding", 0L)
+    val rt = store("t").maintain(corpus, drifted, "embedding", 0L, trained = true)
     assert(rs.action == "rebuild" && rt.action == "rebuild", s"$rs $rt")
     def codebooks(p: String, kind: String) = {
       val idx = AnnIndex.open(spark, p, "vec_id")
@@ -2813,8 +2875,8 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       Similarity.writeIvfPqResidualPartitioned(corpus, "vec_id", "embedding",
         ivfCb, rcb, base + s"/$tag/gen0")
     }
-    val rrs = store("rs").maintain(corpus, drifted, "embedding")
-    val rrt = store("rt").maintain(corpus, drifted, "embedding", trained = true)
+    val rrs = store("rs").maintain(corpus, drifted, "embedding", 0L)
+    val rrt = store("rt").maintain(corpus, drifted, "embedding", 0L, trained = true)
     assert(rrs.action == "rebuild" && rrt.action == "rebuild", s"$rrs $rrt")
     val (rsi, rsp) = codebooks(base + "/rs", "rpq")
     val (rti, rtp) = codebooks(base + "/rt", "rpq")
@@ -2851,7 +2913,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     Similarity.writeIvfPqResidualPartitioned(corpus, "vec_id", "embedding",
       ivfCb, rcb, base + "/rlayout")
     AnnIndex.open(spark, base + "/rlayout", "vec_id")
-      .appendIncrement(incr, "embedding", batchId = 0L)
+      .append(incr, "embedding", batchId = 0L)
     val rBatch = AnnIndex.open(spark, base + "/rlayout", "vec_id")
       .probe(qs, k = 7, nprobe = 3)
       .as[(Long, Long, Double)].collect().toSeq
@@ -2880,7 +2942,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     Similarity.writeIvfPqPartitioned(corpus, "vec_id", "embedding",
       ivfCb, pqCb, base + "/player")
     AnnIndex.open(spark, base + "/player", "vec_id")
-      .appendIncrement(incr, "embedding", batchId = 0L)
+      .append(incr, "embedding", batchId = 0L)
     val pBatch = AnnIndex.open(spark, base + "/player", "vec_id")
       .probe(qs, k = 7, nprobe = 3)
       .as[(Long, Long, Double)].collect().toSeq
@@ -2988,6 +3050,50 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       index.refine(q, k = 10, "embedding", shortlist = 5)
     }
     assert(e.getMessage.contains("shortlist"), e.getMessage)
+  }
+
+  test("refine reads what probe reads: a carried batch ranks, an increment without the vector refuses") {
+    import spark.implicits._
+    val emb = (0L until 200L).map(i =>
+      (i, Array.tabulate(16)(j => math.sin(i * 0.37 + j) + math.cos(i * 0.11 * j))))
+      .toDF("vec_id", "embedding")
+    val corpus = emb.where(col("vec_id") % 4 =!= 0)
+    val batch = emb.where(col("vec_id") % 4 === 0)
+    val ivfCb = Similarity.ivfCodebook(corpus, "vec_id", "embedding", nlist = 8)
+    val pqCb = Similarity.pqCodebooks(corpus, "vec_id", "embedding", m = 4, ks = 16)
+    val root = java.nio.file.Files.createTempDirectory("graft_refine_incr").toString
+    Similarity.writeIvfPqPartitioned(corpus, "vec_id", "embedding", ivfCb, pqCb,
+      root + "/gen0", keep = Seq("embedding"))
+    Layouts.swapGenerationPointer(spark, root, "gen0")
+    AnnIndex.open(spark, root, "vec_id").append(batch, "embedding", 0L,
+      keep = Seq("embedding"))
+    // the fold carries the (newest) batch as its own directory
+    AnnIndex.open(spark, root, "vec_id").compact()
+    assert(Layouts.incrementIds(spark, root + "/gen1") == Seq(0L))
+    // the query IS batch row 100: every cell probed and a shortlist
+    // covering every row make refine exact search over corpus ∪ batch
+    val q = emb.where(col("vec_id") === 100L).select("embedding")
+      .as[Array[Double]].head()
+    def refined() = AnnIndex.open(spark, root, "vec_id")
+      .refine(q, k = 10, "embedding", shortlist = 200, nprobe = 8)
+      .as[(Long, Double)].collect().toSeq
+    val truth = Similarity.cosineTopK(emb, "vec_id", "embedding", q, 10)
+      .as[(Long, Double)].collect().toSeq
+    assert(truth.head._1 == 100L)
+    assert(refined() == truth, s"${refined()} vs $truth")
+    // an increment appended without the vector has nothing to re-rank:
+    // curated refusal naming the directory; re-appending that batch
+    // under the same id with the vector kept repairs it
+    val more = (1000L until 1010L).map(i =>
+      (i, Array.tabulate(16)(j => math.cos(i * 0.5 + j)))).toDF("vec_id", "embedding")
+    AnnIndex.open(spark, root, "vec_id").append(more, "embedding", 1L)
+    val e = intercept[IllegalStateException](refined())
+    assert(e.getMessage.contains(Layouts.incrementDir(root + "/gen1", 1L)) &&
+      e.getMessage.contains("keep"), e.getMessage)
+    AnnIndex.open(spark, root, "vec_id").append(more, "embedding", 1L,
+      keep = Seq("embedding"))
+    assert(refined() == Similarity.cosineTopK(emb.unionByName(more), "vec_id",
+      "embedding", q, 10).as[(Long, Double)].collect().toSeq)
   }
 
   test("a fully-pruned drift series reads empty; prune composes into the rebuild; the root _temporary probe refuses") {

@@ -500,7 +500,7 @@ class PlanGuardSpec extends AnyFunSuite with BeforeAndAfterAll {
     Similarity.writeIvfPqPartitioned(corpus, "vec_id", "embedding", ivfCb, pqCb,
       out, keep = Seq("embedding"))
     Seq(0L -> (100 until 132), 1L -> (200 until 232)).foreach { case (b, r) =>
-      AnnIndex.open(spark, out, "vec_id").appendIncrement(vecs(r), "embedding", b,
+      AnnIndex.open(spark, out, "vec_id").append(vecs(r), "embedding", b,
         keep = Seq("embedding"))
     }
     val index = AnnIndex.open(spark, out, "vec_id")

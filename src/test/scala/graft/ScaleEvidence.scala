@@ -507,12 +507,12 @@ object ScaleEvidence {
     val index = AnnIndex.open(spark, root, "vec_id")
     // in-distribution batch: the steady-state path — no corpus read
     val tA = System.nanoTime()
-    val ra = index.maintain(corpus, vecsOf(batchN, 10000000L, 0.0), "embedding")
+    val ra = index.maintain(corpus, vecsOf(batchN, 10000000L, 0.0), "embedding", 0L)
     val appendSecs = (System.nanoTime() - tA) / 1e9
     require(ra.action == "append", s"in-distribution batch must append: $ra")
     // drifted batch: the retrain the drift signal demanded
     val tR = System.nanoTime()
-    val rb = index.maintain(corpus, vecsOf(batchN, 20000000L, 8.0), "embedding")
+    val rb = index.maintain(corpus, vecsOf(batchN, 20000000L, 8.0), "embedding", 1L)
     val rebuildSecs = (System.nanoTime() - tR) / 1e9
     require(rb.action == "rebuild", s"drifted batch must rebuild: $rb")
     val nFinal = spark.read.parquet(base.getAbsolutePath + "/gen1").count()
@@ -557,7 +557,7 @@ object ScaleEvidence {
     val index = AnnIndex.open(spark, base.getAbsolutePath, "vec_id")
     val batchN = math.max(64L, corpusN / 50)
     (0 until nBatches).foreach { b =>
-      index.appendIncrement(vecsOf(batchN, 10000000L + b * batchN),
+      index.append(vecsOf(batchN, 10000000L + b * batchN),
         "embedding", b.toLong)
     }
     val query = centers(5).map(_ + 0.001)

@@ -512,8 +512,8 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     Similarity.writeIvfPqPartitioned(corpus, "vec_id", "embedding",
       ivfCb, pqCb, base + "/par")
     val par = AnnIndex.open(spark, base + "/par", "vec_id")
-    par.append(vecs(10, 100L, 0.0).toDF("vec_id", "embedding"), "embedding")
-    par.append(vecs(10, 200L, 6.0).toDF("vec_id", "embedding"), "embedding")
+    par.append(vecs(10, 100L, 0.0).toDF("vec_id", "embedding"), "embedding", 0L)
+    par.append(vecs(10, 200L, 6.0).toDF("vec_id", "embedding"), "embedding", 1L)
     val viaBatchFace = annProbe(base + "/par", query, k = 8, nprobe = 4)
       .as[(Long, Double)].collect().toSeq
     assert(viaBatchFace == atRest, s"$viaBatchFace vs $atRest")
@@ -628,7 +628,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(e1.getMessage.contains(Layouts.QuiesceMarker), e1.getMessage)
     val e2 = intercept[IllegalStateException] {
       AnnIndex.open(spark, base + "/ann", "vec_id")
-        .append(batch, "embedding")
+        .append(batch, "embedding", 0L)
     }
     assert(e2.getMessage.contains(Layouts.QuiesceMarker), e2.getMessage)
     // a second compaction cannot take a held marker (no double-fold)
@@ -677,7 +677,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
     assert(e4.getMessage.contains(Layouts.QuiesceMarker), e4.getMessage)
     val e5 = intercept[IllegalStateException] {
-      Dedup.appendNearDupIndex(db, "doc_id", "text", base + "/idx")
+      Dedup.appendNearDupIndex(db, "doc_id", "text", base + "/idx", 7L)
     }
     assert(e5.getMessage.contains(Layouts.QuiesceMarker), e5.getMessage)
     Layouts.releaseQuiesce(spark, base + "/idx/gen0")
