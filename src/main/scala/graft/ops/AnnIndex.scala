@@ -4,6 +4,7 @@ import graft.functions.GraftFunctions
 import graft.ops.Similarity.{IvfCodebook, PqCodebooks}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.FooterSchema
 
 /** One IVF-PQ at-rest index — the long-lived handle every at-rest
   * probe and every lifecycle step goes through ("Continuously Adaptive
@@ -91,7 +92,7 @@ final class AnnIndex private (spark: SparkSession,
         (qid, Similarity.ivfProbed(ivf, q, nprobe),
           GraftFunctions.pq_adc(col(Code), Similarity.pqAdcTable(pq, q)))
     }
-    val base = spark.read.parquet(layout)
+    val base = FooterSchema.read(spark, layout)
     // a filter may name any kept metadata column, so it carries them
     // all through the union; unfiltered probes read codes only
     val cols = if (filter.isEmpty) Seq(idCol, Cell, Code) else base.columns.toSeq
@@ -157,17 +158,13 @@ final class AnnIndex private (spark: SparkSession,
       throw new IllegalStateException(
         s"refine re-ranks raw-PQ ('pq') shortlists; the layout at $layout " +
           "holds RESIDUAL ('rpq') codes — rank it with probe")
-    Layouts.incrementDirs(spark, layout, _ => true)
-      .find(!Layouts.dataColumns(spark, _).contains(vecCol))
-      .foreach(d => throw new IllegalStateException(s"refine: the increment " +
-        s"$d was appended without '$vecCol' in keep — re-append that batch " +
-        s"under the same batch id with keep = Seq(\"$vecCol\")"))
+    // built first: an increment without `vecCol` refuses before the probe runs
+    val rows = Layouts.withIncrements(spark, FooterSchema.read(spark, layout), layout,
+      Seq(idCol, Cell, vecCol), None)
     val ids = probe(Seq(0L -> query), shortlist, nprobe).select(idCol)
       .collect().map(_.get(0))
-    Layouts.withIncrements(spark, spark.read.parquet(layout), layout,
-        Seq(idCol, Cell, vecCol), None)
-      .where(col(Cell).isin(Similarity.ivfProbed(ivf, query, nprobe): _*) &&
-        col(idCol).isin(ids: _*))
+    rows.where(col(Cell).isin(Similarity.ivfProbed(ivf, query, nprobe): _*) &&
+      col(idCol).isin(ids: _*))
       .select(col(idCol), round(Similarity.cosineTo(col(vecCol), query), 6).as("cos"))
       .orderBy(col("cos").desc, col(idCol))
       .limit(k)
@@ -407,14 +404,14 @@ final class AnnIndex private (spark: SparkSession,
       private def retire(rows: DataFrame) =
         Layouts.dropTombstones(rows, dropIds, idCol, "compact")
       def writeFolded(src: String, folded: Long => Boolean, dst: String): Unit = {
-        val base = spark.read.parquet(src)
+        val base = FooterSchema.read(spark, src)
         val rows = retire(Layouts.withIncrementsWhere(spark, base, src,
           base.columns.toIndexedSeq, folded))
         Similarity.writeIvfPqCodebooks(spark, dst, ivf, pq, kind)
         Similarity.writeCoded(rows.repartition(col(Cell)), "append", dst)
       }
       def carry(src: String, dst: String): Unit =
-        Similarity.writeCoded(retire(spark.read.parquet(src)), "overwrite", dst)
+        Similarity.writeCoded(retire(FooterSchema.read(spark, src)), "overwrite", dst)
     })
 }
 

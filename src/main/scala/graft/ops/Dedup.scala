@@ -3,6 +3,7 @@ package graft.ops
 import graft.functions.GraftFunctions
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.FooterSchema
 
 /** Deduplication operators for large-scale corpus curation.
   *
@@ -348,7 +349,7 @@ object Dedup {
   def nearDupIndexWithIncrements(spark: org.apache.spark.sql.SparkSession,
       indexPath: String, excludeBatchId: Option[Long] = None): DataFrame = {
     val layout = Similarity.resolveLayout(spark, indexPath)
-    Layouts.withIncrements(spark, spark.read.parquet(layout), layout,
+    Layouts.withIncrements(spark, FooterSchema.read(spark, layout), layout,
       Seq("id", "band", "key"), excludeBatchId)
   }
 
@@ -375,7 +376,7 @@ object Dedup {
         Layouts.dropTombstones(rows, dropIds, "id", "compactNearDupIndex")
       def writeFolded(src: String, folded: Long => Boolean, dst: String): Unit = {
         val rows = retire(Layouts.withIncrementsWhere(spark,
-          spark.read.parquet(src), src, Seq("id", "band", "key"), folded))
+          FooterSchema.read(spark, src), src, Seq("id", "band", "key"), folded))
         // meta FIRST: a failure in the (much larger) data rewrite
         // leaves a meta-only generation — detectable — instead of a
         // data-only one that masquerades as a legitimate pre-meta layout
@@ -387,7 +388,7 @@ object Dedup {
           .write.mode("append").partitionBy("band").parquet(dst)
       }
       def carry(src: String, dst: String): Unit =
-        retire(spark.read.parquet(src)).write.mode("overwrite").parquet(dst)
+        retire(FooterSchema.read(spark, src)).write.mode("overwrite").parquet(dst)
     })
 
   /** Near-dup detection of a NEW batch against a corpus indexed at

@@ -1,6 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.graft.FooterSchema
 
 /** The storage every at-rest index sits on: increments, the quiesce
   * marker, the generation pointer, and the [[GenerationStore]] that
@@ -49,9 +50,16 @@ private[graft] object Layouts {
   /** [[withIncrements]] with an arbitrary batch-id predicate — the one
     * increment-listing discipline (name filter, explicit paths, the
     * basePath anchor) shared by every reader: the own-batch exclusion
-    * above, and the Bloom gate's STRICTER `id < b` history rule
-    * ([[Bloom.readBloomIndex]]). A directory that holds no data file
-    * ([[incrementDirs]]) is skipped.
+    * above, and the fold's `folded` rule ([[GenerationStore.fold]]). A
+    * directory that holds no data file is skipped: a zero-row
+    * `partitionBy` write leaves none.
+    *
+    * Every kept increment's own footer is read (driver-side, no Spark
+    * job), so an increment that lacks a data column of `cols` — a batch
+    * appended without a column in its `keep` — is refused naming its
+    * directory. One schema read for all of them would surface its rows
+    * with nulls there, and a filter on that column would drop them
+    * silently.
     */
   def withIncrementsWhere(spark: SparkSession,
       base: org.apache.spark.sql.DataFrame,
@@ -59,57 +67,38 @@ private[graft] object Layouts {
       keepBatch: Long => Boolean): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.functions.col
     val projected = base.select(cols.map(col): _*)
-    val dirs = incrementDirs(spark, path, keepBatch)
-    if (dirs.isEmpty) projected
+    val root = s"$path/$IncrementsDir"
+    val incs = incrementIds(spark, path).filter(keepBatch).flatMap { id =>
+      val dir = incrementDir(path, id)
+      FooterSchema.dataFile(spark, dir).map { f =>
+        val schema = FooterSchema.ofFile(spark, f)
+        // partition columns: ingest_batch, and every name=value
+        // directory between the increment and its data file (the ANN cell)
+        val own = new org.apache.hadoop.fs.Path(dir).getName
+        val parts = "ingest_batch" +: Iterator.iterate(f.getParent)(_.getParent)
+          .takeWhile(_.getName != own).map(_.getName.takeWhile(_ != '=')).toSeq
+        val missing = cols.filterNot(c => schema.fieldNames.contains(c) || parts.contains(c))
+        if (missing.nonEmpty)
+          throw new IllegalStateException(s"the increment $dir lacks " +
+            s"${missing.mkString("'", "', '", "'")}: its batch was appended " +
+            "without them in keep — re-append that batch under the same " +
+            s"batch id with keep = Seq(${missing.map("\"" + _ + "\"").mkString(", ")})")
+        (dir, schema)
+      }
+    }
+    if (incs.isEmpty) projected
     else projected.unionByName(
       // basePath anchors partition inference at the _increments root:
       // without it, increments whose INSIDES are partitioned (the ANN
       // layout's cell=... dirs) make multi-directory discovery fail
       // with CONFLICTING_DIRECTORY_STRUCTURES; with it, the reader
       // surfaces ingest_batch (and any inner partition column) and
-      // the projection drops what the caller didn't ask for
-      spark.read.option("basePath", s"$path/$IncrementsDir")
-        .parquet(dirs: _*)
+      // the projection drops what the caller didn't ask for. Every
+      // increment holds `cols`, so the first one's schema reads them all
+      spark.read.option("basePath", root).schema(incs.head._2)
+        .parquet(incs.map(_._1): _*)
         .select(cols.map(col): _*))
   }
-
-  /** The committed increment directories of the layout at `path` whose
-    * batch id `keepBatch` keeps, ascending. A directory that holds no
-    * data file ([[dataFile]]) is skipped: a zero-row `partitionBy`
-    * write leaves none, and no read can infer a schema from it.
-    */
-  def incrementDirs(spark: SparkSession, path: String,
-      keepBatch: Long => Boolean): Seq[String] =
-    incrementIds(spark, path).filter(keepBatch)
-      .map(incrementDir(path, _)).filter(dataFile(spark, _).isDefined)
-
-  /** The first file under `dir` outside Spark's hidden `_`/`.` names
-    * (`_SUCCESS`, `_temporary` staging), if any.
-    */
-  private def dataFile(spark: SparkSession,
-      dir: String): Option[org.apache.hadoop.fs.Path] = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val below = fs.makeQualified(p).toUri.getPath.length
-    val files = fs.listFiles(p, true)
-    Iterator.continually(files).takeWhile(_.hasNext).map(_.next().getPath)
-      .find(_.toUri.getPath.substring(below).split('/')
-        .forall(c => !c.startsWith("_") && !c.startsWith(".")))
-  }
-
-  /** The data columns of the parquet rows under `dir`, from one data
-    * file's footer — driver-side, no Spark job. One write produces the
-    * whole directory, so one footer speaks for it. Empty when `dir`
-    * holds no data file.
-    */
-  def dataColumns(spark: SparkSession, dir: String): Seq[String] =
-    dataFile(spark, dir).toSeq.flatMap { f =>
-      import scala.jdk.CollectionConverters._
-      val footer = org.apache.parquet.hadoop.ParquetFileReader.open(org.apache
-        .parquet.hadoop.util.HadoopInputFile.fromPath(f, spark.sparkContext.hadoopConfiguration))
-      try footer.getFileMetaData.getSchema.getFields.asScala.map(_.getName)
-      finally footer.close()
-    }
 
   /** The increment directory a batch OWNS (and overwrites wholesale on
     * a retry — the idempotence that makes a replay converge).
@@ -326,14 +315,21 @@ private[graft] object Layouts {
       * Caller contract: batch ids share the index's stream id space and
       * increase, one batch in flight at a time; an id is reused only to
       * retry that batch (a stream's checkpoint replay, or a batch
-      * caller's rerun on a reopened handle). `beforeFence` is the seam
-      * a spec pins the race with.
+      * caller's rerun on a reopened handle). An id below this
+      * generation's newest increment is refused before anything is
+      * written: its directory belongs to a committed batch, and writing
+      * a different batch there would replace that batch's rows.
+      * `beforeFence` is the seam a spec pins the race with.
       */
     def append[T](face: String, batchId: Long,
         beforeFence: () => Unit = () => ())(write: String => T): T = {
       hazard().foreach(c => throw new IllegalStateException(s"$face: $c — nothing " +
         "was written; retry after the compaction (releaseQuiesce clears a " +
         "crashed one's marker) or on a reopened index"))
+      incrementIds(spark, layout).lastOption.filter(batchId < _).foreach(n =>
+        throw new IllegalArgumentException(s"$face: batch id $batchId is below " +
+          s"$n, the newest increment of $layout — batch ids increase, and an " +
+          "id is reused only to retry the newest batch; nothing was written"))
       val out = write(incrementDir(layout, batchId))
       beforeFence()
       hazard().foreach(c => throw new IllegalStateException(s"$face: $c while " +
@@ -376,7 +372,7 @@ private[graft] object Layouts {
         val newest = incrementIds(spark, layout).lastOption
         delete(spark, dst)
         codec.writeFolded(layout, id => !newest.contains(id), dst)
-        newest.filter(b => dataFile(spark, incrementDir(layout, b)).isDefined)
+        newest.filter(b => FooterSchema.dataFile(spark, incrementDir(layout, b)).isDefined)
           .foreach(b => codec.carry(incrementDir(layout, b), incrementDir(dst, b)))
         dst
       }

@@ -3,6 +3,7 @@ package graft.ops
 import graft.functions.GraftFunctions
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.FooterSchema
 
 /** Similarity search over embedding columns (`array<float>`).
   *
@@ -344,7 +345,7 @@ object Similarity {
       idCol: String, vecCol: String, codebook: IvfCodebook,
       query: Array[Double], k: Int, nprobe: Int = 4): DataFrame = {
     val probed = ivfProbed(codebook, query, nprobe)
-    spark.read.parquet(path)
+    FooterSchema.read(spark, path)
       .where(col(AnnIndex.Cell).isin(probed: _*))
       .select(col(idCol), round(cosineTo(col(vecCol), query), 6).as("cos"))
       .orderBy(col("cos").desc, col(idCol))
@@ -923,7 +924,7 @@ object Similarity {
           org.apache.spark.sql.types.StructField("pq_err",
             org.apache.spark.sql.types.DoubleType))))
     val raw =
-      try spark.read.option("basePath", driftOut).parquet(driftOut)
+      try FooterSchema.read(spark, driftOut)
         .select(col("ingest_batch").cast("long").as("ingest_batch"),
           col("pq_err"))
       catch {

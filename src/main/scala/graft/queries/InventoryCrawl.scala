@@ -7,6 +7,7 @@ import graft.ops.{Dedup, MultiModal, Packing, Quality, Sampling, Similarity}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.FooterSchema
 import org.apache.spark.sql.types.DecimalType
 
 import scala.collection.immutable.ListMap
@@ -957,7 +958,7 @@ private[queries] trait InventoryCrawl extends InventoryMedia {
       java.lang.Integer.toHexString(d.hashCode)).getAbsolutePath
     rows.repartition(col("shard")).sortWithinPartitions(col("cdx_key"))
       .write.partitionBy("shard").mode("overwrite").parquet(out)
-    s.read.parquet(out)
+    FooterSchema.read(s, out)
       .where(col("shard") === "com,example,s3" &&
         col("cdx_key").startsWith("com,example,s3)/a1"))
       .groupBy(col("cdx_key"))

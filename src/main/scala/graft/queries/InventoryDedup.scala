@@ -7,6 +7,7 @@ import graft.ops.{Dedup, MultiModal, Packing, Quality, Sampling, Similarity}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.FooterSchema
 import org.apache.spark.sql.types.DecimalType
 
 import scala.collection.immutable.ListMap
@@ -203,7 +204,7 @@ private[queries] trait InventoryDedup extends InventorySources {
       base + "/index", "text", base + "/admitted")
     graft.streaming.StreamingBloomGate.ingestBatch(b1, 1L,
       base + "/index", "text", base + "/admitted")
-    s.read.parquet(base + "/admitted")
+    FooterSchema.read(s, base + "/admitted")
       .select(col("ingest_batch").cast("long").as("ingest_batch"),
         col("doc_id"))
       .orderBy(col("ingest_batch"), col("doc_id"))

@@ -7,6 +7,7 @@ import graft.ops.{Dedup, MultiModal, Packing, Quality, Sampling, Similarity}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.FooterSchema
 import org.apache.spark.sql.types.DecimalType
 
 import scala.collection.immutable.ListMap
@@ -28,7 +29,7 @@ private[queries] trait InventoryShared {
       // (see graft.sources.EventsTable)
       graft.sources.EventsTable.read(spark, s"$dir/$name.parquet")
     } else {
-      spark.read.parquet(s"$dir/$name.parquet")
+      FooterSchema.read(spark, s"$dir/$name.parquet")
     }
 
 

@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.FooterSchema
 import org.apache.spark.sql.types._
 
 /** Schema-adaptive ingestion for the driver's `events` table.
@@ -22,15 +23,15 @@ object EventsTable {
 
   private val NanosConf = "spark.sql.legacy.parquet.nanosAsLong"
 
-  /** Footer schema, sniffed with nanosAsLong enabled so a
-    * TIMESTAMP(NANOS) footer infers `ts` as LongType instead of
-    * throwing at inference. The previous conf value is restored unless
-    * the footer really is int64-nanos: in that one case the conf must
-    * stay enabled because the physical reader consults it again at
-    * execution time (the DataFrame is lazy) and Spark 4.1 exposes no
-    * per-read ParquetOptions equivalent. Micros files — the common
-    * case — therefore no longer leak the session-global shim into
-    * unrelated parquet reads.
+  /** Footer schema, read driver-side ([[FooterSchema]], no Spark job)
+    * with nanosAsLong enabled so a TIMESTAMP(NANOS) footer converts
+    * `ts` to LongType instead of throwing. The previous conf value is
+    * restored unless the footer really is int64-nanos: in that one
+    * case the conf must stay enabled because the physical reader
+    * consults it again at execution time (the DataFrame is lazy) and
+    * Spark 4.1 exposes no per-read ParquetOptions equivalent. Micros
+    * files — the common case — therefore no longer leak the
+    * session-global shim into unrelated parquet reads.
     */
   def sniffSchema(s: SparkSession, path: String): StructType = {
     val prev = s.conf.getOption(NanosConf)
@@ -40,7 +41,7 @@ object EventsTable {
     }
     s.conf.set(NanosConf, "true")
     val schema =
-      try s.read.parquet(path).schema
+      try FooterSchema.schema(s, path)
       catch { case t: Throwable => restore(); throw t }
     if (!schema.fields.exists(f => f.name == "ts" && f.dataType == LongType)) restore()
     schema
@@ -59,11 +60,12 @@ object EventsTable {
     case _ => df // already TimestampType
   }
 
-  /** Batch read with `ts` normalized to TimestampType micros. */
-  def read(s: SparkSession, path: String): DataFrame = {
-    sniffSchema(s, path) // enables the nanos conf before the real read
-    normalizeTs(s.read.parquet(path))
-  }
+  /** Batch read with `ts` normalized to TimestampType micros, under the
+    * sniffed schema (the sniff also enables the nanos conf the read
+    * needs).
+    */
+  def read(s: SparkSession, path: String): DataFrame =
+    normalizeTs(s.read.schema(sniffSchema(s, path)).parquet(path))
 
   /** Streaming file source over a directory of events parquet, schema
     * derived from the first file's footer (file stream sources don't

@@ -3,6 +3,7 @@ package graft.streaming
 import graft.ops.{Dedup, Layouts}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.FooterSchema
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 
 /** The daily-ingest near-dup loop AS A STREAM: each micro-batch of
@@ -103,7 +104,7 @@ object StreamingDedup {
       val history = Dedup.nearDupIndexWithIncrements(spark, store.layout,
         excludeBatchId = Some(batchId))
       val corpus = Layouts.withIncrements(spark,
-        spark.read.parquet(corpusPath), corpusPath, Seq(idCol, textCol),
+        FooterSchema.read(spark, corpusPath), corpusPath, Seq(idCol, textCol),
         excludeBatchId = Some(batchId))
       val verdicts = Dedup.incrementalNearDupAgainst(history, corpus, b,
         idCol, textCol, threshold, numHashes, bands, shingleWidth,

@@ -102,16 +102,14 @@ object SidecarIO {
     * [[Row]]s (the `spark.read.parquet(parts).collect()` result shape,
     * including each Row's schema) — no Spark job. The sidecar read is
     * one KB-sized file; a job per read was scheduler tax exactly like
-    * the write side. Schema comes from the first file's Spark metadata
-    * footer (every Spark- or [[writeParquetDir]]-written file carries
-    * it); files without it fall back to the parquet schema converter.
+    * the write side. Each file's schema is its footer's
+    * ([[FooterSchema.ofFile]]).
     */
   def readParquetParts(spark: SparkSession, parts: Seq[String]): Array[Row] = {
-    import org.apache.spark.sql.execution.datasources.parquet.{ParquetReadSupport, ParquetToSparkSchemaConverter}
+    import org.apache.spark.sql.execution.datasources.parquet.ParquetReadSupport
     val conf = new Configuration(spark.sparkContext.hadoopConfiguration)
-    // the conf entries ParquetToSparkSchemaConverter's Configuration
-    // constructor `.toBoolean`s (the scan builder sets these; defaults
-    // per SQLConf)
+    // the conf entries ParquetReadSupport's schema converter
+    // `.toBoolean`s (the scan builder sets these; defaults per SQLConf)
     conf.set(SQLConf.CASE_SENSITIVE.key, "false")
     conf.set(SQLConf.PARQUET_BINARY_AS_STRING.key, "false")
     conf.set(SQLConf.PARQUET_INT96_AS_TIMESTAMP.key, "true")
@@ -124,15 +122,7 @@ object SidecarIO {
     val out = Array.newBuilder[Row]
     parts.foreach { part =>
       val p = new Path(part)
-      val inFile = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf)
-      val footer = org.apache.parquet.hadoop.ParquetFileReader
-        .open(inFile).use(_.getFooter)
-      val meta = footer.getFileMetaData
-      val schema: StructType =
-        Option(meta.getKeyValueMetaData.get(ParquetReadSupport.SPARK_METADATA_KEY))
-          .map(s => StructType.fromString(s).asInstanceOf[StructType])
-          .getOrElse(new ParquetToSparkSchemaConverter(conf)
-            .convert(meta.getSchema))
+      val schema = FooterSchema.ofFile(spark, p)
       val fileConf = new Configuration(conf)
       fileConf.set(ParquetReadSupport.SPARK_ROW_REQUESTED_SCHEMA, schema.json)
       val toScala = CatalystTypeConverters.createToScalaConverter(schema)
@@ -149,9 +139,5 @@ object SidecarIO {
       } finally reader.close()
     }
     out.result()
-  }
-
-  private implicit class Closing[A <: AutoCloseable](private val a: A) {
-    def use[B](f: A => B): B = try f(a) finally a.close()
   }
 }

@@ -1,5 +1,6 @@
 package graft
 
+import graft.ops.Layouts
 import graft.sources.EventsTable
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
@@ -93,6 +94,104 @@ class EventsTableSpec extends AnyFunSuite with BeforeAndAfterAll {
         assert(got == ref, s"$q differs between micros and $layout layouts")
       }
     }
+  }
+
+  /** `body`'s result and the Spark jobs started while it ran. Job
+    * starts reach listeners asynchronously but in order, so a sentinel
+    * job run after `body` fences the count.
+    */
+  private def jobsDuring[T](body: => T): (T, Int) = {
+    val sentinel = "graft-jobs-sentinel"
+    val started = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        started.add(Option(j.properties).flatMap(p =>
+          Option(p.getProperty("spark.job.description"))).getOrElse(""))
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(l)
+    try {
+      val out = body
+      sc.setJobDescription(sentinel)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+      while (!started.contains(sentinel) && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(started.contains(sentinel), "the sentinel job never reached the listener")
+      (out, started.toArray.count(_ != sentinel))
+    } finally sc.removeSparkListener(l)
+  }
+
+  test("FooterSchema opens tables and layouts with no Spark job and the inferred schema") {
+    import org.apache.spark.sql.graft.FooterSchema
+    import spark.implicits._
+    val nanosConf = "spark.sql.legacy.parquet.nanosAsLong"
+    spark.conf.unset(nanosConf)
+    def same(path: String): Unit = {
+      val (df, jobs) = jobsDuring(FooterSchema.read(spark, path))
+      assert(jobs == 0, s"$path: $jobs jobs")
+      assert(df.schema == spark.read.parquet(path).schema, path)
+    }
+    // the bundled tables, one file each
+    val bundled = new java.io.File("perfbench/data/sf0.01")
+    val tables = bundled.listFiles()
+      .filter(_.getName.endsWith(".parquet")).map(_.getAbsolutePath).sorted
+    assert(tables.length >= 10)
+    tables.foreach(same(_))
+    // a directory written by Spark: several parts, _SUCCESS, .crc files
+    val dirTable = new java.io.File(tmp("graft_fs_dir"), "t").getAbsolutePath
+    spark.range(40).selectExpr("id", "cast(id as string) as s", "id * 0.5 as d")
+      .repartition(3).write.parquet(dirTable)
+    same(dirTable)
+    assert(FooterSchema.of(spark, dirTable + "/absent").isEmpty)
+
+    // the events layouts: the sniff leaves nanosAsLong on only for
+    // int64 nanos, and its schema is what inference gives under it
+    val events = tmp("graft_fs_events")
+    val canonical = spark.read.parquet(new java.io.File(bundled, "events.parquet").getPath)
+      .withColumn("ts", timestamp_millis(unix_millis(col("ts").cast(TimestampType))))
+    def layout(name: String) = new java.io.File(events, name).getAbsolutePath
+    canonical.write.parquet(layout("micros"))
+    canonical.withColumn("ts", unix_micros(col("ts")) * 1000).write.parquet(layout("int64"))
+    val outTypeConf = "spark.sql.parquet.outputTimestampType"
+    spark.conf.set(outTypeConf, "TIMESTAMP_MILLIS")
+    try canonical.write.parquet(layout("millis"))
+    finally spark.conf.unset(outTypeConf)
+    for (name <- Seq("micros", "millis", "int64")) {
+      spark.conf.unset(nanosConf)
+      val (df, jobs) = jobsDuring(EventsTable.read(spark, layout(name)))
+      assert(jobs == 0, s"$name: $jobs jobs")
+      assert(EventsTable.sniffSchema(spark, layout(name)) ==
+        spark.read.parquet(layout(name)).schema, name)
+      assert(df.schema("ts").dataType == TimestampType, name)
+      if (name != "int64")
+        assert(spark.conf.get(nanosConf, "false") != "true",
+          s"sniffSchema leaked nanosAsLong=true after a $name read")
+    }
+    spark.conf.unset(nanosConf)
+
+    // a partitionBy(cell) layout with per-batch increments, partitioned
+    // inside: the base, one increment, and the basePath read over them
+    val root = new java.io.File(tmp("graft_fs_cells"), "gen0").getAbsolutePath
+    def rows(from: Long) = (from until from + 30L).map(i => (i, (i % 4).toInt, i * 1.5))
+      .toDF("id", "cell", "v")
+    rows(0L).write.partitionBy("cell").parquet(root)
+    rows(100L).write.partitionBy("cell").parquet(Layouts.incrementDir(root, 0L))
+    rows(200L).write.partitionBy("cell").parquet(Layouts.incrementDir(root, 1L))
+    same(root)
+    same(Layouts.incrementDir(root, 1L))
+    val incs = s"$root/${Layouts.IncrementsDir}"
+    val (all, jobs) = jobsDuring(Layouts.withIncrements(spark,
+      FooterSchema.read(spark, root), root, Seq("id", "cell", "v"), None))
+    assert(jobs == 0, s"base ∪ increments: $jobs jobs")
+    val inferred = spark.read.option("basePath", incs)
+      .parquet(Layouts.incrementDir(root, 0L), Layouts.incrementDir(root, 1L))
+    assert(spark.read.option("basePath", incs)
+      .schema(FooterSchema.of(spark, Layouts.incrementDir(root, 0L)).get)
+      .parquet(Layouts.incrementDir(root, 0L), Layouts.incrementDir(root, 1L))
+      .schema == inferred.schema)
+    assert(all.as[(Long, Int, Double)].collect().sorted.toSeq ==
+      (rows(0L).union(rows(100L)).union(rows(200L))).as[(Long, Int, Double)]
+        .collect().sorted.toSeq)
   }
 
   test("streaming source adapts the layout and restarts from its checkpoint") {

@@ -2233,13 +2233,13 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       sample(24, 0.0, 1000L), sample(24, 0.0, 2000L),   // in-distribution
       sample(24, 25.0, 3000L), sample(24, 25.0, 4000L)) // drifted
       .map(_.toDF("vec_id", "embedding"))
-    def ingest(upTo: Int): Unit = (0 until upTo).foreach { i =>
+    def ingest(ids: Range): Unit = ids.foreach { i =>
       StreamingSimilarity.ingestBatch(batches(i), i.toLong, base,
         "vec_id", "embedding", Some(base + "/drift"))
     }
     // an in-distribution prefix (shorter than 2 windows) KEEPS — the
     // monitor never compares a series against itself
-    ingest(2)
+    ingest(0 until 2)
     val allSoFar = corpus.unionByName(batches(0)).unionByName(batches(1))
     val r1 = monitor(base + "/drift", base, allSoFar)
     assert(r1.action == "keep", s"$r1")
@@ -2248,7 +2248,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(!new java.io.File(base + "/gen1").exists(),
       "keep must not write the rebuild target")
     // the full drifted series REBUILDS: trailing median >> baseline
-    ingest(4)
+    ingest(2 until 4)
     val series = Similarity.readDriftSeries(spark, base + "/drift")
       .as[(Long, Double)].collect().toSeq
     assert(series.map(_._1) == Seq(0L, 1L, 2L, 3L), s"$series")
@@ -2805,6 +2805,59 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(perBand.length == 4 * 32 && perBand.forall(_._2 == 1L),
       s"signatures stored twice: ${perBand.filter(_._2 > 1).toSeq}")
     assert(Layouts.incrementIds(spark, root + "/gen1") == Seq(3L))
+  }
+
+  // a keep = Seq("grp") IVF-PQ root over ids 0-79 (grp = id % 3) and
+  // the batches (grp kept) the two tests below append to it
+  private def grpIndex(prefix: String, seed: Int) = {
+    import spark.implicits._
+    val rnd = new scala.util.Random(seed)
+    def sample(n: Int, base: Long) = clusterSample(rnd, 16)(n, 0.0, base)
+      .map { case (id, v) => (id, v, (id % 3).toInt) }.toDF("vec_id", "embedding", "grp")
+    val corpus = sample(80, 0L)
+    val ivfCb = Similarity.ivfCodebook(corpus, "vec_id", "embedding", nlist = 4)
+    val pqCb = Similarity.pqCodebooks(corpus, "vec_id", "embedding", m = 4, ks = 16)
+    val root = java.nio.file.Files.createTempDirectory(prefix).toString
+    Similarity.writeIvfPqPartitioned(corpus, "vec_id", "embedding",
+      ivfCb, pqCb, root + "/gen0", keep = Seq("grp"))
+    Layouts.swapGenerationPointer(spark, root, "gen0")
+    (root, sample _)
+  }
+
+  test("a filtered probe refuses an increment appended without a column it reads") {
+    import spark.implicits._
+    val (root, sample) = grpIndex("graft_keepcheck", 71)
+    val b1 = sample(20, 100L)
+    def idx() = AnnIndex.open(spark, root, "vec_id")
+    idx().append(sample(20, 80L), "embedding", 0L, keep = Seq("grp"))
+    idx().append(b1, "embedding", 1L)
+    // every cell probed, k past the row count: the filter alone decides
+    def probed() = idx().probe(Seq(0L -> Array.fill(16)(1.0)), k = 200, nprobe = 4,
+      filter = Some(col("grp") === 1)).select("vec_id").as[Long].collect().toSet
+    val e = intercept[IllegalStateException](probed())
+    assert(e.getMessage.contains(Layouts.incrementDir(root + "/gen0", 1L)) &&
+      e.getMessage.contains("'grp'") && e.getMessage.contains("keep"), e.getMessage)
+    // re-appending the batch under its id with the column kept repairs it
+    idx().append(b1, "embedding", 1L, keep = Seq("grp"))
+    assert(probed() == (0L until 120L).filter(_ % 3 == 1).toSet)
+  }
+
+  test("an append under a batch id below the newest increment refuses before writing") {
+    import spark.implicits._
+    val (root, sample) = grpIndex("graft_oldid", 73)
+    def idx() = AnnIndex.open(spark, root, "vec_id")
+    val b1 = sample(20, 100L)
+    idx().append(sample(20, 80L), "embedding", 0L)
+    idx().append(b1, "embedding", 1L)
+    val e = intercept[IllegalArgumentException](
+      idx().append(sample(20, 120L), "embedding", 0L))
+    assert(e.getMessage.startsWith("append: batch id 0 is below 1") &&
+      e.getMessage.contains("nothing was written"), e.getMessage)
+    def ids() = indexRows(root + "/gen0", "vec_id").as[Long].collect().sorted.toSeq
+    assert(ids() == (0L until 120L))
+    // the newest id is a retry, and stays allowed
+    idx().append(b1, "embedding", 1L)
+    assert(ids() == (0L until 120L))
   }
 
   test("a sidecar overwrite keeps the old sidecar until the new one is written") {

@@ -524,10 +524,11 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
       .collect().toMap
     assert(drift.keySet == Set(0L, 1L), s"$drift")
     assert(drift(1L) > drift(0L) * 1.5, s"$drift")
-    // crash-replay converges: re-running a committed batch id rewrites
-    // its directory wholesale — no duplicated code rows, same probe
+    // crash-replay converges: re-running the newest batch (the only one
+    // a checkpoint can replay) rewrites its directory wholesale — no
+    // duplicated code rows, same probe
     StreamingSimilarity.ingestBatch(
-      vecs(10, 100L, 0.0).toDF("vec_id", "embedding"), 0L,
+      vecs(10, 200L, 6.0).toDF("vec_id", "embedding"), 1L,
       root, "vec_id", "embedding", Some(base + "/drift"))
     val again = annProbe(root, query, k = 8, nprobe = 4)
       .as[(Long, Double)].collect().toSeq
@@ -928,11 +929,12 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
       .select(col("ingest_batch").cast("long"), col("doc_id"))
       .as[(Long, Long)].collect().toSet
     assert(admitted == Set((0L, 101L), (1L, 201L)), s"$admitted")
-    // crash-replay converges: re-running batch 0 judges against the
-    // history its FIRST attempt saw (own increment excluded), so the
-    // novel doc is admitted again, not dropped by its own bits
+    // crash-replay converges: re-running the newest batch (the only one
+    // a checkpoint can replay) judges against the history its FIRST
+    // attempt saw (own increment excluded), so its novel doc is admitted
+    // again, not dropped by its own bits
     StreamingBloomGate.ingestBatch(
-      Seq(100L -> "alpha", 101L -> "delta").toDF("doc_id", "text"), 0L,
+      Seq(200L -> "delta", 201L -> "epsilon").toDF("doc_id", "text"), 1L,
       base + "/index", "text", base + "/admitted")
     val replayed = spark.read.parquet(base + "/admitted")
       .select(col("ingest_batch").cast("long"), col("doc_id"))

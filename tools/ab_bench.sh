@@ -11,10 +11,18 @@
 # own checkout (the first run of a side pays the sbt build).
 #
 # Prints, per end-to-end metric of BENCHMARK.json: each side's median
-# and quartiles, the number of pairs the head won, and the median of the
-# paired head/base ratios. A gain is worth claiming when the head wins
-# nearly every pair and the medians differ by more than the base's
-# interquartile range. Raw results stay in <scratch>/results.jsonl.
+# and quartiles, the number of pairs the head won, the median of the
+# paired head/base ratios, and a verdict:
+#   gain        the head won at least 9 of 10 pairs (ties count for
+#               neither side) and its median is better by more than the
+#               base's interquartile range (IQR);
+#   regression  the head's median is worse by more than the metric's
+#               relative `bound` in the head's BENCHMARK.json;
+#   unresolved  neither, and the base's IQR is wider than the bound
+#               (relative to its median), unless every head run beat
+#               every base run;
+#   level       otherwise.
+# Raw results stay in <scratch>/results.jsonl.
 #
 # Run from inside a git checkout of graft; pairs defaults to 10. To
 # measure uncommitted work, pass `$(git stash create)` as the head
@@ -83,8 +91,24 @@ def quartiles(xs):
     return q[0], statistics.median(xs), q[2]
 
 
-print("%-12s %-28s %-28s %-10s %s" % ("metric", "base q1 / median / q3", "head q1 / median / q3",
-                                      "head won", "median head/base"))
+def verdict(both, bq, hq, lower, bound):
+    # "better" as a signed improvement of the head over the base
+    gain = (lambda b, h: b - h) if lower else (lambda b, h: h - b)
+    won = sum(1 for b, h in both if gain(b, h) > 0)
+    iqr = bq[2] - bq[0]
+    if won >= 0.9 * len(both) and gain(bq[1], hq[1]) > iqr:
+        return "gain"
+    if -gain(bq[1], hq[1]) > bound * abs(bq[1]):
+        return "regression"
+    heads, bases = [h for _, h in both], [b for b, _ in both]
+    if iqr > bound * abs(bq[1]) and not all(gain(b, h) > 0 for b in bases for h in heads):
+        return "unresolved"
+    return "level"
+
+
+print("%-12s %-28s %-28s %-10s %-17s %s" % ("metric", "base q1 / median / q3",
+                                             "head q1 / median / q3", "head won",
+                                             "median head/base", "verdict"))
 for m in bench["end_to_end"]:
     name, lower = m["name"], m["better"] == "lower"
     val = lambda side, p: by.get((side, p), {}).get("metrics", {}).get(name, {}).get("value")
@@ -96,7 +120,7 @@ for m in bench["end_to_end"]:
     bq, hq = quartiles([b for b, _ in both]), quartiles([h for _, h in both])
     won = sum(1 for b, h in both if (h < b if lower else h > b))
     ratio = statistics.median(h / b for b, h in both if b)
-    print("%-12s %-28s %-28s %-10s %.3f" % (
+    print("%-12s %-28s %-28s %-10s %-17.3f %s" % (
         name, "%.3f / %.3f / %.3f" % bq, "%.3f / %.3f / %.3f" % hq,
-        "%d of %d" % (won, len(both)), ratio))
+        "%d of %d" % (won, len(both)), ratio, verdict(both, bq, hq, lower, m["bound"])))
 EOF
