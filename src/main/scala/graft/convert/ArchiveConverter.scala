@@ -4,7 +4,7 @@ import graft.core.{ArchiveChunk, ArchiveEntry, ArchiveSchema, ConvertOptions, In
 import graft.functions.GraftFunctions
 import graft.ops.Quality
 import graft.sources.ArchiveTable
-import org.apache.spark.sql.graft.CheckpointShims
+import org.apache.spark.sql.graft.GraftShims
 import org.apache.spark.sql.{DataFrame, Dataset, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.LongAccumulator
@@ -197,7 +197,7 @@ object ArchiveConverter {
       metrics: Option[WalkMetrics]): DataFrame = {
     require(inputs.nonEmpty, "no inputs")
     val par = opts.parallelism.getOrElse(spark.sparkContext.defaultParallelism)
-    CheckpointShims.tableFrame(spark, new ArchiveTable(inputs, opts, metrics))
+    GraftShims.tableFrame(spark, new ArchiveTable(inputs, opts, metrics))
       .coalesce(math.max(1, math.min(inputs.size, par)))
   }
 

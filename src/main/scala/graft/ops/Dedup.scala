@@ -2,6 +2,7 @@ package graft.ops
 
 import graft.functions.GraftFunctions
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.FooterSchema
 
@@ -868,10 +869,18 @@ object Dedup {
     * at 100 TB that array pass (alloc + copy + explode of the full
     * exploded relation) was pure overhead. Package-visible so probes
     * measure the SAME stages the operator ships.
+    *
+    * The frequency order keeps its `groupBy` aggregate and join rather
+    * than counting `__df` in place with a window over `__g`, as
+    * [[sharedSubstringCandidates]] does: on ScaleEvidence's
+    * `gen:50000` corpus (local[4] on 4 vCPU, one JVM, the two shapes
+    * alternating, 5 warm reps) the window took a median 15.80 s
+    * against 15.23 s for the candidates and was slower in all 5 pairs.
+    * Hot shingles make the per-gram window buffer and its sort cost
+    * more than the map-side-reduced aggregate and the join.
     */
   private[graft] def prefixRows(
       gramSets: DataFrame, threshold: Double, freqOrder: Boolean): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val exploded = gramSets.select(col("__id"), explode(col("__sh")).as("__g"))
     val keyed =
       if (!freqOrder) exploded
@@ -1104,9 +1113,9 @@ object Dedup {
     *
     * Mechanism: k-gram rolling hashes per document
     * ([[graft.functions.HashingHelper.winnow]]; the default
-    * `window=1` emits every position's hash), distinct per doc,
-    * gram-keyed document-frequency filter, then a gram-bucket
-    * self-join.
+    * `window=1` emits every position's hash), distinct per doc, a
+    * gram-keyed document-frequency window filter, then each gram's
+    * id list exploded into its pairs.
     *
     * `window` is the SCALE knob: winnowing selects the minimal hash
     * in every `window` consecutive positions, keeping ~2/(window+1)
@@ -1125,9 +1134,9 @@ object Dedup {
     * part of the operator's declared semantics, not a silent
     * truncation.
     *
-    * Scale shape: exchanges carry (id, gram-hash) pairs only; the
-    * df filter partial-aggregates map-side; no driver
-    * materialization.
+    * Scale shape: exchanges carry (id, gram-hash) pairs only, one
+    * gram-keyed exchange feeds both the df window and the id-list
+    * aggregate; no driver materialization.
     *
     * @return (id_a, id_b, shared_grams), id_a < id_b
     */
@@ -1148,37 +1157,27 @@ object Dedup {
     require(k >= 4, "k must be >= 4 (shorter runs are ubiquitous)")
     require(maxDf >= 2, "maxDf must be >= 2 (pairs need two documents)")
     require(window >= 1, "window must be >= 1 (1 = every gram, no sampling)")
-    // ONE exchange for the whole operator (r22; the r21 shape scanned
-    // its checkpoint four times and shuffled the gram stream three —
-    // the df aggregate plus both differently-aliased self-join sides,
-    // which defeat exchange reuse): the winnowing fingerprint pass
-    // (k-gram MD5 per character position, by far this operator's CPU)
-    // runs cluster-wide above the fan-out, the 16-byte (id, gram-hash)
-    // pairs are hash-repartitioned by gram ONCE, and the eager
-    // localCheckpoint preserves that partitioning — so the
-    // document-frequency aggregate, the eligibility semi-join and the
-    // per-gram bucket aggregate below all ride it with zero further
-    // exchanges.
-    val grams = org.apache.spark.sql.graft.CheckpointShims.localCheckpointPartitioned(
-      Layouts.fanOutByKey(
-          df.select(col(idCol), col(textCol)), idCol)
-        .select(col(idCol),
-          explode(array_distinct(GraftFunctions.fingerprint(col(textCol), k, window)))
-            .as("__gh"))
-        .repartition(col("__gh")))
-    // df filter FIRST (a count aggregate — constant memory per gram),
-    // THEN the id-list aggregate, so a boilerplate gram shared by
-    // millions of documents is dropped before any per-gram list
-    // materializes; the surviving lists are bounded by maxDf
-    val ok = grams.groupBy("__gh").agg(count(lit(1)).as("__df"))
+    // ONE gram exchange for the whole operator: the winnowing fingerprint
+    // pass (k-gram MD5 per character position, by far this operator's
+    // CPU) runs cluster-wide above the fan-out, and the 16-byte
+    // (id, gram-hash) rows are hash-partitioned by gram once, for the
+    // document-frequency window. The per-gram id-list aggregate below
+    // rides that partitioning. The df filter runs BEFORE the id lists
+    // are collected (the window's per-gram buffer spills; a list does
+    // not), so a boilerplate gram shared by millions of documents
+    // never becomes a list; the surviving lists are bounded by maxDf
+    val grams = Layouts.fanOutByKey(
+        df.select(col(idCol), col(textCol)), idCol)
+      .select(col(idCol),
+        explode(array_distinct(GraftFunctions.fingerprint(col(textCol), k, window)))
+          .as("__gh"))
+      .withColumn("__df", count(lit(1)).over(Window.partitionBy("__gh")))
       .where(col("__df").between(2, maxDf))
-      .select("__gh")
     // pairs come from exploding each gram's bounded id list twice —
     // the same (id_a < id_b) pair multiset the aliased self-join
     // produced, without its second scan, second shuffle, or build-side
     // broadcast of the full stream
-    grams.join(ok, Seq("__gh"))
-      .groupBy(col("__gh")).agg(collect_list(col(idCol)).as("__ids"))
+    grams.groupBy(col("__gh")).agg(collect_list(col(idCol)).as("__ids"))
       .select(col("__gh"), col("__ids"), explode(col("__ids")).as("id_a"))
       .select(col("__gh"), col("id_a"), explode(col("__ids")).as("id_b"))
       .where(col("id_a") < col("id_b"))

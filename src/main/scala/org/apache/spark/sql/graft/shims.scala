@@ -1,21 +1,28 @@
 package org.apache.spark.sql.graft
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.classic.{Dataset, ExpressionUtils}
+import org.apache.spark.sql.connector.catalog.Table
+import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 
-/** Minimal bridge to the `private[sql]` Column <-> Expression conversion
-  * and function registration — the single file in this repo that lives
-  * under the `org.apache.spark.sql` namespace (the standard technique
-  * used by open-source Spark extension libraries to expose custom
-  * Catalyst expressions as `Column` functions). Everything else in the
-  * engine depends only on public Spark API plus this shim.
+/** Minimal bridge to the `private[sql]` Column <-> Expression
+  * conversion, function registration and the DSv2 table-to-frame
+  * constructor (the standard technique used by open-source Spark
+  * extension libraries to expose custom Catalyst expressions as
+  * `Column` functions). The other files in this package are
+  * [[FooterSchema]], [[ScanWidth]] and [[SidecarIO]].
   */
 object GraftShims {
 
   def column(e: Expression): Column = ExpressionUtils.column(e)
 
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
+
+  /** A DataSource V2 table object (not string options) as a DataFrame. */
+  def tableFrame(spark: SparkSession, table: Table): DataFrame =
+    Dataset.ofRows(spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
+      DataSourceV2Relation.create(table, None, None))
 
   /** Register a custom expression builder for SQL use
     * (`SELECT my_fn(col) FROM ...`). Session-scoped temp function.

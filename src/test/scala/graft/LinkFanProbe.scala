@@ -3,12 +3,11 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-/** Measurement-only probe for the r21-verdict q107 question: does the
-  * link-graph fan-out win once the input outgrows the toy sf0.1 scan?
-  * Builds a `mult`x replica of sf0.1 documents (ids offset per copy,
-  * ONE parquet file so the scan still arrives narrower than the
-  * cluster) and times q107 with the fan-out toggled by
-  * SPARK_GRAFT_LINK_FANOUT. Not part of the driver contract.
+/** Measurement-only probe for the q107 link graph beyond the toy
+  * sf0.1 scan. Builds a `mult`x replica of sf0.1 documents (ids offset
+  * per copy, ONE parquet file so the scan still arrives narrower than
+  * the cluster) and times q107 over it three times. To measure a
+  * fan-out change, run it at both revisions.
   */
 object LinkFanProbe {
   def main(args: Array[String]): Unit = {
@@ -31,7 +30,7 @@ object LinkFanProbe {
         .write.mode("overwrite").parquet(docs.getAbsolutePath)
     }
     val fn = SparkEntry.queries("q107_link_graph")
-    println(s"fanout=${sys.env.getOrElse("SPARK_GRAFT_LINK_FANOUT", "1")} mult=$mult")
+    println(s"mult=$mult")
     (1 to 3).foreach { rep =>
       val t0 = System.nanoTime()
       val n = fn(spark, dir).count()

@@ -1028,17 +1028,26 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     import spark.implicits._
     val quote = "four score and seven years ago our fathers"
     val boiler = "all rights reserved worldwide"
+    // the maxDf boundary (maxDf = 4 below): a run in exactly maxDf docs
+    // still pairs them, a run in maxDf + 1 docs pairs none, and a run
+    // repeated inside one doc (df 1) never pairs
+    val atCap = "pack my box with five dozen liquor jugs"
+    val overCap = "sphinx of black quartz judge my vow"
     val docs = (Seq(
       (1L, s"Essay one quotes: $quote. And then diverges entirely, alpha beta."),
       (2L, s"A different text; '$quote' appears here too, gamma delta epsilon."),
       (3L, "Shares only the word the with everything, nothing verbatim here."),
-      (4L, "")
-    ) ++ (10L until 20L).map(i => (i, s"unique text $i $boiler"))).toDF("id", "text")
+      (4L, ""),
+      (50L, "a lone run repeated, a lone run repeated, a lone run repeated")
+    ) ++ (10L until 20L).map(i => (i, s"unique text $i $boiler"))
+      ++ (30L until 34L).map(i => (i, s"m$i $atCap z$i"))
+      ++ (40L until 45L).map(i => (i, s"n$i $overCap y$i"))).toDF("id", "text")
     val pairs = graft.ops.Dedup.sharedSubstringPairs(docs, "id", "text",
       k = 20, maxDf = 4)
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
-    assert(pairs.keySet == Set((1L, 2L)),
-      s"only the quoting pair shares a 20-char run under the df cap, got ${pairs.keySet}")
+    val capPairs = for (a <- 30L until 34L; b <- (a + 1) until 34L) yield (a, b)
+    assert(pairs.keySet == Set((1L, 2L)) ++ capPairs,
+      s"the quoting pair and the maxDf-doc run's pairs only, got ${pairs.keySet}")
     // expected count from first principles: distinct 20-char substrings
     // of the normalized texts, intersected
     def norm(s: String) = s.toLowerCase.replaceAll("[^a-z0-9]+", " ").trim
@@ -1046,10 +1055,12 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val texts = docs.collect().map(r => r.getLong(0) -> r.getString(1)).toMap
     val want = (grams20(texts(1L)) intersect grams20(texts(2L))).size.toLong
     assert(pairs((1L, 2L)) == want, s"expected $want shared grams, got ${pairs((1L, 2L))}")
-    // with the df cap lifted, the 10 boilerplate docs pair up (45 pairs)
+    // with the df cap lifted, the 10 boilerplate docs pair up (45
+    // pairs) and so do the maxDf + 1 docs (10 pairs)
     val lifted = graft.ops.Dedup.sharedSubstringPairs(docs, "id", "text",
       k = 20, maxDf = 64)
-    assert(lifted.count() == 1 + 45, "lifting maxDf admits the boilerplate clique")
+    assert(lifted.count() == 1 + 45 + capPairs.size + 10,
+      "lifting maxDf admits the boilerplate clique and the maxDf + 1 run")
   }
 
   test("Sampling.dsirResample: selects target-like docs, deterministic, distributed top-k") {

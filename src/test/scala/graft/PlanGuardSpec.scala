@@ -220,8 +220,31 @@ class PlanGuardSpec extends AnyFunSuite with BeforeAndAfterAll {
     val p = df.queryExecution.executedPlan.toString.split("== Initial Plan ==")(0)
     assert(hashExchanges(p) <= 1,
       s"q98 must hash-shuffle once (the dedup election):\n$p")
-    assert(fanOuts(p) == 0, s"q98 stays narrow (fan-out reverted — see q98 note):\n$p")
+    // the fan-out (Layouts.fanOutBarrier) repartitions INSIDE its eager
+    // checkpoint: this plan reads the checkpoint and carries no fan-out
+    // exchange of its own
+    assert(p.contains("Scan ExistingRDD"), s"q98 lost its fan-out barrier checkpoint:\n$p")
+    assert(fanOuts(p) == 0, s"q98's fan-out must stay inside the barrier checkpoint:\n$p")
     assert(p.contains("BroadcastHashJoin"), s"q98 winner join must broadcast:\n$p")
+  }
+
+  test("q80: shared-substring pairs ride ONE gram exchange — no df join, no checkpoint") {
+    // the document-frequency window and the per-gram id-list aggregate
+    // share one hash exchange on the gram hash, below the pair
+    // aggregation's own (id_a, id_b) exchange
+    val df = SparkEntry.queries("q80_substring_pairs")(spark, sfDir)
+    df.collect()
+    val p = df.queryExecution.executedPlan.toString.split("== Initial Plan ==")(0)
+    val lines = p.linesIterator.toIndexedSeq
+    val gramExchanges = lines.indices.filter(i =>
+      lines(i).contains("Exchange hashpartitioning(__gh"))
+    assert(gramExchanges.size == 1, s"q80 must hash-shuffle the grams exactly once:\n$p")
+    val pairAgg = lines.indexWhere(l => l.contains("HashAggregate(keys=[id_a"))
+    assert(pairAgg >= 0 && gramExchanges.head > pairAgg,
+      s"q80's gram exchange must sit below the pair aggregation:\n$p")
+    assert(!lines.exists(l => l.contains("Join") && l.contains("__gh")),
+      s"q80 joins on the gram hash:\n$p")
+    assert(!p.contains("Scan ExistingRDD"), s"q80 reads a checkpoint:\n$p")
   }
 
   test("q99: url-normalize dedup is one hash exchange over a narrow projection") {
@@ -573,7 +596,10 @@ class PlanGuardSpec extends AnyFunSuite with BeforeAndAfterAll {
     // must never cross a join (elections key on the stored md5)
     val p = plan("q140_incr_refresh")
     assert(hashExchanges(p) <= 3, s"q140 grew a shuffle:\n$p")
-    assert(fanOuts(p) == 0, s"q140 stays narrow (fan-out reverted — see q98 note):\n$p")
+    // derive fans out BELOW its manifest checkpoint, so the fan-out
+    // exchange runs at build time and this plan reads the checkpoint
+    assert(p.contains("Scan ExistingRDD"), s"q140 lost its manifest checkpoint:\n$p")
+    assert(fanOuts(p) == 0, s"q140's fan-out must stay inside the manifest checkpoint:\n$p")
     val joinLines = p.linesIterator.filter(l =>
       l.contains("SortMergeJoin") || l.contains("BroadcastHashJoin")).toSeq
     joinLines.foreach(l =>

@@ -1131,7 +1131,11 @@ object ScaleEvidence {
     println(f"""SCALE {"corpus":"warcpipe:$files:$recs","op":"warc_pipeline","n_recs":$nWalked,"mb_gz":$totalMb%.1f,"n_resp":$nResp,"n_clean":$nClean,"n_unique":$nUnique,"n_capped":$nCapped,"n_domains":$nDomains,"url_keys":$nKeys,"n_out":$nOut,"exchanges_planned":$nEx,"exchanges_final":$nExFinal,"secs":$secs%.1f,"mbps_gz":${totalMb / secs}%.1f}""")
   }
 
-  private def timedCount(df: DataFrame): (Long, Double) = {
+  /** Builds `df` and counts it. The build is inside the timer: an
+    * operator that runs eager work while its frame is built (a
+    * checkpoint) would otherwise read faster than it is.
+    */
+  private def timedCount(df: => DataFrame): (Long, Double) = {
     val t0 = System.nanoTime()
     val c = df.count()
     (c, (System.nanoTime() - t0) / 1e9)
@@ -1233,32 +1237,32 @@ object ScaleEvidence {
       val ref = docs.where(col("source").isin("src0", "src1"))
       val train = docs.where(!col("source").isin("src0", "src1"))
 
-      val ops: Seq[(String, DataFrame, DataFrame)] = Seq(
+      val ops: Seq[(String, () => DataFrame, () => DataFrame)] = Seq(
         ("q18_minhash_lsh",
-          Dedup.nearDupCandidates(docs, "doc_id", "text"),
-          Dedup.nearDupPairs(docs, "doc_id", "text", threshold = 0.8)),
+          () => Dedup.nearDupCandidates(docs, "doc_id", "text"),
+          () => Dedup.nearDupPairs(docs, "doc_id", "text", threshold = 0.8)),
         ("q21_simhash",
-          Dedup.simhashCandidates(docs, "doc_id", "text"),
-          Dedup.simhashNearDup(docs, "doc_id", "text", maxHamming = 3)),
+          () => Dedup.simhashCandidates(docs, "doc_id", "text"),
+          () => Dedup.simhashNearDup(docs, "doc_id", "text", maxHamming = 3)),
         ("q44_jaccard_ppjoin",
-          Dedup.jaccardNearDupCandidates(docs, "doc_id", "text", threshold = 0.7),
-          Dedup.jaccardNearDupPairs(docs, "doc_id", "text", threshold = 0.7)),
+          () => Dedup.jaccardNearDupCandidates(docs, "doc_id", "text", threshold = 0.7),
+          () => Dedup.jaccardNearDupPairs(docs, "doc_id", "text", threshold = 0.7)),
         ("q57_decontaminate",
-          Dedup.decontaminationCandidates(train, ref, "doc_id", "text"),
-          Dedup.decontaminate(train, ref, "doc_id", "text", threshold = 0.8)),
+          () => Dedup.decontaminationCandidates(train, ref, "doc_id", "text"),
+          () => Dedup.decontaminate(train, ref, "doc_id", "text", threshold = 0.8)),
         ("q80_substring",
-          Dedup.sharedSubstringCandidates(docs, "doc_id", "text", k = 24, maxDf = 64),
-          Dedup.sharedSubstringPairs(docs, "doc_id", "text", k = 24, maxDf = 64))) ++
+          () => Dedup.sharedSubstringCandidates(docs, "doc_id", "text", k = 24, maxDf = 64),
+          () => Dedup.sharedSubstringPairs(docs, "doc_id", "text", k = 24, maxDf = 64))) ++
         // the winnowing SCALE KNOB at the big rungs: window=8 keeps
         // ~2/9 of the gram stream, detection threshold 24 -> 31 chars
         (if (n > 10000) Seq(("q80_substring_w8",
-          Dedup.sharedSubstringCandidates(docs, "doc_id", "text", k = 24, maxDf = 64, window = 8),
-          Dedup.sharedSubstringPairs(docs, "doc_id", "text", k = 24, maxDf = 64, window = 8)))
+          () => Dedup.sharedSubstringCandidates(docs, "doc_id", "text", k = 24, maxDf = 64, window = 8),
+          () => Dedup.sharedSubstringPairs(docs, "doc_id", "text", k = 24, maxDf = 64, window = 8)))
          else Seq.empty)
 
       ops.foreach { case (name, cand, full) =>
-        val (nc, ct) = timedCount(cand)
-        val (no, ot) = timedCount(full)
+        val (nc, ct) = timedCount(cand())
+        val (no, ot) = timedCount(full())
         println(f"""SCALE {"corpus":"$c","op":"$name","n_docs":$n,"candidates":$nc,"all_pairs":$allPairs,"cand_frac":${nc.toDouble / math.max(allPairs, 1)}%.6f,"output":$no,"cand_secs":$ct%.1f,"full_secs":$ot%.1f}""")
       }
 
