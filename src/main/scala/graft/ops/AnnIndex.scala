@@ -27,8 +27,8 @@ import org.apache.spark.sql.graft.FooterSchema
   *
   * Lifecycle: the index is the IVF-PQ codec over a
   * [[Layouts.GenerationStore]], which owns the policy — when a write
-  * is safe, how a fold treats the newest increment, where the pointer
-  * swap sits, when a handle is stale. [[append]] is the store's fenced
+  * is safe, what a fold records, where the pointer swap sits, when a
+  * handle is stale. [[append]] is the store's fenced
   * append (batch callers and the ingest stream alike), [[maintain]]
   * and [[maintainFromDriftSeries]] retrain in its rebuild, and
   * [[compact]] is its fold.
@@ -186,7 +186,8 @@ final class AnnIndex private (spark: SparkSession,
     * increase from batch to batch; an id is reused only to retry that
     * batch. The retry is idempotent: a batch whose fence failed (a fold
     * or rebuild met it) reruns under the same id on a reopened index and
-    * rewrites its own directory in the live generation, so no id is
+    * rewrites its own directory in the live generation, or writes
+    * nothing when the fold already folded it ([[compact]]), so no id is
     * stored twice (a duplicated id surfaces twice in a top-k).
     *
     * Quantization error drifts as the ingested distribution leaves the
@@ -387,9 +388,10 @@ final class AnnIndex private (spark: SparkSession,
     * append leaves one increment directory with a file per touched
     * cell, and every probe pays their opens. Compaction is
     * the store's fold ([[Layouts.GenerationStore.fold]]) into
-    * `gen<k+1>`, returned: codes rewritten (never re-encoded: no
-    * vectors read, no codebooks applied) hash-repartitioned by cell, so
-    * each cell is one file. Cost: one shuffle of the ~4-40 B/row codes.
+    * `gen<k+1>`, returned: the base and EVERY committed increment,
+    * codes rewritten (never re-encoded: no vectors read, no codebooks
+    * applied) hash-repartitioned by cell, so each cell is one file and
+    * no increment is left. Cost: one shuffle of the ~4-40 B/row codes.
     *
     * `dropIds` is the TOMBSTONE set — one id column
     * ([[graft.ops.Cdc.snapshotDiff]]'s `removed` class is the natural
@@ -400,19 +402,13 @@ final class AnnIndex private (spark: SparkSession,
     * a sidecar-only `gen<k+1>` (detectable), never a data-only one.
     */
   def compact(dropIds: Option[DataFrame] = None): String =
-    store.fold("compact", new Layouts.FoldCodec {
-      private def retire(rows: DataFrame) =
-        Layouts.dropTombstones(rows, dropIds, idCol, "compact")
-      def writeFolded(src: String, folded: Long => Boolean, dst: String): Unit = {
-        val base = FooterSchema.read(spark, src)
-        val rows = retire(Layouts.withIncrementsWhere(spark, base, src,
-          base.columns.toIndexedSeq, folded))
-        Similarity.writeIvfPqCodebooks(spark, dst, ivf, pq, kind)
-        Similarity.writeCoded(rows.repartition(col(Cell)), "append", dst)
-      }
-      def carry(src: String, dst: String): Unit =
-        Similarity.writeCoded(retire(FooterSchema.read(spark, src)), "overwrite", dst)
-    })
+    store.fold("compact") { dst =>
+      val base = FooterSchema.read(spark, layout)
+      val rows = Layouts.dropTombstones(Layouts.withIncrements(spark, base, layout,
+        base.columns.toIndexedSeq, None), dropIds, idCol, "compact")
+      Similarity.writeIvfPqCodebooks(spark, dst, ivf, pq, kind)
+      Similarity.writeCoded(rows.repartition(col(Cell)), "append", dst)
+    }
 }
 
 object AnnIndex {

@@ -165,39 +165,27 @@ object Bloom {
   /** Load a [[writeBloomIndex]] layout's bitmap, OR-merged with its
     * committed per-batch increments. `path` is a layout or a pointered
     * store root (resolved through [[Similarity.resolveLayout]]).
-    * `historyBefore = Some(b)` keeps
-    * only increments with `ingest_batch < b` — the gate's replay rule,
-    * STRICTER than the other families' own-batch exclusion because the
-    * gate's OUTPUT depends on history: batch ids are monotone in
-    * Structured Streaming, so "increments < b" is exactly the history
-    * batch b's first attempt judged against, even when the replay runs
-    * after later batches committed (an own-batch-only exclusion would
-    * let batch b+1's bits retroactively drop a doc batch b admitted —
-    * divergence, not convergence). The geometry (m_bits, k) must agree
+    * `excludeBatchId` drops that batch's own increment — the replay
+    * rule every family shares ([[Layouts.withIncrements]]): the store
+    * refuses an append below its newest batch, so the history a batch
+    * judges against is every other batch's bits, on its first attempt
+    * and on its replay alike. The geometry (m_bits, k) must agree
     * across every row — a mixed-m OR is garbage, so it fails curated.
-    * Driver-bounded: one m/64-long array per committed batch, never
-    * corpus rows.
-    */
-  def readBloomIndex(spark: org.apache.spark.sql.SparkSession,
-      path: String, historyBefore: Option[Long] = None): (Int, Int, Array[Long]) =
-    readBitmap(spark, Similarity.resolveLayout(spark, path),
-      id => historyBefore.forall(id < _))
-
-  /** The OR of `layout`'s base row and the increments `keepBatch`
-    * keeps. DRIVER-SIDE read (the Layouts.collectSidecar path): the
-    * index is one KB-to-MB row per committed batch, and a
+    * DRIVER-SIDE read (the Layouts.collectSidecar path), bounded by
+    * one m/64-long array per committed batch, never corpus rows: a
     * spark.read + collect would pay a full Spark job per gate
     * evaluation — per MICRO-BATCH in the streaming gate.
     */
-  private def readBitmap(spark: org.apache.spark.sql.SparkSession,
-      layout: String, keepBatch: Long => Boolean): (Int, Int, Array[Long]) = {
-    val dirs = layout +: Layouts.incrementIds(spark, layout).filter(keepBatch)
-      .map(id => Layouts.incrementDir(layout, id))
-    val rows = dirs.flatMap(bitmapRows(spark, _))
+  def readBloomIndex(spark: org.apache.spark.sql.SparkSession,
+      path: String, excludeBatchId: Option[Long] = None): (Int, Int, Array[Long]) = {
+    val layout = Similarity.resolveLayout(spark, path)
+    val dirs = layout +: Layouts.incrementIds(spark, layout)
+      .filterNot(excludeBatchId.contains).map(Layouts.incrementDir(layout, _))
+    val rows = dirs.flatMap(Layouts.collectSidecar(spark, _, "writeBloomIndex"))
     require(rows.nonEmpty,
       s"the Bloom index at $layout holds no bitmap row — rebuild it with " +
         "writeBloomIndex")
-    val geoms = rows.map(r => (r.getInt(0), r.getInt(1))).distinct
+    val geoms = rows.map(r => (r.getAs[Int]("m_bits"), r.getAs[Int]("k"))).distinct
     if (geoms.length != 1)
       throw new IllegalStateException(
         s"the Bloom index at $layout mixes bitmap geometries " +
@@ -207,42 +195,29 @@ object Bloom {
     val (m, k) = geoms(0)
     val acc = new Array[Long](m >>> 6)
     rows.foreach { r =>
-      val w = r.getSeq[Long](2)
+      val w = r.getAs[Seq[Long]]("words")
       var i = 0
       while (i < acc.length) { acc(i) |= w(i); i += 1 }
     }
     (m, k, acc)
   }
 
-  /** The (m_bits, k, words) rows of one bitmap row directory. */
-  private def bitmapRows(spark: org.apache.spark.sql.SparkSession,
-      dir: String): Seq[org.apache.spark.sql.Row] =
-    Layouts.collectSidecar(spark, dir, "writeBloomIndex").map { r =>
-      org.apache.spark.sql.Row(
-        r.getInt(r.fieldIndex("m_bits")), r.getInt(r.fieldIndex("k")),
-        r.getSeq[Long](r.fieldIndex("words")))
-    }.toSeq
-
   /** Fold a Bloom index's committed increments into one base row — the
     * [[AnnIndex.compact]] play for the gate's history (a year of
     * per-batch rows is a listing tax on every tick). This is the
     * store's fold ([[Layouts.GenerationStore.fold]]) of the pointered
-    * root `root` into `gen<k+1>`, returned.
-    *
-    * The NEWEST increment is carried verbatim, NOT folded (the store's
-    * one fold rule): folding batch b's own bits into the base would
-    * make its replay judge against ITSELF and drop every doc it first
-    * admitted — the divergence the `<` history rule exists to prevent.
+    * root `root` into `gen<k+1>`, returned: the OR of the base and
+    * EVERY committed increment. Folding a batch's own bits would make
+    * its replay judge against itself, so the fold records the newest
+    * batch it folded and that batch's replay writes nothing: the gate
+    * writes its admitted rows before its bitmap, so they are complete.
     */
   def compactBloomIndex(spark: org.apache.spark.sql.SparkSession,
-      root: String): String =
-    Layouts.openStore(spark, root).fold("compactBloomIndex", new Layouts.FoldCodec {
-      def writeFolded(src: String, folded: Long => Boolean, dst: String): Unit = {
-        val (m, k, words) = readBitmap(spark, src, folded)
-        writeBitmapRow(spark, words, m, k, dst)
-      }
-      // verbatim driver-side copy of one KB-to-MB row
-      def carry(src: String, dst: String): Unit =
-        Layouts.writeSidecar(spark, dst, BitmapRowSchema, bitmapRows(spark, src))
-    })
+      root: String): String = {
+    val store = Layouts.openStore(spark, root)
+    store.fold("compactBloomIndex") { dst =>
+      val (m, k, words) = readBloomIndex(spark, store.layout)
+      writeBitmapRow(spark, words, m, k, dst)
+    }
+  }
 }

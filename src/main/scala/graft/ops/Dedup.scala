@@ -338,9 +338,10 @@ object Dedup {
 
   /** The layout's stored signature rows PLUS its committed
     * increments ([[writeIncrement]] directories), as one
-    * (id, band, key) frame — what every near-dup reader here reads, so
-    * a fold's carried newest increment stays in every pair, `dup_of`
-    * and split. `excludeBatchId` drops the named batch's own directory
+    * (id, band, key) frame — what every near-dup reader here and the
+    * fold ([[compactNearDupIndex]]) read, so every appended batch
+    * stays in every pair, `dup_of` and split whether or not a fold has
+    * folded it. `excludeBatchId` drops the named batch's own directory
     * — the replay rule: a re-executed micro-batch must
     * dedup against exactly the history its first attempt saw, never
     * its own earlier partial append (which would let same-batch
@@ -359,9 +360,10 @@ object Dedup {
     * directory (the [[graft.ops.AnnIndex.compact]] small-files tax,
     * text side). This is the store's fold
     * ([[Layouts.GenerationStore.fold]]) of the pointered root `root`
-    * into `gen<k+1>`, returned: (id, band, key) rows hash-repartitioned
-    * by band — one file per band directory, nothing re-hashed — with
-    * the `_meta` banding sidecar written first.
+    * into `gen<k+1>`, returned: the base and every committed increment
+    * as (id, band, key) rows hash-repartitioned by band — one file per
+    * band directory, nothing re-hashed — with the `_meta` banding
+    * sidecar written first, and no increment left.
     *
     * `dropIds` is the TOMBSTONE set (one id column —
     * [[graft.ops.Cdc.snapshotDiff]]'s `removed` class): matching
@@ -371,26 +373,23 @@ object Dedup {
     * ONLY from stored rows).
     */
   def compactNearDupIndex(spark: org.apache.spark.sql.SparkSession,
-      root: String, dropIds: Option[DataFrame] = None): String =
-    Layouts.openStore(spark, root).fold("compactNearDupIndex", new Layouts.FoldCodec {
-      private def retire(rows: DataFrame) =
-        Layouts.dropTombstones(rows, dropIds, "id", "compactNearDupIndex")
-      def writeFolded(src: String, folded: Long => Boolean, dst: String): Unit = {
-        val rows = retire(Layouts.withIncrementsWhere(spark,
-          FooterSchema.read(spark, src), src, Seq("id", "band", "key"), folded))
-        // meta FIRST: a failure in the (much larger) data rewrite
-        // leaves a meta-only generation — detectable — instead of a
-        // data-only one that masquerades as a legitimate pre-meta layout
-        readNearDupIndexMeta(spark, src).foreach { case (nh, b, sw) =>
-          Layouts.writeSidecar(spark, dst + "/_meta", NearDupMetaSchema,
-            Seq(org.apache.spark.sql.Row(nh, b, sw)))
-        }
-        rows.repartition(col("band"))
-          .write.mode("append").partitionBy("band").parquet(dst)
+      root: String, dropIds: Option[DataFrame] = None): String = {
+    val store = Layouts.openStore(spark, root)
+    store.fold("compactNearDupIndex") { dst =>
+      val rows = Layouts.dropTombstones(
+        nearDupIndexWithIncrements(spark, store.layout), dropIds, "id",
+        "compactNearDupIndex")
+      // meta FIRST: a failure in the (much larger) data rewrite
+      // leaves a meta-only generation — detectable — instead of a
+      // data-only one that masquerades as a legitimate pre-meta layout
+      readNearDupIndexMeta(spark, store.layout).foreach { case (nh, b, sw) =>
+        Layouts.writeSidecar(spark, dst + "/_meta", NearDupMetaSchema,
+          Seq(org.apache.spark.sql.Row(nh, b, sw)))
       }
-      def carry(src: String, dst: String): Unit =
-        retire(FooterSchema.read(spark, src)).write.mode("overwrite").parquet(dst)
-    })
+      rows.repartition(col("band"))
+        .write.mode("append").partitionBy("band").parquet(dst)
+    }
+  }
 
   /** Near-dup detection of a NEW batch against a corpus indexed at
     * rest by [[writeNearDupIndex]] — the daily-ingest shape: the

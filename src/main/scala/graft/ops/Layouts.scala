@@ -10,8 +10,9 @@ import org.apache.spark.sql.graft.FooterSchema
   * indexes are codecs over it: each says how to encode a batch and how
   * to write a generation, and nothing about when either is safe. Every
   * append, batch face or stream, writes one increment directory its
-  * batch owns; the base changes only when a fold or rebuild writes the
-  * next generation.
+  * batch owns, last of the batch's outputs; the base changes only when
+  * a fold (every committed increment, recorded in `_folded`) or a
+  * rebuild writes the next generation.
   *
   * Also the sidecar plumbing (`_meta`, `_codebooks`, fences, bitmap
   * rows). Presence is an explicit filesystem check, NOT a caught
@@ -33,24 +34,15 @@ private[graft] object Layouts {
   val IncrementsDir = "_increments"
 
   /** `base` unioned with the layout's committed per-batch increment
-    * directories, projected to `cols`. `excludeBatchId` drops that
+    * directories, projected to `cols` — the one increment-listing
+    * discipline (name filter, explicit paths, the basePath anchor)
+    * every reader and every fold shares. `excludeBatchId` drops that
     * batch's OWN directory — the replay rule: a crash-replayed batch
     * must see exactly the history its first attempt saw, never its own
     * previous partial appends. The directories are LISTED and read by
     * explicit path (not partition discovery over the `_increments`
     * root), so the one directory that may hold a torn write from a
-    * crashed attempt — the excluded batch's own — is never opened.
-    */
-  def withIncrements(spark: SparkSession, base: org.apache.spark.sql.DataFrame,
-      path: String, cols: Seq[String],
-      excludeBatchId: Option[Long]): org.apache.spark.sql.DataFrame =
-    withIncrementsWhere(spark, base, path, cols,
-      id => excludeBatchId.forall(id != _))
-
-  /** [[withIncrements]] with an arbitrary batch-id predicate — the one
-    * increment-listing discipline (name filter, explicit paths, the
-    * basePath anchor) shared by every reader: the own-batch exclusion
-    * above, and the fold's `folded` rule ([[GenerationStore.fold]]). A
+    * crashed attempt — the excluded batch's own — is never opened. A
     * directory that holds no data file is skipped: a zero-row
     * `partitionBy` write leaves none.
     *
@@ -61,14 +53,13 @@ private[graft] object Layouts {
     * with nulls there, and a filter on that column would drop them
     * silently.
     */
-  def withIncrementsWhere(spark: SparkSession,
-      base: org.apache.spark.sql.DataFrame,
+  def withIncrements(spark: SparkSession, base: org.apache.spark.sql.DataFrame,
       path: String, cols: Seq[String],
-      keepBatch: Long => Boolean): org.apache.spark.sql.DataFrame = {
+      excludeBatchId: Option[Long]): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.functions.col
     val projected = base.select(cols.map(col): _*)
     val root = s"$path/$IncrementsDir"
-    val incs = incrementIds(spark, path).filter(keepBatch).flatMap { id =>
+    val incs = incrementIds(spark, path).filterNot(excludeBatchId.contains).flatMap { id =>
       val dir = incrementDir(path, id)
       FooterSchema.dataFile(spark, dir).map { f =>
         val schema = FooterSchema.ofFile(spark, f)
@@ -263,15 +254,23 @@ private[graft] object Layouts {
     new GenerationStore(spark, layout, Some(path).filter(_ => layout != path))
   }
 
-  /** How an index writes a generation, for [[GenerationStore.fold]]:
-    * `writeFolded` writes at `dst` the generation holding `src`'s base
-    * plus the committed increments `folded` keeps (sidecar first, so a
-    * failed data write leaves a detectable partial generation), and
-    * `carry` copies one increment directory of `src` to `dst`.
+  /** The fold record of a generation a fold wrote: one row, the
+    * highest batch id folded into its base (`through_batch`).
     */
-  trait FoldCodec {
-    def writeFolded(src: String, folded: Long => Boolean, dst: String): Unit
-    def carry(src: String, dst: String): Unit
+  val FoldedSidecar = "_folded"
+
+  private val FoldedSchema =
+    org.apache.spark.sql.types.StructType.fromDDL("through_batch BIGINT NOT NULL")
+
+  /** The highest batch id folded into `layout`'s base, if a fold wrote
+    * it ([[GenerationStore.fold]]; seed and rebuilt generations have
+    * no record).
+    */
+  def foldedThrough(spark: SparkSession, layout: String): Option[Long] = {
+    val dir = s"$layout/$FoldedSidecar"
+    if (!exists(spark, dir)) None
+    else Some(collectSidecarCached(spark, dir, "a compaction of the " +
+      "previous generation").map(_.getLong(0)).max)
   }
 
   /** One generation of an at-rest index, and the lifecycle policy every
@@ -308,36 +307,44 @@ private[graft] object Layouts {
       * directory batch `batchId` OWNS and overwrites it wholesale, so
       * every append is idempotent: a failure after the write leaves the
       * batch uncommitted, and its retry under the same id rewrites that
-      * one directory in the live generation. The fold either carried
-      * the directory (it is the newest) or never listed it, so the
-      * retry stores each row once.
+      * one directory in the live generation. `write` writes that
+      * directory LAST, so a batch a fold folded had complete outputs:
+      * its retry finds the fold record ([[foldedThrough]]) and writes
+      * nothing, with no fence. Either way each row is stored once.
       *
       * Caller contract: batch ids share the index's stream id space and
       * increase, one batch in flight at a time; an id is reused only to
       * retry that batch (a stream's checkpoint replay, or a batch
       * caller's rerun on a reopened handle). An id below this
-      * generation's newest increment is refused before anything is
-      * written: its directory belongs to a committed batch, and writing
-      * a different batch there would replace that batch's rows.
-      * `beforeFence` is the seam a spec pins the race with.
+      * generation's newest increment or fold record is refused before
+      * anything is written: it belongs to a committed batch, and writing
+      * a different batch under it would replace or duplicate that
+      * batch's rows. `beforeFence` is the seam a spec pins the race with.
       */
-    def append[T](face: String, batchId: Long,
-        beforeFence: () => Unit = () => ())(write: String => T): T = {
+    def append(face: String, batchId: Long,
+        beforeFence: () => Unit = () => ())(write: String => Unit): Unit = {
       hazard().foreach(c => throw new IllegalStateException(s"$face: $c — nothing " +
         "was written; retry after the compaction (releaseQuiesce clears a " +
         "crashed one's marker) or on a reopened index"))
-      incrementIds(spark, layout).lastOption.filter(batchId < _).foreach(n =>
+      newestBatch().filter(batchId < _).foreach(n =>
         throw new IllegalArgumentException(s"$face: batch id $batchId is below " +
-          s"$n, the newest increment of $layout — batch ids increase, and an " +
+          s"$n, the newest batch of $layout — batch ids increase, and an " +
           "id is reused only to retry the newest batch; nothing was written"))
-      val out = write(incrementDir(layout, batchId))
-      beforeFence()
-      hazard().foreach(c => throw new IllegalStateException(s"$face: $c while " +
-        s"batch $batchId was written — it fails uncommitted; retry it under " +
-        "the same batch id on a reopened index (a stream's checkpoint replay " +
-        "does), which rewrites its own directory in the live generation"))
-      out
+      if (!foldedThrough(spark, layout).contains(batchId)) {
+        write(incrementDir(layout, batchId))
+        beforeFence()
+        hazard().foreach(c => throw new IllegalStateException(s"$face: $c while " +
+          s"batch $batchId was written — it fails uncommitted; retry it under " +
+          "the same batch id on a reopened index (a stream's checkpoint replay " +
+          "does), which rewrites its own directory in the live generation"))
+      }
     }
+
+    /** The newest batch this generation holds: its newest increment or
+      * its fold record.
+      */
+    private def newestBatch(): Option[Long] =
+      (incrementIds(spark, layout).lastOption ++ foldedThrough(spark, layout)).maxOption
 
     /** Refuse a plain layout or a stale handle before a rebuild's scans. */
     def requireRebuildable(face: String): Unit = rootAndIndex(face)
@@ -358,24 +365,44 @@ private[graft] object Layouts {
     }
 
     /** FOLD this generation into `gen<k+1>` ([[rebuild]]) and return
-      * its path: the codec writes base ∪ every committed increment but
-      * the newest, and carries the newest as its own directory. Under
-      * sequential epochs only the newest on-disk batch can still be
-      * uncommitted; its replay then overwrites its own directory in
-      * `gen<k+1>` and reads the history its first attempt read (base
-      * rows carry no batch id, so a folded batch would read as history).
-      * A newest directory with no data file holds no rows and is not
-      * carried. The rerun of a failed fold clears its partial `gen<k+1>`.
+      * its path: `write(dst)` writes base ∪ every committed increment
+      * ([[withIncrements]]), sidecar first. Then the fold record
+      * ([[FoldedSidecar]]), max(previous record, newest increment id);
+      * the `_current` swap publishes both. An increment is its batch's
+      * last write, so a folded batch's outputs are complete and its
+      * replay writes nothing ([[append]]). An append that passed its
+      * marker check before the fold took the marker may still be
+      * writing, so the fold fails if the increments' files changed
+      * during its read or a write is still staged. The rerun of a failed
+      * fold clears its partial `gen<k+1>`.
       */
-    def fold(face: String, codec: FoldCodec): String =
+    def fold(face: String)(write: String => Unit): String =
       rebuild(face) { dst =>
-        val newest = incrementIds(spark, layout).lastOption
+        val files = incrementFiles()
         delete(spark, dst)
-        codec.writeFolded(layout, id => !newest.contains(id), dst)
-        newest.filter(b => FooterSchema.dataFile(spark, incrementDir(layout, b)).isDefined)
-          .foreach(b => codec.carry(incrementDir(layout, b), incrementDir(dst, b)))
+        write(dst)
+        assertNoInflightIncrements(face)
+        if (incrementFiles() != files)
+          throw new IllegalStateException(s"$face: an append wrote into " +
+            s"$layout while the fold read it — nothing was swapped; retry the fold")
+        newestBatch().foreach(b =>
+          writeSidecar(spark, s"$dst/$FoldedSidecar", FoldedSchema, Seq(Row(b))))
         dst
       }
+
+    /** Every file under this generation's increments, with its length
+      * and modification time (one recursive listing).
+      */
+    private def incrementFiles(): Seq[String] = {
+      val p = new org.apache.hadoop.fs.Path(s"$layout/$IncrementsDir")
+      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      if (!fs.exists(p)) Nil
+      else {
+        val it = fs.listFiles(p, true)
+        Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
+          .map(f => s"${f.getPath}:${f.getLen}:${f.getModificationTime}").toVector.sorted
+      }
+    }
 
     /** Complete a rebuild that died between writing `gen` and swapping
       * to it: when `gen` is numerically AHEAD of this generation and on

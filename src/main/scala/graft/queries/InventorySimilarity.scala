@@ -184,13 +184,13 @@ private[queries] trait InventorySimilarity extends InventoryDedup {
   /** COMPACTION of the appended ANN layout
     * ([[graft.ops.AnnIndex.compact]] — the LSM small-files play):
     * q138's corpus-write + increment-append, then `gen0` is compacted
-    * into `gen1` (base codes rewritten one-file-per-cell, nothing
-    * re-encoded, sidecar carried, the newest increment — here the
-    * batch — carried as its own directory, pointer swapped) and the
-    * probe of the store root answers from `gen1` alone (the sidecar
-    * and increment carries are load-bearing). Shares q138's oracle: a
-    * rewrite that loses, duplicates or re-cells a single code row
-    * lands off the recomputed top-k.
+    * into `gen1` (base and batch codes rewritten one-file-per-cell,
+    * nothing re-encoded, sidecar carried, the batch recorded as folded,
+    * no increment left, pointer swapped) and the probe of the store
+    * root answers from `gen1` alone (the sidecar and the folded batch
+    * are load-bearing). Shares q138's oracle: a rewrite that loses,
+    * duplicates or re-cells a single code row lands off the recomputed
+    * top-k.
     */
   private[queries] def q144(s: SparkSession, d: String): DataFrame = {
     val emb = t(s, d, "embeddings")

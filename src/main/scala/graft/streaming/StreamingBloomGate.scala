@@ -18,18 +18,15 @@ import org.apache.spark.sql.streaming.DataStreamWriter
   * positives — so the stream's admission set is oracle-checkable
   * bit-for-bit.
   *
-  * Exactly-once story, inherited from the other two loops with one
-  * STRICTER twist: the batch OWNS `_increments/ingest_batch=<id>`
-  * inside the index and `ingest_batch=<id>` under `admittedOut`
+  * Exactly-once story, inherited from the other two loops: the batch
+  * OWNS `_increments/ingest_batch=<id>` inside the index and
+  * `ingest_batch=<id>` under `admittedOut`
   * ([[graft.ops.Layouts.incrementDir]] /
   * [[graft.ops.Layouts.ownedBatchDir]], both overwritten wholesale),
-  * and the history read keeps only increments with `ingest_batch <
-  * id` — not merely "all but its own", because unlike the ANN/near-dup
-  * increments (history-independent encodes) the gate's OUTPUT depends
-  * on the history it judged against: batch ids are monotone, so the
-  * `<` rule reconstructs exactly the history the batch's first attempt
-  * saw even when the replay runs after later batches committed, and
-  * replays converge to identical on-disk state (spec-pinned).
+  * the history read drops only its own increment, and the admitted
+  * rows are written before the bitmap, so a replay converges to
+  * identical on-disk state (spec-pinned) — and writes nothing once a
+  * fold has folded the batch's bitmap.
   * The batch's WHOLE bitmap is appended, not just its admitted rows'
   * (identical final OR — a dropped row's bits are already set in the
   * history that dropped it — and one branch less to replay).
@@ -67,7 +64,7 @@ object StreamingBloomGate {
     val store = Layouts.openStore(spark, indexPath)
     store.append("bloomGateStream", batchId, beforeFence) { dir =>
       val (m, k, words) = Bloom.readBloomIndex(spark, store.layout,
-        historyBefore = Some(batchId))
+        excludeBatchId = Some(batchId))
       b.where(!Bloom.bloomMember(col(textCol), m, k, words))
         .write.mode("overwrite")
         .parquet(Layouts.ownedBatchDir(admittedOut, batchId))

@@ -29,7 +29,9 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
   *   - INDEX signatures land in the batch's own
   *     `_increments/ingest_batch=<id>` directory of the index layout
   *     ([[graft.ops.Dedup.writeIncrement]]), overwritten
-  *     wholesale on replay. The dedup step reads base + committed
+  *     wholesale on replay, and last: a batch whose signatures a fold
+  *     folded has complete verdicts and text, so its replay writes
+  *     nothing. The dedup step reads base + committed
   *     increments EXCLUDING the batch's own directory
   *     ([[graft.ops.Dedup.nearDupIndexWithIncrements]]), so a replayed
   *     batch sees exactly the history its first attempt saw: no
@@ -112,12 +114,13 @@ object StreamingDedup {
       // idempotent: the batch owns its verdict partition directory
       verdicts.write.mode("overwrite")
         .parquet(Layouts.ownedBatchDir(verdictsOut, batchId))
-      // the batch becomes history: signatures and text into increment
-      // directories the batch owns (overwritten wholesale on replay)
-      Dedup.writeIncrement(b, idCol, textCol, dir, numHashes, bands,
-        shingleWidth)
+      // the batch becomes history: text, then signatures LAST, into
+      // increment directories the batch owns (overwritten wholesale on
+      // replay) — a fold that folded the signatures met a complete batch
       b.write.mode("overwrite")
         .parquet(Layouts.incrementDir(corpusPath, batchId))
+      Dedup.writeIncrement(b, idCol, textCol, dir, numHashes, bands,
+        shingleWidth)
     }
   }
 

@@ -1,8 +1,9 @@
 package graft.streaming
 
-import graft.ops.{AnnIndex, Similarity}
+import graft.ops.{AnnIndex, Layouts, Similarity}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 
 /** The daily vector-ingest loop AS A STREAM — the [[StreamingDedup]]
@@ -22,7 +23,8 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
   * transactional table format, and a duplicated code row (which would
   * surface the same id twice in a top-k) cannot survive a replay.
   * [[graft.ops.AnnIndex.compact]] folds the increments into the next
-  * base generation.
+  * base generation; the increment is each batch's last write, so a
+  * batch the fold folded is complete and its replay writes nothing.
   *
   * `layoutPath` is a plain layout or a pointered store root
   * ([[graft.ops.Layouts.GenerationPointer]]). A root resolves to the
@@ -96,10 +98,9 @@ object StreamingSimilarity {
     // against a superseded generation's codebooks must not commit with
     // the batch
     idx.store.append("incrementalAnnStream", batchId, beforeFence) { dir =>
-      idx.encode(b, vecCol, Nil, dir)
       driftOut.foreach { out =>
-      // kind-aware like the append itself: a residual layout's drift
-      // is its residual reconstruction error, not the raw-PQ one
+        // kind-aware like the append itself: a residual layout's drift
+        // is its residual reconstruction error, not the raw-PQ one
         val err = Similarity.ivfPqDistortion(b, vecCol, idx.ivf, idx.pq,
           idx.residual)
         // the batch id lives in the DIRECTORY (the verdicts convention:
@@ -108,13 +109,12 @@ object StreamingSimilarity {
         // the discovered partition column on read. Driver-side write:
         // one double the driver just collected (ivfPqDistortion) — a
         // Spark job per report was pure per-batch scheduler tax.
-        graft.ops.Layouts.writeSidecar(spark,
-          graft.ops.Layouts.ownedBatchDir(out, batchId),
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("pq_err",
-              org.apache.spark.sql.types.DoubleType, nullable = false))),
-          Seq(org.apache.spark.sql.Row(err)))
+        Layouts.writeSidecar(spark, Layouts.ownedBatchDir(out, batchId),
+          StructType(Seq(StructField("pq_err", DoubleType, nullable = false))),
+          Seq(Row(err)))
       }
+      // the increment LAST, so a batch a fold folded is complete
+      idx.encode(b, vecCol, Nil, dir)
     }
   }
 

@@ -682,11 +682,12 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
         .toSeq.groupBy(_.getParent.getFileName.toString).map { case (k, v) => k -> v.size }
     }
     assert(filesPerCell(base + "/gen0").values.max > 1, "appends left no sprawl to compact")
-    // the fold writes the base one file per cell and carries the newest
-    // batch as its own directory
+    // the fold writes the base one file per cell, every batch folded
+    // and the newest, batch 2, recorded
     assert(filesPerCell(base + "/gen1", baseOnly = true).values.max == 1,
       s"compaction left multiple files per cell: ${filesPerCell(base + "/gen1", baseOnly = true)}")
-    assert(Layouts.incrementIds(spark, base + "/gen1") == Seq(2L))
+    assert(Layouts.incrementIds(spark, base + "/gen1").isEmpty)
+    assert(Layouts.foldedThrough(spark, base + "/gen1") == Some(2L))
     // rows preserved exactly (id -> cell set identical)
     def cells(gen: String) = indexRows(base + gen, "vec_id", "cell")
       .as[(Long, Long)].collect().sorted.toSeq
@@ -1241,13 +1242,14 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
         .filterNot(_.toString.contains(Layouts.IncrementsDir))
         .toSeq.groupBy(_.getParent.getFileName.toString).map { case (k, v) => k -> v.size }
     }
-    // gen1's base is one file per band; the newest day is carried as
-    // its own directory (the store's fold rule), the older one folded
+    // gen1's base is one file per band; both days are folded (the
+    // store's fold rule) and the newest, day 1, recorded
     assert(filesPerBand(base + "/gen1").values.max == 1,
       s"compaction left sprawl: ${filesPerBand(base + "/gen1")}")
-    assert(Layouts.incrementIds(spark, base + "/gen1") == Seq(1L))
+    assert(Layouts.incrementIds(spark, base + "/gen1").isEmpty)
+    assert(Layouts.foldedThrough(spark, base + "/gen1") == Some(1L))
     assert(spark.read.parquet(base + "/gen1").select("id").distinct()
-      .as[Long].collect().sorted.toSeq == Seq(0L, 2L, 10L))
+      .as[Long].collect().sorted.toSeq == Seq(0L, 2L, 10L, 20L))
     // meta carried, rows identical, and an incremental query against
     // the compacted generation answers the same
     assert(graft.ops.Dedup.readNearDupIndexMeta(spark, base + "/gen1")
@@ -2776,15 +2778,16 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
     assert(e.getMessage.startsWith("append") && e.getMessage.contains("moved off") &&
       e.getMessage.contains("same batch id"), e.getMessage)
-    // the retry under the same id on a reopened handle rewrites its own
-    // directory in the live generation: every id stored exactly once
+    // the retry under the same id on a reopened handle finds the batch
+    // folded and recorded, and writes nothing: every id stored exactly once
     AnnIndex.open(spark, root, "vec_id").append(batch, "embedding", 5L)
     assert(Layouts.currentGenerationName(spark, root) == "gen1")
     val counts = indexRows(root + "/gen1", "vec_id").groupBy("vec_id").count()
       .as[(Long, Long)].collect().toMap
     assert(counts.keySet == ((0L until 64L) ++ (1000L until 1024L)).toSet)
     assert(counts.values.forall(_ == 1L), s"ids stored twice: ${counts.filter(_._2 > 1)}")
-    assert(Layouts.incrementIds(spark, root + "/gen1") == Seq(5L))
+    assert(Layouts.incrementIds(spark, root + "/gen1").isEmpty)
+    assert(Layouts.foldedThrough(spark, root + "/gen1") == Some(5L))
   }
 
   test("a batch near-dup append whose fence meets a fold retries idempotently under its batch id") {
@@ -2815,7 +2818,8 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(perBand.map(_._1).distinct.sorted.toSeq == Seq(0L, 1L, 10L, 11L))
     assert(perBand.length == 4 * 32 && perBand.forall(_._2 == 1L),
       s"signatures stored twice: ${perBand.filter(_._2 > 1).toSeq}")
-    assert(Layouts.incrementIds(spark, root + "/gen1") == Seq(3L))
+    assert(Layouts.incrementIds(spark, root + "/gen1").isEmpty)
+    assert(Layouts.foldedThrough(spark, root + "/gen1") == Some(3L))
   }
 
   // a keep = Seq("grp") IVF-PQ root over ids 0-79 (grp = id % 3) and
@@ -2857,18 +2861,71 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     import spark.implicits._
     val (root, sample) = grpIndex("graft_oldid", 73)
     def idx() = AnnIndex.open(spark, root, "vec_id")
+    // the layout keeps grp, so a fold needs it in every increment
+    val keep = Seq("grp")
     val b1 = sample(20, 100L)
-    idx().append(sample(20, 80L), "embedding", 0L)
-    idx().append(b1, "embedding", 1L)
+    idx().append(sample(20, 80L), "embedding", 0L, keep)
+    idx().append(b1, "embedding", 1L, keep)
     val e = intercept[IllegalArgumentException](
-      idx().append(sample(20, 120L), "embedding", 0L))
+      idx().append(sample(20, 120L), "embedding", 0L, keep))
     assert(e.getMessage.startsWith("append: batch id 0 is below 1") &&
       e.getMessage.contains("nothing was written"), e.getMessage)
-    def ids() = indexRows(root + "/gen0", "vec_id").as[Long].collect().sorted.toSeq
-    assert(ids() == (0L until 120L))
+    def ids(gen: String) = indexRows(root + gen, "vec_id").as[Long].collect().sorted.toSeq
+    assert(ids("/gen0") == (0L until 120L))
     // the newest id is a retry, and stays allowed
-    idx().append(b1, "embedding", 1L)
-    assert(ids() == (0L until 120L))
+    idx().append(b1, "embedding", 1L, keep)
+    assert(ids("/gen0") == (0L until 120L))
+    // after a fold through batch 1, the fold record stands in for the
+    // newest increment: 0 refuses, 1 is the replay of a folded batch
+    // and writes nothing, 2 appends
+    assert(idx().compact() == root + "/gen1")
+    assert(Layouts.foldedThrough(spark, root + "/gen1") == Some(1L))
+    val e2 = intercept[IllegalArgumentException](
+      idx().append(sample(20, 120L), "embedding", 0L, keep))
+    assert(e2.getMessage.startsWith("append: batch id 0 is below 1") &&
+      e2.getMessage.contains("nothing was written"), e2.getMessage)
+    def files(): Set[String] = {
+      import scala.jdk.CollectionConverters._
+      val dir = java.nio.file.Paths.get(root, "gen1")
+      java.nio.file.Files.walk(dir).iterator().asScala
+        .map(p => dir.relativize(p).toString).toSet
+    }
+    val before = files()
+    idx().append(b1, "embedding", 1L, keep)
+    assert(files() == before, "the replay of a folded batch wrote into gen1")
+    idx().append(sample(20, 120L), "embedding", 2L, keep)
+    assert(Layouts.incrementIds(spark, root + "/gen1") == Seq(2L))
+    assert(ids("/gen1") == (0L until 140L))
+  }
+
+  test("a fold fails, swapping nothing, when an append writes into the generation while it reads") {
+    import spark.implicits._
+    def doc(id: Long) = Seq((id, s"document $id with words that match nothing else stored"))
+      .toDF("doc_id", "text")
+    val root = java.nio.file.Files.createTempDirectory("graft_foldrace").toString
+    Dedup.writeNearDupIndex(doc(0L), "doc_id", "text", root + "/gen0")
+    Layouts.swapGenerationPointer(spark, root, "gen0")
+    Dedup.appendNearDupIndex(doc(10L), "doc_id", "text", root, 0L)
+    val racer = Layouts.incrementDir(root + "/gen0", 1L)
+    // an append that passed its marker check before the fold took the
+    // marker: it commits while the fold reads, or is still staged after
+    val races = Seq[(() => Unit, String)](
+      (() => Dedup.writeIncrement(doc(11L), "doc_id", "text", racer, 128, 32, 3),
+        "an append wrote into"),
+      (() => assert(new java.io.File(racer + "/_temporary").mkdirs()), "_temporary"))
+    for ((race, why) <- races) {
+      val e = intercept[IllegalStateException] {
+        Layouts.openStore(spark, root).fold("test")(_ => race())
+      }
+      assert(e.getMessage.contains(why), e.getMessage)
+      assert(Layouts.currentGenerationName(spark, root) == "gen0")
+      assert(!Layouts.exists(spark, root + "/gen0/" + Layouts.QuiesceMarker))
+      Layouts.delete(spark, racer)
+    }
+    assert(Dedup.compactNearDupIndex(spark, root) == root + "/gen1")
+    assert(Layouts.foldedThrough(spark, root + "/gen1") == Some(0L))
+    assert(indexRows(root + "/gen1", "id").as[Long].collect().distinct.sorted.toSeq ==
+      Seq(0L, 10L))
   }
 
   test("a sidecar overwrite keeps the old sidecar until the new one is written") {
@@ -3116,7 +3173,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(e.getMessage.contains("shortlist"), e.getMessage)
   }
 
-  test("refine reads what probe reads: a carried batch ranks, an increment without the vector refuses") {
+  test("refine reads what probe reads: a folded batch ranks, an increment without the vector refuses") {
     import spark.implicits._
     val emb = (0L until 200L).map(i =>
       (i, Array.tabulate(16)(j => math.sin(i * 0.37 + j) + math.cos(i * 0.11 * j))))
@@ -3131,9 +3188,10 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     Layouts.swapGenerationPointer(spark, root, "gen0")
     AnnIndex.open(spark, root, "vec_id").append(batch, "embedding", 0L,
       keep = Seq("embedding"))
-    // the fold carries the (newest) batch as its own directory
+    // the fold folds the batch, vectors kept, into gen1's base
     AnnIndex.open(spark, root, "vec_id").compact()
-    assert(Layouts.incrementIds(spark, root + "/gen1") == Seq(0L))
+    assert(Layouts.incrementIds(spark, root + "/gen1").isEmpty)
+    assert(Layouts.foldedThrough(spark, root + "/gen1") == Some(0L))
     // the query IS batch row 100: every cell probed and a shortlist
     // covering every row make refine exact search over corpus ∪ batch
     val q = emb.where(col("vec_id") === 100L).select("embedding")
@@ -3226,10 +3284,11 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       "a refused compaction must release the marker")
     new java.io.File(base + "/gen1/_temporary").delete()
     assert(AnnIndex.open(spark, base, "vec_id").compact() == base + "/gen2")
-    // base ∪ increments: the newest streamed batch is carried, not folded
+    // base ∪ increments: every streamed batch folded, the newest recorded
     assert(Layouts.withIncrements(spark, spark.read.parquet(base + "/gen2"),
       base + "/gen2", Seq("vec_id"), None).count() == 64 + 24 * 5)
-    assert(Layouts.incrementIds(spark, base + "/gen2") == Seq(4L))
+    assert(Layouts.incrementIds(spark, base + "/gen2").isEmpty)
+    assert(Layouts.foldedThrough(spark, base + "/gen2") == Some(4L))
   }
 
   test("fanOutByKey width estimate matches the planner (r22: no double planning)") {

@@ -439,13 +439,14 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
       .as[(Long, Long)].collect().toSeq.sorted
     assert(expected == Seq(30L -> 21L, 31L -> 10L))
     // compaction folds the increments into the next generation: the
-    // compacted layout answers the same history as the faces, with the
-    // newest batch carried as its own increment directory
+    // compacted layout answers the same history as the faces, with
+    // every batch folded and the newest, batch 1, recorded
     assert(graft.ops.Dedup.compactNearDupIndex(spark, base + "/idx") ==
       base + "/idx/gen1")
     assert(graft.ops.Dedup.nearDupIndexWithIncrements(spark, base + "/idx")
       .select("id").distinct().count() == 6)
-    assert(graft.ops.Layouts.incrementIds(spark, base + "/idx/gen1") == Seq(1L))
+    assert(graft.ops.Layouts.incrementIds(spark, base + "/idx/gen1").isEmpty)
+    assert(graft.ops.Layouts.foldedThrough(spark, base + "/idx/gen1") == Some(1L))
   }
 
   test("streaming ANN ingest: stored-codebook appends, restart resumes, drift reported, replay converges") {
@@ -543,8 +544,9 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     val gen1 = root + "/gen1"
     assert(graft.ops.Layouts.withIncrements(spark, spark.read.parquet(gen1),
       gen1, Seq("vec_id", "cell", "code"), None).count() == 60)
-    // the newest batch is carried as its own directory, not folded
-    assert(graft.ops.Layouts.incrementIds(spark, gen1) == Seq(1L))
+    // every batch is folded; the newest, batch 1, is recorded
+    assert(graft.ops.Layouts.incrementIds(spark, gen1).isEmpty)
+    assert(graft.ops.Layouts.foldedThrough(spark, gen1) == Some(1L))
     val compacted = annProbe(root + "/gen1", query, k = 8, nprobe = 4)
       .as[(Long, Double)].collect().toSeq
     assert(compacted == atRest, s"$compacted vs $atRest")
@@ -647,8 +649,9 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     val annGen1 = base + "/ann/gen1"
     assert(Layouts.withIncrements(spark, spark.read.parquet(annGen1), annGen1,
       Seq("vec_id", "cell", "code"), None).count() == 25)
-    // the newest (here: only) batch is carried as its own directory
-    assert(Layouts.incrementIds(spark, annGen1) == Seq(0L))
+    // the only batch is folded and recorded
+    assert(Layouts.incrementIds(spark, annGen1).isEmpty)
+    assert(Layouts.foldedThrough(spark, annGen1) == Some(0L))
     // the in-flight handshake: an increment directory holding an
     // uncommitted write (Spark's _temporary staging) refuses the fold
     // even though the marker was free — folding a half-written batch
@@ -688,7 +691,8 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(!Layouts.exists(spark, base + "/idx/gen0/" + Layouts.QuiesceMarker))
     assert(Dedup.nearDupIndexWithIncrements(spark, base + "/idx")
       .select("id").distinct().count() == 3)
-    assert(Layouts.incrementIds(spark, base + "/idx/gen1") == Seq(7L))
+    assert(Layouts.incrementIds(spark, base + "/idx/gen1").isEmpty)
+    assert(Layouts.foldedThrough(spark, base + "/idx/gen1") == Some(7L))
   }
 
   test("sidecar cache: one read serves N same-generation batches, a rewrite invalidates") {
@@ -940,8 +944,8 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
       .select(col("ingest_batch").cast("long"), col("doc_id"))
       .as[(Long, Long)].collect().toSet
     assert(replayed == admitted, s"$replayed")
-    // compaction folds all but the NEWEST increment into the base row;
-    // the full OR is bit-identical, so the gate's behavior is unchanged
+    // compaction folds every increment into the base row; the full OR
+    // is bit-identical, so the gate's behavior is unchanged
     val (m, k, words) = Bloom.readBloomIndex(spark, base + "/index")
     assert(Bloom.compactBloomIndex(spark, base + "/index") ==
       base + "/index/gen1")
@@ -949,17 +953,18 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert((m2, k2) == (m, k) && w2.toSeq == words.toSeq)
     assert(spark.read.parquet(base + "/index/gen1").count() == 1)
     // replay safety ACROSS the fold: the newest batch (the only one
-    // Structured Streaming can still replay) was carried verbatim, not
-    // folded — its replay against the compacted index judges history
-    // = base-without-its-own-bits and converges; a fold of everything
-    // would have made it judge against itself and drop epsilon
-    assert(Layouts.incrementIds(spark, base + "/index/gen1") == Seq(1L))
+    // Structured Streaming can still replay) is folded and recorded, so
+    // its replay writes nothing — judging it against the compacted
+    // index would meet its own bits and drop epsilon
+    assert(Layouts.incrementIds(spark, base + "/index/gen1").isEmpty)
+    assert(Layouts.foldedThrough(spark, base + "/index/gen1") == Some(1L))
     StreamingBloomGate.ingestBatch(
       Seq(200L -> "delta", 201L -> "epsilon").toDF("doc_id", "text"), 1L,
-      base + "/index", "text", base + "/admitted2")
-    val replayedPost = spark.read.parquet(base + "/admitted2")
-      .select(col("doc_id")).as[Long].collect().toSet
-    assert(replayedPost == Set(201L), s"$replayedPost")
+      base + "/index", "text", base + "/admitted")
+    val replayedPost = spark.read.parquet(base + "/admitted")
+      .select(col("ingest_batch").cast("long"), col("doc_id"))
+      .as[(Long, Long)].collect().toSet
+    assert(replayedPost == admitted, s"$replayedPost")
     // a quiesced index refuses the streaming step (replay-after-fold)
     Layouts.acquireQuiesce(spark, base + "/index/gen1", "test")
     val eQ = intercept[IllegalStateException] {
@@ -1039,7 +1044,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     graft.ops.Layouts.withIncrements(spark, spark.read.parquet(gen), gen,
       Seq("vec_id"), None)
 
-  test("fold/replay (ANN): a compaction inside a batch's fence window carries the batch; the replay stores each id once") {
+  test("fold/replay (ANN): a compaction inside a batch's fence window folds the batch; the replay stores each id once") {
     import spark.implicits._
     import graft.ops.Layouts
     import graft.streaming.StreamingSimilarity
@@ -1053,14 +1058,16 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
         "embedding", None, () => AnnIndex.open(spark, root, "vec_id").compact())
     }
     assert(e.getMessage.contains("moved off"), e.getMessage)
-    // the checkpoint never committed, so the batch replays — into its
-    // carried directory in gen1, not beside a folded copy
+    // the checkpoint never committed, so the batch replays — and
+    // writes nothing: the fold recorded it, so no copy lands beside
+    // the folded one
     StreamingSimilarity.ingestBatch(batch, 0L, root, "vec_id", "embedding", None)
     val rows = annRows(root + "/gen1")
     assert(rows.count() == 25, s"${rows.count()} rows for 25 ids")
     assert(rows.distinct().count() == 25)
-    assert(Layouts.incrementIds(spark, root + "/gen1") == Seq(0L))
-    // tombstoning every row of the carried increment leaves a readable
+    assert(Layouts.incrementIds(spark, root + "/gen1").isEmpty)
+    assert(Layouts.foldedThrough(spark, root + "/gen1") == Some(0L))
+    // tombstoning every row of the folded batch leaves a readable
     // generation (the retired ids are gone, the base is intact)
     AnnIndex.open(spark, root, "vec_id").compact(dropIds = Some(batch.select("vec_id")))
     assert(annRows(root + "/gen2").count() == 20)
@@ -1095,22 +1102,22 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(e.getMessage.contains("moved off"), e.getMessage)
     val first = verdicts()
     assert(first == Seq(3L -> 10L))
-    // the replay judges against gen1 minus its own carried directory —
-    // the history its first attempt saw, so the twins stay unique
+    // the fold recorded batch 5, so the replay writes nothing: the
+    // first attempt's verdicts stand and the twins stay unique
     run(() => ())
     assert(verdicts() == first)
     val idx = Dedup.nearDupIndexWithIncrements(spark, base + "/idx")
     assert(idx.select("id").distinct().count() == 5)
     assert(idx.count() == idx.select("id", "band").distinct().count(),
       "an id's signatures are stored twice")
-    // tombstoning every row of the carried increment leaves a readable
+    // tombstoning every row of the folded batch leaves a readable
     // generation
     Dedup.compactNearDupIndex(spark, base + "/idx", dropIds = Some(b.select("doc_id")))
     assert(Dedup.nearDupIndexWithIncrements(spark, base + "/idx")
       .select("id").distinct().count() == 2)
   }
 
-  test("near-dup batch faces keep the newest streamed batch after a fold carries it") {
+  test("near-dup batch faces keep the newest streamed batch after a fold folds it") {
     import spark.implicits._
     import graft.ops.{Dedup, Layouts, Sampling}
     import graft.streaming.StreamingDedup
@@ -1128,9 +1135,10 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     val batch = Seq((20L, t0 + " extra"), (21L, u1)).toDF("doc_id", "text")
     StreamingDedup.ingestBatch(batch, 0L, base + "/corpus", base + "/idx",
       base + "/out", "doc_id", "text", 0.8, 128, 32, 3, 4L << 20)
-    // the fold carries batch 0, the newest, as gen1's own increment
+    // the fold folds batch 0, the newest, into gen1's base
     Dedup.compactNearDupIndex(spark, base + "/idx")
-    assert(Layouts.incrementIds(spark, base + "/idx/gen1") == Seq(0L))
+    assert(Layouts.incrementIds(spark, base + "/idx/gen1").isEmpty)
+    assert(Layouts.foldedThrough(spark, base + "/idx/gen1") == Some(0L))
     val docs = corpus.unionByName(batch)
     val pairs = Dedup.nearDupPairsFromIndex(base + "/idx", docs, "doc_id", "text")
       .select("id_a", "id_b").as[(Long, Long)].collect().toSeq
@@ -1162,15 +1170,17 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(Layouts.incrementIds(spark, root + "/gen0") == Seq(0L))
     assert(annRows(root + "/gen0").count() == 20)
     assert(annProbe(root, Array.fill(8)(0.5), k = 30, nprobe = 2).count() == 20)
-    // the fold reads past the empty batch 0 and carries batch 1
+    // the fold reads past the empty batch 0 and folds batch 1
     ingest(batch, 1L)
     AnnIndex.open(spark, root, "vec_id").compact()
-    assert(Layouts.incrementIds(spark, root + "/gen1") == Seq(1L))
+    assert(Layouts.incrementIds(spark, root + "/gen1").isEmpty)
+    assert(Layouts.foldedThrough(spark, root + "/gen1") == Some(1L))
     assert(annRows(root + "/gen1").count() == 25)
-    // an empty newest batch is not carried
+    // an empty newest batch folds to nothing, and is recorded
     ingest(batch.limit(0), 2L)
     AnnIndex.open(spark, root, "vec_id").compact()
     assert(Layouts.incrementIds(spark, root + "/gen2").isEmpty)
+    assert(Layouts.foldedThrough(spark, root + "/gen2") == Some(2L))
     assert(annRows(root + "/gen2").count() == 25)
   }
 
@@ -1195,7 +1205,8 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     StreamingBloomGate.ingestBatch(batch, 0L, base + "/index", "text",
       base + "/admitted")
     assert(admitted() == first)
-    assert(Layouts.incrementIds(spark, base + "/index/gen1") == Seq(0L))
+    assert(Layouts.incrementIds(spark, base + "/index/gen1").isEmpty)
+    assert(Layouts.foldedThrough(spark, base + "/index/gen1") == Some(0L))
   }
 
   test("marker at the fence: a compaction taking the marker after a batch's writes fails the batch, ANN and near-dup") {
@@ -1234,5 +1245,58 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     run(() => ())
     assert(Dedup.nearDupIndexWithIncrements(spark, base + "/idx")
       .select("id").distinct().count() == 2)
+  }
+
+  test("write order: a batch that fails before its increment keeps its side output across a fold, ANN and near-dup") {
+    import spark.implicits._
+    import graft.ops.{Dedup, Layouts}
+    import graft.streaming.{StreamingDedup, StreamingSimilarity}
+    // a regular file where a directory must go fails that write
+    def block(path: String): Unit = {
+      new java.io.File(path).getParentFile.mkdirs()
+      assert(new java.io.File(path).createNewFile())
+    }
+    // --- ANN: the drift report fails, so its increment was never written
+    val root = tmp("graft_orderann").getAbsolutePath
+    annStore(root)
+    val drift = tmp("graft_orderdrift").getAbsolutePath + "/drift"
+    val batch = foldVecs(5, 100L).toDF("vec_id", "embedding")
+    block(drift)
+    intercept[Exception] {
+      StreamingSimilarity.ingestBatch(batch, 0L, root, "vec_id", "embedding", Some(drift))
+    }
+    assert(Layouts.incrementIds(spark, root + "/gen0").isEmpty)
+    AnnIndex.open(spark, root, "vec_id").compact()
+    Layouts.delete(spark, drift)
+    StreamingSimilarity.ingestBatch(batch, 0L, root, "vec_id", "embedding", Some(drift))
+    assert(Layouts.exists(spark, Layouts.ownedBatchDir(drift, 0L)),
+      "the replay of a batch whose increment was never folded writes its report")
+    assert(annRows(root + "/gen1").count() == 25)
+    assert(annRows(root + "/gen1").distinct().count() == 25)
+    // --- near-dup: the corpus text fails, so the signatures were never written
+    val base = tmp("graft_orderdedup").getAbsolutePath
+    val corpus = Seq((10L, "the quick brown fox jumps over the lazy dog today"))
+      .toDF("doc_id", "text")
+    corpus.write.parquet(base + "/corpus")
+    Dedup.writeNearDupIndex(corpus, "doc_id", "text", base + "/idx/gen0")
+    Layouts.swapGenerationPointer(spark, base + "/idx", "gen0")
+    val db = Seq((1L, "fresh batch text matching nothing stored anywhere yet"),
+      (2L, "another new document with its own words in the batch")).toDF("doc_id", "text")
+    def run(): Unit = StreamingDedup.ingestBatch(db, 0L, base + "/corpus",
+      base + "/idx", base + "/out", "doc_id", "text", 0.8, 128, 32, 3, 4L << 20)
+    block(base + "/corpus/" + Layouts.IncrementsDir)
+    intercept[Exception](run())
+    assert(Layouts.incrementIds(spark, base + "/idx/gen0").isEmpty)
+    Dedup.compactNearDupIndex(spark, base + "/idx")
+    Layouts.delete(spark, base + "/corpus/" + Layouts.IncrementsDir)
+    run()
+    val text = Layouts.withIncrements(spark, spark.read.parquet(base + "/corpus"),
+      base + "/corpus", Seq("doc_id", "text"), None)
+    assert(text.select("doc_id").as[Long].collect().sorted.toSeq == Seq(1L, 2L, 10L),
+      "the replay of a batch whose signatures were never folded writes its text")
+    val idx = Dedup.nearDupIndexWithIncrements(spark, base + "/idx")
+    assert(idx.select("id").distinct().count() == 3)
+    assert(idx.count() == idx.select("id", "band").distinct().count(),
+      "an id's signatures are stored twice")
   }
 }
