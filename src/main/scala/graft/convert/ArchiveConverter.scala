@@ -1,10 +1,11 @@
 package graft.convert
 
 import graft.core.{ArchiveChunk, ArchiveEntry, ArchiveSchema, ConvertOptions, IncludeType}
-import graft.functions.GraftFunctions
+import graft.functions.{DigestCacheMiss, GraftFunctions, RunStart}
 import graft.ops.Quality
 import graft.sources.ArchiveTable
 import org.apache.spark.sql.graft.GraftShims
+import org.apache.spark.sql.graft.GraftShims.{column, expression}
 import org.apache.spark.sql.{DataFrame, Dataset, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.LongAccumulator
@@ -16,7 +17,10 @@ import org.apache.spark.util.LongAccumulator
   * archive source scan (recursive walk)                   // one partition per input
   *       -> coalesce(width)                               // narrow
   *       -> filter(text/binary, size range)               // narrow
-  *       -> [dropDuplicates(hash)]                        // 1 shuffle
+  *       -> [filter(digest_cache_miss(hash))              // narrow, 2 MiB per task
+  *       -> repartition(hash)                             // 1 shuffle
+  *       -> sortWithinPartitions(hash)
+  *       -> filter(run_start(hash))]                      // narrow
   *       -> write.parquet                                 // task-per-partition
   * }}}
   *
@@ -30,16 +34,21 @@ import org.apache.spark.util.LongAccumulator
   *     `parallelism` inputs walk at once; inputs stream through
   *     decompressors, an archive is never materialized;
   *   - zero shuffles without `unique`; exactly one hash-partitioned
-  *     exchange with it. Spark's `dropDuplicates("hash")` plans a
-  *     two-phase SortAggregate (SortAggregate <- Sort <- Exchange <-
+  *     exchange and one sort with it ([[uniqueByHash]]), and no
+  *     aggregate. Spark's `dropDuplicates("hash")` plans a two-phase
+  *     SortAggregate (SortAggregate <- Sort <- Exchange <-
   *     SortAggregate <- Sort; a `first` buffer over the binary and
-  *     string columns is not fixed-width, so HashAggregate is out):
-  *     the partial phase keeps ONE row per distinct hash per
-  *     partition, so duplicate content crosses the wire at most once,
-  *     and the external sort spills instead of holding the reference's
-  *     unbounded in-memory HashSet (src/sink.rs:59-73). The final sort
-  *     leaves each output file ordered by hash, so a hash lookup skips
-  *     pages by their statistics.
+  *     string columns is not fixed-width, so HashAggregate is out),
+  *     which copies every row's content into a sorter and into
+  *     `first` buffers on both sides of the exchange. Instead a
+  *     bounded task-local digest cache drops repeats before the
+  *     exchange, and a run-start filter over the reduce side's sort
+  *     keeps one row per hash exactly. The external sort spills
+  *     instead of holding the reference's unbounded in-memory HashSet
+  *     (src/sink.rs:59-73), and leaves each output file ordered by
+  *     hash, so a hash lookup skips pages by their statistics. The
+  *     streaming converter keeps `dropDuplicates("hash")`: a stream
+  *     needs its dedup state across micro-batches.
   *     (A zero-content-shuffle design — elect winner row-ids by hash,
   *     route the id set back to each partition — was considered and
   *     rejected: it either recomputes the walk (2× read+decompress)
@@ -257,7 +266,8 @@ object ArchiveConverter {
 
   /** Entries with the reference's F1/F2 predicates applied
     * (half-open size range `min <= size < max`, src/batch.rs:182-197;
-    * UTF-8 text/binary content filter, src/batch.rs:162-180).
+    * UTF-8 text/binary content filter, src/batch.rs:162-180), then
+    * with `unique` one row per `hash` ([[uniqueByHash]]).
     */
   def filteredEntries(
       spark: SparkSession,
@@ -311,11 +321,12 @@ object ArchiveConverter {
           col("http_status"), col("http_content_type"),
           col("n_blocks"), col("n_content"))
     }
-    gates(df, opts)
+    val gated = gates(df, opts)
+    if (opts.unique) uniqueByHash(gated) else gated
   }
 
-  /** The include/size gates and `unique` dedup, shared by
-    * [[filteredEntries]] and the streaming converter.
+  /** The include/size gates, shared by [[filteredEntries]] and the
+    * streaming converter (each adds its own `unique` dedup).
     */
   private[graft] def gates(entries: DataFrame, opts: ConvertOptions): DataFrame = {
     var df = entries
@@ -331,9 +342,25 @@ object ArchiveConverter {
         val hi = mx.getOrElse(Long.MaxValue)
         df = df.filter(col("size") >= lo && col("size") < hi)
     }
-    if (opts.unique) df = df.dropDuplicates("hash")
     df
   }
+
+  /** One row per `hash`, with one sort and no aggregate:
+    * [[graft.functions.DigestCacheMiss]] drops the repeats a task has
+    * already seen before they reach the exchange,
+    * `repartition(col("hash"))` sends every copy of a digest to one
+    * partition (AQE only coalesces such partitions, never splits
+    * them), and over the partition sorted by `hash`
+    * [[graft.functions.RunStart]] keeps the first row of each run. The
+    * cache can only fail to drop a repeat, so the run filter makes the
+    * result exact; null `hash` counts as one value, as in
+    * `dropDuplicates`. Each output partition stays ordered by `hash`.
+    */
+  private[graft] def uniqueByHash(df: DataFrame): DataFrame =
+    df.where(column(DigestCacheMiss(expression(col("hash")))))
+      .repartition(col("hash"))
+      .sortWithinPartitions("hash")
+      .where(column(RunStart(expression(col("hash")))))
 
   /** Full conversion: walk, filter, dedup, write Parquet. Stats are
     * collected during the single write pass (no output re-scan). Fails

@@ -2,7 +2,8 @@ package graft.functions
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -25,6 +26,108 @@ case class IsUtf8(child: Expression) extends UnaryExpression {
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     defineCodeGen(ctx, ev, c => s"graft.functions.Utf8.isValid($c)")
   override protected def withNewChildInternal(newChild: Expression): IsUtf8 = copy(child = newChild)
+}
+
+/** Task-local direct-mapped cache of 32-byte digests: 2^16 slots of
+  * 32 bytes (2 MiB), the slot picked by the digest's first two bytes.
+  * [[admit]] is false only when the slot already holds the same 32
+  * bytes; otherwise the digest overwrites the slot and is admitted.
+  * A false answer therefore always means "seen before in this task",
+  * while a true one may be a duplicate that a colliding digest
+  * evicted: the cache can only fail to drop, never drop a new digest.
+  */
+final class DigestCache {
+  private val slots = new Array[Byte](DigestCache.Slots * DigestCache.Width)
+  // an empty slot is zeros, and only a digest starting 0x0000 maps to
+  // slot 0; one non-zero byte there keeps the all-zero digest a miss
+  slots(0) = 1
+
+  def admit(d: Array[Byte]): Boolean = {
+    if (d == null || d.length != DigestCache.Width) return true
+    val at = ((d(0) & 0xff) << 8 | (d(1) & 0xff)) * DigestCache.Width
+    if (java.util.Arrays.equals(slots, at, at + DigestCache.Width, d, 0, DigestCache.Width)) false
+    else {
+      System.arraycopy(d, 0, slots, at, DigestCache.Width)
+      true
+    }
+  }
+}
+
+object DigestCache {
+  final val Width = 32
+  final val Slots = 1 << 16
+}
+
+/** The previous row's key in a task, copied, for [[RunStart]]: [[starts]]
+  * is true when `k` differs from it (the first row always starts a
+  * run; null equals null).
+  */
+final class RunKey {
+  private var seen = false
+  private var prev: Array[Byte] = null
+
+  def starts(k: Array[Byte]): Boolean =
+    if (seen && java.util.Arrays.equals(prev, k)) false
+    else {
+      seen = true
+      prev = if (k == null) null else k.clone()
+      true
+    }
+}
+
+/** A boolean filter over a binary key whose answer depends on the rows
+  * the task saw before: the state object is allocated at partition
+  * init (codegen'd and interpreted alike) and `test` asks it. The key
+  * must be binary.
+  */
+sealed abstract class TaskKeyFilter[S <: AnyRef](stateClass: Class[S], method: String)
+    extends UnaryExpression with Nondeterministic with Serializable {
+  protected def newState(): S
+  protected def test(state: S, key: Array[Byte]): Boolean
+  override def dataType: DataType = BooleanType
+  override def nullable: Boolean = false
+  @transient private[this] var state: S = _
+  override protected def initializeInternal(partitionIndex: Int): Unit = state = newState()
+  override protected def evalInternal(input: InternalRow): Any =
+    test(state, child.eval(input).asInstanceOf[Array[Byte]])
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val cls = stateClass.getName
+    val st = ctx.addMutableState(cls, "keyFilterState", forceInline = true)
+    ctx.addPartitionInitializationStatement(s"$st = new $cls();")
+    val c = child.genCode(ctx)
+    ev.copy(isNull = FalseLiteral, code = code"""
+      ${c.code}
+      boolean ${ev.value} = $st.$method(${c.isNull} ? null : ${c.value});""")
+  }
+}
+
+/** `digest_cache_miss(binary) -> boolean` — the map-side half of the
+  * converter's `unique` dedup: false only for a digest this task has
+  * already seen and still caches ([[DigestCache]]), so a filter on it
+  * drops repeats before the hash exchange. A null or non-32-byte value
+  * is always kept.
+  */
+case class DigestCacheMiss(child: Expression)
+    extends TaskKeyFilter(classOf[DigestCache], "admit") {
+  override def prettyName: String = "digest_cache_miss"
+  override protected def newState(): DigestCache = new DigestCache
+  override protected def test(c: DigestCache, key: Array[Byte]): Boolean = c.admit(key)
+  override protected def withNewChildInternal(newChild: Expression): DigestCacheMiss =
+    copy(child = newChild)
+}
+
+/** `run_start(binary) -> boolean` — the reduce-side half of the
+  * converter's `unique` dedup: true when the key differs from the
+  * previous row's key in the task ([[RunKey]]; null counts as one
+  * value). Over rows sorted by the key within a partition that holds
+  * every copy of it, a filter on it keeps exactly one row per key.
+  */
+case class RunStart(child: Expression) extends TaskKeyFilter(classOf[RunKey], "starts") {
+  override def prettyName: String = "run_start"
+  override protected def newState(): RunKey = new RunKey
+  override protected def test(r: RunKey, key: Array[Byte]): Boolean = r.starts(key)
+  override protected def withNewChildInternal(newChild: Expression): RunStart =
+    copy(child = newChild)
 }
 
 /** `format_kind(binary) -> string` — two-stage magic-byte sniff of a

@@ -59,15 +59,17 @@ object StreamingConverter {
 
   /** The walked entry stream: the batch source's per-input walk
     * (`skipErrors` containment included) and the batch converter's
-    * include/size/unique gates.
+    * include/size gates. `unique` is the stateful
+    * `dropDuplicates("hash")`, which dedups across micro-batches.
     */
   def entryStream(spark: SparkSession, pathDir: String, opts: ConvertOptions): DataFrame = {
     import spark.implicits._
-    ArchiveConverter.gates(
+    val gated = ArchiveConverter.gates(
       pathStream(spark, pathDir)
         .flatMap(p => ArchivePartitionReader.entries(p, opts, None))
         .toDF(),
       opts)
+    if (opts.unique) gated.dropDuplicates("hash") else gated
   }
 
   /** WARC → HTTP-payload ingestion as a STREAM — the crawl stack's

@@ -2,6 +2,8 @@ package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project, SubqueryAlias}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.columnar.{CachedRDDBuilder, InMemoryRelation}
 import org.apache.spark.sql.execution.datasources.{FilePartition, HadoopFsRelation, LogicalRelation}
 
 /** Partition-width probe for [[graft.ops.Layouts.fanOutByKey]] that
@@ -24,49 +26,76 @@ import org.apache.spark.sql.execution.datasources.{FilePartition, HadoopFsRelati
   * model. So does a session whose split configuration makes
   * `maxSplitBytes` non-positive (neither `maxPartitionBytes` nor
   * `openCostInBytes` is value-checked), where the split math has no
-  * step. Parity with the planner is pinned in OpsSpec ("fanOutByKey
-  * width estimate").
+  * step. A cached frame (the chain ends at an `InMemoryRelation`) is
+  * answered from the physical plan the cache already holds, see
+  * [[cachedWidth]]. Parity with the planner is pinned in OpsSpec
+  * ("fanOutByKey width estimate", "… of a cached frame").
   */
 object ScanWidth {
 
   def estimate(df: DataFrame): Option[Int] = {
     @annotation.tailrec
-    def rel(p: LogicalPlan): Option[HadoopFsRelation] = p match {
+    def leaf(p: LogicalPlan): LogicalPlan = p match {
+      case _: Project | _: Filter | _: SubqueryAlias => leaf(p.children.head)
+      case _ => p
+    }
+    // the plan with cached subtrees swapped in (the lazy value the
+    // optimizer starts from); it refuses a stream, which keeps the
+    // analyzed plan and so declines
+    val qe = df.queryExecution
+    leaf(if (df.isStreaming) qe.analyzed else qe.withCachedData) match {
+      case m: InMemoryRelation => cachedWidth(m.cacheBuilder)
       case l: LogicalRelation =>
         l.relation match {
           case h: HadoopFsRelation
-              if h.partitionSchema.isEmpty && h.bucketSpec.isEmpty => Some(h)
+              if h.partitionSchema.isEmpty && h.bucketSpec.isEmpty => splitWidth(df, h)
           case _ => None
         }
-      case _: Project | _: Filter | _: SubqueryAlias => rel(p.children.head)
       case _ => None
     }
-    rel(df.queryExecution.analyzed).flatMap { r =>
-      val spark = df.sparkSession
-      val lens = r.location.listFiles(Nil, Nil).flatMap(_.files).map(_.getLen)
-      val openCost = spark.sessionState.conf.filesOpenCostInBytes
-      val totalBytes: Long = lens.map(_ + openCost).sum
-      val maxSplit: Long = FilePartition.maxSplitBytes(spark, totalBytes)
-      // a zero split size has no step to split by: decline
-      Option.when(maxSplit > 0) {
-        // parquet is splitable: every file splits at maxSplit boundaries,
-        // splits sort by length descending, then Next-Fit-Decreasing
-        // packing charges openCost per split on top of its length
-        val splits = lens.iterator.flatMap { len =>
-          (0L until len by maxSplit).map(o => math.min(maxSplit, len - o))
-        }.toArray
-        java.util.Arrays.sort(splits)
-        var nParts = 0
-        var cur = 0L
-        var i = splits.length - 1
-        while (i >= 0) {
-          val len = splits(i)
-          if (nParts == 0 || cur + len > maxSplit) { nParts += 1; cur = 0L }
-          cur += len + openCost
-          i -= 1
-        }
-        math.max(nParts, 1)
+  }
+
+  /** A cached relation's width with no planning and no job: the built
+    * buffers' partition count once the cache is loaded, else the
+    * partition count the cached plan declares (a final adaptive plan
+    * read through). A plan that declares none, or an adaptive plan
+    * whose partitions AQE may still coalesce, declines.
+    */
+  private def cachedWidth(b: CachedRDDBuilder): Option[Int] =
+    if (b.isCachedColumnBuffersLoaded) Some(b.cachedColumnBuffers.getNumPartitions)
+    else {
+      val plan = b.cachedPlan match {
+        case a: AdaptiveSparkPlanExec => Option.when(a.isFinalPlan)(a.executedPlan)
+        case p => Some(p)
       }
+      plan.map(_.outputPartitioning.numPartitions).filter(_ > 0)
+    }
+
+  private def splitWidth(df: DataFrame, r: HadoopFsRelation): Option[Int] = {
+    val spark = df.sparkSession
+    val lens = r.location.listFiles(Nil, Nil).flatMap(_.files).map(_.getLen)
+    val openCost = spark.sessionState.conf.filesOpenCostInBytes
+    val totalBytes: Long = lens.map(_ + openCost).sum
+    val maxSplit: Long = FilePartition.maxSplitBytes(spark, totalBytes)
+    // a zero split size has no step to split by: decline
+    Option.when(maxSplit > 0) {
+      // parquet is splitable: every file splits at maxSplit boundaries,
+      // splits sort by length descending, then Next-Fit-Decreasing
+      // packing charges openCost per split on top of its length
+      val splits = lens.iterator.flatMap { len =>
+        (0L until len by maxSplit).map(o => math.min(maxSplit, len - o))
+      }.toArray
+      java.util.Arrays.sort(splits)
+      var nParts = 0
+      var cur = 0L
+      var i = splits.length - 1
+      while (i >= 0) {
+        val len = splits(i)
+        if (nParts == 0 || cur + len > maxSplit) { nParts += 1; cur = 0L }
+        cur += len + openCost
+        i -= 1
+      }
+      math.max(nParts, 1)
     }
   }
 }

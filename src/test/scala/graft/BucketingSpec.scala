@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Proves the co-located-join story for curated/converted outputs: two
@@ -12,12 +11,12 @@ import org.scalatest.funsuite.AnyFunSuite
   * (e.g. repeated joins of converter output against a hash->label
   * table): pay the partitioning once at write, never per query.
   */
-class BucketingSpec extends AnyFunSuite with BeforeAndAfterAll {
+class BucketingSpec extends AnyFunSuite with TempDirs {
 
   private var warehouse: java.nio.file.Path = _
 
   private lazy val spark: SparkSession = {
-    warehouse = java.nio.file.Files.createTempDirectory("graft_bucketing_wh")
+    warehouse = tempDir("graft_bucketing_wh")
     val s = SparkSession.builder()
       .master("local[4]")
       .config("spark.sql.shuffle.partitions", "4")
@@ -40,7 +39,7 @@ class BucketingSpec extends AnyFunSuite with BeforeAndAfterAll {
     s
   }
 
-  override def afterAll(): Unit = spark.stop()
+  override def afterAll(): Unit = try spark.stop() finally super.afterAll()
 
   test("bucketed+sorted tables join with no exchange and no sort") {
     import spark.implicits._
@@ -81,7 +80,7 @@ class BucketingSpec extends AnyFunSuite with BeforeAndAfterAll {
       .map(i => (i, Array.fill(4)(rnd.nextGaussian().toFloat)))
       .toDF("id", "vec")
     val cents = Similarity.ivfCodebook(docs, "id", "vec", nlist = 8)
-    val out = java.nio.file.Files.createTempDirectory("graft_ivf_rest").toString
+    val out = tempDir("graft_ivf_rest").toString
     docs.withColumn("cell", Similarity.ivfCell(cents, col("vec")))
       .write.mode("overwrite").partitionBy("cell").parquet(out)
     // all 8 cells exist on disk as partition directories
@@ -117,7 +116,7 @@ class BucketingSpec extends AnyFunSuite with BeforeAndAfterAll {
       (c.toLong * 25 + j, centers(c).map(x => (x + 0.05 * rnd.nextGaussian()).toFloat)))
       .toDF("id", "vec")
     val book = Similarity.trainIvfCodebook(docs, "id", "vec", nlist = 4)
-    val out = java.nio.file.Files.createTempDirectory("graft_ivf_trained").toString
+    val out = tempDir("graft_ivf_trained").toString
     Similarity.writeIvfPartitioned(docs, "vec", book, out)
 
     val query = centers(2).map(_ + 0.01)
@@ -148,7 +147,7 @@ class BucketingSpec extends AnyFunSuite with BeforeAndAfterAll {
       // shard = the reversed-host run of the key (everything before
       // ')') — all of a domain's records land in one directory
       .withColumn("shard", substring_index(col("cdx_key"), ")", 1))
-    val out = java.nio.file.Files.createTempDirectory("graft_cdx").toString
+    val out = tempDir("graft_cdx").toString
     urls.repartition(col("shard"))
       .sortWithinPartitions(col("cdx_key"))
       .write.partitionBy("shard").mode("overwrite").parquet(out)
@@ -181,7 +180,7 @@ class BucketingSpec extends AnyFunSuite with BeforeAndAfterAll {
     val docs = vecs(0 until 64).toDF("vec_id", "embedding")
     val cents = Similarity.ivfCodebook(docs, "vec_id", "embedding", nlist = 8)
     val pqCb = Similarity.pqCodebooks(docs, "vec_id", "embedding", m = 4, ks = 8)
-    val out = java.nio.file.Files.createTempDirectory("graft_incr_prune")
+    val out = tempDir("graft_incr_prune")
       .toString + "/layout"
     Similarity.writeIvfPqPartitioned(docs, "vec_id", "embedding",
       cents, pqCb, out)

@@ -3,7 +3,6 @@ package graft
 import java.io.File
 import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** End-to-end drive of the CLI (`graft.convert.Main`) in a FORKED JVM
@@ -12,7 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * Main's `spark.stop()` away from the shared test SparkContext and
   * proves the CLI runs standalone off the Spark jars classpath.
   */
-class CliSpec extends AnyFunSuite with BeforeAndAfterAll {
+class CliSpec extends AnyFunSuite with TempDirs {
 
   private lazy val spark: SparkSession = SparkSession.builder()
     .master("local[2]")
@@ -21,7 +20,7 @@ class CliSpec extends AnyFunSuite with BeforeAndAfterAll {
     .appName("CliSpec")
     .getOrCreate()
 
-  override def afterAll(): Unit = spark.stop()
+  override def afterAll(): Unit = try spark.stop() finally super.afterAll()
 
   // the canonical list lives in build.sbt (jdk17AddOpens) and reaches
   // this forked test JVM as a system property — one source of truth
@@ -52,7 +51,7 @@ class CliSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   private def fixture(): File = {
-    val dir = Files.createTempDirectory("graft_cli").toFile
+    val dir = tempDir("graft_cli").toFile
     val tgz = Fixtures.gzipData(Fixtures.tarArchive(Seq(
       "a.txt" -> "hello cli".getBytes("UTF-8"),
       "b.bin" -> Array.tabulate[Byte](500)(i => (i * 7).toByte))))
@@ -104,7 +103,7 @@ class CliSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("--http-payload decodes WARC response bodies into payload rows") {
-    val dir = Files.createTempDirectory("graft_cli_http").toFile
+    val dir = tempDir("graft_cli_http").toFile
     val p1 = "hello payload body\n"
     val p2 = "gzip coded body\n" * 3
     val gz2 = Fixtures.gzipData(p2.getBytes("UTF-8"))
@@ -150,7 +149,7 @@ class CliSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("--wet converts WARC to clean-text rows end to end") {
-    val dir = Files.createTempDirectory("graft_cli_wet").toFile
+    val dir = tempDir("graft_cli_wet").toFile
     // one response whose page has exactly one content-classifiable
     // paragraph (>= 60 chars, no links) amid linky chrome, plus a
     // request record that must DROP (a WET file is responses-only)

@@ -5,7 +5,6 @@ import graft.sources.EventsTable
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The layout-adaptive events source: the generator has shipped
@@ -14,7 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * and streaming, and a streaming restart must recover from its
   * checkpoint on the current layout.
   */
-class EventsTableSpec extends AnyFunSuite with BeforeAndAfterAll {
+class EventsTableSpec extends AnyFunSuite with TempDirs {
 
   private lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -24,12 +23,9 @@ class EventsTableSpec extends AnyFunSuite with BeforeAndAfterAll {
     .appName("EventsTableSpec")
     .getOrCreate()
 
-  override def afterAll(): Unit = spark.stop()
+  override def afterAll(): Unit = try spark.stop() finally super.afterAll()
 
-  private def tmp(prefix: String): java.io.File = {
-    val d = java.nio.file.Files.createTempDirectory(prefix).toFile
-    d.deleteOnExit(); d
-  }
+  private def tmp(prefix: String): java.io.File = tempDir(prefix).toFile
 
   test("batch read: int64-nanos layout truncates to the same micros as typed layout") {
     import spark.implicits._
@@ -96,38 +92,13 @@ class EventsTableSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
-  /** `body`'s result and the Spark jobs started while it ran. Job
-    * starts reach listeners asynchronously but in order, so a sentinel
-    * job run after `body` fences the count.
-    */
-  private def jobsDuring[T](body: => T): (T, Int) = {
-    val sentinel = "graft-jobs-sentinel"
-    val started = new java.util.concurrent.ConcurrentLinkedQueue[String]
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        started.add(Option(j.properties).flatMap(p =>
-          Option(p.getProperty("spark.job.description"))).getOrElse(""))
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(l)
-    try {
-      val out = body
-      sc.setJobDescription(sentinel)
-      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
-      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
-      while (!started.contains(sentinel) && System.nanoTime() < deadline) Thread.sleep(10)
-      assert(started.contains(sentinel), "the sentinel job never reached the listener")
-      (out, started.toArray.count(_ != sentinel))
-    } finally sc.removeSparkListener(l)
-  }
-
   test("FooterSchema opens tables and layouts with no Spark job and the inferred schema") {
     import org.apache.spark.sql.graft.FooterSchema
     import spark.implicits._
     val nanosConf = "spark.sql.legacy.parquet.nanosAsLong"
     spark.conf.unset(nanosConf)
     def same(path: String): Unit = {
-      val (df, jobs) = jobsDuring(FooterSchema.read(spark, path))
+      val (df, jobs) = SparkJobs.during(spark)(FooterSchema.read(spark, path))
       assert(jobs == 0, s"$path: $jobs jobs")
       assert(df.schema == spark.read.parquet(path).schema, path)
     }
@@ -158,7 +129,7 @@ class EventsTableSpec extends AnyFunSuite with BeforeAndAfterAll {
     finally spark.conf.unset(outTypeConf)
     for (name <- Seq("micros", "millis", "int64")) {
       spark.conf.unset(nanosConf)
-      val (df, jobs) = jobsDuring(EventsTable.read(spark, layout(name)))
+      val (df, jobs) = SparkJobs.during(spark)(EventsTable.read(spark, layout(name)))
       assert(jobs == 0, s"$name: $jobs jobs")
       assert(EventsTable.sniffSchema(spark, layout(name)) ==
         spark.read.parquet(layout(name)).schema, name)
@@ -180,7 +151,7 @@ class EventsTableSpec extends AnyFunSuite with BeforeAndAfterAll {
     same(root)
     same(Layouts.incrementDir(root, 1L))
     val incs = s"$root/${Layouts.IncrementsDir}"
-    val (all, jobs) = jobsDuring(Layouts.withIncrements(spark,
+    val (all, jobs) = SparkJobs.during(spark)(Layouts.withIncrements(spark,
       FooterSchema.read(spark, root), root, Seq("id", "cell", "v"), None))
     assert(jobs == 0, s"base ∪ increments: $jobs jobs")
     val inferred = spark.read.option("basePath", incs)

@@ -4,13 +4,12 @@ import graft.functions.{GraftFunctions, TextStats}
 import graft.ops.{AnnIndex, Dedup, Layouts, Quality, Similarity}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Operator-level specs for the dedup / similarity / text-analysis
   * surface, on small hand-checkable corpora.
   */
-class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
+class OpsSpec extends AnyFunSuite with TempDirs {
 
   private lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -19,7 +18,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     .appName("OpsSpec")
     .getOrCreate()
 
-  override def afterAll(): Unit = spark.stop()
+  override def afterAll(): Unit = try spark.stop() finally super.afterAll()
 
   /** One query through the index handle, as (vec_id, adc). */
   private def annProbe(path: String, query: Array[Double], k: Int,
@@ -434,7 +433,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val incr = rows.filter(_._1 % 5 == 0).toDF("vec_id", "embedding")
     val ivfCb = Similarity.ivfCodebook(corpus, "vec_id", "embedding", nlist = 8)
     val pqCb = Similarity.pqCodebooks(corpus, "vec_id", "embedding", m = 4, ks = 8)
-    val out = java.nio.file.Files.createTempDirectory("graft_append_ivfpq")
+    val out = tempDir("graft_append_ivfpq")
       .resolve("layout").toString
     Similarity.writeIvfPqPartitioned(corpus, "vec_id", "embedding",
       ivfCb, pqCb, out)
@@ -511,7 +510,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val ivfCb = Similarity.ivfCodebook(corpus, "vec_id", "embedding", nlist = 8)
     val rcb = Similarity.residualPqCodebooks(corpus, "vec_id", "embedding",
       ivfCb, m = 4, ks = 8)
-    val base = java.nio.file.Files.createTempDirectory("graft_res_atrest").toString
+    val base = tempDir("graft_res_atrest").toString
     Similarity.writeIvfPqResidualPartitioned(corpus, "vec_id", "embedding",
       ivfCb, rcb, base + "/gen0")
     Layouts.swapGenerationPointer(spark, base, "gen0")
@@ -552,7 +551,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val df = rows.toDF("vec_id", "embedding")
     val ivfCb = Similarity.ivfCodebook(df, "vec_id", "embedding", nlist = 8)
     val pqCb = Similarity.pqCodebooks(df, "vec_id", "embedding", m = 4, ks = 8)
-    val base = java.nio.file.Files.createTempDirectory("graft_tombstone").toString
+    val base = tempDir("graft_tombstone").toString
     Similarity.writeIvfPqPartitioned(df, "vec_id", "embedding",
       ivfCb, pqCb, base + "/gen0")
     val query = Array.fill(dim)(0.5)
@@ -598,7 +597,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val pqCb = Similarity.pqCodebooks(df, "vec_id", "embedding", m = 4, ks = 8)
     val rcb = Similarity.residualPqCodebooks(df, "vec_id", "embedding",
       ivfCb, m = 4, ks = 8)
-    val base = java.nio.file.Files.createTempDirectory("graft_kind_tag").toString
+    val base = tempDir("graft_kind_tag").toString
     Similarity.writeIvfPqResidualPartitioned(df, "vec_id", "embedding",
       ivfCb, rcb, base + "/res")
     Similarity.writeIvfPqPartitioned(df, "vec_id", "embedding",
@@ -633,7 +632,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       val df = (0L until 40L).map(i =>
         (i, Array.tabulate(8)(j => math.sin(i * 0.7 + j)))).toDF("vec_id", "embedding")
       val ivfCb = Similarity.ivfCodebook(df, "vec_id", "embedding", nlist = 4)
-      val out = java.nio.file.Files.createTempDirectory("graft_nprobe").toString +
+      val out = tempDir("graft_nprobe").toString +
         "/layout"
       if (residual)
         Similarity.writeIvfPqResidualPartitioned(df, "vec_id", "embedding", ivfCb,
@@ -660,7 +659,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val corpus = rows.filter(_._1 % 5 != 0).toDF("vec_id", "embedding")
     val ivfCb = Similarity.ivfCodebook(corpus, "vec_id", "embedding", nlist = 8)
     val pqCb = Similarity.pqCodebooks(corpus, "vec_id", "embedding", m = 4, ks = 8)
-    val base = java.nio.file.Files.createTempDirectory("graft_compact").toString
+    val base = tempDir("graft_compact").toString
     Similarity.writeIvfPqPartitioned(corpus, "vec_id", "embedding",
       ivfCb, pqCb, base + "/gen0")
     Layouts.swapGenerationPointer(spark, base, "gen0")
@@ -711,7 +710,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val df = rows.toDF("vec_id", "embedding")
     val ivfCb = Similarity.ivfCodebook(df, "vec_id", "embedding", nlist = 8)
     val pqCb = Similarity.pqCodebooks(df, "vec_id", "embedding", m = 4, ks = 8)
-    val out = java.nio.file.Files.createTempDirectory("graft_cb_sidecar")
+    val out = tempDir("graft_cb_sidecar")
       .resolve("layout").toString
     Similarity.writeIvfPqPartitioned(df, "vec_id", "embedding", ivfCb, pqCb, out)
     // exact double round-trip: loaded codebooks reproduce the written
@@ -1180,7 +1179,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       (1L, "the quick brown fox jumps over the lazy dog again and again today"),
       (3L, "novel text that matches nothing stored in the corpus index at all")
     ).toDF("doc_id", "text")
-    val out = java.nio.file.Files.createTempDirectory("graft_incr_idx").toString
+    val out = tempDir("graft_incr_idx").toString
     graft.ops.Dedup.writeNearDupIndex(corpus, "doc_id", "text", out)
     // the index is band-partitioned (id, key) parquet — the 100 TB
     // artifact layout
@@ -1202,7 +1201,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val corpus = Seq((0L, t0)).toDF("doc_id", "text")
     val day1 = Seq((10L, t1)).toDF("doc_id", "text")
     val day2 = Seq((20L, t0), (21L, t1)).toDF("doc_id", "text")
-    val out = java.nio.file.Files.createTempDirectory("graft_idx_life").toString
+    val out = tempDir("graft_idx_life").toString
     graft.ops.Dedup.writeNearDupIndex(corpus, "doc_id", "text", out)
     // day 1: no dup; its signatures APPEND into the at-rest index (the
     // daily lifecycle — the corpus is never recomputed)
@@ -1224,7 +1223,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val corpus = Seq((0L, t0),
       (2L, "completely unrelated corpus text about distributed query engines"))
       .toDF("doc_id", "text")
-    val base = java.nio.file.Files.createTempDirectory("graft_idx_compact").toString
+    val base = tempDir("graft_idx_compact").toString
     graft.ops.Dedup.writeNearDupIndex(corpus, "doc_id", "text", base + "/gen0")
     // two daily appends -> one increment directory per day
     Seq(10L -> 0L, 20L -> 1L).foreach { case (id, batchId) =>
@@ -1273,7 +1272,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     import spark.implicits._
     val corpus = Seq((0L, "the quick brown fox jumps over the lazy dog"))
       .toDF("doc_id", "text")
-    val out = java.nio.file.Files.createTempDirectory("graft_idx_meta").toString
+    val out = tempDir("graft_idx_meta").toString
     graft.ops.Dedup.writeNearDupIndex(corpus, "doc_id", "text", out,
       numHashes = 128, bands = 32, shingleWidth = 3)
     assert(graft.ops.Dedup.readNearDupIndexMeta(spark, out)
@@ -1302,7 +1301,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     import spark.implicits._
     val corpus = Seq((0L, "the quick brown fox jumps over the lazy dog"))
       .toDF("doc_id", "text")
-    val out = java.nio.file.Files.createTempDirectory("graft_idx_meta_empty").toString
+    val out = tempDir("graft_idx_meta_empty").toString
     graft.ops.Dedup.writeNearDupIndex(corpus, "doc_id", "text", out)
     // simulate an interrupted sidecar write: the directory exists but
     // holds no parquet files — previously this read as "absent" and
@@ -1329,7 +1328,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       .toDF("vec_id", "embedding")
     val ivfCb = Similarity.ivfCodebook(df, "vec_id", "embedding", nlist = 4)
     val pqCb = Similarity.pqCodebooks(df, "vec_id", "embedding", m = 2, ks = 4)
-    val root = java.nio.file.Files.createTempDirectory("graft_cb_empty").toString
+    val root = tempDir("graft_cb_empty").toString
     val out = root + "/gen0"
     Similarity.writeIvfPqPartitioned(df, "vec_id", "embedding", ivfCb, pqCb, out)
     Layouts.swapGenerationPointer(spark, root, "gen0")
@@ -1372,7 +1371,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       (1L, t0),
       (3L, "novel text that matches nothing stored in the corpus index at all")
     ).toDF("doc_id", "text")
-    val out = java.nio.file.Files.createTempDirectory("graft_incr_regime").toString
+    val out = tempDir("graft_incr_regime").toString
     graft.ops.Dedup.writeNearDupIndex(corpus, "doc_id", "text", out)
     def run(budget: Long): Map[Long, Long] =
       graft.ops.Dedup.incrementalNearDup(spark, out, corpus, batch,
@@ -1400,7 +1399,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("Dedup.nearDupPairsFromIndex / winners: identical to the from-text path") {
     import spark.implicits._
     val df = docs()
-    val out = java.nio.file.Files.createTempDirectory("graft_pairs_idx").toString
+    val out = tempDir("graft_pairs_idx").toString
     graft.ops.Dedup.writeNearDupIndex(df, "doc_id", "text", out)
     val fromText = graft.ops.Dedup.nearDupPairs(df, "doc_id", "text", 0.5)
       .as[(Long, Long, Double)].collect().sorted.toSeq
@@ -1960,7 +1959,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
         .collect()
       assert(inFlight.length == 5)
       // at rest: write a tiny residual layout, probe it wide
-      val out = java.nio.file.Files.createTempDirectory("graft_codegen_resid")
+      val out = tempDir("graft_codegen_resid")
         .toString + "/layout"
       Similarity.writeIvfPqResidualPartitioned(df, "vec_id", "embedding",
         ivfCb, rcb, out)
@@ -2051,7 +2050,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     import spark.implicits._
     // parquet-backed so the optimizer cannot fold the computed column
     // into a local relation (which would make the probe free anyway)
-    val dir = java.nio.file.Files.createTempDirectory("graft_ffdlazy")
+    val dir = tempDir("graft_ffdlazy")
       .toString + "/docs"
     Seq((0L, "x" * 2000), (1L, "y" * 10)).toDF("doc_id", "text")
       .write.parquet(dir)
@@ -2092,7 +2091,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val drifted = sample(48, 25.0, 2000L).toDF("vec_id", "embedding")
     val ivfCb = Similarity.ivfCodebook(corpus, "vec_id", "embedding", nlist = 4)
     val pqCb = Similarity.pqCodebooks(corpus, "vec_id", "embedding", m = 4, ks = 16)
-    val base = java.nio.file.Files.createTempDirectory("graft_maintain").toString
+    val base = tempDir("graft_maintain").toString
     // one pointered store root per scenario: a/, b/, r/
     def store(name: String): AnnIndex = {
       Layouts.swapGenerationPointer(spark, s"$base/$name", "gen0")
@@ -2188,7 +2187,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       .toDF("vec_id", "embedding")
     val ivfCb = Similarity.ivfCodebook(emb, "vec_id", "embedding", nlist = 8)
     val pqCb = Similarity.pqCodebooks(emb, "vec_id", "embedding", m = 4, ks = 16)
-    val base = java.nio.file.Files.createTempDirectory("graft_batchprobe").toString
+    val base = tempDir("graft_batchprobe").toString
     Similarity.writeIvfPqPartitioned(emb, "vec_id", "embedding",
       ivfCb, pqCb, base + "/layout")
     val q1 = Array.fill(dim)(1.0)
@@ -2234,7 +2233,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val corpus = sample(64, 0.0, 0L).toDF("vec_id", "embedding")
     val ivfCb = Similarity.ivfCodebook(corpus, "vec_id", "embedding", nlist = 4)
     val pqCb = Similarity.pqCodebooks(corpus, "vec_id", "embedding", m = 4, ks = 16)
-    val base = java.nio.file.Files.createTempDirectory("graft_driftseries").toString
+    val base = tempDir("graft_driftseries").toString
     Similarity.writeIvfPqPartitioned(corpus, "vec_id", "embedding",
       ivfCb, pqCb, base + "/gen0")
     Layouts.swapGenerationPointer(spark, base, "gen0")
@@ -2380,7 +2379,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val ivfCb = Similarity.ivfCodebook(corpus, "vec_id", "embedding", nlist = 4)
     val rcb = Similarity.residualPqCodebooks(corpus, "vec_id", "embedding",
       ivfCb, m = 4, ks = 8)
-    val base = java.nio.file.Files.createTempDirectory("graft_rpq_incr").toString
+    val base = tempDir("graft_rpq_incr").toString
     Similarity.writeIvfPqResidualPartitioned(corpus, "vec_id", "embedding",
       ivfCb, rcb, base + "/streamed")
     assert(AnnIndex.open(spark, base + "/streamed", "vec_id").kind == "rpq")
@@ -2491,7 +2490,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
         "doc_id", "text")
       .where(col("change") === "removed").select("doc_id")
     assert(removed.as[Long].collect().toSeq == Seq(0L))
-    val base = java.nio.file.Files.createTempDirectory("graft_diff_tomb").toString
+    val base = tempDir("graft_diff_tomb").toString
     // near-dup family: the retired half's pair partner takes over
     Dedup.writeNearDupIndex(oldCorpus, "doc_id", "text", base + "/idx/gen0")
     Layouts.swapGenerationPointer(spark, base + "/idx", "gen0")
@@ -2527,7 +2526,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       .toDF("vec_id", "embedding")
     val ivfCb = Similarity.ivfCodebook(df, "vec_id", "embedding", nlist = 4)
     val pqCb = Similarity.pqCodebooks(df, "vec_id", "embedding", m = 2, ks = 4)
-    val base = java.nio.file.Files.createTempDirectory("graft_partial_dst").toString
+    val base = tempDir("graft_partial_dst").toString
     Similarity.writeIvfPqPartitioned(df, "vec_id", "embedding", ivfCb, pqCb,
       base + "/gen0")
     Layouts.swapGenerationPointer(spark, base, "gen0")
@@ -2569,7 +2568,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       .toDF("vec_id", "embedding")
     val ivfCb = Similarity.ivfCodebook(df, "vec_id", "embedding", nlist = 4)
     val pqCb = Similarity.pqCodebooks(df, "vec_id", "embedding", m = 2, ks = 4)
-    val out = java.nio.file.Files.createTempDirectory("graft_cb_noivf").toString + "/layout"
+    val out = tempDir("graft_cb_noivf").toString + "/layout"
     Similarity.writeIvfPqPartitioned(df, "vec_id", "embedding", ivfCb, pqCb, out)
     // hand-corrupt: strip the 'ivf' rows, keep the 'pq' tables — the
     // missing-ivf face must be the SAME exception type as the
@@ -2611,7 +2610,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val drifted = sample(48, 25.0, 2000L).toDF("vec_id", "embedding")
     val ivfCb = Similarity.ivfCodebook(corpus, "vec_id", "embedding", nlist = 4)
     val pqCb = Similarity.pqCodebooks(corpus, "vec_id", "embedding", m = 4, ks = 16)
-    val root = java.nio.file.Files.createTempDirectory("graft_genptr").toString
+    val root = tempDir("graft_genptr").toString
     Similarity.writeIvfPqPartitioned(corpus, "vec_id", "embedding",
       ivfCb, pqCb, root + "/gen0")
     // curated prerequisites: no pointing at a missing generation; a
@@ -2693,7 +2692,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val drifted = sample(48, 25.0, 2000L).toDF("vec_id", "embedding")
     val ivfCb = Similarity.ivfCodebook(corpus, "vec_id", "embedding", nlist = 4)
     val pqCb = Similarity.pqCodebooks(corpus, "vec_id", "embedding", m = 4, ks = 16)
-    val root = java.nio.file.Files.createTempDirectory("graft_stale").toString
+    val root = tempDir("graft_stale").toString
     Similarity.writeIvfPqPartitioned(corpus, "vec_id", "embedding",
       ivfCb, pqCb, root + "/gen0")
     Layouts.swapGenerationPointer(spark, root, "gen0")
@@ -2740,7 +2739,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(indexRows(root + "/gen2", "vec_id").count() == 64 + 48 + 24)
     // a plain (unpointered) layout appends, but has no next generation
     // to rebuild or compact into: the refusal names the pointer's init
-    val plain = java.nio.file.Files.createTempDirectory("graft_plain").toString +
+    val plain = tempDir("graft_plain").toString +
       "/layout"
     Similarity.writeIvfPqPartitioned(corpus, "vec_id", "embedding",
       ivfCb, pqCb, plain)
@@ -2764,7 +2763,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val batch = sample(24, 1000L).toDF("vec_id", "embedding")
     val ivfCb = Similarity.ivfCodebook(corpus, "vec_id", "embedding", nlist = 4)
     val pqCb = Similarity.pqCodebooks(corpus, "vec_id", "embedding", m = 4, ks = 16)
-    val root = java.nio.file.Files.createTempDirectory("graft_basefence").toString
+    val root = tempDir("graft_basefence").toString
     Similarity.writeIvfPqPartitioned(corpus, "vec_id", "embedding",
       ivfCb, pqCb, root + "/gen0")
     Layouts.swapGenerationPointer(spark, root, "gen0")
@@ -2798,7 +2797,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val batch = Seq((10L, "a fresh batch document that matches nothing stored yet"),
       (11L, "another new document about columnar storage and compaction"))
       .toDF("doc_id", "text")
-    val root = java.nio.file.Files.createTempDirectory("graft_ndfence").toString
+    val root = tempDir("graft_ndfence").toString
     Dedup.writeNearDupIndex(corpus, "doc_id", "text", root + "/gen0")
     Layouts.swapGenerationPointer(spark, root, "gen0")
     // appendNearDupIndex's store write, with a fold in its fence window
@@ -2832,7 +2831,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val corpus = sample(80, 0L)
     val ivfCb = Similarity.ivfCodebook(corpus, "vec_id", "embedding", nlist = 4)
     val pqCb = Similarity.pqCodebooks(corpus, "vec_id", "embedding", m = 4, ks = 16)
-    val root = java.nio.file.Files.createTempDirectory(prefix).toString
+    val root = tempDir(prefix).toString
     Similarity.writeIvfPqPartitioned(corpus, "vec_id", "embedding",
       ivfCb, pqCb, root + "/gen0", keep = Seq("grp"))
     Layouts.swapGenerationPointer(spark, root, "gen0")
@@ -2902,7 +2901,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     import spark.implicits._
     def doc(id: Long) = Seq((id, s"document $id with words that match nothing else stored"))
       .toDF("doc_id", "text")
-    val root = java.nio.file.Files.createTempDirectory("graft_foldrace").toString
+    val root = tempDir("graft_foldrace").toString
     Dedup.writeNearDupIndex(doc(0L), "doc_id", "text", root + "/gen0")
     Layouts.swapGenerationPointer(spark, root, "gen0")
     Dedup.appendNearDupIndex(doc(10L), "doc_id", "text", root, 0L)
@@ -2931,7 +2930,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("a sidecar overwrite keeps the old sidecar until the new one is written") {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types.{LongType, StructField, StructType}
-    val dir = java.nio.file.Files.createTempDirectory("graft_sidecar_overwrite")
+    val dir = tempDir("graft_sidecar_overwrite")
       .toString + "/_rebuilt"
     val schema = StructType(Seq(StructField("through_batch", LongType, nullable = false)))
     Layouts.writeSidecar(spark, dir, schema, Seq(Row(7L)))
@@ -2961,7 +2960,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val all = corpus.unionByName(drifted)
     val ivfCb = Similarity.ivfCodebook(corpus, "vec_id", "embedding", nlist = 4)
     val pqCb = Similarity.pqCodebooks(corpus, "vec_id", "embedding", m = 4, ks = 16)
-    val base = java.nio.file.Files.createTempDirectory("graft_trained").toString
+    val base = tempDir("graft_trained").toString
     // one pointered store root per rebuild
     def store(tag: String): AnnIndex = {
       Layouts.swapGenerationPointer(spark, s"$base/$tag", "gen0")
@@ -3026,7 +3025,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       1L -> Array.fill(dim)(1.0),
       2L -> Array.fill(dim)(-1.0),
       3L -> Array.tabulate(dim)(j => if (j % 2 == 0) 1.5 else -0.5))
-    val base = java.nio.file.Files.createTempDirectory("graft_batchkinds").toString
+    val base = tempDir("graft_batchkinds").toString
     // RESIDUAL layout with a committed streamed increment
     val ivfCb = Similarity.ivfCodebook(corpus, "vec_id", "embedding", nlist = 8)
     val rcb = Similarity.residualPqCodebooks(corpus, "vec_id", "embedding",
@@ -3142,7 +3141,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       .toDF("vec_id", "embedding")
     val ivfCb = Similarity.ivfCodebook(emb, "vec_id", "embedding", nlist = 8)
     val pqCb = Similarity.pqCodebooks(emb, "vec_id", "embedding", m = 4, ks = 16)
-    val base = java.nio.file.Files.createTempDirectory("graft_refine").toString
+    val base = tempDir("graft_refine").toString
     Similarity.writeIvfPqPartitioned(emb, "vec_id", "embedding", ivfCb, pqCb,
       base + "/layout", keep = Seq("embedding"))
     val q = Array.fill(16)(1.0)
@@ -3182,7 +3181,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val batch = emb.where(col("vec_id") % 4 === 0)
     val ivfCb = Similarity.ivfCodebook(corpus, "vec_id", "embedding", nlist = 8)
     val pqCb = Similarity.pqCodebooks(corpus, "vec_id", "embedding", m = 4, ks = 16)
-    val root = java.nio.file.Files.createTempDirectory("graft_refine_incr").toString
+    val root = tempDir("graft_refine_incr").toString
     Similarity.writeIvfPqPartitioned(corpus, "vec_id", "embedding", ivfCb, pqCb,
       root + "/gen0", keep = Seq("embedding"))
     Layouts.swapGenerationPointer(spark, root, "gen0")
@@ -3228,7 +3227,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val corpus = sample(64, 0.0, 0L).toDF("vec_id", "embedding")
     val ivfCb = Similarity.ivfCodebook(corpus, "vec_id", "embedding", nlist = 4)
     val pqCb = Similarity.pqCodebooks(corpus, "vec_id", "embedding", m = 4, ks = 16)
-    val base = java.nio.file.Files.createTempDirectory("graft_prunedrift").toString
+    val base = tempDir("graft_prunedrift").toString
     Similarity.writeIvfPqPartitioned(corpus, "vec_id", "embedding",
       ivfCb, pqCb, base + "/gen0")
     Layouts.swapGenerationPointer(spark, base, "gen0")
@@ -3294,7 +3293,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("fanOutByKey width estimate matches the planner (r22: no double planning)") {
     import org.apache.spark.sql.graft.ScanWidth
     import spark.implicits._
-    val base = java.nio.file.Files.createTempDirectory("graft_scanwidth").toString
+    val base = tempDir("graft_scanwidth").toString
     // one tiny file and a multi-file table — both must agree with the
     // width physical planning would produce (df.rdd.getNumPartitions)
     (0L until 50L).map(i => (i, s"text $i")).toDF("doc_id", "text")
@@ -3339,6 +3338,29 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     } finally saved.foreach {
       case (c, Some(v)) => spark.conf.set(c, v)
       case (c, None) => spark.conf.unset(c)
+    }
+  }
+
+  test("fanOutByKey width estimate of a cached frame reads the cache's plan, with no job") {
+    import org.apache.spark.sql.graft.ScanWidth
+    // a generated (non-file) source and an explicit-width shuffle: the
+    // split math has no file listing for either, the cache holds a plan
+    val narrow = spark.range(0L, 3000L, 1L, 3)
+    val shuffled = spark.range(0L, 3000L).repartition(5, col("id"))
+    for ((name, base) <- Seq("narrow" -> narrow, "shuffled" -> shuffled)) {
+      val cached = base.select(col("id"), (col("id") % 7).as("g")).cache()
+      try {
+        // not built yet: the plan's declared width, or a decline
+        val (unbuilt, jobs0) = SparkJobs.during(spark)(ScanWidth.estimate(cached))
+        assert(jobs0 == 0, s"$name: $jobs0 jobs before the build")
+        cached.count()
+        unbuilt.foreach(w => assert(w == cached.rdd.getNumPartitions, s"$name unbuilt"))
+        for (df <- Seq(cached, cached.select((col("id") + 1).as("x")), cached.where(col("g") === 3L))) {
+          val (w, jobs) = SparkJobs.during(spark)(ScanWidth.estimate(df))
+          assert(jobs == 0, s"$name: $jobs jobs")
+          assert(w.contains(df.rdd.getNumPartitions), s"$name: $w")
+        }
+      } finally cached.unpersist(blocking = true)
     }
   }
 }

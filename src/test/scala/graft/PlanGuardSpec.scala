@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Regression net over the PHYSICAL plans the scale story depends on
@@ -11,7 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * A refactor that silently loses one of these properties fails here,
   * not in a 100 TB run.
   */
-class PlanGuardSpec extends AnyFunSuite with BeforeAndAfterAll {
+class PlanGuardSpec extends AnyFunSuite with TempDirs {
 
   private val sfDir = "/root/testdata/sf0.001"
 
@@ -22,7 +21,7 @@ class PlanGuardSpec extends AnyFunSuite with BeforeAndAfterAll {
     .appName("PlanGuardSpec")
     .getOrCreate()
 
-  override def afterAll(): Unit = spark.stop()
+  override def afterAll(): Unit = try spark.stop() finally super.afterAll()
 
   private def plan(name: String): String = {
     val df: DataFrame = SparkEntry.queries(name)(spark, sfDir)
@@ -518,7 +517,7 @@ class PlanGuardSpec extends AnyFunSuite with BeforeAndAfterAll {
     val corpus = vecs(0 until 64)
     val ivfCb = Similarity.ivfCodebook(corpus, "vec_id", "embedding", nlist = 8)
     val pqCb = Similarity.pqCodebooks(corpus, "vec_id", "embedding", m = 4, ks = 8)
-    val out = java.nio.file.Files.createTempDirectory("graft_plan_incr").toString +
+    val out = tempDir("graft_plan_incr").toString +
       "/layout"
     Similarity.writeIvfPqPartitioned(corpus, "vec_id", "embedding", ivfCb, pqCb,
       out, keep = Seq("embedding"))
@@ -662,6 +661,45 @@ class PlanGuardSpec extends AnyFunSuite with BeforeAndAfterAll {
     // q16's presentation sort adds exactly one range exchange
     val p = plan("q16_converter")
     assert(exchanges(p) <= 1, s"walk/filter/write must stay narrow:\n$p")
+  }
+
+  test("converter --unique: one hash exchange, no aggregate, one sort under the run-start filter") {
+    import graft.convert.ArchiveConverter
+    import graft.core.ConvertOptions
+    val dir = tempDir("graft_plan_unique").toFile
+    val inputs = (1 to 3).map { i =>
+      val f = new java.io.File(dir, s"in$i.tar")
+      java.nio.file.Files.write(f.toPath, Fixtures.tarArchive(Seq(
+        s"a$i.txt" -> "shared".getBytes("UTF-8"), s"b$i.txt" -> s"own $i".getBytes("UTF-8"))))
+      f.getAbsolutePath
+    }
+    val df = ArchiveConverter.filteredEntries(spark, inputs, ConvertOptions(unique = true))
+    val p = df.queryExecution.executedPlan.toString
+    assert("Exchange hashpartitioning\\(hash".r.findAllIn(p).size == 1,
+      s"--unique must shuffle once, on hash:\n$p")
+    for (op <- Seq("SortAggregate", "HashAggregate", "ObjectHashAggregate", "Window"))
+      assert(!p.contains(op), s"--unique planned $op:\n$p")
+    val lines = p.linesIterator.toIndexedSeq
+    val runStart = lines.indexWhere(_.contains("Filter run_start(hash"))
+    assert(runStart >= 0 && lines(runStart + 1).contains("Sort [hash"),
+      s"the run-start filter must sit directly on the hash sort:\n$p")
+    assert(lines.count(_.contains("Sort [")) == 1, s"--unique must sort once:\n$p")
+    val exchange = lines.indexWhere(_.contains("Exchange hashpartitioning(hash"))
+    val cache = lines.indexWhere(_.contains("Filter digest_cache_miss(hash"))
+    assert(exchange > runStart && cache > exchange,
+      s"the digest cache must filter below the exchange:\n$p")
+    assert(df.select("hash").distinct().count() == df.count() && df.count() == 4)
+  }
+
+  test("streaming --unique keeps its stateful dedup (StreamingDeduplicate)") {
+    import graft.core.ConvertOptions
+    import graft.streaming.StreamingConverter
+    val dir = tempDir("graft_plan_stream_unique").toString
+    val df = StreamingConverter.entryStream(spark, dir, ConvertOptions(unique = true))
+    val p = df.queryExecution.explainString(
+      org.apache.spark.sql.execution.ExplainMode.fromString("simple"))
+    assert(p.contains("StreamingDeduplicate"), s"stream dedup lost its state:\n$p")
+    assert(!p.contains("digest_cache_miss") && !p.contains("run_start"), p)
   }
 
   test("q151: drift report is one narrow pass into a single cohort aggregate") {

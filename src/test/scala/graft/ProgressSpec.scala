@@ -3,14 +3,13 @@ package graft
 import graft.convert.{ArchiveConverter, ProgressReporter}
 import graft.core.ConvertOptions
 import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Live progress reporting (reference src/progress.rs:11-133): the
   * reporter must tick in-flight counter lines while a conversion runs
   * and settle with the final totals.
   */
-class ProgressSpec extends AnyFunSuite with BeforeAndAfterAll {
+class ProgressSpec extends AnyFunSuite with TempDirs {
 
   private lazy val spark: SparkSession = SparkSession.builder()
     .master("local[2]")
@@ -19,7 +18,7 @@ class ProgressSpec extends AnyFunSuite with BeforeAndAfterAll {
     .appName("ProgressSpec")
     .getOrCreate()
 
-  override def afterAll(): Unit = spark.stop()
+  override def afterAll(): Unit = try spark.stop() finally super.afterAll()
 
   test("reporter ticks accumulator values and prints settled totals on stop") {
     spark.sparkContext // force init
@@ -121,7 +120,7 @@ class ProgressSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("convert with progress bars renders per-input rows to a redirected stderr") {
     import Fixtures._
-    val dir = java.nio.file.Files.createTempDirectory("graft_bars").toFile
+    val dir = tempDir("graft_bars").toFile
     val archives = (1 to 2).map { k =>
       val f = new java.io.File(dir, s"in$k.tar.gz")
       val fos = new java.io.FileOutputStream(f)
@@ -129,7 +128,7 @@ class ProgressSpec extends AnyFunSuite with BeforeAndAfterAll {
       fos.close()
       f.getAbsolutePath
     }
-    val out = java.nio.file.Files.createTempDirectory("graft_bars_out").toString
+    val out = tempDir("graft_bars_out").toString
     val buf = new java.io.ByteArrayOutputStream()
     val realErr = System.err
     System.setErr(new java.io.PrintStream(buf, true, "UTF-8"))
@@ -154,7 +153,7 @@ class ProgressSpec extends AnyFunSuite with BeforeAndAfterAll {
     val fos = new java.io.FileOutputStream(arch)
     fos.write(gzipData(tarArchive((1 to 20).map(i => s"f$i.txt" -> s"row $i".getBytes("UTF-8")))))
     fos.close()
-    val out = java.nio.file.Files.createTempDirectory("graft_progress_out").toString
+    val out = tempDir("graft_progress_out").toString
 
     val buf = new java.io.ByteArrayOutputStream()
     val realErr = System.err

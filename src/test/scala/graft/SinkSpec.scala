@@ -7,7 +7,6 @@ import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import scala.jdk.CollectionConverters._
 
@@ -15,7 +14,7 @@ import scala.jdk.CollectionConverters._
   * (src/sink.rs:23-55) must be visible in the written parquet footers —
   * bloom filters on source/path/hash, dictionary on source/path only.
   */
-class SinkSpec extends AnyFunSuite with BeforeAndAfterAll {
+class SinkSpec extends AnyFunSuite with TempDirs {
 
   private lazy val spark: SparkSession = SparkSession.builder()
     .master("local[2]")
@@ -24,7 +23,7 @@ class SinkSpec extends AnyFunSuite with BeforeAndAfterAll {
     .appName("SinkSpec")
     .getOrCreate()
 
-  override def afterAll(): Unit = spark.stop()
+  override def afterAll(): Unit = try spark.stop() finally super.afterAll()
 
   test("written footer reflects the tuned sink: blooms + selective dictionary") {
     import Fixtures._
@@ -34,7 +33,7 @@ class SinkSpec extends AnyFunSuite with BeforeAndAfterAll {
     // enough distinct entries that dictionary/bloom structures materialize
     fos.write(gzipData(tarArchive((1 to 50).map(i => s"f$i.txt" -> s"content number $i".getBytes("UTF-8")))))
     fos.close()
-    val out = java.nio.file.Files.createTempDirectory("graft_sink_out").toString
+    val out = tempDir("graft_sink_out").toString
 
     val stats = ArchiveConverter.convert(spark, Seq(arch.getAbsolutePath), out, ConvertOptions())
     assert(stats.rows == 50 && stats.entriesRead == 50)
@@ -87,7 +86,7 @@ class SinkSpec extends AnyFunSuite with BeforeAndAfterAll {
     val fos = new java.io.FileOutputStream(arch)
     fos.write(tarArchive(Seq("a.txt" -> "reference parity body".getBytes("UTF-8"))))
     fos.close()
-    val out = java.nio.file.Files.createTempDirectory("graft_refpar_out").toString
+    val out = tempDir("graft_refpar_out").toString
     ArchiveConverter.convert(spark, Seq(arch.getAbsolutePath), out, o)
     val part = new java.io.File(out).listFiles()
       .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet")).get
@@ -102,13 +101,13 @@ class SinkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("singleFile writes exactly one parquet part (reference parity)") {
     import Fixtures._
-    val dir = java.nio.file.Files.createTempDirectory("graft_single").toFile
+    val dir = tempDir("graft_single").toFile
     (1 to 3).foreach { i =>
       java.nio.file.Files.write(new java.io.File(dir, s"in$i.tar.gz").toPath,
         gzipData(tarArchive(Seq(s"f$i.txt" -> s"data $i".getBytes("UTF-8")))))
     }
     val inputs = dir.listFiles().map(_.getAbsolutePath).toSeq
-    val out = java.nio.file.Files.createTempDirectory("graft_single_out").toString
+    val out = tempDir("graft_single_out").toString
     val stats = ArchiveConverter.convert(spark, inputs, out,
       ConvertOptions(singleFile = true))
     assert(stats.rows == 3)
@@ -119,7 +118,7 @@ class SinkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("W7: content-read failure aborts by default, is contained with skipErrors") {
     import Fixtures._
-    val dir = java.nio.file.Files.createTempDirectory("graft_w7").toFile
+    val dir = tempDir("graft_w7").toFile
     val good = new java.io.File(dir, "good.tar.gz")
     val goodBytes = gzipData(tarArchive(Seq("ok.txt" -> "fine content".getBytes("UTF-8"))))
     java.nio.file.Files.write(good.toPath, goodBytes)
@@ -133,13 +132,13 @@ class SinkSpec extends AnyFunSuite with BeforeAndAfterAll {
     val inputs = Seq(good.getAbsolutePath, bad.getAbsolutePath)
 
     // default: the poisoned input fails the job (reference W7 abort)
-    val out1 = java.nio.file.Files.createTempDirectory("graft_w7_out1").toString
+    val out1 = tempDir("graft_w7_out1").toString
     intercept[org.apache.spark.SparkException] {
       ArchiveConverter.convert(spark, inputs, out1, ConvertOptions())
     }
 
     // skipErrors: the good input converts, the bad one is counted
-    val out2 = java.nio.file.Files.createTempDirectory("graft_w7_out2").toString
+    val out2 = tempDir("graft_w7_out2").toString
     val stats = ArchiveConverter.convert(spark, inputs, out2, ConvertOptions(skipErrors = true))
     assert(stats.rows == 1 && stats.errors == 1)
     val rows = ArchiveConverter.read(spark, out2).collect()
@@ -148,14 +147,14 @@ class SinkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("over-cap entry under skipErrors: counted input skip, others survive") {
     import Fixtures._
-    val dir = java.nio.file.Files.createTempDirectory("graft_cap").toFile
+    val dir = tempDir("graft_cap").toFile
     val good = new java.io.File(dir, "good.tar.gz")
     java.nio.file.Files.write(good.toPath,
       gzipData(tarArchive(Seq("small.txt" -> "fits".getBytes("UTF-8")))))
     val bad = new java.io.File(dir, "bad.tar.gz")
     java.nio.file.Files.write(bad.toPath,
       gzipData(tarArchive(Seq("huge.bin" -> Array.fill[Byte](4096)(9)))))
-    val out = java.nio.file.Files.createTempDirectory("graft_cap_out").toString
+    val out = tempDir("graft_cap_out").toString
     val stats = ArchiveConverter.convert(spark,
       Seq(good.getAbsolutePath, bad.getAbsolutePath), out,
       ConvertOptions(skipErrors = true, maxEntryBytes = 1024L))
@@ -167,7 +166,7 @@ class SinkSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("stats.bytes is the summed content length of the output in every mode") {
     import Fixtures._
     import org.apache.spark.sql.functions.{col, length, sum}
-    val dir = java.nio.file.Files.createTempDirectory("graft_stats").toFile
+    val dir = tempDir("graft_stats").toFile
     def put(name: String, bytes: Array[Byte]): String = {
       val f = new java.io.File(dir, name)
       java.nio.file.Files.write(f.toPath, bytes)
@@ -213,7 +212,7 @@ class SinkSpec extends AnyFunSuite with BeforeAndAfterAll {
     val members = (1 to 30).map(i => s"f$i" -> Array.fill[Byte](i * 50 - 45)((i % 7 + 97).toByte))
     java.nio.file.Files.write(arch.toPath, gzipData(tarArchive(members)))
     val sizes = members.map(_._2.length.toLong)
-    val out = java.nio.file.Files.createTempDirectory("graft_prefilter_out").toString
+    val out = tempDir("graft_prefilter_out").toString
     val stats = ArchiveConverter.convert(spark, Seq(arch.getAbsolutePath), out,
       ConvertOptions(minSize = Some(200L), maxSize = Some(1000L)))
     val kept = sizes.filter(s => s >= 200 && s < 1000)
@@ -225,7 +224,7 @@ class SinkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("inputs stay verbatim in `source`; parallelism sets the task and file count") {
     import Fixtures._
-    val dir = java.nio.file.Files.createTempDirectory("graft_width").toFile
+    val dir = tempDir("graft_width").toFile
     val files = (1 to 5).map { i =>
       val f = new java.io.File(dir, s"in$i.tar")
       java.nio.file.Files.write(f.toPath, tarArchive(Seq(s"f$i.txt" -> s"body $i".getBytes("UTF-8"))))
@@ -239,7 +238,7 @@ class SinkSpec extends AnyFunSuite with BeforeAndAfterAll {
     val walked = ArchiveConverter.entries(spark, inputs, ConvertOptions(parallelism = Some(2)))
     assert(walked.rdd.getNumPartitions == 2)
     assert(walked.collect().map(_.source).sorted.toSeq == inputs.sorted)
-    val out = java.nio.file.Files.createTempDirectory("graft_width_out").toString
+    val out = tempDir("graft_width_out").toString
     val stats = ArchiveConverter.convert(spark, inputs, out, ConvertOptions(parallelism = Some(2)))
     assert(stats.rows == 5 && stats.inputs == 5)
     val parts = new java.io.File(out).listFiles()
@@ -250,6 +249,78 @@ class SinkSpec extends AnyFunSuite with BeforeAndAfterAll {
       .rdd.getNumPartitions == 3)
   }
 
+  /** The (hex hash, size) pairs of a frame's rows, sorted. */
+  private def hashSizes(df: org.apache.spark.sql.DataFrame): Seq[(String, Long)] =
+    df.select("hash", "size").collect().toSeq.map(r =>
+      (Option(r.getAs[Array[Byte]](0)).fold("null")(_.map(b => f"${b & 0xff}%02x").mkString),
+        r.getLong(1))).sorted
+
+  test("unique keeps what stock dropDuplicates(hash) keeps: within, across inputs and tasks") {
+    import Fixtures._
+    val dir = tempDir("graft_unique").toFile
+    // five inputs over a 12-body pool: repeats inside one input, across
+    // inputs, and (with parallelism 2-3) across tasks
+    val pool = (0 until 12).map(i => s"pool body $i ${"x" * (i * 37)}".getBytes("UTF-8"))
+    val inputs = (1 to 5).map { k =>
+      val members = (1 to 14).map(j => s"in$k/f$j" -> pool((k * 7 + j * j) % pool.size)) :+
+        (s"in$k/own" -> s"only in input $k".getBytes("UTF-8"))
+      val f = new java.io.File(dir, s"in$k.tar.gz")
+      java.nio.file.Files.write(f.toPath, gzipData(tarArchive(members)))
+      f.getAbsolutePath
+    }
+    for (par <- Seq(2, 3)) {
+      val opts = ConvertOptions(parallelism = Some(par))
+      val stock = ArchiveConverter.entries(spark, inputs, opts).toDF().dropDuplicates("hash")
+      val want = hashSizes(stock)
+      assert(want.size == pool.size + inputs.size, "fixture lost a body")
+      val out = new java.io.File(dir, s"out_$par").getPath
+      val stats = ArchiveConverter.convert(spark, inputs, out, opts.copy(unique = true))
+      val written = ArchiveConverter.read(spark, out)
+      assert(hashSizes(written) == want, s"parallelism $par")
+      assert(stats.rows == want.size, s"parallelism $par")
+      assert(stats.bytes == want.map(_._2).sum, s"parallelism $par")
+      assert(stats.entriesRead == inputs.size * 15L, s"parallelism $par")
+    }
+  }
+
+  test("uniqueByHash over colliding, short and null keys equals dropDuplicates(hash)") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.graft.GraftShims.{column, expression}
+    import org.apache.spark.sql.types._
+    // two 32-byte digests that share a cache slot and differ only in
+    // their last byte, interleaved so each evicts the other; repeated
+    // short and long keys; several null keys
+    def digest(tail: Int): Array[Byte] = Array[Byte](0x12, 0x34) ++ new Array[Byte](29) :+ tail.toByte
+    val keys: Seq[Array[Byte]] =
+      Seq(digest(1), digest(2), digest(1), digest(2), digest(1), digest(1),
+        Array[Byte](1, 2, 3), Array[Byte](1, 2, 3), null, null,
+        Array.fill[Byte](33)(7), Array.fill[Byte](33)(7), null, digest(2),
+        new Array[Byte](32), new Array[Byte](32), Array.emptyByteArray, Array.emptyByteArray)
+    val schema = StructType(Seq(
+      StructField("path", StringType), StructField("size", LongType),
+      StructField("hash", BinaryType)))
+    val rows = keys.zipWithIndex.map { case (k, i) =>
+      Row(s"p$i", Option(k).map(_.length.toLong).getOrElse(-1L), k) }
+    for (parts <- Seq(1, 3)) {
+      val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, parts), schema)
+      val want = hashSizes(df.dropDuplicates("hash"))
+      assert(want.size == 7) // 2 colliding + short + long + zero + empty + null
+      assert(hashSizes(ArchiveConverter.uniqueByHash(df)) == want, s"$parts partitions")
+      // the cache alone: null and non-32-byte keys always pass, and of
+      // the colliding pair every row whose slot the other took passes
+      val cached = df.where(column(graft.functions.DigestCacheMiss(expression(col("hash")))))
+      val passed = cached.collect().map(_.getString(0)).toSet
+      keys.zipWithIndex.foreach { case (k, i) =>
+        if (k == null || k.length != 32) assert(passed(s"p$i"), s"key $i dropped by the cache")
+      }
+      if (parts == 1)
+        // row 5 repeats row 4's digest(1) while it is cached; row 15 is the
+        // second all-zero digest: the only rows one task's cache drops
+        assert(keys.indices.filterNot(i => passed(s"p$i")) == Seq(5, 15))
+    }
+  }
+
   test("unique output is ordered by hash within each file") {
     import Fixtures._
     val arch = java.io.File.createTempFile("graft_sorted", ".tar")
@@ -258,7 +329,7 @@ class SinkSpec extends AnyFunSuite with BeforeAndAfterAll {
     java.nio.file.Files.write(arch.toPath, tarArchive((1 to 60).map { i =>
       s"f$i" -> s"body ${if (i % 3 == 0) i - 1 else i}".getBytes("UTF-8")
     }))
-    val out = java.nio.file.Files.createTempDirectory("graft_sorted_out").toString
+    val out = tempDir("graft_sorted_out").toString
     val stats = ArchiveConverter.convert(spark, Seq(arch.getAbsolutePath), out,
       ConvertOptions(unique = true))
     assert(stats.rows == 40)

@@ -4,7 +4,6 @@ import graft.convert.ArchiveConverter
 import graft.core.ConvertOptions
 import graft.walk.ArchiveWalker
 import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The DataSource V2 face (`spark.read.format("archive")`): same rows
@@ -12,7 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * reaches the walker (no content buffers / digests for queries that
   * don't project them), W7 containment via the skipErrors option.
   */
-class SourcesSpec extends AnyFunSuite with BeforeAndAfterAll {
+class SourcesSpec extends AnyFunSuite with TempDirs {
   import Fixtures._
 
   private lazy val spark: SparkSession = SparkSession.builder()
@@ -22,7 +21,7 @@ class SourcesSpec extends AnyFunSuite with BeforeAndAfterAll {
     .appName("SourcesSpec")
     .getOrCreate()
 
-  override def afterAll(): Unit = spark.stop()
+  override def afterAll(): Unit = try spark.stop() finally super.afterAll()
 
   private def writeFixture(name: String, bytes: Array[Byte]): String = {
     val f = java.io.File.createTempFile(name, ".tar.gz")
@@ -75,7 +74,7 @@ class SourcesSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("globs expand driver-side; one partition per input") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_src_many").toFile
+    val dir = tempDir("graft_src_many").toFile
     (1 to 3).foreach { i =>
       java.nio.file.Files.write(new java.io.File(dir, s"in_$i.tar.gz").toPath,
         gzipData(tarArchive(Seq(s"f$i.txt" -> s"content $i".getBytes("UTF-8")))))
@@ -87,7 +86,7 @@ class SourcesSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("source-filter pushdown prunes input partitions at planning time") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_src_prune").toFile
+    val dir = tempDir("graft_src_prune").toFile
     (1 to 3).foreach { i =>
       java.nio.file.Files.write(new java.io.File(dir, s"in_$i.tar.gz").toPath,
         gzipData(tarArchive(Seq(s"f$i.txt" -> s"content $i".getBytes("UTF-8")))))

@@ -5,11 +5,10 @@ import graft.ops.{AnnIndex, MultiModal}
 import graft.streaming.StreamingConverter
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Streaming converter (availableNow trigger) and multimodal plumbing. */
-class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
+class StreamingSpec extends AnyFunSuite with TempDirs {
 
   private lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -18,7 +17,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     .appName("StreamingSpec")
     .getOrCreate()
 
-  override def afterAll(): Unit = spark.stop()
+  override def afterAll(): Unit = try spark.stop() finally super.afterAll()
 
   /** One query through the index handle, as (vec_id, adc). */
   private def annProbe(path: String, query: Array[Double], k: Int,
@@ -26,10 +25,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     AnnIndex.open(spark, path, "vec_id").probe(Seq(0L -> query), k, nprobe)
       .drop("query_id")
 
-  private def tmp(prefix: String): java.io.File = {
-    val d = java.nio.file.Files.createTempDirectory(prefix).toFile
-    d.deleteOnExit(); d
-  }
+  private def tmp(prefix: String): java.io.File = tempDir(prefix).toFile
 
   test("streaming converter: path file -> walked parquet via availableNow") {
     import Fixtures._
