@@ -2,7 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodegenFallback, ExprCode, FalseLiteral}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
@@ -79,9 +79,15 @@ final class RunKey {
   * the task saw before: the state object is allocated at partition
   * init (codegen'd and interpreted alike) and `test` asks it. The key
   * must be binary.
+  *
+  * `CodegenFallback` only keeps a `Filter` on it out of whole-stage
+  * codegen: a whole-stage `Filter` rebuilds every row it keeps into a
+  * new `UnsafeRow` (content included), while `FilterExec`'s own path
+  * passes the input row through. The predicate is still compiled:
+  * `GeneratePredicate` uses the `doGenCode` below.
   */
 sealed abstract class TaskKeyFilter[S <: AnyRef](stateClass: Class[S], method: String)
-    extends UnaryExpression with Nondeterministic with Serializable {
+    extends UnaryExpression with Nondeterministic with CodegenFallback with Serializable {
   protected def newState(): S
   protected def test(state: S, key: Array[Byte]): Boolean
   override def dataType: DataType = BooleanType

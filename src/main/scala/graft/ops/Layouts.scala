@@ -556,7 +556,7 @@ private[graft] object Layouts {
   /** The frame's scan/partition width for the fan-out decision. The
     * narrow-chain-over-one-parquet-relation shape every call site has
     * is answered from the cached file listing + split math, and a
-    * narrow chain over a cached frame from the plan the cache holds
+    * narrow chain over a built cache from the cached buffers
     * ([[org.apache.spark.sql.graft.ScanWidth]]), both WITHOUT
     * physically planning the subtree; exotic shapes fall back to the
     * r21 `df.rdd` probe (which plans the frame once at build time).

@@ -2,7 +2,7 @@ package graft.walk
 
 import graft.core.{ArchiveEntry, ConvertOptions, FormatKind}
 import graft.io.Sniff
-import org.apache.commons.compress.archivers.tar.TarArchiveInputStream
+import org.apache.commons.compress.archivers.tar.{TarArchiveEntry, TarArchiveInputStream}
 import org.apache.commons.compress.archivers.zip.ZipArchiveInputStream
 
 import java.io.{ByteArrayOutputStream, FilterInputStream, InputStream}
@@ -167,6 +167,38 @@ object ArchiveWalker {
     override def mark(readlimit: Int): Unit = ()
     override def reset(): Unit =
       throw new java.io.IOException("mark/reset not supported on archive entry streams")
+  }
+
+  /** A tar reader whose [[nextEntry]] moves past the current entry
+    * without commons-io's skip helper. The stock `getNextEntry` drains
+    * the entry's unread bytes and then its record padding through
+    * `IOUtils.skip`, which allocates a new 8 KiB buffer on every call,
+    * even with nothing left to drain: 16 KiB of garbage per entry. This
+    * reader drains both through one buffer of its own, then clears the
+    * current entry so the stock call starts at the next header. A
+    * sparse entry keeps the stock path: its reads follow the sparse map.
+    */
+  private[graft] final class LeanTarInputStream(raw: InputStream) extends TarArchiveInputStream(raw) {
+    private val scratch = new Array[Byte](8192)
+
+    def nextEntry(): TarArchiveEntry = {
+      val cur = getCurrentEntry
+      if (cur != null && !cur.isSparse && !isAtEOF) {
+        while (read(scratch, 0, scratch.length) >= 0) ()
+        val size = cur.getSize
+        if (!cur.isDirectory && size > 0 && size % getRecordSize != 0) {
+          var pad = getRecordSize - size % getRecordSize
+          while (pad > 0) {
+            val n = in.read(scratch, 0, pad.toInt)
+            if (n < 0) throw new java.io.IOException("Truncated TAR archive")
+            count(n.toLong)
+            pad -= n
+          }
+        }
+        setCurrentEntry(null)
+      }
+      getNextEntry
+    }
   }
 
   /** Can a leaf at `path` survive the pushed path-prefix conjunction? */
@@ -451,14 +483,14 @@ object ArchiveWalker {
       depth: Int,
       opts: ConvertOptions,
       leaf: Leaf[T]): Iterator[T] = {
-    val tar = new TarArchiveInputStream(stream)
+    val tar = new LeanTarInputStream(stream)
     archiveIterator {
       () =>
         // corrupt HEADER ends this archive's iteration silently —
         // reference parity with `while let Some(Ok(entry))`
         // (tarfile.rs:22); errors while reading entry CONTENT
         // (inside walkEntry/emit) propagate and fail the input
-        val e = try tar.getNextEntry catch { case _: java.io.IOException => null }
+        val e = try tar.nextEntry() catch { case _: java.io.IOException => null }
         if (e == null) None
         // only regular file entries with content (tarfile.rs:24-26)
         else if (!e.isFile || e.getSize == 0) Some(Iterator.empty)

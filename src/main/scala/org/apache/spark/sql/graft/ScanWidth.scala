@@ -2,8 +2,7 @@ package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project, SubqueryAlias}
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-import org.apache.spark.sql.execution.columnar.{CachedRDDBuilder, InMemoryRelation}
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.execution.datasources.{FilePartition, HadoopFsRelation, LogicalRelation}
 
 /** Partition-width probe for [[graft.ops.Layouts.fanOutByKey]] that
@@ -26,10 +25,12 @@ import org.apache.spark.sql.execution.datasources.{FilePartition, HadoopFsRelati
   * model. So does a session whose split configuration makes
   * `maxSplitBytes` non-positive (neither `maxPartitionBytes` nor
   * `openCostInBytes` is value-checked), where the split math has no
-  * step. A cached frame (the chain ends at an `InMemoryRelation`) is
-  * answered from the physical plan the cache already holds, see
-  * [[cachedWidth]]. Parity with the planner is pinned in OpsSpec
-  * ("fanOutByKey width estimate", "… of a cached frame").
+  * step. A cached frame whose buffers are built (the chain ends at an
+  * `InMemoryRelation`) is answered with the buffers' partition count,
+  * no planning and no job; an unbuilt one is answered as if uncached,
+  * since its first scan plans the same relation. Parity with the
+  * planner is pinned in OpsSpec ("fanOutByKey width estimate", "… of
+  * a cached frame").
   */
 object ScanWidth {
 
@@ -39,12 +40,18 @@ object ScanWidth {
       case _: Project | _: Filter | _: SubqueryAlias => leaf(p.children.head)
       case _ => p
     }
-    // the plan with cached subtrees swapped in (the lazy value the
-    // optimizer starts from); it refuses a stream, which keeps the
-    // analyzed plan and so declines
+    // a built cache answers with its buffers' width; an unbuilt one
+    // scans what the analyzed plan scans (`withCachedData` refuses a
+    // stream, whose analyzed plan declines anyway)
     val qe = df.queryExecution
-    leaf(if (df.isStreaming) qe.analyzed else qe.withCachedData) match {
-      case m: InMemoryRelation => cachedWidth(m.cacheBuilder)
+    val built =
+      if (df.isStreaming) None
+      else leaf(qe.withCachedData) match {
+        case m: InMemoryRelation if m.cacheBuilder.isCachedColumnBuffersLoaded =>
+          Some(m.cacheBuilder.cachedColumnBuffers.getNumPartitions)
+        case _ => None
+      }
+    built.orElse(leaf(qe.analyzed) match {
       case l: LogicalRelation =>
         l.relation match {
           case h: HadoopFsRelation
@@ -52,24 +59,8 @@ object ScanWidth {
           case _ => None
         }
       case _ => None
-    }
+    })
   }
-
-  /** A cached relation's width with no planning and no job: the built
-    * buffers' partition count once the cache is loaded, else the
-    * partition count the cached plan declares (a final adaptive plan
-    * read through). A plan that declares none, or an adaptive plan
-    * whose partitions AQE may still coalesce, declines.
-    */
-  private def cachedWidth(b: CachedRDDBuilder): Option[Int] =
-    if (b.isCachedColumnBuffersLoaded) Some(b.cachedColumnBuffers.getNumPartitions)
-    else {
-      val plan = b.cachedPlan match {
-        case a: AdaptiveSparkPlanExec => Option.when(a.isFinalPlan)(a.executedPlan)
-        case p => Some(p)
-      }
-      plan.map(_.outputPartitioning.numPartitions).filter(_ > 0)
-    }
 
   private def splitWidth(df: DataFrame, r: HadoopFsRelation): Option[Int] = {
     val spark = df.sparkSession

@@ -3341,20 +3341,27 @@ class OpsSpec extends AnyFunSuite with TempDirs {
     }
   }
 
-  test("fanOutByKey width estimate of a cached frame reads the cache's plan, with no job") {
+  test("fanOutByKey width estimate of a cached frame: built buffers, or the uncached scan, with no job") {
     import org.apache.spark.sql.graft.ScanWidth
-    // a generated (non-file) source and an explicit-width shuffle: the
-    // split math has no file listing for either, the cache holds a plan
+    import spark.implicits._
+    val path = tempDir("graft_scanwidth_cached").toString + "/many"
+    (0L until 3000L).map(i => (i, ("w" + i) * 40)).toDF("id", "text")
+      .repartition(5).write.parquet(path)
+    // a parquet scan, a generated (non-file) source and an explicit-width
+    // shuffle: before the build only the parquet frame is answered (by
+    // the split math over its files), after it every one is answered
+    // from the built buffers
+    val parquet = spark.read.parquet(path)
     val narrow = spark.range(0L, 3000L, 1L, 3)
     val shuffled = spark.range(0L, 3000L).repartition(5, col("id"))
-    for ((name, base) <- Seq("narrow" -> narrow, "shuffled" -> shuffled)) {
+    for ((name, base) <- Seq("parquet" -> parquet, "narrow" -> narrow, "shuffled" -> shuffled)) {
       val cached = base.select(col("id"), (col("id") % 7).as("g")).cache()
       try {
-        // not built yet: the plan's declared width, or a decline
         val (unbuilt, jobs0) = SparkJobs.during(spark)(ScanWidth.estimate(cached))
         assert(jobs0 == 0, s"$name: $jobs0 jobs before the build")
+        if (name == "parquet") assert(unbuilt.contains(cached.rdd.getNumPartitions), s"$name unbuilt: $unbuilt")
+        else assert(unbuilt.isEmpty, s"$name unbuilt: $unbuilt")
         cached.count()
-        unbuilt.foreach(w => assert(w == cached.rdd.getNumPartitions, s"$name unbuilt"))
         for (df <- Seq(cached, cached.select((col("id") + 1).as("x")), cached.where(col("g") === 3L))) {
           val (w, jobs) = SparkJobs.during(spark)(ScanWidth.estimate(df))
           assert(jobs == 0, s"$name: $jobs jobs")

@@ -689,6 +689,22 @@ class PlanGuardSpec extends AnyFunSuite with TempDirs {
     assert(exchange > runStart && cache > exchange,
       s"the digest cache must filter below the exchange:\n$p")
     assert(df.select("hash").distinct().count() == df.count() && df.count() == 4)
+    // neither filter runs inside whole-stage codegen, whose Filter would
+    // rebuild every kept row, content included, at the stage's end
+    val aqe = "spark.sql.adaptive.enabled"
+    val saved = spark.conf.getOption(aqe)
+    spark.conf.set(aqe, "false")
+    try {
+      // a codegen'd operator prints as "*(<stage id>) <name>"
+      val fixed = ArchiveConverter.filteredEntries(spark, inputs, ConvertOptions(unique = true))
+        .queryExecution.executedPlan.toString
+      val filters = fixed.linesIterator.filter(l => l.contains("Filter run_start(") ||
+        l.contains("Filter digest_cache_miss(")).toSeq
+      assert(filters.size == 2 && filters.forall(!_.contains("*(")) && fixed.contains("*("), fixed)
+    } finally saved match {
+      case Some(v) => spark.conf.set(aqe, v)
+      case None => spark.conf.unset(aqe)
+    }
   }
 
   test("streaming --unique keeps its stateful dedup (StreamingDeduplicate)") {

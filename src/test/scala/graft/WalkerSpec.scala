@@ -720,6 +720,97 @@ class WalkerSpec extends AnyFunSuite {
       200L, capped).toVector
     assert(two.map(r => (r.content_part, r.size)) == Vector((0L, 100L), (1L, 100L)))
   }
+
+  /** A tar of every header shape the reader must step over: a
+    * directory, a symlink, empty and padded files, sizes on and off the
+    * 512-byte record, and names too long for the ustar header.
+    */
+  private def leanTarFixture(longFileMode: Int): Array[Byte] = {
+    import org.apache.commons.compress.archivers.tar.{TarArchiveEntry, TarArchiveOutputStream}
+    val bos = new java.io.ByteArrayOutputStream()
+    val tar = new TarArchiveOutputStream(bos)
+    tar.setLongFileMode(longFileMode)
+    tar.setBigNumberMode(TarArchiveOutputStream.BIGNUMBER_POSIX)
+    tar.putArchiveEntry(new TarArchiveEntry("dir/"))
+    tar.closeArchiveEntry()
+    val link = new TarArchiveEntry("dir/link", org.apache.commons.compress.archivers.tar.TarConstants.LF_SYMLINK)
+    link.setLinkName("target")
+    tar.putArchiveEntry(link)
+    tar.closeArchiveEntry()
+    val rnd = new scala.util.Random(7)
+    for ((n, i) <- Seq(0, 1, 511, 512, 513, 8192, 8193, 20000).zipWithIndex) {
+      val name = if (i % 3 == 2) "deep/" + ("segment_" * 20) + s"f$i" else s"dir/f$i"
+      val data = Array.fill[Byte](n)(rnd.nextInt(256).toByte)
+      val e = new TarArchiveEntry(name)
+      e.setSize(n.toLong)
+      tar.putArchiveEntry(e)
+      tar.write(data)
+      tar.closeArchiveEntry()
+    }
+    tar.close()
+    bos.toByteArray
+  }
+
+  /** Each step of a reader: the entry's (name, size, bytes the consumer
+    * read), "end" or the IOException that stopped it.
+    */
+  private def tarSteps(next: () => org.apache.commons.compress.archivers.tar.TarArchiveEntry,
+      in: java.io.InputStream, take: Int): Vector[String] = {
+    val out = Vector.newBuilder[String]
+    var go = true
+    while (go) {
+      try {
+        val e = next()
+        if (e == null) { out += "end"; go = false }
+        else {
+          val buf = new Array[Byte](take)
+          val got = org.apache.commons.io.IOUtils.read(in, buf)
+          out += s"${e.getName} ${e.getSize} ${e.isDirectory} ${got} ${java.util.Arrays.hashCode(buf)}"
+        }
+      } catch { case x: java.io.IOException => out += s"io: ${x.getMessage}"; go = false }
+    }
+    out.result()
+  }
+
+  test("lean tar reader steps through what the stock reader does, however much of each entry is read") {
+    import org.apache.commons.compress.archivers.tar.{TarArchiveInputStream, TarArchiveOutputStream}
+    for (mode <- Seq(TarArchiveOutputStream.LONGFILE_POSIX, TarArchiveOutputStream.LONGFILE_GNU)) {
+      val full = leanTarFixture(mode)
+      // whole, cut inside an entry's data, cut inside its padding
+      val cuts = Seq(full.length, 3000, 512 * 9 + 100)
+      for (cut <- cuts; take <- Seq(0, 100, 600, 30000)) {
+        val data = java.util.Arrays.copyOf(full, cut)
+        val stock = new TarArchiveInputStream(new ByteArrayInputStream(data))
+        val lean = new ArchiveWalker.LeanTarInputStream(new ByteArrayInputStream(data))
+        val want = tarSteps(() => stock.getNextEntry, stock, take)
+        val got = tarSteps(() => lean.nextEntry(), lean, take)
+        assert(got == want, s"mode $mode, cut $cut, take $take")
+        if (cut == full.length) assert(want.size == 11 && want.last == "end", want)
+      }
+    }
+  }
+
+  test("lean tar reader allocates no skip buffer per entry") {
+    import org.apache.commons.compress.archivers.tar.TarArchiveInputStream
+    val data = tarArchive((0 until 2000).map(i => s"f$i" -> Array.fill[Byte](100)(1)))
+    val mx = java.lang.management.ManagementFactory.getThreadMXBean
+      .asInstanceOf[com.sun.management.ThreadMXBean]
+    def allocated(next: () => AnyRef): Long = {
+      val t = Thread.currentThread().getId
+      val a0 = mx.getThreadAllocatedBytes(t)
+      var n = 0
+      while (next() != null) n += 1
+      assert(n == 2000)
+      mx.getThreadAllocatedBytes(t) - a0
+    }
+    val stockTar = new TarArchiveInputStream(new ByteArrayInputStream(data))
+    val leanTar = new ArchiveWalker.LeanTarInputStream(new ByteArrayInputStream(data))
+    val stock = allocated(() => stockTar.getNextEntry)
+    val lean = allocated(() => leanTar.nextEntry())
+    // the stock reader allocates two 8 KiB buffers per entry
+    assert(stock >= 2000L * 16384, stock)
+    assert(lean < stock / 4, s"lean $lean, stock $stock")
+  }
 }
 
 class AsciiStringsSpec extends AnyFunSuite {
