@@ -2,6 +2,8 @@ package graft.walk
 
 import graft.core.{ArchiveEntry, ConvertOptions, FormatKind}
 import graft.io.Sniff
+import org.apache.commons.compress.archivers.{ArchiveEntry => CcEntry}
+import org.apache.commons.compress.archivers.cpio.CpioArchiveInputStream
 import org.apache.commons.compress.archivers.tar.{TarArchiveEntry, TarArchiveInputStream}
 import org.apache.commons.compress.archivers.zip.ZipArchiveInputStream
 
@@ -13,6 +15,10 @@ import java.security.MessageDigest
   * rows; entries that are themselves archives (tar/zip, possibly
   * compressed) are expanded in place instead of emitted
   * (reference: src/anyreader_walker/stack.rs:26-39).
+  *
+  * Readers: tar, zip, cpio and 7z are read with commons-compress and
+  * share one entry loop ([[walkEntries]]); ar, WARC and the rpm framing
+  * are parsed here.
   *
   * Semantics mirrored from the reference:
   *   - two-stage sniff per entry (compression then container) —
@@ -32,10 +38,14 @@ import java.security.MessageDigest
   *     visit_file_entry — stack.rs:26-39);
   *   - executables with extractStrings: content is the newline-joined
   *     ASCII strings (min run 10), size/hash follow the rewritten
-  *     content (batch.rs:113-127);
-  *   - corrupt entry headers end that archive's iteration silently
-  *     (tarfile.rs:22 `while let Some(Ok(entry))`), errors while
-  *     reading entry bytes propagate and fail the input.
+  *     content (batch.rs:113-127).
+  *
+  * One walk rule for every container (W7): a header that is corrupt
+  * or cut short ends that archive's iteration silently
+  * (tarfile.rs:22 `while let Some(Ok(entry))`); an error while reading
+  * a body propagates and fails the input, and a body that ends before
+  * its header's declared size is such an error — no format emits a
+  * row shorter than its header says.
   *
   * Laziness discipline: an inner entry's stream is only valid until
   * the enclosing archive advances, so the returned iterator expands
@@ -475,76 +485,73 @@ object ArchiveWalker {
     }
   }
 
-  private def walkTar[T](
+  /** The one entry loop of the library-read containers (tar, zip, cpio,
+    * 7z); it owns the walk rules. `next` yields the next entry, or null
+    * at the end; a header that fails to parse (an `IOException` from
+    * `next`) ends the archive silently, as the reference's
+    * `while let Some(Ok(entry))` does (tarfile.rs:22). `walked` picks the
+    * entries to walk, and `body` opens one's content. An entry of
+    * unknown size (-1: a streaming zip's data descriptor) is read, and
+    * dropped when it turns out empty; a sized entry gets no filter.
+    * Errors while reading a body are not caught: they fail the input.
+    */
+  private def walkEntries[T, E <: CcEntry](
       source: String,
       nested: List[String],
       self: Details,
-      stream: InputStream,
       depth: Int,
       opts: ConvertOptions,
-      leaf: Leaf[T]): Iterator[T] = {
+      leaf: Leaf[T])(next: () => E)(body: E => InputStream, walked: E => Boolean): Iterator[T] =
+    archiveIterator { () =>
+      val e = try next() catch { case _: java.io.IOException => null.asInstanceOf[E] }
+      if (e == null) None
+      else if (!walked(e)) Some(Iterator.empty)
+      else {
+        val size = e.getSize
+        val rows = walkEntryG(source, nested, Details(e.getName, size), Some(self),
+          new NonClosing(body(e)), depth + 1, opts, leaf)
+        Some(if (size < 0) rows.filter(leaf.nonEmpty) else rows)
+      }
+    }
+
+  /** Only regular entries with content (tarfile.rs:24-26). */
+  private def walkTar[T](source: String, nested: List[String], self: Details,
+      stream: InputStream, depth: Int, opts: ConvertOptions, leaf: Leaf[T]): Iterator[T] = {
     val tar = new LeanTarInputStream(stream)
-    archiveIterator {
-      () =>
-        // corrupt HEADER ends this archive's iteration silently —
-        // reference parity with `while let Some(Ok(entry))`
-        // (tarfile.rs:22); errors while reading entry CONTENT
-        // (inside walkEntry/emit) propagate and fail the input
-        val e = try tar.nextEntry() catch { case _: java.io.IOException => null }
-        if (e == null) None
-        // only regular file entries with content (tarfile.rs:24-26)
-        else if (!e.isFile || e.getSize == 0) Some(Iterator.empty)
-        else {
-          val d = Details(e.getName, e.getSize)
-          Some(walkEntryG(source, nested, d, Some(self), new NonClosing(tar), depth + 1, opts, leaf))
-        }
-    }
+    walkEntries(source, nested, self, depth, opts, leaf)(() => tar.nextEntry())(_ => tar,
+      e => e.isFile && e.getSize != 0)
   }
 
-  private def walkZip[T](
-      source: String,
-      nested: List[String],
-      self: Details,
-      stream: InputStream,
-      depth: Int,
-      opts: ConvertOptions,
-      leaf: Leaf[T]): Iterator[T] = {
-    // streaming read of local headers, no central directory — parity
-    // with the reference's read_zipfile_from_stream (zipfile.rs:22)
+  /** Streaming read of local headers, no central directory — parity
+    * with the reference's read_zipfile_from_stream (zipfile.rs:22);
+    * only file entries with nonzero size (zipfile.rs:23-25).
+    */
+  private def walkZip[T](source: String, nested: List[String], self: Details,
+      stream: InputStream, depth: Int, opts: ConvertOptions, leaf: Leaf[T]): Iterator[T] = {
     val zip = new ZipArchiveInputStream(stream, "UTF8", false, true)
-    archiveIterator {
-      () =>
-        // corrupt header => silent stop (zipfile.rs:22 `while let Ok(Some)`)
-        val e = try zip.getNextEntry catch { case _: java.io.IOException => null }
-        if (e == null) None
-        // only file entries with nonzero size (zipfile.rs:23-25);
-        // size -1 = unknown until the data descriptor — keep those and
-        // drop empty results after reading
-        else if (e.isDirectory || e.getSize == 0) Some(Iterator.empty)
-        else {
-          val d = Details(e.getName, e.getSize)
-          Some(walkEntryG(source, nested, d, Some(self), new NonClosing(zip), depth + 1, opts, leaf)
-            .filter(r => leaf.nonEmpty(r) || e.getSize > 0))
-        }
-    }
+    walkEntries(source, nested, self, depth, opts, leaf)(() => zip.getNextEntry)(_ => zip,
+      e => !e.isDirectory && e.getSize != 0)
   }
 
-  /** Reads at most `limit` bytes of `in`, then reports EOF; never
-    * closes the underlying stream. [[skipRest]] discards whatever the
-    * consumer left unread so the enclosing WARC stream lands exactly
-    * at the record boundary.
+  /** One ar member's or WARC record's body: reads at most `limit` bytes
+    * of `in` and never closes it. A source that ends while bytes are
+    * still owed throws `EOFException`: a body cut short fails its input,
+    * as a truncated tar entry does. [[skipRest]] discards what the
+    * consumer left unread (a pruned or structural body) so the enclosing
+    * stream lands at the next header; it stays silent at the source's
+    * end, which the next header read then reports as the archive's end.
     */
   private final class BoundedStream(in: InputStream, limit: Long) extends InputStream {
     private var remaining = limit
+    private def owed(n: Int): Int =
+      if (n < 0) throw new java.io.EOFException(s"body ended $remaining bytes short")
+      else { remaining -= n; n }
     override def read(): Int =
       if (remaining <= 0) -1
-      else { val c = in.read(); if (c >= 0) remaining -= 1; c }
-    override def read(b: Array[Byte], off: Int, len: Int): Int = {
-      if (remaining <= 0) return -1
-      val n = in.read(b, off, math.min(len.toLong, remaining).toInt)
-      if (n > 0) remaining -= n
-      n
-    }
+      else { val c = in.read(); owed(if (c < 0) c else 1); c }
+    override def read(b: Array[Byte], off: Int, len: Int): Int =
+      if (remaining <= 0) -1
+      else owed(in.read(b, off, math.min(len.toLong, remaining).toInt))
     def skipRest(): Unit =
       while (remaining > 0) {
         val n = in.skip(remaining)
@@ -568,8 +575,8 @@ object ArchiveWalker {
     *     downstream filters select — the walker's job is expansion;
     *   - `Content-Length: 0` records are skipped (tar `size == 0`
     *     rule); a missing/corrupt header ends the iteration silently
-    *     (tar corrupt-header parity); bodies left unread (pruned
-    *     leaves) are skipped, never buffered;
+    *     and a body cut short fails the input (the walk rule); bodies
+    *     left unread (pruned leaves) are skipped, never buffered;
     *   - HTTP response bodies are emitted RAW (headers + payload):
     *     header-stripping is a downstream projection, not a walk
     *     concern.
@@ -635,16 +642,21 @@ object ArchiveWalker {
     * the format is the public ar(5) spec) — S-family extension in the
     * WARC walker's mold: members stream sequentially off the raw
     * stream, bodies recurse through the same two-stage sniff, and the
-    * tar error rules apply.
+    * walk rule applies.
     *
-    *   - 60-byte fixed ASCII headers; a missing/short header or a bad
-    *     `` `\n `` end magic ends the iteration silently (tar
-    *     corrupt-header parity); member data is 2-byte aligned (the
-    *     pad byte is consumed, never emitted);
+    *   - 60-byte fixed ASCII headers; a missing/short header, a bad
+    *     `` `\n `` end magic or a BSD name longer than its member ends
+    *     the iteration silently; a body cut short fails the input;
+    *     member data is 2-byte aligned (the pad byte is consumed, never
+    *     emitted);
     *   - naming covers all three dialects: GNU trailing-`/` names are
     *     stripped; `/N` references resolve through the GNU long-name
-    *     table (`//` member); BSD `#1/len` names read `len` bytes off
-    *     the data area (body = declared size − len);
+    *     table (`//` member), and one with no table or past its end
+    *     keeps its raw name; BSD `#1/len` names read `len` bytes off
+    *     the data area (body = declared size − len), NUL padding
+    *     stripped; names decode as UTF-8 (commons-compress's
+    *     `ArArchiveInputStream` has no charset and differs on both
+    *     long-name dialects, so ar stays parsed here);
     *   - the GNU symbol table (`/`), its 64-bit form (`/SYM64/`), and
     *     the `//` name table are structural members — consumed, never
     *     emitted; zero-length members are skipped (tar `size == 0`
@@ -733,112 +745,21 @@ object ArchiveWalker {
     }
   }
 
-  /** cpio walker (POSIX pax interchange ASCII dialects — the
-    * initramfs / RPM-payload container). Streams record-by-record
-    * with no buffering beyond the current header/name:
-    *
-    *   - newc `070701` / crc `070702`: 110-byte all-hex header, name
-    *     and body each NUL-padded to 4-byte alignment;
-    *   - odc `070707`: 76-byte all-octal header, no padding.
-    *
-    * Walk rules match tar: only regular files (c_mode & 0xF000 ==
-    * 0x8000) with nonzero size are emitted (directories, symlinks,
-    * devices, and hardlink placeholders — nlink>1 with size 0 — skip
-    * naturally); `TRAILER!!!` or a corrupt header ends the archive
-    * silently (W7 parity); bodies re-enter the two-stage sniff, so
-    * nested archives expand in place with cpio-member lineage.
+  /** cpio walker (the initramfs / RPM-payload container), read with
+    * commons-compress `CpioArchiveInputStream`: newc `070701`, crc
+    * `070702` (its checksum is verified, so a mismatch fails the
+    * input) and odc `070707`; names decode as UTF-8. Only regular
+    * files with nonzero size and a name are walked (directories,
+    * symlinks, devices and size-0 hardlink placeholders are skipped);
+    * the trailer ends the archive. Bodies re-enter the two-stage
+    * sniff, so nested archives expand in place with cpio-member
+    * lineage.
     */
-  private def walkCpio[T](
-      source: String,
-      nested: List[String],
-      self: Details,
-      stream: InputStream,
-      depth: Int,
-      opts: ConvertOptions,
-      leaf: Leaf[T]): Iterator[T] = {
-    var current: BoundedStream = null
-    var pad = 0
-    // strict fixed-radix field parse; -1 marks a corrupt header
-    def field(b: Array[Byte], from: Int, len: Int, radix: Int): Long = {
-      var v = 0L
-      var i = from
-      while (i < from + len) {
-        val d = Character.digit(b(i).toChar, radix)
-        if (d < 0) return -1L
-        v = v * radix + d
-        i += 1
-      }
-      v
-    }
-    archiveIterator { () =>
-      if (current != null) { current.skipRest(); current = null }
-      while (pad > 0) { if (stream.read() < 0) pad = 0 else pad -= 1 }
-      val magic = readExact(stream, 6)
-      if (magic == null) None
-      else new String(magic, "US-ASCII") match {
-        case m @ ("070701" | "070702") =>
-          val hdr = readExact(stream, 104) // 13 x 8 hex chars after the magic
-          if (hdr == null) None
-          else {
-            val mode = field(hdr, 8, 8, 16)
-            val size = field(hdr, 48, 8, 16)
-            val nameSize = field(hdr, 88, 8, 16)
-            // name length includes its NUL; bound it (it names ONE
-            // member — anything huge is a corrupt header)
-            if (mode < 0 || size < 0 || nameSize <= 0 || nameSize > (1 << 16)) None
-            else {
-              val nameBuf = readExact(stream, nameSize.toInt)
-              if (nameBuf == null) None
-              else {
-                val name = new String(nameBuf, 0, nameSize.toInt - 1, "UTF-8")
-                // header+name NUL-padded to 4; body likewise
-                val namePad = (4 - (110 + nameSize) % 4) % 4
-                var skipped = 0L
-                while (skipped < namePad && stream.read() >= 0) skipped += 1
-                pad = ((4 - size % 4) % 4).toInt
-                if (name == "TRAILER!!!") None
-                else if ((mode & 0xF000L) != 0x8000L || size == 0 || name.isEmpty) {
-                  current = new BoundedStream(stream, size)
-                  Some(Iterator.empty)
-                } else {
-                  current = new BoundedStream(stream, size)
-                  val d = Details(name, size)
-                  Some(walkEntryG(source, nested, d, Some(self), new NonClosing(current),
-                    depth + 1, opts, leaf))
-                }
-              }
-            }
-          }
-        case "070707" =>
-          val hdr = readExact(stream, 70) // odc: octal fields after the magic
-          if (hdr == null) None
-          else {
-            val mode = field(hdr, 12, 6, 8)
-            val nameSize = field(hdr, 53, 6, 8)
-            val size = field(hdr, 59, 11, 8)
-            if (mode < 0 || size < 0 || nameSize <= 0 || nameSize > (1 << 16)) None
-            else {
-              val nameBuf = readExact(stream, nameSize.toInt)
-              if (nameBuf == null) None
-              else {
-                val name = new String(nameBuf, 0, nameSize.toInt - 1, "UTF-8")
-                pad = 0 // odc has no alignment padding
-                if (name == "TRAILER!!!") None
-                else if ((mode & 0xF000L) != 0x8000L || size == 0 || name.isEmpty) {
-                  current = new BoundedStream(stream, size)
-                  Some(Iterator.empty)
-                } else {
-                  current = new BoundedStream(stream, size)
-                  val d = Details(name, size)
-                  Some(walkEntryG(source, nested, d, Some(self), new NonClosing(current),
-                    depth + 1, opts, leaf))
-                }
-              }
-            }
-          }
-        case _ => None // corrupt magic: silent stop (W7 parity)
-      }
-    }
+  private def walkCpio[T](source: String, nested: List[String], self: Details,
+      stream: InputStream, depth: Int, opts: ConvertOptions, leaf: Leaf[T]): Iterator[T] = {
+    val cpio = new CpioArchiveInputStream(stream, "UTF-8")
+    walkEntries(source, nested, self, depth, opts, leaf)(() => cpio.getNextEntry)(_ => cpio,
+      e => e.isRegularFile && e.getSize > 0 && e.getName.nonEmpty)
   }
 
   /** RPM package walker (rpm.org file-format spec — the fifth
@@ -941,7 +862,7 @@ object ArchiveWalker {
       depth: Int,
       opts: ConvertOptions,
       leaf: Leaf[T]): Iterator[T] = {
-    import org.apache.commons.compress.archivers.sevenz.SevenZFile
+    import org.apache.commons.compress.archivers.sevenz.{SevenZArchiveEntry, SevenZFile}
     import org.apache.commons.compress.utils.SeekableInMemoryByteChannel
 
     // Spool phase: buffer to memory up to the threshold; past it,
@@ -985,19 +906,13 @@ object ArchiveWalker {
     try sz = SevenZFile.builder().setSeekableByteChannel(channel).get()
     catch { case _: java.io.IOException => cleanup(); return Iterator.empty }
 
-    archiveIterator { () =>
-      // corrupt entry metadata => silent stop; content-read errors
-      // inside the expansion propagate (W7)
-      val e = try sz.getNextEntry catch { case _: java.io.IOException => null }
-      if (e == null) { cleanup(); None }
-      else if (e.isDirectory || !e.hasStream || e.getSize == 0) Some(Iterator.empty)
-      else {
-        val d = Details(e.getName, e.getSize)
-        val in = sz.getInputStream(e)
-        Some(walkEntryG(source, nested, d, Some(self), new NonClosing(in),
-          depth + 1, opts, leaf))
-      }
-    }
+    // the last entry, or corrupt entry metadata (a silent stop), ends
+    // the spool
+    def nextEntry(): SevenZArchiveEntry =
+      try { val e = sz.getNextEntry; if (e == null) cleanup(); e }
+      catch { case x: java.io.IOException => cleanup(); throw x }
+    walkEntries(source, nested, self, depth, opts, leaf)(() => nextEntry())(sz.getInputStream,
+      e => !e.isDirectory && e.hasStream && e.getSize != 0)
   }
 
   /** Sequential expansion over an archive's entries. `nextEntry`

@@ -111,16 +111,17 @@ object Fixtures {
   /** cpio newc (`070701`) archive: 110-byte hex headers, name and
     * body NUL-padded to 4-byte alignment, `TRAILER!!!` terminator.
     * `mode` defaults to a regular file; pass e.g. 0x41ED for a
-    * directory record.
+    * directory record. `crc` writes the crc dialect (`070702`), whose
+    * check field is the sum of the body's bytes.
     */
   def cpioArchive(entries: Seq[(String, Array[Byte])],
-      modeOf: String => Int = _ => 0x81A4): Array[Byte] = {
+      modeOf: String => Int = _ => 0x81A4, crc: Boolean = false): Array[Byte] = {
     val out = new ByteArrayOutputStream()
     var ino = 1
     def record(name: String, data: Array[Byte], mode: Int): Unit = {
       val nameBytes = name.getBytes("UTF-8")
       val nameSize = nameBytes.length + 1
-      val sb = new StringBuilder("070701")
+      val sb = new StringBuilder(if (crc) "070702" else "070701")
       def hex(v: Long): Unit = sb.append(f"$v%08x")
       hex(ino.toLong); ino += 1       // c_ino
       hex(mode.toLong)                // c_mode
@@ -129,7 +130,7 @@ object Fixtures {
       hex(data.length.toLong)         // filesize
       hex(0); hex(0); hex(0); hex(0)  // devmajor/minor, rdevmajor/minor
       hex(nameSize.toLong)            // namesize (incl NUL)
-      hex(0)                          // check (newc: always 0)
+      hex(if (crc) data.map(_ & 0xffL).sum & 0xffffffffL else 0L) // check
       out.write(sb.toString.getBytes("US-ASCII"))
       out.write(nameBytes); out.write(0)
       var n = (110 + nameSize) % 4
@@ -211,6 +212,21 @@ object Fixtures {
       out.write(sb.toString.getBytes("UTF-8"))
       out.write(body)
       out.write("\r\n\r\n".getBytes("UTF-8"))
+    }
+    out.toByteArray
+  }
+
+  /** Unix ar with every member's header name and data stored exactly as
+    * given (the data 2-byte aligned with a `\n` pad): the raw form the
+    * dialect cases build GNU `/N` and BSD `#1/len` members from.
+    */
+  def arRawArchive(members: Seq[(String, Array[Byte])]): Array[Byte] = {
+    val out = new ByteArrayOutputStream()
+    out.write("!<arch>\n".getBytes("US-ASCII"))
+    members.foreach { case (stored, data) =>
+      arHeader(out, stored, data.length.toLong)
+      out.write(data)
+      if (data.length % 2 == 1) out.write('\n')
     }
     out.toByteArray
   }

@@ -1,7 +1,10 @@
 package graft
 
-import graft.core.ConvertOptions
+import graft.convert.ArchiveConverter
+import graft.core.{ArchiveEntry, ConvertOptions}
+import graft.sources.ArchivePartitionReader
 import graft.walk.{ArchiveWalker, AsciiStrings}
+import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import java.io.ByteArrayInputStream
 
@@ -10,13 +13,72 @@ import java.io.ByteArrayInputStream
   * tests.rs:11-50) plus the converter-level path/lineage semantics
   * (src/anyreader_walker/utils.rs:49-55, src/batch.rs:108-111).
   */
-class WalkerSpec extends AnyFunSuite {
+class WalkerSpec extends AnyFunSuite with TempDirs {
   import Fixtures._
 
   private val opts = ConvertOptions()
 
   private def walk(data: Array[Byte], source: String = "input", o: ConvertOptions = opts) =
     ArchiveWalker.walk(source, new ByteArrayInputStream(data), data.length.toLong, o).toVector
+
+  override def afterAll(): Unit =
+    try if (sparkStarted) spark.stop() finally super.afterAll()
+
+  private var sparkStarted = false
+  // only the source-reader checks need one (WalkMetrics' accumulators)
+  private lazy val spark: SparkSession = {
+    sparkStarted = true
+    SparkSession.builder().master("local[1]").config("spark.ui.enabled", "false")
+      .appName("WalkerSpec").getOrCreate()
+  }
+
+  /** A 560-byte body of incompressible bytes, so deflate stores it
+    * verbatim in a zip; no codec or container magic starts it.
+    */
+  private val CutBody: Array[Byte] = {
+    val b = new Array[Byte](560)
+    new java.util.Random(11L).nextBytes(b)
+    b(0) = 'x'
+    b
+  }
+
+  /** `full` cut `back` bytes before the middle of the first occurrence
+    * of `part` (a member body, name or header field).
+    */
+  private def cutInside(full: Array[Byte], part: Array[Byte], back: Int = 0): Array[Byte] = {
+    val at = full.indexOfSlice(part)
+    assert(at >= 0, "the cut point is not in the archive")
+    java.util.Arrays.copyOf(full, at + part.length / 2 - back)
+  }
+
+  /** The rows a walk emits before it throws, and what it threw (null: none). */
+  private def walkUntilError(data: Array[Byte]): (Vector[ArchiveEntry], Throwable) = {
+    val it = ArchiveWalker.walk("input", new ByteArrayInputStream(data), data.length.toLong, opts)
+    val rows = Vector.newBuilder[ArchiveEntry]
+    try { while (it.hasNext) rows += it.next(); (rows.result(), null) }
+    catch { case e: java.io.IOException => (rows.result(), e) }
+  }
+
+  /** A body cut short: the rows before the cut are emitted, then the
+    * walk throws. Through the source reader under `skipErrors` the same
+    * rows land and the input counts one error.
+    */
+  private def assertBodyCutFails(cut: Array[Byte], before: Seq[(String, Array[Byte])]): Unit = {
+    val (rows, err) = walkUntilError(cut)
+    assert(rows.map(r => (r.path, r.size)) == before.map { case (p, b) => (p, b.length.toLong) })
+    rows.zip(before).foreach { case (r, (_, b)) => assert(r.content.sameElements(b), r.path) }
+    assert(err != null, "a body cut short must fail the input")
+    val f = tempDir("graft_walker_cut").resolve("cut.bin")
+    java.nio.file.Files.write(f, cut)
+    val m = new ArchiveConverter.WalkMetrics(spark)
+    val read = ArchivePartitionReader.entries(f.toString, opts.copy(skipErrors = true), Some(m))
+    assert(read.map(_.path).toVector == before.map(_._1).toVector)
+    assert(m.errors.value == 1L)
+  }
+
+  /** A header cut short: the rows before it, and no error. */
+  private def assertHeaderCutStops(cut: Array[Byte], before: Seq[String]): Unit =
+    assert(walk(cut).map(_.path) == before.toVector)
 
   test("plain file: one row, path = source path") {
     val rows = walk(TestData)
@@ -304,18 +366,13 @@ class WalkerSpec extends AnyFunSuite {
     assert(rows.head.content.sameElements(TestData))
   }
 
-  test("WARC: truncated trailing record ends the walk silently (W7 parity)") {
+  test("WARC: a body cut short fails the input; a header cut short stops silently") {
     val good = "intact body".getBytes("UTF-8")
     val full = warcArchive(Seq(
       Seq("WARC-Type" -> "response", "WARC-Target-URI" -> "http://a/") -> good,
-      Seq("WARC-Type" -> "response", "WARC-Target-URI" -> "http://b/") ->
-        "this body will be cut".getBytes("UTF-8")))
-    // cut mid-way through the second record's body
-    val truncated = java.util.Arrays.copyOf(full, full.length - 30)
-    val rows = walk(truncated)
-    assert(rows.map(_.path).head == "http://a/")
-    assert(rows.head.content.sameElements(good))
-    assert(rows.size <= 2, "no spurious rows after truncation")
+      Seq("WARC-Type" -> "response", "WARC-Target-URI" -> "http://b/") -> CutBody))
+    assertBodyCutFails(cutInside(full, CutBody), Seq("http://a/" -> good))
+    assertHeaderCutStops(cutInside(full, "http://b/".getBytes("UTF-8")), Seq("http://a/"))
   }
 
   test("ar: GNU members walk like tar entries — naming dialects, padding, skip rules") {
@@ -527,28 +584,70 @@ class WalkerSpec extends AnyFunSuite {
       .filter(_.startsWith("graft-7z-spool-")).toSet
   }
 
-  test("cpio: truncated trailing member ends the walk silently (W7 parity)") {
+  test("cpio: a body cut short fails the input; a header cut short stops silently") {
     val good = "intact cpio body".getBytes("UTF-8")
-    val full = cpioArchive(Seq(
-      "good.txt" -> good,
-      "cut.txt" -> "this member will be cut off".getBytes("UTF-8")))
-    val truncated = java.util.Arrays.copyOf(full, full.length - 40)
-    val rows = walk(truncated)
-    assert(rows.map(_.path).head == "good.txt")
-    assert(rows.head.content.sameElements(good))
-    assert(rows.size <= 2, "no spurious rows after truncation")
+    val members = Seq("good.txt" -> good, "cut.txt" -> CutBody)
+    for (full <- Seq(cpioArchive(members), cpioArchive(members, crc = true), cpioOdcArchive(members))) {
+      assertBodyCutFails(cutInside(full, CutBody), Seq("good.txt" -> good))
+      // cut inside the second header's numeric fields, before its name
+      assertHeaderCutStops(cutInside(full, "cut.txt".getBytes("UTF-8"), back = 40), Seq("good.txt"))
+    }
   }
 
-  test("ar: truncated trailing member ends the walk silently (W7 parity)") {
+  test("cpio crc: a right checksum walks, a wrong one fails the input") {
+    val body = "crc checked body\n".getBytes("UTF-8")
+    val good = cpioArchive(Seq("a.txt" -> TestData, "b.txt" -> body), crc = true)
+    assert(walk(good).map(r => (r.path, r.content.toSeq)) ==
+      Vector(("a.txt", TestData.toSeq), ("b.txt", body.toSeq)))
+    // the check field is the last 8 hex digits of b.txt's 110-byte header
+    val bad = good.clone()
+    val header = bad.indexOfSlice("b.txt".getBytes("UTF-8")) - 110
+    System.arraycopy("0000dead".getBytes("US-ASCII"), 0, bad, header + 102, 8)
+    val (rows, err) = walkUntilError(bad)
+    assert(rows.map(_.path) == Vector("a.txt"))
+    assert(err != null, "a checksum mismatch must fail the input")
+  }
+
+  test("cpio: a name with UTF-8 bytes decodes as UTF-8, newc and odc") {
+    val name = "données/日本語.txt"
+    for (bytes <- Seq(cpioArchive(Seq(name -> TestData)), cpioOdcArchive(Seq(name -> TestData))))
+      assert(walk(bytes).map(r => (r.path, r.size)) == Vector((name, TestData.length.toLong)))
+  }
+
+  test("ar: a body cut short fails the input; a header cut short stops silently") {
     val good = "intact ar body".getBytes("UTF-8")
-    val full = arArchive(Seq(
-      "good.txt" -> good,
-      "cut.txt" -> "this member will be cut off".getBytes("UTF-8")))
-    val truncated = java.util.Arrays.copyOf(full, full.length - 20)
-    val rows = walk(truncated)
-    assert(rows.map(_.path).head == "good.txt")
-    assert(rows.head.content.sameElements(good))
-    assert(rows.size <= 2, "no spurious rows after truncation")
+    val full = arArchive(Seq("good.txt" -> good, "cut.txt" -> CutBody))
+    assertBodyCutFails(cutInside(full, CutBody), Seq("good.txt" -> good))
+    assertHeaderCutStops(cutInside(full, "cut.txt/".getBytes("US-ASCII")), Seq("good.txt"))
+  }
+
+  test("ar dialects: /SYM64/, unresolved /N, NUL-padded BSD and UTF-8 long names") {
+    val one = "first body\n".getBytes("UTF-8")
+    val two = "second body\n".getBytes("UTF-8")
+    def walked(ar: Array[Byte]) = walk(ar).map(r => (r.path, r.content.toSeq))
+    // /SYM64/ is structural; /0 with no // table keeps its raw name and
+    // the members after it still walk
+    assert(walked(arRawArchive(Seq("/SYM64/" -> new Array[Byte](8), "/0" -> one,
+      "after.txt/" -> two))) == Vector(("/0", one.toSeq), ("after.txt", two.toSeq)))
+    // a UTF-8 name in the // table; /99 points past the table's end
+    val long = "très-long-nom-de-fichier-ファイル.txt"
+    val table = (long + "/\n").getBytes("UTF-8")
+    assert(table.length < 99)
+    assert(walked(arRawArchive(Seq("//" -> table, "/0" -> one, "/99" -> two))) ==
+      Vector((long, one.toSeq), ("/99", two.toSeq)))
+    // BSD: the stored name NUL-padded to its declared length
+    val padded = "bsd.txt".getBytes("UTF-8") ++ new Array[Byte](5)
+    assert(walked(arRawArchive(Seq(s"#1/${padded.length}" -> (padded ++ one)))) ==
+      Vector(("bsd.txt", one.toSeq)))
+    // a BSD name longer than its member ends the archive silently
+    assert(walked(arRawArchive(Seq("ok.txt/" -> one, "#1/40" -> "short".getBytes("UTF-8"),
+      "never.txt/" -> two))) == Vector(("ok.txt", one.toSeq)))
+  }
+
+  test("zip: a body cut short fails the input") {
+    val good = "intact body".getBytes("UTF-8")
+    val full = zipArchive(Seq("good.txt" -> good, "cut.txt" -> CutBody))
+    assertBodyCutFails(cutInside(full, CutBody), Seq("good.txt" -> good))
   }
 
   test("W7: corrupt header after valid entries ends the archive silently") {
