@@ -3,11 +3,12 @@ package graft.walk
 import graft.core.{ArchiveEntry, ConvertOptions, FormatKind}
 import graft.io.Sniff
 import org.apache.commons.compress.archivers.{ArchiveEntry => CcEntry}
-import org.apache.commons.compress.archivers.cpio.CpioArchiveInputStream
+import org.apache.commons.compress.archivers.cpio.{CpioArchiveEntry, CpioArchiveInputStream}
 import org.apache.commons.compress.archivers.tar.{TarArchiveEntry, TarArchiveInputStream}
 import org.apache.commons.compress.archivers.zip.ZipArchiveInputStream
 
-import java.io.{ByteArrayOutputStream, FilterInputStream, InputStream}
+import java.io.{ByteArrayOutputStream, EOFException, FilterInputStream, IOException, InputStream,
+  UncheckedIOException}
 import java.security.MessageDigest
 
 /** Recursive archive walker — the engine's core correlated-flatten
@@ -503,7 +504,7 @@ object ArchiveWalker {
       opts: ConvertOptions,
       leaf: Leaf[T])(next: () => E)(body: E => InputStream, walked: E => Boolean): Iterator[T] =
     archiveIterator { () =>
-      val e = try next() catch { case _: java.io.IOException => null.asInstanceOf[E] }
+      val e = try next() catch { case _: IOException => null.asInstanceOf[E] }
       if (e == null) None
       else if (!walked(e)) Some(Iterator.empty)
       else {
@@ -544,7 +545,7 @@ object ArchiveWalker {
   private final class BoundedStream(in: InputStream, limit: Long) extends InputStream {
     private var remaining = limit
     private def owed(n: Int): Int =
-      if (n < 0) throw new java.io.EOFException(s"body ended $remaining bytes short")
+      if (n < 0) throw new EOFException(s"body ended $remaining bytes short")
       else { remaining -= n; n }
     override def read(): Int =
       if (remaining <= 0) -1
@@ -614,16 +615,14 @@ object ArchiveWalker {
       else {
         idx += 1
         val headers = scala.collection.mutable.Map.empty[String, String]
-        var corrupt = false
         var h = readLine()
         while (h != null && h.nonEmpty) {
           val i = h.indexOf(':')
           if (i > 0) headers(h.substring(0, i).trim.toLowerCase) = h.substring(i + 1).trim
           h = readLine()
         }
-        corrupt = h == null // EOF inside the header block
         val len = headers.get("content-length").flatMap(_.toLongOption)
-        if (corrupt || len.isEmpty) None
+        if (h == null || len.isEmpty) None // EOF inside the header block, or no length
         else if (len.get == 0) Some(Iterator.empty)
         else {
           val name = headers.get("warc-target-uri")
@@ -673,14 +672,10 @@ object ArchiveWalker {
     var nameTable: Array[Byte] = null
     var current: BoundedStream = null
     var pad = 0
-    // the sniff leaves the stream at position 0: consume the global magic
-    val magic = new Array[Byte](8)
-    var got = 0
-    var r = 0
-    while (got < 8 && r >= 0) { r = stream.read(magic, got, 8 - got); if (r > 0) got += r }
     def ascii(b: Array[Byte], from: Int, until: Int): String =
       new String(b, from, until - from, "US-ASCII").trim
-    if (got < 8) Iterator.empty
+    // the sniff leaves the stream at position 0: consume the global magic
+    if (readExact(stream, 8) == null) Iterator.empty
     else archiveIterator { () =>
       if (current != null) { current.skipRest(); current = null }
       while (pad > 0) { if (stream.read() < 0) pad = 0 else pad -= 1 }
@@ -728,16 +723,11 @@ object ArchiveWalker {
               } else {
                 Some(if (rawName.endsWith("/")) rawName.dropRight(1) else rawName)
               }
-            name match {
-              case None => None // corrupt BSD header / truncated name
-              case Some(n) if bodySize == 0 || n.isEmpty =>
-                current = new BoundedStream(stream, bodySize)
-                Some(Iterator.empty) // zero-length member: tar skip rule
-              case Some(n) =>
-                current = new BoundedStream(stream, bodySize)
-                val d = Details(n, bodySize)
-                Some(walkEntryG(source, nested, d, Some(self), new NonClosing(current),
-                  depth + 1, opts, leaf))
+            name.map { n =>
+              current = new BoundedStream(stream, bodySize)
+              if (bodySize == 0 || n.isEmpty) Iterator.empty // zero-length member: tar skip rule
+              else walkEntryG(source, nested, Details(n, bodySize), Some(self),
+                new NonClosing(current), depth + 1, opts, leaf)
             }
           }
         }
@@ -754,12 +744,47 @@ object ArchiveWalker {
     * the trailer ends the archive. Bodies re-enter the two-stage
     * sniff, so nested archives expand in place with cpio-member
     * lineage.
+    *
+    * Two steps keep the reader to the walk rule. The rest of a body
+    * left unread (pruned) is read out before the next header, so its
+    * checksum mismatch fails the input instead of reading as a corrupt
+    * header that silently drops the members after it; a source that
+    * ends there still stops silently. And a header reads at most
+    * [[CpioHeaderMax]] bytes: the reader takes a name of any declared
+    * size into memory, so a corrupt size would read the rest of the
+    * stream.
     */
   private def walkCpio[T](source: String, nested: List[String], self: Details,
       stream: InputStream, depth: Int, opts: ConvertOptions, leaf: Leaf[T]): Iterator[T] = {
-    val cpio = new CpioArchiveInputStream(stream, "UTF-8")
-    walkEntries(source, nested, self, depth, opts, leaf)(() => cpio.getNextEntry)(_ => cpio,
+    val src = new CappedStream(stream)
+    val cpio = new CpioArchiveInputStream(src, "UTF-8")
+    def next(): CpioArchiveEntry = {
+      try while (cpio.skip(Long.MaxValue) > 0) {}
+      catch { case x: IOException if !x.isInstanceOf[EOFException] => throw new UncheckedIOException(x) }
+      src.capped(CpioHeaderMax)(cpio.getNextEntry)
+    }
+    walkEntries(source, nested, self, depth, opts, leaf)(() => next())(_ => cpio,
       e => e.isRegularFile && e.getSize > 0 && e.getName.nonEmpty)
+  }
+
+  /** Room for a cpio header, a name of up to 64 KiB and the trailer's
+    * block padding.
+    */
+  private val CpioHeaderMax = 1 << 17
+
+  /** Passes reads through to `in`; inside [[capped]] a read past its
+    * `max` bytes throws, which the entry loop takes for a corrupt header.
+    */
+  private final class CappedStream(in: InputStream) extends FilterInputStream(in) {
+    private var left = Long.MaxValue
+    def capped[A](max: Long)(f: => A): A = { left = max; try f finally left = Long.MaxValue }
+    private def room(len: Int): Int =
+      if (left <= 0) throw new IOException("header longer than its cap")
+      else math.min(len.toLong, left).toInt
+    override def read(): Int = { room(1); val c = in.read(); if (c >= 0) left -= 1; c }
+    override def read(b: Array[Byte], off: Int, len: Int): Int = {
+      val n = in.read(b, off, room(len)); if (n > 0) left -= n; n
+    }
   }
 
   /** RPM package walker (rpm.org file-format spec — the fifth
@@ -795,16 +820,6 @@ object ArchiveWalker {
     def be32(b: Array[Byte], i: Int): Long =
       (((b(i) & 0xff).toLong << 24) | ((b(i + 1) & 0xff) << 16) |
         ((b(i + 2) & 0xff) << 8) | (b(i + 3) & 0xff)) & 0xffffffffL
-    def skipN(n: Long): Boolean = {
-      var left = n
-      val buf = leaf.buf
-      while (left > 0) {
-        val k = stream.read(buf, 0, math.min(buf.length.toLong, left).toInt)
-        if (k < 0) return false
-        left -= k
-      }
-      true
-    }
     def skipHeader(alignStore: Boolean): Boolean = {
       val h = readExact(stream, 16)
       if (h == null || (h(0) & 0xff) != 0x8e || (h(1) & 0xff) != 0xad ||
@@ -814,7 +829,9 @@ object ArchiveWalker {
       // sanity bounds: a header indexes package METADATA, not data
       if (nindex > (1L << 20) || hsize > (1L << 30)) return false
       val body = nindex * 16 + hsize
-      skipN(body + (if (alignStore) (8 - body % 8) % 8 else 0L))
+      // a store cut short leaves no payload for the sniff: the walk ends
+      new BoundedStream(stream, body + (if (alignStore) (8 - body % 8) % 8 else 0L)).skipRest()
+      true
     }
     val lead = readExact(stream, 96)
     if (lead == null || (lead(0) & 0xff) != 0xed || (lead(1) & 0xff) != 0xab ||
@@ -910,7 +927,7 @@ object ArchiveWalker {
     // the spool
     def nextEntry(): SevenZArchiveEntry =
       try { val e = sz.getNextEntry; if (e == null) cleanup(); e }
-      catch { case x: java.io.IOException => cleanup(); throw x }
+      catch { case x: IOException => cleanup(); throw x }
     walkEntries(source, nested, self, depth, opts, leaf)(() => nextEntry())(sz.getInputStream,
       e => !e.isDirectory && e.hasStream && e.getSize != 0)
   }

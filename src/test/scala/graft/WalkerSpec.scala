@@ -606,6 +606,38 @@ class WalkerSpec extends AnyFunSuite with TempDirs {
     val (rows, err) = walkUntilError(bad)
     assert(rows.map(_.path) == Vector("a.txt"))
     assert(err != null, "a checksum mismatch must fail the input")
+    // also in a body a prune leaves unread, rather than ending the
+    // archive silently before the members after it
+    val skipped = Array.fill[Byte](200000)('s')
+    val pruned = opts.copy(prunePathPrefixes = Seq("keep/"))
+    val withSkip = cpioArchive(Seq("skip/a.txt" -> skipped, "keep/b.txt" -> body,
+      "keep/c.txt" -> body), crc = true)
+    assert(walk(withSkip, o = pruned).map(_.path) == Vector("keep/b.txt", "keep/c.txt"))
+    System.arraycopy("0000dead".getBytes("US-ASCII"), 0, withSkip, 102, 8)
+    val prunedErr = intercept[Exception](walk(withSkip, o = pruned))
+    assert(Iterator.iterate[Throwable](prunedErr)(_.getCause).takeWhile(_ != null)
+      .exists(e => String.valueOf(e.getMessage).contains("CRC")), prunedErr.toString)
+  }
+
+  test("cpio: a corrupt name size stops the walk within one name's bytes") {
+    val two = cpioArchive(Seq("a.txt" -> TestData, "b.txt" -> TestData))
+    val header = two.indexOfSlice("b.txt".getBytes("UTF-8")) - 110
+    // the rest of the stream: 8 MiB that no header may pull into memory
+    val tail = 8 << 20
+    for (nameSize <- Seq("00000000", "7fffffff", "ffffffff")) {
+      val bad = java.util.Arrays.copyOf(two, header + 110 + tail)
+      System.arraycopy(nameSize.getBytes("US-ASCII"), 0, bad, header + 94, 8)
+      var pulled = 0L
+      val in = new java.io.FilterInputStream(new ByteArrayInputStream(bad)) {
+        override def read(): Int = { val c = super.read(); if (c >= 0) pulled += 1; c }
+        override def read(b: Array[Byte], off: Int, len: Int): Int = {
+          val n = super.read(b, off, len); if (n > 0) pulled += n; n
+        }
+      }
+      val rows = ArchiveWalker.walk("input", in, bad.length.toLong, opts).toVector
+      assert(rows.map(_.path) == Vector("a.txt"), nameSize)
+      assert(pulled < (1 << 20), s"namesize $nameSize pulled $pulled bytes")
+    }
   }
 
   test("cpio: a name with UTF-8 bytes decodes as UTF-8, newc and odc") {
